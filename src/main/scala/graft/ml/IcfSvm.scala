@@ -1,7 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
@@ -13,10 +15,16 @@ import graft.functions.VectorOps
   * Scale: ICF and IPM are fully distributed (see [[Icf]], [[Ipm]]), and
   * the support-vector set STAYS a DataFrame end-to-end — on
   * non-separable data the SV set is O(n), so the driver never collects
-  * it. Scoring is a kernel-sum join: broadcast the SV side when it is
-  * small enough, otherwise a partitioned cross join; either way the
-  * per-row decision sum is one distributed aggregation keyed on the row
-  * id. The driver holds only scalars (bias, counts).
+  * it. [[predict]] picks its layout by which side fits under
+  * `broadcastThreshold` rows:
+  *   - SV set under it: the SV side is broadcast into a kernel-sum join,
+  *     one distributed aggregation keyed on the row id;
+  *   - SV set over it, scored rows under it: psvm's svm_predict layout —
+  *     the SVs stay sharded where they are, the scored rows go to every
+  *     shard, and the shards' partial decision sums are reduced;
+  *   - both over it: a partitioned cross join with the same aggregation.
+  * The driver holds only scalars (bias, counts), plus at most
+  * `broadcastThreshold` scored rows and their sums in the second layout.
   */
 final case class IcfSvmModel(
     kernel: Kernel,
@@ -56,7 +64,7 @@ final case class IcfSvmModel(
       s"rho ${(-bias).toString}",
       "SV"
     ).toDS().coalesce(1).write.mode("overwrite").text(s"$path/header")
-    svs.select(col("sv_coef"), col("sv_x")).as[(Double, Seq[Double])]
+    svs.select(col("sv_coef"), col("sv_x")).as[(Double, Array[Double])]
       .map { case (coef, x) =>
         val sb = new StringBuilder(coef.toString)
         var i = 0
@@ -77,28 +85,64 @@ final case class IcfSvmModel(
   /** Adds `decision` and `prediction` (±1) columns over `vecCol`,
     * keyed by the (unique) `idCol`.
     *
-    * Cost model at scale: kernel-SVM scoring is inherently O(n·nSV)
-    * (psvm pays the same). The broadcast path covers SV sets up to
-    * `broadcastThreshold`; beyond that the partitioned cross join is
-    * correct but quadratic-ish — for 100 TB corpora score with the
-    * Nyström model instead (O(n·p) via [[KernelSvmModel.predict]]), or
-    * chunk the SV side (score in ≤threshold-sized SV batches and sum
-    * the partial kernel sums) when exact-kernel decisions are required. */
+    * Cost model: exact kernel-SVM scoring is O(n·nSV) kernel evaluations
+    * (psvm pays the same); the layout sets what each one costs.
+    * `broadcastThreshold` bounds whichever side is broadcast:
+    *   - nSV ≤ threshold: the SV side is broadcast into the kernel-sum
+    *     join. Lazy, like any DataFrame.
+    *   - nSV > threshold, n ≤ threshold: psvm's svm_predict layout. The
+    *     scored rows are collected once and broadcast; each SV partition
+    *     streams its SVs through the plain-array [[Kernel]] form into one
+    *     partial-sum vector over those rows (no joined row, projection or
+    *     aggregate update per pair), and the partials tree-reduce to the
+    *     n decision sums, which are joined back onto `df`. This layout
+    *     runs its jobs when `predict` is called.
+    *   - both over the threshold: a partitioned cross join, correct but
+    *     quadratic-ish — for 100 TB corpora score with the Nyström model
+    *     (O(n·p) via [[KernelSvmModel.predict]]), or use
+    *     [[predictChunked]] / [[predictQuantized]].
+    * All three sum the same terms and differ only in float summation
+    * order (last ulps). A row with a null vector scores `bias`. */
   def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val svSide0 = svs.select(col("sv_x"), col("sv_coef"))
-    val svSide = if (numSupportVectors <= broadcastThreshold) broadcast(svSide0) else svSide0
-    val scores = df
-      .select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
-      .crossJoin(svSide)
-      .groupBy(col("__pid"))
-      .agg(sum(col("sv_coef") * kernel(col("sv_x"), col("__px"))).as("__ksum"))
-    // LEFT join + coalesce: a degenerate model with zero support vectors
-    // (e.g. single-class data) must still score every row (bias only),
-    // not drop them all through an inner join against an empty side
-    df.join(scores, df(idCol) === scores("__pid"), "left")
-      .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
-      .drop("__pid", "__ksum")
-      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+    val pts = points(df, idCol, vecCol)
+    val svSide = svs.select(col("sv_x"), col("sv_coef"))
+    val scores =
+      if (numSupportVectors <= broadcastThreshold) kernelSum(pts, broadcast(svSide))
+      else {
+        val batch = pts.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+        if (batch.length > broadcastThreshold) kernelSum(pts, svSide)
+        else streamSvShards(pts.schema("__pid"), batch)
+      }
+    withDecision(df, idCol, scores)
+  }
+
+  /** psvm's svm_predict layout over `batch`, the collected (__pid, __px)
+    * rows: broadcast them to every SV partition, fold each partition's
+    * SVs into one vector of partial sums Σ coef·k(sv, xⱼ), tree-reduce
+    * the partials, and return (__pid, __ksum). Rows with a null vector
+    * get no sum, so [[withDecision]] scores them `bias`. */
+  private def streamSvShards(pid: StructField, batch: Array[Row]): DataFrame = {
+    val spark = svs.sparkSession
+    import spark.implicits._
+    val scored = batch.filter(r => !r.isNullAt(1))
+    val sums =
+      if (scored.isEmpty) Array.emptyDoubleArray
+      else {
+        val xs = spark.sparkContext.broadcast(scored.map(_.getSeq[Double](1).toArray))
+        val k = kernel
+        try svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
+          .select(col("sv_x"), col("sv_coef")).as[(Array[Double], Double)].rdd
+          .treeAggregate(new Array[Double](scored.length))(
+            seqOp = { case (acc, (sv, coef)) =>
+              val x = xs.value
+              var j = 0; while (j < x.length) { acc(j) += coef * k(sv, x(j)); j += 1 }
+              acc
+            },
+            combOp = { (a, b) => var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a })
+        finally xs.destroy()
+      }
+    val rows = scored.indices.map(j => Row(scored(j).get(0), sums(j)))
+    spark.createDataFrame(rows.asJava, StructType(Seq(pid, StructField("__ksum", DoubleType))))
   }
 
   /** [[predict]] in bounded SV batches — the path for the regime where
@@ -114,23 +158,9 @@ final case class IcfSvmModel(
     * bit-stability matters more than throughput.) */
   def predictChunked(df: DataFrame, idCol: String, vecCol: String,
                      chunkSize: Long = 65536): DataFrame = {
-    val nChunks = math.max(1L, (numSupportVectors + chunkSize - 1) / chunkSize).toInt
-    val withChunk = svs.select(col("sv_x"), col("sv_coef"),
-      pmod(xxhash64(col("sv_x")), lit(nChunks)).as("__chunk"))
-    val pts = df.select(col(idCol).as("__pid"),
-      VectorOps.toDoubleArray(col(vecCol)).as("__px"))
-    val partials = (0 until nChunks).map { k =>
-      pts.crossJoin(broadcast(withChunk.filter(col("__chunk") === k)
-          .select(col("sv_x"), col("sv_coef"))))
-        .groupBy(col("__pid"))
-        .agg(sum(col("sv_coef") * kernel(col("sv_x"), col("__px"))).as("__pk"))
-    }
-    val scores = partials.reduce(_ unionByName _)
-      .groupBy(col("__pid")).agg(sum(col("__pk")).as("__ksum"))
-    df.join(scores, df(idCol) === scores("__pid"), "left")
-      .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
-      .drop("__pid", "__ksum")
-      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+    val scores = chunkPartials(df, idCol, vecCol, chunkSize)(sum(_))
+      .groupBy(col("__pid")).agg(sum(col("__p")).as("__ksum"))
+    withDecision(df, idCol, scores)
   }
 
   /** [[predict]] with QUANTIZED order-independent accumulation — the
@@ -151,25 +181,11 @@ final case class IcfSvmModel(
     * model error (and the replaying oracle quantizes identically). */
   def predictQuantized(df: DataFrame, idCol: String, vecCol: String,
                        chunkSize: Long = 65536): DataFrame = {
-    val nChunks = math.max(1L, (numSupportVectors + chunkSize - 1) / chunkSize).toInt
-    val withChunk = svs.select(col("sv_x"), col("sv_coef"),
-      pmod(xxhash64(col("sv_x")), lit(nChunks)).as("__chunk"))
-    val pts = df.select(col(idCol).as("__pid"),
-      VectorOps.toDoubleArray(col(vecCol)).as("__px"))
-    val partials = (0 until nChunks).map { k =>
-      pts.crossJoin(broadcast(withChunk.filter(col("__chunk") === k)
-          .select(col("sv_x"), col("sv_coef"))))
-        .groupBy(col("__pid"))
-        .agg(sum(floor(col("sv_coef") * kernel(col("sv_x"), col("__px"))
-          * lit(1e12)).cast("long")).as("__pq"))
-    }
-    val scores = partials.reduce(_ unionByName _)
-      .groupBy(col("__pid")).agg(sum(col("__pq")).as("__q"))
-    df.join(scores, df(idCol) === scores("__pid"), "left")
-      .withColumn("decision",
-        coalesce(col("__q"), lit(0L)).cast("double") / lit(1e12) + lit(bias))
-      .drop("__pid", "__q")
-      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+    val scores = chunkPartials(df, idCol, vecCol, chunkSize)(
+        t => sum(floor(t * lit(1e12)).cast("long")))
+      .groupBy(col("__pid"))
+      .agg((sum(col("__p")).cast("double") / lit(1e12)).as("__ksum"))
+    withDecision(df, idCol, scores)
   }
 
   /** [[predict]] with ORDER-DETERMINISTIC accumulation: per-SV
@@ -184,19 +200,51 @@ final case class IcfSvmModel(
     import org.apache.spark.sql.functions.{aggregate, collect_list, sort_array}
     val svSide0 = svs.select(col("sv_x"), col("sv_coef"))
     val svSide = if (numSupportVectors <= broadcastThreshold) broadcast(svSide0) else svSide0
-    val scores = df
-      .select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
+    val scores = points(df, idCol, vecCol)
       .crossJoin(svSide)
-      .select(col("__pid"),
-        (col("sv_coef") * kernel(col("sv_x"), col("__px"))).as("__c"))
+      .select(col("__pid"), kernelTerm.as("__c"))
       .groupBy(col("__pid"))
       .agg(aggregate(sort_array(collect_list(col("__c"))), lit(0.0),
         (acc, x) => acc + x).as("__ksum"))
+    withDecision(df, idCol, scores)
+  }
+
+  /** The scored side as (__pid, __px: array<double>). */
+  private def points(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
+
+  /** One SV's term of the decision sum: coef·k(sv, x). */
+  private def kernelTerm: Column = col("sv_coef") * kernel(col("sv_x"), col("__px"))
+
+  /** (__pid, __ksum) through a cross join of the points with `svSide`. */
+  private def kernelSum(pts: DataFrame, svSide: DataFrame): DataFrame =
+    pts.crossJoin(svSide).groupBy(col("__pid")).agg(sum(kernelTerm).as("__ksum"))
+
+  /** Per-chunk partial sums `agg(term)` as (__pid, __p), the SV side
+    * split into ⌈nSV/chunkSize⌉ hash-assigned broadcast chunks. */
+  private def chunkPartials(df: DataFrame, idCol: String, vecCol: String,
+                            chunkSize: Long)(agg: Column => Column): DataFrame = {
+    val nChunks = math.max(1L, (numSupportVectors + chunkSize - 1) / chunkSize).toInt
+    val withChunk = svs.select(col("sv_x"), col("sv_coef"),
+      pmod(xxhash64(col("sv_x")), lit(nChunks)).as("__chunk"))
+    val pts = points(df, idCol, vecCol)
+    (0 until nChunks).map { k =>
+      pts.crossJoin(broadcast(withChunk.filter(col("__chunk") === k)
+          .select(col("sv_x"), col("sv_coef"))))
+        .groupBy(col("__pid"))
+        .agg(agg(kernelTerm).as("__p"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** Joins (__pid, __ksum) back onto `df` as `decision` = sum + bias.
+    * LEFT join + coalesce: a degenerate model with zero support vectors
+    * (e.g. single-class data) must still score every row (bias only),
+    * not drop them all through an inner join against an empty side. */
+  private def withDecision(df: DataFrame, idCol: String, scores: DataFrame): DataFrame =
     df.join(scores, df(idCol) === scores("__pid"), "left")
       .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
       .drop("__pid", "__ksum")
       .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
-  }
 }
 
 object IcfSvmModel {
@@ -221,7 +269,10 @@ object IcfSvmModel {
     // libsvm/psvm files, SPARSE entries (zeros omitted, indices can skip)
     // — so each value is placed at its declared index, never positionally.
     // Vectors are sized by the header `dim` when present (dense saveText
-    // output always writes it), else by the line's own max index.
+    // output always writes it), else by the line's own max index. The
+    // primitive Array[Double] encodes straight to an unsafe array; a Seq
+    // would go through a boxed per-element conversion that every kernel
+    // evaluation then unboxes.
     val headerDim = header.get("dim").map(_.toInt).getOrElse(-1)
     val svs = spark.read.textFile(s"$path/sv")
       .map { line =>
@@ -239,7 +290,7 @@ object IcfSvmModel {
             s"SV feature index $idx outside [1, $dim] (header dim $headerDim)")
           x(idx - 1) = v
         }
-        (x.toSeq, coef)
+        (x, coef)
       }
       .toDF("sv_x", "sv_coef")
     IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble)

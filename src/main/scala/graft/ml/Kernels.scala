@@ -12,7 +12,8 @@ import graft.functions.VectorOps
 sealed trait Kernel extends Serializable {
   /** Column form: k(a, b) over two array<double> columns. */
   def apply(a: Column, b: Column): Column
-  /** Driver/executor-local form over raw arrays (same math). */
+  /** Driver/executor-local form over raw arrays (same math, including
+    * the column forms' clamp to the shorter array). */
   def apply(a: Array[Double], b: Array[Double]): Double
   /** Column form over two SPARSE vectors, each an (indices: array<int>
     * ascending, values: array<double>) pair — the fused merge-join
@@ -29,8 +30,9 @@ object Kernel {
   import graft.functions.SparseOps
 
   private def dotLocal(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
     var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    while (i < n) { s += a(i) * b(i); i += 1 }
     s
   }
 
@@ -70,8 +72,9 @@ object Kernel {
       exp(lit(-gamma) * graft.functions.GraftFunctions.sq_distance(a, b))
     }
     def apply(a: Array[Double], b: Array[Double]): Double = {
+      val n = math.min(a.length, b.length)
       var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+      while (i < n) { val d = a(i) - b(i); s += d * d; i += 1 }
       math.exp(-gamma * s)
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
@@ -90,8 +93,9 @@ object Kernel {
       exp(lit(-gamma) * graft.functions.GraftFunctions.l1_distance(a, b))
     }
     def apply(a: Array[Double], b: Array[Double]): Double = {
+      val n = math.min(a.length, b.length)
       var s = 0.0; var i = 0
-      while (i < a.length) { s += math.abs(a(i) - b(i)); i += 1 }
+      while (i < n) { s += math.abs(a(i) - b(i)); i += 1 }
       math.exp(-gamma * s)
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {

@@ -67,9 +67,12 @@ object ScaleOps {
     if (!java.nio.file.Files.exists(root)) 0L
     else {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
+      // the walk holds open directory handles until closed
+      scala.util.Using.resource(java.nio.file.Files.walk(root)) { paths =>
+        paths.iterator().asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(java.nio.file.Files.size).sum
+      }
     }
   }
 

@@ -148,6 +148,23 @@ class CodebookExpressionsSpec extends AnyFunSuite {
     assert(mk() != other, "different tables must not compare equal")
   }
 
+  test("pq table expressions: codebook shape is part of equality/hash") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val childRef = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    val a = Array(1.0, 2.0); val b = Array(3.0, 4.0)
+    // same flattened rows: one subspace of two codewords vs two of one
+    def oneSub = Array(Array(a.clone, b.clone))
+    def twoSubs = Array(Array(a.clone), Array(b.clone))
+    assert(PqEncode(childRef, oneSub) == PqEncode(childRef, oneSub))
+    assert(PqEncode(childRef, oneSub).hashCode == PqEncode(childRef, oneSub).hashCode)
+    assert(PqEncode(childRef, oneSub) != PqEncode(childRef, twoSubs))
+    assert(PqEncode(childRef, oneSub).hashCode != PqEncode(childRef, twoSubs).hashCode)
+    assert(PqAdcTable(childRef, oneSub) == PqAdcTable(childRef, oneSub))
+    assert(PqAdcTable(childRef, oneSub) != PqAdcTable(childRef, twoSubs))
+    assert(PqAdcTable(childRef, oneSub).hashCode != PqAdcTable(childRef, twoSubs).hashCode)
+  }
+
   test("hardening: short vectors fail loudly, long residual vectors clamp") {
     import spark.implicits._
     val short = Seq(Tuple1(Seq(1.0, 2.0))).toDF("vec")

@@ -92,6 +92,116 @@ class IcfSvmSpec extends SparkSpec {
     }
   }
 
+  // one fit (the chunked spec's data) shared by the predict-regime specs
+  private lazy val regimeFit = {
+    val rng = new scala.util.Random(31)
+    val pts = (0 until 70).map { i =>
+      val pos = i % 2 == 0
+      val cx = if (pos) 1.5 else -1.5
+      (i.toLong,
+       Array(cx + rng.nextGaussian() * 0.6, -cx + rng.nextGaussian() * 0.6),
+       if (pos) 1.0 else -1.0)
+    }
+    val df = pts.toDF("id", "vec", "y")
+    val model = IcfSvmTrainer.fit(df, "id", "vec", "y",
+      Kernel.Rbf(0.5), rank = 16, c = 5.0, maxIter = 40)
+    // plain-Scala Σ coefᵢ·exp(−0.5‖svᵢ − x‖²) + bias over the collected SVs
+    val svRows = model.svs.select("sv_x", "sv_coef").as[(Seq[Double], Double)].collect()
+    def plain(x: Seq[Double]): Double = svRows.map { case (sv, c) =>
+      c * math.exp(-0.5 * sv.zip(x).map { case (a, b) => (a - b) * (a - b) }.sum)
+    }.sum + model.bias
+    (pts, df, model, plain _)
+  }
+
+  private def decisions(scored: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    scored.select($"id", $"decision").as[(Long, Double)].collect().toMap
+
+  private def crossJoins(scored: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = scored.queryExecution.executedPlan.toString
+    plan.contains("NestedLoopJoin") || plan.contains("CartesianProduct")
+  }
+
+  test("predict: all three layouts agree with the broadcast path and a plain-Scala kernel sum") {
+    val (pts, df, model, plain) = regimeFit
+    val nSv = model.numSupportVectors
+    assert(nSv >= 4 && nSv < pts.size, s"fixture needs a few SVs, got $nSv")
+    val few = df.filter($"id" < nSv - 1)            // nSv - 1 rows
+    val broadcastAll = model.predict(df, "id", "vec")
+    // SVs under the threshold: the broadcast kernel-sum join
+    val under = model.copy(broadcastThreshold = nSv)
+    // SVs over it, few scored rows: psvm's layout, no cross join at all
+    val streamed = model.copy(broadcastThreshold = nSv - 1).predict(few, "id", "vec")
+    // both sides over it: the partitioned cross join
+    val both = model.copy(broadcastThreshold = 2).predict(df, "id", "vec")
+    assert(crossJoins(broadcastAll) && crossJoins(both))
+    assert(!crossJoins(streamed), "the streamed layout must not plan a cross join")
+
+    val ref = decisions(broadcastAll)
+    val byLayout = Seq("under" -> decisions(under.predict(df, "id", "vec")),
+      "streamed" -> decisions(streamed), "both" -> decisions(both))
+    assert(byLayout(1)._2.keySet === (0L until nSv - 1).toSet)
+    val vecs = pts.map { case (id, x, _) => id -> x.toSeq }.toMap
+    for ((name, got) <- byLayout; (id, d) <- got) {
+      assert(math.abs(d - ref(id)) < 1e-9, s"$name id $id: $d vs broadcast ${ref(id)}")
+      assert(math.abs(d - plain(vecs(id))) < 1e-9, s"$name id $id: $d vs plain ${plain(vecs(id))}")
+    }
+    assert(streamed.columns.toSeq === df.columns.toSeq ++ Seq("decision", "prediction"))
+  }
+
+  test("predict streamed layout: a null vector scores bias, an empty frame scores nothing") {
+    val (_, _, model, plain) = regimeFit
+    val streamed = model.copy(broadcastThreshold = model.numSupportVectors - 1)
+    val withNull = Seq((1000L, Option.empty[Array[Double]]), (1001L, Some(Array(1.5, -1.5))))
+      .toDF("id", "vec")
+    val got = decisions(streamed.predict(withNull, "id", "vec"))
+    assert(got.keySet === Set(1000L, 1001L))
+    assert(got(1000L) === model.bias, "a null vector must score bias (LEFT join + coalesce)")
+    assert(math.abs(got(1001L) - plain(Seq(1.5, -1.5))) < 1e-9)
+
+    // a vector of the wrong length clamps to the shorter one, as the
+    // kernel expressions of the join layouts do
+    val offDim = Seq((1L, Array(1.5, -1.5, 9.0)), (2L, Array(1.5))).toDF("id", "vec")
+    val joinDec = decisions(model.predict(offDim, "id", "vec"))
+    decisions(streamed.predict(offDim, "id", "vec")).foreach { case (id, d) =>
+      assert(math.abs(d - joinDec(id)) < 1e-9, s"id $id: streamed $d vs join ${joinDec(id)}")
+    }
+
+    val empty = streamed.predict(withNull.filter($"id" < 0), "id", "vec")
+    assert(empty.columns.contains("decision") && empty.columns.contains("prediction"))
+    assert(empty.count() === 0L)
+  }
+
+  test("saveText writes the psvm text format byte-for-byte") {
+    val svs = Seq((Array(1.0e-5, -0.25, 3.0), 0.5)).toDF("sv_x", "sv_coef")
+    val dir = java.nio.file.Files.createTempDirectory("icfsvm_golden").toString
+    IcfSvmModel(Kernel.Rbf(0.5), svs, 1, 0.125).saveText(spark, dir)
+    assert(spark.read.textFile(s"$dir/header").collect().toSeq === Seq(
+      "svm_type c_svc", "kernel_type rbf", "gamma 0.5", "coef0 0.0", "degree 0",
+      "total_sv 1", "dim 3", "rho -0.125", "SV"))
+    assert(spark.read.textFile(s"$dir/sv").collect().toSeq === Seq("0.5 1:1.0E-5 2:-0.25 3:3.0"))
+  }
+
+  test("loadText: an out-of-range index fails loudly, and the SV plan never boxes elements") {
+    val dir = java.nio.file.Files.createTempDirectory("icfsvm_badidx").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/header"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/sv"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/header/part-00000"),
+      "svm_type c_svc\nkernel_type linear\ngamma 0.0\ncoef0 0.0\ndegree 0\n" +
+        "total_sv 2\ndim 4\nrho -0.5\nSV\n")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/sv/part-00000"), "1.0 2:3.0\n-2.0 5:1.0\n")
+    val m = IcfSvmModel.loadText(spark, dir)
+    // a Seq-typed vector would serialize through mapobjects, boxing
+    // every element that the kernel then unboxes per (row, SV) pair
+    val plan = m.svs.queryExecution.toString.toLowerCase
+    assert(!plan.contains("mapobjects"), s"boxed SV vectors in the plan:\n$plan")
+    val err = intercept[Exception](m.svs.collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains("SV feature index 5 outside [1, 4]")), msgs.mkString("\n"))
+  }
+
   test("per-class C weights shift the confusion matrix toward the rare class") {
     // 10:1 imbalanced overlapping blobs: unweighted C under-recalls the
     // rare positive class; boosting posWeight must raise tp (recall).
