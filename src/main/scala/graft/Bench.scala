@@ -1,67 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Fine-grained INITIAL shuffle partitioning, AQE coalesces small
-      // stages back down: with a static 32, a shuffle whose rows are fat
-      // (dedup verification joins carry ~1KB shingle arrays per pair)
-      // concentrates gigabytes per sort buffer — measured GC-storm →
-      // heartbeat-timeout → dead context on a 500k-doc corpus. 8×cpus
-      // initial granularity caps per-partition bytes at scale and costs
-      // nothing small (AQE merges sub-64MB partitions immediately).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      // finer scan grain than the 128m default: compressed columnar
-      // bytes under-represent decode work, and a ~100MB single-file
-      // table otherwise scans 1-wide on a 32-core box
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      // AQE's 64m coalesce target is tuned for byte-proportional work;
-      // pair-expansion stages (dedup banding) multiply row counts after
-      // the shuffle, so a finer target keeps their parallelism
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      // SPARK_GRAFT_MIN_COALESCED: optional AQE coalescing floor
-      // (coalescePartitions.minPartitionNum), default UNSET. A/B'd in
-      // r15 for the driver's anti-scaling cluster: floor=cpus at 32
-      // cores was a wash on the cluster total (127.5 vs 129.1 s) and
-      // systematically HURT the iterative flag-winners (p59 +1.3 s,
-      // p39 +1.0 s, p7c +0.9 s — their tiny per-iteration cached frames
-      // pay 32-task stages), while p33c stayed inside its noise band.
-      // Kept as a knob for slow-box diagnosis, not as a default.
-      // dev aid: SPARK_GRAFT_UI=true exposes the web UI / REST API for
-      // plan-level debugging of scaled runs
-      .config("spark.ui.enabled", sys.env.getOrElse("SPARK_GRAFT_UI", "false"))
-      // let AQE coalesce the plans that MATERIALIZE persisted frames:
-      // without this (default false) a persist() under the 8×cpus
-      // initial shuffle grain is pinned at the un-coalesced width — the
-      // iterative operators (pagerank/ppr/sssp, IPM feeds, dedup
-      // clusters) were scheduling 256-task stages over kilobyte
-      // partitions every iteration (measured: q52 ran 3120 tasks for a
-      // 16k-row graph). Cached-plan output partitioning is not part of
-      // any query's semantics; at scale the same flag lets cached
-      // frames land at the advisory partition size instead of the raw
-      // shuffle width.
-      // Env-overridable (SPARK_GRAFT_CACHED_REPART=false) for per-query
-      // A/B of the r14 flag at both core counts — the r14 verdict's
-      // anti-scaling cluster investigation.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_REPART", "true"))
-      // see Verify.scala: the codegen class cache (static conf, default
-      // 100) must hold the whole query pack or evicted stages recompile
-      // per task through janino — a 30-90x tax on later queries.
-      // Env-overridable for A/B-ing the late-suite contamination band.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "1500"))
-    val minCoalesced = sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "0")
-    val spark = (if (minCoalesced == "0") builder
-      else builder.config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum", minCoalesced))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Data-contract gate FIRST, and loudly: a changed on-disk encoding
     // must kill the run with one clear message, not let 25 queries fail
     // individually while the summary still reports a timing (the r05

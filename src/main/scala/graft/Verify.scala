@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,30 +9,7 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // fat-row shuffles need finer initial grain; AQE coalesces the
-      // rest — see Bench.scala for the measured failure this prevents
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      // see Bench.scala: decode work ≫ compressed bytes
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: AQE may re-coalesce cached-plan output — the
-      // iterative operators otherwise materialize every persist() at
-      // the full 8×cpus initial width
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // static conf, default 100: the ML queries embed fitted weights as
-      // literals, so each generates UNIQUE whole-stage sources that flood
-      // the compiled-class cache; once it thrashes, every later task
-      // recompiles its stage via janino at seconds per task (observed
-      // 30-90x slowdowns on the cleaning queries). One line buys it back.
-      .config("spark.sql.codegen.cache.maxEntries", "1500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // loud startup contract check (see Tables.contractCheck): a changed
     // on-disk encoding should be ONE clear failure, not 25 query errors
     try Tables.contractCheck(spark, sfDir)

@@ -23,11 +23,6 @@ import graft.Tables
   */
 object DedupClusters {
 
-  // dev aid (like P22Probe): GRAFT_CC_VERBOSE=1 prints per-round timing
-  private val verbose = sys.env.get("GRAFT_CC_VERBOSE").contains("1")
-  private def logRound(label: String, t0: Long): Unit = if (verbose)
-    System.err.println(f"[cc] $label%-18s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-
   /** Connected components of an undirected edge list (src, dst).
     * Returns (id, cluster_id = min id in the component).
     *
@@ -59,7 +54,6 @@ object DedupClusters {
     var iter = 0
     var converged = false
     while (iter < math.min(maxIter, starSwitchRounds) && !converged) {
-      val tRound = System.nanoTime()
       // (convergence is REQUIRED below — silently returning mixed labels
       // would split one logical cluster into several)
       // ONE shuffle per round: union each vertex's own label with the labels
@@ -93,7 +87,6 @@ object DedupClusters {
         next.filter(col("comp") < col("old")).limit(1).count() == 0L
       labels = next.select(col("id"), col("comp"))
       iter += 1
-      logRound(s"prop round $iter", tRound)
     }
     und.unpersist(false)
     if (!converged) {
@@ -132,7 +125,6 @@ object DedupClusters {
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val tRound = System.nanoTime()
       // large-star over the full (symmetric) neighborhood
       val und = e.select(col("lo").as("a"), col("hi").as("b"))
         .union(e.select(col("hi").as("a"), col("lo").as("b")))
@@ -160,7 +152,6 @@ object DedupClusters {
         .limit(1).count() == 0L
       e = ss
       iter += 1
-      logRound(s"star round $iter", tRound)
     }
     if (!converged)
       throw new IllegalStateException(

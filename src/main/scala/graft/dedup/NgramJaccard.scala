@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -10,12 +10,6 @@ import graft.Tables
   * catches near-dups with small in-word edits that token shingles miss.
   */
 object NgramJaccard {
-
-  /** Distinct character n-grams of a string (whole string when shorter). */
-  def charNgrams(text: Column, n: Int = 3): Column =
-    array_distinct(expr(
-      s"transform(sequence(1, greatest(length(text) - ${n - 1}, 1)), " +
-      s"i -> substring(text, i, $n))"))
 
   /** LSH candidates over char-ngram sets, verified with exact Jaccard.
     *

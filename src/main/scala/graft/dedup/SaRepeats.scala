@@ -127,17 +127,10 @@ object SaRepeats {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val tmp = java.nio.file.Files.createTempDirectory("graft_p33c").toString
-    // level-file codec, env-overridable for I/O-vs-CPU A/B on boxes with
-    // slow scratch storage (SPARK_GRAFT_P33C_CODEC=zstd|snappy|lz4|...)
-    val codec = sys.env.getOrElse("SPARK_GRAFT_P33C_CODEC", "")
+    // level files use the session's parquet codec (a codec A/B in r15
+    // measured 23.3 s vs 24.2 s, within noise)
     def store(df: DataFrame, k: Int): DataFrame = {
-      val w = df.write.mode("overwrite")
-      (if (codec.isEmpty) w else w.option("compression", codec))
-        .parquet(s"$tmp/lvl_$k")
-      if (sys.env.contains("SPARK_GRAFT_P33C_DEBUG")) {
-        val bytes = graft.operators.ScaleOps.dirBytes(s"$tmp/lvl_$k")
-        System.err.println(f"[p33c] level $k%3d stored ${bytes / 1048576.0}%8.2f MiB")
-      }
+      df.write.mode("overwrite").parquet(s"$tmp/lvl_$k")
       spark.read.parquet(s"$tmp/lvl_$k")
     }
     // SINGLETON PRUNING (the classic prefix-doubling optimization): a
@@ -274,7 +267,6 @@ object SaRepeats {
         val stored =
           if (pruned || 4 * k > maxLevel) labeled.filter($"dup") // dup-only
           else labeled
-        val t0 = System.nanoTime()
         val next = store(stored, 2 * k)
         release()
         // pair files are fully consumed within this round's store; level
@@ -285,8 +277,6 @@ object SaRepeats {
         k = 2 * k
         val rep = repCounts(next, k)
         out += ((k, rep))
-        if (sys.env.contains("SPARK_GRAFT_P33C_DEBUG"))
-          System.err.println(f"[p33c] level $k%3d pruned=$pruned%-5s bound=$bound%14d ${(System.nanoTime() - t0) / 1e9}%7.2fs")
         if (!pruned && dupTotal(rep, k).toDouble / total < pruneBelow)
           pruned = true
         cur = next

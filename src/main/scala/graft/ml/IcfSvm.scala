@@ -42,12 +42,7 @@ final case class IcfSvmModel(
     * f(x) = Σ coefᵢ k(xᵢ,x) − rho, so rho = −bias. */
   def saveText(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val (kt, g, c0, d) = kernel match {
-      case Kernel.Linear => ("linear", 0.0, 0.0, 0)
-      case Kernel.Polynomial(gm, cc, dg) => ("polynomial", gm, cc, dg)
-      case Kernel.Rbf(gm) => ("rbf", gm, 0.0, 0)
-      case Kernel.Laplacian(gm) => ("laplacian", gm, 0.0, 0)
-    }
+    val (kt, g, c0, d) = Kernel.encode(kernel)
     // `dim`: the feature dimension, so sparse loaders can size vectors
     // without scanning (libsvm itself omits it; psvm model headers carry
     // the equivalent). -1 for a degenerate zero-SV model.
@@ -258,13 +253,8 @@ object IcfSvmModel {
       .filter(_.contains(' '))
       .map { l => val i = l.indexOf(' '); l.substring(0, i) -> l.substring(i + 1) }
       .toMap
-    val kernel: Kernel = header("kernel_type") match {
-      case "linear" => Kernel.Linear
-      case "polynomial" => Kernel.Polynomial(header("gamma").toDouble,
-        header("coef0").toDouble, header("degree").toInt)
-      case "rbf" => Kernel.Rbf(header("gamma").toDouble)
-      case "laplacian" => Kernel.Laplacian(header("gamma").toDouble)
-    }
+    val kernel = Kernel.decode(header("kernel_type"), header("gamma").toDouble,
+      header("coef0").toDouble, header("degree").toInt)
     // SV lines are `<coef> idx:val …` with 1-BASED indices and, in real
     // libsvm/psvm files, SPARSE entries (zeros omitted, indices can skip)
     // — so each value is placed at its declared index, never positionally.
@@ -347,7 +337,7 @@ object IcfSvmTrainer {
     // (the m5/fitIpm shape, w = v on the factor features). Two O(n·p)
     // passes, averaging over ALL free SVs. The first cut here summed
     // the EXACT kernel over every (free, SV) pair instead — O(nFree·nSV)
-    // kernel evals that tools/M6Probe measured at 226.6s of m6's decade
+    // kernel evals, measured at 226.6s of m6's decade
     // row (102.5k free × 200k SV), for a quantity whose per-SV spread
     // under solver slack dwarfs the exact-vs-factored difference.
     val withA = joined.join(alphaDf, Seq("__id"))

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.{LinearSVC, OneVsRest}
+import org.apache.spark.ml.classification.LinearSVC
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,12 +61,7 @@ final case class KernelSvmModel(
   /** Persist as a parquet model dir (reference: model.cc Save). */
   def save(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val k = featureMap.kernel match {
-      case Kernel.Linear => ("linear", 0.0, 0.0, 0)
-      case Kernel.Polynomial(g, c, d) => ("polynomial", g, c, d)
-      case Kernel.Rbf(g) => ("rbf", g, 0.0, 0)
-      case Kernel.Laplacian(g) => ("laplacian", g, 0.0, 0)
-    }
+    val k = Kernel.encode(featureMap.kernel)
     Seq((k._1, k._2, k._3, k._4, weights.toSeq, intercept))
       .toDF("kernel", "gamma", "coef0", "degree", "weights", "intercept")
       .write.mode("overwrite").parquet(s"$path/params")
@@ -83,13 +78,8 @@ object KernelSvmModel {
   /** Reload a model dir written by [[KernelSvmModel.save]]. */
   def load(spark: SparkSession, path: String): KernelSvmModel = {
     val p = spark.read.parquet(s"$path/params").head()
-    val kernel = (p.getAs[String]("kernel") match {
-      case "linear" => Kernel.Linear
-      case "polynomial" => Kernel.Polynomial(p.getAs[Double]("gamma"),
-        p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
-      case "rbf" => Kernel.Rbf(p.getAs[Double]("gamma"))
-      case "laplacian" => Kernel.Laplacian(p.getAs[Double]("gamma"))
-    }): Kernel
+    val kernel = Kernel.decode(p.getAs[String]("kernel"), p.getAs[Double]("gamma"),
+      p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
     def rows(name: String, colName: String): Array[Array[Double]] =
       spark.read.parquet(s"$path/$name").orderBy("idx")
         .collect().map(_.getSeq[Double](1).toArray)
@@ -136,12 +126,7 @@ final case class MulticlassKernelSvmModel(
     * classifier table. */
   def save(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val k = featureMap.kernel match {
-      case Kernel.Linear => ("linear", 0.0, 0.0, 0)
-      case Kernel.Polynomial(g, c, d) => ("polynomial", g, c, d)
-      case Kernel.Rbf(g) => ("rbf", g, 0.0, 0)
-      case Kernel.Laplacian(g) => ("laplacian", g, 0.0, 0)
-    }
+    val k = Kernel.encode(featureMap.kernel)
     Seq((k._1, k._2, k._3, k._4))
       .toDF("kernel", "gamma", "coef0", "degree")
       .write.mode("overwrite").parquet(s"$path/params")
@@ -161,13 +146,8 @@ object MulticlassKernelSvmModel {
   /** Reload a model dir written by [[MulticlassKernelSvmModel.save]]. */
   def load(spark: SparkSession, path: String): MulticlassKernelSvmModel = {
     val p = spark.read.parquet(s"$path/params").head()
-    val kernel = (p.getAs[String]("kernel") match {
-      case "linear" => Kernel.Linear
-      case "polynomial" => Kernel.Polynomial(p.getAs[Double]("gamma"),
-        p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
-      case "rbf" => Kernel.Rbf(p.getAs[Double]("gamma"))
-      case "laplacian" => Kernel.Laplacian(p.getAs[Double]("gamma"))
-    }): Kernel
+    val kernel = Kernel.decode(p.getAs[String]("kernel"), p.getAs[Double]("gamma"),
+      p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
     def rows(name: String): Array[Array[Double]] =
       spark.read.parquet(s"$path/$name").orderBy("idx")
         .collect().map(_.getSeq[Double](1).toArray)
@@ -289,8 +269,8 @@ object KernelSvmTrainer {
 
   /** M12 (model form): one-vs-rest multiclass with ONE shared Nyström
     * map and per-class LinearSVC fits run concurrently (classes are
-    * independent). Unlike [[fitMulticlass]] this returns a persistable
-    * [[MulticlassKernelSvmModel]] whose scoring is deterministic. */
+    * independent). Returns a persistable [[MulticlassKernelSvmModel]]
+    * whose scoring is deterministic. */
   def fitMulticlassModel(df: DataFrame, idCol: String, vecCol: String,
                          labelCol: String,
                          params: KernelSvmParams = KernelSvmParams(),
@@ -334,29 +314,6 @@ object KernelSvmTrainer {
         feats.unpersist()
       }
     MulticlassKernelSvmModel(map, classes, models.map(_._1), models.map(_._2))
-  }
-
-  /** M12: one-vs-rest multiclass on the Nyström features via MLlib. */
-  def fitMulticlass(df: DataFrame, idCol: String, vecCol: String,
-                    labelCol: String,
-                    params: KernelSvmParams = KernelSvmParams()): DataFrame = {
-    val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
-    val n = df.count()
-    val parts = fitPartitions(df, n)
-    val feats = Nystrom.transform(df, vecCol, map, "__phi")
-      .withColumn("__features", array_to_vector(col("__phi")))
-      .withColumn("__label", col(labelCol).cast("double"))
-      .repartition(parts)
-      .persist()
-    val ovr = new OneVsRest()
-      .setClassifier(new LinearSVC()
-        .setRegParam(params.regParam).setMaxIter(params.maxIter).setTol(params.tol))
-      .setFeaturesCol("__features").setLabelCol("__label")
-      .setParallelism(8)   // OVR classes are independent fits
-    val out = ovr.fit(feats).transform(feats)
-      .withColumnRenamed("prediction", "prediction_class")
-      .drop("__features", "__phi", "rawPrediction")
-    out
   }
 }
 

@@ -106,4 +106,26 @@ object Kernel {
                bi: Array[Int], bv: Array[Double]): Double =
       math.exp(-gamma * SparseOps.l1DistLocal(ai, av, bi, bv))
   }
+
+  /** Model-file codec (reference: psvm model.cc): a kernel as its
+    * (kernel_type, gamma, coef0, degree) fields, unused fields 0. */
+  def encode(k: Kernel): (String, Double, Double, Int) = k match {
+    case Linear => (k.name, 0.0, 0.0, 0)
+    case Polynomial(g, c, d) => (k.name, g, c, d)
+    case Rbf(g) => (k.name, g, 0.0, 0)
+    case Laplacian(g) => (k.name, g, 0.0, 0)
+  }
+
+  /** Inverse of [[encode]]. The numeric fields are read only when the
+    * kernel type uses them; a `kernelType` from outside input that names
+    * no kernel is rejected with the offending value. */
+  def decode(kernelType: String, gamma: => Double, coef0: => Double,
+             degree: => Int): Kernel = kernelType match {
+    case "linear" => Linear
+    case "polynomial" => Polynomial(gamma, coef0, degree)
+    case "rbf" => Rbf(gamma)
+    case "laplacian" => Laplacian(gamma)
+    case other => throw new IllegalArgumentException(
+      s"unknown kernel_type '$other' (expected linear, polynomial, rbf or laplacian)")
+  }
 }

@@ -42,12 +42,7 @@ final case class SparseKernelSvmModel(
     * [[KernelSvmModel.save]]: landmarks carry (lidx, lval) pairs). */
   def save(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val k = featureMap.kernel match {
-      case Kernel.Linear => ("linear", 0.0, 0.0, 0)
-      case Kernel.Polynomial(g, c, d) => ("polynomial", g, c, d)
-      case Kernel.Rbf(g) => ("rbf", g, 0.0, 0)
-      case Kernel.Laplacian(g) => ("laplacian", g, 0.0, 0)
-    }
+    val k = Kernel.encode(featureMap.kernel)
     Seq((k._1, k._2, k._3, k._4, weights.toSeq, intercept))
       .toDF("kernel", "gamma", "coef0", "degree", "weights", "intercept")
       .write.mode("overwrite").parquet(s"$path/params")
@@ -65,13 +60,8 @@ object SparseKernelSvmModel {
   /** Reload a model dir written by [[SparseKernelSvmModel.save]]. */
   def load(spark: SparkSession, path: String): SparseKernelSvmModel = {
     val p = spark.read.parquet(s"$path/params").head()
-    val kernel = (p.getAs[String]("kernel") match {
-      case "linear" => Kernel.Linear
-      case "polynomial" => Kernel.Polynomial(p.getAs[Double]("gamma"),
-        p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
-      case "rbf" => Kernel.Rbf(p.getAs[Double]("gamma"))
-      case "laplacian" => Kernel.Laplacian(p.getAs[Double]("gamma"))
-    }): Kernel
+    val kernel = Kernel.decode(p.getAs[String]("kernel"), p.getAs[Double]("gamma"),
+      p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
     val lm = spark.read.parquet(s"$path/landmarks").orderBy("idx").collect()
     val proj = spark.read.parquet(s"$path/projection").orderBy("idx")
       .collect().map(_.getSeq[Double](1).toArray)

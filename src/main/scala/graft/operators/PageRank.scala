@@ -56,7 +56,7 @@ object PageRank {
     *    shuffles and zero cache residency. (The r7 repartition+persist+
     *    eager-localCheckpoint shape paid 29–45s at sf0.1 in cold JVMs —
     *    cache build, per-iteration edge sorts and three checkpoint
-    *    barriers — vs 3–5s for this shape, A/B'd in tools/PrProbe.)
+    *    barriers — vs 3–5s for this shape, A/B'd.)
     *  - **shuffle (beyond 10M nodes)**: a billion-node graph's message
     *    table no longer broadcasts; co-partition the edges by src once,
     *    persist, and let every iteration shuffle only the vertex-sized
@@ -143,11 +143,6 @@ object PageRank {
     orders.join(lineitem, $"o_orderkey" === $"l_orderkey")
       .select(($"o_custkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
       .distinct()
-  }
-
-  private[graft] def deriveCsEdges(spark: SparkSession, dir: String): DataFrame = {
-    val cs = deriveCsEdgesDirected(spark, dir)
-    cs.union(cs.select(col("dst").as("src"), col("src").as("dst")))
   }
 
   /** q43: 3-iteration PageRank over the symmetrized customer–supplier

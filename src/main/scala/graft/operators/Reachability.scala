@@ -33,7 +33,7 @@ object Reachability {
     * broadcast anti-join against the reached set — zero edge-sized
     * shuffles or cache residency (the r7 repartition+persist+
     * per-hop-checkpoint shape paid 30–70s at sf0.1 in cold JVMs; same
-    * finding as PageRank.ranks, A/B'd in tools/PrProbe). The hints are
+    * finding as PageRank.ranks). The hints are
     * gated on the MEASURED reached-set count (free — the deltas are
     * checkpointed), so past `maxBroadcastNodes` reached vertices (see
     * [[GraphBroadcast.MaxBroadcastNodes]] for the heap-derived default)

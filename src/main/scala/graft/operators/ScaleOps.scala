@@ -61,21 +61,6 @@ object ScaleOps {
     out
   }
 
-  /** Total bytes under a local path (debug instrumentation). */
-  private[graft] def dirBytes(path: String): Long = {
-    val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) 0L
-    else {
-      import scala.jdk.CollectionConverters._
-      // the walk holds open directory handles until closed
-      scala.util.Using.resource(java.nio.file.Files.walk(root)) { paths =>
-        paths.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      }
-    }
-  }
-
   /** Recursive local-filesystem delete for the temp dirs above. */
   private[graft] def deleteRecursively(path: String): Unit = {
     val root = java.nio.file.Paths.get(path)

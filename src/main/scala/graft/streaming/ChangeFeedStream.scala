@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -96,6 +97,10 @@ object ChangeFeedStream {
     // stale guard above makes a no-op re-merge (s5's idempotency)
     newAgg.write.mode("overwrite").parquet(s"$root/agg_${v + 1}")
     newState.write.mode("overwrite").parquet(s"$root/state_${v + 1}")
+    // both writes are done: drop the checkpointed blocks now instead of
+    // leaving each micro-batch's join cached until a GC collects it
+    joined.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** s13: write U11's three commits, stream them one file per trigger,

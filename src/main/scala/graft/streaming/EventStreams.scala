@@ -111,16 +111,14 @@ object EventStreams {
     // is corpus-cardinality-sized — 10M keys at the 100× decade measured
     // 61s with GC pressure), while RocksDB keeps state off-heap with
     // spill-to-disk, the shape that survives billion-key streams.
-    // Env-overridable for A/B (SPARK_GRAFT_STATE_STORE=memory).
     val prevProvider = spark.conf.get(ProviderConf, "")
     spark.conf.set(ProviderConf, stateStoreProvider)
     // Changelog checkpointing: commit per-batch DELTAS instead of a full
     // RocksDB snapshot upload per store per batch — strictly less commit
     // I/O at every scale (snapshots still happen, asynchronously in the
-    // maintenance thread). Env-overridable for A/B.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+    // maintenance thread; r15 A/B over 9 streams: 42.4 s vs 54.9 s).
+    val prevChangelog = spark.conf.get(ChangelogConf, "")
+    spark.conf.set(ChangelogConf, "true")
     try {
       val t0 = System.nanoTime()
       val q = out.writeStream.format("memory").queryName(name)
@@ -131,13 +129,19 @@ object EventStreams {
           StreamMeters.batchSeconds(q))
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      if (prevProvider.isEmpty) spark.conf.unset(ProviderConf)
-      else spark.conf.set(ProviderConf, prevProvider)
+      restore(spark, ProviderConf, prevProvider)
+      restore(spark, ChangelogConf, prevChangelog)
     }
     spark.table(name)
   }
 
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
+  private val ChangelogConf =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  private def restore(spark: org.apache.spark.sql.SparkSession,
+                      key: String, prev: String): Unit =
+    if (prev.isEmpty) spark.conf.unset(key) else spark.conf.set(key, prev)
 
   /** The keyed state-layout width [[runToMemory]] uses, for the
     * self-managed foreachBatch streams (s11/s13) that don't go through
@@ -163,13 +167,8 @@ object EventStreams {
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  private[streaming] def stateStoreProvider: String =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb") match {
-      case "memory" =>
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-      case _ =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    }
+  private[streaming] val stateStoreProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** s1: S1 through the streaming engine, hash-compared to the batch
     * windowed aggregation (complete mode — every window survives). */

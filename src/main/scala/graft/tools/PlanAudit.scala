@@ -1,33 +1,30 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
-/** Dev-only: dump formatted plans for scan/join-strategy auditing. */
+/** Dev-only: dump the plans the bench runs, for scan/join-strategy
+  * auditing. Usage: PlanAudit [sfDir] [query,query,...] */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args(1).split(",").toSet else Set[String]()
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => names.isEmpty || names.contains(q._1))
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
-        try {
-          val df = fn(spark, dir)
-          // SPARK_GRAFT_PLAN_EXEC=true: run the query and print the FINAL
-          // adaptive plan — the only place ReusedExchange/AQEShuffleRead
-          // are visible (the formatted initial plan expands duplicate
-          // subtrees that AQE deduplicates at runtime)
-          if (sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("true")) {
-            df.write.format("noop").mode("overwrite").save()
-            println(df.queryExecution.executedPlan.toString)
-          } else println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        } catch { case e: Throwable => println(s"explain failed: $e") }
+        try println(executedPlan(fn(spark, dir)))
+        catch { case e: Throwable => println(s"explain failed: $e") }
       }
     spark.stop()
+  }
+
+  /** Runs `df` the way Bench times it and returns the FINAL adaptive
+    * plan of that same QueryExecution — the only place ReusedExchange
+    * and AQEShuffleRead are visible (an unexecuted plan expands
+    * duplicate subtrees that AQE deduplicates at runtime). */
+  def executedPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.count()
+    df.queryExecution.executedPlan.toString
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: run one named SparkEntry query and attribute wall time to
   * Spark jobs by call site — the §1 "where does the time go" loop for a
@@ -17,20 +16,7 @@ object QueryProfile {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val name = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.files.maxPartitionBytes", "32m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_REPART", "true")) // match Bench/Verify
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "1500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     // Attribute per STAGE: AQE runs each query stage as its own job on the
     // execution pool (the job-level call site is a CompletableFuture frame),
     // but StageInfo.details carries the full submission stack — the first

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -26,20 +25,14 @@ object StreamBench {
     val rowsPerSec = args.headOption.map(_.toInt).getOrElse(200000)
     val seconds = args.lift(1).map(_.toInt).getOrElse(20)
     val users = args.lift(2).map(_.toInt).getOrElse(1000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     /** rate-source rows shaped like the events table. */
     def events() = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSec)
-      .option("numPartitions", cpus.toInt)
+      .option("numPartitions", cpus)
       .load()
       .select(col("value").as("event_id"),
         col("timestamp").as("ts"),
@@ -102,7 +95,7 @@ object StreamBench {
         pmod(xxhash64(col("value"), lit(i)), lit(1000)).cast("double") / 500.0 - 1.0): _*)
       val queries = spark.readStream.format("rate")
         .option("rowsPerSecond", math.max(rowsPerSec / 100, 100))
-        .option("numPartitions", cpus.toInt).load()
+        .option("numPartitions", cpus).load()
         .select(col("value").as("query_id"), qvec.as("qvec"))
         .withColumn("cell", explode(IvfAnn.probeCellsCol(
           IvfAnn.distances(col("qvec"), centroids), nlist, nprobe)))
@@ -162,7 +155,7 @@ object StreamBench {
       val docRate = math.max(rowsPerSec / 10, 1000)
       val docs = spark.readStream.format("rate")
         .option("rowsPerSecond", docRate)
-        .option("numPartitions", cpus.toInt).load()
+        .option("numPartitions", cpus).load()
         .select(col("value").as("doc_id"), synthText(20).as("text"))
       run("s9_scoring", graft.text.QualityClassifier.marginMicrosNarrow(docs, w, bias),
         "append")
@@ -195,7 +188,7 @@ object StreamBench {
       val docRate = math.max(rowsPerSec / 20, 1000)
       val docs = spark.readStream.format("rate")
         .option("rowsPerSecond", docRate)
-        .option("numPartitions", cpus.toInt).load()
+        .option("numPartitions", cpus).load()
         .select(col("value").as("doc_id"), (col("value") % 256).as("k"))
         .join(sample, Seq("k"))
         .select(col("doc_id"),
@@ -246,7 +239,7 @@ object StreamBench {
       val keys = users * 100
       def side() = spark.readStream.format("rate")
         .option("rowsPerSecond", jr)
-        .option("numPartitions", cpus.toInt).load()
+        .option("numPartitions", cpus).load()
       val clicks = side()
         .select(col("value").as("click_id"), (col("value") % keys).as("user_id"),
                 col("timestamp").as("click_ts"))

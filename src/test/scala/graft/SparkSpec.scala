@@ -4,24 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
-  * startup dominates test wall-clock otherwise). */
+  * startup dominates test wall-clock otherwise), set up by the same
+  * [[GraftSession]] as Bench and Verify, on a fixed 4 cores. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Verify.scala — without this the suites after the ML specs
-      // pay per-task janino recompiles once the 100-entry cache thrashes
-      .config("spark.sql.codegen.cache.maxEntries", "1500")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(cpus = 4)
 }

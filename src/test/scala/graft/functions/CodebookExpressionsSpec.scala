@@ -1,21 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The r14 optimization replaced the ANN family's literal-tree
   * centroid/codebook expressions with reference-object fused loops
   * (CodebookExpressions). These tests pin BIT-EXACT equivalence to the
   * exact forms they replaced — including the argmin FIRST-INDEX tie
   * rule — and that the fused expressions still whole-stage-codegen. */
-class CodebookExpressionsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]").appName("codebook-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CodebookExpressionsSpec extends graft.SparkSpec {
 
   // deterministic "random" doubles (no Math.random in specs either)
   private def v(seed: Int, dim: Int): Array[Double] =

@@ -61,6 +61,22 @@ class ChangeFeedStreamSpec extends SparkSpec {
     }
   }
 
+  test("s13: applyBatch releases its checkpointed join after both writes") {
+    val root = mkRoot()
+    try {
+      // checked right after each call: an unreleased checkpoint is only
+      // weakly held once applyBatch returns, so a later GC would hide it
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val added = Seq((1L, 10.0, "A", false, 1), (1L, 15.0, "B", false, 2),
+          (2L, 20.0, "A", false, 1)).map { r =>
+        ChangeFeedStream.applyBatch(spark, root, batch(r))
+        (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      }
+      assert(added === Seq(0, 0, 0))
+      assert(agg(root) == Map("A" -> ((1L, 20.0)), "B" -> ((1L, 15.0))), s"got ${agg(root)}")
+    } finally graft.operators.ScaleOps.deleteRecursively(root)
+  }
+
   test("s13 query: streaming view equals the oracle-resolved v3 state on sf0.001") {
     val out = ChangeFeedStream.s13StreamChangeFeed(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getString(0) -> r.getAs[Long]("n_keys")).toMap

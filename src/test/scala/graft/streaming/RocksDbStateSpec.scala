@@ -9,8 +9,8 @@ import EventStreams.Event
   * state store (off-heap, spill-to-disk — the provider that survives
   * 10M+-key dedup state; the in-memory HDFSBackedStateStore holds every
   * key on-heap). These specs pin (a) that the provider actually engages
-  * and (b) that results are bit-identical across providers, so flipping
-  * SPARK_GRAFT_STATE_STORE can never change answers. */
+  * and (b) that results are bit-identical across providers, so setting
+  * the provider conf directly can never change answers. */
 class RocksDbStateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -52,5 +52,21 @@ class RocksDbStateSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     assert(rocks === Set(1L, 2L, 3L, 4L))
     assert(rocks === mem)
+  }
+
+  test("a memory-sink stream restores the state-store confs it overrides") {
+    val changelog = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    val prev = Seq(Provider, changelog).map(k => k -> spark.conf.get(k, ""))
+    // sentinels: the opposite of what the stream sets for itself
+    spark.conf.set(Provider, hdfs)
+    spark.conf.set(changelog, "false")
+    try {
+      assert(EventStreams.s14StreamKmv(spark, "/root/testdata/sf0.001").collect().nonEmpty)
+      assert(spark.conf.get(Provider) === hdfs)
+      assert(spark.conf.get(changelog) === "false")
+    } finally prev.foreach { case (k, v) =>
+      if (v.isEmpty) spark.conf.unset(k) else spark.conf.set(k, v)
+    }
   }
 }

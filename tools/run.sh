@@ -12,7 +12,7 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
-# 512m code cache (env-overridable): ~1500 retained janino classes plus
+# 512m code cache: ~1500 retained janino classes plus
 # Spark/MLlib leave the JVM default 240m close enough to full that the
 # sweeper starts dropping hot compiled methods (measured ~2x on the
 # MLlib fit queries). A/B'd in round 5: growing the codegen class cache
@@ -20,7 +20,5 @@ done
 # queries WORSE (see BENCH_HISTORY round 5 — the late-suite band is
 # JIT-state variance, not a single-knob fix); 512m + 1500 remains the
 # validated operating point.
-exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -XX:ReservedCodeCacheSize=${SPARK_GRAFT_CODE_CACHE:-512m} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -XX:ReservedCodeCacheSize=512m \
   -cp "$CP" "$@"
