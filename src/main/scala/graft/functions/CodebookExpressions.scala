@@ -66,17 +66,21 @@ object CodebookExpressions {
   * identity-hash toString ([[D@...]]), so canonicalization, subexpression
   * elimination and exchange reuse never match two separately built
   * instances, and explain output is nondeterministic (r14 ADVICE). */
-private[functions] trait TableExpr { self: Expression =>
+private[graft] trait TableExpr { self: Expression =>
   /** The reference table flattened for equality/hash purposes. */
   protected def tableRows: Array[Array[Double]]
   /** Row count of each group the flattening merged (PQ: codewords per
     * subspace), so `[[a,b]]` and `[[a],[b]]` do not compare equal;
     * empty for tables that are not grouped. */
   protected def tableGroups: Array[Int] = Array.emptyIntArray
+  /** Non-table fields with value equality (e.g. a kernel) that take part
+    * in equality and hash. */
+  protected def tableParams: Seq[Any] = Nil
   protected def tableShape: String
   final override def equals(o: Any): Boolean = o match {
     case that: TableExpr if that.getClass == getClass =>
       children == that.asInstanceOf[Expression].children &&
+        tableParams == that.tableParams &&
         java.util.Arrays.equals(tableGroups, that.tableGroups) &&
         tableRows.length == that.tableRows.length &&
         tableRows.indices.forall(i =>
@@ -84,8 +88,8 @@ private[functions] trait TableExpr { self: Expression =>
     case _ => false
   }
   final override def hashCode: Int = {
-    var h = (getClass.hashCode * 31 + children.hashCode) * 31 +
-      java.util.Arrays.hashCode(tableGroups)
+    var h = ((getClass.hashCode * 31 + children.hashCode) * 31 +
+      tableParams.hashCode) * 31 + java.util.Arrays.hashCode(tableGroups)
     var i = 0
     while (i < tableRows.length) {
       h = h * 31 + java.util.Arrays.hashCode(tableRows(i)); i += 1

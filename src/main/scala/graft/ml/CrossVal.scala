@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.LinearSVC
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -135,13 +134,10 @@ object CrossVal {
           scala.concurrent.Future {
             val train = feats.filter(col("__fold") =!= f)
             val valid = feats.filter(col("__fold") === f)
-            val m = new LinearSVC()
-              .setFeaturesCol("__features").setLabelCol("__label01")
-              .setRegParam(reg).setMaxIter(maxIter).setTol(1e-4)
-              .setFitIntercept(true)
-              .fit(train)
+            val (weights, intercept) =
+              KernelSvmTrainer.fitLinear(train, reg, maxIter, tol = 1e-4)
             // score via the codegen dot product over the ARRAY column,
-            // not m.transform: the fitted model drags its
+            // not the fitted model's transform: it drags its
             // trainingSummary → SparkSession into the transform task
             // closure, which serializes only until anything touches the
             // session's lazily-created (non-serializable)
@@ -150,7 +146,7 @@ object CrossVal {
             // (sequential accumulation, prediction = margin > 0), so
             // the persisted-artifact replay is unaffected.
             val margin = graft.functions.GraftFunctions.dot_product(
-              col("__phi"), typedlit(m.coefficients.toArray)) + m.intercept
+              col("__phi"), typedlit(weights)) + intercept
             val predCol = when(margin > lit(0.0), 1.0).otherwise(0.0)
             def acc(df: DataFrame): (Long, Double) = {
               val a = df.agg(
@@ -161,8 +157,7 @@ object CrossVal {
             }
             val (nTrain, trainAcc) = acc(train)
             val (nVal, valAcc) = acc(valid)
-            CellFit(reg, f, nTrain, nVal, trainAcc, valAcc,
-              m.coefficients.toArray, m.intercept)
+            CellFit(reg, f, nTrain, nVal, trainAcc, valAcc, weights, intercept)
           }
         }
         val rs = futs.map(x =>

@@ -20,12 +20,15 @@ import org.apache.spark.storage.StorageLevel
   * That is p passes over the data — the same O(n·p²) work and O(n·p)
   * state as the reference, with the n-dimension fully distributed. The
   * lineage is truncated periodically so the plan doesn't grow with p.
+  * The loop does not depend on how a row is stored: [[factorize]] (dense
+  * rows) and [[factorizeSparse]] (sparse rows) only build the rows and
+  * pick the [[Kernel]] form that scores them.
   * For high-throughput training prefer [[Nystrom]]; ICF earns its cost
   * when the greedy pivots matter (fast-decaying spectra).
   */
 object Icf {
 
-  final case class IcfRow(id: Long, x: Array[Double], h: Array[Double], diag: Double)
+  private final case class IcfRow[X](id: Long, x: X, h: Array[Double], diag: Double)
 
   /** psvm's `rank_ratio` flag: p = ⌈ratio·n⌉ (capped at `maxRank`), with
     * residual-trace early stop — the factorization halts as soon as the
@@ -56,23 +59,52 @@ object Icf {
                 checkpointEvery: Int = 16,
                 residualTol: Double = 0.0,
                 checkpointDir: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
     import graft.functions.VectorOps
     import org.apache.spark.sql.functions.col
-
-    // Each of the p passes is a reduce + a map over these blocks; thin
-    // blocks pay per-task overhead p times over, so pack ~50k rows per
-    // block (wide inputs keep their parallelism).
     val nRows = df.count()
-    val base0 = df
+    val rows = df
       .select(col(idCol).cast("long"), VectorOps.toDoubleArray(col(vecCol)))
       .rdd
-      .map { r =>
-        val x = r.getSeq[Double](1).toArray
-        IcfRow(r.getLong(0), x, new Array[Double](rank), kernel(x, x))
-      }
-    val base = base0.coalesce(
-      math.max(1, math.min(base0.getNumPartitions, (nRows / 50000L).toInt + 1)))
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    pivotLoop(df.sparkSession, rows, nRows, (a: Array[Double], b: Array[Double]) => kernel(a, b),
+      rank, checkpointEvery, residualTol, checkpointDir)
+  }
+
+  /** [[factorize]] over SPARSE rows ((indices, values) pairs — the M16
+    * representation): the same greedy-pivot loop scoring rows with
+    * [[Kernel.sparse]]. The merge-join sparse kernels are bit-identical
+    * to the dense ones on the same data (SparseMlSpec), so this produces
+    * the EXACT factor the dense path would — without ever materializing
+    * dim-length vectors. At the rcv1-class regime that is the difference
+    * between broadcasting a ~1 KB pivot row per pass and a ~370 KB one,
+    * and between O(nnz) and O(dim) per kernel term. (No `checkpointDir`
+    * parameter here — the sparse path's passes are cheap enough that
+    * exposing the psvm-style resume isn't worth its surface; the loop
+    * supports it, so add the parameter when a real corpus needs it.) */
+  def factorizeSparse(df: DataFrame, idCol: String, idxCol: String,
+                      valCol: String, kernel: Kernel, rank: Int,
+                      checkpointEvery: Int = 16,
+                      residualTol: Double = 0.0): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val nRows = df.count()
+    val rows = df.select(col(idCol).cast("long"), col(idxCol), col(valCol))
+      .rdd
+      .map(r => (r.getLong(0), (r.getSeq[Int](1).toArray, r.getSeq[Double](2).toArray)))
+    pivotLoop(df.sparkSession, rows, nRows,
+      (a: (Array[Int], Array[Double]), b: (Array[Int], Array[Double])) =>
+        kernel.sparse(a._1, a._2, b._1, b._2),
+      rank, checkpointEvery, residualTol, None)
+  }
+
+  /** The greedy-pivot loop over (id, x) rows scored by `k`, returning
+    * (id, icf_features). */
+  private def pivotLoop[X](spark: SparkSession, rows: RDD[(Long, X)], nRows: Long,
+                           k: (X, X) => Double, rank: Int, checkpointEvery: Int,
+                           residualTol: Double,
+                           checkpointDir: Option[String]): DataFrame = {
+    val base0 = rows.map { case (id, x) => IcfRow(id, x, new Array[Double](rank), k(x, x)) }
+    // each of the p passes is a reduce + a map over these blocks
+    val base = base0.coalesce(Ipm.blockCount(nRows, base0.getNumPartitions))
 
     // resume from the last completed column dump, if any
     val resume: Option[(Int, RDD[(Long, (Array[Double], Double))])] =
@@ -101,25 +133,23 @@ object Icf {
     var j = resume.map(_._1).getOrElse(0)
     var stopped = false
     while (j < rank && !stopped) {
-      val pivot = rdd
-        .map(r => (r.diag, r.id, r.x, r.h))
-        .reduce { (a, b) =>
-          if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b
-        }
-      if (residualTol > 0.0 && pivot._1 <= residualTol) { stopped = true }
+      val pivot = rdd.reduce { (a, b) =>
+        if (a.diag > b.diag || (a.diag == b.diag && a.id < b.id)) a else b
+      }
+      if (residualTol > 0.0 && pivot.diag <= residualTol) { stopped = true }
       else {
-      val bc = spark.sparkContext.broadcast((pivot._2, pivot._3, pivot._4.clone(), pivot._1))
+      val bc = spark.sparkContext.broadcast(pivot)
       val jj = j
       val prev = rdd
       rdd = prev.map { r =>
-        val (pid, px, ph, pd) = bc.value
-        val sqrtPd = math.sqrt(math.max(pd, 1e-300))
+        val p = bc.value
+        val sqrtPd = math.sqrt(math.max(p.diag, 1e-300))
         val hj =
-          if (r.id == pid) sqrtPd
+          if (r.id == p.id) sqrtPd
           else {
             var dotHp = 0.0; var t = 0
-            while (t < jj) { dotHp += r.h(t) * ph(t); t += 1 }
-            (kernel(r.x, px) - dotHp) / sqrtPd
+            while (t < jj) { dotHp += r.h(t) * p.h(t); t += 1 }
+            (k(r.x, p.x) - dotHp) / sqrtPd
           }
         val h2 = r.h.clone(); h2(jj) = hj
         IcfRow(r.id, r.x, h2, r.diag - hj * hj)
@@ -143,82 +173,6 @@ object Icf {
       }
     }
 
-    val built = j
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("icf_features", ArrayType(DoubleType))))
-    spark.createDataFrame(
-      rdd.map(r => Row(r.id, (if (built < rank) r.h.take(built) else r.h).toSeq)),
-      schema)
-  }
-
-  final case class IcfSparseRow(id: Long, xi: Array[Int], xv: Array[Double],
-                                h: Array[Double], diag: Double)
-
-  /** [[factorize]] over SPARSE rows ((indices, values) pairs — the M16
-    * representation): the greedy-pivot loop is representation-agnostic,
-    * only the kernel evaluations change, and the merge-join sparse
-    * kernels are bit-identical to the dense ones on the same data
-    * (SparseMlSpec), so this produces the EXACT factor the dense path
-    * would — without ever materializing dim-length vectors. At the
-    * rcv1-class regime that is the difference between broadcasting a
-    * ~1 KB pivot row per pass and a ~370 KB one, and between O(nnz) and
-    * O(dim) per kernel term. (No mid-run checkpoint dir here — the
-    * sparse path's passes are cheap enough that the dense path's
-    * psvm-style resume machinery isn't worth its surface; add it when a
-    * real corpus needs it.) */
-  def factorizeSparse(df: DataFrame, idCol: String, idxCol: String,
-                      valCol: String, kernel: Kernel, rank: Int,
-                      checkpointEvery: Int = 16,
-                      residualTol: Double = 0.0): DataFrame = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.functions.col
-    val nRows = df.count()
-    val base0 = df.select(col(idCol).cast("long"), col(idxCol), col(valCol))
-      .rdd
-      .map { r =>
-        val xi = r.getSeq[Int](1).toArray
-        val xv = r.getSeq[Double](2).toArray
-        IcfSparseRow(r.getLong(0), xi, xv, new Array[Double](rank),
-          kernel.sparse(xi, xv, xi, xv))
-      }
-    var rdd = base0.coalesce(
-        math.max(1, math.min(base0.getNumPartitions, (nRows / 50000L).toInt + 1)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var j = 0
-    var stopped = false
-    while (j < rank && !stopped) {
-      val pivot = rdd
-        .map(r => (r.diag, r.id, r.xi, r.xv, r.h))
-        .reduce { (a, b) =>
-          if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b
-        }
-      if (residualTol > 0.0 && pivot._1 <= residualTol) { stopped = true }
-      else {
-        val bc = spark.sparkContext.broadcast(
-          (pivot._2, pivot._3, pivot._4, pivot._5.clone(), pivot._1))
-        val jj = j
-        val prev = rdd
-        rdd = prev.map { r =>
-          val (pid, pxi, pxv, ph, pd) = bc.value
-          val sqrtPd = math.sqrt(math.max(pd, 1e-300))
-          val hj =
-            if (r.id == pid) sqrtPd
-            else {
-              var dotHp = 0.0; var t = 0
-              while (t < jj) { dotHp += r.h(t) * ph(t); t += 1 }
-              (kernel.sparse(r.xi, r.xv, pxi, pxv) - dotHp) / sqrtPd
-            }
-          val h2 = r.h.clone(); h2(jj) = hj
-          IcfSparseRow(r.id, r.xi, r.xv, h2, r.diag - hj * hj)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        if ((j + 1) % checkpointEvery == 0) rdd.localCheckpoint()
-        rdd.count()
-        prev.unpersist(false)
-        j += 1
-      }
-    }
     val built = j
     val schema = StructType(Seq(
       StructField("id", LongType),

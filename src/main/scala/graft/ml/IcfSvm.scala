@@ -95,7 +95,7 @@ final case class IcfSvmModel(
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
     *     (O(n·p) via [[KernelSvmModel.predict]]), or use
-    *     [[predictChunked]] / [[predictQuantized]].
+    *     [[predictQuantized]].
     * All three sum the same terms and differ only in float summation
     * order (last ulps). A row with a null vector scores `bias`. */
   def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -140,24 +140,6 @@ final case class IcfSvmModel(
     spark.createDataFrame(rows.asJava, StructType(Seq(pid, StructField("__ksum", DoubleType))))
   }
 
-  /** [[predict]] in bounded SV batches — the path for the regime where
-    * BOTH the corpus and the SV set are huge (non-separable data makes
-    * nSV O(n)). One partitioned kernel-sum join is correct but builds a
-    * single O(n·nSV) stage; here the SV side is split into
-    * ⌈nSV/chunkSize⌉ hash-assigned chunks, each small enough to
-    * BROADCAST, and the per-chunk partial kernel sums add up to the same
-    * decision. Same total arithmetic, bounded memory per pass, no shuffle
-    * of the corpus at all — n·nSV work as a sequence of map-side joins.
-    * (Partial sums re-associate the float fold, so decisions can differ
-    * from [[predict]] in the last ulps — use [[predictOrdered]] when
-    * bit-stability matters more than throughput.) */
-  def predictChunked(df: DataFrame, idCol: String, vecCol: String,
-                     chunkSize: Long = 65536): DataFrame = {
-    val scores = chunkPartials(df, idCol, vecCol, chunkSize)(sum(_))
-      .groupBy(col("__pid")).agg(sum(col("__p")).as("__ksum"))
-    withDecision(df, idCol, scores)
-  }
-
   /** [[predict]] with QUANTIZED order-independent accumulation — the
     * scale path for exact-kernel scoring when BOTH the corpus and the
     * SV set are huge AND the result must be bit-stable/replayable:
@@ -166,8 +148,8 @@ final case class IcfSvmModel(
     * sum — associative and commutative EXACTLY, so map-side partial
     * aggregation, chunking, and any partitioning all produce identical
     * bits, and an external engine replays it with one GROUP BY.
-    * Physically the SV side streams in ≤`chunkSize` broadcast chunks
-    * (the [[predictChunked]] layout): no shuffle of n·nSV rows ever
+    * Physically the SV side streams in ⌈nSV/`chunkSize`⌉ hash-assigned
+    * broadcast chunks, each a map-side join: no shuffle of n·nSV rows ever
     * exists — [[predictOrdered]]'s per-row collect_list of nSV
     * contributions is O(n·nSV) through the shuffle, measured
     * disk-filling at the 100× decade (200k × 200k), while this path's
@@ -299,9 +281,7 @@ object IcfSvmTrainer {
     val spark = df.sparkSession
 
     val h = Icf.factorize(df, idCol, vecCol, kernel, rank)
-    // ~50k rows per block for the IPM passes (see KernelSvmTrainer.fitIpm)
-    val nRows = df.count()
-    val parts = math.max(1, math.min(df.rdd.getNumPartitions, (nRows / 50000L).toInt + 1))
+    val parts = Ipm.blockCount(df.count(), df.rdd.getNumPartitions)
     val joined = df
       .select(col(idCol).cast("long").as("__id"),
               VectorOps.toDoubleArray(col(vecCol)).as("__x"),
@@ -320,8 +300,8 @@ object IcfSvmTrainer {
     // PER-CLASS C: with class weights, a downweighted class's alphas are
     // bounded by c*weight, and a flat eps = svEpsilon*c would silently
     // drop that class's entire SV set.
-    val epsCol = lit(svEpsilon) *
-      when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
+    val cClass = when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
+    val epsCol = lit(svEpsilon) * cClass
     val svDf = joined.join(alphaDf, Seq("__id"))
       .filter(col("__alpha") > epsCol)
       .select(col("__id").as("sv_id"), col("__x").as("sv_x"),
@@ -340,10 +320,22 @@ object IcfSvmTrainer {
     // kernel evals, measured at 226.6s of m6's decade
     // row (102.5k free × 200k SV), for a quantity whose per-SV spread
     // under solver slack dwarfs the exact-vs-factored difference.
-    val withA = joined.join(alphaDf, Seq("__id"))
-    val p = joined.select(org.apache.spark.sql.functions.size(col("icf_features")))
-      .head().getInt(0)
-    val v = withA.select(col("__alpha"), col("__y"), col("icf_features"))
+    val (_, bias) = primalAndBias(joined.join(alphaDf, Seq("__id")), col("__alpha"),
+      col("__y"), col("icf_features"), rank,
+      free = col("__alpha") > epsCol && col("__alpha") < cClass * (1 - 1e-3))
+
+    joined.unpersist()
+    IcfSvmModel(kernel, svDf, nSv, bias)
+  }
+
+  /** Primal weights and bias from a dual solution, by psvm's KKT algebra
+    * on the rank-`p` features `h`: w = Σ αᵢyᵢhᵢ in one distributed pass,
+    * and b = the mean of yᵢ − w·hᵢ over the rows `free` selects (the free
+    * support vectors; each caller has its own predicate), 0.0 when
+    * there are none. */
+  private[ml] def primalAndBias(rows: DataFrame, alpha: Column, y: Column, h: Column,
+                                p: Int, free: Column): (Array[Double], Double) = {
+    val w = rows.select(alpha, y, h)
       .rdd.treeAggregate(new Array[Double](p))(
         seqOp = { (acc, r) =>
           val a = r.getDouble(0) * r.getDouble(1)
@@ -352,20 +344,13 @@ object IcfSvmTrainer {
           acc
         },
         combOp = { (x, y) => var j = 0; while (j < p) { x(j) += y(j); j += 1 }; x })
-    val epsB = lit(svEpsilon) * when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
-    val cUpper = when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
-    val freeAgg = withA
-      .filter(col("__alpha") > epsB && col("__alpha") < cUpper * (1 - 1e-3))
-      .select(col("__y"), col("icf_features"))
+    val (total, n) = rows.filter(free).select(y, h)
       .rdd.map { r =>
         val hi = r.getSeq[Double](1)
-        var s = 0.0; var j = 0; while (j < p) { s += v(j) * hi(j); j += 1 }
+        var s = 0.0; var j = 0; while (j < p) { s += w(j) * hi(j); j += 1 }
         (r.getDouble(0) - s, 1L)
       }
       .fold((0.0, 0L)) { (a, b) => (a._1 + b._1, a._2 + b._2) }
-    val bias = if (freeAgg._2 > 0) freeAgg._1 / freeAgg._2 else 0.0
-
-    joined.unpersist()
-    IcfSvmModel(kernel, svDf, nSv, bias)
+    (w, if (n > 0) total / n else 0.0)
   }
 }

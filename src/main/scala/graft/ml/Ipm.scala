@@ -43,6 +43,14 @@ object Ipm {
   /** One partition's rows, column-compressed. */
   final case class Block(y: Array[Double], h: Array[Array[Double]], alpha: Array[Double])
 
+  /** Block count for a data set that several passes run over: ~50k rows
+    * per block, never more blocks than `numPartitions`. Each pass pays
+    * per-task overhead once per block, so thin blocks pay it many times
+    * over; wide inputs keep their parallelism, toy inputs stop paying for
+    * empty tasks. */
+  private[ml] def blockCount(nRows: Long, numPartitions: Int): Int =
+    math.max(1, math.min(numPartitions, (nRows / 50000L).toInt + 1))
+
   final case class IpmModel(alpha: Array[Double], ids: Array[Long], bias: Double,
                             iterations: Int, surrogateGap: Double)
 

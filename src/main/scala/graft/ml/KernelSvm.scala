@@ -2,8 +2,9 @@ package graft.ml
 
 import org.apache.spark.ml.classification.LinearSVC
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField}
 
 /** §2.1 M7–M12: kernel SVM train / predict / persist / evaluate.
   *
@@ -44,50 +45,45 @@ final case class KernelSvmModel(
     weights: Array[Double],
     intercept: Double) extends Serializable {
 
-  /** Decision value f(x) = w·φ(x) + b as a column over `vecCol` — one
-    * reference-object node (the single-class OvrDecisions), identical
-    * arithmetic to dot_product(φ, array(lit…)) + lit(b). */
-  private def decisionCol(featCol: Column): Column =
-    element_at(graft.functions.CodebookExpressions.ovrDecisions(
-      featCol, Array(weights), Array(intercept)), 1)
-
   /** Adds `decision` (double) and `prediction` (±1) columns. */
   def predict(df: DataFrame, vecCol: String): DataFrame =
-    Nystrom.transform(df, vecCol, featureMap, "__phi")
-      .withColumn("decision", decisionCol(col("__phi")))
-      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
-      .drop("__phi")
+    KernelSvmModel.withDecision(
+      Nystrom.transform(df, vecCol, featureMap, "__phi"), weights, intercept)
 
   /** Persist as a parquet model dir (reference: model.cc Save). */
-  def save(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val k = Kernel.encode(featureMap.kernel)
-    Seq((k._1, k._2, k._3, k._4, weights.toSeq, intercept))
-      .toDF("kernel", "gamma", "coef0", "degree", "weights", "intercept")
-      .write.mode("overwrite").parquet(s"$path/params")
-    featureMap.landmarks.zipWithIndex.map { case (l, i) => (i, l.toSeq) }.toSeq
-      .toDF("idx", "landmark")
-      .write.mode("overwrite").parquet(s"$path/landmarks")
-    featureMap.w.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
-      .toDF("idx", "w_row")
-      .write.mode("overwrite").parquet(s"$path/projection")
-  }
+  def save(spark: SparkSession, path: String): Unit =
+    KernelSvmModel.save(spark, path, featureMap, weights, intercept)
 }
 
 object KernelSvmModel {
   /** Reload a model dir written by [[KernelSvmModel.save]]. */
   def load(spark: SparkSession, path: String): KernelSvmModel = {
-    val p = spark.read.parquet(s"$path/params").head()
-    val kernel = Kernel.decode(p.getAs[String]("kernel"), p.getAs[Double]("gamma"),
-      p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
-    def rows(name: String, colName: String): Array[Array[Double]] =
-      spark.read.parquet(s"$path/$name").orderBy("idx")
-        .collect().map(_.getSeq[Double](1).toArray)
-    KernelSvmModel(
-      NystromMap(rows("landmarks", "landmark"), rows("projection", "w_row"), kernel),
-      p.getSeq[Double](4).toArray,
-      p.getAs[Double]("intercept"))
+    val (p, kernel, lm, w) = Nystrom.loadModel(spark, path)
+    KernelSvmModel(NystromMap(denseLandmarks(lm), w, kernel),
+      p.getSeq[Double](4).toArray, p.getAs[Double]("intercept"))
   }
+
+  private[ml] def denseLandmarks(rows: Array[Row]): Array[Array[Double]] =
+    rows.map(_.getSeq[Double](1).toArray)
+
+  /** A binary model's params carry its `weights` and `intercept` after
+    * the kernel fields. */
+  private[ml] def save(spark: SparkSession, path: String, map: LandmarkMap,
+                       weights: Array[Double], intercept: Double): Unit =
+    Nystrom.saveModel(spark, path, map,
+      StructField("weights", ArrayType(DoubleType, containsNull = false)) -> weights.toSeq,
+      StructField("intercept", DoubleType, nullable = false) -> intercept)
+
+  /** Adds `decision` = w·φ + b over the `__phi` column and `prediction`
+    * (±1), and drops `__phi`. The decision is one reference-object node
+    * (the single-class OvrDecisions), identical arithmetic to
+    * dot_product(φ, array(lit…)) + lit(b). */
+  private[ml] def withDecision(phi: DataFrame, weights: Array[Double],
+                               intercept: Double): DataFrame =
+    phi.withColumn("decision", element_at(graft.functions.CodebookExpressions.ovrDecisions(
+        col("__phi"), Array(weights), Array(intercept)), 1))
+      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+      .drop("__phi")
 }
 
 /** M12: one-vs-rest multiclass kernel SVM — ONE shared Nyström feature
@@ -126,16 +122,7 @@ final case class MulticlassKernelSvmModel(
     * classifier table. */
   def save(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    val k = Kernel.encode(featureMap.kernel)
-    Seq((k._1, k._2, k._3, k._4))
-      .toDF("kernel", "gamma", "coef0", "degree")
-      .write.mode("overwrite").parquet(s"$path/params")
-    featureMap.landmarks.zipWithIndex.map { case (l, i) => (i, l.toSeq) }.toSeq
-      .toDF("idx", "landmark")
-      .write.mode("overwrite").parquet(s"$path/landmarks")
-    featureMap.w.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
-      .toDF("idx", "w_row")
-      .write.mode("overwrite").parquet(s"$path/projection")
+    Nystrom.saveModel(spark, path, featureMap)
     classes.indices.map { i => (classes(i), weights(i).toSeq, intercepts(i)) }
       .toDF("class", "weights", "intercept")
       .write.mode("overwrite").parquet(s"$path/classifiers")
@@ -145,17 +132,11 @@ final case class MulticlassKernelSvmModel(
 object MulticlassKernelSvmModel {
   /** Reload a model dir written by [[MulticlassKernelSvmModel.save]]. */
   def load(spark: SparkSession, path: String): MulticlassKernelSvmModel = {
-    val p = spark.read.parquet(s"$path/params").head()
-    val kernel = Kernel.decode(p.getAs[String]("kernel"), p.getAs[Double]("gamma"),
-      p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
-    def rows(name: String): Array[Array[Double]] =
-      spark.read.parquet(s"$path/$name").orderBy("idx")
-        .collect().map(_.getSeq[Double](1).toArray)
+    val (_, kernel, lm, w) = Nystrom.loadModel(spark, path)
     val cls = spark.read.parquet(s"$path/classifiers").orderBy("class")
       .collect()
       .map(r => (r.getDouble(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    MulticlassKernelSvmModel(
-      NystromMap(rows("landmarks"), rows("projection"), kernel),
+    MulticlassKernelSvmModel(NystromMap(KernelSvmModel.denseLandmarks(lm), w, kernel),
       cls.map(_._1), cls.map(_._2), cls.map(_._3))
   }
 }
@@ -191,31 +172,50 @@ object KernelSvmTrainer {
         maxFitRows)
     }
 
-  /** M8: fit a binary kernel SVM; labels in `labelCol` must be ±1. */
-  def fit(df: DataFrame, idCol: String, vecCol: String, labelCol: String,
-          params: KernelSvmParams = KernelSvmParams()): KernelSvmModel = {
-    val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
-    // Compact the partitioning for the iterative OWLQN fit (scheduler
-    // overhead per micro-task dominates when partitions are tiny) and
-    // cache so the feature map runs once, not once per pass.
+  /** The one LinearSVC fit (hinge loss with intercept) of every
+    * Nyström trainer: `feats` carries `__features` (vector) and
+    * `__label01` (0/1), and `__weight` when `weighted`. Returns
+    * (weights, intercept). */
+  private[ml] def fitLinear(feats: DataFrame, regParam: Double, maxIter: Int,
+                            tol: Double, weighted: Boolean = false): (Array[Double], Double) = {
+    val svc = new LinearSVC()
+      .setFeaturesCol("__features").setLabelCol("__label01")
+      .setRegParam(regParam).setMaxIter(maxIter)
+      .setTol(tol).setFitIntercept(true)
+    if (weighted) svc.setWeightCol("__weight")
+    val m = svc.fit(feats)
+    (m.coefficients.toArray, m.intercept)
+  }
+
+  /** The binary primal fit of the dense and sparse trainers: bound the
+    * rows, attach φ as `__phi` with `phi`, and fit LinearSVC on ±1
+    * labels with the per-class weights. The feature table is compacted
+    * for the iterative OWLQN fit (scheduler overhead per micro-task
+    * dominates when partitions are tiny) and cached so the feature map
+    * runs once, not once per pass. */
+  private[ml] def fitBinary(df: DataFrame, idCol: String, labelCol: String,
+                            params: KernelSvmParams)(
+      phi: DataFrame => DataFrame): (Array[Double], Double) = {
     val (fitDf, n) = boundFitRows(df, idCol, df.count(), params.maxFitRows)
-    val parts = fitPartitions(df, n)
-    val feats = Nystrom.transform(fitDf, vecCol, map, "__phi")
+    val feats = phi(fitDf)
       .withColumn("__features", array_to_vector(col("__phi")))
       .withColumn("__label01", when(col(labelCol) > 0, 1.0).otherwise(0.0))
       .withColumn("__weight",
         when(col(labelCol) > 0, params.posWeight).otherwise(params.negWeight))
-      .repartition(parts)
+      .repartition(fitPartitions(df, n))
       .persist()
-    val svc = new LinearSVC()
-      .setFeaturesCol("__features").setLabelCol("__label01")
-      .setRegParam(params.regParam).setMaxIter(params.maxIter)
-      .setTol(params.tol).setFitIntercept(true)
-    if (params.posWeight != 1.0 || params.negWeight != 1.0)
-      svc.setWeightCol("__weight")
-    val m = svc.fit(feats)
-    feats.unpersist()
-    KernelSvmModel(map, m.coefficients.toArray, m.intercept)
+    try fitLinear(feats, params.regParam, params.maxIter, params.tol,
+      weighted = params.posWeight != 1.0 || params.negWeight != 1.0)
+    finally feats.unpersist()
+  }
+
+  /** M8: fit a binary kernel SVM; labels in `labelCol` must be ±1. */
+  def fit(df: DataFrame, idCol: String, vecCol: String, labelCol: String,
+          params: KernelSvmParams = KernelSvmParams()): KernelSvmModel = {
+    val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
+    val (w, b) = fitBinary(df, idCol, labelCol, params)(
+      Nystrom.transform(_, vecCol, map, "__phi"))
+    KernelSvmModel(map, w, b)
   }
 
   /** M7 fidelity path: fit via the exact SMW interior-point dual solve
@@ -226,45 +226,25 @@ object KernelSvmTrainer {
              params: KernelSvmParams = KernelSvmParams(),
              c: Double = 1.0, maxIter: Int = 60): KernelSvmModel = {
     val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
-    // compact the block layout like [[fit]] does: the IPM loop runs ~3
-    // distributed passes per iteration, and per-task overhead dominates
-    // when blocks are thin — keep ~50k rows per block (wide data keeps
-    // its parallelism, toy data stops paying 32 empty tasks per pass)
-    val nIpm = df.count()
-    val partsIpm = math.max(1, math.min(df.rdd.getNumPartitions, (nIpm / 50000L).toInt + 1))
+    // the IPM loop runs ~3 distributed passes per iteration over these blocks
     val feats = Nystrom.transform(df, vecCol, map, "__phi")
-      .coalesce(partsIpm).persist()
+      .coalesce(Ipm.blockCount(df.count(), df.rdd.getNumPartitions)).persist()
     val (alphas, _, _) = Ipm.solve(feats, idCol, labelCol, "__phi", c,
       maxIter = maxIter, tol = params.tol,
       posWeight = params.posWeight, negWeight = params.negWeight)
     val withAlpha = feats
       .join(feats.sparkSession.createDataFrame(alphas)
         .toDF(idCol + "_a", "__alpha"), col(idCol) === col(idCol + "_a"))
-    val p = map.rank
-    // w = Σ alpha_i y_i phi_i — one distributed pass
-    val w = withAlpha.select(col("__alpha"), col(labelCol).cast("double"), col("__phi"))
-      .rdd.treeAggregate(new Array[Double](p))(
-        seqOp = { (acc, r) =>
-          val a = r.getDouble(0) * r.getDouble(1)
-          val phi = r.getSeq[Double](2)
-          var j = 0; while (j < p) { acc(j) += a * phi(j); j += 1 }
-          acc
-        },
-        combOp = { (x, y) => var j = 0; while (j < p) { x(j) += y(j); j += 1 }; x })
-    // bias from free SVs: b = mean(y_i − w·phi_i); the upper bound is the
+    // free SVs: strictly inside the box, whose upper bound is the
     // per-class C when class weights are set
     val eps = 1e-3 * c
     val cCol = when(col(labelCol) > 0, c * params.posWeight)
       .otherwise(c * params.negWeight)
-    val free = withAlpha.filter(col("__alpha") > eps && col("__alpha") < cCol - eps)
-      .select(col(labelCol).cast("double"), col("__phi"))
-      .rdd.map { r =>
-        val phi = r.getSeq[Double](1)
-        var s = 0.0; var j = 0; while (j < p) { s += w(j) * phi(j); j += 1 }
-        (r.getDouble(0) - s, 1L)
-      }.reduce { (a, b) => (a._1 + b._1, a._2 + b._2) }
+    val (w, bias) = IcfSvmTrainer.primalAndBias(withAlpha, col("__alpha"),
+      col(labelCol).cast("double"), col("__phi"), map.rank,
+      free = col("__alpha") > eps && col("__alpha") < cCol - eps)
     feats.unpersist()
-    KernelSvmModel(map, w, if (free._2 > 0) free._1 / free._2 else 0.0)
+    KernelSvmModel(map, w, bias)
   }
 
   /** M12 (model form): one-vs-rest multiclass with ONE shared Nyström
@@ -298,13 +278,9 @@ object KernelSvmTrainer {
       try {
         val fits = classes.map { k =>
           scala.concurrent.Future {
-            val svc = new LinearSVC()
-              .setFeaturesCol("__features").setLabelCol("__label01")
-              .setRegParam(params.regParam).setMaxIter(params.maxIter)
-              .setTol(params.tol).setFitIntercept(true)
-            val m = svc.fit(feats.withColumn("__label01",
-              when(col("__cls") === k, 1.0).otherwise(0.0)))
-            (m.coefficients.toArray, m.intercept)
+            fitLinear(feats.withColumn("__label01",
+              when(col("__cls") === k, 1.0).otherwise(0.0)),
+              params.regParam, params.maxIter, params.tol)
           }
         }
         fits.map(f =>

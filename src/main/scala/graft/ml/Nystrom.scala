@@ -1,8 +1,46 @@
 package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector, eigSym}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types._
+
+/** What the dense [[NystromMap]] and the sparse [[SparseNystromMap]]
+  * share: the m×rank projection W, the kernel, the projection
+  * φ(x) = Wᵀ·k(x,·), the model-file landmark table, and the content that
+  * their expressions compare. The two differ only in how a landmark is
+  * stored and which [[Kernel]] form scores a row against it. */
+trait LandmarkMap extends Serializable {
+  def w: Array[Array[Double]]
+  def kernel: Kernel
+  def rank: Int
+
+  /** Wᵀ·kx, where kx(i) is the row's kernel value against landmark i. */
+  protected final def project(kx: Array[Double]): Array[Double] = {
+    val m = kx.length
+    val out = new Array[Double](rank)
+    var j = 0
+    while (j < rank) {
+      var s = 0.0; var i = 0
+      while (i < m) { s += w(i)(j) * kx(i); i += 1 }
+      out(j) = s; j += 1
+    }
+    out
+  }
+
+  /** The landmarks as the `landmarks` table of a saved model. */
+  private[ml] def landmarkTable(spark: SparkSession): DataFrame
+  /** The landmark rows, then W's rows, as doubles; with [[contentGroups]]
+    * (the row count of each group) they are the map's content. */
+  private[ml] def contentRows: Array[Array[Double]]
+  private[ml] def contentGroups: Array[Int]
+  /** The landmark table's shape, for explain output. */
+  private[ml] def shape: String
+}
 
 /** §2.1 M6 (scale path): Nyström kernel-feature approximation.
   *
@@ -23,7 +61,7 @@ import org.apache.spark.sql.functions._
 final case class NystromMap(
     landmarks: Array[Array[Double]],
     w: Array[Array[Double]],   // m×m projection W = U·diag(1/√λ⁺)
-    kernel: Kernel) extends Serializable {
+    kernel: Kernel) extends LandmarkMap {
 
   val rank: Int = w.headOption.map(_.length).getOrElse(0)
 
@@ -33,20 +71,12 @@ final case class NystromMap(
     val kx = new Array[Double](m)
     var i = 0
     while (i < m) { kx(i) = kernel(x, landmarks(i)); i += 1 }
-    val out = new Array[Double](rank)
-    var j = 0
-    while (j < rank) {
-      var s = 0.0; var i2 = 0
-      while (i2 < m) { s += w(i2)(j) * kx(i2); i2 += 1 }
-      out(j) = s; j += 1
-    }
-    out
+    project(kx)
   }
 
   /** [[features]] straight off Catalyst array data — called from the
     * generated code of [[NystromFeatures]], no per-row boxing. */
-  def featuresFromArrayData(
-      a: org.apache.spark.sql.catalyst.util.ArrayData): Array[Double] =
+  def featuresFromArrayData(a: ArrayData): Array[Double] =
     features(a.toDoubleArray())
 
   /** Column form of the feature map: a native expression whose generated
@@ -55,19 +85,32 @@ final case class NystromMap(
     * boundary, so the surrounding projection stays in whole-stage
     * codegen. */
   def featuresCol: Column =
-    org.apache.spark.sql.graft.GraftShim.column(
-      NystromFeatures(
-        org.apache.spark.sql.graft.GraftShim.expression(col("__vec")), this))
+    GraftShim.column(NystromFeatures(GraftShim.expression(col("__vec")), this))
+
+  private[ml] def landmarkTable(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    landmarks.zipWithIndex.map { case (l, i) => (i, l.toSeq) }.toSeq.toDF("idx", "landmark")
+  }
+  private[ml] def contentRows: Array[Array[Double]] = landmarks ++ w
+  private[ml] def contentGroups: Array[Int] = Array(landmarks.length, w.length)
+  private[ml] def shape: String =
+    s"landmarks[${landmarks.length}x${landmarks.headOption.map(_.length).getOrElse(0)}]"
+}
+
+/** Content equality, hash and a bounded explain string for the feature-map
+  * expressions: landmarks, W, their shapes and the kernel all take part. */
+private[ml] trait LandmarkMapExpr extends graft.functions.TableExpr { self: Expression =>
+  def map: LandmarkMap
+  @transient override protected lazy val tableRows: Array[Array[Double]] = map.contentRows
+  override protected def tableGroups: Array[Int] = map.contentGroups
+  override protected def tableParams: Seq[Any] = Seq(map.kernel)
+  override protected def tableShape: String =
+    s"${map.shape}, w[${map.w.length}x${map.rank}], ${map.kernel}"
 }
 
 /** Fused `φ(x)` over an array<double> column (see [[NystromMap.featuresCol]]). */
-case class NystromFeatures(
-    child: org.apache.spark.sql.catalyst.expressions.Expression,
-    map: NystromMap)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-  import org.apache.spark.sql.types._
+case class NystromFeatures(child: Expression, map: NystromMap)
+  extends UnaryExpression with LandmarkMapExpr {
 
   override def prettyName: String = "nystrom_features"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
@@ -82,8 +125,7 @@ case class NystromFeatures(
       s"$mapRef.featuresFromArrayData($a));")
   }
 
-  override protected def withNewChildInternal(
-      c: org.apache.spark.sql.catalyst.expressions.Expression): NystromFeatures =
+  override protected def withNewChildInternal(c: Expression): NystromFeatures =
     copy(child = c)
 }
 
@@ -99,36 +141,41 @@ object Nystrom {
   def fit(df: DataFrame, idCol: String, vecCol: String,
           kernel: Kernel, numLandmarks: Int, ridge: Double = 1e-10,
           seed: Long = 42L): NystromMap = {
-    val slim = df.select(col(idCol), col(vecCol))
+    val landmarks: Array[Array[Double]] =
+      pickLandmarks(df.select(col(idCol), col(vecCol)), idCol, numLandmarks, seed)
+        .map(_.getSeq[Any](1).map {
+          case f: Float => f.toDouble
+          case d: Double => d
+        }.toArray)
+    NystromMap(landmarks,
+      projection(landmarks.length, ridge)((i, j) => kernel(landmarks(i), landmarks(j))),
+      kernel)
+  }
+
+  /** The landmark rows of `slim` (id first): the seeded sample ordered by
+    * id, first `numLandmarks` — shared by [[fit]] and [[SparseNystrom.fit]]. */
+  private[ml] def pickLandmarks(slim: DataFrame, idCol: String, numLandmarks: Int,
+                                seed: Long): Array[Row] = {
     val n = slim.count()
     val frac = if (n == 0) 1.0 else math.min(1.0, numLandmarks * 4.0 / n)
     val sampled =
       if (frac >= 1.0) slim
       else slim.sample(withReplacement = false, frac, seed)
-    var picked = sampled.orderBy(col(idCol)).limit(numLandmarks).collect()
+    val picked = sampled.orderBy(col(idCol)).limit(numLandmarks).collect()
     // a 4x-oversampled Bernoulli sample undershoots m with negligible
     // probability, but correctness can't ride on "negligible"
     if (picked.length < numLandmarks && frac < 1.0)
-      picked = slim.orderBy(col(idCol)).limit(numLandmarks).collect()
-    val landmarks: Array[Array[Double]] = picked
-      .map(_.getSeq[Any](1).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-      }.toArray)
-
-    val m = landmarks.length
-    val kmm = DenseMatrix.tabulate(m, m)((i, j) => kernel(landmarks(i), landmarks(j)))
-    NystromMap(landmarks, projectionOf(kmm, m, ridge), kernel)
+      slim.orderBy(col(idCol)).limit(numLandmarks).collect()
+    else picked
   }
 
   /** W = U·diag(1/√λ⁺) from the ridged symmetric eigendecomposition of
-    * K_mm — shared by the dense fit above and [[SparseNystrom.fit]]
-    * (the projection step is representation-agnostic: only the kernel
-    * evaluations differ between dense and sparse rows). */
-  private[ml] def projectionOf(kmm: DenseMatrix[Double], m: Int,
-                               ridge: Double): Array[Array[Double]] = {
+    * the m×m landmark kernel block `kmm` — representation-agnostic: only
+    * the kernel evaluations differ between dense and sparse rows. */
+  private[ml] def projection(m: Int, ridge: Double)(
+      kmm: (Int, Int) => Double): Array[Array[Double]] = {
     // symmetric eigendecomposition; ridge guards repeated landmarks
-    val es = eigSym(kmm + DenseMatrix.eye[Double](m) * ridge)
+    val es = eigSym(DenseMatrix.tabulate(m, m)(kmm) + DenseMatrix.eye[Double](m) * ridge)
     val lambda: DenseVector[Double] = es.eigenvalues
     val u: DenseMatrix[Double] = es.eigenvectors
     val tol = 1e-12 * math.max(1.0, breeze.linalg.max(lambda))
@@ -143,5 +190,39 @@ object Nystrom {
     df.withColumn("__vec", VectorOps.toDoubleArray(col(vecCol)))
       .withColumn(featCol, map.featuresCol)
       .drop("__vec")
+  }
+
+  /** Writes the layout every Nyström model dir shares (reference:
+    * model.cc Save): one `params` row (the kernel fields, then each
+    * `extraParams` field with its value), `landmarks` and `projection`
+    * (idx, w_row). The fields carry the nullability the tuple encoders
+    * give them, which the parquet files record. */
+  private[ml] def saveModel(spark: SparkSession, path: String, map: LandmarkMap,
+                            extraParams: (StructField, Any)*): Unit = {
+    import spark.implicits._
+    val (kt, g, c0, d) = Kernel.encode(map.kernel)
+    val schema = StructType(Seq(StructField("kernel", StringType),
+      StructField("gamma", DoubleType, nullable = false),
+      StructField("coef0", DoubleType, nullable = false),
+      StructField("degree", IntegerType, nullable = false)) ++ extraParams.map(_._1))
+    spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(Seq(kt, g, c0, d) ++ extraParams.map(_._2))), schema)
+      .write.mode("overwrite").parquet(s"$path/params")
+    map.landmarkTable(spark).write.mode("overwrite").parquet(s"$path/landmarks")
+    map.w.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toSeq
+      .toDF("idx", "w_row")
+      .write.mode("overwrite").parquet(s"$path/projection")
+  }
+
+  /** Reads what [[saveModel]] wrote: the params row, its kernel, the
+    * landmark rows and W, both in idx order. */
+  private[ml] def loadModel(spark: SparkSession, path: String)
+      : (Row, Kernel, Array[Row], Array[Array[Double]]) = {
+    val p = spark.read.parquet(s"$path/params").head()
+    val kernel = Kernel.decode(p.getAs[String]("kernel"), p.getAs[Double]("gamma"),
+      p.getAs[Double]("coef0"), p.getAs[Int]("degree"))
+    def rows(name: String): Array[Row] =
+      spark.read.parquet(s"$path/$name").orderBy("idx").collect()
+    (p, kernel, rows("landmarks"), rows("projection").map(_.getSeq[Double](1).toArray))
   }
 }

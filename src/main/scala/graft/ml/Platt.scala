@@ -49,7 +49,7 @@ object Platt {
     // Calibration sets are bounded by design (a sampled slice, not the
     // corpus), but the scored table arrives 32-way partitioned from the
     // upstream shuffle — at ~25 aggregate jobs per fit, empty task
-    // overhead would dominate. Compact like Ipm does (~50k
+    // overhead would dominate. Compact to IPM's blocks (~50k
     // rows/partition) instead of assuming small.
     val raw = base0.rdd.map(r => (r.getDouble(0), r.getDouble(1)))
     val nRaw = raw.getNumPartitions
@@ -61,8 +61,7 @@ object Platt {
     val nNeg = nNegL.toDouble
     val hi = (nPos + 1.0) / (nPos + 2.0)
     val lo = 1.0 / (nNeg + 2.0)
-    val parts = math.max(1, math.min(nRaw,
-      ((nPosL + nNegL) / 50000L).toInt + 1))
+    val parts = Ipm.blockCount(nPosL + nNegL, nRaw)
     val df = if (parts < nRaw) {
       val c = data.coalesce(parts).persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,8 +1,12 @@
 package graft.ml
 
-import breeze.linalg.DenseMatrix
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** §2.1 M6/M16 (sparse scale path): the Nyström kernel-feature map over
   * SPARSE rows — the reference's native data regime (psvm document.cc
@@ -24,52 +28,44 @@ final case class SparseNystromMap(
     landIdx: Array[Array[Int]],
     landVal: Array[Array[Double]],
     w: Array[Array[Double]],   // m×rank projection W = U·diag(1/√λ⁺)
-    kernel: Kernel) extends Serializable {
+    kernel: Kernel) extends LandmarkMap {
 
   val rank: Int = w.headOption.map(_.length).getOrElse(0)
 
-  /** φ(x) for one sparse vector (executor-local; same W^T·k(x,·) loop
-    * shape as the dense map so the two agree bit-for-bit). */
+  /** φ(x) for one sparse vector (executor-local; the dense map's
+    * projection, so the two agree bit-for-bit). */
   def features(xi: Array[Int], xv: Array[Double]): Array[Double] = {
     val m = landIdx.length
     val kx = new Array[Double](m)
     var i = 0
     while (i < m) { kx(i) = kernel.sparse(xi, xv, landIdx(i), landVal(i)); i += 1 }
-    val out = new Array[Double](rank)
-    var j = 0
-    while (j < rank) {
-      var s = 0.0; var i2 = 0
-      while (i2 < m) { s += w(i2)(j) * kx(i2); i2 += 1 }
-      out(j) = s; j += 1
-    }
-    out
+    project(kx)
   }
 
   /** [[features]] straight off Catalyst array data (no boxing). */
-  def featuresFromArrayData(
-      ia: org.apache.spark.sql.catalyst.util.ArrayData,
-      va: org.apache.spark.sql.catalyst.util.ArrayData): Array[Double] =
+  def featuresFromArrayData(ia: ArrayData, va: ArrayData): Array[Double] =
     features(ia.toIntArray(), va.toDoubleArray())
 
   /** Column form over (indices, values) columns — native codegen map,
     * one narrow pass, no shuffle (the sparse twin of
     * [[NystromMap.featuresCol]]). */
   def featuresCol(idxCol: Column, valCol: Column): Column =
-    org.apache.spark.sql.graft.GraftShim.column(
-      SparseNystromFeatures(
-        org.apache.spark.sql.graft.GraftShim.expression(idxCol),
-        org.apache.spark.sql.graft.GraftShim.expression(valCol), this))
+    GraftShim.column(SparseNystromFeatures(
+      GraftShim.expression(idxCol), GraftShim.expression(valCol), this))
+
+  private[ml] def landmarkTable(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    landIdx.indices.map(i => (i, landIdx(i).toSeq, landVal(i).toSeq)).toDF("idx", "lidx", "lval")
+  }
+  private[ml] def contentRows: Array[Array[Double]] =
+    landIdx.map(_.map(_.toDouble)) ++ landVal ++ w
+  private[ml] def contentGroups: Array[Int] = Array(landIdx.length, landVal.length, w.length)
+  private[ml] def shape: String = s"sparse_landmarks[${landIdx.length}]"
 }
 
 /** Fused `φ(x)` over an (array<int>, array<double>) sparse pair. */
-case class SparseNystromFeatures(
-    left: org.apache.spark.sql.catalyst.expressions.Expression,
-    right: org.apache.spark.sql.catalyst.expressions.Expression,
-    map: SparseNystromMap)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-  import org.apache.spark.sql.types._
+case class SparseNystromFeatures(left: Expression, right: Expression, map: SparseNystromMap)
+  extends BinaryExpression with LandmarkMapExpr {
 
   override def prettyName: String = "sparse_nystrom_features"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
@@ -87,36 +83,25 @@ case class SparseNystromFeatures(
   }
 
   override protected def withNewChildrenInternal(
-      l: org.apache.spark.sql.catalyst.expressions.Expression,
-      r: org.apache.spark.sql.catalyst.expressions.Expression): SparseNystromFeatures =
+      l: Expression, r: Expression): SparseNystromFeatures =
     copy(left = l, right = r)
 }
 
 object SparseNystrom {
 
   /** Landmark selection + K_mm + projection, all on sparse pairs — the
-    * same seeded-sample/thin-by-id discipline as [[Nystrom.fit]] (the
-    * comments there explain why sample-then-order); K_mm entries come
-    * from the local sparse merge kernels, and the eigen/projection step
-    * is shared. */
+    * landmark picker and projection of [[Nystrom.fit]] with K_mm entries
+    * from the local sparse merge kernels. */
   def fit(df: DataFrame, idCol: String, idxCol: String, valCol: String,
           kernel: Kernel, numLandmarks: Int, ridge: Double = 1e-10,
           seed: Long = 42L): SparseNystromMap = {
-    val slim = df.select(col(idCol), col(idxCol), col(valCol))
-    val n = slim.count()
-    val frac = if (n == 0) 1.0 else math.min(1.0, numLandmarks * 4.0 / n)
-    val sampled =
-      if (frac >= 1.0) slim
-      else slim.sample(withReplacement = false, frac, seed)
-    var picked = sampled.orderBy(col(idCol)).limit(numLandmarks).collect()
-    if (picked.length < numLandmarks && frac < 1.0)
-      picked = slim.orderBy(col(idCol)).limit(numLandmarks).collect()
+    val picked = Nystrom.pickLandmarks(
+      df.select(col(idCol), col(idxCol), col(valCol)), idCol, numLandmarks, seed)
     val li: Array[Array[Int]] = picked.map(_.getSeq[Int](1).toArray)
     val lv: Array[Array[Double]] = picked.map(_.getSeq[Double](2).toArray)
-    val m = li.length
-    val kmm = DenseMatrix.tabulate(m, m)((i, j) =>
-      kernel.sparse(li(i), lv(i), li(j), lv(j)))
-    SparseNystromMap(li, lv, Nystrom.projectionOf(kmm, m, ridge), kernel)
+    SparseNystromMap(li, lv,
+      Nystrom.projection(li.length, ridge)((i, j) => kernel.sparse(li(i), lv(i), li(j), lv(j))),
+      kernel)
   }
 
   /** Attach φ(x) as `featCol` (array<double>). */

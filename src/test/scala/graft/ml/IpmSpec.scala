@@ -51,4 +51,19 @@ class IpmSpec extends SparkSpec {
     val acc = pts.count { case (id, _, y) => (score(id) + b) * y > 0 }.toDouble / pts.size
     assert(acc === 1.0, s"separable blobs must classify perfectly, got $acc")
   }
+
+  test("fitIpm with no free support vector gets bias 0.0, as IcfSvmTrainer does") {
+    // one class only: yᵀα = 0 pins every α to 0, so no SV is free and
+    // the free-SV bias mean has nothing to average
+    val rng = new scala.util.Random(5)
+    val df = (0 until 60).map { i =>
+      (i.toLong, Array(rng.nextGaussian(), rng.nextGaussian()), 1.0)
+    }.toDF("id", "vec", "y")
+    val m = KernelSvmTrainer.fitIpm(df, "id", "vec", "y",
+      KernelSvmParams(Kernel.Rbf(0.5), numLandmarks = 16), maxIter = 20)
+    assert(m.intercept === 0.0)
+    assert(m.predict(df, "vec").count() === 60L)
+    val icf = IcfSvmTrainer.fit(df, "id", "vec", "y", Kernel.Rbf(0.5), rank = 8, maxIter = 20)
+    assert(icf.numSupportVectors === 0L && icf.bias === 0.0)
+  }
 }

@@ -152,4 +152,47 @@ class MlSpec extends SparkSpec {
     assert(back(0)._1 === 1.0 && back(0)._2 === Array(1.5, 0.0, -2.0))
     assert(back(1)._1 === -1.0 && back(1)._2 === Array(0.0, 3.25, 0.0))
   }
+
+  test("Nystrom feature expressions compare by content, kernel and shape, and explain without array hashes") {
+    import org.apache.spark.sql.graft.GraftShim
+    val pts = detVecs(24, 3)
+    val df = pts.map { case (id, x) => (id, x, if (id % 2 == 0) 1.0 else -1.0) }
+      .toDF("id", "vec", "y")
+    val params = KernelSvmParams(Kernel.Rbf(0.3), numLandmarks = 6, maxIter = 5)
+    val dir = java.nio.file.Files.createTempDirectory("nystrom_eq").toString
+    try {
+      KernelSvmTrainer.fit(df, "id", "vec", "y", params).save(spark, dir)
+      val a = KernelSvmModel.load(spark, dir).featureMap
+      val b = KernelSvmModel.load(spark, dir).featureMap
+      val vec = GraftShim.expression($"vec")
+      assert(NystromFeatures(vec, a) == NystromFeatures(vec, b))
+      assert(NystromFeatures(vec, a).hashCode == NystromFeatures(vec, b).hashCode)
+      assert(NystromFeatures(vec, a) != NystromFeatures(vec, a.copy(kernel = Kernel.Rbf(0.31))))
+      // the same doubles split between landmarks and W at another row
+      val two = NystromMap(Array(Array(1.0), Array(2.0)), Array(Array(3.0)), Kernel.Linear)
+      val one = NystromMap(Array(Array(1.0)), Array(Array(2.0), Array(3.0)), Kernel.Linear)
+      assert(NystromFeatures(vec, two) != NystromFeatures(vec, one))
+      val plan = Nystrom.transform(df, "vec", a, "phi").queryExecution.toString
+      assert(plan.contains("nystrom_features") && !plan.contains("[D@"), plan)
+    } finally graft.operators.ScaleOps.deleteRecursively(dir)
+
+    val sp = Seq((0L, Seq(0, 3), Seq(1.0, 2.0), 1.0), (1L, Seq(1), Seq(4.0), -1.0),
+        (2L, Seq(2, 3), Seq(1.0, 1.0), 1.0), (3L, Seq(0), Seq(3.0), -1.0))
+      .toDF("id", "indices", "values", "y")
+    val sdir = java.nio.file.Files.createTempDirectory("sparse_nystrom_eq").toString
+    try {
+      SparseKernelSvmTrainer.fit(sp, "id", "indices", "values", "y",
+        params.copy(numLandmarks = 3)).save(spark, sdir)
+      val a = SparseKernelSvmModel.load(spark, sdir).featureMap
+      val b = SparseKernelSvmModel.load(spark, sdir).featureMap
+      val (i, v) = (GraftShim.expression($"indices"), GraftShim.expression($"values"))
+      assert(SparseNystromFeatures(i, v, a) == SparseNystromFeatures(i, v, b))
+      assert(SparseNystromFeatures(i, v, a).hashCode == SparseNystromFeatures(i, v, b).hashCode)
+      assert(SparseNystromFeatures(i, v, a) !=
+        SparseNystromFeatures(i, v, a.copy(kernel = Kernel.Laplacian(0.3))))
+      val plan = SparseNystrom.transform(sp, "indices", "values", a, "phi").queryExecution.toString
+      assert(plan.contains("sparse_nystrom_features") &&
+        !plan.contains("[D@") && !plan.contains("[I@"), plan)
+    } finally graft.operators.ScaleOps.deleteRecursively(sdir)
+  }
 }

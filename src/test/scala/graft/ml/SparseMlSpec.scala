@@ -190,6 +190,25 @@ class SparseMlSpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(hd(id)(j))),
         s"sparse/dense ICF factor diverged at id $id")
     }
+    // residual early stop: 3 distinct rows repeated give a rank-3 kernel,
+    // so both forms must stop at the same column and stay bit-equal
+    val dups = (0 until 30).map { i =>
+      val r = rows(i % 3); (i.toLong, r._2, r._3, r._4)
+    }.toDF("id", "indices", "values", "vec")
+    val es = Icf.factorizeSparse(dups, "id", "indices", "values", k, rank = 8,
+        residualTol = 1e-8)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    val ed = Icf.factorize(dups, "id", "vec", k, rank = 8, residualTol = 1e-8)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    assert(es.keySet == ed.keySet && es.size == 30)
+    assert(es.values.forall(_.length == 3) && ed.values.forall(_.length == 3),
+      s"early stop must build 3 columns: sparse ${es.values.map(_.length).toSet}, " +
+        s"dense ${ed.values.map(_.length).toSet}")
+    es.foreach { case (id, h) =>
+      assert(h.map(java.lang.Double.doubleToLongBits).sameElements(
+        ed(id).map(java.lang.Double.doubleToLongBits)),
+        s"early-stopped sparse/dense ICF factor diverged at id $id")
+    }
     // ICF's structural guarantees (120 near-orthogonal rows at rank 12
     // cannot approximate everything — that is the spectrum's fault, not
     // the algorithm's): the 12 PIVOTED rows are captured exactly

@@ -1,0 +1,27 @@
+#!/bin/bash
+# Prints the design counts ROADMAP direction 2 wants to fall: main Scala
+# lines (total and per package), SparkSession.builder sites, distinct
+# env/property names read in src/main, localCheckpoint sites,
+# createTempDirectory sites and `new LinearSVC()` sites.
+#
+# Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
+set -euo pipefail
+root="${1:-$(dirname "$0")/..}"
+cd "$root"
+main=src/main/scala
+
+count() { { grep -rE "$1" "${@:2}" --include='*.scala' || true; } | wc -l; }
+
+echo "main_scala_loc $(find "$main" -name '*.scala' -print0 | xargs -0 cat | wc -l)"
+for d in $(find "$main" -name '*.scala' -printf '%h\n' | sort -u); do
+  echo "main_scala_loc[${d#"$main"/}] $(find "$d" -maxdepth 1 -name '*.scala' -print0 | xargs -0 cat | wc -l)"
+done
+echo "spark_session_builder_sites $(count 'SparkSession\.builder' src)"
+names=$({ grep -rhoE '(sys\.env(\.get|\.getOrElse)?|System\.getenv|sys\.props(\.get|\.getOrElse)?|System\.getProperty)\(\s*"[^"]+"' \
+  "$main" --include='*.scala' || true; } | sed -E 's/.*"([^"]+)"/\1/' | sort -u)
+echo "env_property_names $(printf '%s' "$names" | grep -c . || true)"
+echo "local_checkpoint_sites[main] $(count 'localCheckpoint' "$main")"
+echo "local_checkpoint_sites[test] $(count 'localCheckpoint' src/test)"
+echo "create_temp_directory_sites[main] $(count 'createTempDirectory' "$main")"
+echo "create_temp_directory_sites[test] $(count 'createTempDirectory' src/test)"
+echo "new_linear_svc_sites $(count 'new LinearSVC\(\)' "$main")"
