@@ -565,89 +565,14 @@ object SparkEntry {
          ORDER BY id_a, id_b""",
     // m8/m9: replay f(x) = Σ coef·k(sv,x) − rho from the TEXT model files
     // the Spark query saved (fixed path; Verify writes them before the
-    // oracle runs). Contributions are summed value-sorted — the same
-    // order-deterministic fold predictOrdered uses — so the decision is
-    // bit-exact across engines.
+    // oracle runs) with predictQuantized's integer picounit sums.
     "m8_model_score" ->
-      """WITH prm AS (
-           SELECT CAST(regexp_extract(content, 'gamma ([^\n]+)', 1) AS DOUBLE) AS gamma,
-                  CAST(regexp_extract(content, 'rho ([^\n]+)', 1) AS DOUBLE) AS rho
-           FROM read_text('/tmp/graft_models/sf0.01/m8_icf/header/part-*')),
-         sv AS (
-           SELECT CAST(p[1] AS DOUBLE) AS coef,
-                  list_transform(p[2:], t -> CAST(string_split(t, ':')[2] AS DOUBLE)) AS x
-           FROM (
-             SELECT string_split(line, ' ') AS p FROM (
-               SELECT unnest(string_split(content, chr(10))) AS line
-               FROM read_text('/tmp/graft_models/sf0.01/m8_icf/sv/part-*')) t
-             WHERE length(line) > 0)),
-         pts AS (
-           SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS px
-           FROM embeddings WHERE vec_id >= 300 AND vec_id < 400),
-         contrib AS (
-           SELECT pts.vec_id,
-             sv.coef * exp(-(SELECT gamma FROM prm) *
-               list_sum(list_transform(list_zip(sv.x, pts.px),
-                 z -> (z[1] - z[2]) * (z[1] - z[2])))) AS c
-           FROM pts, sv),
-         ksum AS (
-           SELECT vec_id, list_sum(array_agg(c ORDER BY c)) AS s
-           FROM contrib GROUP BY vec_id),
-         dec AS (
-           SELECT p.vec_id, COALESCE(k.s, 0.0) + -(SELECT rho FROM prm) AS d
-           FROM pts p LEFT JOIN ksum k ON p.vec_id = k.vec_id)
-         SELECT vec_id, round(d, 6) AS decision,
+      (svModelReplaySql("m8_icf", heldOutSql) +
+        """ SELECT vec_id, round(d, 6) AS decision,
                 CASE WHEN d >= 0 THEN 1.0 ELSE -1.0 END AS prediction
-         FROM dec ORDER BY vec_id""",
-    "m9_model_eval" ->
-      """WITH prm AS (
-           SELECT CAST(regexp_extract(content, 'gamma ([^\n]+)', 1) AS DOUBLE) AS gamma,
-                  CAST(regexp_extract(content, 'rho ([^\n]+)', 1) AS DOUBLE) AS rho
-           FROM read_text('/tmp/graft_models/sf0.01/m8_icf/header/part-*')),
-         sv AS (
-           SELECT CAST(p[1] AS DOUBLE) AS coef,
-                  list_transform(p[2:], t -> CAST(string_split(t, ':')[2] AS DOUBLE)) AS x
-           FROM (
-             SELECT string_split(line, ' ') AS p FROM (
-               SELECT unnest(string_split(content, chr(10))) AS line
-               FROM read_text('/tmp/graft_models/sf0.01/m8_icf/sv/part-*')) t
-             WHERE length(line) > 0)),
-         pts AS (
-           SELECT vec_id, CASE WHEN label % 2 = 0 THEN 1.0 ELSE -1.0 END AS y,
-                  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS px
-           FROM embeddings WHERE vec_id >= 300 AND vec_id < 400),
-         contrib AS (
-           SELECT pts.vec_id,
-             sv.coef * exp(-(SELECT gamma FROM prm) *
-               list_sum(list_transform(list_zip(sv.x, pts.px),
-                 z -> (z[1] - z[2]) * (z[1] - z[2])))) AS c
-           FROM pts, sv),
-         ksum AS (
-           SELECT vec_id, list_sum(array_agg(c ORDER BY c)) AS s
-           FROM contrib GROUP BY vec_id),
-         dec AS (
-           SELECT p.vec_id, p.y, COALESCE(k.s, 0.0) + -(SELECT rho FROM prm) AS d
-           FROM pts p LEFT JOIN ksum k ON p.vec_id = k.vec_id),
-         cm AS (
-           SELECT
-             CAST(sum(CASE WHEN y > 0 AND d >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-             CAST(sum(CASE WHEN y <= 0 AND d >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-             CAST(sum(CASE WHEN y <= 0 AND d < 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-             CAST(sum(CASE WHEN y > 0 AND d < 0 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-           FROM dec),
-         m AS (
-           SELECT tp, fp, tn, fn,
-             round(CAST(tp + tn AS DOUBLE) / CAST(tp + tn + fp + fn AS DOUBLE), 6) AS accuracy,
-             round(CASE WHEN tp + fp > 0
-               THEN CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) ELSE 0.0 END, 6) AS "precision",
-             round(CASE WHEN tp + fn > 0
-               THEN CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) ELSE 0.0 END, 6) AS recall
-           FROM cm)
-         SELECT tp, fp, tn, fn, accuracy, "precision", recall,
-           round(CASE WHEN "precision" + recall > 0
-             THEN 2.0 * "precision" * recall / ("precision" + recall)
-             ELSE 0.0 END, 6) AS f1
-         FROM m""",
+         FROM dec ORDER BY vec_id"""),
+    "m9_model_eval" -> (svModelReplaySql("m8_icf", heldOutSql) + ",\n         " +
+      metricsTailSql("")),
     // m10: replay the Nystrom pipeline φ(x)=Wᵀ[k(x,l₁)…k(x,lₘ)],
     // f(x)=w·φ(x)+b from the saved parquet model, same fold order as the
     // codegen'd NystromFeatures expression.
@@ -689,10 +614,13 @@ object SparkEntry {
     "m1_svm_binary_eval" -> nystromEvalSql("m1_nystrom"),
     "m5_svm_ipm_eval" -> nystromEvalSql("m5_ipm"),
     // m6: ICF→IPM SV model, text-round-tripped; decisions replayed from
-    // the saved SV lines with the value-sorted sequential kernel sum.
-    "m6_svm_icf_ipm_eval" -> svModelEvalSql("m6_icf",
-      extraSelect = ", (tp + fp + tn + fn) AS n_eval" +
-        ", (SELECT CAST(count(*) AS BIGINT) FROM sv) AS n_support_vectors"),
+    // the saved SV lines with integer picounit sums, over the
+    // deterministic hash-based 1-in-10 eval sample (md5-bucket rule, so
+    // id-structured generators at other scales cannot bias the eval set).
+    "m6_svm_icf_ipm_eval" -> (svModelReplaySql("m6_icf",
+      "CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0") +
+      ",\n         " + metricsTailSql(", (tp + fp + tn + fn) AS n_eval" +
+        ", (SELECT CAST(count(*) AS BIGINT) FROM sv) AS n_support_vectors")),
     // m3: OVR multiclass — replay φ(x) from the SHARED saved map, every
     // per-class decision from the classifiers table, and the argmax
     // (first maximal class wins, ascending order) per row.
@@ -1490,42 +1418,17 @@ object SparkEntry {
            round(sum(value), 2) AS sum_value
          FROM events, (SELECT unnest(generate_series(0, 3)) AS g) g
          GROUP BY 1, 2 ORDER BY 1, 2""",
-    // m11: replay decisions from the saved SV text model (the m8 CTE)
-    // and probabilities from the saved Platt (A, B) parquet.
+    // m11: replay decisions from the saved SV text model (as m8) and
+    // probabilities from the saved Platt (A, B) parquet.
     "m11_platt_probs" ->
-      """WITH prm AS (
-           SELECT CAST(regexp_extract(content, 'gamma ([^\n]+)', 1) AS DOUBLE) AS gamma,
-                  CAST(regexp_extract(content, 'rho ([^\n]+)', 1) AS DOUBLE) AS rho
-           FROM read_text('/tmp/graft_models/sf0.01/m8_icf/header/part-*')),
-         sv AS (
-           SELECT CAST(p[1] AS DOUBLE) AS coef,
-                  list_transform(p[2:], t -> CAST(string_split(t, ':')[2] AS DOUBLE)) AS x
-           FROM (
-             SELECT string_split(line, ' ') AS p FROM (
-               SELECT unnest(string_split(content, chr(10))) AS line
-               FROM read_text('/tmp/graft_models/sf0.01/m8_icf/sv/part-*')) t
-             WHERE length(line) > 0)),
-         pts AS (
-           SELECT vec_id, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS px
-           FROM embeddings WHERE vec_id >= 300 AND vec_id < 400),
-         contrib AS (
-           SELECT pts.vec_id,
-             sv.coef * exp(-(SELECT gamma FROM prm) *
-               list_sum(list_transform(list_zip(sv.x, pts.px),
-                 z -> (z[1] - z[2]) * (z[1] - z[2])))) AS c
-           FROM pts, sv),
-         ksum AS (
-           SELECT vec_id, list_sum(array_agg(c ORDER BY c)) AS s
-           FROM contrib GROUP BY vec_id),
-         dec AS (
-           SELECT p.vec_id, COALESCE(k.s, 0.0) + -(SELECT rho FROM prm) AS d
-           FROM pts p LEFT JOIN ksum k ON p.vec_id = k.vec_id),
+      (svModelReplaySql("m8_icf", heldOutSql) +
+        """,
          pl AS (SELECT a, b FROM read_parquet('/tmp/graft_models/sf0.01/m11_platt/*.parquet'))
          SELECT vec_id, round(d, 6) AS decision,
            round(1.0 / (1.0 + exp(d * pl.a + pl.b)), 6) AS prob_pos,
            CASE WHEN 1.0 / (1.0 + exp(d * pl.a + pl.b)) >= 0.5
                 THEN 1.0 ELSE -1.0 END AS prediction
-         FROM dec, pl ORDER BY vec_id""")
+         FROM dec, pl ORDER BY vec_id"""))
 
   /** Oracles for the p16–p19 training-pipeline queries, the CSV/JSON
     * source roundtrips, and the merge/upsert path. */
@@ -1773,13 +1676,16 @@ object SparkEntry {
            FROM phi, pp),
          ${metricsTailSql("")}"""
 
-  /** DuckDB replay of a saved psvm-style TEXT SV model scored over the
-    * deterministic hash-based 1-in-10 eval sample (md5-bucket rule, so
-    * id-structured generators at other scales cannot bias the eval set;
-    * floor-picounit quantized kernel sums — the predictQuantized
-    * integer reduction, replayed here with one GROUP BY), reduced to
-    * confusion matrix + metrics. */
-  private def svModelEvalSql(model: String, extraSelect: String = ""): String =
+  /** The held-out slice the m8/m9/m11 queries score (ModelOracles.heldOut). */
+  private val heldOutSql = "vec_id >= 300 AND vec_id < 400"
+
+  /** DuckDB replay of a saved psvm-style TEXT SV model (RBF) over the
+    * embeddings rows matching `ptsFilter`, with parity labels: every
+    * per-SV term is floor-quantized to integer picounits and summed with
+    * one GROUP BY — the IcfSvmModel.predictQuantized reduction, exact in
+    * any order. Returns the WITH list up to `dec(vec_id, y, d)`; the
+    * caller appends further CTEs (after a comma) and the final SELECT. */
+  private def svModelReplaySql(model: String, ptsFilter: String): String =
     s"""WITH prm AS (
            SELECT CAST(regexp_extract(content, 'gamma ([^\\n]+)', 1) AS DOUBLE) AS gamma,
                   CAST(regexp_extract(content, 'rho ([^\\n]+)', 1) AS DOUBLE) AS rho
@@ -1796,7 +1702,7 @@ object SparkEntry {
            SELECT vec_id, CASE WHEN label % 2 = 0 THEN 1.0 ELSE -1.0 END AS y,
                   list_transform(embedding, v -> CAST(v AS DOUBLE)) AS px
            FROM embeddings
-           WHERE CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0),
+           WHERE $ptsFilter),
          contrib AS (
            SELECT pts.vec_id,
              CAST(floor(sv.coef * exp(-(SELECT gamma FROM prm) *
@@ -1809,6 +1715,5 @@ object SparkEntry {
          dec AS (
            SELECT p.vec_id, p.y,
              CAST(COALESCE(k.sq, 0) AS DOUBLE) / 1e12 + -(SELECT rho FROM prm) AS d
-           FROM pts p LEFT JOIN ksum k ON p.vec_id = k.vec_id),
-         ${metricsTailSql(extraSelect)}"""
+           FROM pts p LEFT JOIN ksum k ON p.vec_id = k.vec_id)"""
 }

@@ -15,7 +15,9 @@ import graft.functions.VectorOps
   * Scale: ICF and IPM are fully distributed (see [[Icf]], [[Ipm]]), and
   * the support-vector set STAYS a DataFrame end-to-end — on
   * non-separable data the SV set is O(n), so the driver never collects
-  * it. [[predict]] picks its layout by which side fits under
+  * it. The model scores in two modes, float [[predict]] and exact
+  * [[predictQuantized]] (integer picounit sums, replayable by an external
+  * engine); both pick their layout by which side fits under
   * `broadcastThreshold` rows:
   *   - SV set under it: the SV side is broadcast into a kernel-sum join,
   *     one distributed aggregation keyed on the row id;
@@ -23,8 +25,9 @@ import graft.functions.VectorOps
   *     the SVs stay sharded where they are, the scored rows go to every
   *     shard, and the shards' partial decision sums are reduced;
   *   - both over it: a partitioned cross join with the same aggregation.
-  * The driver holds only scalars (bias, counts), plus at most
-  * `broadcastThreshold` scored rows and their sums in the second layout.
+  * The modes differ only in the accumulator. The driver holds only
+  * scalars (bias, counts), plus at most `broadcastThreshold` scored rows
+  * and their sums in the second layout.
   */
 final case class IcfSvmModel(
     kernel: Kernel,
@@ -94,19 +97,37 @@ final case class IcfSvmModel(
     *     runs its jobs when `predict` is called.
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
-    *     (O(n·p) via [[KernelSvmModel.predict]]), or use
-    *     [[predictQuantized]].
+    *     (O(n·p) via [[KernelSvmModel.predict]]).
     * All three sum the same terms and differ only in float summation
-    * order (last ulps). A row with a null vector scores `bias`. */
-  def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    * order (last ulps); [[predictQuantized]] removes that difference. A
+    * row with a null vector scores `bias`. */
+  def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    score(df, idCol, vecCol, exact = false)
+
+  /** [[predict]] with EXACT, replayable accumulation, on the same three
+    * layouts: each term coef·k(sv, x) is floor-quantized to an integer
+    * count of picounits (1e-12, the q43/p29 discipline) and the per-row
+    * reduction is a `Long` sum. Integer addition is associative and
+    * commutative exactly, so every layout, partitioning and reduction
+    * tree gives the same bits, and an external engine replays the
+    * decision with one GROUP BY. A sum that leaves the `Long` range
+    * fails rather than wrapping. Decisions differ from [[predict]] by at
+    * most (nSV + 1)·1e-12 — quantization noise, not model error. */
+  def predictQuantized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    score(df, idCol, vecCol, exact = true)
+
+  /** The layout dispatch [[predict]] documents; `exact` picks the
+    * picounit `Long` accumulator of [[predictQuantized]]. */
+  private def score(df: DataFrame, idCol: String, vecCol: String,
+                    exact: Boolean): DataFrame = {
     val pts = points(df, idCol, vecCol)
     val svSide = svs.select(col("sv_x"), col("sv_coef"))
     val scores =
-      if (numSupportVectors <= broadcastThreshold) kernelSum(pts, broadcast(svSide))
+      if (numSupportVectors <= broadcastThreshold) kernelSum(pts, broadcast(svSide), exact)
       else {
         val batch = pts.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
-        if (batch.length > broadcastThreshold) kernelSum(pts, svSide)
-        else streamSvShards(pts.schema("__pid"), batch)
+        if (batch.length > broadcastThreshold) kernelSum(pts, svSide, exact)
+        else streamSvShards(pts.schema("__pid"), batch, exact)
       }
     withDecision(df, idCol, scores)
   }
@@ -115,8 +136,12 @@ final case class IcfSvmModel(
     * rows: broadcast them to every SV partition, fold each partition's
     * SVs into one vector of partial sums Σ coef·k(sv, xⱼ), tree-reduce
     * the partials, and return (__pid, __ksum). Rows with a null vector
-    * get no sum, so [[withDecision]] scores them `bias`. */
-  private def streamSvShards(pid: StructField, batch: Array[Row]): DataFrame = {
+    * get no sum, so [[withDecision]] scores them `bias`. The exact
+    * partials are `Long` picounits, each term computed in the order of
+    * [[kernelSum]]'s column expression; the float ones stay a plain
+    * `Array[Double]` loop, with nothing boxed per pair. */
+  private def streamSvShards(pid: StructField, batch: Array[Row],
+                             exact: Boolean): DataFrame = {
     val spark = svs.sparkSession
     import spark.implicits._
     val scored = batch.filter(r => !r.isNullAt(1))
@@ -125,92 +150,50 @@ final case class IcfSvmModel(
       else {
         val xs = spark.sparkContext.broadcast(scored.map(_.getSeq[Double](1).toArray))
         val k = kernel
-        try svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
+        val shards = svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
           .select(col("sv_x"), col("sv_coef")).as[(Array[Double], Double)].rdd
-          .treeAggregate(new Array[Double](scored.length))(
-            seqOp = { case (acc, (sv, coef)) =>
-              val x = xs.value
-              var j = 0; while (j < x.length) { acc(j) += coef * k(sv, x(j)); j += 1 }
-              acc
-            },
-            combOp = { (a, b) => var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a })
-        finally xs.destroy()
+        try {
+          if (exact) shards.treeAggregate(new Array[Long](scored.length))(
+              seqOp = { case (acc, (sv, coef)) =>
+                val x = xs.value
+                var j = 0
+                while (j < x.length) {
+                  acc(j) = Math.addExact(acc(j),
+                    Math.floor(coef * k(sv, x(j)) * IcfSvmModel.Picounits).toLong)
+                  j += 1
+                }
+                acc
+              },
+              combOp = { (a, b) =>
+                var j = 0; while (j < a.length) { a(j) = Math.addExact(a(j), b(j)); j += 1 }; a })
+            .map(_.toDouble / IcfSvmModel.Picounits)
+          else shards.treeAggregate(new Array[Double](scored.length))(
+              seqOp = { case (acc, (sv, coef)) =>
+                val x = xs.value
+                var j = 0; while (j < x.length) { acc(j) += coef * k(sv, x(j)); j += 1 }
+                acc
+              },
+              combOp = { (a, b) => var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a })
+        } finally xs.destroy()
       }
     val rows = scored.indices.map(j => Row(scored(j).get(0), sums(j)))
     spark.createDataFrame(rows.asJava, StructType(Seq(pid, StructField("__ksum", DoubleType))))
-  }
-
-  /** [[predict]] with QUANTIZED order-independent accumulation — the
-    * scale path for exact-kernel scoring when BOTH the corpus and the
-    * SV set are huge AND the result must be bit-stable/replayable:
-    * each per-SV contribution is floor-quantized to integer picounits
-    * (the q43/p29 discipline) and the per-row reduction is an INTEGER
-    * sum — associative and commutative EXACTLY, so map-side partial
-    * aggregation, chunking, and any partitioning all produce identical
-    * bits, and an external engine replays it with one GROUP BY.
-    * Physically the SV side streams in ⌈nSV/`chunkSize`⌉ hash-assigned
-    * broadcast chunks, each a map-side join: no shuffle of n·nSV rows ever
-    * exists — [[predictOrdered]]'s per-row collect_list of nSV
-    * contributions is O(n·nSV) through the shuffle, measured
-    * disk-filling at the 100× decade (200k × 200k), while this path's
-    * shuffle is n rows of (id, long) per chunk. Decisions differ from
-    * the exact-float fold by ≤ nSV·1e-12 — quantization noise, not
-    * model error (and the replaying oracle quantizes identically). */
-  def predictQuantized(df: DataFrame, idCol: String, vecCol: String,
-                       chunkSize: Long = 65536): DataFrame = {
-    val scores = chunkPartials(df, idCol, vecCol, chunkSize)(
-        t => sum(floor(t * lit(1e12)).cast("long")))
-      .groupBy(col("__pid"))
-      .agg((sum(col("__p")).cast("double") / lit(1e12)).as("__ksum"))
-    withDecision(df, idCol, scores)
-  }
-
-  /** [[predict]] with ORDER-DETERMINISTIC accumulation: per-SV
-    * contributions are sorted by value before the sequential sum, so the
-    * decision is bit-identical across partitionings and replayable by an
-    * external engine (equal contributions commute exactly in IEEE
-    * arithmetic, so sorting by value fully pins the result). Production
-    * scoring should use [[predict]] — the plain partial-aggregated sum —
-    * which differs only in float summation order; this path exists for
-    * the oracle-checked driver queries and cross-engine validation. */
-  def predictOrdered(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{aggregate, collect_list, sort_array}
-    val svSide0 = svs.select(col("sv_x"), col("sv_coef"))
-    val svSide = if (numSupportVectors <= broadcastThreshold) broadcast(svSide0) else svSide0
-    val scores = points(df, idCol, vecCol)
-      .crossJoin(svSide)
-      .select(col("__pid"), kernelTerm.as("__c"))
-      .groupBy(col("__pid"))
-      .agg(aggregate(sort_array(collect_list(col("__c"))), lit(0.0),
-        (acc, x) => acc + x).as("__ksum"))
-    withDecision(df, idCol, scores)
   }
 
   /** The scored side as (__pid, __px: array<double>). */
   private def points(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
 
-  /** One SV's term of the decision sum: coef·k(sv, x). */
-  private def kernelTerm: Column = col("sv_coef") * kernel(col("sv_x"), col("__px"))
-
-  /** (__pid, __ksum) through a cross join of the points with `svSide`. */
-  private def kernelSum(pts: DataFrame, svSide: DataFrame): DataFrame =
-    pts.crossJoin(svSide).groupBy(col("__pid")).agg(sum(kernelTerm).as("__ksum"))
-
-  /** Per-chunk partial sums `agg(term)` as (__pid, __p), the SV side
-    * split into ⌈nSV/chunkSize⌉ hash-assigned broadcast chunks. */
-  private def chunkPartials(df: DataFrame, idCol: String, vecCol: String,
-                            chunkSize: Long)(agg: Column => Column): DataFrame = {
-    val nChunks = math.max(1L, (numSupportVectors + chunkSize - 1) / chunkSize).toInt
-    val withChunk = svs.select(col("sv_x"), col("sv_coef"),
-      pmod(xxhash64(col("sv_x")), lit(nChunks)).as("__chunk"))
-    val pts = points(df, idCol, vecCol)
-    (0 until nChunks).map { k =>
-      pts.crossJoin(broadcast(withChunk.filter(col("__chunk") === k)
-          .select(col("sv_x"), col("sv_coef"))))
-        .groupBy(col("__pid"))
-        .agg(agg(kernelTerm).as("__p"))
-    }.reduce(_ unionByName _)
+  /** (__pid, __ksum) through a cross join of the points with `svSide`:
+    * Σ coef·k(sv, x) as a double sum, or with `exact` as a `Long` sum of
+    * floor(coef·k(sv, x)·1e12) scaled back to a double. */
+  private def kernelSum(pts: DataFrame, svSide: DataFrame, exact: Boolean): DataFrame = {
+    val term = col("sv_coef") * kernel(col("sv_x"), col("__px"))
+    val ksum =
+      if (exact) sum(floor(term * lit(IcfSvmModel.Picounits)).cast("long"))
+        .cast("double") / lit(IcfSvmModel.Picounits)
+      else sum(term)
+    pts.crossJoin(svSide).groupBy(col("__pid")).agg(ksum.as("__ksum"))
   }
 
   /** Joins (__pid, __ksum) back onto `df` as `decision` = sum + bias.
@@ -225,6 +208,10 @@ final case class IcfSvmModel(
 }
 
 object IcfSvmModel {
+
+  /** Picounits per unit: [[IcfSvmModel.predictQuantized]]'s terms are
+    * integer multiples of 1e-12. */
+  private[ml] val Picounits = 1e12
 
   /** Reload a text model dir written by [[IcfSvmModel.saveText]]. The SV
     * parts are parsed distributedly — the model never touches the driver

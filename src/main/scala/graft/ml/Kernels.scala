@@ -7,7 +7,10 @@ import graft.functions.VectorOps
   * kernel_type 0–3). Column forms use the fused native expressions
   * (single codegen'd loop per pair, sequential accumulation identical to
   * the HOF forms and the DuckDB oracles); plain-Scala twins serve
-  * driver/executor-local math (Nyström/ICF pivots).
+  * driver/executor-local math (Nyström/ICF pivots, streamed SV scoring).
+  * A plain form equals its column form bit for bit: the same loop order,
+  * and `java.lang.StrictMath` exp/pow, which Spark's `Exp`/`Pow` codegen
+  * calls (`math.exp` may differ from it in the last ulp).
   */
 sealed trait Kernel extends Serializable {
   /** Column form: k(a, b) over two array<double> columns. */
@@ -55,14 +58,14 @@ object Kernel {
       pow(lit(gamma) * graft.functions.GraftFunctions.dot_product(a, b) + lit(coef0), lit(degree))
     }
     def apply(a: Array[Double], b: Array[Double]): Double =
-      math.pow(gamma * dotLocal(a, b) + coef0, degree)
+      StrictMath.pow(gamma * dotLocal(a, b) + coef0, degree)
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{lit, pow}
       pow(lit(gamma) * SparseOps.sparse_dot(ai, av, bi, bv) + lit(coef0), lit(degree))
     }
     def sparse(ai: Array[Int], av: Array[Double],
                bi: Array[Int], bv: Array[Double]): Double =
-      math.pow(gamma * SparseOps.dotLocal(ai, av, bi, bv) + coef0, degree)
+      StrictMath.pow(gamma * SparseOps.dotLocal(ai, av, bi, bv) + coef0, degree)
   }
 
   final case class Rbf(gamma: Double) extends Kernel {
@@ -75,7 +78,7 @@ object Kernel {
       val n = math.min(a.length, b.length)
       var s = 0.0; var i = 0
       while (i < n) { val d = a(i) - b(i); s += d * d; i += 1 }
-      math.exp(-gamma * s)
+      StrictMath.exp(-gamma * s)
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{exp, lit}
@@ -83,7 +86,7 @@ object Kernel {
     }
     def sparse(ai: Array[Int], av: Array[Double],
                bi: Array[Int], bv: Array[Double]): Double =
-      math.exp(-gamma * SparseOps.sqDistLocal(ai, av, bi, bv))
+      StrictMath.exp(-gamma * SparseOps.sqDistLocal(ai, av, bi, bv))
   }
 
   final case class Laplacian(gamma: Double) extends Kernel {
@@ -96,7 +99,7 @@ object Kernel {
       val n = math.min(a.length, b.length)
       var s = 0.0; var i = 0
       while (i < n) { s += math.abs(a(i) - b(i)); i += 1 }
-      math.exp(-gamma * s)
+      StrictMath.exp(-gamma * s)
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{exp, lit}
@@ -104,7 +107,7 @@ object Kernel {
     }
     def sparse(ai: Array[Int], av: Array[Double],
                bi: Array[Int], bv: Array[Double]): Double =
-      math.exp(-gamma * SparseOps.l1DistLocal(ai, av, bi, bv))
+      StrictMath.exp(-gamma * SparseOps.l1DistLocal(ai, av, bi, bv))
   }
 
   /** Model-file codec (reference: psvm model.cc): a kernel as its

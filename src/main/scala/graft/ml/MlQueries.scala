@@ -129,11 +129,7 @@ object MlQueries {
     val model = IcfSvmModel.loadText(spark, s"${ModelOracles.modelRoot(dir)}/m6_icf")
     // Scoring: predictQuantized — floor-picounit contributions, INTEGER
     // per-row sums (order-independent, so DuckDB replays the decisions
-    // bit-exactly from the saved text model with one GROUP BY, and the
-    // SV side streams as broadcast chunks — no n·nSV shuffle). The
-    // earlier predictOrdered fold collected + sorted nSV contributions
-    // PER ROW: measured disk-filling at the 100× decade, where the
-    // non-separable fit makes every row a support vector (200k × 200k).
+    // bit-exactly from the saved text model with one GROUP BY).
     // Evaluation scores a DETERMINISTIC 1-in-10 sample: exact-kernel
     // SV scoring is inherently O(n_eval·nSV) — psvm's svm_predict pays
     // the same per test row — so the driver row bounds n_eval; the

@@ -13,11 +13,14 @@ import graft.functions.VectorOps
   * (landmarks, projection, weights, intercept) for the Nyström form. The
   * queries here fit once per (dataset, JVM), persist the model under a
   * FIXED path, reload it through the public load path, and score a
-  * held-out slice with order-deterministic arithmetic; the DuckDB oracle
-  * replays f(x) from the very same saved files with list-op kernel sums
-  * (the sequential-double technique proven bit-exact by the m2/p5
-  * queries). A green row therefore certifies save → load → score
-  * end-to-end, not just "rows came back".
+  * held-out slice; the DuckDB oracle replays f(x) from the very same
+  * saved files. SV models score through [[IcfSvmModel.predictQuantized]]
+  * (integer picounit sums, which the oracle replays with one GROUP BY);
+  * Nyström models through their codegen'd score column, which the oracle
+  * replays with list-op sums in the same sequential-double order (the
+  * technique proven bit-exact by the m2/p5 queries). A green row
+  * therefore certifies save → load → score end-to-end, not just "rows
+  * came back".
   */
 object ModelOracles {
 
@@ -111,7 +114,7 @@ object ModelOracles {
           case (d, m) if d == dir => m
           case _ =>
             val trainScored = model
-              .predictOrdered(trainSlice(spark, dir), "vec_id", "embedding")
+              .predictQuantized(trainSlice(spark, dir), "vec_id", "embedding")
               .select(col("vec_id"), col("decision"), col("y"))
             val m = Platt.fit(trainScored, "decision", "y")
             import spark.implicits._
@@ -122,7 +125,7 @@ object ModelOracles {
         }
       }
     }
-    model.predictOrdered(heldOut(spark, dir), "vec_id", "embedding")
+    model.predictQuantized(heldOut(spark, dir), "vec_id", "embedding")
       .select(col("vec_id"),
         round(col("decision"), 6).as("decision"),
         round(Platt.probability(col("decision"), pm), 6).as("prob_pos"),
@@ -163,7 +166,7 @@ object ModelOracles {
     * on the held-out slice (M9 predict + M10 save/load). */
   def m8ModelScore(spark: SparkSession, dir: String): DataFrame = {
     val model = icfModel(spark, dir)
-    model.predictOrdered(heldOut(spark, dir), "vec_id", "embedding")
+    model.predictQuantized(heldOut(spark, dir), "vec_id", "embedding")
       .select(col("vec_id"), round(col("decision"), 6).as("decision"),
               col("prediction"))
       .orderBy(col("vec_id"))
@@ -173,7 +176,7 @@ object ModelOracles {
   def m9ModelEval(spark: SparkSession, dir: String): DataFrame = {
     val model = icfModel(spark, dir)
     SvmEvaluator.evaluate(
-      model.predictOrdered(heldOut(spark, dir), "vec_id", "embedding"), "y")
+      model.predictQuantized(heldOut(spark, dir), "vec_id", "embedding"), "y")
   }
 
   /** m10: per-row decisions of the parquet-round-tripped Nyström model —

@@ -200,17 +200,29 @@ final case class HyperplaneTables(tables: Array[Array[Array[Double]]])
   }
 }
 
-/** Fused per-table LSH bucket keys over an array<double> column. */
+/** Fused per-table LSH bucket keys over an array<double> column. Compares
+  * by content and shape (tables × planes × dim) and explains as
+  * `planes[TxPxD]`, never as an array hash. */
 case class HyperplaneBucketKeys(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
     planes: HyperplaneTables)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+  with graft.functions.TableExpr {
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
   import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   import org.apache.spark.sql.types._
 
   override def prettyName: String = "hyperplane_bucket_keys"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  @transient override protected lazy val tableRows: Array[Array[Double]] =
+    planes.tables.flatten
+  override protected def tableGroups: Array[Int] = planes.tables.map(_.length)
+  override protected def tableShape: String = {
+    val t = planes.tables
+    val p = t.headOption.map(_.length).getOrElse(0)
+    val d = t.headOption.flatMap(_.headOption).map(_.length).getOrElse(0)
+    s"planes[${t.length}x${p}x$d]"
+  }
 
   override def nullSafeEval(a: Any): Any =
     new GenericArrayData(planes.keysFromArrayData(a.asInstanceOf[ArrayData]))

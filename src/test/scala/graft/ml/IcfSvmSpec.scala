@@ -53,39 +53,7 @@ class IcfSvmSpec extends SparkSpec {
     }
   }
 
-  test("chunked SV scoring agrees with the single-join kernel sum") {
-    val rng = new scala.util.Random(31)
-    val pts = (0 until 70).map { i =>
-      val pos = i % 2 == 0
-      val cx = if (pos) 1.5 else -1.5
-      (i.toLong,
-       Array(cx + rng.nextGaussian() * 0.6, -cx + rng.nextGaussian() * 0.6),
-       if (pos) 1.0 else -1.0)
-    }
-    val df = pts.toDF("id", "vec", "y")
-    val model = IcfSvmTrainer.fit(df, "id", "vec", "y",
-      Kernel.Rbf(0.5), rank = 16, c = 5.0, maxIter = 40)
-    val single = model.predict(df, "id", "vec")
-      .select($"id", $"decision").as[(Long, Double)].collect().toMap
-
-    // quantized path: within nSV·1e-12 of the exact-float decision, and
-    // BIT-identical across chunk sizes and partitionings (integer sums
-    // commute exactly — the scale path's whole point)
-    val quant = model.predictQuantized(df, "id", "vec")
-      .select($"id", $"decision").as[(Long, Double)].collect().toMap
-    assert(single.keySet == quant.keySet)
-    single.foreach { case (id, d) =>
-      assert(math.abs(d - quant(id)) <= (model.numSupportVectors + 1) * 1e-12,
-        s"id $id: quantized ${quant(id)} vs exact $d")
-    }
-    val quantTiny = model.predictQuantized(df.repartition(7), "id", "vec", chunkSize = 8)
-      .select($"id", $"decision").as[(Long, Double)].collect().toMap
-    quant.foreach { case (id, d) =>
-      assert(d == quantTiny(id), s"id $id: quantized bits differ across chunking")
-    }
-  }
-
-  // one fit (the chunked spec's data) shared by the predict-regime specs
+  // one fit shared by the predict and predictQuantized layout specs
   private lazy val regimeFit = {
     val rng = new scala.util.Random(31)
     val pts = (0 until 70).map { i =>
@@ -162,6 +130,79 @@ class IcfSvmSpec extends SparkSpec {
     val empty = streamed.predict(withNull.filter($"id" < 0), "id", "vec")
     assert(empty.columns.contains("decision") && empty.columns.contains("prediction"))
     assert(empty.count() === 0L)
+  }
+
+  private def bits(d: Map[Long, Double]): Map[Long, Long] =
+    d.map { case (id, v) => id -> java.lang.Double.doubleToRawLongBits(v) }
+
+  test("exact scoring is bit-identical across layouts and partitionings") {
+    val (pts, df, model, _) = regimeFit
+    val nSv = model.numSupportVectors
+    val few = df.filter($"id" < nSv - 1)
+    val ref = decisions(model.predictQuantized(df, "id", "vec"))
+    // within (nSV + 1)·1e-12 of the float decisions: quantization noise only
+    val float = decisions(model.predict(df, "id", "vec"))
+    assert(ref.keySet === float.keySet && ref.size === pts.size)
+    float.foreach { case (id, d) =>
+      assert(math.abs(d - ref(id)) <= (nSv + 1) * 1e-12, s"id $id: exact ${ref(id)} vs float $d")
+    }
+    val streamedModel = model.copy(broadcastThreshold = nSv - 1)
+    val streamed = streamedModel.predictQuantized(few, "id", "vec")
+    assert(!crossJoins(streamed), "the streamed layout must not plan a cross join")
+    val cross = model.copy(broadcastThreshold = 2)
+    assert(crossJoins(cross.predictQuantized(df, "id", "vec")))
+    val reshardedSvs = model.svs.repartition(7)
+    // integer picounit sums: every layout, partitioning and reduction tree
+    // must give the broadcast layout's bits exactly
+    val byLayout = Seq(
+      "broadcast, rows in 7 partitions" ->
+        model.predictQuantized(df.repartition(7), "id", "vec"),
+      "streamed" -> streamed,
+      "streamed, SVs and rows in 7 partitions" ->
+        streamedModel.copy(svs = reshardedSvs).predictQuantized(few.repartition(7), "id", "vec"),
+      "cross" -> cross.predictQuantized(df, "id", "vec"),
+      "cross, SVs and rows in 7 partitions" ->
+        cross.copy(svs = reshardedSvs).predictQuantized(df.repartition(7), "id", "vec"))
+    val refBits = bits(ref)
+    for ((name, scored) <- byLayout) {
+      val got = bits(decisions(scored))
+      assert(got.nonEmpty && got.keySet.subsetOf(refBits.keySet), name)
+      got.foreach { case (id, b) =>
+        assert(b === refBits(id), s"$name id $id: ${java.lang.Double.longBitsToDouble(b)} vs ${ref(id)}")
+      }
+    }
+    assert(decisions(streamed).keySet === (0L until nSv - 1).toSet)
+    assert(streamed.columns.toSeq === df.columns.toSeq ++ Seq("decision", "prediction"))
+  }
+
+  test("exact streamed layout: null vector, empty frame and Long overflow") {
+    val (_, _, model, _) = regimeFit
+    val streamed = model.copy(broadcastThreshold = model.numSupportVectors - 1)
+    val withNull = Seq((1000L, Option.empty[Array[Double]]), (1001L, Some(Array(1.5, -1.5))))
+      .toDF("id", "vec")
+    val got = decisions(streamed.predictQuantized(withNull, "id", "vec"))
+    assert(got.keySet === Set(1000L, 1001L))
+    assert(got(1000L) === model.bias, "a null vector must score bias (LEFT join + coalesce)")
+    assert(bits(got)(1001L) === bits(decisions(model.predictQuantized(withNull, "id", "vec")))(1001L))
+    val empty = streamed.predictQuantized(withNull.filter($"id" < 0), "id", "vec")
+    assert(empty.columns.contains("decision") && empty.columns.contains("prediction"))
+    assert(empty.count() === 0L)
+
+    // two terms of 5e18 picounits each fit a Long; their sum does not,
+    // and must fail (streamed: in the seqOp or the combOp; broadcast: in
+    // the SQL sum) rather than wrap
+    val svs = Seq((Array(1.0), 5e6), (Array(1.0), 5e6)).toDF("sv_x", "sv_coef")
+    val one = Seq((1L, Array(1.0))).toDF("id", "vec")
+    val huge = IcfSvmModel(Kernel.Linear, svs, 2, 0.0, broadcastThreshold = 1)
+    for (m <- Seq(huge.copy(svs = svs.coalesce(1)), huge.copy(svs = svs.repartition(2)),
+                  huge.copy(broadcastThreshold = 2))) {
+      val err = intercept[Exception](m.predictQuantized(one, "id", "vec").collect())
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => String.valueOf(e.getMessage).contains("long overflow")),
+        chain.map(_.toString).mkString("\n"))
+    }
+    val single = huge.copy(svs = svs.limit(1), numSupportVectors = 1)
+    assert(decisions(single.predictQuantized(one, "id", "vec")) === Map(1L -> 5e6))
   }
 
   test("saveText writes the psvm text format byte-for-byte") {

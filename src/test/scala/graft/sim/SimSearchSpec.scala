@@ -102,4 +102,24 @@ class SimSearchSpec extends SparkSpec {
     assert(recall >= 0.3, f"recall $recall%.3f too low — buckets too selective")
     assert(approx.size <= exact.size, "at most k per query")
   }
+
+  test("hyperplane bucket keys compare by content and shape, explain without hashes") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val childRef = BoundReference(0, ArrayType(DoubleType), nullable = true)
+    def keys(tables: Seq[Seq[Array[Double]]]) =
+      HyperplaneBucketKeys(childRef, HyperplaneTables(tables.map(_.toArray).toArray))
+    // separately generated, equal contents (fixed seed)
+    def mk() = keys(LshAnn.hyperplanes(2, 3, 4))
+    assert(mk() == mk(), "content equality must hold across instances")
+    assert(mk().hashCode == mk().hashCode)
+    assert(mk().semanticEquals(mk()), "subexpression elimination relies on this")
+    assert(mk().toString == mk().toString, "explain rendering must be deterministic")
+    assert(!mk().toString.contains("@"), s"identity hash leaked: ${mk().toString}")
+    assert(mk().toString.contains("planes[2x3x4]"), mk().toString)
+    // the same six planes as 3 tables of 2: other keys, so not equal
+    val regrouped = keys(LshAnn.hyperplanes(2, 3, 4).flatten.grouped(2).toSeq)
+    assert(mk() != regrouped && mk().hashCode != regrouped.hashCode)
+    assert(mk() != keys(LshAnn.hyperplanes(2, 3, 4, seed = 7L)))
+  }
 }

@@ -2,7 +2,9 @@
 # Prints the design counts ROADMAP direction 2 wants to fall: main Scala
 # lines (total and per package), SparkSession.builder sites, distinct
 # env/property names read in src/main, localCheckpoint sites,
-# createTempDirectory sites and `new LinearSVC()` sites.
+# createTempDirectory sites, `new LinearSVC()` sites, the public scoring
+# methods of the SV model (`def predict*` in IcfSvm.scala) and the line
+# count of SparkEntry.scala.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -25,3 +27,5 @@ echo "local_checkpoint_sites[test] $(count 'localCheckpoint' src/test)"
 echo "create_temp_directory_sites[main] $(count 'createTempDirectory' "$main")"
 echo "create_temp_directory_sites[test] $(count 'createTempDirectory' src/test)"
 echo "new_linear_svc_sites $(count 'new LinearSVC\(\)' "$main")"
+echo "icf_svm_scoring_modes $(count '^ *def predict' "$main/graft/ml/IcfSvm.scala")"
+echo "spark_entry_loc $(wc -l < "$main/graft/SparkEntry.scala")"
