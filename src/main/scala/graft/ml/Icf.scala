@@ -1,5 +1,6 @@
 package graft.ml
 
+import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -9,17 +10,24 @@ import org.apache.spark.storage.StorageLevel
   * Factorization of the kernel matrix, K ≈ H·Hᵀ with H of rank p
   * (reference: psvm icf.cc — row-distributed parallel ICF).
   *
-  * Spark re-expression: rows (id, x, h, diag) live in an RDD; each of the
-  * p iterations
-  *   1. reduces to find the global pivot (max diagonal residual,
-  *      ties by min id — deterministic),
-  *   2. broadcasts the pivot row (x, its h prefix, its residual),
-  *   3. maps every row to append one H column:
+  * Spark re-expression: rows (id, x, h, diag) live in per-partition
+  * blocks; each of the p iterations
+  *   1. finds the global pivot (max diagonal residual, ties by min id —
+  *      a total order, so deterministic),
+  *   2. hands every block the pivot row (x, its h prefix, its residual),
+  *   3. appends one H column to every row:
   *        H[i,j] = (k(x_i, x_p) − ⟨h_i, h_p⟩) / √d_p,  d_i −= H[i,j]².
   *
-  * That is p passes over the data — the same O(n·p²) work and O(n·p)
-  * state as the reference, with the n-dimension fully distributed. The
-  * lineage is truncated periodically so the plan doesn't grow with p.
+  * Cost per block count (~50k rows per block, [[Ipm.blockCount]]):
+  *   - one block (the m = 1 case of the paper's cost model, where the
+  *     all-reduce is the identity): the whole pivot loop runs inside the
+  *     block's one task — one Spark job for the factorization;
+  *   - several blocks: each pivot is a reduce (the all-reduce) plus a
+  *     map materialized by a count — two jobs per pivot, the lineage
+  *     truncated every `checkpointEvery` pivots.
+  * Both run the same per-block steps ([[blockPivot]], [[addColumn]]), so
+  * they build the same factor bit for bit. That is the same O(n·p²) work
+  * and O(n·p) state as the reference, with the n-dimension distributed.
   * The loop does not depend on how a row is stored: [[factorize]] (dense
   * rows) and [[factorizeSparse]] (sparse rows) only build the rows and
   * pick the [[Kernel]] form that scores them.
@@ -28,7 +36,85 @@ import org.apache.spark.storage.StorageLevel
   */
 object Icf {
 
-  private final case class IcfRow[X](id: Long, x: X, h: Array[Double], diag: Double)
+  /** A factor: `rows` is (id, icf_features), `nRows` the input's row
+    * count. A one-block factor is cached by the loop that built it;
+    * `release` drops that cache once the caller is done with `rows`
+    * (which then recompute from lineage). A multi-block factor stays
+    * cached: its lineage runs through local checkpoints. */
+  private[ml] final case class Factor(rows: DataFrame, nRows: Long, cached: Option[RDD[_]]) {
+    def release(): Unit = cached.foreach(_.unpersist(false))
+  }
+
+  /** One partition's rows, column-compressed: ids, points, the H rows
+    * built so far (length rank) and the diagonal residuals. */
+  private final case class IcfBlock[X](ids: Array[Long], xs: Array[X],
+                                       h: Array[Array[Double]], diag: Array[Double]) {
+    /** A copy whose H rows and residuals [[addColumn]] may update. */
+    def copyForUpdate: IcfBlock[X] = IcfBlock(ids, xs, h.map(_.clone), diag.clone)
+  }
+
+  /** A pivot row: id, point, H row (only its prefix before the column
+    * being built is read) and residual. */
+  private final case class Pivot[X](id: Long, x: X, h: Array[Double], diag: Double)
+
+  /** The pivot order: larger residual first, ties by smaller id. */
+  private def precedes(diagA: Double, idA: Long, diagB: Double, idB: Long): Boolean =
+    diagA > diagB || (diagA == diagB && idA < idB)
+
+  private def better[X](a: Pivot[X], b: Pivot[X]): Pivot[X] =
+    if (precedes(a.diag, a.id, b.diag, b.id)) a else b
+
+  /** The block's pivot: [[precedes]] folded left over its rows. */
+  private def blockPivot[X](b: IcfBlock[X]): Pivot[X] = {
+    var best = 0; var i = 1
+    while (i < b.ids.length) {
+      if (!precedes(b.diag(best), b.ids(best), b.diag(i), b.ids(i))) best = i
+      i += 1
+    }
+    Pivot(b.ids(best), b.xs(best), b.h(best), b.diag(best))
+  }
+
+  /** The early stop: the largest residual is at or below `residualTol`. */
+  private def stopsAt(p: Pivot[_], residualTol: Double): Boolean =
+    residualTol > 0.0 && p.diag <= residualTol
+
+  /** Appends column `j` to every row of `b`, in place. Only column j is
+    * written and only the pivot's prefix t < j is read, so `p` may be a
+    * row of `b` itself. */
+  private def addColumn[X](b: IcfBlock[X], p: Pivot[X], j: Int, k: (X, X) => Double): Unit = {
+    val sqrtPd = math.sqrt(math.max(p.diag, 1e-300))
+    var i = 0
+    while (i < b.ids.length) {
+      val hi = b.h(i)
+      val hj =
+        if (b.ids(i) == p.id) sqrtPd
+        else {
+          var dotHp = 0.0; var t = 0
+          while (t < j) { dotHp += hi(t) * p.h(t); t += 1 }
+          (k(b.xs(i), p.x) - dotHp) / sqrtPd
+        }
+      hi(j) = hj
+      b.diag(i) = b.diag(i) - hj * hj
+      i += 1
+    }
+  }
+
+  /** The one-block loop, run inside the block's task: pivots from column
+    * `from` until `until` (or the early stop) on a copy of `b`. Returns
+    * the block, the columns built and whether the early stop fired. */
+  private def pivotSegment[X](b: IcfBlock[X], from: Int, until: Int,
+                              k: (X, X) => Double,
+                              residualTol: Double): (IcfBlock[X], Int, Boolean) = {
+    val out = b.copyForUpdate
+    var j = from
+    var stopped = false
+    while (j < until && !stopped) {
+      val p = blockPivot(out)
+      if (stopsAt(p, residualTol)) stopped = true
+      else { addColumn(out, p, j, k); j += 1 }
+    }
+    (out, j, stopped)
+  }
 
   /** psvm's `rank_ratio` flag: p = ⌈ratio·n⌉ (capped at `maxRank`), with
     * residual-trace early stop — the factorization halts as soon as the
@@ -40,28 +126,47 @@ object Icf {
                     checkpointEvery: Int = 16): DataFrame = {
     val n = df.count()
     val rank = math.max(1, math.min(maxRank, math.ceil(rankRatio * n).toInt))
-    factorize(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol)
+    dense(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, None, n).rows
   }
 
   /** Returns (id, icf_features: array<double>[rank]) with K ≈ H·Hᵀ.
     * `residualTol > 0` enables early stop on the max diagonal residual
     * (the produced factor is truncated to the columns actually built).
+    * The factor is computed (one job on a one-block input) and cached
+    * before this returns.
     *
     * `checkpointDir`: psvm-style fault tolerance for long factorizations
     * (p passes over the data — hours at 100 TB). Every `checkpointEvery`
     * columns the built H prefix + diagonal residuals land in parquet
-    * with a column-count marker; a rerun pointed at the same dir (same
-    * data, kernel) resumes from the saved prefix. Resume is BIT-exact:
-    * each pass is a per-row map + an order-independent max-reduce, so no
-    * float accumulation order changes across the restart. */
+    * with a column-count marker ([[ResumeMarker]]); a rerun pointed at
+    * the same dir (same data, kernel) resumes from the saved prefix. On
+    * a one-block input the in-task loop then runs in segments of
+    * `checkpointEvery` pivots, one job each. Resume is BIT-exact: each
+    * pass is a per-row update + an order-independent argmax, so no float
+    * accumulation order changes across the restart. */
   def factorize(df: DataFrame, idCol: String, vecCol: String,
                 kernel: Kernel, rank: Int,
                 checkpointEvery: Int = 16,
                 residualTol: Double = 0.0,
-                checkpointDir: Option[String] = None): DataFrame = {
+                checkpointDir: Option[String] = None): DataFrame =
+    factor(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, checkpointDir).rows
+
+  /** [[factorize]], returning the [[Factor]] so the caller can release
+    * its cache. */
+  private[ml] def factor(df: DataFrame, idCol: String, vecCol: String,
+                         kernel: Kernel, rank: Int,
+                         checkpointEvery: Int = 16,
+                         residualTol: Double = 0.0,
+                         checkpointDir: Option[String] = None): Factor =
+    dense(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, checkpointDir,
+      df.count())
+
+  private def dense(df: DataFrame, idCol: String, vecCol: String,
+                    kernel: Kernel, rank: Int, checkpointEvery: Int,
+                    residualTol: Double, checkpointDir: Option[String],
+                    nRows: Long): Factor = {
     import graft.functions.VectorOps
     import org.apache.spark.sql.functions.col
-    val nRows = df.count()
     val rows = df
       .select(col(idCol).cast("long"), VectorOps.toDoubleArray(col(vecCol)))
       .rdd
@@ -93,83 +198,94 @@ object Icf {
     pivotLoop(df.sparkSession, rows, nRows,
       (a: (Array[Int], Array[Double]), b: (Array[Int], Array[Double])) =>
         kernel.sparse(a._1, a._2, b._1, b._2),
-      rank, checkpointEvery, residualTol, None)
+      rank, checkpointEvery, residualTol, None).rows
   }
 
-  /** The greedy-pivot loop over (id, x) rows scored by `k`, returning
-    * (id, icf_features). */
-  private def pivotLoop[X](spark: SparkSession, rows: RDD[(Long, X)], nRows: Long,
-                           k: (X, X) => Double, rank: Int, checkpointEvery: Int,
-                           residualTol: Double,
-                           checkpointDir: Option[String]): DataFrame = {
-    val base0 = rows.map { case (id, x) => IcfRow(id, x, new Array[Double](rank), k(x, x)) }
-    // each of the p passes is a reduce + a map over these blocks
-    val base = base0.coalesce(Ipm.blockCount(nRows, base0.getNumPartitions))
-
+  /** The greedy-pivot loop over (id, x) rows scored by `k`: in the
+    * block's task on one block, from the driver on several. */
+  private def pivotLoop[X: ClassTag](spark: SparkSession, rows: RDD[(Long, X)], nRows: Long,
+                                     k: (X, X) => Double, rank: Int, checkpointEvery: Int,
+                                     residualTol: Double,
+                                     checkpointDir: Option[String]): Factor = {
     // resume from the last completed column dump, if any
     val resume: Option[(Int, RDD[(Long, (Array[Double], Double))])] =
       checkpointDir.flatMap { dir =>
-        val marker = new java.io.File(s"$dir/state")
-        if (!marker.exists()) None
-        else {
-          val src = scala.io.Source.fromFile(marker)
-          val saved = try src.mkString.trim.toInt finally src.close()
+        ResumeMarker.read(spark, dir).map { saved =>
           val h = spark.read.parquet(s"$dir/h").rdd
             .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-          Some((math.min(saved, rank), h))
+          (math.min(saved.toInt, rank), h)
         }
       }
-
-    var rdd = (resume match {
-      case None => base
+    val start: RDD[(Long, X, Array[Double], Double)] = resume match {
+      case None => rows.map { case (id, x) => (id, x, new Array[Double](rank), k(x, x)) }
       case Some((jSaved, saved)) =>
-        base.map(r => (r.id, r)).join(saved).map { case (_, (r, (hPrefix, diag))) =>
+        rows.join(saved).map { case (id, (x, (hPrefix, diag))) =>
           val h = new Array[Double](rank)
           System.arraycopy(hPrefix, 0, h, 0, math.min(jSaved, hPrefix.length))
-          IcfRow(r.id, r.x, h, diag)
+          (id, x, h, diag)
         }
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    val nBlocks = Ipm.blockCount(nRows, start.getNumPartitions)
+    var blocks: RDD[IcfBlock[X]] = start.coalesce(nBlocks).mapPartitions { it =>
+      val buf = it.toArray
+      if (buf.isEmpty) Iterator.empty
+      else Iterator.single(IcfBlock(buf.map(_._1), buf.map(_._2), buf.map(_._3), buf.map(_._4)))
+    }
 
     var j = resume.map(_._1).getOrElse(0)
     var stopped = false
-    while (j < rank && !stopped) {
-      val pivot = rdd.reduce { (a, b) =>
-        if (a.diag > b.diag || (a.diag == b.diag && a.id < b.id)) a else b
+    def dumpIfDue(): Unit = checkpointDir.foreach { dir =>
+      if (!stopped && j % checkpointEvery == 0 && j < rank) {
+        val built = j
+        ResumeMarker.commit(spark, dir, built.toString) {
+          spark.createDataFrame(blocks.flatMap { b =>
+              Iterator.tabulate(b.ids.length)(i => (b.ids(i), b.h(i).take(built).toSeq, b.diag(i)))
+            })
+            .toDF("id", "h", "diag")
+            .write.mode("overwrite").parquet(s"$dir/h")
+        }
       }
-      if (residualTol > 0.0 && pivot.diag <= residualTol) { stopped = true }
-      else {
-      val bc = spark.sparkContext.broadcast(pivot)
-      val jj = j
-      val prev = rdd
-      rdd = prev.map { r =>
-        val p = bc.value
-        val sqrtPd = math.sqrt(math.max(p.diag, 1e-300))
-        val hj =
-          if (r.id == p.id) sqrtPd
-          else {
-            var dotHp = 0.0; var t = 0
-            while (t < jj) { dotHp += r.h(t) * p.h(t); t += 1 }
-            (k(r.x, p.x) - dotHp) / sqrtPd
-          }
-        val h2 = r.h.clone(); h2(jj) = hj
-        IcfRow(r.id, r.x, h2, r.diag - hj * hj)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      if ((j + 1) % checkpointEvery == 0) rdd.localCheckpoint()
-      rdd.count()          // materialize before unpersisting the parent
-      prev.unpersist(false)
-      j += 1
-      if (checkpointDir.isDefined && j % checkpointEvery == 0 && j < rank) {
-        val dir = checkpointDir.get
-        val jj2 = j
-        import spark.implicits._
-        spark.createDataFrame(
-            rdd.map(r => (r.id, r.h.take(jj2).toSeq, r.diag)))
-          .toDF("id", "h", "diag")
-          .write.mode("overwrite").parquet(s"$dir/h")
-        // marker LAST: it only ever points at a fully-written dump
-        val w = new java.io.PrintWriter(s"$dir/state")
-        try w.print(jj2.toString) finally w.close()
+    }
+
+    var cached: Option[RDD[_]] = None
+    if (nBlocks == 1) {
+      // the whole loop in the block's task: one job, or one per
+      // `checkpointEvery` pivots when each segment ends in a dump
+      while (j < rank && !stopped) {
+        val from = j
+        val until =
+          if (checkpointDir.isEmpty) rank
+          else math.min(rank, (from / checkpointEvery + 1) * checkpointEvery)
+        val seg = blocks.map(b => pivotSegment(b, from, until, k, residualTol))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val (built, halted) = seg.map(s => (s._2, s._3)).collect().headOption.getOrElse((from, true))
+        cached.foreach(_.unpersist(false))
+        cached = Some(seg)
+        blocks = seg.map(_._1)
+        j = built
+        stopped = halted
+        dumpIfDue()
       }
+    } else {
+      blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+      while (j < rank && !stopped) {
+        val pivot = blocks.map(blockPivot[X]).reduce(better[X])
+        if (stopsAt(pivot, residualTol)) stopped = true
+        else {
+          val bc = spark.sparkContext.broadcast(pivot)
+          val jj = j
+          val prev = blocks
+          blocks = prev.map { b =>
+            val out = b.copyForUpdate
+            addColumn(out, bc.value, jj, k)
+            out
+          }.persist(StorageLevel.MEMORY_AND_DISK)
+          if ((j + 1) % checkpointEvery == 0) blocks.localCheckpoint()
+          blocks.count()          // materialize before unpersisting the parent
+          prev.unpersist(false)
+          j += 1
+          dumpIfDue()
+        }
       }
     }
 
@@ -177,8 +293,13 @@ object Icf {
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("icf_features", ArrayType(DoubleType))))
-    spark.createDataFrame(
-      rdd.map(r => Row(r.id, (if (built < rank) r.h.take(built) else r.h).toSeq)),
+    val factor = spark.createDataFrame(
+      blocks.flatMap { b =>
+        Iterator.tabulate(b.ids.length) { i =>
+          Row(b.ids(i), (if (built < rank) b.h(i).take(built) else b.h(i)).toSeq)
+        }
+      },
       schema)
+    Factor(factor, nRows, cached)
   }
 }

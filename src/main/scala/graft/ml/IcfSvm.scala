@@ -267,19 +267,19 @@ object IcfSvmTrainer {
           posWeight: Double = 1.0, negWeight: Double = 1.0): IcfSvmModel = {
     val spark = df.sparkSession
 
-    val h = Icf.factorize(df, idCol, vecCol, kernel, rank)
-    val parts = Ipm.blockCount(df.count(), df.rdd.getNumPartitions)
+    val icf = Icf.factor(df, idCol, vecCol, kernel, rank)
+    val parts = Ipm.blockCount(icf.nRows, df.rdd.getNumPartitions)
     val joined = df
       .select(col(idCol).cast("long").as("__id"),
               VectorOps.toDoubleArray(col(vecCol)).as("__x"),
               col(labelCol).cast("double").as("__y"))
-      .join(h.withColumnRenamed("id", "__id"), Seq("__id"))
+      .join(icf.rows.withColumnRenamed("id", "__id"), Seq("__id"))
       .coalesce(parts)
       .persist()
 
-    val (alphas, _, _) = Ipm.solve(joined, "__id", "__y", "icf_features", c,
+    val ipm = Ipm.dual(joined, "__id", "__y", "icf_features", c,
       maxIter = maxIter, tol = tol, posWeight = posWeight, negWeight = negWeight)
-    val alphaDf = spark.createDataFrame(alphas).toDF("__id", "__alpha")
+    val alphaDf = spark.createDataFrame(ipm.alphas).toDF("__id", "__alpha")
 
     // support vectors: alpha above threshold — kept DISTRIBUTED (on
     // non-separable data this set is O(n); psvm's model.cc writes it to
@@ -311,7 +311,11 @@ object IcfSvmTrainer {
       col("__y"), col("icf_features"), rank,
       free = col("__alpha") > epsCol && col("__alpha") < cClass * (1 - 1e-3))
 
+    // svs and the bias are materialized: drop the loops' caches (svs
+    // recompute from lineage once the model is unpersisted)
     joined.unpersist()
+    icf.release()
+    ipm.release()
     IcfSvmModel(kernel, svDf, nSv, bias)
   }
 

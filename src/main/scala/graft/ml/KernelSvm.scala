@@ -226,14 +226,14 @@ object KernelSvmTrainer {
              params: KernelSvmParams = KernelSvmParams(),
              c: Double = 1.0, maxIter: Int = 60): KernelSvmModel = {
     val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
-    // the IPM loop runs ~3 distributed passes per iteration over these blocks
+    // the IPM loop runs over these blocks (in one task when they are one)
     val feats = Nystrom.transform(df, vecCol, map, "__phi")
       .coalesce(Ipm.blockCount(df.count(), df.rdd.getNumPartitions)).persist()
-    val (alphas, _, _) = Ipm.solve(feats, idCol, labelCol, "__phi", c,
+    val ipm = Ipm.dual(feats, idCol, labelCol, "__phi", c,
       maxIter = maxIter, tol = params.tol,
       posWeight = params.posWeight, negWeight = params.negWeight)
     val withAlpha = feats
-      .join(feats.sparkSession.createDataFrame(alphas)
+      .join(feats.sparkSession.createDataFrame(ipm.alphas)
         .toDF(idCol + "_a", "__alpha"), col(idCol) === col(idCol + "_a"))
     // free SVs: strictly inside the box, whose upper bound is the
     // per-class C when class weights are set
@@ -244,6 +244,7 @@ object KernelSvmTrainer {
       col(labelCol).cast("double"), col("__phi"), map.rank,
       free = col("__alpha") > eps && col("__alpha") < cCol - eps)
     feats.unpersist()
+    ipm.release()
     KernelSvmModel(map, w, bias)
   }
 

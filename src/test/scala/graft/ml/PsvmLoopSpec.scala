@@ -1,0 +1,241 @@
+package graft.ml
+
+import java.util.concurrent.ConcurrentHashMap
+import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+
+/** The ICF pivot loop and the IPM Newton loop run inside the block's
+  * task on one block and from the driver on several. These specs pin
+  * both to the same bits (a plain-Scala reference ICF, a golden IPM
+  * solution), bound the jobs a one-block fit submits, and check that a
+  * fit leaves no cache behind. */
+class PsvmLoopSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def sc = spark.sparkContext
+
+  private def bits(v: Seq[Double]): Seq[Long] = v.map(java.lang.Double.doubleToRawLongBits)
+
+  /** Greedy-pivot ICF in plain Scala, in [[Icf]]'s formula order: the
+    * pivot is the largest residual (ties by the smallest id), then
+    * H[i,j] = (k(i, p) − Σ_{t<j} H[i,t]·H[p,t]) / √max(d_p, 1e-300) and
+    * d_i −= H[i,j]². Returns id → the columns built. */
+  private def referenceIcf(ids: Array[Long], k: (Int, Int) => Double, rank: Int,
+                           residualTol: Double): Map[Long, Seq[Double]] = {
+    val n = ids.length
+    val h = Array.fill(n)(new Array[Double](rank))
+    val diag = Array.tabulate(n)(i => k(i, i))
+    var j = 0
+    var stopped = false
+    while (j < rank && !stopped) {
+      var p = 0
+      for (i <- 1 until n) if (diag(i) > diag(p) || (diag(i) == diag(p) && ids(i) < ids(p))) p = i
+      if (residualTol > 0 && diag(p) <= residualTol) stopped = true
+      else {
+        val s = math.sqrt(math.max(diag(p), 1e-300))
+        val hp = h(p).clone()
+        for (i <- 0 until n) {
+          val hij =
+            if (ids(i) == ids(p)) s
+            else {
+              var dot = 0.0
+              for (t <- 0 until j) dot += h(i)(t) * hp(t)
+              (k(i, p) - dot) / s
+            }
+          h(i)(j) = hij
+          diag(i) = diag(i) - hij * hij
+        }
+        j += 1
+      }
+    }
+    ids.indices.map(i => ids(i) -> h(i).take(j).toSeq).toMap
+  }
+
+  /** (id, dense vec, sparse indices, sparse values) rows, ~40% zeros. */
+  private def points(n: Int, dim: Int, distinct: Int, seed: Int)
+      : Seq[(Long, Array[Double], Array[Int], Array[Double])] = {
+    val rng = new scala.util.Random(seed)
+    val pool = Array.fill(distinct)(
+      Array.fill(dim)(if (rng.nextDouble() < 0.4) 0.0 else rng.nextGaussian()))
+    (0 until n).map { i =>
+      val x = pool(if (distinct == n) i else rng.nextInt(distinct))
+      val nz = x.indices.filter(x(_) != 0.0).toArray
+      (i.toLong, x, nz, nz.map(x))
+    }
+  }
+
+  private def assertFactorsMatchReference(n: Int, dim: Int, distinct: Int, parts: Int,
+                                          rank: Int, residualTol: Double): Unit = {
+    val pts = points(n, dim, distinct, seed = n + distinct)
+    val kernel = Kernel.Rbf(0.3)
+    val ids = pts.map(_._1).toArray
+    val xs = pts.map(_._2).toArray
+    val ref = referenceIcf(ids, (a, b) => kernel(xs(a), xs(b)), rank, residualTol)
+    // a residual tolerance is there to stop early: make sure it did
+    assert((ref.head._2.length < rank) === (residualTol > 0))
+    val df = spark.createDataFrame(sc.parallelize(pts, parts)).toDF("id", "vec", "indices", "values")
+    def check(h: DataFrame, form: String): Unit = {
+      val got = h.as[(Long, Seq[Double])].collect().toMap
+      assert(got.keySet === ref.keySet)
+      val off = ref.count { case (id, v) => bits(got(id)) != bits(v) }
+      assert(off === 0, s"$form factor differs from the reference on $off of $n rows")
+    }
+    check(Icf.factorize(df, "id", "vec", kernel, rank, residualTol = residualTol), "dense")
+    check(Icf.factorizeSparse(df, "id", "indices", "values", kernel, rank,
+      residualTol = residualTol), "sparse")
+  }
+
+  /** Jobs submitted while `body` runs, counted by a SparkListener between
+    * two fence jobs (the listener bus is asynchronous). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val fences = new ConcurrentHashMap[String, Integer]()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        started.add(e.jobId)
+        Option(e.properties).flatMap(p => Option(p.getProperty("psvm.fence")))
+          .foreach(f => fences.put(f, e.jobId))
+      }
+    }
+    def fence(name: String): Int = {
+      sc.setLocalProperty("psvm.fence", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("psvm.fence", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!fences.containsKey(name) && System.nanoTime() < deadline) Thread.sleep(10)
+      fences.get(name).intValue
+    }
+    sc.addSparkListener(listener)
+    try {
+      val first = fence(s"a${System.nanoTime()}")
+      val out = body
+      val last = fence(s"b${System.nanoTime()}")
+      var jobs = 0
+      started.forEach(id => if (id > first && id < last) jobs += 1)
+      (out, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Two Gaussian classes, the mean shifted by ±0.6 on the first dims. */
+  private def blobs(n: Int, dim: Int, seed: Int): DataFrame = {
+    val rng = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val y = if (i % 2 == 0) 1.0 else -1.0
+      (i.toLong, Array.tabulate(dim)(d => rng.nextGaussian() + (if (d < 4) 0.6 * y else 0.0)), y)
+    }.toDF("id", "vec", "y")
+  }
+
+  test("one-block ICF equals a plain-Scala reference bit for bit, dense and sparse, early stop included") {
+    assertFactorsMatchReference(n = 300, dim = 5, distinct = 300, parts = 2, rank = 12,
+      residualTol = 0.0)
+    assertFactorsMatchReference(n = 300, dim = 5, distinct = 5, parts = 2, rank = 12,
+      residualTol = 1e-8)
+  }
+
+  test("three-block ICF (100k rows, the driver loop) equals the same reference bit for bit") {
+    val (_, jobs) = jobsDuring(
+      assertFactorsMatchReference(n = 100000, dim = 2, distinct = 100000, parts = 3, rank = 4,
+        residualTol = 0.0))
+    // two passes per pivot per form: the blocks went through the driver loop
+    assert(jobs >= 2 * 2 * 4, s"$jobs jobs")
+    assertFactorsMatchReference(n = 100000, dim = 2, distinct = 3, parts = 3, rank = 4,
+      residualTol = 1e-8)
+  }
+
+  // (id, y, h) rows of a well-posed dual
+  private val dualRows = {
+    val rng = new scala.util.Random(23)
+    (0 until 64).map { i =>
+      val y = if (i % 2 == 0) 1.0 else -1.0
+      (i.toLong, y, Array.fill(6)(rng.nextGaussian() * 0.6 + 0.3 * y))
+    }
+  }
+  private def dualFrame(parts: Int): DataFrame =
+    spark.createDataFrame(sc.parallelize(dualRows, parts)).toDF("id", "y", "h")
+
+  private def alphaBits(a: org.apache.spark.rdd.RDD[(Long, Double)]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    a.collect().sortBy(_._1).foreach { case (id, v) =>
+      md.update(java.nio.ByteBuffer.allocate(16).putLong(id)
+        .putLong(java.lang.Double.doubleToRawLongBits(v)).array())
+    }
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  test("one-block IPM alphas equal the golden bits, and a 3-block solve to 1e-9") {
+    val (a1, it1, gap1) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9)
+    val (aConv, itConv, gapConv) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0,
+      maxIter = 40, tol = 1e-3)
+    val got = (alphaBits(a1), it1, java.lang.Double.doubleToRawLongBits(gap1),
+      alphaBits(aConv), itConv, java.lang.Double.doubleToRawLongBits(gapConv))
+    info(s"golden: $got")
+    assert(got === GoldenIpm)
+    val (a3, it3, _) = Ipm.solve(dualFrame(3), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9)
+    val one = a1.collect().toMap
+    val maxDiff = a3.collect().map { case (id, a) => math.abs(a - one(id)) }.max
+    info(f"max |alpha_1block - alpha_3blocks| = $maxDiff%.2e")
+    assert(it3 === it1 && maxDiff < 1e-9)
+  }
+
+  // captured from the per-pass driver loop on one partition, before the
+  // in-task loop existed; the tol = 1e-3 solve takes the same 15 steps
+  // and stops at its 16th gap check, so both alpha digests are one
+  private val GoldenIpm =
+    ("5f1f3eb96176930000b19aef7c1264a2755303f7ac53b6eaf48995e777be75d8", 15, 4571809324009425992L,
+     "5f1f3eb96176930000b19aef7c1264a2755303f7ac53b6eaf48995e777be75d8", 16, 4556157894485111425L)
+
+  test("checkpointDir as a file: URI: segmented one-block loops keep their bits and resume") {
+    val icfDir = "file:" + java.nio.file.Files.createTempDirectory("icf_uri")
+    val df = points(60, 4, 60, seed = 31).map(t => (t._1, t._2)).toDF("id", "vec")
+    def icf(dir: Option[String]) = Icf.factorize(df.coalesce(1), "id", "vec", Kernel.Rbf(0.3),
+      rank = 8, checkpointEvery = 4, checkpointDir = dir).as[(Long, Seq[Double])].collect().toMap
+    val plain = icf(None)
+    val full = icf(Some(icfDir))
+    assert(ResumeMarker.read(spark, icfDir) === Some("4"), "ICF marker written at column 4")
+    val resumed = icf(Some(icfDir))
+    assert(full.map { case (id, v) => id -> bits(v) } === plain.map { case (id, v) => id -> bits(v) })
+    assert(resumed.map { case (id, v) => id -> bits(v) } === plain.map { case (id, v) => id -> bits(v) })
+
+    val ipmDir = "file:" + java.nio.file.Files.createTempDirectory("ipm_uri")
+    val (aPlain, itPlain, _) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9)
+    val (aSeg, itSeg, _) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9,
+      checkpointDir = Some(ipmDir), checkpointEvery = 4)
+    assert(alphaBits(aSeg) === alphaBits(aPlain) && itSeg === itPlain)
+    assert(ResumeMarker.read(spark, ipmDir).map(_.split(' ').head) === Some("12"))
+    val (aRes, itRes, _) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9,
+      checkpointDir = Some(ipmDir), checkpointEvery = 4)
+    val plain15 = aPlain.collect().toMap
+    val maxDiff = aRes.collect().map { case (id, a) => math.abs(a - plain15(id)) }.max
+    assert(itRes === 15 && maxDiff < 1e-6, s"resumed solve off by $maxDiff")
+  }
+
+  test("job guard: one-block ICF jobs do not grow with the rank; a 2k-row fit stays under 30 jobs") {
+    val df = blobs(500, 6, seed = 3).persist()
+    df.count()
+    val (_, at4) = jobsDuring(Icf.factorize(df.coalesce(1), "id", "vec", Kernel.Rbf(0.2), rank = 4))
+    val (_, at16) = jobsDuring(Icf.factorize(df.coalesce(1), "id", "vec", Kernel.Rbf(0.2), rank = 16))
+    df.unpersist()
+    assert(at4 === at16, s"rank 4: $at4 jobs, rank 16: $at16 jobs")
+
+    val train = blobs(2000, 16, seed = 5).persist()
+    train.count()
+    val (model, jobs) = jobsDuring(IcfSvmTrainer.fit(train, "id", "vec", "y",
+      Kernel.Rbf(1.0 / 16), rank = 16, maxIter = 8, tol = 1e-3))
+    info(s"IcfSvmTrainer.fit: $jobs jobs")
+    model.unpersist()
+    train.unpersist()
+    assert(jobs <= 30, s"$jobs jobs")
+  }
+
+  test("a fit leaves no cached RDD behind once the model is unpersisted, and still predicts") {
+    val df = blobs(400, 4, seed = 9)
+    val before = sc.getPersistentRDDs.keySet
+    val model = IcfSvmTrainer.fit(df, "id", "vec", "y", Kernel.Rbf(0.25), rank = 8, maxIter = 10)
+    model.unpersist()
+    assert(sc.getPersistentRDDs.keySet === before)
+    val scored = model.predict(df, "id", "vec")
+    assert(scored.count() === 400L)
+    val acc = scored.filter($"prediction" === $"y").count() / 400.0
+    assert(acc > 0.8, s"accuracy $acc")
+  }
+}
