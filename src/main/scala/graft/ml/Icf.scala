@@ -123,10 +123,18 @@ object Icf {
   def factorizeAuto(df: DataFrame, idCol: String, vecCol: String,
                     kernel: Kernel, rankRatio: Double,
                     maxRank: Int = 256, residualTol: Double = 1e-8,
-                    checkpointEvery: Int = 16): DataFrame = {
+                    checkpointEvery: Int = 16): DataFrame =
+    factorAuto(df, idCol, vecCol, kernel, rankRatio, maxRank, residualTol, checkpointEvery).rows
+
+  /** [[factorizeAuto]], returning the [[Factor]] so the caller can
+    * release its cache. */
+  private[ml] def factorAuto(df: DataFrame, idCol: String, vecCol: String,
+                             kernel: Kernel, rankRatio: Double,
+                             maxRank: Int = 256, residualTol: Double = 1e-8,
+                             checkpointEvery: Int = 16): Factor = {
     val n = df.count()
     val rank = math.max(1, math.min(maxRank, math.ceil(rankRatio * n).toInt))
-    dense(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, None, n).rows
+    dense(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, None, n)
   }
 
   /** Returns (id, icf_features: array<double>[rank]) with K ≈ H·Hᵀ.
@@ -189,7 +197,15 @@ object Icf {
   def factorizeSparse(df: DataFrame, idCol: String, idxCol: String,
                       valCol: String, kernel: Kernel, rank: Int,
                       checkpointEvery: Int = 16,
-                      residualTol: Double = 0.0): DataFrame = {
+                      residualTol: Double = 0.0): DataFrame =
+    factorSparse(df, idCol, idxCol, valCol, kernel, rank, checkpointEvery, residualTol).rows
+
+  /** [[factorizeSparse]], returning the [[Factor]] so the caller can
+    * release its cache. */
+  private[ml] def factorSparse(df: DataFrame, idCol: String, idxCol: String,
+                               valCol: String, kernel: Kernel, rank: Int,
+                               checkpointEvery: Int = 16,
+                               residualTol: Double = 0.0): Factor = {
     import org.apache.spark.sql.functions.col
     val nRows = df.count()
     val rows = df.select(col(idCol).cast("long"), col(idxCol), col(valCol))
@@ -198,7 +214,7 @@ object Icf {
     pivotLoop(df.sparkSession, rows, nRows,
       (a: (Array[Int], Array[Double]), b: (Array[Int], Array[Double])) =>
         kernel.sparse(a._1, a._2, b._1, b._2),
-      rank, checkpointEvery, residualTol, None).rows
+      rank, checkpointEvery, residualTol, None)
   }
 
   /** The greedy-pivot loop over (id, x) rows scored by `k`: in the

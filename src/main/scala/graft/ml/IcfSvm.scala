@@ -1,7 +1,8 @@
 package graft.ml
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -14,20 +15,24 @@ import graft.functions.VectorOps
   *
   * Scale: ICF and IPM are fully distributed (see [[Icf]], [[Ipm]]), and
   * the support-vector set STAYS a DataFrame end-to-end — on
-  * non-separable data the SV set is O(n), so the driver never collects
-  * it. The model scores in two modes, float [[predict]] and exact
-  * [[predictQuantized]] (integer picounit sums, replayable by an external
-  * engine); both pick their layout by which side fits under
-  * `broadcastThreshold` rows:
-  *   - SV set under it: the SV side is broadcast into a kernel-sum join,
-  *     one distributed aggregation keyed on the row id;
+  * non-separable data the SV set is O(n), so above `broadcastThreshold`
+  * SVs the driver never collects it. The model scores in two modes,
+  * float [[predict]] and exact [[predictQuantized]] (integer picounit
+  * sums, replayable by an external engine); both pick their layout by
+  * which side fits under `broadcastThreshold` rows:
+  *   - SV set under it: the map layout — the SVs are collected once as
+  *     primitive arrays and broadcast, and each scored row folds them in
+  *     one narrow projection (no join, aggregate or shuffle);
   *   - SV set over it, scored rows under it: psvm's svm_predict layout —
   *     the SVs stay sharded where they are, the scored rows go to every
   *     shard, and the shards' partial decision sums are reduced;
-  *   - both over it: a partitioned cross join with the same aggregation.
-  * The modes differ only in the accumulator. The driver holds only
-  * scalars (bias, counts), plus at most `broadcastThreshold` scored rows
-  * and their sums in the second layout.
+  *   - both over it: a partitioned cross join, one distributed
+  *     aggregation keyed on the row id.
+  * The first two are mirror images (which side is broadcast, which side
+  * streams) and share one per-term fold, [[IcfSvmModel.addTerm]]. The
+  * modes differ only in the accumulator. The driver holds only scalars
+  * (bias, counts), plus at most `broadcastThreshold` rows of whichever
+  * side the first two layouts broadcast.
   */
 final case class IcfSvmModel(
     kernel: Kernel,
@@ -86,21 +91,28 @@ final case class IcfSvmModel(
     * Cost model: exact kernel-SVM scoring is O(n·nSV) kernel evaluations
     * (psvm pays the same); the layout sets what each one costs.
     * `broadcastThreshold` bounds whichever side is broadcast:
-    *   - nSV ≤ threshold: the SV side is broadcast into the kernel-sum
-    *     join. Lazy, like any DataFrame.
-    *   - nSV > threshold, n ≤ threshold: psvm's svm_predict layout. The
-    *     scored rows are collected once and broadcast; each SV partition
-    *     streams its SVs through the plain-array [[Kernel]] form into one
-    *     partial-sum vector over those rows (no joined row, projection or
-    *     aggregate update per pair), and the partials tree-reduce to the
-    *     n decision sums, which are joined back onto `df`. This layout
-    *     runs its jobs when `predict` is called.
+    *   - nSV ≤ threshold: the map layout, psvm's svm_predict loop. The
+    *     SV side is collected once (at most threshold rows, the bound a
+    *     broadcast join would collect too) as primitive arrays and
+    *     broadcast; `decision` is one narrow projection over `df` that
+    *     folds the SVs through the plain-array [[Kernel]] form per row —
+    *     no cross join, aggregate, exchange or join back. The SV collect
+    *     runs when `predict` is called; the scoring stays lazy.
+    *   - nSV > threshold, n ≤ threshold: the streamed layout, its mirror
+    *     image. The scored rows are collected once and broadcast; each SV
+    *     partition streams its SVs through the same per-term fold into
+    *     one partial-sum vector over those rows, and the partials
+    *     tree-reduce to the n decision sums, which are joined back onto
+    *     `df`. The SVs stay sharded: the driver never collects them. This
+    *     layout runs its jobs when `predict` is called.
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
     *     (O(n·p) via [[KernelSvmModel.predict]]).
     * All three sum the same terms and differ only in float summation
     * order (last ulps); [[predictQuantized]] removes that difference. A
-    * row with a null vector scores `bias`. */
+    * row with a null vector scores `bias`; a vector of another length
+    * than the SVs clamps to the shorter one. `idCol` keys the join of
+    * the last two layouts; the map layout scores each row on its own. */
   def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     score(df, idCol, vecCol, exact = false)
 
@@ -119,49 +131,82 @@ final case class IcfSvmModel(
   /** The layout dispatch [[predict]] documents; `exact` picks the
     * picounit `Long` accumulator of [[predictQuantized]]. */
   private def score(df: DataFrame, idCol: String, vecCol: String,
-                    exact: Boolean): DataFrame = {
-    val pts = points(df, idCol, vecCol)
-    val svSide = svs.select(col("sv_x"), col("sv_coef"))
-    val scores =
-      if (numSupportVectors <= broadcastThreshold) kernelSum(pts, broadcast(svSide), exact)
-      else {
-        val batch = pts.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
-        if (batch.length > broadcastThreshold) kernelSum(pts, svSide, exact)
+                    exact: Boolean): DataFrame =
+    if (numSupportVectors <= broadcastThreshold) broadcastSvs(df, vecCol, exact)
+    else {
+      val pts = points(df, idCol, vecCol)
+      val batch = pts.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+      val scores =
+        if (batch.length > broadcastThreshold) kernelSum(pts, exact)
         else streamSvShards(pts.schema("__pid"), batch, exact)
+      withDecision(df, idCol, scores)
+    }
+
+  /** The SVs with a vector and a coefficient, as typed (sv, coef) rows. */
+  private def svRows: Dataset[(Array[Double], Double)] = {
+    val spark = svs.sparkSession
+    import spark.implicits._
+    svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
+      .select(col("sv_x"), col("sv_coef")).as[(Array[Double], Double)]
+  }
+
+  /** The map layout: collect the SV table once as primitive arrays,
+    * broadcast it, and add `decision` = Σ coef·k(sv, x) + bias to each
+    * row of `df` in one projection, folding the SVs in table order with
+    * [[IcfSvmModel.addTerm]] (exact: [[IcfSvmModel.addPicoTerm]]). A null
+    * vector folds no term, so it scores `bias`. The UDF closes over the
+    * `Broadcast` handle only; the table ships once per executor. */
+  private def broadcastSvs(df: DataFrame, vecCol: String, exact: Boolean): DataFrame = {
+    val table = svRows.collect()
+    val bc = svs.sparkSession.sparkContext.broadcast((table.map(_._1), table.map(_._2)))
+    val k = kernel
+    val b = bias
+    val decide =
+      if (exact) udf { (x: Array[Double]) =>
+        var acc = 0L
+        if (x != null) {
+          val (sv, coef) = bc.value
+          var i = 0
+          while (i < sv.length) { acc = IcfSvmModel.addPicoTerm(acc, k, sv(i), coef(i), x); i += 1 }
+        }
+        acc.toDouble / IcfSvmModel.Picounits + b
       }
-    withDecision(df, idCol, scores)
+      else udf { (x: Array[Double]) =>
+        var acc = 0.0
+        if (x != null) {
+          val (sv, coef) = bc.value
+          var i = 0
+          while (i < sv.length) { acc = IcfSvmModel.addTerm(acc, k, sv(i), coef(i), x); i += 1 }
+        }
+        acc + b
+      }
+    withPrediction(df.withColumn("decision", decide(VectorOps.toDoubleArray(col(vecCol)))))
   }
 
   /** psvm's svm_predict layout over `batch`, the collected (__pid, __px)
     * rows: broadcast them to every SV partition, fold each partition's
-    * SVs into one vector of partial sums Σ coef·k(sv, xⱼ), tree-reduce
-    * the partials, and return (__pid, __ksum). Rows with a null vector
-    * get no sum, so [[withDecision]] scores them `bias`. The exact
-    * partials are `Long` picounits, each term computed in the order of
-    * [[kernelSum]]'s column expression; the float ones stay a plain
-    * `Array[Double]` loop, with nothing boxed per pair. */
+    * SVs into one vector of partial sums Σ coef·k(sv, xⱼ) with the map
+    * layout's per-term fold, tree-reduce the partials, and return
+    * (__pid, __ksum). Rows with a null vector get no sum, so
+    * [[withDecision]] scores them `bias`. The float partials stay a plain
+    * `Array[Double]` loop and the exact ones a `Long` one, with nothing
+    * boxed per pair. */
   private def streamSvShards(pid: StructField, batch: Array[Row],
                              exact: Boolean): DataFrame = {
     val spark = svs.sparkSession
-    import spark.implicits._
     val scored = batch.filter(r => !r.isNullAt(1))
     val sums =
       if (scored.isEmpty) Array.emptyDoubleArray
       else {
         val xs = spark.sparkContext.broadcast(scored.map(_.getSeq[Double](1).toArray))
         val k = kernel
-        val shards = svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
-          .select(col("sv_x"), col("sv_coef")).as[(Array[Double], Double)].rdd
+        val shards = svRows.rdd
         try {
           if (exact) shards.treeAggregate(new Array[Long](scored.length))(
               seqOp = { case (acc, (sv, coef)) =>
                 val x = xs.value
                 var j = 0
-                while (j < x.length) {
-                  acc(j) = Math.addExact(acc(j),
-                    Math.floor(coef * k(sv, x(j)) * IcfSvmModel.Picounits).toLong)
-                  j += 1
-                }
+                while (j < x.length) { acc(j) = IcfSvmModel.addPicoTerm(acc(j), k, sv, coef, x(j)); j += 1 }
                 acc
               },
               combOp = { (a, b) =>
@@ -170,7 +215,8 @@ final case class IcfSvmModel(
           else shards.treeAggregate(new Array[Double](scored.length))(
               seqOp = { case (acc, (sv, coef)) =>
                 val x = xs.value
-                var j = 0; while (j < x.length) { acc(j) += coef * k(sv, x(j)); j += 1 }
+                var j = 0
+                while (j < x.length) { acc(j) = IcfSvmModel.addTerm(acc(j), k, sv, coef, x(j)); j += 1 }
                 acc
               },
               combOp = { (a, b) => var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a })
@@ -184,16 +230,17 @@ final case class IcfSvmModel(
   private def points(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
 
-  /** (__pid, __ksum) through a cross join of the points with `svSide`:
+  /** (__pid, __ksum) through a cross join of the points with the SVs:
     * Σ coef·k(sv, x) as a double sum, or with `exact` as a `Long` sum of
     * floor(coef·k(sv, x)·1e12) scaled back to a double. */
-  private def kernelSum(pts: DataFrame, svSide: DataFrame, exact: Boolean): DataFrame = {
+  private def kernelSum(pts: DataFrame, exact: Boolean): DataFrame = {
     val term = col("sv_coef") * kernel(col("sv_x"), col("__px"))
     val ksum =
       if (exact) sum(floor(term * lit(IcfSvmModel.Picounits)).cast("long"))
         .cast("double") / lit(IcfSvmModel.Picounits)
       else sum(term)
-    pts.crossJoin(svSide).groupBy(col("__pid")).agg(ksum.as("__ksum"))
+    pts.crossJoin(svs.select(col("sv_x"), col("sv_coef")))
+      .groupBy(col("__pid")).agg(ksum.as("__ksum"))
   }
 
   /** Joins (__pid, __ksum) back onto `df` as `decision` = sum + bias.
@@ -201,10 +248,12 @@ final case class IcfSvmModel(
     * (e.g. single-class data) must still score every row (bias only),
     * not drop them all through an inner join against an empty side. */
   private def withDecision(df: DataFrame, idCol: String, scores: DataFrame): DataFrame =
-    df.join(scores, df(idCol) === scores("__pid"), "left")
+    withPrediction(df.join(scores, df(idCol) === scores("__pid"), "left")
       .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
-      .drop("__pid", "__ksum")
-      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+      .drop("__pid", "__ksum"))
+
+  private def withPrediction(scored: DataFrame): DataFrame =
+    scored.withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
 }
 
 object IcfSvmModel {
@@ -213,12 +262,26 @@ object IcfSvmModel {
     * integer multiples of 1e-12. */
   private[ml] val Picounits = 1e12
 
-  /** Reload a text model dir written by [[IcfSvmModel.saveText]]. The SV
-    * parts are parsed distributedly — the model never touches the driver
-    * beyond the few header scalars. */
+  /** The per-term fold of the map and streamed layouts: `acc` plus
+    * coef·k(sv, x), through the plain-array [[Kernel]] form. */
+  private[ml] def addTerm(acc: Double, k: Kernel, sv: Array[Double], coef: Double,
+                          x: Array[Double]): Double =
+    acc + coef * k(sv, x)
+
+  /** [[addTerm]] in picounits: the term is floor(coef·k(sv, x)·1e12) as a
+    * `Long`, computed in the cross join's column-expression order, and a
+    * sum that leaves the `Long` range fails rather than wraps. */
+  private[ml] def addPicoTerm(acc: Long, k: Kernel, sv: Array[Double], coef: Double,
+                              x: Array[Double]): Long =
+    Math.addExact(acc, Math.floor(coef * k(sv, x) * Picounits).toLong)
+
+  /** Reload a text model dir written by [[IcfSvmModel.saveText]]. The
+    * header is read on the driver through the Hadoop `FileSystem` of
+    * `path` (no Spark job); the SV parts are parsed distributedly — the
+    * model never touches the driver beyond the few header scalars. */
   def loadText(spark: SparkSession, path: String): IcfSvmModel = {
     import spark.implicits._
-    val header = spark.read.textFile(s"$path/header").collect()
+    val header = readHeader(spark, new Path(path, "header"))
       .filter(_.contains(' '))
       .map { l => val i = l.indexOf(' '); l.substring(0, i) -> l.substring(i + 1) }
       .toMap
@@ -253,6 +316,21 @@ object IcfSvmModel {
       }
       .toDF("sv_x", "sv_coef")
     IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble)
+  }
+
+  /** The lines of the text part files in `dir`, skipping the `_`- and
+    * `.`-prefixed files (`_SUCCESS`, `.crc`) that Spark's own text
+    * reader skips. A few header lines do not pay for a job. */
+  private def readHeader(spark: SparkSession, dir: Path): Seq[String] = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).toSeq
+      .filter(_.isFile).map(_.getPath)
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .sortBy(_.getName)
+      .flatMap { p =>
+        val in = fs.open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList finally in.close()
+      }
   }
 }
 

@@ -84,13 +84,17 @@ object ModelOracles {
     * path and read BACK from parquet — both engines then score the
     * identical doubles. */
   def icfH(spark: SparkSession, dir: String): DataFrame =
-    icfFactors.computeIfAbsent(dir, _ => {
-      Icf.factorize(
-          Tables.embeddings(spark, dir).filter(col("vec_id") < 200),
-          "vec_id", "embedding", Kernel.Rbf(0.05), rank = 8)
-        .write.mode("overwrite").parquet(s"${modelRoot(dir)}/m4_icf_h")
-      spark.read.parquet(s"${modelRoot(dir)}/m4_icf_h")
-    })
+    icfFactors.computeIfAbsent(dir, _ =>
+      writeFactor(spark, s"${modelRoot(dir)}/m4_icf_h", Icf.factor(
+        Tables.embeddings(spark, dir).filter(col("vec_id") < 200),
+        "vec_id", "embedding", Kernel.Rbf(0.05), rank = 8)))
+
+  /** Writes `f`'s rows to parquet at `path`, releases the factor's cache
+    * and reads the rows back: the session keeps only the parquet. */
+  private[ml] def writeFactor(spark: SparkSession, path: String, f: Icf.Factor): DataFrame = {
+    try f.rows.write.mode("overwrite").parquet(path) finally f.release()
+    spark.read.parquet(path)
+  }
 
   /** Single-slot, last-dir-wins: file and in-memory (A, B) must move
     * together (the paths are now sf-scoped, but the slot also guards
@@ -140,14 +144,11 @@ object ModelOracles {
     * factor exactly like m4b, so the early-stop logic itself is under
     * the oracle. */
   def m4cIcfAutoRank(spark: SparkSession, dir: String): DataFrame = {
-    val h = icfFactors.computeIfAbsent(dir + "#auto", _ => {
-      Icf.factorizeAuto(
-          Tables.embeddings(spark, dir).filter(col("vec_id") < 200),
-          "vec_id", "embedding", Kernel.Rbf(0.05),
-          rankRatio = 0.08, maxRank = 12, residualTol = 1e-6)
-        .write.mode("overwrite").parquet(s"${modelRoot(dir)}/m4c_icf_auto")
-      spark.read.parquet(s"${modelRoot(dir)}/m4c_icf_auto")
-    })
+    val h = icfFactors.computeIfAbsent(dir + "#auto", _ =>
+      writeFactor(spark, s"${modelRoot(dir)}/m4c_icf_auto", Icf.factorAuto(
+        Tables.embeddings(spark, dir).filter(col("vec_id") < 200),
+        "vec_id", "embedding", Kernel.Rbf(0.05),
+        rankRatio = 0.08, maxRank = 12, residualTol = 1e-6)))
     val r = h.select(col("id"),
       org.apache.spark.sql.functions.size(col("icf_features")).cast("long").as("rank"),
       (lit(1.0) - graft.functions.GraftFunctions.dot_product(

@@ -25,14 +25,13 @@ object SparseIcfQuery {
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def icfH(spark: SparkSession, dir: String): DataFrame =
+  private[ml] def icfH(spark: SparkSession, dir: String): DataFrame =
     built.computeIfAbsent(dir, _ => {
       val fixture = SparseMlQueries.sparseDocVectors(spark, dir)
-      val h = Icf.factorizeSparse(fixture, "doc_id", "indices", "values",
+      val h = Icf.factorSparse(fixture, "doc_id", "indices", "values",
         Kernel.Rbf(Gamma), Rank)
-      h.coalesce(1).write.mode("overwrite")
-        .parquet(s"${ModelOracles.modelRoot(dir)}/m16_icf_h")
-      spark.read.parquet(s"${ModelOracles.modelRoot(dir)}/m16_icf_h")
+      ModelOracles.writeFactor(spark, s"${ModelOracles.modelRoot(dir)}/m16_icf_h",
+        h.copy(rows = h.rows.coalesce(1)))
     })
 
   def query(spark: SparkSession, dir: String): DataFrame = {

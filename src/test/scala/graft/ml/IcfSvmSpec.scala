@@ -2,7 +2,7 @@ package graft.ml
 
 import graft.SparkSpec
 
-class IcfSvmSpec extends SparkSpec {
+class IcfSvmSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
   test("full psvm pipeline (ICF -> IPM -> SV model) separates blobs") {
@@ -82,19 +82,29 @@ class IcfSvmSpec extends SparkSpec {
     plan.contains("NestedLoopJoin") || plan.contains("CartesianProduct")
   }
 
+  /** The map layout's plan: one projection over the scored rows, with no
+    * cross join, aggregate or exchange. */
+  private def narrow(scored: org.apache.spark.sql.DataFrame): Boolean = {
+    val plan = scored.queryExecution.executedPlan.toString
+    !crossJoins(scored) && !plan.contains("HashAggregate") && !plan.contains("Exchange")
+  }
+
   test("predict: all three layouts agree with the broadcast path and a plain-Scala kernel sum") {
     val (pts, df, model, plain) = regimeFit
     val nSv = model.numSupportVectors
     assert(nSv >= 4 && nSv < pts.size, s"fixture needs a few SVs, got $nSv")
     val few = df.filter($"id" < nSv - 1)            // nSv - 1 rows
     val broadcastAll = model.predict(df, "id", "vec")
-    // SVs under the threshold: the broadcast kernel-sum join
+    // SVs under the threshold (or at it): the map layout over broadcast SVs
     val under = model.copy(broadcastThreshold = nSv)
     // SVs over it, few scored rows: psvm's layout, no cross join at all
     val streamed = model.copy(broadcastThreshold = nSv - 1).predict(few, "id", "vec")
     // both sides over it: the partitioned cross join
     val both = model.copy(broadcastThreshold = 2).predict(df, "id", "vec")
-    assert(crossJoins(broadcastAll) && crossJoins(both))
+    assert(narrow(broadcastAll), s"the map layout must be one projection:\n" +
+      broadcastAll.queryExecution.executedPlan)
+    assert(narrow(under.predict(df, "id", "vec")))
+    assert(crossJoins(both))
     assert(!crossJoins(streamed), "the streamed layout must not plan a cross join")
 
     val ref = decisions(broadcastAll)
@@ -114,22 +124,52 @@ class IcfSvmSpec extends SparkSpec {
     val streamed = model.copy(broadcastThreshold = model.numSupportVectors - 1)
     val withNull = Seq((1000L, Option.empty[Array[Double]]), (1001L, Some(Array(1.5, -1.5))))
       .toDF("id", "vec")
-    val got = decisions(streamed.predict(withNull, "id", "vec"))
-    assert(got.keySet === Set(1000L, 1001L))
-    assert(got(1000L) === model.bias, "a null vector must score bias (LEFT join + coalesce)")
-    assert(math.abs(got(1001L) - plain(Seq(1.5, -1.5))) < 1e-9)
-
     // a vector of the wrong length clamps to the shorter one, as the
-    // kernel expressions of the join layouts do
+    // kernel expressions of the cross join do
     val offDim = Seq((1L, Array(1.5, -1.5, 9.0)), (2L, Array(1.5))).toDF("id", "vec")
-    val joinDec = decisions(model.predict(offDim, "id", "vec"))
-    decisions(streamed.predict(offDim, "id", "vec")).foreach { case (id, d) =>
-      assert(math.abs(d - joinDec(id)) < 1e-9, s"id $id: streamed $d vs join ${joinDec(id)}")
+    val crossDec = decisions(model.copy(broadcastThreshold = 1).predict(offDim, "id", "vec"))
+    for ((name, m) <- Seq("map" -> model, "streamed" -> streamed)) {
+      val got = decisions(m.predict(withNull, "id", "vec"))
+      assert(got.keySet === Set(1000L, 1001L), name)
+      assert(bits(got)(1000L) === java.lang.Double.doubleToRawLongBits(model.bias),
+        s"$name: a null vector must score bias")
+      assert(math.abs(got(1001L) - plain(Seq(1.5, -1.5))) < 1e-9, name)
+
+      val offDec = decisions(m.predict(offDim, "id", "vec"))
+      assert(offDec.keySet === crossDec.keySet, name)
+      offDec.foreach { case (id, d) =>
+        assert(math.abs(d - crossDec(id)) < 1e-9, s"$name id $id: $d vs cross join ${crossDec(id)}")
+      }
+
+      val empty = m.predict(withNull.filter($"id" < 0), "id", "vec")
+      assert(empty.columns.contains("decision") && empty.columns.contains("prediction"), name)
+      assert(empty.count() === 0L, name)
+    }
+  }
+
+  test("predict map layout: duplicate ids are scored per row, and a predict takes at most 2 jobs") {
+    val (_, df, model, plain) = regimeFit
+    val a = Array(1.5, -1.5)
+    val b = Array(-0.5, 2.0)
+    val dups = Seq((7L, a), (7L, b), (8L, a)).toDF("id", "vec")
+    for (m <- Seq(model, model.copy(svs = model.svs.repartition(3)))) {
+      val got = m.predict(dups, "id", "vec").select($"vec", $"decision")
+        .as[(Seq[Double], Double)].collect()
+      assert(got.length === 3)
+      got.foreach { case (x, d) =>
+        assert(math.abs(d - plain(x)) < 1e-9, s"$x: $d vs plain ${plain(x)}")
+      }
+      val exact = m.predictQuantized(dups, "id", "vec").select($"vec", $"decision")
+        .as[(Seq[Double], Double)].collect()
+      val byVec = exact.groupBy(_._1).map { case (x, ds) => x -> ds.map(_._2).distinct.toSeq }
+      assert(byVec.values.forall(_.size == 1), s"one exact decision per vector: $byVec")
+      assert(byVec(a.toSeq) != byVec(b.toSeq), "duplicate ids keep their own decisions")
     }
 
-    val empty = streamed.predict(withNull.filter($"id" < 0), "id", "vec")
-    assert(empty.columns.contains("decision") && empty.columns.contains("prediction"))
-    assert(empty.count() === 0L)
+    // the SV collect, then the scoring job: no shuffle stage, no join back
+    val (rows, jobs) = jobsDuring(model.predict(df, "id", "vec").collect())
+    assert(rows.length === df.count())
+    assert(jobs <= 2, s"$jobs jobs")
   }
 
   private def bits(d: Map[Long, Double]): Map[Long, Long] =
@@ -151,12 +191,16 @@ class IcfSvmSpec extends SparkSpec {
     assert(!crossJoins(streamed), "the streamed layout must not plan a cross join")
     val cross = model.copy(broadcastThreshold = 2)
     assert(crossJoins(cross.predictQuantized(df, "id", "vec")))
+    assert(narrow(model.predictQuantized(df, "id", "vec")))
     val reshardedSvs = model.svs.repartition(7)
     // integer picounit sums: every layout, partitioning and reduction tree
-    // must give the broadcast layout's bits exactly
+    // (the map layout's SV table order included) must give the map
+    // layout's bits exactly
     val byLayout = Seq(
-      "broadcast, rows in 7 partitions" ->
+      "map, rows in 7 partitions" ->
         model.predictQuantized(df.repartition(7), "id", "vec"),
+      "map, SVs and rows in 7 partitions" ->
+        model.copy(svs = reshardedSvs).predictQuantized(df.repartition(7), "id", "vec"),
       "streamed" -> streamed,
       "streamed, SVs and rows in 7 partitions" ->
         streamedModel.copy(svs = reshardedSvs).predictQuantized(few.repartition(7), "id", "vec"),
@@ -183,14 +227,17 @@ class IcfSvmSpec extends SparkSpec {
     val got = decisions(streamed.predictQuantized(withNull, "id", "vec"))
     assert(got.keySet === Set(1000L, 1001L))
     assert(got(1000L) === model.bias, "a null vector must score bias (LEFT join + coalesce)")
-    assert(bits(got)(1001L) === bits(decisions(model.predictQuantized(withNull, "id", "vec")))(1001L))
+    val mapped = decisions(model.predictQuantized(withNull, "id", "vec"))
+    assert(bits(mapped)(1000L) === java.lang.Double.doubleToRawLongBits(model.bias),
+      "map layout: a null vector must score bias")
+    assert(bits(got)(1001L) === bits(mapped)(1001L))
     val empty = streamed.predictQuantized(withNull.filter($"id" < 0), "id", "vec")
     assert(empty.columns.contains("decision") && empty.columns.contains("prediction"))
     assert(empty.count() === 0L)
 
     // two terms of 5e18 picounits each fit a Long; their sum does not,
-    // and must fail (streamed: in the seqOp or the combOp; broadcast: in
-    // the SQL sum) rather than wrap
+    // and must fail (streamed: in the seqOp or the combOp; map: in the
+    // row's fold) rather than wrap
     val svs = Seq((Array(1.0), 5e6), (Array(1.0), 5e6)).toDF("sv_x", "sv_coef")
     val one = Seq((1L, Array(1.0))).toDF("id", "vec")
     val huge = IcfSvmModel(Kernel.Linear, svs, 2, 0.0, broadcastThreshold = 1)
@@ -213,6 +260,25 @@ class IcfSvmSpec extends SparkSpec {
       "svm_type c_svc", "kernel_type rbf", "gamma 0.5", "coef0 0.0", "degree 0",
       "total_sv 1", "dim 3", "rho -0.125", "SV"))
     assert(spark.read.textFile(s"$dir/sv").collect().toSeq === Seq("0.5 1:1.0E-5 2:-0.25 3:3.0"))
+  }
+
+  test("loadText reads its header from a file: URI without a Spark job") {
+    val svs = Seq((Array(0.5, -1.0), 0.75), (Array(-2.0, 0.25), -1.5)).toDF("sv_x", "sv_coef")
+    val model = IcfSvmModel(Kernel.Polynomial(0.5, 1.0, 3), svs, 2, -0.375)
+    val dir = java.nio.file.Files.createTempDirectory("icfsvm_uri")
+    model.saveText(spark, dir.toString)
+    // Hadoop's local file system writes `_SUCCESS` and `.crc` siblings;
+    // they must not be read as header lines
+    val names = dir.resolve("header").toFile.list().toSet
+    assert(names.contains("_SUCCESS") && names.exists(n => n.startsWith(".") && n.endsWith(".crc")),
+      names.toString)
+    val (loaded, jobs) = jobsDuring(IcfSvmModel.loadText(spark, "file:" + dir))
+    assert(jobs === 0, s"loadText submitted $jobs jobs")
+    assert(loaded.kernel === model.kernel && loaded.bias === model.bias &&
+      loaded.numSupportVectors === 2L)
+    val x = Seq((1L, Array(1.0, 2.0))).toDF("id", "vec")
+    assert(bits(decisions(loaded.predictQuantized(x, "id", "vec"))) ===
+      bits(decisions(model.predictQuantized(x, "id", "vec"))))
   }
 
   test("loadText: an out-of-range index fails loudly, and the SV plan never boxes elements") {
@@ -265,7 +331,7 @@ class IcfSvmSpec extends SparkSpec {
   test("non-separable data: SV set stays distributed (O(n) SVs, no driver copy)") {
     // random labels -> nothing is separable -> nearly every point is a
     // support vector; the model must hold them as a DataFrame and still
-    // score correctly through the kernel-sum join
+    // score correctly
     val rng = new scala.util.Random(7)
     val pts = (0 until 200).map { i =>
       (i.toLong,

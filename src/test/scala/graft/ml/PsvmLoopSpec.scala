@@ -1,8 +1,6 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** The ICF pivot loop and the IPM Newton loop run inside the block's
@@ -10,7 +8,7 @@ import org.apache.spark.sql.DataFrame
   * both to the same bits (a plain-Scala reference ICF, a golden IPM
   * solution), bound the jobs a one-block fit submits, and check that a
   * fit leaves no cache behind. */
-class PsvmLoopSpec extends SparkSpec {
+class PsvmLoopSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
   private def sc = spark.sparkContext
@@ -84,36 +82,6 @@ class PsvmLoopSpec extends SparkSpec {
     check(Icf.factorize(df, "id", "vec", kernel, rank, residualTol = residualTol), "dense")
     check(Icf.factorizeSparse(df, "id", "indices", "values", kernel, rank,
       residualTol = residualTol), "sparse")
-  }
-
-  /** Jobs submitted while `body` runs, counted by a SparkListener between
-    * two fence jobs (the listener bus is asynchronous). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val fences = new ConcurrentHashMap[String, Integer]()
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        started.add(e.jobId)
-        Option(e.properties).flatMap(p => Option(p.getProperty("psvm.fence")))
-          .foreach(f => fences.put(f, e.jobId))
-      }
-    }
-    def fence(name: String): Int = {
-      sc.setLocalProperty("psvm.fence", name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("psvm.fence", null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!fences.containsKey(name) && System.nanoTime() < deadline) Thread.sleep(10)
-      fences.get(name).intValue
-    }
-    sc.addSparkListener(listener)
-    try {
-      val first = fence(s"a${System.nanoTime()}")
-      val out = body
-      val last = fence(s"b${System.nanoTime()}")
-      var jobs = 0
-      started.forEach(id => if (id > first && id < last) jobs += 1)
-      (out, jobs)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** Two Gaussian classes, the mean shifted by ±0.6 on the first dims. */
