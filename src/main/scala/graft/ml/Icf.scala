@@ -1,8 +1,10 @@
 package graft.ml
 
 import scala.reflect.ClassTag
+import graft.functions.VectorOps
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,7 +23,7 @@ import org.apache.spark.storage.StorageLevel
   * Cost per block count (~50k rows per block, [[Ipm.blockCount]]):
   *   - one block (the m = 1 case of the paper's cost model, where the
   *     all-reduce is the identity): the whole pivot loop runs inside the
-  *     block's one task — one Spark job for the factorization;
+  *     block's one task — one Spark job, after one that counts the rows;
   *   - several blocks: each pivot is a reduce (the all-reduce) plus a
   *     map materialized by a count — two jobs per pivot, the lineage
   *     truncated every `checkpointEvery` pivots.
@@ -30,27 +32,35 @@ import org.apache.spark.storage.StorageLevel
   * and O(n·p) state as the reference, with the n-dimension distributed.
   * The loop does not depend on how a row is stored: [[factorize]] (dense
   * rows) and [[factorizeSparse]] (sparse rows) only build the rows and
-  * pick the [[Kernel]] form that scores them.
+  * pick the [[Kernel]] form that scores them. A block keeps each row's
+  * point and label by its H row, for [[IcfSvmTrainer]]'s later passes.
   * For high-throughput training prefer [[Nystrom]]; ICF earns its cost
   * when the greedy pivots matter (fast-decaying spectra).
   */
 object Icf {
 
-  /** A factor: `rows` is (id, icf_features), `nRows` the input's row
-    * count. A one-block factor is cached by the loop that built it;
-    * `release` drops that cache once the caller is done with `rows`
-    * (which then recompute from lineage). A multi-block factor stays
-    * cached: its lineage runs through local checkpoints. */
-  private[ml] final case class Factor(rows: DataFrame, nRows: Long, cached: Option[RDD[_]]) {
+  /** A factor: `blocks` with `rank` H columns built, `rows` their
+    * (id, icf_features) view, `nRows` the input's row count. A one-block
+    * factor is cached by the loop that built it; `release` drops that
+    * cache (the blocks then recompute from lineage). A multi-block
+    * factor stays cached: its lineage runs through local checkpoints. */
+  private[ml] final case class Factor[X](spark: SparkSession, blocks: RDD[IcfBlock[X]],
+                                         rank: Int, nRows: Long, cached: Option[RDD[_]]) {
+    lazy val rows: DataFrame = spark.createDataFrame(blocks.flatMap {
+      val built = rank // a local, so the closure captures neither the factor nor its session
+      b => b.ids.indices.iterator.map(i => Row(b.ids(i), b.hRow(i, built).toSeq))
+    }, new StructType().add("id", LongType).add("icf_features", ArrayType(DoubleType)))
     def release(): Unit = cached.foreach(_.unpersist(false))
   }
 
-  /** One partition's rows, column-compressed: ids, points, the H rows
-    * built so far (length rank) and the diagonal residuals. */
-  private final case class IcfBlock[X](ids: Array[Long], xs: Array[X],
-                                       h: Array[Array[Double]], diag: Array[Double]) {
+  /** One partition's rows, column-compressed: ids, points, labels (0.0
+    * if none), the H rows (length rank) and the diagonal residuals. */
+  private[ml] final case class IcfBlock[X](ids: Array[Long], xs: Array[X], ys: Array[Double],
+                                           h: Array[Array[Double]], diag: Array[Double]) {
     /** A copy whose H rows and residuals [[addColumn]] may update. */
-    def copyForUpdate: IcfBlock[X] = IcfBlock(ids, xs, h.map(_.clone), diag.clone)
+    def copyForUpdate: IcfBlock[X] = IcfBlock(ids, xs, ys, h.map(_.clone), diag.clone)
+
+    def hRow(i: Int, cols: Int): Array[Double] = if (cols < h(i).length) h(i).take(cols) else h(i)
   }
 
   /** A pivot row: id, point, H row (only its prefix before the column
@@ -131,17 +141,16 @@ object Icf {
   private[ml] def factorAuto(df: DataFrame, idCol: String, vecCol: String,
                              kernel: Kernel, rankRatio: Double,
                              maxRank: Int = 256, residualTol: Double = 1e-8,
-                             checkpointEvery: Int = 16): Factor = {
-    val n = df.count()
-    val rank = math.max(1, math.min(maxRank, math.ceil(rankRatio * n).toInt))
-    dense(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, None, n)
-  }
+                             checkpointEvery: Int = 16): Factor[Array[Double]] =
+    dense(df, idCol, vecCol, None, kernel,
+      n => math.max(1, math.min(maxRank, math.ceil(rankRatio * n).toInt)),
+      checkpointEvery, residualTol, None)
 
   /** Returns (id, icf_features: array<double>[rank]) with K ≈ H·Hᵀ.
     * `residualTol > 0` enables early stop on the max diagonal residual
     * (the produced factor is truncated to the columns actually built).
-    * The factor is computed (one job on a one-block input) and cached
-    * before this returns.
+    * The factor is computed (a row count, then one job on a one-block
+    * input) and cached before this returns.
     *
     * `checkpointDir`: psvm-style fault tolerance for long factorizations
     * (p passes over the data — hours at 100 TB). Every `checkpointEvery`
@@ -160,26 +169,25 @@ object Icf {
     factor(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, checkpointDir).rows
 
   /** [[factorize]], returning the [[Factor]] so the caller can release
-    * its cache. */
+    * its cache; `labelCol` puts the rows' labels in the blocks. */
   private[ml] def factor(df: DataFrame, idCol: String, vecCol: String,
                          kernel: Kernel, rank: Int,
                          checkpointEvery: Int = 16,
                          residualTol: Double = 0.0,
-                         checkpointDir: Option[String] = None): Factor =
-    dense(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, checkpointDir,
-      df.count())
+                         checkpointDir: Option[String] = None,
+                         labelCol: Option[String] = None): Factor[Array[Double]] =
+    dense(df, idCol, vecCol, labelCol, kernel, _ => rank, checkpointEvery, residualTol,
+      checkpointDir)
 
-  private def dense(df: DataFrame, idCol: String, vecCol: String,
-                    kernel: Kernel, rank: Int, checkpointEvery: Int,
-                    residualTol: Double, checkpointDir: Option[String],
-                    nRows: Long): Factor = {
-    import graft.functions.VectorOps
-    import org.apache.spark.sql.functions.col
+  private def dense(df: DataFrame, idCol: String, vecCol: String, labelCol: Option[String],
+                    kernel: Kernel, rank: Long => Int, checkpointEvery: Int,
+                    residualTol: Double, checkpointDir: Option[String]): Factor[Array[Double]] = {
     val rows = df
-      .select(col(idCol).cast("long"), VectorOps.toDoubleArray(col(vecCol)))
+      .select(col(idCol).cast("long"), VectorOps.toDoubleArray(col(vecCol)),
+              labelCol.fold(lit(0.0))(col(_).cast("double")))
       .rdd
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    pivotLoop(df.sparkSession, rows, nRows, (a: Array[Double], b: Array[Double]) => kernel(a, b),
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+    pivotLoop(df.sparkSession, rows, (a: Array[Double], b: Array[Double]) => kernel(a, b),
       rank, checkpointEvery, residualTol, checkpointDir)
   }
 
@@ -205,24 +213,24 @@ object Icf {
   private[ml] def factorSparse(df: DataFrame, idCol: String, idxCol: String,
                                valCol: String, kernel: Kernel, rank: Int,
                                checkpointEvery: Int = 16,
-                               residualTol: Double = 0.0): Factor = {
-    import org.apache.spark.sql.functions.col
-    val nRows = df.count()
+                               residualTol: Double = 0.0): Factor[(Array[Int], Array[Double])] = {
     val rows = df.select(col(idCol).cast("long"), col(idxCol), col(valCol))
       .rdd
-      .map(r => (r.getLong(0), (r.getSeq[Int](1).toArray, r.getSeq[Double](2).toArray)))
-    pivotLoop(df.sparkSession, rows, nRows,
+      .map(r => (r.getLong(0), (r.getSeq[Int](1).toArray, r.getSeq[Double](2).toArray), 0.0))
+    pivotLoop(df.sparkSession, rows,
       (a: (Array[Int], Array[Double]), b: (Array[Int], Array[Double])) =>
         kernel.sparse(a._1, a._2, b._1, b._2),
-      rank, checkpointEvery, residualTol, None)
+      _ => rank, checkpointEvery, residualTol, None)
   }
 
-  /** The greedy-pivot loop over (id, x) rows scored by `k`: in the
-    * block's task on one block, from the driver on several. */
-  private def pivotLoop[X: ClassTag](spark: SparkSession, rows: RDD[(Long, X)], nRows: Long,
-                                     k: (X, X) => Double, rank: Int, checkpointEvery: Int,
-                                     residualTol: Double,
-                                     checkpointDir: Option[String]): Factor = {
+  /** The greedy-pivot loop over (id, x, label) rows scored by `k`, rank
+    * `rankOf(row count)`: in the block's task on one block, else from the driver. */
+  private def pivotLoop[X: ClassTag](spark: SparkSession, rows: RDD[(Long, X, Double)],
+                                     k: (X, X) => Double, rankOf: Long => Int,
+                                     checkpointEvery: Int, residualTol: Double,
+                                     checkpointDir: Option[String]): Factor[X] = {
+    val nRows = rows.count()
+    val rank = rankOf(nRows)
     // resume from the last completed column dump, if any
     val resume: Option[(Int, RDD[(Long, (Array[Double], Double))])] =
       checkpointDir.flatMap { dir =>
@@ -232,20 +240,21 @@ object Icf {
           (math.min(saved.toInt, rank), h)
         }
       }
-    val start: RDD[(Long, X, Array[Double], Double)] = resume match {
-      case None => rows.map { case (id, x) => (id, x, new Array[Double](rank), k(x, x)) }
+    val start: RDD[(Long, X, Double, Array[Double], Double)] = resume match {
+      case None => rows.map { case (id, x, y) => (id, x, y, new Array[Double](rank), k(x, x)) }
       case Some((jSaved, saved)) =>
-        rows.join(saved).map { case (id, (x, (hPrefix, diag))) =>
+        rows.map(t => (t._1, (t._2, t._3))).join(saved).map { case (id, ((x, y), (hPrefix, diag))) =>
           val h = new Array[Double](rank)
           System.arraycopy(hPrefix, 0, h, 0, math.min(jSaved, hPrefix.length))
-          (id, x, h, diag)
+          (id, x, y, h, diag)
         }
     }
     val nBlocks = Ipm.blockCount(nRows, start.getNumPartitions)
     var blocks: RDD[IcfBlock[X]] = start.coalesce(nBlocks).mapPartitions { it =>
       val buf = it.toArray
       if (buf.isEmpty) Iterator.empty
-      else Iterator.single(IcfBlock(buf.map(_._1), buf.map(_._2), buf.map(_._3), buf.map(_._4)))
+      else Iterator.single(
+        IcfBlock(buf.map(_._1), buf.map(_._2), buf.map(_._3), buf.map(_._4), buf.map(_._5)))
     }
 
     var j = resume.map(_._1).getOrElse(0)
@@ -305,17 +314,6 @@ object Icf {
       }
     }
 
-    val built = j
-    val schema = StructType(Seq(
-      StructField("id", LongType),
-      StructField("icf_features", ArrayType(DoubleType))))
-    val factor = spark.createDataFrame(
-      blocks.flatMap { b =>
-        Iterator.tabulate(b.ids.length) { i =>
-          Row(b.ids(i), (if (built < rank) b.h(i).take(built) else b.h(i)).toSeq)
-        }
-      },
-      schema)
-    Factor(factor, nRows, cached)
+    Factor(spark, blocks, j, nRows, cached)
   }
 }

@@ -1,8 +1,11 @@
 package graft.ml
 
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -39,24 +42,24 @@ final case class IcfSvmModel(
     svs: DataFrame,              // (sv_x: array<double>, sv_coef: double = α·y)
     numSupportVectors: Long,     // counted once at fit time
     bias: Double,
-    broadcastThreshold: Long = 65536) {
+    dim: Int,                    // the SV vectors' length; -1 with no SV, or unknown
+    broadcastThreshold: Long = 65536,
+    private[ml] val cached: Option[RDD[_]] = None) {  // the fit's SV rows
 
   /** Persist in the psvm/libsvm-style TEXT format (reference: psvm
     * model.cc Save): a `header` part with kernel/rho metadata and
     * sharded `sv` parts, one line per support vector —
     * `<coef> 1:<x1> 2:<x2> …` with coef = α·y. The SV side is written
     * straight from the distributed DataFrame (psvm likewise shards its
-    * model across machines); rho follows the libsvm sign convention
-    * f(x) = Σ coefᵢ k(xᵢ,x) − rho, so rho = −bias. */
+    * model across machines), the one Spark job; the header goes through
+    * the Hadoop `FileSystem` of `path`, replacing `header` as Spark's
+    * overwrite would. rho follows the libsvm sign convention
+    * f(x) = Σ coefᵢ k(xᵢ,x) − rho, so rho = −bias. `dim` lets sparse
+    * loaders size vectors without scanning (psvm headers carry it too). */
   def saveText(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
     val (kt, g, c0, d) = Kernel.encode(kernel)
-    // `dim`: the feature dimension, so sparse loaders can size vectors
-    // without scanning (libsvm itself omits it; psvm model headers carry
-    // the equivalent). -1 for a degenerate zero-SV model.
-    val dim = svs.select(org.apache.spark.sql.functions.size(col("sv_x")))
-      .head(1).headOption.map(_.getInt(0)).getOrElse(-1)
-    Seq(
+    val header = Seq(
       "svm_type c_svc",
       s"kernel_type $kt",
       s"gamma ${g.toString}",
@@ -65,8 +68,13 @@ final case class IcfSvmModel(
       s"total_sv $numSupportVectors",
       s"dim $dim",
       s"rho ${(-bias).toString}",
-      "SV"
-    ).toDS().coalesce(1).write.mode("overwrite").text(s"$path/header")
+      "SV")
+    val dir = new Path(path, "header")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(dir, true)
+    val out = fs.create(new Path(dir, "part-00000"))
+    try out.write(header.mkString("", "\n", "\n").getBytes(UTF_8)) finally out.close()
+    fs.create(new Path(dir, "_SUCCESS")).close()
     svs.select(col("sv_coef"), col("sv_x")).as[(Double, Array[Double])]
       .map { case (coef, x) =>
         val sb = new StringBuilder(coef.toString)
@@ -77,13 +85,12 @@ final case class IcfSvmModel(
       .write.mode("overwrite").text(s"$path/sv")
   }
 
-  /** Releases the cached support-vector blocks. Call when done scoring:
-    * the fit persists `svs` (it is consumed several times during
-    * training and typically many times at prediction), and nothing else
+  /** Releases the cached support vectors. Call when done scoring: the fit
+    * caches its SV rows (typically scored many times), and nothing else
     * knows the model's lifetime — without this, cached SV blocks
     * accumulate across models in a long-lived session. The model remains
     * usable afterwards (the DataFrame recomputes from lineage). */
-  def unpersist(): Unit = { svs.unpersist(false); () }
+  def unpersist(): Unit = cached.foreach(_.unpersist(false))
 
   /** Adds `decision` and `prediction` (±1) columns over `vecCol`,
     * keyed by the (unique) `idCol`.
@@ -315,7 +322,7 @@ object IcfSvmModel {
         (x, coef)
       }
       .toDF("sv_x", "sv_coef")
-    IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble)
+    IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble, headerDim)
   }
 
   /** The lines of the text part files in `dir`, skipping the `_`- and
@@ -337,89 +344,84 @@ object IcfSvmModel {
 object IcfSvmTrainer {
 
   /** M6+M7+M8 end-to-end: labels must be ±1 in labelCol;
-    * `posWeight`/`negWeight` scale C per class (libsvm `-wi`). */
+    * `posWeight`/`negWeight` scale C per class (libsvm `-wi`).
+    *
+    * psvm's layout: the IPM and SV passes run over the ICF blocks (no
+    * re-keying by id, no shuffle); one block (under 50k rows) takes four
+    * jobs: the row count, the ICF loop, the IPM loop and the SV pass. */
   def fit(df: DataFrame, idCol: String, vecCol: String, labelCol: String,
           kernel: Kernel, rank: Int, c: Double = 1.0,
           maxIter: Int = 60, tol: Double = 1e-5,
           svEpsilon: Double = 1e-4,
           posWeight: Double = 1.0, negWeight: Double = 1.0): IcfSvmModel = {
     val spark = df.sparkSession
+    val icf = Icf.factor(df, idCol, vecCol, kernel, rank, labelCol = Some(labelCol))
+    require(icf.nRows > 0, "IcfSvmTrainer.fit needs at least one row")
+    val p = icf.rank
+    val (cPos, cNeg) = (c * posWeight, c * negWeight)
+    def cy(y: Double): Double = if (y > 0) cPos else cNeg
+    val ipm = Ipm.newton(spark, icf.blocks.map { b =>
+      // G = diag(y)·H, and the start α = C_y/2, strictly inside the box
+      val g = Array.tabulate(b.ids.length)(i => b.hRow(i, p).map(v => b.ys(i) * v))
+      (b.ids, Ipm.Block(b.ys, g, b.ys.map(cy(_) / 2.0)))
+    }, icf.nRows, p, cPos, cNeg, maxIter, tol)
 
-    val icf = Icf.factor(df, idCol, vecCol, kernel, rank)
-    val parts = Ipm.blockCount(icf.nRows, df.rdd.getNumPartitions)
-    val joined = df
-      .select(col(idCol).cast("long").as("__id"),
-              VectorOps.toDoubleArray(col(vecCol)).as("__x"),
-              col(labelCol).cast("double").as("__y"))
-      .join(icf.rows.withColumnRenamed("id", "__id"), Seq("__id"))
-      .coalesce(parts)
-      .persist()
-
-    val ipm = Ipm.dual(joined, "__id", "__y", "icf_features", c,
-      maxIter = maxIter, tol = tol, posWeight = posWeight, negWeight = negWeight)
-    val alphaDf = spark.createDataFrame(ipm.alphas).toDF("__id", "__alpha")
-
-    // support vectors: alpha above threshold — kept DISTRIBUTED (on
+    // support vectors: alpha above svEpsilon·C_y — kept DISTRIBUTED (on
     // non-separable data this set is O(n); psvm's model.cc writes it to
     // sharded files for the same reason). The threshold scales with the
-    // PER-CLASS C: with class weights, a downweighted class's alphas are
-    // bounded by c*weight, and a flat eps = svEpsilon*c would silently
-    // drop that class's entire SV set.
-    val cClass = when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
-    val epsCol = lit(svEpsilon) * cClass
-    val svDf = joined.join(alphaDf, Seq("__id"))
-      .filter(col("__alpha") > epsCol)
-      .select(col("__id").as("sv_id"), col("__x").as("sv_x"),
-              (col("__y") * col("__alpha")).as("sv_coef"),
-              col("__alpha").as("sv_alpha"), col("__y").as("sv_y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nSv = svDf.count()
-
-    // bias from free SVs' KKT, THROUGH THE ICF FACTOR — the reference's
-    // own math: psvm never materializes exact kernel rows at training
-    // (that is the point of ICF); its KKT algebra runs on Q ≈ GGᵀ, so
-    // b = mean over free SVs of (y_i − h_i·v) with v = Σ_j α_j y_j h_j
-    // (the m5/fitIpm shape, w = v on the factor features). Two O(n·p)
-    // passes, averaging over ALL free SVs. The first cut here summed
-    // the EXACT kernel over every (free, SV) pair instead — O(nFree·nSV)
-    // kernel evals, measured at 226.6s of m6's decade
-    // row (102.5k free × 200k SV), for a quantity whose per-SV spread
-    // under solver slack dwarfs the exact-vs-factored difference.
-    val (_, bias) = primalAndBias(joined.join(alphaDf, Seq("__id")), col("__alpha"),
-      col("__y"), col("icf_features"), rank,
-      free = col("__alpha") > epsCol && col("__alpha") < cClass * (1 - 1e-3))
-
-    // svs and the bias are materialized: drop the loops' caches (svs
-    // recompute from lineage once the model is unpersisted)
-    joined.unpersist()
+    // PER-CLASS C: a flat eps = svEpsilon*c would silently drop a
+    // downweighted class's entire SV set. The bias comes from the free
+    // SVs' KKT THROUGH THE ICF FACTOR, as psvm's does: its KKT algebra
+    // runs on Q ≈ GGᵀ. (Summing the EXACT kernel over every (free, SV)
+    // pair instead took 226.6s of m6's decade row, 102.5k free × 200k SV,
+    // for a quantity whose spread under solver slack dwarfs the
+    // exact-vs-factored difference.)
+    val kkt = primal(icf.blocks.zipPartitions(ipm.blocks)(_.zip(_)), p)(_._2._2,
+      free = (a, y) => a > svEpsilon * cy(y) && a < cy(y) * (1 - 1e-3)) { case (ib, (_, b)) =>
+        b.alpha.indices.filter(i => b.alpha(i) > svEpsilon * cy(b.y(i)))
+          .map(i => (ib.ids(i), ib.xs(i), b.y(i) * b.alpha(i), b.alpha(i), b.y(i))).toArray
+      }
+    val svs = spark.createDataFrame(kkt.table).toDF("sv_id", "sv_x", "sv_coef", "sv_alpha", "sv_y")
+    // the SV rows are cached: drop the loops' caches (svs recompute from
+    // lineage once the model is unpersisted)
     icf.release()
     ipm.release()
-    IcfSvmModel(kernel, svDf, nSv, bias)
+    IcfSvmModel(kernel, svs, kkt.count, kkt.bias, kkt.first.fold(-1)(_._2.length),
+      cached = Some(kkt.cached))
   }
 
-  /** Primal weights and bias from a dual solution, by psvm's KKT algebra
-    * on the rank-`p` features `h`: w = Σ αᵢyᵢhᵢ in one distributed pass,
-    * and b = the mean of yᵢ − w·hᵢ over the rows `free` selects (the free
-    * support vectors; each caller has its own predicate), 0.0 when
-    * there are none. */
-  private[ml] def primalAndBias(rows: DataFrame, alpha: Column, y: Column, h: Column,
-                                p: Int, free: Column): (Array[Double], Double) = {
-    val w = rows.select(alpha, y, h)
-      .rdd.treeAggregate(new Array[Double](p))(
-        seqOp = { (acc, r) =>
-          val a = r.getDouble(0) * r.getDouble(1)
-          val hi = r.getSeq[Double](2)
-          var j = 0; while (j < p) { acc(j) += a * hi(j); j += 1 }
-          acc
-        },
-        combOp = { (x, y) => var j = 0; while (j < p) { x(j) += y(j); j += 1 }; x })
-    val (total, n) = rows.filter(free).select(y, h)
-      .rdd.map { r =>
-        val hi = r.getSeq[Double](1)
-        var s = 0.0; var j = 0; while (j < p) { s += w(j) * hi(j); j += 1 }
-        (r.getDouble(0) - s, 1L)
+  /** w, the bias, and the rows `emit` made (cached), their count and first row. */
+  private[ml] final case class Primal[T](w: Array[Double], bias: Double, table: RDD[T],
+                                         count: Long, first: Option[T], cached: RDD[_])
+
+  /** psvm's KKT algebra on a dual solution's `block`s, rank `p`: w = Σ αᵢyᵢhᵢ
+    * = Gᵀα, and b = the mean of yᵢ − w·hᵢ (hᵢ = yᵢ·gᵢ) over the rows
+    * `free(αᵢ, yᵢ)` selects (the caller's free SVs), 0.0 if none; `emit`
+    * makes table rows in the same task. One job on one block (its task
+    * sums w first); on several, a treeAggregate of w runs before. */
+  private[ml] def primal[R, T: ClassTag](rows: RDD[R], p: Int)(block: R => Ipm.Block,
+      free: (Double, Double) => Boolean)(emit: R => Array[T]): Primal[T] = {
+    val summed =
+      if (rows.getNumPartitions == 1) None
+      else Some(rows.sparkContext.broadcast(rows.treeAggregate(new Array[Double](p))(
+        seqOp = (acc, r) => Ipm.addGTalpha(acc, block(r)), combOp = Ipm.addInto)))
+    val out = rows.map { r =>
+      val b = block(r)
+      val w = summed.fold(Ipm.addGTalpha(new Array[Double](p), b))(_.value)
+      var total = 0.0; var n = 0L; var i = 0
+      while (i < b.alpha.length) {
+        if (free(b.alpha(i), b.y(i))) {
+          var s = 0.0; var j = 0; while (j < p) { s += w(j) * (b.y(i) * b.h(i)(j)); j += 1 }
+          total += b.y(i) - s; n += 1
+        }
+        i += 1
       }
-      .fold((0.0, 0L)) { (a, b) => (a._1 + b._1, a._2 + b._2) }
-    (w, if (n > 0) total / n else 0.0)
+      (emit(r), w, total, n)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    val parts = out.map(t => (t._2, t._3, t._4, t._1.length, t._1.headOption)).collect()
+    val (total, n) = parts.foldLeft((0.0, 0L))((a, t) => (a._1 + t._2, a._2 + t._3))
+    Primal(summed.fold(parts.headOption.fold(new Array[Double](p))(_._1))(_.value),
+      if (n > 0) total / n else 0.0, out.flatMap(_._1), parts.map(_._4.toLong).sum,
+      parts.flatMap(_._5).headOption, out)
   }
 }

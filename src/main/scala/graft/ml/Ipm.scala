@@ -2,7 +2,7 @@ package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector, inv}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** §2.1 M7 (fidelity path): primal-dual Interior Point Method for the
@@ -28,7 +28,8 @@ import org.apache.spark.storage.StorageLevel
   * accumulation reading qa back in O(1) per row, and the Δα pass reuses
   * qa the same way.
   *
-  * Cost per block count (one block per input partition):
+  * [[newton]] runs the loop over given blocks; [[dual]] builds them from
+  * a DataFrame, one per input partition. Cost per block count:
   *   - one block (the m = 1 case of the paper's cost model, where the
   *     all-reduce is the identity): the whole Newton loop, p×p core solve
   *     included, runs inside the block's one task — one Spark job for the
@@ -63,12 +64,12 @@ object Ipm {
   private[ml] def blockCount(nRows: Long, numPartitions: Int): Int =
     math.max(1, math.min(numPartitions, (nRows / 50000L).toInt + 1))
 
-  /** A dual solution: per-row alphas, the iterations run and the last
-    * surrogate gap. A one-block solution is cached by the loop that
-    * built it; `release` drops that cache once the caller is done with
-    * `alphas` (which then recompute from lineage). A multi-block
-    * solution stays cached: its lineage runs through local checkpoints. */
-  private[ml] final case class Dual(alphas: RDD[(Long, Double)], iterations: Int, gap: Double,
+  /** A dual solution: the final (ids, block) pairs, the iterations run
+    * and the last surrogate gap. A one-block solution is cached by the
+    * loop that built it; `release` drops that cache (the blocks then
+    * recompute from lineage). A multi-block solution stays cached: its
+    * lineage runs through local checkpoints. */
+  private[ml] final case class Dual(blocks: RDD[(Array[Long], Block)], iterations: Int, gap: Double,
                                     cached: Option[RDD[_]]) {
     def release(): Unit = cached.foreach(_.unpersist(false))
   }
@@ -93,8 +94,8 @@ object Ipm {
   // ---- the per-block steps: the driver loop folds them across blocks
   // with treeAggregate/reduce, the one-block loop calls them in its task
 
-  /** Adds the block's Gᵀα into `acc`. */
-  private def addGTalpha(acc: Array[Double], b: Block): Array[Double] = {
+  /** Adds the block's Gᵀα (at the solution, w = Σ αᵢyᵢhᵢ) into `acc`. */
+  private[ml] def addGTalpha(acc: Array[Double], b: Block): Array[Double] = {
     val p = acc.length
     var i = 0
     while (i < b.alpha.length) {
@@ -105,7 +106,7 @@ object Ipm {
     acc
   }
 
-  private def addInto(a1: Array[Double], a2: Array[Double]): Array[Double] = {
+  private[ml] def addInto(a1: Array[Double], a2: Array[Double]): Array[Double] = {
     var j = 0; while (j < a1.length) { a1(j) += a2(j); j += 1 }; a1
   }
 
@@ -278,10 +279,10 @@ object Ipm {
             checkpointEvery: Int = 10): (RDD[(Long, Double)], Int, Double) = {
     val d = dual(data, idCol, labelCol, hCol, c, maxIter, tol, posWeight, negWeight,
       checkpointDir, checkpointEvery)
-    (d.alphas, d.iterations, d.gap)
+    (d.blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }, d.iterations, d.gap)
   }
 
-  /** [[solve]], returning the [[Dual]] so the caller can release its cache. */
+  /** [[solve]] as a [[Dual]] (releasable); one pass reads n and p. */
   private[ml] def dual(data: DataFrame, idCol: String, labelCol: String, hCol: String,
                        c: Double, maxIter: Int = 50, tol: Double = 1e-6,
                        posWeight: Double = 1.0, negWeight: Double = 1.0,
@@ -291,7 +292,6 @@ object Ipm {
     val cNeg = c * negWeight
     import org.apache.spark.sql.functions.col
     val spark = data.sparkSession
-    val sc = spark.sparkContext
     val rows: RDD[(Long, Double, Array[Double])] = data
       .select(col(idCol).cast("long"), col(labelCol).cast("double"), col(hCol))
       .rdd.map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Double](2).toArray))
@@ -307,8 +307,6 @@ object Ipm {
         }
       }
 
-    // block layout: one block per input partition; ids stay alongside so
-    // alphas can be re-keyed at the end
     val withAlpha: RDD[(Long, Double, Array[Double], Double)] = restored match {
       case None =>
         rows.map(t => (t._1, t._2, t._3, (if (t._2 > 0) cPos else cNeg) / 2.0))
@@ -316,7 +314,7 @@ object Ipm {
         rows.map(t => (t._1, t)).join(saved)
           .map { case (id, (t, a)) => (id, t._2, t._3, a) }
     }
-    var blocks: RDD[(Array[Long], Block)] = withAlpha.mapPartitions { it =>
+    val blocks: RDD[(Array[Long], Block)] = withAlpha.mapPartitions { it =>
       val buf = it.toArray
       if (buf.isEmpty) Iterator.empty
       else Iterator.single((
@@ -324,14 +322,22 @@ object Ipm {
         Block(buf.map(_._2), buf.map(t => t._3.map(v => t._2 * v)), // G = diag(y)·H
               buf.map(_._4))))
     }.persist(StorageLevel.MEMORY_AND_DISK)
-    // one pass: the block sizes (n, and the block count) and the rank p
     val sizes = blocks.map { case (_, b) => (b.alpha.length, b.h(0).length) }.collect()
     require(sizes.nonEmpty, "Ipm.solve needs at least one row")
-    val n = sizes.map(_._1.toLong).sum
-    val p = sizes.head._2
+    newton(spark, blocks, sizes.map(_._1.toLong).sum, sizes.head._2, cPos, cNeg, maxIter, tol,
+      restored.map(r => (r._1, r._2)), checkpointDir, checkpointEvery)
+  }
 
-    var s = Newton(restored.map(_._1).getOrElse(0), restored.map(_._2).getOrElse(0.0),
-      Double.MaxValue)
+  /** The Newton loop over (ids, [[Block]]) pairs, `n` rows at rank `p`, box
+    * 0 ≤ αᵢ ≤ cPos (yᵢ > 0) or cNeg, from `resumeAt` (iteration, ν) or (0, 0):
+    * in the block's task on one partition, else from the driver. */
+  private[ml] def newton(spark: SparkSession, input: RDD[(Array[Long], Block)], n: Long, p: Int,
+                         cPos: Double, cNeg: Double, maxIter: Int, tol: Double,
+                         resumeAt: Option[(Int, Double)] = None,
+                         checkpointDir: Option[String] = None, checkpointEvery: Int = 10): Dual = {
+    val sc = spark.sparkContext
+    var blocks = input
+    var s = resumeAt.fold(Newton(0, 0.0, Double.MaxValue))(r => Newton(r._1, r._2, Double.MaxValue))
 
     def checkpointIfDue(): Unit = checkpointDir.foreach { dir =>
       if (s.gap > tol && s.iter % checkpointEvery == 0 && s.iter < maxIter) {
@@ -344,10 +350,10 @@ object Ipm {
     }
 
     var cached: Option[RDD[_]] = None
-    if (sizes.length == 1) {
+    if (input.getNumPartitions == 1) {
       // the whole loop in the block's task: one job, or one per
       // `checkpointEvery` iterations when each segment ends in a dump
-      cached = Some(blocks)
+      cached = Some(input)
       while (s.iter < maxIter && s.gap > tol) {
         val s0 = s
         val until =
@@ -364,6 +370,7 @@ object Ipm {
         checkpointIfDue()
       }
     } else {
+      blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
       while (s.iter < maxIter && s.gap > tol) {
         // Gᵀα: the only pass that needs every (row × p) product before the
         // per-row dot qaᵢ = Σⱼ hᵢⱼ(Gᵀα)ⱼ is defined
@@ -417,7 +424,6 @@ object Ipm {
       }
     }
 
-    val alphas = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
-    Dual(alphas, s.iter, s.gap, cached)
+    Dual(blocks, s.iter, s.gap, cached)
   }
 }

@@ -228,24 +228,18 @@ object KernelSvmTrainer {
     val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
     // the IPM loop runs over these blocks (in one task when they are one)
     val feats = Nystrom.transform(df, vecCol, map, "__phi")
-      .coalesce(Ipm.blockCount(df.count(), df.rdd.getNumPartitions)).persist()
+      .coalesce(Ipm.blockCount(df.count(), df.rdd.getNumPartitions))
     val ipm = Ipm.dual(feats, idCol, labelCol, "__phi", c,
       maxIter = maxIter, tol = params.tol,
       posWeight = params.posWeight, negWeight = params.negWeight)
-    val withAlpha = feats
-      .join(feats.sparkSession.createDataFrame(ipm.alphas)
-        .toDF(idCol + "_a", "__alpha"), col(idCol) === col(idCol + "_a"))
-    // free SVs: strictly inside the box, whose upper bound is the
-    // per-class C when class weights are set
+    // w and b over the solution's blocks; free SVs: strictly inside the
+    // box, whose upper bound is the per-class C when class weights are set
     val eps = 1e-3 * c
-    val cCol = when(col(labelCol) > 0, c * params.posWeight)
-      .otherwise(c * params.negWeight)
-    val (w, bias) = IcfSvmTrainer.primalAndBias(withAlpha, col("__alpha"),
-      col(labelCol).cast("double"), col("__phi"), map.rank,
-      free = col("__alpha") > eps && col("__alpha") < cCol - eps)
-    feats.unpersist()
+    val kkt = IcfSvmTrainer.primal(ipm.blocks, map.rank)(_._2, free = (a, y) => a > eps &&
+      a < c * (if (y > 0) params.posWeight else params.negWeight) - eps)(_ => Array.empty[Unit])
+    kkt.cached.unpersist(false)
     ipm.release()
-    KernelSvmModel(map, w, bias)
+    KernelSvmModel(map, kkt.w, kkt.bias)
   }
 
   /** M12 (model form): one-vs-rest multiclass with ONE shared Nyström

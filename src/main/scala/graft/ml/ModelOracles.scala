@@ -91,7 +91,7 @@ object ModelOracles {
 
   /** Writes `f`'s rows to parquet at `path`, releases the factor's cache
     * and reads the rows back: the session keeps only the parquet. */
-  private[ml] def writeFactor(spark: SparkSession, path: String, f: Icf.Factor): DataFrame = {
+  private[ml] def writeFactor(spark: SparkSession, path: String, f: Icf.Factor[_]): DataFrame = {
     try f.rows.write.mode("overwrite").parquet(path) finally f.release()
     spark.read.parquet(path)
   }

@@ -31,7 +31,7 @@ object SparseIcfQuery {
       val h = Icf.factorSparse(fixture, "doc_id", "indices", "values",
         Kernel.Rbf(Gamma), Rank)
       ModelOracles.writeFactor(spark, s"${ModelOracles.modelRoot(dir)}/m16_icf_h",
-        h.copy(rows = h.rows.coalesce(1)))
+        h.copy(blocks = h.blocks.coalesce(1)))
     })
 
   def query(spark: SparkSession, dir: String): DataFrame = {

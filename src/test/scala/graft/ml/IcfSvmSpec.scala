@@ -240,7 +240,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     // row's fold) rather than wrap
     val svs = Seq((Array(1.0), 5e6), (Array(1.0), 5e6)).toDF("sv_x", "sv_coef")
     val one = Seq((1L, Array(1.0))).toDF("id", "vec")
-    val huge = IcfSvmModel(Kernel.Linear, svs, 2, 0.0, broadcastThreshold = 1)
+    val huge = IcfSvmModel(Kernel.Linear, svs, 2, 0.0, 1, broadcastThreshold = 1)
     for (m <- Seq(huge.copy(svs = svs.coalesce(1)), huge.copy(svs = svs.repartition(2)),
                   huge.copy(broadcastThreshold = 2))) {
       val err = intercept[Exception](m.predictQuantized(one, "id", "vec").collect())
@@ -255,16 +255,32 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
   test("saveText writes the psvm text format byte-for-byte") {
     val svs = Seq((Array(1.0e-5, -0.25, 3.0), 0.5)).toDF("sv_x", "sv_coef")
     val dir = java.nio.file.Files.createTempDirectory("icfsvm_golden").toString
-    IcfSvmModel(Kernel.Rbf(0.5), svs, 1, 0.125).saveText(spark, dir)
+    val (_, jobs) = jobsDuring(IcfSvmModel(Kernel.Rbf(0.5), svs, 1, 0.125, 3).saveText(spark, dir))
+    assert(jobs === 1, s"saveText submitted $jobs jobs")
     assert(spark.read.textFile(s"$dir/header").collect().toSeq === Seq(
       "svm_type c_svc", "kernel_type rbf", "gamma 0.5", "coef0 0.0", "degree 0",
       "total_sv 1", "dim 3", "rho -0.125", "SV"))
     assert(spark.read.textFile(s"$dir/sv").collect().toSeq === Seq("0.5 1:1.0E-5 2:-0.25 3:3.0"))
   }
 
+  test("saveText to a file: URI overwrites an earlier model and loads back") {
+    val dir = "file:" + java.nio.file.Files.createTempDirectory("icfsvm_save_uri")
+    val first = IcfSvmModel(Kernel.Rbf(0.25), Seq((Array(1.0, 2.0, 3.0), 0.5), (Array(0.0, 1.0, 0.0), -0.5))
+      .toDF("sv_x", "sv_coef"), 2, 0.5, 3)
+    val second = IcfSvmModel(Kernel.Linear, Seq((Array(0.25, -1.0), 1.5)).toDF("sv_x", "sv_coef"),
+      1, -0.25, 2)
+    first.saveText(spark, dir)
+    second.saveText(spark, dir)
+    val loaded = IcfSvmModel.loadText(spark, dir)
+    assert(loaded.kernel === Kernel.Linear && loaded.bias === -0.25 &&
+      loaded.numSupportVectors === 1L && loaded.dim === 2)
+    assert(loaded.svs.as[(Array[Double], Double)].collect().map { case (x, c) => (x.toSeq, c) }
+      .toSeq === Seq((Seq(0.25, -1.0), 1.5)))
+  }
+
   test("loadText reads its header from a file: URI without a Spark job") {
     val svs = Seq((Array(0.5, -1.0), 0.75), (Array(-2.0, 0.25), -1.5)).toDF("sv_x", "sv_coef")
-    val model = IcfSvmModel(Kernel.Polynomial(0.5, 1.0, 3), svs, 2, -0.375)
+    val model = IcfSvmModel(Kernel.Polynomial(0.5, 1.0, 3), svs, 2, -0.375, 2)
     val dir = java.nio.file.Files.createTempDirectory("icfsvm_uri")
     model.saveText(spark, dir.toString)
     // Hadoop's local file system writes `_SUCCESS` and `.crc` siblings;

@@ -6,8 +6,9 @@ import org.apache.spark.sql.DataFrame
 /** The ICF pivot loop and the IPM Newton loop run inside the block's
   * task on one block and from the driver on several. These specs pin
   * both to the same bits (a plain-Scala reference ICF, a golden IPM
-  * solution), bound the jobs a one-block fit submits, and check that a
-  * fit leaves no cache behind. */
+  * solution), bound the jobs a one-block fit submits, check that a fit
+  * shuffles nothing and leaves no cache behind, and pin the KKT pass
+  * (w and the bias) to a plain-Scala reference. */
 class PsvmLoopSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
@@ -177,7 +178,7 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     assert(itRes === 15 && maxDiff < 1e-6, s"resumed solve off by $maxDiff")
   }
 
-  test("job guard: one-block ICF jobs do not grow with the rank; a 2k-row fit stays under 30 jobs") {
+  test("job guard: one-block ICF jobs do not grow with the rank; a 2k-row fit takes at most 5 jobs") {
     val df = blobs(500, 6, seed = 3).persist()
     df.count()
     val (_, at4) = jobsDuring(Icf.factorize(df.coalesce(1), "id", "vec", Kernel.Rbf(0.2), rank = 4))
@@ -190,9 +191,77 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     val (model, jobs) = jobsDuring(IcfSvmTrainer.fit(train, "id", "vec", "y",
       Kernel.Rbf(1.0 / 16), rank = 16, maxIter = 8, tol = 1e-3))
     info(s"IcfSvmTrainer.fit: $jobs jobs")
+    val (_, saveJobs) = jobsDuring(model.saveText(spark,
+      java.nio.file.Files.createTempDirectory("fit_save").toString))
     model.unpersist()
     train.unpersist()
-    assert(jobs <= 30, s"$jobs jobs")
+    // the row count, the ICF loop, the IPM loop and the SV pass; the
+    // save writes the SV parts only
+    assert(jobs <= 5, s"$jobs jobs")
+    assert(saveJobs === 1, s"saveText: $saveJobs jobs")
+  }
+
+  test("a fit on 1 and on 3 blocks writes no shuffle bytes") {
+    def fitBytes(df: DataFrame, rank: Int, maxIter: Int): (Long, Long) = {
+      val (model, bytes) = shuffleBytesDuring(IcfSvmTrainer.fit(df, "id", "vec", "y",
+        Kernel.Rbf(0.25), rank = rank, maxIter = maxIter, tol = 1e-3))
+      model.unpersist()
+      (bytes, model.numSupportVectors)
+    }
+    val (oneBlock, nSv1) = fitBytes(blobs(400, 4, seed = 13).coalesce(2), rank = 8, maxIter = 6)
+    // 100k rows are three blocks of the ICF and IPM driver loops
+    val tall = spark.createDataFrame(sc.parallelize((0 until 100000).map { i =>
+      val y = if (i % 2 == 0) 1.0 else -1.0
+      (i.toLong, Array(math.sin(i * 0.37) + 0.5 * y, math.cos(i * 0.11)), y)
+    }, 3)).toDF("id", "vec", "y")
+    assert(Ipm.blockCount(100000L, 3) === 3)
+    val (threeBlocks, nSv3) = fitBytes(tall, rank = 4, maxIter = 3)
+    info(s"shuffle bytes: 1 block $oneBlock ($nSv1 SVs), 3 blocks $threeBlocks ($nSv3 SVs)")
+    assert(nSv1 > 0 && nSv3 > 0)
+    assert(oneBlock === 0L && threeBlocks === 0L)
+  }
+
+  /** w = Σ αᵢyᵢhᵢ and b = the mean of yᵢ − w·hᵢ over the free rows, in
+    * plain Scala over the collected alphas and factor rows. */
+  private def referencePrimal(alphas: Map[Long, Double], rows: Seq[(Long, Double, Array[Double])],
+                              free: (Double, Double) => Boolean): (Array[Double], Double) = {
+    val p = rows.head._3.length
+    val w = new Array[Double](p)
+    rows.foreach { case (id, y, h) => for (j <- 0 until p) w(j) += alphas(id) * y * h(j) }
+    val terms = rows.filter { case (id, y, _) => free(alphas(id), y) }
+      .map { case (_, y, h) => y - h.indices.map(j => w(j) * h(j)).sum }
+    (w, if (terms.isEmpty) 0.0 else terms.sum / terms.length)
+  }
+
+  test("block-side w and bias equal a plain-Scala recomputation on 1 and 3 blocks") {
+    val pts = points(240, 3, 240, seed = 17)
+    val ys = pts.map(t => t._1 -> (if (t._2(0) + 0.3 * t._2(1) > 0) 1.0 else -1.0)).toMap
+    val df = spark.createDataFrame(sc.parallelize(pts.map(t => (t._1, t._2, ys(t._1))), 3))
+      .toDF("id", "vec", "y")
+    val factor = Icf.factor(df, "id", "vec", Kernel.Rbf(0.4), rank = 10)
+    val rows = factor.rows.as[(Long, Seq[Double])].collect()
+      .map { case (id, h) => (id, ys(id), h.toArray) }.toSeq
+    factor.release()
+    val free = (a: Double, y: Double) => a > 1e-4 && a < 1.0 * (1 - 1e-3)
+    for (parts <- Seq(1, 3)) {
+      val frame = spark.createDataFrame(sc.parallelize(rows, parts)).toDF("id", "y", "h")
+      val dual = Ipm.dual(frame, "id", "y", "h", 1.0, maxIter = 12, tol = 1e-9)
+      val (kkt, jobsSeen) = jobsDuring(IcfSvmTrainer.primal(dual.blocks, 10)(_._2, free)(
+        _ => Array.empty[Unit]))
+      val alphas = dual.blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }.collect().toMap
+      val (w, b) = referencePrimal(alphas, rows, free)
+      kkt.cached.unpersist(false)
+      dual.release()
+      val nFree = rows.count { case (id, y, _) => free(alphas(id), y) }
+      info(f"$parts block(s): $jobsSeen jobs, $nFree free SVs, bias ${kkt.bias}%.6f vs $b%.6f")
+      assert(nFree > 0)
+      assert(jobsSeen === (if (parts == 1) 1 else 2))
+      // relative to the largest |w| component, and to |b|
+      val wScale = w.map(math.abs).max
+      assert(w.indices.forall(j => math.abs(kkt.w(j) - w(j)) <= 1e-12 * wScale),
+        s"w ${kkt.w.toSeq} vs ${w.toSeq}")
+      assert(math.abs(kkt.bias - b) <= 1e-12 * math.abs(b), s"bias ${kkt.bias} vs $b")
+    }
   }
 
   test("a fit leaves no cached RDD behind once the model is unpersisted, and still predicts") {

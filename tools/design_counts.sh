@@ -3,7 +3,8 @@
 # lines (total and per package), SparkSession.builder sites, distinct
 # env/property names read in src/main, localCheckpoint sites,
 # createTempDirectory sites, `new LinearSVC()` sites, the public scoring
-# methods of the SV model (`def predict*` in IcfSvm.scala) and the line
+# methods of the SV model (`def predict*` in IcfSvm.scala), the `join(`
+# sites of the PSVM fits (`IcfSvmTrainer` and `fitIpm`) and the line
 # count of SparkEntry.scala.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
@@ -28,4 +29,8 @@ echo "create_temp_directory_sites[main] $(count 'createTempDirectory' "$main")"
 echo "create_temp_directory_sites[test] $(count 'createTempDirectory' src/test)"
 echo "new_linear_svc_sites $(count 'new LinearSVC\(\)' "$main")"
 echo "icf_svm_scoring_modes $(count '^ *def predict' "$main/graft/ml/IcfSvm.scala")"
+fit_joins=$({ awk '/^object IcfSvmTrainer/,/^}/' "$main/graft/ml/IcfSvm.scala"
+  awk '/def fitIpm\(/ { on = 1 } on { print } on && /^  }$/ { on = 0 }' "$main/graft/ml/KernelSvm.scala"
+} | grep -c 'join(' || true)
+echo "psvm_fit_joins $fit_joins"
 echo "spark_entry_loc $(wc -l < "$main/graft/SparkEntry.scala")"
