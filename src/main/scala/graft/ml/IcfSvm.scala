@@ -32,7 +32,8 @@ import graft.functions.VectorOps
   *   - both over it: a partitioned cross join, one distributed
   *     aggregation keyed on the row id.
   * The first two are mirror images (which side is broadcast, which side
-  * streams) and share one per-term fold, [[IcfSvmModel.addTerm]]. The
+  * streams) and share one per-term fold, [[IcfSvmModel.addTerm]], fed by
+  * the [[Kernel]] block form (one vector against 4 partners per pass). The
   * modes differ only in the accumulator. The driver holds only scalars
   * (bias, counts), plus at most `broadcastThreshold` rows of whichever
   * side the first two layouts broadcast.
@@ -96,22 +97,27 @@ final case class IcfSvmModel(
     * keyed by the (unique) `idCol`.
     *
     * Cost model: exact kernel-SVM scoring is O(n·nSV) kernel evaluations
-    * (psvm pays the same); the layout sets what each one costs.
+    * (psvm pays the same); the layout sets what each one costs. In the
+    * first two layouts a pair costs one pass over the shared dimensions
+    * with 4 pairs per pass (the [[Kernel]] block form: 4 independent
+    * sums in flight, not one serial chain), and a model read by
+    * [[IcfSvmModel.loadText]] adds one scan of each SV line
+    * ([[LibSvmLine]]) per job that reads the SVs.
     * `broadcastThreshold` bounds whichever side is broadcast:
     *   - nSV ≤ threshold: the map layout, psvm's svm_predict loop. The
     *     SV side is collected once (at most threshold rows, the bound a
     *     broadcast join would collect too) as primitive arrays and
     *     broadcast; `decision` is one narrow projection over `df` that
-    *     folds the SVs through the plain-array [[Kernel]] form per row —
-    *     no cross join, aggregate, exchange or join back. The SV collect
+    *     folds the SVs per row, each row against 4 SVs per pass — no
+    *     cross join, aggregate, exchange or join back. The SV collect
     *     runs when `predict` is called; the scoring stays lazy.
     *   - nSV > threshold, n ≤ threshold: the streamed layout, its mirror
     *     image. The scored rows are collected once and broadcast; each SV
-    *     partition streams its SVs through the same per-term fold into
-    *     one partial-sum vector over those rows, and the partials
-    *     tree-reduce to the n decision sums, which are joined back onto
-    *     `df`. The SVs stay sharded: the driver never collects them. This
-    *     layout runs its jobs when `predict` is called.
+    *     partition streams its SVs, each against 4 rows per pass, through
+    *     the same per-term fold into one partial-sum vector over those
+    *     rows, and the partials tree-reduce to the n decision sums, which
+    *     are joined back onto `df`. The SVs stay sharded: the driver never
+    *     collects them. This layout runs its jobs when `predict` is called.
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
     *     (O(n·p) via [[KernelSvmModel.predict]]).
@@ -160,7 +166,8 @@ final case class IcfSvmModel(
   /** The map layout: collect the SV table once as primitive arrays,
     * broadcast it, and add `decision` = Σ coef·k(sv, x) + bias to each
     * row of `df` in one projection, folding the SVs in table order with
-    * [[IcfSvmModel.addTerm]] (exact: [[IcfSvmModel.addPicoTerm]]). A null
+    * [[IcfSvmModel.addTerm]] (exact: [[IcfSvmModel.addPicoTerm]]); the
+    * kernel values come from the block form, k(x, svᵢ) = k(svᵢ, x). A null
     * vector folds no term, so it scores `bias`. The UDF closes over the
     * `Broadcast` handle only; the table ships once per executor. */
   private def broadcastSvs(df: DataFrame, vecCol: String, exact: Boolean): DataFrame = {
@@ -173,8 +180,15 @@ final case class IcfSvmModel(
         var acc = 0L
         if (x != null) {
           val (sv, coef) = bc.value
+          val kv = new Array[Double](IcfSvmModel.SvBlock)
           var i = 0
-          while (i < sv.length) { acc = IcfSvmModel.addPicoTerm(acc, k, sv(i), coef(i), x); i += 1 }
+          while (i < sv.length) {
+            val n = math.min(kv.length, sv.length - i)
+            k(x, sv, i, n, kv)
+            var j = 0
+            while (j < n) { acc = IcfSvmModel.addPicoTerm(acc, coef(i + j), kv(j)); j += 1 }
+            i += n
+          }
         }
         acc.toDouble / IcfSvmModel.Picounits + b
       }
@@ -182,8 +196,15 @@ final case class IcfSvmModel(
         var acc = 0.0
         if (x != null) {
           val (sv, coef) = bc.value
+          val kv = new Array[Double](IcfSvmModel.SvBlock)
           var i = 0
-          while (i < sv.length) { acc = IcfSvmModel.addTerm(acc, k, sv(i), coef(i), x); i += 1 }
+          while (i < sv.length) {
+            val n = math.min(kv.length, sv.length - i)
+            k(x, sv, i, n, kv)
+            var j = 0
+            while (j < n) { acc = IcfSvmModel.addTerm(acc, coef(i + j), kv(j)); j += 1 }
+            i += n
+          }
         }
         acc + b
       }
@@ -194,7 +215,9 @@ final case class IcfSvmModel(
     * rows: broadcast them to every SV partition, fold each partition's
     * SVs into one vector of partial sums Σ coef·k(sv, xⱼ) with the map
     * layout's per-term fold, tree-reduce the partials, and return
-    * (__pid, __ksum). Rows with a null vector get no sum, so
+    * (__pid, __ksum). Each SV is evaluated against the rows with the
+    * [[Kernel]] block form, and its terms are added to every row's sum
+    * in SV order. Rows with a null vector get no sum, so
     * [[withDecision]] scores them `bias`. The float partials stay a plain
     * `Array[Double]` loop and the exact ones a `Long` one, with nothing
     * boxed per pair. */
@@ -207,26 +230,29 @@ final case class IcfSvmModel(
       else {
         val xs = spark.sparkContext.broadcast(scored.map(_.getSeq[Double](1).toArray))
         val k = kernel
-        val shards = svRows.rdd
+        val n = scored.length
+        // each partition folds its SVs one at a time against every row
         try {
-          if (exact) shards.treeAggregate(new Array[Long](scored.length))(
-              seqOp = { case (acc, (sv, coef)) =>
-                val x = xs.value
+          if (exact) svRows.rdd.mapPartitions { it =>
+              val (x, acc, kv) = (xs.value, new Array[Long](n), new Array[Double](n))
+              it.foreach { case (sv, coef) =>
+                k(sv, x, 0, n, kv)
                 var j = 0
-                while (j < x.length) { acc(j) = IcfSvmModel.addPicoTerm(acc(j), k, sv, coef, x(j)); j += 1 }
-                acc
-              },
-              combOp = { (a, b) =>
-                var j = 0; while (j < a.length) { a(j) = Math.addExact(a(j), b(j)); j += 1 }; a })
+                while (j < n) { acc(j) = IcfSvmModel.addPicoTerm(acc(j), coef, kv(j)); j += 1 }
+              }
+              Iterator.single(acc)
+            }.treeAggregate(new Array[Long](n))(
+              IcfSvmModel.addExactInto, IcfSvmModel.addExactInto)
             .map(_.toDouble / IcfSvmModel.Picounits)
-          else shards.treeAggregate(new Array[Double](scored.length))(
-              seqOp = { case (acc, (sv, coef)) =>
-                val x = xs.value
+          else svRows.rdd.mapPartitions { it =>
+              val (x, acc, kv) = (xs.value, new Array[Double](n), new Array[Double](n))
+              it.foreach { case (sv, coef) =>
+                k(sv, x, 0, n, kv)
                 var j = 0
-                while (j < x.length) { acc(j) = IcfSvmModel.addTerm(acc(j), k, sv, coef, x(j)); j += 1 }
-                acc
-              },
-              combOp = { (a, b) => var j = 0; while (j < a.length) { a(j) += b(j); j += 1 }; a })
+                while (j < n) { acc(j) = IcfSvmModel.addTerm(acc(j), coef, kv(j)); j += 1 }
+              }
+              Iterator.single(acc)
+            }.treeAggregate(new Array[Double](n))(Ipm.addInto, Ipm.addInto)
         } finally xs.destroy()
       }
     val rows = scored.indices.map(j => Row(scored(j).get(0), sums(j)))
@@ -269,23 +295,31 @@ object IcfSvmModel {
     * integer multiples of 1e-12. */
   private[ml] val Picounits = 1e12
 
+  /** SVs per [[Kernel]] block-form call in the map layout's row fold. */
+  private val SvBlock = 64
+
   /** The per-term fold of the map and streamed layouts: `acc` plus
-    * coef·k(sv, x), through the plain-array [[Kernel]] form. */
-  private[ml] def addTerm(acc: Double, k: Kernel, sv: Array[Double], coef: Double,
-                          x: Array[Double]): Double =
-    acc + coef * k(sv, x)
+    * coef·kv, where kv = k(sv, x) comes from the [[Kernel]] block form. */
+  private[ml] def addTerm(acc: Double, coef: Double, kv: Double): Double = acc + coef * kv
 
   /** [[addTerm]] in picounits: the term is floor(coef·k(sv, x)·1e12) as a
     * `Long`, computed in the cross join's column-expression order, and a
     * sum that leaves the `Long` range fails rather than wraps. */
-  private[ml] def addPicoTerm(acc: Long, k: Kernel, sv: Array[Double], coef: Double,
-                              x: Array[Double]): Long =
-    Math.addExact(acc, Math.floor(coef * k(sv, x) * Picounits).toLong)
+  private[ml] def addPicoTerm(acc: Long, coef: Double, kv: Double): Long =
+    Math.addExact(acc, Math.floor(coef * kv * Picounits).toLong)
+
+  private def addExactInto(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var j = 0; while (j < a.length) { a(j) = Math.addExact(a(j), b(j)); j += 1 }; a
+  }
 
   /** Reload a text model dir written by [[IcfSvmModel.saveText]]. The
     * header is read on the driver through the Hadoop `FileSystem` of
     * `path` (no Spark job); the SV parts are parsed distributedly — the
-    * model never touches the driver beyond the few header scalars. */
+    * model never touches the driver beyond the few header scalars. Each
+    * SV line is scanned once by [[LibSvmLine.sv]], straight into the
+    * primitive vector, with the values `String.toDouble` would give; a
+    * malformed line or an index outside [1, dim] fails the job that
+    * reads it. */
   def loadText(spark: SparkSession, path: String): IcfSvmModel = {
     import spark.implicits._
     val header = readHeader(spark, new Path(path, "header"))
@@ -296,31 +330,15 @@ object IcfSvmModel {
       header("coef0").toDouble, header("degree").toInt)
     // SV lines are `<coef> idx:val …` with 1-BASED indices and, in real
     // libsvm/psvm files, SPARSE entries (zeros omitted, indices can skip)
-    // — so each value is placed at its declared index, never positionally.
-    // Vectors are sized by the header `dim` when present (dense saveText
-    // output always writes it), else by the line's own max index. The
-    // primitive Array[Double] encodes straight to an unsafe array; a Seq
-    // would go through a boxed per-element conversion that every kernel
-    // evaluation then unboxes.
+    // — so each value is placed at its declared index, never positionally
+    // ([[LibSvmLine.sv]]). Vectors are sized by the header `dim` when
+    // present (dense saveText output always writes it), else by the
+    // line's own max index. The primitive Array[Double] encodes straight
+    // to an unsafe array; a Seq would go through a boxed per-element
+    // conversion that every kernel evaluation then unboxes.
     val headerDim = header.get("dim").map(_.toInt).getOrElse(-1)
     val svs = spark.read.textFile(s"$path/sv")
-      .map { line =>
-        val parts = line.split(' ')
-        val coef = parts(0).toDouble
-        val entries = parts.drop(1).map { t =>
-          val c = t.indexOf(':')
-          (t.substring(0, c).toInt, t.substring(c + 1).toDouble)
-        }
-        val dim = if (headerDim > 0) headerDim
-                  else entries.foldLeft(0)((m, e) => math.max(m, e._1))
-        val x = new Array[Double](dim)
-        entries.foreach { case (idx, v) =>
-          require(idx >= 1 && idx <= dim,
-            s"SV feature index $idx outside [1, $dim] (header dim $headerDim)")
-          x(idx - 1) = v
-        }
-        (x, coef)
-      }
+      .map(LibSvmLine.sv(_, headerDim))
       .toDF("sv_x", "sv_coef")
     IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble, headerDim)
   }

@@ -61,3 +61,123 @@ object LibSvmIO {
       .as("line"))
       .write.mode("overwrite").text(path)
 }
+
+/** One-pass scanner for psvm/LIBSVM text lines (`<head> idx:val …`, the
+  * SV lines of [[IcfSvmModel.loadText]]): it walks the line once and
+  * writes each value straight into the vector, with no `split`, no
+  * substring per token and no (index, value) tuple. Numbers parse bit for
+  * bit as `String.toDouble` / `String.toInt` do, and a token those reject
+  * is rejected here too.
+  */
+object LibSvmLine {
+
+  /** 1e0 … 1e22: the powers of ten a double holds exactly. */
+  private val Pow10 = Array(1e0, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6, 1e7, 1e8, 1e9, 1e10,
+    1e11, 1e12, 1e13, 1e14, 1e15, 1e16, 1e17, 1e18, 1e19, 1e20, 1e21, 1e22)
+
+  /** An SV line as (x, coef). `x(idx − 1)` holds each `idx:val` (a later
+    * entry for the same index wins); its length is `dim` when `dim > 0`,
+    * else the line's largest index. An index outside [1, length] fails
+    * with `SV feature index … outside [1, length]`. */
+  def sv(line: String, dim: Int): (Array[Double], Double) = {
+    var end = line.length
+    while (end > 0 && line.charAt(end - 1) == ' ') end -= 1   // as `split(' ')` drops them
+    val sp = line.indexOf(' ')
+    val headEnd = if (sp < 0 || sp > end) end else sp
+    val coef = double(line, 0, headEnd)
+    var x = new Array[Double](if (dim > 0) dim else 16)
+    var maxIdx = 0
+    var badIdx = 1        // the first index below 1 when sized by the line
+    var p = headEnd + 1
+    while (p < end) {
+      var q = line.indexOf(' ', p)
+      if (q < 0) q = end
+      val c = line.indexOf(':', p)
+      if (c < 0 || c >= q)
+        throw new NumberFormatException(s"malformed entry '${line.substring(p, q)}' (want idx:val)")
+      val idx = index(line, p, c)
+      val v = double(line, c + 1, q)
+      if (dim > 0) {
+        require(idx >= 1 && idx <= dim,
+          s"SV feature index $idx outside [1, $dim] (header dim $dim)")
+        x(idx - 1) = v
+      } else if (idx < 1) {
+        if (badIdx >= 1) badIdx = idx
+      } else {
+        if (idx > x.length) x = java.util.Arrays.copyOf(x, math.max(idx, 2 * x.length))
+        x(idx - 1) = v
+        maxIdx = math.max(maxIdx, idx)
+      }
+      p = q + 1
+    }
+    if (dim > 0) (x, coef)
+    else {
+      require(badIdx >= 1, s"SV feature index $badIdx outside [1, $maxIdx] (header dim $dim)")
+      (if (x.length == maxIdx) x else java.util.Arrays.copyOf(x, maxIdx), coef)
+    }
+  }
+
+  /** `s.substring(from, until).toDouble`, bit for bit. A plain decimal
+    * with at most 15 significant digits and a decimal exponent within
+    * ±22 is one IEEE multiply or divide of two exact doubles, so one
+    * correctly rounded operation (Clinger's fast path); every other token
+    * goes to `java.lang.Double.parseDouble`. */
+  def double(s: String, from: Int, until: Int): Double = {
+    var i = from
+    val neg = i < until && s.charAt(i) == '-'
+    if (i < until && (s.charAt(i) == '-' || s.charAt(i) == '+')) i += 1
+    var m = 0L; var sig = 0; var scale = 0; var digits = 0
+    var c = 0
+    while (i < until && { c = s.charAt(i) - '0'; c >= 0 && c <= 9 }) {
+      if (m != 0 || c != 0) sig += 1
+      m = m * 10 + c; digits += 1; i += 1
+      if (sig > 15) return slow(s, from, until)
+    }
+    if (i < until && s.charAt(i) == '.') {
+      i += 1
+      while (i < until && { c = s.charAt(i) - '0'; c >= 0 && c <= 9 }) {
+        if (m != 0 || c != 0) sig += 1
+        m = m * 10 + c; digits += 1; scale += 1; i += 1
+        if (sig > 15) return slow(s, from, until)
+      }
+    }
+    if (digits == 0) return slow(s, from, until)
+    var e = 0
+    if (i < until && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
+      i += 1
+      val eNeg = i < until && s.charAt(i) == '-'
+      if (i < until && (s.charAt(i) == '-' || s.charAt(i) == '+')) i += 1
+      val e0 = i
+      while (i < until && { c = s.charAt(i) - '0'; c >= 0 && c <= 9 }) {
+        e = e * 10 + c; i += 1
+        if (e > 1000) return slow(s, from, until)
+      }
+      if (i == e0) return slow(s, from, until)
+      if (eNeg) e = -e
+    }
+    if (i != until) return slow(s, from, until)
+    val e10 = e - scale
+    val v =
+      if (m == 0) 0.0
+      else if (e10 >= 0 && e10 <= 22) m.toDouble * Pow10(e10)
+      else if (e10 < 0 && e10 >= -22) m.toDouble / Pow10(-e10)
+      else return slow(s, from, until)
+    if (neg) -v else v
+  }
+
+  private def slow(s: String, from: Int, until: Int): Double =
+    java.lang.Double.parseDouble(s.substring(from, until))
+
+  /** `s.substring(from, until).toInt`: plain digits inline, anything
+    * else (a sign, an overflow, garbage) through `Integer.parseInt`. */
+  def index(s: String, from: Int, until: Int): Int = {
+    if (until - from < 1 || until - from > 9) return Integer.parseInt(s.substring(from, until))
+    var v = 0; var i = from
+    while (i < until) {
+      val c = s.charAt(i) - '0'
+      if (c < 0 || c > 9) return Integer.parseInt(s.substring(from, until))
+      v = v * 10 + c; i += 1
+    }
+    v
+  }
+}

@@ -219,6 +219,45 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     assert(streamed.columns.toSeq === df.columns.toSeq ++ Seq("decision", "prediction"))
   }
 
+  test("exact bits agree across layouts at every 4-pair tail, with a null and a short vector") {
+    // the kernels evaluate 4 pairs per pass: nSV (the map layout's
+    // partners) and the scored rows (the streamed layout's) ≡ 1, 2, 3
+    // mod 4 run each fold's tail; a short row and a short SV run the clamp
+    val rng = new scala.util.Random(5)
+    def vec(n: Int) = Array.fill(n)(rng.nextGaussian())
+    val kernels = Seq(Kernel.Linear, Kernel.Polynomial(0.3, 0.5, 2), Kernel.Rbf(0.4),
+      Kernel.Laplacian(0.25))
+    for ((nSv, nRows) <- Seq((9, 5), (10, 6), (11, 7)); k <- kernels) {
+      val table = Seq.tabulate(nSv)(i => (vec(if (i == 3) 4 else 5), rng.nextGaussian()))
+      val rows = Seq.tabulate(nRows)(i => (i.toLong, Option(vec(if (i == 1) 3 else 5)))) :+
+        (nRows.toLong, Option.empty[Array[Double]])
+      val df = rows.toDF("id", "vec")
+      val svs = table.toDF("sv_x", "sv_coef").coalesce(1)
+      val model = IcfSvmModel(k, svs, nSv, 0.375, 5)
+      val streamed = model.copy(broadcastThreshold = nSv - 1)
+      val cross = model.copy(broadcastThreshold = 2)
+      // the scalar definition: Σ floor(coef·k(sv, x)·1e12) picounits + bias
+      val want = rows.map { case (id, x) =>
+        id -> (x.fold(0L)(x => table.map { case (sv, c) =>
+          Math.floor(c * k(sv, x) * IcfSvmModel.Picounits).toLong }.sum).toDouble /
+          IcfSvmModel.Picounits + model.bias)
+      }.toMap
+      val byLayout = Seq(
+        "map" -> model.predictQuantized(df, "id", "vec"),
+        "streamed" -> streamed.predictQuantized(df, "id", "vec"),
+        "streamed, SVs in 3 partitions" ->
+          streamed.copy(svs = svs.repartition(3)).predictQuantized(df, "id", "vec"),
+        "cross" -> cross.predictQuantized(df, "id", "vec"))
+      for ((name, scored) <- byLayout) {
+        assert(bits(decisions(scored)) === bits(want), s"$k nSV $nSv rows $nRows: $name")
+      }
+      // float: on one SV partition the streamed fold adds each row's terms
+      // in the map layout's order, so the bits agree too
+      assert(bits(decisions(streamed.predict(df, "id", "vec"))) ===
+        bits(decisions(model.predict(df, "id", "vec"))), s"$k nSV $nSv rows $nRows: float")
+    }
+  }
+
   test("exact streamed layout: null vector, empty frame and Long overflow") {
     val (_, _, model, _) = regimeFit
     val streamed = model.copy(broadcastThreshold = model.numSupportVectors - 1)

@@ -44,4 +44,28 @@ class KernelFormsSpec extends SparkSpec {
     assert(mismatches.size === 0,
       s"of ${pairs.size * kernels.size * 2}; first: " + mismatches.take(5).mkString("; "))
   }
+
+  test("block forms equal the pair form bit for bit, in each call site's argument order") {
+    // one vector against n partners, lengths 1–70 (around the 4-partner
+    // passes' multiples of 4), partner counts 1–9 (so the tails after the
+    // last full pass of 4 run), and partners of other lengths (the clamp)
+    val rng = new scala.util.Random(11)
+    def vec(n: Int) = Array.fill(n)(if (rng.nextInt(5) == 0) 0.0 else rng.nextGaussian() * 1.5)
+    val mismatches = for {
+      len <- 1 to 70
+      n <- 1 to 9
+      a = vec(len)
+      bs = Array.fill(n + 2)(vec(if (rng.nextInt(4) == 0) 1 + rng.nextInt(72) else len))
+      from = rng.nextInt(3)
+      k <- kernels
+      out = Array.fill(n)(Double.NaN)
+      _ = k(a, bs, from, n, out)
+      j <- 0 until n
+      // the streamed layout evaluates k(sv, xⱼ) with the SV as `a`; the map
+      // layout k(svⱼ, x) with the row as `a`; Nyström k(x, lⱼ) with `a` = x
+      (site, pair) <- Seq("a first" -> k(a, bs(from + j)), "a second" -> k(bs(from + j), a))
+      if java.lang.Double.doubleToRawLongBits(out(j)) != java.lang.Double.doubleToRawLongBits(pair)
+    } yield s"$k len $len n $n j $j ($site): block ${out(j)} vs pair $pair"
+    assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+  }
 }
