@@ -5,9 +5,12 @@ import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
@@ -33,7 +36,9 @@ import graft.functions.VectorOps
   *     aggregation keyed on the row id.
   * The first two are mirror images (which side is broadcast, which side
   * streams) and share one per-term fold, [[IcfSvmModel.addTerm]], fed by
-  * the [[Kernel]] block form (one vector against 4 partners per pass). The
+  * the [[Kernel]] block form (one vector against 4 partners per pass), and
+  * one primitive SV table (`RDD[(Array[Double], Double)]`): the parse
+  * [[IcfSvmModel.loadText]] or the fit made, else `svs`' own rows. The
   * modes differ only in the accumulator. The driver holds only scalars
   * (bias, counts), plus at most `broadcastThreshold` rows of whichever
   * side the first two layouts broadcast.
@@ -45,7 +50,16 @@ final case class IcfSvmModel(
     bias: Double,
     dim: Int,                    // the SV vectors' length; -1 with no SV, or unknown
     broadcastThreshold: Long = 65536,
-    private[ml] val cached: Option[RDD[_]] = None) {  // the fit's SV rows
+    private[ml] val cached: Option[RDD[_]] = None,   // the fit's SV rows
+    private[ml] val parsed: Option[IcfSvmModel.SvTable] = None) {
+
+  /** The SVs with a vector and a coefficient as primitive (sv, coef) rows,
+    * the one table the map and streamed layouts read: the parse
+    * [[IcfSvmModel.loadText]] or the fit made for this `svs`, else (a model
+    * built over, or copied onto, another frame) `svs`' own internal rows,
+    * null rows dropped and both columns cast to double. */
+  private lazy val svTable: RDD[(Array[Double], Double)] =
+    parsed.filter(_.of eq svs).fold(IcfSvmModel.tableOf(svs))(_.rows)
 
   /** Persist in the psvm/libsvm-style TEXT format (reference: psvm
     * model.cc Save): a `header` part with kernel/rho metadata and
@@ -93,8 +107,10 @@ final case class IcfSvmModel(
     * usable afterwards (the DataFrame recomputes from lineage). */
   def unpersist(): Unit = cached.foreach(_.unpersist(false))
 
-  /** Adds `decision` and `prediction` (±1) columns over `vecCol`,
-    * keyed by the (unique) `idCol`.
+  /** Adds `decision` and `prediction` (±1) columns over `vecCol`, as
+    * `withColumn` does (an existing column of that name is replaced in
+    * place). `idCol` keys only the cross join of the last layout, where it
+    * must be unique; the other two score each row on its own.
     *
     * Cost model: exact kernel-SVM scoring is O(n·nSV) kernel evaluations
     * (psvm pays the same); the layout sets what each one costs. In the
@@ -112,20 +128,23 @@ final case class IcfSvmModel(
     *     cross join, aggregate, exchange or join back. The SV collect
     *     runs when `predict` is called; the scoring stays lazy.
     *   - nSV > threshold, n ≤ threshold: the streamed layout, its mirror
-    *     image. The scored rows are collected once and broadcast; each SV
-    *     partition streams its SVs, each against 4 rows per pass, through
-    *     the same per-term fold into one partial-sum vector over those
-    *     rows, and the partials tree-reduce to the n decision sums, which
-    *     are joined back onto `df`. The SVs stay sharded: the driver never
-    *     collects them. This layout runs its jobs when `predict` is called.
+    *     image. `df`'s whole rows are collected once (a probe of at most
+    *     threshold + 1 rows: the driver holds at most threshold of them)
+    *     and their vectors broadcast; each SV partition streams its SVs,
+    *     each against 4 rows per pass, through the same per-term fold into
+    *     one partial-sum vector over those rows, and the partials
+    *     tree-reduce to the n decision sums. The result is those collected
+    *     rows with their decisions, a local DataFrame: no join back, and
+    *     an action on it runs no job. The SVs stay sharded: the driver
+    *     never collects them. This layout runs its two jobs (the probe and
+    *     the fold) when `predict` is called.
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
     *     (O(n·p) via [[KernelSvmModel.predict]]).
     * All three sum the same terms and differ only in float summation
     * order (last ulps); [[predictQuantized]] removes that difference. A
     * row with a null vector scores `bias`; a vector of another length
-    * than the SVs clamps to the shorter one. `idCol` keys the join of
-    * the last two layouts; the map layout scores each row on its own. */
+    * than the SVs clamps to the shorter one. */
   def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     score(df, idCol, vecCol, exact = false)
 
@@ -147,21 +166,12 @@ final case class IcfSvmModel(
                     exact: Boolean): DataFrame =
     if (numSupportVectors <= broadcastThreshold) broadcastSvs(df, vecCol, exact)
     else {
-      val pts = points(df, idCol, vecCol)
-      val batch = pts.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
-      val scores =
-        if (batch.length > broadcastThreshold) kernelSum(pts, exact)
-        else streamSvShards(pts.schema("__pid"), batch, exact)
-      withDecision(df, idCol, scores)
+      val probe = df.select(col("*"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
+      val batch = probe.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+      if (batch.length > broadcastThreshold)
+        withDecision(df, idCol, kernelSum(points(df, idCol, vecCol), exact))
+      else streamSvShards(df, batch, exact)
     }
-
-  /** The SVs with a vector and a coefficient, as typed (sv, coef) rows. */
-  private def svRows: Dataset[(Array[Double], Double)] = {
-    val spark = svs.sparkSession
-    import spark.implicits._
-    svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
-      .select(col("sv_x"), col("sv_coef")).as[(Array[Double], Double)]
-  }
 
   /** The map layout: collect the SV table once as primitive arrays,
     * broadcast it, and add `decision` = Σ coef·k(sv, x) + bias to each
@@ -171,7 +181,7 @@ final case class IcfSvmModel(
     * vector folds no term, so it scores `bias`. The UDF closes over the
     * `Broadcast` handle only; the table ships once per executor. */
   private def broadcastSvs(df: DataFrame, vecCol: String, exact: Boolean): DataFrame = {
-    val table = svRows.collect()
+    val table = svTable.collect()
     val bc = svs.sparkSession.sparkContext.broadcast((table.map(_._1), table.map(_._2)))
     val k = kernel
     val b = bias
@@ -211,29 +221,30 @@ final case class IcfSvmModel(
     withPrediction(df.withColumn("decision", decide(VectorOps.toDoubleArray(col(vecCol)))))
   }
 
-  /** psvm's svm_predict layout over `batch`, the collected (__pid, __px)
-    * rows: broadcast them to every SV partition, fold each partition's
-    * SVs into one vector of partial sums Σ coef·k(sv, xⱼ) with the map
-    * layout's per-term fold, tree-reduce the partials, and return
-    * (__pid, __ksum). Each SV is evaluated against the rows with the
-    * [[Kernel]] block form, and its terms are added to every row's sum
-    * in SV order. Rows with a null vector get no sum, so
-    * [[withDecision]] scores them `bias`. The float partials stay a plain
+  /** psvm's svm_predict layout over `batch`, `df`'s collected rows with
+    * their converted vector (`__px`) last: broadcast the vectors to every
+    * SV partition, fold each partition's SVs into one vector of partial
+    * sums Σ coef·k(sv, xⱼ) with the map layout's per-term fold,
+    * tree-reduce the partials, and return the batch itself with
+    * `decision` = sum + bias as a local DataFrame. Each SV is evaluated
+    * against the rows with the [[Kernel]] block form, and its terms are
+    * added to every row's sum in SV order. A row with a null vector gets
+    * no sum, so it scores `bias`. The float partials stay a plain
     * `Array[Double]` loop and the exact ones a `Long` one, with nothing
     * boxed per pair. */
-  private def streamSvShards(pid: StructField, batch: Array[Row],
-                             exact: Boolean): DataFrame = {
-    val spark = svs.sparkSession
-    val scored = batch.filter(r => !r.isNullAt(1))
+  private def streamSvShards(df: DataFrame, batch: Array[Row], exact: Boolean): DataFrame = {
+    val px = df.schema.length
+    val scored = batch.indices.filter(j => !batch(j).isNullAt(px)).toArray
     val sums =
       if (scored.isEmpty) Array.emptyDoubleArray
       else {
-        val xs = spark.sparkContext.broadcast(scored.map(_.getSeq[Double](1).toArray))
+        val xs = svs.sparkSession.sparkContext.broadcast(
+          scored.map(j => batch(j).getSeq[Double](px).toArray))
         val k = kernel
         val n = scored.length
         // each partition folds its SVs one at a time against every row
         try {
-          if (exact) svRows.rdd.mapPartitions { it =>
+          if (exact) svTable.mapPartitions { it =>
               val (x, acc, kv) = (xs.value, new Array[Long](n), new Array[Double](n))
               it.foreach { case (sv, coef) =>
                 k(sv, x, 0, n, kv)
@@ -244,7 +255,7 @@ final case class IcfSvmModel(
             }.treeAggregate(new Array[Long](n))(
               IcfSvmModel.addExactInto, IcfSvmModel.addExactInto)
             .map(_.toDouble / IcfSvmModel.Picounits)
-          else svRows.rdd.mapPartitions { it =>
+          else svTable.mapPartitions { it =>
               val (x, acc, kv) = (xs.value, new Array[Double](n), new Array[Double](n))
               it.foreach { case (sv, coef) =>
                 k(sv, x, 0, n, kv)
@@ -255,8 +266,12 @@ final case class IcfSvmModel(
             }.treeAggregate(new Array[Double](n))(Ipm.addInto, Ipm.addInto)
         } finally xs.destroy()
       }
-    val rows = scored.indices.map(j => Row(scored(j).get(0), sums(j)))
-    spark.createDataFrame(rows.asJava, StructType(Seq(pid, StructField("__ksum", DoubleType))))
+    val ksum = new Array[Double](batch.length)   // 0.0: no sum
+    scored.indices.foreach(i => ksum(scored(i)) = sums(i))
+    val rows = batch.indices.map(j => Row.fromSeq(batch(j).toSeq.take(px) :+ (ksum(j) + bias)))
+    val local = df.sparkSession.createDataFrame(rows.asJava,
+      df.schema.add(StructField("__decision", DoubleType, nullable = false)))
+    withPrediction(local.withColumn("decision", col("__decision")).drop("__decision"))
   }
 
   /** The scored side as (__pid, __px: array<double>). */
@@ -276,7 +291,8 @@ final case class IcfSvmModel(
       .groupBy(col("__pid")).agg(ksum.as("__ksum"))
   }
 
-  /** Joins (__pid, __ksum) back onto `df` as `decision` = sum + bias.
+  /** The cross join's (__pid, __ksum) joined back onto `df` as `decision`
+    * = sum + bias.
     * LEFT join + coalesce: a degenerate model with zero support vectors
     * (e.g. single-class data) must still score every row (bias only),
     * not drop them all through an inner join against an empty side. */
@@ -290,6 +306,23 @@ final case class IcfSvmModel(
 }
 
 object IcfSvmModel {
+
+  /** Primitive (sv, coef) rows made for the `svs` frame `of` (by the same
+    * parse or pass), so scoring need not read them back out of `of`. */
+  private[ml] final case class SvTable(of: DataFrame, rows: RDD[(Array[Double], Double)])
+
+  /** The schema of [[loadText]]'s `svs`. */
+  private val SvSchema = StructType(Seq(
+    StructField("sv_x", ArrayType(DoubleType, containsNull = false)),
+    StructField("sv_coef", DoubleType, nullable = false)))
+
+  /** A user `svs` frame's (sv, coef) rows, read from its internal rows:
+    * rows with a null vector or coefficient dropped, both cast to double. */
+  private def tableOf(svs: DataFrame): RDD[(Array[Double], Double)] =
+    svs.filter(col("sv_x").isNotNull && col("sv_coef").isNotNull)
+      .select(col("sv_x").cast(ArrayType(DoubleType)), col("sv_coef").cast(DoubleType))
+      .queryExecution.toRdd
+      .map(r => (r.getArray(0).toDoubleArray(), r.getDouble(1)))
 
   /** Picounits per unit: [[IcfSvmModel.predictQuantized]]'s terms are
     * integer multiples of 1e-12. */
@@ -316,12 +349,12 @@ object IcfSvmModel {
     * header is read on the driver through the Hadoop `FileSystem` of
     * `path` (no Spark job); the SV parts are parsed distributedly — the
     * model never touches the driver beyond the few header scalars. Each
-    * SV line is scanned once by [[LibSvmLine.sv]], straight into the
-    * primitive vector, with the values `String.toDouble` would give; a
+    * SV line is scanned once by [[LibSvmLine.sv]], straight from the text
+    * source's rows into the model's primitive SV table, with the values
+    * `String.toDouble` would give; `svs` is a view over the same parse. A
     * malformed line or an index outside [1, dim] fails the job that
     * reads it. */
   def loadText(spark: SparkSession, path: String): IcfSvmModel = {
-    import spark.implicits._
     val header = readHeader(spark, new Path(path, "header"))
       .filter(_.contains(' '))
       .map { l => val i = l.indexOf(' '); l.substring(0, i) -> l.substring(i + 1) }
@@ -333,14 +366,16 @@ object IcfSvmModel {
     // — so each value is placed at its declared index, never positionally
     // ([[LibSvmLine.sv]]). Vectors are sized by the header `dim` when
     // present (dense saveText output always writes it), else by the
-    // line's own max index. The primitive Array[Double] encodes straight
-    // to an unsafe array; a Seq would go through a boxed per-element
-    // conversion that every kernel evaluation then unboxes.
+    // line's own max index. `svs` copies each primitive vector straight
+    // into an unsafe array, with no boxed per-element conversion.
     val headerDim = header.get("dim").map(_.toInt).getOrElse(-1)
-    val svs = spark.read.textFile(s"$path/sv")
-      .map(LibSvmLine.sv(_, headerDim))
-      .toDF("sv_x", "sv_coef")
-    IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble, headerDim)
+    val table = spark.read.text(s"$path/sv").queryExecution.toRdd
+      .map(r => LibSvmLine.sv(r.getUTF8String(0).toString, headerDim))
+    val svs = GraftShim.internalCreateDataFrame(spark,
+      table.map { case (x, coef) => InternalRow(UnsafeArrayData.fromPrimitiveArray(x), coef) },
+      SvSchema)
+    IcfSvmModel(kernel, svs, header("total_sv").toLong, -header("rho").toDouble, headerDim,
+      parsed = Some(SvTable(svs, table)))
   }
 
   /** The lines of the text part files in `dir`, skipping the `_`- and
@@ -405,7 +440,8 @@ object IcfSvmTrainer {
     icf.release()
     ipm.release()
     IcfSvmModel(kernel, svs, kkt.count, kkt.bias, kkt.first.fold(-1)(_._2.length),
-      cached = Some(kkt.cached))
+      cached = Some(kkt.cached),
+      parsed = Some(IcfSvmModel.SvTable(svs, kkt.table.map(t => (t._2, t._3)))))
   }
 
   /** w, the bias, and the rows `emit` made (cached), their count and first row. */

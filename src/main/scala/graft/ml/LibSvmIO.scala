@@ -1,23 +1,61 @@
 package graft.ml
 
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftShim
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** §2.1 M1: LIBSVM text format I/O (reference: psvm document.cc —
   * `label idx:val idx:val …`, 1-based sparse indices).
   *
-  * Reading uses Spark's built-in libsvm source (splittable, distributed);
-  * writing re-serializes with column algebra only.
+  * Reading scans Spark's splittable text source once per pass straight
+  * into primitive rows; writing re-serializes with column algebra only.
   */
 object LibSvmIO {
 
-  /** Read → (label: double, features: array<double> dense). */
+  /** What [[read]] returns: the schema of Spark's libsvm source with its
+    * `features` vectors converted to arrays. */
+  private val ReadSchema = StructType(Seq(
+    StructField("label", DoubleType, nullable = true),
+    StructField("features", ArrayType(DoubleType, containsNull = false), nullable = false)))
+
+  /** Read → (label: double, features: array<double> dense), the rows,
+    * partitions, order and bits of Spark's libsvm source with its vectors
+    * converted to arrays: lines are trimmed, blank and `#` lines skipped,
+    * indices must ascend within [1, dim], a `-0` value reads as `+0.0`
+    * (the source's sparse vectors drop explicit zeros), and an `i:v:w`
+    * token reads as `v` ([[LibSvmLine.point]]). The vectors have
+    * `numFeatures` entries; without it (≤ 0) one index-only job over the
+    * text sizes them by the largest last index (at least 1), and empty
+    * input fails that job. Each line is then parsed once per action, into
+    * an `UnsafeRow` of the label and an `UnsafeArrayData`, with no
+    * `VectorUDT` and no encoder on the way. */
   def read(spark: SparkSession, path: String, numFeatures: Int = -1): DataFrame = {
-    val base = spark.read.format("libsvm")
-    val df = (if (numFeatures > 0) base.option("numFeatures", numFeatures.toString)
-              else base).load(path)
-    df.select(col("label"), vector_to_array(col("features")).as("features"))
+    val lines = spark.read.text(path).queryExecution.toRdd
+      .map(_.getUTF8String(0).toString.trim).filter(LibSvmLine.isData)
+    val dim =
+      if (numFeatures > 0) numFeatures
+      else math.max(1, lines.map(LibSvmLine.lastIndex).reduce(math.max))
+    val rows = lines.mapPartitions[InternalRow] { it =>
+      val x = new Array[Double](dim)
+      val row = new UnsafeRowWriter(2, 8 * (1 + (dim + 63) / 64 + dim))
+      val arr = new UnsafeArrayWriter(row, 8)
+      it.map { l =>
+        java.util.Arrays.fill(x, 0.0)
+        val label = LibSvmLine.point(l, x)
+        row.reset(); row.zeroOutNullBytes()
+        row.write(0, label)
+        val start = row.cursor()
+        arr.initialize(dim)
+        var i = 0
+        while (i < dim) { arr.write(i, x(i)); i += 1 }
+        row.setOffsetAndSizeFromPreviousCursor(1, start)
+        row.getRow
+      }
+    }
+    GraftShim.internalCreateDataFrame(spark, rows, ReadSchema)
   }
 
   /** Read WITHOUT densifying → (label: double, indices: array<int>
@@ -116,6 +154,64 @@ object LibSvmLine {
       (if (x.length == maxIdx) x else java.util.Arrays.copyOf(x, maxIdx), coef)
     }
   }
+
+  /** Whether a trimmed LIBSVM line holds a row: not blank, not a `#` comment. */
+  def isData(line: String): Boolean = line.nonEmpty && line.charAt(0) != '#'
+
+  /** A trimmed LIBSVM data line (`label idx:val …`) as Spark's libsvm
+    * source reads it into a dense vector: `x` (all zeros on entry, its
+    * length the feature count) gets each non-zero value at its 0-based
+    * index, and the label is returned. Tokens split on single spaces
+    * (runs of spaces are skipped) and `idx:val` on the first two colons,
+    * so `1:2:3` reads as 2; indices must ascend strictly and lie in
+    * [1, x.length]; a zero (or `-0`) value leaves `+0.0`, as the source's
+    * sparse vectors drop explicit zeros. Numbers parse as `String.toDouble`
+    * / `String.toInt`, and a token those (or the source) reject fails. */
+  def point(line: String, x: Array[Double]): Double = {
+    val end = line.length
+    val sp = line.indexOf(' ')
+    val headEnd = if (sp < 0) end else sp
+    val label = double(line, 0, headEnd)
+    var prev = -1
+    var p = headEnd + 1
+    while (p < end) {
+      var q = line.indexOf(' ', p)
+      if (q < 0) q = end
+      if (q > p) {
+        val c = line.indexOf(':', p)
+        if (c < 0 || c >= q) malformed(line, p, q)
+        var v = line.indexOf(':', c + 1)   // a second colon ends the value
+        if (v < 0 || v > q) v = q
+        if (v == c + 1) malformed(line, p, q)
+        val i = index(line, p, c) - 1
+        require(i > prev, "indices should be one-based and in ascending order; " +
+          s"found current=$i, previous=$prev; line=\"$line\"")
+        require(i < x.length, s"index ${i + 1} above the feature count ${x.length}; line=\"$line\"")
+        val d = double(line, c + 1, v)
+        if (d != 0.0) x(i) = d
+        prev = i
+      }
+      p = q + 1
+    }
+    label
+  }
+
+  /** The 1-based index of a trimmed LIBSVM data line's last `idx:val`
+    * token, 0 for a label-only line: all that sizing the vectors needs,
+    * read without parsing a value. [[point]] checks the rest. */
+  def lastIndex(line: String): Int = {
+    val sp = line.lastIndexOf(' ')
+    if (sp < 0) 0
+    else {
+      val c = line.indexOf(':', sp + 1)
+      if (c < 0) malformed(line, sp + 1, line.length)
+      index(line, sp + 1, c)
+    }
+  }
+
+  private def malformed(line: String, from: Int, until: Int): Nothing =
+    throw new NumberFormatException(
+      s"malformed entry '${line.substring(from, until)}' (want idx:val) in line \"$line\"")
 
   /** `s.substring(from, until).toDouble`, bit for bit. A plain decimal
     * with at most 15 significant digits and a decimal exponent within

@@ -29,17 +29,21 @@ object MlQueries {
 
   /** m7: LIBSVM text round-trip (reference: psvm document.cc reader) —
     * embeddings are written as `label idx:val …` lines, read back through
-    * the distributed libsvm source, and summarized; the oracle computes
+    * the distributed LIBSVM reader, and summarized; the oracle computes
     * the same summary straight from the parquet table, so any
-    * serialization loss would hash-mismatch. */
+    * serialization loss would hash-mismatch. The read is sized by the
+    * embedding width, so it skips its size pass over the text (the
+    * padding zeros leave the feature sums as they are). */
   def libsvmRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
+    val embeddings = Tables.embeddings(spark, dir)
+    val e = embeddings
       .select($"vec_id", $"label".cast("double").as("label"),
               VectorOps.toDoubleArray($"embedding").as("vec"))
+    val dim = embeddings.agg(max(size($"embedding"))).head().getInt(0)
     val tmp = java.nio.file.Files.createTempDirectory("graft_libsvm").toString
     LibSvmIO.write(e, "label", "vec", tmp)
-    val out = LibSvmIO.read(spark, tmp)
+    val out = LibSvmIO.read(spark, tmp, numFeatures = dim)
       .groupBy($"label")
       .agg(count(lit(1)).as("n_rows"),
            round(sum(aggregate($"features", lit(0.0), (acc, x) => acc + x)), 6)

@@ -147,6 +147,56 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     }
   }
 
+  test("predict streamed layout: the collected rows come back scored, in order, with no join") {
+    val (_, _, model, plain) = regimeFit
+    val streamed = model.copy(broadcastThreshold = model.numSupportVectors - 1)
+    val (a, b) = (Array(1.5, -1.5), Array(-0.5, 2.0))
+    // duplicate ids, a null vector, and an existing `decision` column
+    val in = Seq((7L, 0.25, Option(a), "p"), (7L, 0.5, Option(b), "q"),
+                 (8L, 0.75, Option.empty[Array[Double]], "r"), (3L, 1.0, Option(a), "s"))
+      .toDF("id", "decision", "vec", "tag")
+    for (exact <- Seq(false, true)) {
+      def scored(m: IcfSvmModel) =
+        if (exact) m.predictQuantized(in, "id", "vec") else m.predict(in, "id", "vec")
+      val got = scored(streamed)
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+      assert(got.columns.toSeq === Seq("id", "decision", "vec", "tag", "prediction"),
+        "decision is replaced in place, prediction appended")
+      // the map layout scores each row of `in` in place: the same rows,
+      // order and (one SV partition) bits
+      val rows = got.collect()
+      val mapped = scored(model).collect()
+      assert(rows.map(r => (r.getLong(0), r.getString(3))).toSeq ===
+        mapped.map(r => (r.getLong(0), r.getString(3))).toSeq)
+      assert(rows.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toSeq ===
+        mapped.map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toSeq, s"exact $exact")
+      assert(rows.map(_.getDouble(4)).toSeq === mapped.map(_.getDouble(4)).toSeq)
+      assert(rows(2).getDouble(1) === model.bias, "a null vector scores bias")
+      for (j <- Seq(0, 1, 3)) {
+        val x = rows(j).getSeq[Double](2)
+        assert(math.abs(rows(j).getDouble(1) - plain(x)) < 1e-9, s"row $j: duplicate ids score per row")
+      }
+    }
+  }
+
+  test("predict streamed layout: 2 jobs when called (the probe and the fold), none to collect") {
+    val (_, df, model, _) = regimeFit
+    val nSv = model.numSupportVectors
+    // one partition, not a local relation: the probe is one job
+    val few = spark.createDataFrame(
+      spark.sparkContext.parallelize(df.filter($"id" < nSv - 1).collect().toSeq, 1), df.schema)
+    val streamed = model.copy(broadcastThreshold = nSv - 1)
+    for (exact <- Seq(false, true)) {
+      val (scored, jobs) = jobsDuring(
+        if (exact) streamed.predictQuantized(few, "id", "vec") else streamed.predict(few, "id", "vec"))
+      assert(jobs === 2, s"exact $exact: predict submitted $jobs jobs")
+      val (rows, none) = jobsDuring(scored.select($"id", $"decision", $"prediction").collect())
+      assert(none === 0, s"exact $exact: collecting the scores submitted $none jobs")
+      assert(rows.length === nSv - 1)
+    }
+  }
+
   test("predict map layout: duplicate ids are scored per row, and a predict takes at most 2 jobs") {
     val (_, df, model, plain) = regimeFit
     val a = Array(1.5, -1.5)
@@ -265,7 +315,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
       .toDF("id", "vec")
     val got = decisions(streamed.predictQuantized(withNull, "id", "vec"))
     assert(got.keySet === Set(1000L, 1001L))
-    assert(got(1000L) === model.bias, "a null vector must score bias (LEFT join + coalesce)")
+    assert(got(1000L) === model.bias, "a null vector must score bias")
     val mapped = decisions(model.predictQuantized(withNull, "id", "vec"))
     assert(bits(mapped)(1000L) === java.lang.Double.doubleToRawLongBits(model.bias),
       "map layout: a null vector must score bias")

@@ -4,8 +4,9 @@
 # env/property names read in src/main, localCheckpoint sites,
 # createTempDirectory sites, `new LinearSVC()` sites, the public scoring
 # methods of the SV model (`def predict*` in IcfSvm.scala), the `join(`
-# sites of the PSVM fits (`IcfSvmTrainer` and `fitIpm`) and the line
-# count of SparkEntry.scala.
+# sites of the PSVM fits (`IcfSvmTrainer` and `fitIpm`), the line
+# count of SparkEntry.scala, the reads through Spark's `libsvm` source in
+# src/main, and the typed-Dataset (`.as[`) sites of IcfSvm.scala.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -34,3 +35,5 @@ fit_joins=$({ awk '/^object IcfSvmTrainer/,/^}/' "$main/graft/ml/IcfSvm.scala"
 } | grep -c 'join(' || true)
 echo "psvm_fit_joins $fit_joins"
 echo "spark_entry_loc $(wc -l < "$main/graft/SparkEntry.scala")"
+echo "libsvm_source_sites $(count 'format\("libsvm"\)' "$main")"
+echo "svm_typed_dataset_sites $(count '\.as\[' "$main/graft/ml/IcfSvm.scala")"
