@@ -36,8 +36,9 @@ import graft.functions.VectorOps
   *     aggregation keyed on the row id.
   * The first two are mirror images (which side is broadcast, which side
   * streams) and share one per-term fold, [[IcfSvmModel.addTerm]], fed by
-  * the [[Kernel]] block form (one vector against 4 partners per pass), and
-  * one primitive SV table (`RDD[(Array[Double], Double)]`): the parse
+  * the [[Kernel]] panel form (one vector against a dim-major table of
+  * whichever side is broadcast), and one primitive SV table
+  * (`RDD[(Array[Double], Double)]`): the parse
   * [[IcfSvmModel.loadText]] or the fit made, else `svs`' own rows. The
   * modes differ only in the accumulator. The driver holds only scalars
   * (bias, counts), plus at most `broadcastThreshold` rows of whichever
@@ -114,30 +115,31 @@ final case class IcfSvmModel(
     *
     * Cost model: exact kernel-SVM scoring is O(n·nSV) kernel evaluations
     * (psvm pays the same); the layout sets what each one costs. In the
-    * first two layouts a pair costs one pass over the shared dimensions
-    * with 4 pairs per pass (the [[Kernel]] block form: 4 independent
-    * sums in flight, not one serial chain), and a model read by
-    * [[IcfSvmModel.loadText]] adds one scan of each SV line
-    * ([[LibSvmLine]]) per job that reads the SVs.
+    * first two layouts a pair costs one step of a vectorized loop per
+    * shared dimension (the [[Kernel]] panel form: one vector against a
+    * dim-major table, every pair's sum in flight at once, not one serial
+    * chain), and a model read by [[IcfSvmModel.loadText]] adds one scan
+    * of each SV line ([[LibSvmLine]]) per job that reads the SVs.
     * `broadcastThreshold` bounds whichever side is broadcast:
     *   - nSV ≤ threshold: the map layout, psvm's svm_predict loop. The
     *     SV side is collected once (at most threshold rows, the bound a
-    *     broadcast join would collect too) as primitive arrays and
-    *     broadcast; `decision` is one narrow projection over `df` that
-    *     folds the SVs per row, each row against 4 SVs per pass — no
+    *     broadcast join would collect too) and broadcast as panels of 64
+    *     SVs; `decision` is one narrow projection over `df` that folds
+    *     the SVs per row, each row against one panel at a time — no
     *     cross join, aggregate, exchange or join back. The SV collect
     *     runs when `predict` is called; the scoring stays lazy.
     *   - nSV > threshold, n ≤ threshold: the streamed layout, its mirror
     *     image. `df`'s whole rows are collected once (a probe of at most
     *     threshold + 1 rows: the driver holds at most threshold of them)
-    *     and their vectors broadcast; each SV partition streams its SVs,
-    *     each against 4 rows per pass, through the same per-term fold into
-    *     one partial-sum vector over those rows, and the partials
-    *     tree-reduce to the n decision sums. The result is those collected
-    *     rows with their decisions, a local DataFrame: no join back, and
-    *     an action on it runs no job. The SVs stay sharded: the driver
-    *     never collects them. This layout runs its two jobs (the probe and
-    *     the fold) when `predict` is called.
+    *     and their vectors broadcast as one panel; each SV partition
+    *     streams its SVs, each against the whole panel, through the same
+    *     per-term fold into one partial-sum vector over those rows, and
+    *     the driver adds the partials in partition order into the n
+    *     decision sums (the same bits on every run). The result is those
+    *     collected rows with their decisions, a local DataFrame: no join
+    *     back, and an action on it runs no job. The SVs stay sharded: the
+    *     driver never collects them. This layout runs its two jobs (the
+    *     probe and the fold) when `predict` is called.
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
     *     (O(n·p) via [[KernelSvmModel.predict]]).
@@ -174,30 +176,34 @@ final case class IcfSvmModel(
     }
 
   /** The map layout: collect the SV table once as primitive arrays,
-    * broadcast it, and add `decision` = Σ coef·k(sv, x) + bias to each
-    * row of `df` in one projection, folding the SVs in table order with
-    * [[IcfSvmModel.addTerm]] (exact: [[IcfSvmModel.addPicoTerm]]); the
-    * kernel values come from the block form, k(x, svᵢ) = k(svᵢ, x). A null
-    * vector folds no term, so it scores `bias`. The UDF closes over the
-    * `Broadcast` handle only; the table ships once per executor. */
+    * broadcast it as [[Kernel.Panel]]s of [[IcfSvmModel.SvBlock]] SVs (the
+    * broadcast's only copy of the SV values), and add `decision` =
+    * Σ coef·k(sv, x) + bias to each row of `df` in one projection, folding
+    * the SVs in table order with [[IcfSvmModel.addTerm]] (exact:
+    * [[IcfSvmModel.addPicoTerm]]); the kernel values come from the panel
+    * form, k(x, svᵢ) = k(svᵢ, x). A null vector folds no term, so it
+    * scores `bias`. The UDF closes over the `Broadcast` handle only; the
+    * panels ship once per executor. */
   private def broadcastSvs(df: DataFrame, vecCol: String, exact: Boolean): DataFrame = {
     val table = svTable.collect()
-    val bc = svs.sparkSession.sparkContext.broadcast((table.map(_._1), table.map(_._2)))
+    val bc = svs.sparkSession.sparkContext.broadcast((
+      table.grouped(IcfSvmModel.SvBlock).map(c => Kernel.Panel(c.map(_._1))).toArray,
+      table.map(_._2)))
     val k = kernel
     val b = bias
     val decide =
       if (exact) udf { (x: Array[Double]) =>
         var acc = 0L
         if (x != null) {
-          val (sv, coef) = bc.value
+          val (panels, coef) = bc.value
           val kv = new Array[Double](IcfSvmModel.SvBlock)
-          var i = 0
-          while (i < sv.length) {
-            val n = math.min(kv.length, sv.length - i)
-            k(x, sv, i, n, kv)
+          var i = 0; var c = 0
+          while (c < panels.length) {
+            val p = panels(c)
+            k(x, p, kv)
             var j = 0
-            while (j < n) { acc = IcfSvmModel.addPicoTerm(acc, coef(i + j), kv(j)); j += 1 }
-            i += n
+            while (j < p.n) { acc = IcfSvmModel.addPicoTerm(acc, coef(i + j), kv(j)); j += 1 }
+            i += p.n; c += 1
           }
         }
         acc.toDouble / IcfSvmModel.Picounits + b
@@ -205,15 +211,15 @@ final case class IcfSvmModel(
       else udf { (x: Array[Double]) =>
         var acc = 0.0
         if (x != null) {
-          val (sv, coef) = bc.value
+          val (panels, coef) = bc.value
           val kv = new Array[Double](IcfSvmModel.SvBlock)
-          var i = 0
-          while (i < sv.length) {
-            val n = math.min(kv.length, sv.length - i)
-            k(x, sv, i, n, kv)
+          var i = 0; var c = 0
+          while (c < panels.length) {
+            val p = panels(c)
+            k(x, p, kv)
             var j = 0
-            while (j < n) { acc = IcfSvmModel.addTerm(acc, coef(i + j), kv(j)); j += 1 }
-            i += n
+            while (j < p.n) { acc = IcfSvmModel.addTerm(acc, coef(i + j), kv(j)); j += 1 }
+            i += p.n; c += 1
           }
         }
         acc + b
@@ -223,13 +229,15 @@ final case class IcfSvmModel(
 
   /** psvm's svm_predict layout over `batch`, `df`'s collected rows with
     * their converted vector (`__px`) last: broadcast the vectors to every
-    * SV partition, fold each partition's SVs into one vector of partial
-    * sums Σ coef·k(sv, xⱼ) with the map layout's per-term fold,
-    * tree-reduce the partials, and return the batch itself with
-    * `decision` = sum + bias as a local DataFrame. Each SV is evaluated
-    * against the rows with the [[Kernel]] block form, and its terms are
-    * added to every row's sum in SV order. A row with a null vector gets
-    * no sum, so it scores `bias`. The float partials stay a plain
+    * SV partition as one [[Kernel.Panel]], fold each partition's SVs into
+    * one vector of partial sums Σ coef·k(sv, xⱼ) with the map layout's
+    * per-term fold, collect the partials and add them on the driver in
+    * partition order (not in task-completion order, as a `fold` would:
+    * the float sums keep their bits from run to run), and return the
+    * batch itself with `decision` = sum + bias as a local DataFrame. Each
+    * SV is evaluated against the rows with the panel form, and its terms
+    * are added to every row's sum in SV order. A row with a null vector
+    * gets no sum, so it scores `bias`. The float partials stay a plain
     * `Array[Double]` loop and the exact ones a `Long` one, with nothing
     * boxed per pair. */
   private def streamSvShards(df: DataFrame, batch: Array[Row], exact: Boolean): DataFrame = {
@@ -239,7 +247,7 @@ final case class IcfSvmModel(
       if (scored.isEmpty) Array.emptyDoubleArray
       else {
         val xs = svs.sparkSession.sparkContext.broadcast(
-          scored.map(j => batch(j).getSeq[Double](px).toArray))
+          Kernel.Panel(scored.map(j => batch(j).getSeq[Double](px).toArray)))
         val k = kernel
         val n = scored.length
         // each partition folds its SVs one at a time against every row
@@ -247,23 +255,22 @@ final case class IcfSvmModel(
           if (exact) svTable.mapPartitions { it =>
               val (x, acc, kv) = (xs.value, new Array[Long](n), new Array[Double](n))
               it.foreach { case (sv, coef) =>
-                k(sv, x, 0, n, kv)
+                k(sv, x, kv)
                 var j = 0
                 while (j < n) { acc(j) = IcfSvmModel.addPicoTerm(acc(j), coef, kv(j)); j += 1 }
               }
               Iterator.single(acc)
-            }.treeAggregate(new Array[Long](n))(
-              IcfSvmModel.addExactInto, IcfSvmModel.addExactInto)
+            }.collect().foldLeft(new Array[Long](n))(IcfSvmModel.addExactInto)
             .map(_.toDouble / IcfSvmModel.Picounits)
           else svTable.mapPartitions { it =>
               val (x, acc, kv) = (xs.value, new Array[Double](n), new Array[Double](n))
               it.foreach { case (sv, coef) =>
-                k(sv, x, 0, n, kv)
+                k(sv, x, kv)
                 var j = 0
                 while (j < n) { acc(j) = IcfSvmModel.addTerm(acc(j), coef, kv(j)); j += 1 }
               }
               Iterator.single(acc)
-            }.treeAggregate(new Array[Double](n))(Ipm.addInto, Ipm.addInto)
+            }.collect().foldLeft(new Array[Double](n))(Ipm.addInto)
         } finally xs.destroy()
       }
     val ksum = new Array[Double](batch.length)   // 0.0: no sum
@@ -328,11 +335,11 @@ object IcfSvmModel {
     * integer multiples of 1e-12. */
   private[ml] val Picounits = 1e12
 
-  /** SVs per [[Kernel]] block-form call in the map layout's row fold. */
+  /** SVs per [[Kernel.Panel]] in the map layout's broadcast. */
   private val SvBlock = 64
 
   /** The per-term fold of the map and streamed layouts: `acc` plus
-    * coef·kv, where kv = k(sv, x) comes from the [[Kernel]] block form. */
+    * coef·kv, where kv = k(sv, x) comes from the [[Kernel]] panel form. */
   private[ml] def addTerm(acc: Double, coef: Double, kv: Double): Double = acc + coef * kv
 
   /** [[addTerm]] in picounits: the term is floor(coef·k(sv, x)·1e12) as a
@@ -350,7 +357,7 @@ object IcfSvmModel {
     * `path` (no Spark job); the SV parts are parsed distributedly — the
     * model never touches the driver beyond the few header scalars. Each
     * SV line is scanned once by [[LibSvmLine.sv]], straight from the text
-    * source's rows into the model's primitive SV table, with the values
+    * source's row bytes into the model's primitive SV table, with the values
     * `String.toDouble` would give; `svs` is a view over the same parse. A
     * malformed line or an index outside [1, dim] fails the job that
     * reads it. */
@@ -370,7 +377,7 @@ object IcfSvmModel {
     // into an unsafe array, with no boxed per-element conversion.
     val headerDim = header.get("dim").map(_.toInt).getOrElse(-1)
     val table = spark.read.text(s"$path/sv").queryExecution.toRdd
-      .map(r => LibSvmLine.sv(r.getUTF8String(0).toString, headerDim))
+      .map(r => LibSvmLine.sv(r.getUTF8String(0), headerDim))
     val svs = GraftShim.internalCreateDataFrame(spark,
       table.map { case (x, coef) => InternalRow(UnsafeArrayData.fromPrimitiveArray(x), coef) },
       SvSchema)

@@ -2,7 +2,8 @@ package graft.ml
 
 import org.apache.spark.ml.classification.LinearSVC
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField}
 
@@ -293,28 +294,44 @@ object KernelSvmTrainer {
 object SvmEvaluator {
 
   /** One-row DataFrame: tp/fp/tn/fn + accuracy/precision/recall/f1.
-    * Expects ±1 in both columns. */
+    * Expects ±1 in both columns. The four counts are `sum`s of one
+    * projection of indicator columns. When that projection's optimized
+    * plan is a `LocalRelation` (a `scored` frame held on the driver, such
+    * as the streamed layout's result), Spark's `ConvertToLocalRelation`
+    * has evaluated it on the driver — the same SQL semantics for nulls,
+    * NaN and types — and the driver adds the indicators up, so neither
+    * this nor an action on the result runs a job; otherwise the counts
+    * are one aggregate over `scored`. */
   def evaluate(scored: DataFrame, labelCol: String,
                predictionCol: String = "prediction"): DataFrame = {
     val y = col(labelCol); val p = col(predictionCol)
-    scored.agg(
-      sum(when(y > 0 && p > 0, 1L).otherwise(0L)).as("tp"),
-      sum(when(y <= 0 && p > 0, 1L).otherwise(0L)).as("fp"),
-      sum(when(y <= 0 && p <= 0, 1L).otherwise(0L)).as("tn"),
-      sum(when(y > 0 && p <= 0, 1L).otherwise(0L)).as("fn"))
+    val flags = scored.select(
+      when(y > 0 && p > 0, 1L).otherwise(0L).as("tp"),
+      when(y <= 0 && p > 0, 1L).otherwise(0L).as("fp"),
+      when(y <= 0 && p <= 0, 1L).otherwise(0L).as("tn"),
+      when(y > 0 && p <= 0, 1L).otherwise(0L).as("fn"))
+    val agg = flags.agg(sum("tp").as("tp"), sum("fp").as("fp"), sum("tn").as("tn"),
+      sum("fn").as("fn"))
+    val counts = flags.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val rows = flags.collect()
+        // `sum` over no rows is null
+        val sums = Seq.tabulate(4)(i => if (rows.isEmpty) null else rows.map(_.getLong(i)).sum)
+        scored.sparkSession.createDataFrame(java.util.List.of(Row.fromSeq(sums)), agg.schema)
+      case _ => agg
+    }
     // ANSI mode errors on ANY zero divisor (even double); degenerate
     // models (all-one-class predictions) make these denominators zero,
     // so every ratio is guarded and defaults to 0.0
-    .withColumn("accuracy", round((col("tp") + col("tn")).cast("double") /
-      (col("tp") + col("tn") + col("fp") + col("fn")).cast("double"), 6))
-    .withColumn("precision", round(when(col("tp") + col("fp") > 0,
-      col("tp").cast("double") / (col("tp") + col("fp")).cast("double"))
-      .otherwise(0.0), 6))
-    .withColumn("recall", round(when(col("tp") + col("fn") > 0,
-      col("tp").cast("double") / (col("tp") + col("fn")).cast("double"))
-      .otherwise(0.0), 6))
-    .withColumn("f1", round(when(col("precision") + col("recall") > 0,
-      lit(2.0) * col("precision") * col("recall") /
-        (col("precision") + col("recall"))).otherwise(0.0), 6))
+    val (tp, fp, tn, fn) = (col("tp"), col("fp"), col("tn"), col("fn"))
+    def ratio(num: Column, den: Column): Column =
+      round(when(den > 0, num.cast("double") / den.cast("double")).otherwise(0.0), 6)
+    val precision = ratio(tp, tp + fp)
+    val recall = ratio(tp, tp + fn)
+    counts.select(tp, fp, tn, fn,
+      round((tp + tn).cast("double") / (tp + tn + fp + fn).cast("double"), 6).as("accuracy"),
+      precision.as("precision"), recall.as("recall"),
+      round(when(precision + recall > 0,
+        lit(2.0) * precision * recall / (precision + recall)).otherwise(0.0), 6).as("f1"))
   }
 }

@@ -18,17 +18,16 @@ sealed trait Kernel extends Serializable {
   /** Driver/executor-local form over raw arrays (same math, including
     * the column forms' clamp to the shorter array). */
   def apply(a: Array[Double], b: Array[Double]): Double
-  /** Block form, one vector against many: `out(j)` = k(a, bs(from + j))
-    * for j in [0, n), bit for bit the pair form's value. Partners are
-    * taken 4 per pass over `a`: each pair keeps its own accumulator,
-    * summed in the pair form's dimension order and clamped to the shorter
-    * array, so the 4 sums differ from the pair form's only in running
-    * side by side (4 independent additions in flight instead of one
-    * serial chain). All four kernels are symmetric bit for bit (a·b =
-    * b·a, and a − b = −(b − a) exactly under round-to-nearest), so `a`
-    * may stand on either side of the pair form it replaces. */
-  def apply(a: Array[Double], bs: Array[Array[Double]], from: Int, n: Int,
-            out: Array[Double]): Unit
+  /** Panel form, one vector against a fixed table: `out(j)` = k(a, pⱼ)
+    * for each partner j in [0, p.n), bit for bit the pair form's value.
+    * The table is dim-major, so each dimension of `a` meets every
+    * partner in one straight loop over j (which C2 vectorizes); each
+    * pair still sums in the pair form's dimension order, from 0.0,
+    * clamped to the shorter array, and gets the same `StrictMath`
+    * finish. All four kernels are symmetric bit for bit (a·b = b·a, and
+    * a − b = −(b − a) exactly under round-to-nearest), so `a` may stand
+    * on either side of the pair form it replaces. */
+  def apply(a: Array[Double], p: Kernel.Panel, out: Array[Double]): Unit
   /** Column form over two SPARSE vectors, each an (indices: array<int>
     * ascending, values: array<double>) pair — the fused merge-join
     * kernels (O(nnz) per pair, bit-identical to the dense forms on the
@@ -43,40 +42,61 @@ sealed trait Kernel extends Serializable {
 object Kernel {
   import graft.functions.SparseOps
 
+  /** A fixed partner table for the panel form, stored dim-major:
+    * `cols(d)(j)` is partner j's value at dimension d, for d below
+    * [[width]], the length every partner has (the shortest one's). A
+    * partner longer than that keeps its row in `tails(j)` for its clamp
+    * tail; the others keep nothing there (`tails` is null when none is
+    * longer), so a table of equal-length partners holds each value once. */
+  final class Panel private (val n: Int, private[Kernel] val cols: Array[Array[Double]],
+                             private[Kernel] val tails: Array[Array[Double]])
+      extends Serializable {
+    def width: Int = cols.length
+  }
+
+  object Panel {
+    /** The panel of `rows`, partner j = rows(j). */
+    def apply(rows: Array[Array[Double]]): Panel = {
+      val n = rows.length
+      val width = if (n == 0) 0 else rows.iterator.map(_.length).min
+      val cols = Array.tabulate(width)(d => Array.tabulate(n)(j => rows(j)(d)))
+      val tails =
+        if (rows.forall(_.length == width)) null
+        else rows.map(r => if (r.length > width) r else null)
+      new Panel(n, cols, tails)
+    }
+  }
+
   /** A sum over the first min(|a|, |b|) dimensions of a pair, in
     * dimension order: the dense kernels are functions of one of these. */
   private sealed abstract class PairSum extends Serializable {
     /** `s` plus the terms of dimensions [i0, until). */
     def from(s: Double, a: Array[Double], b: Array[Double], i0: Int, until: Int): Double
-    /** The sums of `a` against b0…b3 into out(o…o+3): one pass over the
-      * dimensions all four share, then each pair's own clamp tail. */
-    def four(a: Array[Double], b0: Array[Double], b1: Array[Double], b2: Array[Double],
-             b3: Array[Double], out: Array[Double], o: Int): Unit
+    /** out(j) += the term of (ad, c(j)) for j in [0, n): one dimension of
+      * a panel, a straight loop with no dependence between the js. */
+    protected def column(ad: Double, c: Array[Double], out: Array[Double], n: Int): Unit
 
     final def one(a: Array[Double], b: Array[Double]): Double =
       from(0.0, a, b, 0, math.min(a.length, b.length))
 
-    /** out(j) = one(a, bs(first + j)) for j in [0, n), 4 partners per pass. */
-    final def block(a: Array[Double], bs: Array[Array[Double]], first: Int, n: Int,
-                    out: Array[Double]): Unit = {
-      var j = 0
-      while (j + 4 <= n) {
-        val b = first + j
-        four(a, bs(b), bs(b + 1), bs(b + 2), bs(b + 3), out, j)
-        j += 4
+    /** out(j) = one(a, pⱼ) for j in [0, p.n): the panel's shared
+      * dimensions one [[column]] at a time, then each longer partner's
+      * clamp tail. */
+    final def panel(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
+      val n = p.n
+      java.util.Arrays.fill(out, 0, n, 0.0)
+      val m = math.min(a.length, p.width)
+      var d = 0
+      while (d < m) { column(a(d), p.cols(d), out, n); d += 1 }
+      if (p.tails != null && a.length > m) {
+        var j = 0
+        while (j < n) {
+          val b = p.tails(j)
+          if (b != null) out(j) = from(out(j), a, b, m, math.min(a.length, b.length))
+          j += 1
+        }
       }
-      while (j < n) { out(j) = one(a, bs(first + j)); j += 1 }
     }
-
-    /** The dimensions all of b0…b3 share with `a`. */
-    protected final def shared(a: Array[Double], b0: Array[Double], b1: Array[Double],
-                               b2: Array[Double], b3: Array[Double]): Int =
-      math.min(math.min(a.length, math.min(b0.length, b1.length)),
-        math.min(b2.length, b3.length))
-
-    /** Finishes a pair that [[four]] summed over its first `m` dimensions. */
-    protected final def tail(s: Double, a: Array[Double], b: Array[Double], m: Int): Double =
-      from(s, a, b, m, math.min(a.length, b.length))
   }
 
   /** Σ a·b. */
@@ -86,17 +106,9 @@ object Kernel {
       while (i < until) { s += a(i) * b(i); i += 1 }
       s
     }
-    def four(a: Array[Double], b0: Array[Double], b1: Array[Double], b2: Array[Double],
-             b3: Array[Double], out: Array[Double], o: Int): Unit = {
-      val m = shared(a, b0, b1, b2, b3)
-      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0; var i = 0
-      while (i < m) {
-        val ai = a(i)
-        s0 += ai * b0(i); s1 += ai * b1(i); s2 += ai * b2(i); s3 += ai * b3(i)
-        i += 1
-      }
-      out(o) = tail(s0, a, b0, m); out(o + 1) = tail(s1, a, b1, m)
-      out(o + 2) = tail(s2, a, b2, m); out(o + 3) = tail(s3, a, b3, m)
+    protected def column(ad: Double, c: Array[Double], out: Array[Double], n: Int): Unit = {
+      var j = 0
+      while (j < n) { out(j) += ad * c(j); j += 1 }
     }
   }
 
@@ -107,18 +119,9 @@ object Kernel {
       while (i < until) { val d = a(i) - b(i); s += d * d; i += 1 }
       s
     }
-    def four(a: Array[Double], b0: Array[Double], b1: Array[Double], b2: Array[Double],
-             b3: Array[Double], out: Array[Double], o: Int): Unit = {
-      val m = shared(a, b0, b1, b2, b3)
-      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0; var i = 0
-      while (i < m) {
-        val ai = a(i)
-        val d0 = ai - b0(i); val d1 = ai - b1(i); val d2 = ai - b2(i); val d3 = ai - b3(i)
-        s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
-        i += 1
-      }
-      out(o) = tail(s0, a, b0, m); out(o + 1) = tail(s1, a, b1, m)
-      out(o + 2) = tail(s2, a, b2, m); out(o + 3) = tail(s3, a, b3, m)
+    protected def column(ad: Double, c: Array[Double], out: Array[Double], n: Int): Unit = {
+      var j = 0
+      while (j < n) { val d = ad - c(j); out(j) += d * d; j += 1 }
     }
   }
 
@@ -129,18 +132,9 @@ object Kernel {
       while (i < until) { s += math.abs(a(i) - b(i)); i += 1 }
       s
     }
-    def four(a: Array[Double], b0: Array[Double], b1: Array[Double], b2: Array[Double],
-             b3: Array[Double], out: Array[Double], o: Int): Unit = {
-      val m = shared(a, b0, b1, b2, b3)
-      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0; var i = 0
-      while (i < m) {
-        val ai = a(i)
-        s0 += math.abs(ai - b0(i)); s1 += math.abs(ai - b1(i))
-        s2 += math.abs(ai - b2(i)); s3 += math.abs(ai - b3(i))
-        i += 1
-      }
-      out(o) = tail(s0, a, b0, m); out(o + 1) = tail(s1, a, b1, m)
-      out(o + 2) = tail(s2, a, b2, m); out(o + 3) = tail(s3, a, b3, m)
+    protected def column(ad: Double, c: Array[Double], out: Array[Double], n: Int): Unit = {
+      var j = 0
+      while (j < n) { out(j) += math.abs(ad - c(j)); j += 1 }
     }
   }
 
@@ -149,8 +143,7 @@ object Kernel {
     def apply(a: Column, b: Column): Column =
       graft.functions.GraftFunctions.dot_product(a, b)
     def apply(a: Array[Double], b: Array[Double]): Double = Dot.one(a, b)
-    def apply(a: Array[Double], bs: Array[Array[Double]], from: Int, n: Int,
-              out: Array[Double]): Unit = Dot.block(a, bs, from, n, out)
+    def apply(a: Array[Double], p: Panel, out: Array[Double]): Unit = Dot.panel(a, p, out)
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column =
       SparseOps.sparse_dot(ai, av, bi, bv)
     def sparse(ai: Array[Int], av: Array[Double],
@@ -165,10 +158,9 @@ object Kernel {
       pow(lit(gamma) * graft.functions.GraftFunctions.dot_product(a, b) + lit(coef0), lit(degree))
     }
     def apply(a: Array[Double], b: Array[Double]): Double = ofDot(Dot.one(a, b))
-    def apply(a: Array[Double], bs: Array[Array[Double]], from: Int, n: Int,
-              out: Array[Double]): Unit = {
-      Dot.block(a, bs, from, n, out)
-      var j = 0; while (j < n) { out(j) = ofDot(out(j)); j += 1 }
+    def apply(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
+      Dot.panel(a, p, out)
+      var j = 0; while (j < p.n) { out(j) = ofDot(out(j)); j += 1 }
     }
     private def ofDot(s: Double): Double = StrictMath.pow(gamma * s + coef0, degree)
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
@@ -188,10 +180,9 @@ object Kernel {
     }
     def apply(a: Array[Double], b: Array[Double]): Double =
       StrictMath.exp(-gamma * SqDist.one(a, b))
-    def apply(a: Array[Double], bs: Array[Array[Double]], from: Int, n: Int,
-              out: Array[Double]): Unit = {
-      SqDist.block(a, bs, from, n, out)
-      var j = 0; while (j < n) { out(j) = StrictMath.exp(-gamma * out(j)); j += 1 }
+    def apply(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
+      SqDist.panel(a, p, out)
+      var j = 0; while (j < p.n) { out(j) = StrictMath.exp(-gamma * out(j)); j += 1 }
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{exp, lit}
@@ -210,10 +201,9 @@ object Kernel {
     }
     def apply(a: Array[Double], b: Array[Double]): Double =
       StrictMath.exp(-gamma * L1Dist.one(a, b))
-    def apply(a: Array[Double], bs: Array[Array[Double]], from: Int, n: Int,
-              out: Array[Double]): Unit = {
-      L1Dist.block(a, bs, from, n, out)
-      var j = 0; while (j < n) { out(j) = StrictMath.exp(-gamma * out(j)); j += 1 }
+    def apply(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
+      L1Dist.panel(a, p, out)
+      var j = 0; while (j < p.n) { out(j) = StrictMath.exp(-gamma * out(j)); j += 1 }
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{exp, lit}

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, Uns
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** §2.1 M1: LIBSVM text format I/O (reference: psvm document.cc —
   * `label idx:val idx:val …`, 1-based sparse indices).
@@ -155,6 +157,106 @@ object LibSvmLine {
     }
   }
 
+  /** [[sv]] straight off the text source's bytes, with no `String` per
+    * line: each `idx:val` token is read in one pass — the index's digits,
+    * the `:`, then the value through [[double]]'s fast path. A value off
+    * that path is parsed from its own token as [[double]] parses it.
+    * Anything else out of the ordinary (a byte outside ASCII, an index
+    * that is not 1–9 plain digits or lies outside the vector, a token
+    * without a `:`) sends the whole line through the `String` form, so
+    * values, placement and error messages match that form's. */
+  def sv(line: UTF8String, dim: Int): (Array[Double], Double) = {
+    val r = scan(line, dim)
+    if (r ne null) r else sv(line.toString, dim)
+  }
+
+  /** [[sv]]'s byte scan, or null where the line needs the `String` form.
+    * Token 0 is the coefficient; each later one is `idx:val`, its index
+    * read as plain digits up to the `:`, and its value through the same
+    * fast path as [[double]]'s, ending at the next space or the line's
+    * last non-space byte. */
+  private def scan(line: UTF8String, dim: Int): (Array[Double], Double) = {
+    // a text row's bytes sit in a byte array: read them there, with plain
+    // array loads (anything else is copied into one)
+    val onHeap = line.getBaseObject.isInstanceOf[Array[Byte]]
+    val bytes = if (onHeap) line.getBaseObject.asInstanceOf[Array[Byte]] else line.getBytes
+    val off = if (onHeap) (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt else 0
+    def at(i: Int): Int = bytes(off + i)
+    var end = line.numBytes
+    while (end > 0 && at(end - 1) == ' ') end -= 1
+    var x = new Array[Double](if (dim > 0) dim else 16)
+    var maxIdx = 0
+    var coef = 0.0
+    var p = -1          // the space before the token (none before token 0)
+    while (p < end) {
+      var i = p + 1
+      var idx = 0
+      var c = 0
+      if (p >= 0) {
+        val t = i
+        while (i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
+          if (i - t == 9) return null
+          idx = idx * 10 + c; i += 1
+        }
+        if (i == t || i == end || at(i) != ':') return null
+        if (idx < 1 || (dim > 0 && idx > dim)) return null
+        i += 1
+      }
+      // the value from `from`: [[double]]'s fast path, NaN off it
+      val from = i
+      val neg = i < end && at(i) == '-'
+      if (i < end && (at(i) == '-' || at(i) == '+')) i += 1
+      var m = 0L; var sig = 0; var scale = 0; var digits = 0
+      var e = 0
+      var fast = true
+      while (fast && i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
+        if (m != 0 || c != 0) sig += 1
+        m = m * 10 + c; digits += 1; i += 1
+        fast = sig <= 15
+      }
+      if (fast && i < end && at(i) == '.') {
+        i += 1
+        while (fast && i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
+          if (m != 0 || c != 0) sig += 1
+          m = m * 10 + c; digits += 1; scale += 1; i += 1
+          fast = sig <= 15
+        }
+      }
+      fast &&= digits > 0
+      if (fast && i < end && (at(i) == 'e' || at(i) == 'E')) {
+        i += 1
+        val eNeg = i < end && at(i) == '-'
+        if (i < end && (at(i) == '-' || at(i) == '+')) i += 1
+        val e0 = i
+        while (fast && i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
+          e = e * 10 + c; i += 1
+          fast = e <= 1000
+        }
+        fast &&= i > e0
+        if (eNeg) e = -e
+      }
+      var v = if (fast && (i == end || at(i) == ' ')) exact(m, e - scale, neg) else Double.NaN
+      if (v != v) {
+        // off the fast path: the token as a String, parsed as `double` does
+        i = from
+        while (i < end && at(i) != ' ') { if (at(i) < 0) return null; i += 1 }
+        val t = new String(Array.tabulate(i - from)(k => at(from + k).toChar))
+        v = double(t, 0, t.length)
+      }
+      if (p < 0) coef = v
+      else {
+        if (dim <= 0) {
+          if (idx > x.length) x = java.util.Arrays.copyOf(x, math.max(idx, 2 * x.length))
+          maxIdx = math.max(maxIdx, idx)
+        }
+        x(idx - 1) = v
+      }
+      p = i
+    }
+    if (dim > 0) (x, coef)
+    else (if (x.length == maxIdx) x else java.util.Arrays.copyOf(x, maxIdx), coef)
+  }
+
   /** Whether a trimmed LIBSVM line holds a row: not blank, not a `#` comment. */
   def isData(line: String): Boolean = line.nonEmpty && line.charAt(0) != '#'
 
@@ -252,12 +354,18 @@ object LibSvmLine {
       if (eNeg) e = -e
     }
     if (i != until) return slow(s, from, until)
-    val e10 = e - scale
+    val v = exact(m, e - scale, neg)
+    if (v == v) v else slow(s, from, until)
+  }
+
+  /** ±m·10^e10 as one correctly rounded operation on two exact doubles
+    * (m below 10^15 fits a double exactly); NaN when |e10| > 22. */
+  private def exact(m: Long, e10: Int, neg: Boolean): Double = {
     val v =
       if (m == 0) 0.0
       else if (e10 >= 0 && e10 <= 22) m.toDouble * Pow10(e10)
       else if (e10 < 0 && e10 >= -22) m.toDouble / Pow10(-e10)
-      else return slow(s, from, until)
+      else return Double.NaN
     if (neg) -v else v
   }
 

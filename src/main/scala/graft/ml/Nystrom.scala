@@ -65,11 +65,14 @@ final case class NystromMap(
 
   val rank: Int = w.headOption.map(_.length).getOrElse(0)
 
+  /** The landmarks as the [[Kernel]] panel form's table, built once per
+    * deserialized copy of the map. */
+  @transient private lazy val panel = Kernel.Panel(landmarks)
+
   /** φ(x) for one vector (executor-local). */
   def features(x: Array[Double]): Array[Double] = {
-    val m = landmarks.length
-    val kx = new Array[Double](m)
-    kernel(x, landmarks, 0, m, kx)     // kx(i) = k(x, landmarks(i)), 4 per pass
+    val kx = new Array[Double](landmarks.length)
+    kernel(x, panel, kx)     // kx(i) = k(x, landmarks(i))
     project(kx)
   }
 

@@ -197,6 +197,31 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     }
   }
 
+  test("predict streamed layout: float decisions repeat bit for bit, partials added in SV partition order") {
+    // 4 SV partitions, terms of mixed magnitudes: the order the partials
+    // are added in shows in the last bits
+    val rng = new scala.util.Random(8)
+    val table = Seq.tabulate(203)(_ => (Array.fill(6)(rng.nextGaussian()),
+      rng.nextGaussian() * math.pow(10, rng.nextInt(7) - 3)))
+    val svRdd = spark.sparkContext.parallelize(
+      table.map { case (x, c) => org.apache.spark.sql.Row(x.toSeq, c) }, 4)
+    val svs = spark.createDataFrame(svRdd, org.apache.spark.sql.types.StructType.fromDDL(
+      "sv_x array<double>, sv_coef double"))
+    val k = Kernel.Rbf(0.3)
+    val model = IcfSvmModel(k, svs, table.size, -0.125, 6, broadcastThreshold = table.size - 1)
+    val rows = Seq.tabulate(37)(i => (i.toLong, Array.fill(6)(rng.nextGaussian())))
+    val df = rows.toDF("id", "vec")
+    // plain Scala: each partition's SVs folded in order, then the partials
+    // added in partition order from 0.0
+    val parts = svRdd.glom().collect().map(_.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1))))
+    assert(parts.length === 4)
+    val want = bits(rows.map { case (id, x) =>
+      val partials = parts.map(_.foldLeft(0.0) { case (acc, (sv, c)) => acc + c * k(sv, x) })
+      id -> (partials.foldLeft(0.0)(_ + _) + model.bias)
+    }.toMap)
+    for (run <- 1 to 6) assert(bits(decisions(model.predict(df, "id", "vec"))) === want, s"run $run")
+  }
+
   test("predict map layout: duplicate ids are scored per row, and a predict takes at most 2 jobs") {
     val (_, df, model, plain) = regimeFit
     val a = Array(1.5, -1.5)
@@ -270,9 +295,9 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
   }
 
   test("exact bits agree across layouts at every 4-pair tail, with a null and a short vector") {
-    // the kernels evaluate 4 pairs per pass: nSV (the map layout's
-    // partners) and the scored rows (the streamed layout's) ≡ 1, 2, 3
-    // mod 4 run each fold's tail; a short row and a short SV run the clamp
+    // nSV (the map layout's panel partners) and the scored rows (the
+    // streamed layout's) ≡ 1, 2, 3 mod 4, off any vector width; a short
+    // row and a short SV run the panels' clamp tails
     val rng = new scala.util.Random(5)
     def vec(n: Int) = Array.fill(n)(rng.nextGaussian())
     val kernels = Seq(Kernel.Linear, Kernel.Polynomial(0.3, 0.5, 2), Kernel.Rbf(0.4),
@@ -325,8 +350,8 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     assert(empty.count() === 0L)
 
     // two terms of 5e18 picounits each fit a Long; their sum does not,
-    // and must fail (streamed: in the seqOp or the combOp; map: in the
-    // row's fold) rather than wrap
+    // and must fail (streamed: in a partition's fold or the driver's sum
+    // of the partials; map: in the row's fold) rather than wrap
     val svs = Seq((Array(1.0), 5e6), (Array(1.0), 5e6)).toDF("sv_x", "sv_coef")
     val one = Seq((1L, Array(1.0))).toDF("id", "vec")
     val huge = IcfSvmModel(Kernel.Linear, svs, 2, 0.0, 1, broadcastThreshold = 1)

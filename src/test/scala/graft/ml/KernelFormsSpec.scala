@@ -45,27 +45,50 @@ class KernelFormsSpec extends SparkSpec {
       s"of ${pairs.size * kernels.size * 2}; first: " + mismatches.take(5).mkString("; "))
   }
 
-  test("block forms equal the pair form bit for bit, in each call site's argument order") {
-    // one vector against n partners, lengths 1–70 (around the 4-partner
-    // passes' multiples of 4), partner counts 1–9 (so the tails after the
-    // last full pass of 4 run), and partners of other lengths (the clamp)
+  test("panel form equals the pair form bit for bit, in both argument orders") {
+    // one vector of length 1–70 against panels of 1–130 partners (counts
+    // off any vector width), drawn from a pool of equal-length partners
+    // (no clamp tail) and from one of mixed lengths 1–72 (the panel's
+    // width is its shortest partner's; tails run on the partner's side
+    // when it is longer than the vector, and the vector's when shorter)
     val rng = new scala.util.Random(11)
     def vec(n: Int) = Array.fill(n)(if (rng.nextInt(5) == 0) 0.0 else rng.nextGaussian() * 1.5)
+    def bitsOf(d: Double) = java.lang.Double.doubleToRawLongBits(d)
     val mismatches = for {
       len <- 1 to 70
-      n <- 1 to 9
       a = vec(len)
-      bs = Array.fill(n + 2)(vec(if (rng.nextInt(4) == 0) 1 + rng.nextInt(72) else len))
-      from = rng.nextInt(3)
+      (kind, pool) <- Seq("equal" -> Array.fill(130)(vec(len)),
+        "mixed" -> Array.fill(130)(vec(if (rng.nextInt(3) == 0) 1 + rng.nextInt(72) else len)))
+      n <- 1 to 130
+      panel = Kernel.Panel(pool.take(n))
       k <- kernels
-      out = Array.fill(n)(Double.NaN)
-      _ = k(a, bs, from, n, out)
+      out = Array.fill(n + 1)(Double.NaN)
+      _ = k(a, panel, out)
       j <- 0 until n
       // the streamed layout evaluates k(sv, xⱼ) with the SV as `a`; the map
       // layout k(svⱼ, x) with the row as `a`; Nyström k(x, lⱼ) with `a` = x
-      (site, pair) <- Seq("a first" -> k(a, bs(from + j)), "a second" -> k(bs(from + j), a))
-      if java.lang.Double.doubleToRawLongBits(out(j)) != java.lang.Double.doubleToRawLongBits(pair)
-    } yield s"$k len $len n $n j $j ($site): block ${out(j)} vs pair $pair"
+      (site, pair) <- Seq("a first" -> k(a, pool(j)), "a second" -> k(pool(j), a))
+      if bitsOf(out(j)) != bitsOf(pair)
+    } yield s"$k len $len $kind n $n j $j ($site): panel ${out(j)} vs pair $pair"
     assert(mismatches.isEmpty, mismatches.take(5).mkString("; "))
+  }
+
+  test("panel form: zero-width panels, an empty vector and an empty panel") {
+    val rng = new scala.util.Random(12)
+    def vec(n: Int) = Array.fill(n)(rng.nextGaussian())
+    for (k <- kernels; a <- Seq(Array.emptyDoubleArray, vec(1), vec(9))) {
+      // an empty partner makes the panel's width 0: every other pair is
+      // all clamp tail
+      val rows = Array(vec(9), Array.emptyDoubleArray, vec(3), vec(12))
+      val panel = Kernel.Panel(rows)
+      assert(panel.width === 0 && panel.n === 4)
+      val out = Array.fill(4)(Double.NaN)
+      k(a, panel, out)
+      assert(out.map(java.lang.Double.doubleToRawLongBits).toSeq ===
+        rows.map(r => java.lang.Double.doubleToRawLongBits(k(a, r))).toSeq, s"$k |a| ${a.length}")
+      val none = Array(Double.NaN)
+      k(a, Kernel.Panel(Array.empty[Array[Double]]), none)
+      assert(none(0).isNaN, "an empty panel writes nothing")
+    }
   }
 }

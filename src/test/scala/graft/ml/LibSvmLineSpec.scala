@@ -1,7 +1,9 @@
 package graft.ml
 
 import java.lang.Double.doubleToRawLongBits
-import scala.util.Try
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.{Failure, Success, Try}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 class LibSvmLineSpec extends AnyFunSuite {
@@ -95,5 +97,63 @@ class LibSvmLineSpec extends AnyFunSuite {
       assert(doubleToRawLongBits(coef) === doubleToRawLongBits(wantCoef), line)
       assert(x.map(doubleToRawLongBits).toSeq === wantX.map(doubleToRawLongBits), line)
     }
+  }
+
+  /** An SV line's parse as comparable bits, or its exception's class and message. */
+  private def parsed(r: => (Array[Double], Double)): Either[(Class[_], String), (Seq[Long], Long)] =
+    Try(r) match {
+      case Success((x, coef)) => Right((x.map(doubleToRawLongBits).toSeq, doubleToRawLongBits(coef)))
+      case Failure(e) => Left((e.getClass, e.getMessage))
+    }
+
+  /** The byte scan's mismatch against the String form on `line`, if any:
+    * read from a buffer with bytes before and after it, as a text row's are. */
+  private def byteMismatch(line: String, dim: Int): Option[String] = {
+    val b = line.getBytes(UTF_8)
+    val buf = Array.fill[Byte](b.length + 7)('9'.toByte)
+    System.arraycopy(b, 0, buf, 3, b.length)
+    val want = parsed(LibSvmLine.sv(line, dim))
+    val got = parsed(LibSvmLine.sv(UTF8String.fromBytes(buf, 3, b.length), dim))
+    if (got == want) None else Some(s"'$line' dim $dim: String $want, bytes $got")
+  }
+
+  test("SV byte scan equals the String form on random tokens, as coefficients and values") {
+    val rng = new java.util.SplittableRandom(42)
+    // the tokens of the random-token spec above, 2.1M of them
+    val tokens = Iterator.fill(1000000)(java.lang.Double.longBitsToDouble(rng.nextLong()).toString) ++
+      Iterator.fill(300000)((rng.nextDouble() * 2 - 1) * math.pow(10, rng.nextInt(-30, 30)))
+        .map(_.toString) ++
+      Iterator.fill(700000)(math.rint(rng.nextGaussian() * 3e6) / 1e6).map(_.toString) ++
+      Iterator.fill(100000)(f"${rng.nextGaussian() * 1000}%.6f")
+    val bad = tokens.grouped(16).flatMap { g =>
+      val line = g.zipWithIndex.map { case (t, i) => s"${i + 1}:$t" }.mkString(g.head + " ", " ", "")
+      byteMismatch(line, 16).orElse(byteMismatch(line, -1))
+    }.take(5).toList
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("SV byte scan equals the String form on edge tokens, odd indices and malformed lines") {
+    val values = Seq("-0.0", "0", "+1", "1E-5", "1.0E22", "1e23", "4.9E-324", "-1.5e-3",
+      "1.7976931348623157E308", "123456789012345", "1234567890123456", "0.12345678901234567",
+      "9007199254740993", "0.000000000000000000000001", "123e-24", "NaN", "-Infinity",
+      "1.5d", "0x1p3", "5.", "-.5", "1e", "1e+", "--1", "1.2.3", "", "x", "3:4")
+    val lines = values.flatMap(v => Seq(s"$v 1:2.5", s"0.5 1:$v 3:1", s"0.5 2:1 3:$v")) ++ Seq(
+      // indices: 10+ digits (one that fits an Int, one that does not), signs,
+      // zero, past dim, repeated
+      "1 0000000002:1.5", "1 0000000000002:1.5", "1 99999999999:1", "1 +2:1", "1 -2:1",
+      "1 0:1", "1 5:1", "1 2:1 2:9", "1 3:1 1:2 3:7",
+      // spacing: trailing, doubled, leading; tokens without a colon or a value
+      "1 1:2 ", "1 1:2   ", "1  1:2", " 1 1:2", "1 1:2  2:3", "1 ", "1", "", " ",
+      "1 2", "1 :3", "1 2:", "1 a:3", "1 2:3:4", "1 1:2\t2:3", "1 1:2\r",
+      // multi-byte UTF-8: a fullwidth digit, an Arabic-Indic index digit
+      // (Integer.parseInt reads it), a non-breaking space, an accent
+      "1 1:\uff12", "1 \u0663:1.5", "1 1:2\u00a02:3", "0.5 1:1.0 2:-2.5 3:caf\u00e9",
+      "\u00e9 1:1")
+    val bad = for {
+      line <- lines
+      dim <- Seq(4, -1)
+      m <- byteMismatch(line, dim)
+    } yield m
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 }

@@ -6,7 +6,8 @@
 # methods of the SV model (`def predict*` in IcfSvm.scala), the `join(`
 # sites of the PSVM fits (`IcfSvmTrainer` and `fitIpm`), the line
 # count of SparkEntry.scala, the reads through Spark's `libsvm` source in
-# src/main, and the typed-Dataset (`.as[`) sites of IcfSvm.scala.
+# src/main, the typed-Dataset (`.as[`) sites of IcfSvm.scala, and the
+# 4-partner block kernels (`def four`) of Kernels.scala.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -37,3 +38,4 @@ echo "psvm_fit_joins $fit_joins"
 echo "spark_entry_loc $(wc -l < "$main/graft/SparkEntry.scala")"
 echo "libsvm_source_sites $(count 'format\("libsvm"\)' "$main")"
 echo "svm_typed_dataset_sites $(count '\.as\[' "$main/graft/ml/IcfSvm.scala")"
+echo "kernel_block_forms $(count 'def four' "$main/graft/ml/Kernels.scala")"
