@@ -459,13 +459,14 @@ object IcfSvmTrainer {
     * = Gᵀα, and b = the mean of yᵢ − w·hᵢ (hᵢ = yᵢ·gᵢ) over the rows
     * `free(αᵢ, yᵢ)` selects (the caller's free SVs), 0.0 if none; `emit`
     * makes table rows in the same task. One job on one block (its task
-    * sums w first); on several, a treeAggregate of w runs before. */
+    * sums w first); on several, a job summing w in partition order
+    * ([[Ipm.aggregateInOrder]]) runs before. */
   private[ml] def primal[R, T: ClassTag](rows: RDD[R], p: Int)(block: R => Ipm.Block,
       free: (Double, Double) => Boolean)(emit: R => Array[T]): Primal[T] = {
     val summed =
       if (rows.getNumPartitions == 1) None
-      else Some(rows.sparkContext.broadcast(rows.treeAggregate(new Array[Double](p))(
-        seqOp = (acc, r) => Ipm.addGTalpha(acc, block(r)), combOp = Ipm.addInto)))
+      else Some(rows.sparkContext.broadcast(Ipm.aggregateInOrder(rows)(new Array[Double](p))(
+        (acc, r) => Ipm.addGTalpha(acc, block(r)), Ipm.addInto)))
     val out = rows.map { r =>
       val b = block(r)
       val w = summed.fold(Ipm.addGTalpha(new Array[Double](p), b))(_.value)

@@ -4,6 +4,7 @@ import breeze.linalg.{DenseMatrix, DenseVector, inv}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** §2.1 M7 (fidelity path): primal-dual Interior Point Method for the
   * SVM dual QP on an ICF/Nyström factor (reference: psvm ipm.cc and the
@@ -20,7 +21,8 @@ import org.apache.spark.storage.StorageLevel
   * arrays of y, h, α) — n-vectors never touch the driver; the driver
   * holds only p-sized state. This is the same data layout and
   * communication pattern as the reference's MPI implementation, with
-  * treeAggregate playing the role of all-reduce.
+  * [[aggregateInOrder]] (per-partition partials added on the driver in
+  * partition order) playing the role of all-reduce.
   *
   * Per-iteration work: ONE O(n·p) pass builds Gᵀα, ONE O(n·p) pass
   * computes the per-row dot qaᵢ = (Gᵀα)·hᵢ (plus block-partial gap
@@ -37,8 +39,11 @@ import org.apache.spark.storage.StorageLevel
   *   - several blocks: each iteration is five jobs (Gᵀα, gap, SMW Gram,
   *     step, materialize) with the p×p core solved on the driver.
   * Both run the same per-block steps, and the one-block loop merges each
-  * aggregate as treeAggregate does over one partition, so the alphas,
-  * iteration count and gap are the same bits either way.
+  * aggregate as a one-partition treeAggregate did (adding the partial
+  * into a zero twice, which gives the bits adding it once gives), so the
+  * alphas, iteration count and gap are the same bits either way. On
+  * several blocks the partials are added in partition order, so a solve
+  * repeats bit for bit.
   *
   * `checkpointDir`: psvm-style fault tolerance — every `checkpointEvery`
   * iterations the α blocks land in parquet plus an (iter, ν) marker
@@ -91,8 +96,22 @@ object Ipm {
     Smw(DenseMatrix.zeros[Double](p, p), DenseVector.zeros[Double](p),
         DenseVector.zeros[Double](p), 0.0, 0.0)
 
+  /** `rdd`'s aggregate in one job: each partition folds its elements
+    * with `seqOp` from `zero`, and the driver adds the partials with
+    * `combOp` in partition order. (A `treeAggregate` ends in an
+    * `RDD.fold`, which merges the partials in task-completion order, so
+    * its float sums could differ in the last bits from run to run.) */
+  private[ml] def aggregateInOrder[T, U: ClassTag](rdd: RDD[T])(zero: => U)(
+      seqOp: (U, T) => U, combOp: (U, U) => U): U =
+    rdd.mapPartitions(it => Iterator.single(it.foldLeft(zero)(seqOp)))
+      .collect().foldLeft(zero)(combOp)
+
+  /** Gᵀα over several blocks, in partition order. */
+  private[ml] def gTalpha(blocks: RDD[(Array[Long], Block)], p: Int): Array[Double] =
+    aggregateInOrder(blocks)(new Array[Double](p))((acc, ib) => addGTalpha(acc, ib._2), addInto)
+
   // ---- the per-block steps: the driver loop folds them across blocks
-  // with treeAggregate/reduce, the one-block loop calls them in its task
+  // with aggregateInOrder/reduce, the one-block loop calls them in its task
 
   /** Adds the block's Gᵀα (at the solution, w = Σ αᵢyᵢhᵢ) into `acc`. */
   private[ml] def addGTalpha(acc: Array[Double], b: Block): Array[Double] = {
@@ -235,9 +254,10 @@ object Ipm {
     Block(b.y, b.h, na)
   }
 
-  /** treeAggregate over ONE partition holding `elem`: the seqOp from a
+  /** A one-partition treeAggregate's merge of `elem`: the seqOp from a
     * zero, then the two combOp merges into fresh zeros that Spark's fold
-    * makes (task side, then driver side) — their `0.0 +` included. */
+    * made (task side, then driver side) — their `0.0 +` included, which
+    * leaves the bits [[aggregateInOrder]]'s one merge gives. */
   private def oneBlock[T, U](zero: => U)(seqOp: (U, T) => U, combOp: (U, U) => U)(elem: T): U =
     combOp(zero, combOp(zero, seqOp(zero, elem)))
 
@@ -374,9 +394,7 @@ object Ipm {
       while (s.iter < maxIter && s.gap > tol) {
         // Gᵀα: the only pass that needs every (row × p) product before the
         // per-row dot qaᵢ = Σⱼ hᵢⱼ(Gᵀα)ⱼ is defined
-        val gTalpha = blocks.treeAggregate(new Array[Double](p))(
-          seqOp = (acc, ib) => addGTalpha(acc, ib._2), combOp = addInto)
-        val gTalphaB = sc.broadcast(gTalpha)
+        val gTalphaB = sc.broadcast(gTalpha(blocks, p))
 
         // qa once per iteration (reused by the SMW and Δα passes below),
         // with the gap/feasibility partials folded into the same pass
@@ -386,16 +404,14 @@ object Ipm {
             val (qa, g, ya) = qaPass(b, gTalphaB.value, nu, cPos, cNeg)
             (ids, b, qa, g, ya)
           }.persist(StorageLevel.MEMORY_AND_DISK)
-        val (gap, yTalpha) = withQa
-          .map(t => (t._4, t._5))
-          .treeAggregate((0.0, 0.0))(seqOp = addPairs, combOp = addPairs)
+        val (gap, yTalpha) = aggregateInOrder(withQa.map(t => (t._4, t._5)))((0.0, 0.0))(
+          addPairs, addPairs)
         s = s.copy(gap = gap)
         if (gap <= tol) { s = s.copy(iter = s.iter + 1); withQa.unpersist(false) }
         else {
           val t = s.t(n)
-          val smw = withQa.treeAggregate(smwZero(p))(
-            seqOp = (acc, e) => addSmw(acc, e._2, e._3, nu, t, cPos, cNeg),
-            combOp = mergeSmw)
+          val smw = aggregateInOrder(withQa)(smwZero(p))(
+            (acc, e) => addSmw(acc, e._2, e._3, nu, t, cPos, cNeg), mergeSmw)
           // p×p SMW core on the driver
           val (corrU, corrW, deltaNu) = newtonCore(smw, yTalpha)
           val corrB = sc.broadcast((corrU, corrW))

@@ -10,7 +10,11 @@ import graft.functions.VectorOps
   * driver/executor-local math (Nyström/ICF pivots, SV scoring).
   * A plain form equals its column form bit for bit: the same loop order,
   * and `java.lang.StrictMath` exp/pow, which Spark's `Exp`/`Pow` codegen
-  * calls (`math.exp` may differ from it in the last ulp).
+  * calls (`math.exp` may differ from it in the last ulp). The RBF and
+  * Laplacian panel forms finish with [[Kernel.strictExp]], an array form of
+  * `StrictMath.exp` that gives its bits: JDK 17's `StrictMath.exp` is
+  * fdlibm's `e_exp.c` in Java, and the array form runs the same IEEE
+  * operations in the same order, only without the per-call branches.
   */
 sealed trait Kernel extends Serializable {
   /** Column form: k(a, b) over two array<double> columns. */
@@ -79,14 +83,21 @@ object Kernel {
     final def one(a: Array[Double], b: Array[Double]): Double =
       from(0.0, a, b, 0, math.min(a.length, b.length))
 
+    /** out(j) += the terms of dimensions d … d + 3 of (a, pⱼ), added in
+      * that order, for j in [0, n): four [[column]]s in one loop. */
+    protected def columns4(a: Array[Double], d: Int, cols: Array[Array[Double]],
+                           out: Array[Double], n: Int): Unit
+
     /** out(j) = one(a, pⱼ) for j in [0, p.n): the panel's shared
-      * dimensions one [[column]] at a time, then each longer partner's
-      * clamp tail. */
+      * dimensions four at a time ([[columns4]], each pair's terms still
+      * added one by one in dimension order), the rest one [[column]] at a
+      * time, then each longer partner's clamp tail. */
     final def panel(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
       val n = p.n
       java.util.Arrays.fill(out, 0, n, 0.0)
       val m = math.min(a.length, p.width)
       var d = 0
+      while (d + 4 <= m) { columns4(a, d, p.cols, out, n); d += 4 }
       while (d < m) { column(a(d), p.cols(d), out, n); d += 1 }
       if (p.tails != null && a.length > m) {
         var j = 0
@@ -110,6 +121,16 @@ object Kernel {
       var j = 0
       while (j < n) { out(j) += ad * c(j); j += 1 }
     }
+    protected def columns4(a: Array[Double], d: Int, cols: Array[Array[Double]],
+                           out: Array[Double], n: Int): Unit = {
+      val a0 = a(d); val a1 = a(d + 1); val a2 = a(d + 2); val a3 = a(d + 3)
+      val c0 = cols(d); val c1 = cols(d + 1); val c2 = cols(d + 2); val c3 = cols(d + 3)
+      var j = 0
+      while (j < n) {
+        out(j) = (((out(j) + a0 * c0(j)) + a1 * c1(j)) + a2 * c2(j)) + a3 * c3(j)
+        j += 1
+      }
+    }
   }
 
   /** Σ (a − b)². */
@@ -123,6 +144,17 @@ object Kernel {
       var j = 0
       while (j < n) { val d = ad - c(j); out(j) += d * d; j += 1 }
     }
+    protected def columns4(a: Array[Double], d: Int, cols: Array[Array[Double]],
+                           out: Array[Double], n: Int): Unit = {
+      val a0 = a(d); val a1 = a(d + 1); val a2 = a(d + 2); val a3 = a(d + 3)
+      val c0 = cols(d); val c1 = cols(d + 1); val c2 = cols(d + 2); val c3 = cols(d + 3)
+      var j = 0
+      while (j < n) {
+        val e0 = a0 - c0(j); val e1 = a1 - c1(j); val e2 = a2 - c2(j); val e3 = a3 - c3(j)
+        out(j) = (((out(j) + e0 * e0) + e1 * e1) + e2 * e2) + e3 * e3
+        j += 1
+      }
+    }
   }
 
   /** Σ |a − b|. */
@@ -135,6 +167,17 @@ object Kernel {
     protected def column(ad: Double, c: Array[Double], out: Array[Double], n: Int): Unit = {
       var j = 0
       while (j < n) { out(j) += math.abs(ad - c(j)); j += 1 }
+    }
+    protected def columns4(a: Array[Double], d: Int, cols: Array[Array[Double]],
+                           out: Array[Double], n: Int): Unit = {
+      val a0 = a(d); val a1 = a(d + 1); val a2 = a(d + 2); val a3 = a(d + 3)
+      val c0 = cols(d); val c1 = cols(d + 1); val c2 = cols(d + 2); val c3 = cols(d + 3)
+      var j = 0
+      while (j < n) {
+        out(j) = (((out(j) + math.abs(a0 - c0(j))) + math.abs(a1 - c1(j))) +
+          math.abs(a2 - c2(j))) + math.abs(a3 - c3(j))
+        j += 1
+      }
     }
   }
 
@@ -182,7 +225,8 @@ object Kernel {
       StrictMath.exp(-gamma * SqDist.one(a, b))
     def apply(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
       SqDist.panel(a, p, out)
-      var j = 0; while (j < p.n) { out(j) = StrictMath.exp(-gamma * out(j)); j += 1 }
+      var j = 0; while (j < p.n) { out(j) = -gamma * out(j); j += 1 }
+      Kernel.strictExp(out, p.n)
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{exp, lit}
@@ -203,7 +247,8 @@ object Kernel {
       StrictMath.exp(-gamma * L1Dist.one(a, b))
     def apply(a: Array[Double], p: Panel, out: Array[Double]): Unit = {
       L1Dist.panel(a, p, out)
-      var j = 0; while (j < p.n) { out(j) = StrictMath.exp(-gamma * out(j)); j += 1 }
+      var j = 0; while (j < p.n) { out(j) = -gamma * out(j); j += 1 }
+      Kernel.strictExp(out, p.n)
     }
     def sparse(ai: Column, av: Column, bi: Column, bv: Column): Column = {
       import org.apache.spark.sql.functions.{exp, lit}
@@ -212,6 +257,59 @@ object Kernel {
     def sparse(ai: Array[Int], av: Array[Double],
                bi: Array[Int], bv: Array[Double]): Double =
       StrictMath.exp(-gamma * SparseOps.l1DistLocal(ai, av, bi, bv))
+  }
+
+  // fdlibm e_exp.c's constants, as JDK 17's FdLibm.Exp holds them
+  private val Ln2Hi = java.lang.Double.parseDouble("0x1.62e42feep-1")
+  private val Ln2Lo = java.lang.Double.parseDouble("0x1.a39ef35793c76p-33")
+  private val InvLn2 = java.lang.Double.parseDouble("0x1.71547652b82fep0")
+  private val P1 = java.lang.Double.parseDouble("0x1.555555555553ep-3")
+  private val P2 = java.lang.Double.parseDouble("-0x1.6c16c16bebd93p-9")
+  private val P3 = java.lang.Double.parseDouble("0x1.1566aaf25de2cp-14")
+  private val P4 = java.lang.Double.parseDouble("-0x1.bbd41c5d26bf1p-20")
+  private val P5 = java.lang.Double.parseDouble("0x1.6376972bea4d0p-25")
+  /** 1.5·ln2 rounded up to its high word (0x3FF0A2B2): fdlibm reduces
+    * |x| ≥ this by k = (int)(x/ln2 ∓ ½), and below it by k = ±1 or 0. */
+  private val ReduceAbove = java.lang.Double.longBitsToDouble(0x3FF0A2B2L << 32)
+
+  /** xs(j) = `StrictMath.exp(xs(j))` for j in [0, n), bit for bit. An x
+    * in (−700, −[[ReduceAbove]]] (what an RBF or Laplacian finish
+    * `exp(−γ·s)` meets most) takes fdlibm's general path written as
+    * straight loops over j: k = (int)(x/ln2 − ½), here its ceiling
+    * (the same integer, as the argument is ≤ −2); the reduced argument
+    * r = hi − lo with hi = x − k·ln2Hi (exact) and lo = k·ln2Lo; the
+    * P1–P5 polynomial c; y = 1 − ((lo − r·c/(2 − c)) − hi); then, in a
+    * second pass that branches on x's range, y scaled by 2^k (k ≥ −1010
+    * here, so the result is normal and fdlibm adds k to y's high word,
+    * as this adds `k << 52` to its bits). Every other x (NaN, ±0, ±∞,
+    * positive, |x| < 1.5·ln2, or a result near or below the subnormal
+    * range) calls `StrictMath.exp`. The scratch array (n doubles) is
+    * allocated per call rather than kept in a `ThreadLocal`, whose map
+    * lookup would run on every call. */
+  private[ml] def strictExp(xs: Array[Double], n: Int): Unit = {
+    val ys = new Array[Double](n)
+    var j = 0
+    while (j < n) {
+      val x = xs(j)
+      val k = Math.ceil(InvLn2 * x - 0.5)
+      val hi = x - k * Ln2Hi
+      val lo = k * Ln2Lo
+      val r = hi - lo
+      val t = r * r
+      val c = r - t * (P1 + t * (P2 + t * (P3 + t * (P4 + t * P5))))
+      ys(j) = 1.0 - ((lo - r * c / (2.0 - c)) - hi)
+      j += 1
+    }
+    j = 0
+    while (j < n) {
+      val x = xs(j)
+      xs(j) =
+        if (x > -700.0 && x <= -ReduceAbove) {
+          val k = Math.ceil(InvLn2 * x - 0.5).toLong
+          java.lang.Double.longBitsToDouble(java.lang.Double.doubleToRawLongBits(ys(j)) + (k << 52))
+        } else StrictMath.exp(x)
+      j += 1
+    }
   }
 
   /** Model-file codec (reference: psvm model.cc): a kernel as its

@@ -30,16 +30,18 @@ object LibSvmIO {
     * (the source's sparse vectors drop explicit zeros), and an `i:v:w`
     * token reads as `v` ([[LibSvmLine.point]]). The vectors have
     * `numFeatures` entries; without it (≤ 0) one index-only job over the
-    * text sizes them by the largest last index (at least 1), and empty
+    * text sizes them by the largest last index (at least 1), read off
+    * each line's bytes (`LibSvmLine.lastIndex(UTF8String)`), and empty
     * input fails that job. Each line is then parsed once per action, into
     * an `UnsafeRow` of the label and an `UnsafeArrayData`, with no
     * `VectorUDT` and no encoder on the way. */
   def read(spark: SparkSession, path: String, numFeatures: Int = -1): DataFrame = {
-    val lines = spark.read.text(path).queryExecution.toRdd
-      .map(_.getUTF8String(0).toString.trim).filter(LibSvmLine.isData)
+    val text = spark.read.text(path).queryExecution.toRdd
+    val lines = text.map(_.getUTF8String(0).toString.trim).filter(LibSvmLine.isData)
     val dim =
       if (numFeatures > 0) numFeatures
-      else math.max(1, lines.map(LibSvmLine.lastIndex).reduce(math.max))
+      else math.max(1, text.map(r => LibSvmLine.lastIndex(r.getUTF8String(0)))
+        .filter(_ >= 0).reduce(math.max))
     val rows = lines.mapPartitions[InternalRow] { it =>
       val x = new Array[Double](dim)
       val row = new UnsafeRowWriter(2, 8 * (1 + (dim + 63) / 64 + dim))
@@ -158,89 +160,86 @@ object LibSvmLine {
   }
 
   /** [[sv]] straight off the text source's bytes, with no `String` per
-    * line: each `idx:val` token is read in one pass — the index's digits,
-    * the `:`, then the value through [[double]]'s fast path. A value off
-    * that path is parsed from its own token as [[double]] parses it.
-    * Anything else out of the ordinary (a byte outside ASCII, an index
-    * that is not 1–9 plain digits or lies outside the vector, a token
-    * without a `:`) sends the whole line through the `String` form, so
-    * values, placement and error messages match that form's. */
+    * line, 8 bytes per step: each token's end (the next space), then the
+    * `idx:val` token itself — the index's digits and the `:`, then the
+    * value through [[double]]'s fast path. A value off that path is
+    * parsed from its own token as [[double]] parses it. Anything else
+    * out of the ordinary (a byte outside ASCII, an index that is not 1–7
+    * plain digits or lies outside the vector, a token without a `:`)
+    * sends the whole line through the `String` form, so values,
+    * placement and error messages match that form's. */
   def sv(line: UTF8String, dim: Int): (Array[Double], Double) = {
     val r = scan(line, dim)
     if (r ne null) r else sv(line.toString, dim)
   }
 
   /** [[sv]]'s byte scan, or null where the line needs the `String` form.
-    * Token 0 is the coefficient; each later one is `idx:val`, its index
-    * read as plain digits up to the `:`, and its value through the same
-    * fast path as [[double]]'s, ending at the next space or the line's
-    * last non-space byte. */
+    * The bytes are read as 8-byte words (SWAR: SIMD within a register):
+    * per token, the end is the first space of the words from its start;
+    * token 0 is the coefficient, each later one is `idx:val` with the
+    * index's digits and the `:` in its first word. A value is on the fast
+    * path when it is an optional sign, then at most 15 digits and at
+    * most one `.` (16 bytes at most: two words, whose non-digit bytes are
+    * counted with a mask); its digits are folded with three multiplies
+    * per 8 ([[fold]]) and it is one [[exact]] operation, as in [[double]].
+    * Every other value (an exponent, `NaN`, 16+ digits) is parsed from its
+    * token by [[double]]. No branch depends on a value's sign, which
+    * varies from token to token, and the branches on its length go one
+    * way while its `.` lies in its first 8 bytes. */
   private def scan(line: UTF8String, dim: Int): (Array[Double], Double) = {
-    // a text row's bytes sit in a byte array: read them there, with plain
-    // array loads (anything else is copied into one)
-    val onHeap = line.getBaseObject.isInstanceOf[Array[Byte]]
-    val bytes = if (onHeap) line.getBaseObject.asInstanceOf[Array[Byte]] else line.getBytes
-    val off = if (onHeap) (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt else 0
+    val bytes = bytesOf(line)
+    val off = offsetOf(line)
     def at(i: Int): Int = bytes(off + i)
     var end = line.numBytes
     while (end > 0 && at(end - 1) == ' ') end -= 1
+    val until = off + end
     var x = new Array[Double](if (dim > 0) dim else 16)
     var maxIdx = 0
     var coef = 0.0
     var p = -1          // the space before the token (none before token 0)
     while (p < end) {
+      val q = space(bytes, off + p + 1, until) - off    // the token's end
       var i = p + 1
       var idx = 0
-      var c = 0
       if (p >= 0) {
-        val t = i
-        while (i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
-          if (i - t == 9) return null
-          idx = idx * 10 + c; i += 1
-        }
-        if (i == t || i == end || at(i) != ':') return null
+        // the index: 1–7 plain digits, then a `:`, in the token's first word
+        val d = word(bytes, off + i, until) ^ Zeros
+        val n = java.lang.Long.numberOfTrailingZeros(nonDigits(d)) >>> 3
+        if (n == 0 || n == 8 || i + n >= q || ((d >>> (8 * n)) & 0xFF) != (':' ^ '0')) return null
+        idx = fold8(d, n).toInt
         if (idx < 1 || (dim > 0 && idx > dim)) return null
-        i += 1
+        i += n + 1
       }
-      // the value from `from`: [[double]]'s fast path, NaN off it
       val from = i
-      val neg = i < end && at(i) == '-'
-      if (i < end && (at(i) == '-' || at(i) == '+')) i += 1
-      var m = 0L; var sig = 0; var scale = 0; var digits = 0
-      var e = 0
-      var fast = true
-      while (fast && i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
-        if (m != 0 || c != 0) sig += 1
-        m = m * 10 + c; digits += 1; i += 1
-        fast = sig <= 15
-      }
-      if (fast && i < end && at(i) == '.') {
-        i += 1
-        while (fast && i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
-          if (m != 0 || c != 0) sig += 1
-          m = m * 10 + c; digits += 1; scale += 1; i += 1
-          fast = sig <= 15
+      // the sign in arithmetic, not in a branch: half the values are
+      // negative, and a branch on it mispredicts on about every other value
+      val c0 = if (i < q) at(i) & 0xFF else 0
+      val minus = ((c0 ^ '-') - 1) >>> 31          // 1 for '-', else 0
+      val sign = minus.toLong << 63
+      i += minus + (((c0 ^ '+') - 1) >>> 31)
+      val len = q - i
+      var v = Double.NaN
+      if (len > 0 && len <= 16) {
+        val lo = nonDigits(word(bytes, off + i, until) ^ Zeros) & FirstBytes(math.min(len, 8))
+        val hi = nonDigits(word(bytes, off + i + 8, until) ^ Zeros) & FirstBytes(math.max(len - 8, 0))
+        val others = java.lang.Long.bitCount(lo) + java.lang.Long.bitCount(hi)
+        val dot =
+          if (lo != 0) java.lang.Long.numberOfTrailingZeros(lo) >>> 3
+          else if (hi != 0) 8 + (java.lang.Long.numberOfTrailingZeros(hi) >>> 3)
+          else len
+        if ((others == 0 || others == 1 && at(i + dot) == '.') && len > others && len - others <= 15) {
+          val scale = len - math.min(dot + 1, len)
+          val m = fold(bytes, off + i, dot, until) * Pow10L(scale) +
+            fold(bytes, off + i + dot + 1, scale, until)
+          v = java.lang.Double.longBitsToDouble(
+            java.lang.Double.doubleToRawLongBits(exact(m, -scale, neg = false)) ^ sign)
         }
       }
-      fast &&= digits > 0
-      if (fast && i < end && (at(i) == 'e' || at(i) == 'E')) {
-        i += 1
-        val eNeg = i < end && at(i) == '-'
-        if (i < end && (at(i) == '-' || at(i) == '+')) i += 1
-        val e0 = i
-        while (fast && i < end && { c = at(i) - '0'; c >= 0 && c <= 9 }) {
-          e = e * 10 + c; i += 1
-          fast = e <= 1000
-        }
-        fast &&= i > e0
-        if (eNeg) e = -e
-      }
-      var v = if (fast && (i == end || at(i) == ' ')) exact(m, e - scale, neg) else Double.NaN
       if (v != v) {
         // off the fast path: the token as a String, parsed as `double` does
         i = from
-        while (i < end && at(i) != ' ') { if (at(i) < 0) return null; i += 1 }
-        val t = new String(Array.tabulate(i - from)(k => at(from + k).toChar))
+        while (i < q) { if (at(i) < 0) return null; i += 1 }
+        val t = new String(Array.tabulate(q - from)(k => at(from + k).toChar))
         v = double(t, 0, t.length)
       }
       if (p < 0) coef = v
@@ -251,11 +250,89 @@ object LibSvmLine {
         }
         x(idx - 1) = v
       }
-      p = i
+      p = q
     }
     if (dim > 0) (x, coef)
     else (if (x.length == maxIdx) x else java.util.Arrays.copyOf(x, maxIdx), coef)
   }
+
+  /** The byte array holding `line`'s bytes: a text row's own (read in
+    * place), else a copy. */
+  private def bytesOf(line: UTF8String): Array[Byte] = line.getBaseObject match {
+    case b: Array[Byte] => b
+    case _ => line.getBytes
+  }
+
+  /** Where `line`'s bytes start in [[bytesOf]]. */
+  private def offsetOf(line: UTF8String): Int =
+    if (line.getBaseObject.isInstanceOf[Array[Byte]])
+      (line.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt
+    else 0
+
+  /** 1e0 … 1e15 as longs. */
+  private val Pow10L = Array.iterate(1L, 16)(_ * 10)
+  private val LittleEndian = java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.LITTLE_ENDIAN
+  /** Eight '0' bytes: a word xor this holds each digit byte as its value. */
+  private final val Zeros = 0x3030303030303030L
+  /** FirstBytes(n): a mask of a word's first n (0–8) bytes, from a table
+    * rather than a branch, as a value's length varies token to token. */
+  private val FirstBytes = Array.tabulate(9)(n => if (n == 8) -1L else (1L << (8 * n)) - 1)
+
+  /** The 8 bytes from `b(i)` as a long, `b(i)` its lowest byte: one load
+    * while they lie inside `b` (bytes past `until` are loaded, and the
+    * callers mask or stop before them), else the bytes below `until` with
+    * 0 (neither a digit nor a space) above them. */
+  private def word(b: Array[Byte], i: Int, until: Int): Long =
+    if (i + 8 <= b.length) {
+      val w = Platform.getLong(b, Platform.BYTE_ARRAY_OFFSET + i.toLong)
+      if (LittleEndian) w else java.lang.Long.reverseBytes(w)
+    } else {
+      var w = 0L
+      var k = math.min(until, i + 8) - 1
+      while (k >= i) { w = (w << 8) | (b(k) & 0xFF); k -= 1 }
+      w
+    }
+
+  /** The index of the first space at or after `b(from)`, or `until`. A
+    * space is a zero byte of the word xor 0x20s, and the lowest byte the
+    * zero-byte test flags is exact. */
+  private def space(b: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    var len = 8
+    while (len == 8 && i < until) {
+      val z = word(b, i, until) ^ 0x2020202020202020L
+      val zero = (z - 0x0101010101010101L) & ~z & 0x8080808080808080L
+      len = math.min(java.lang.Long.numberOfTrailingZeros(zero) >>> 3, until - i)
+      i += len
+    }
+    i
+  }
+
+  /** The top bit of each byte of `d` (a word xor [[Zeros]]) that is not
+    * an ASCII digit: a byte is a digit when its xor with '0' is below 10,
+    * that is when neither its top bit nor that of (its low 7 bits + 0x76)
+    * is set (no carry crosses a byte). */
+  private def nonDigits(d: Long): Long =
+    (((d & 0x7F7F7F7F7F7F7F7FL) + 0x7676767676767676L) | d) & 0x8080808080808080L
+
+  /** The value of the first `n` (0–8) digit bytes of `d` (a word xor
+    * [[Zeros]]): moved to the word's top (the first one most significant,
+    * zeros below), then folded pairwise, in fours and in eights with
+    * three multiplies. */
+  private def fold8(d: Long, n: Int): Long =
+    if (n == 0) 0L
+    else {
+      var v = d << (64 - 8 * n)
+      v = ((v * 2561) >>> 8) & 0x00FF00FF00FF00FFL               // 10·a + b
+      v = ((v * 6553601) >>> 16) & 0x0000FFFF0000FFFFL          // 100·ab + cd
+      (v * 42949672960001L) >>> 32                              // 10⁴·abcd + efgh
+    }
+
+  /** The value of the `n` (0–16) digits at `b(from)`. */
+  private def fold(b: Array[Byte], from: Int, n: Int, until: Int): Long =
+    if (n <= 8) fold8(word(b, from, until) ^ Zeros, n)
+    else fold8(word(b, from, until) ^ Zeros, 8) * Pow10L(n - 8) +
+      fold8(word(b, from + 8, until) ^ Zeros, n - 8)
 
   /** Whether a trimmed LIBSVM line holds a row: not blank, not a `#` comment. */
   def isData(line: String): Boolean = line.nonEmpty && line.charAt(0) != '#'
@@ -308,6 +385,36 @@ object LibSvmLine {
       val c = line.indexOf(':', sp + 1)
       if (c < 0) malformed(line, sp + 1, line.length)
       index(line, sp + 1, c)
+    }
+  }
+
+  /** [[lastIndex]] of a raw text line, read off its bytes without a
+    * `String`: −1 for a line that is not a row (blank or `#`, after the
+    * trim [[LibSvmIO.read]] applies). A line whose first or last
+    * non-space byte is not a printable ASCII character (a tab, a `\r`,
+    * a multi-byte character) or is a `#`, or whose last token is not 1–9
+    * plain digits and a `:`, goes through the `String` form, so values
+    * and exceptions match that form's. */
+  def lastIndex(line: UTF8String): Int = {
+    val bytes = bytesOf(line)
+    val off = offsetOf(line)
+    def at(i: Int): Int = bytes(off + i)
+    var start = 0
+    var end = line.numBytes
+    while (start < end && at(start) == ' ') start += 1
+    while (end > start && at(end - 1) == ' ') end -= 1
+    if (start == end) return -1
+    val plain = at(start) > ' ' && at(start) != '#' && at(end - 1) > ' '
+    var t = end     // the last token's start
+    while (t > start && at(t - 1) != ' ') t -= 1
+    var i = t
+    var v = 0
+    while (i < end && i - t < 10 && at(i) >= '0' && at(i) <= '9') { v = v * 10 + at(i) - '0'; i += 1 }
+    if (plain && t == start) 0
+    else if (plain && i > t && i - t <= 9 && i < end && at(i) == ':') v
+    else {
+      val s = line.toString.trim
+      if (isData(s)) lastIndex(s) else -1
     }
   }
 

@@ -91,4 +91,46 @@ class KernelFormsSpec extends SparkSpec {
       assert(none(0).isNaN, "an empty panel writes nothing")
     }
   }
+
+  test("the array exp equals StrictMath.exp bit for bit: random inputs, branch edges, specials") {
+    def bitsOf(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def ulps(x: Double, k: Int) = (-k to k).map(d => java.lang.Double.longBitsToDouble(bitsOf(x) + d))
+    val ln2 = math.log(2)
+    // |x| = 1.5·ln2 rounded to its high word: the general path's bound
+    val bound = java.lang.Double.longBitsToDouble(0x3FF0A2B2L << 32)
+    val edges = Seq(bound, -bound, 700.0, -700.0, -709.78, -708.39, 709.78, -745.13, -745.14)
+      .flatMap(ulps(_, 3)) ++
+      (-1010 to -1).flatMap(k => ulps((k + 0.5) * ln2, 3)) ++
+      Seq(Double.NaN, java.lang.Double.longBitsToDouble(0x7FF0000000000001L), 0.0, -0.0,
+        Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue, -Double.MaxValue)
+    val rng = new java.util.SplittableRandom(14)
+    // 10.24M random inputs: raw bit patterns, the whole finite range of
+    // exp, the general path's range, and kernel finishes −γ·s
+    val random = Iterator.range(0, 2500).map { c =>
+      Array.tabulate(4096) { _ =>
+        c % 4 match {
+          case 0 => java.lang.Double.longBitsToDouble(rng.nextLong())
+          case 1 => rng.nextDouble(-746.0, 710.0)
+          case 2 => rng.nextDouble(-700.0, -1.0)
+          case _ => -rng.nextDouble(0.01, 3.0) * rng.nextDouble(0.0, 200.0)
+        }
+      }
+    }
+    var checked = 0L
+    val bad = (Iterator.single(edges.toArray) ++ random).flatMap { xs =>
+      val got = xs.clone()
+      Kernel.strictExp(got, got.length)
+      checked += xs.length
+      xs.indices.iterator.collect {
+        case j if bitsOf(got(j)) != bitsOf(StrictMath.exp(xs(j))) =>
+          s"exp(${xs(j)}) [${bitsOf(xs(j)).toHexString}]: ${got(j)} vs ${StrictMath.exp(xs(j))}"
+      }
+    }.take(5).toList
+    assert(bad.isEmpty, bad.mkString("; "))
+    assert(checked >= 10000000L, s"$checked inputs")
+    // n bounds the pass: the entries past it stay as they are
+    val part = Array(-3.0, -2.0, 5.0)
+    Kernel.strictExp(part, 2)
+    assert(part.toSeq === Seq(StrictMath.exp(-3.0), StrictMath.exp(-2.0), 5.0))
+  }
 }

@@ -3,6 +3,7 @@ package graft.ml
 import java.lang.Double.doubleToRawLongBits
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.{Failure, Success, Try}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,14 +108,16 @@ class LibSvmLineSpec extends AnyFunSuite {
     }
 
   /** The byte scan's mismatch against the String form on `line`, if any:
-    * read from a buffer with bytes before and after it, as a text row's are. */
-  private def byteMismatch(line: String, dim: Int): Option[String] = {
+    * read from a buffer with bytes before and `after` digits after it, as
+    * a text row's are (so an 8-byte load past the line sees digits, or
+    * has to stop at the array's end). */
+  private def byteMismatch(line: String, dim: Int, after: Int = 7): Option[String] = {
     val b = line.getBytes(UTF_8)
-    val buf = Array.fill[Byte](b.length + 7)('9'.toByte)
+    val buf = Array.fill[Byte](3 + b.length + after)('9'.toByte)
     System.arraycopy(b, 0, buf, 3, b.length)
     val want = parsed(LibSvmLine.sv(line, dim))
     val got = parsed(LibSvmLine.sv(UTF8String.fromBytes(buf, 3, b.length), dim))
-    if (got == want) None else Some(s"'$line' dim $dim: String $want, bytes $got")
+    if (got == want) None else Some(s"'$line' dim $dim after $after: String $want, bytes $got")
   }
 
   test("SV byte scan equals the String form on random tokens, as coefficients and values") {
@@ -154,6 +157,65 @@ class LibSvmLineSpec extends AnyFunSuite {
       dim <- Seq(4, -1)
       m <- byteMismatch(line, dim)
     } yield m
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("SV byte scan at the array's end, off the heap, and on long, signed and E-notation values") {
+    val values = Seq("0.1234567", "-0.12345678", "0.123456789", "12345.123456789", "-1.2345678901234",
+      "123456789012345", "1234567890123456", "12345678.9012345", "1234567.89012345", "0.000000000012345",
+      "+0.5", "+12", "-007.25", "000.0001", "00000000000000001", "1.0E-5", "-2.5e+3", "1e5", "5E-324",
+      "7.", ".25", "-.5", "1.2.3", "1..2", "--1", "+-1", "1-2", "-", "+", ".", "1e", "NaN")
+    val lines = values.flatMap(v => Seq(s"$v 1:2.5", s"0.5 1:$v", s"0.5 1:$v 2:$v", s"0.5 63:$v")) ++
+      Seq("1 1234567:1", "1 12345678:1", "1 1:2 ", "-1 7:0", "0 1:1 2:2 3:3 4:4 5:5 6:6 7:7 8:8")
+    // without a dim, index 12345678 would size a 98 MB vector: that line
+    // runs with dim 70 only, where both forms reject the index
+    val bad = for {
+      line <- lines
+      dim <- Seq(70, -1)
+      if dim > 0 || !line.contains("12345678:")
+      after <- 0 to 8
+      m <- byteMismatch(line, dim, after)
+    } yield m
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
+    // a line outside the heap is copied into an array of its own length
+    for (line <- lines) {
+      val b = line.getBytes(UTF_8)
+      val addr = Platform.allocateMemory(math.max(1, b.length))
+      try {
+        Platform.copyMemory(b, Platform.BYTE_ARRAY_OFFSET, null, addr, b.length)
+        val offHeap = UTF8String.fromAddress(null, addr, b.length)
+        assert(parsed(LibSvmLine.sv(offHeap, 70)) === parsed(LibSvmLine.sv(line, 70)), line)
+      } finally Platform.freeMemory(addr)
+    }
+  }
+
+  test("lastIndex off a raw line's bytes equals the trimmed String form, values and exceptions") {
+    def viaString(line: String): Try[Int] = Try {
+      val t = line.trim
+      if (LibSvmLine.isData(t)) LibSvmLine.lastIndex(t) else -1
+    }
+    def outcome(r: Try[Int]) = r match {
+      case Success(v) => Right(v)
+      case Failure(e) => Left((e.getClass, e.getMessage))
+    }
+    // the edge lines of the reader's specs, and odd last tokens
+    val lines = Seq("# a comment line", "", "   ", "1 1:0.5 3:-2.25", "  -1 2:7   4:1e-3  ",
+      "\t1 1:4\t", "1 2:8\t ", "#2 1:1", " #2 1:1", "-1 1:-0 2:-0.0 3:0 4:5", "1 1:2:3 3:4:",
+      "1  4:1.5", "1", "-1 ", "2.5", "1 3:1 2:1", "1 2:1 2:1", "1 0:1 2:1", "1 1:1 5:1",
+      "1 1: 2:1", "1 1:1 2:", "1 1:1\t2:1", "1 1:1 7", "x 1:1", "1 0000000002:1.5",
+      "1 000000002:1.5", "1 123456789:1", "1 1234567890:1", "1 99999999999:1", "1 +5:1", "1 -5:1",
+      "1 \u0663:1.5", "1 1:1 caf\u00e9:2", "\u00e9 1:1", "1 1:\u00e9", "1 :1", "1 a:1",
+      "1 1:1\r", "\r", "\u00a0", "1\u00a02:1", "1 2:1 #3:1")
+    val bad = for {
+      line <- lines
+      after <- Seq(0, 5)
+      b = line.getBytes(UTF_8)
+      buf = Array.fill[Byte](2 + b.length + after)(' '.toByte)
+      _ = System.arraycopy(b, 0, buf, 2, b.length)
+      got = outcome(Try(LibSvmLine.lastIndex(UTF8String.fromBytes(buf, 2, b.length))))
+      want = outcome(viaString(line))
+      if got != want
+    } yield s"'$line': String $want, bytes $got"
     assert(bad.isEmpty, bad.mkString("; "))
   }
 }

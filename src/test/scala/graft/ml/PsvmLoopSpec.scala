@@ -264,6 +264,29 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     }
   }
 
+  test("multi-block Gᵀα and w are the per-partition partials added in partition order, bit for bit") {
+    val p = dualRows.head._3.length
+    val dual = Ipm.dual(dualFrame(3), "id", "y", "h", 1.0, maxIter = 4, tol = 1e-9)
+    // per partition: Σ hᵢ·αᵢ over its rows in order, from 0.0
+    val partials = dual.blocks.glom().collect().map { part =>
+      val acc = new Array[Double](p)
+      for ((_, b) <- part; i <- b.alpha.indices; j <- 0 until p) acc(j) += b.h(i)(j) * b.alpha(i)
+      acc
+    }
+    assert(partials.length === 3)
+    def sum(order: Seq[Array[Double]]) =
+      order.foldLeft(new Array[Double](p))((t, a) => Array.tabulate(p)(j => t(j) + a(j)))
+    val want = bits(sum(partials.toSeq))
+    // the order matters on these rows: another order gives other bits
+    assert(bits(sum(partials.toSeq.reverse)) !== want)
+    assert(bits(Ipm.gTalpha(dual.blocks, p)) === want)
+    val free = (a: Double, y: Double) => a > 1e-4 && a < 1.0 * (1 - 1e-3)
+    val kkt = IcfSvmTrainer.primal(dual.blocks, p)(_._2, free)(_ => Array.empty[Unit])
+    assert(bits(kkt.w) === want)
+    kkt.cached.unpersist(false)
+    dual.release()
+  }
+
   test("a fit leaves no cached RDD behind once the model is unpersisted, and still predicts") {
     val df = blobs(400, 4, seed = 9)
     val before = sc.getPersistentRDDs.keySet

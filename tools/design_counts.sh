@@ -6,8 +6,11 @@
 # methods of the SV model (`def predict*` in IcfSvm.scala), the `join(`
 # sites of the PSVM fits (`IcfSvmTrainer` and `fitIpm`), the line
 # count of SparkEntry.scala, the reads through Spark's `libsvm` source in
-# src/main, the typed-Dataset (`.as[`) sites of IcfSvm.scala, and the
-# 4-partner block kernels (`def four`) of Kernels.scala.
+# src/main, the typed-Dataset (`.as[`) sites of IcfSvm.scala, the
+# 4-partner block kernels (`def four`) of Kernels.scala, the per-pair
+# `StrictMath.exp` calls in the `Kernel` panel forms, and the
+# `treeAggregate` sites of the PSVM solver and trainer (Ipm.scala,
+# IcfSvm.scala).
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -39,3 +42,7 @@ echo "spark_entry_loc $(wc -l < "$main/graft/SparkEntry.scala")"
 echo "libsvm_source_sites $(count 'format\("libsvm"\)' "$main")"
 echo "svm_typed_dataset_sites $(count '\.as\[' "$main/graft/ml/IcfSvm.scala")"
 echo "kernel_block_forms $(count 'def four' "$main/graft/ml/Kernels.scala")"
+panel_exp=$(awk '/def apply\(a: Array\[Double\], p: Panel, out: Array\[Double\]\): Unit = \{/ { on = 1; next }
+  on && /^    }$/ { on = 0 } on' "$main/graft/ml/Kernels.scala" | grep -c 'StrictMath\.exp' || true)
+echo "panel_strictmath_exp $panel_exp"
+echo "psvm_tree_aggregates $(count 'treeAggregate\(' "$main/graft/ml/Ipm.scala" "$main/graft/ml/IcfSvm.scala")"
