@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
 import graft.functions.HashFunctions
 
 /** §2.3 P2 (+P4 verification): MinHash + LSH near-duplicate detection.

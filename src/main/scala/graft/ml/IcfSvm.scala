@@ -356,8 +356,10 @@ object IcfSvmModel {
     * header is read on the driver through the Hadoop `FileSystem` of
     * `path` (no Spark job); the SV parts are parsed distributedly — the
     * model never touches the driver beyond the few header scalars. Each
-    * SV line is scanned once by [[LibSvmLine.sv]], straight from the text
-    * source's row bytes into the model's primitive SV table, with the values
+    * SV line is scanned once by the one LIBSVM line scanner
+    * ([[LibSvmLine.sv]]: one scanner per task, a token off its word-wise
+    * fast path parsed by itself), straight from the text source's row
+    * bytes into the model's primitive SV table, with the values
     * `String.toDouble` would give; `svs` is a view over the same parse. A
     * malformed line or an index outside [1, dim] fails the job that
     * reads it. */
@@ -377,7 +379,10 @@ object IcfSvmModel {
     // into an unsafe array, with no boxed per-element conversion.
     val headerDim = header.get("dim").map(_.toInt).getOrElse(-1)
     val table = spark.read.text(s"$path/sv").queryExecution.toRdd
-      .map(r => LibSvmLine.sv(r.getUTF8String(0), headerDim))
+      .mapPartitions { it =>
+        val scanner = new LibSvmLine
+        it.map(r => scanner.sv(r.getUTF8String(0), headerDim))
+      }
     val svs = GraftShim.internalCreateDataFrame(spark,
       table.map { case (x, coef) => InternalRow(UnsafeArrayData.fromPrimitiveArray(x), coef) },
       SvSchema)

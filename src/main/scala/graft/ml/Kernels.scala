@@ -1,7 +1,6 @@
 package graft.ml
 
 import org.apache.spark.sql.Column
-import graft.functions.VectorOps
 
 /** §2.1 M2–M5: the four PSVM kernels (reference: psvm kernel.cc,
   * kernel_type 0–3). Column forms use the fused native expressions

@@ -1,19 +1,22 @@
 package graft.ml
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShim
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** §2.1 M1: LIBSVM text format I/O (reference: psvm document.cc —
   * `label idx:val idx:val …`, 1-based sparse indices).
   *
-  * Reading scans Spark's splittable text source once per pass straight
-  * into primitive rows; writing re-serializes with column algebra only.
+  * Reading scans each line of Spark's splittable text source once per
+  * pass with [[LibSvmLine]], straight from the row's bytes into
+  * primitive rows; writing re-serializes with column algebra only.
   */
 object LibSvmIO {
 
@@ -23,63 +26,69 @@ object LibSvmIO {
     StructField("label", DoubleType, nullable = true),
     StructField("features", ArrayType(DoubleType, containsNull = false), nullable = false)))
 
+  /** What [[readSparse]] returns. */
+  private val SparseSchema = StructType(Seq(
+    StructField("label", DoubleType, nullable = true),
+    StructField("indices", ArrayType(IntegerType, containsNull = false), nullable = false),
+    StructField("values", ArrayType(DoubleType, containsNull = false), nullable = false)))
+
   /** Read → (label: double, features: array<double> dense), the rows,
     * partitions, order and bits of Spark's libsvm source with its vectors
     * converted to arrays: lines are trimmed, blank and `#` lines skipped,
     * indices must ascend within [1, dim], a `-0` value reads as `+0.0`
     * (the source's sparse vectors drop explicit zeros), and an `i:v:w`
-    * token reads as `v` ([[LibSvmLine.point]]). The vectors have
-    * `numFeatures` entries; without it (≤ 0) one index-only job over the
-    * text sizes them by the largest last index (at least 1), read off
-    * each line's bytes (`LibSvmLine.lastIndex(UTF8String)`), and empty
-    * input fails that job. Each line is then parsed once per action, into
-    * an `UnsafeRow` of the label and an `UnsafeArrayData`, with no
+    * token reads as `v` ([[LibSvmLine.row]]). The vectors have
+    * `numFeatures` entries; without it (≤ 0) one job over the text sizes
+    * them by the largest last index (at least 1), and empty input fails
+    * that job. Each line is scanned once per pass by [[LibSvmLine]] off
+    * the text row's bytes (no `String` per line) and written as an
+    * `UnsafeRow` of the label and an `UnsafeArrayData`, with no
     * `VectorUDT` and no encoder on the way. */
   def read(spark: SparkSession, path: String, numFeatures: Int = -1): DataFrame = {
     val text = spark.read.text(path).queryExecution.toRdd
-    val lines = text.map(_.getUTF8String(0).toString.trim).filter(LibSvmLine.isData)
     val dim =
       if (numFeatures > 0) numFeatures
-      else math.max(1, text.map(r => LibSvmLine.lastIndex(r.getUTF8String(0)))
-        .filter(_ >= 0).reduce(math.max))
-    val rows = lines.mapPartitions[InternalRow] { it =>
-      val x = new Array[Double](dim)
+      else math.max(1, text.mapPartitions(LibSvmLine.rows(_, Int.MaxValue).map(_.lastIndex))
+        .reduce(math.max))
+    val dense = text.mapPartitions[InternalRow] { it =>
       val row = new UnsafeRowWriter(2, 8 * (1 + (dim + 63) / 64 + dim))
       val arr = new UnsafeArrayWriter(row, 8)
-      it.map { l =>
-        java.util.Arrays.fill(x, 0.0)
-        val label = LibSvmLine.point(l, x)
+      LibSvmLine.rows(it, dim).map { s =>
         row.reset(); row.zeroOutNullBytes()
-        row.write(0, label)
+        row.write(0, s.label)
         val start = row.cursor()
         arr.initialize(dim)
         var i = 0
-        while (i < dim) { arr.write(i, x(i)); i += 1 }
+        while (i < dim) { arr.write(i, 0.0); i += 1 }
+        var k = 0
+        while (k < s.n) { arr.write(s.idx(k) - 1, s.vals(k)); k += 1 }
         row.setOffsetAndSizeFromPreviousCursor(1, start)
         row.getRow
       }
     }
-    GraftShim.internalCreateDataFrame(spark, rows, ReadSchema)
+    GraftShim.internalCreateDataFrame(spark, dense, ReadSchema)
   }
 
   /** Read WITHOUT densifying → (label: double, indices: array<int>
     * 0-based ascending, values: array<double>) — the representation the
     * reference actually stores (psvm document.cc sparse rows) and the
     * only one that survives rcv1-class dimensionality: a 47k-dim row
-    * with ~75 non-zeros is ~1 KB sparse vs ~370 KB densified. Plain
-    * splittable text parsing (one shuffle-free columnar map); libsvm
-    * lines carry ascending 1-based indices, preserved here as ascending
-    * 0-based — the order the merge-join kernels require. */
-  def readSparse(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .select(split(trim(col("value")), "\\s+").as("t"))
-      .filter(size(col("t")) >= 1 && length(element_at(col("t"), 1)) > 0)
-      .select(
-        element_at(col("t"), 1).cast("double").as("label"),
-        expr("transform(slice(t, 2, greatest(size(t) - 1, 0)), " +
-             "p -> cast(split(p, ':')[0] as int) - 1)").as("indices"),
-        expr("transform(slice(t, 2, greatest(size(t) - 1, 0)), " +
-             "p -> cast(split(p, ':')[1] as double))").as("values"))
+    * with ~75 non-zeros is ~1 KB sparse vs ~370 KB densified. The rows,
+    * partitions and entries are those of the `features` sparse vectors
+    * of Spark's libsvm source, as [[read]] scans them: blank and `#`
+    * lines skipped, indices strictly ascending (the order the merge-join
+    * kernels require), explicit zeros dropped, `i:v:w` read as `v`. */
+  def readSparse(spark: SparkSession, path: String): DataFrame = {
+    val text = spark.read.text(path).queryExecution.toRdd
+    val sparse = text.mapPartitions(LibSvmLine.rows(_, Int.MaxValue).map { s =>
+      val indices = new Array[Int](s.n)
+      var k = 0
+      while (k < s.n) { indices(k) = s.idx(k) - 1; k += 1 }
+      InternalRow(s.label, UnsafeArrayData.fromPrimitiveArray(indices),
+        UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(s.vals, s.n)))
+    })
+    GraftShim.internalCreateDataFrame(spark, sparse, SparseSchema)
+  }
 
   /** Write (labelCol, idxCol: array<int> 0-based, valCol: array<double>)
     * as LIBSVM text (1-based indices on disk). */
@@ -104,156 +113,157 @@ object LibSvmIO {
       .write.mode("overwrite").text(path)
 }
 
-/** One-pass scanner for psvm/LIBSVM text lines (`<head> idx:val …`, the
-  * SV lines of [[IcfSvmModel.loadText]]): it walks the line once and
-  * writes each value straight into the vector, with no `split`, no
-  * substring per token and no (index, value) tuple. Numbers parse bit for
-  * bit as `String.toDouble` / `String.toInt` do, and a token those reject
-  * is rejected here too.
+/** The one scanner of psvm/LIBSVM text lines (`label idx:val …`, psvm
+  * document.cc): the training and test data of [[LibSvmIO.read]] and
+  * [[LibSvmIO.readSparse]], and the SV lines of [[IcfSvmModel.loadText]].
+  * [[scan]] walks a text row's bytes once, 8 at a time, into the line's
+  * label and its (index, value) entries as read; each caller then
+  * applies its own placement policy to those entries ([[sv]], [[row]]).
+  * A token off the word-wise fast path is decoded by itself and parsed
+  * by [[LibSvmLine.double]] or [[LibSvmLine.index]], so every number is
+  * bit for bit `String.toDouble` / `String.toInt` and every token those
+  * reject fails; no line is decoded to a `String` but for an error
+  * message. One scanner serves one task: its entry buffers are reused
+  * from line to line, and hold the last line's entries.
   */
+final class LibSvmLine {
+  import LibSvmLine._
+
+  /** The last line's label (an SV line's coefficient). */
+  private[ml] var label = 0.0
+  /** The last line's entries: `n` 1-based indices and their values. */
+  private[ml] var n = 0
+  private[ml] var idx = new Array[Int](16)
+  private[ml] var vals = new Array[Double](16)
+  /** The last data line's last index, zero value or not (0 for a
+    * label-only line): the size that line needs ([[row]]). */
+  private[ml] var lastIndex = 0
+
+  /** An SV line as (x, coef). `x(idx − 1)` holds each `idx:val` (a later
+    * entry for the same index wins); its length is `dim` when `dim > 0`,
+    * else the line's largest index. An index outside [1, length] fails
+    * with `SV feature index … outside [1, length] (header dim …)`. */
+  def sv(line: UTF8String, dim: Int): (Array[Double], Double) = {
+    scan(line, data = false)
+    var size = dim
+    if (dim <= 0) {
+      size = 0
+      var k = 0
+      while (k < n) { size = math.max(size, idx(k)); k += 1 }
+    }
+    val x = new Array[Double](size)
+    var k = 0
+    while (k < n) {
+      val i = idx(k)
+      if (i < 1 || i > size) throw new IllegalArgumentException(
+        s"requirement failed: SV feature index $i outside [1, $size] (header dim $dim)")
+      x(i - 1) = vals(k)
+      k += 1
+    }
+    (x, label)
+  }
+
+  /** A data line as Spark's libsvm source reads it (`MLUtils.parseLibSVMRecord`
+    * on the trimmed line, then a sparse vector of `dim` entries): false
+    * for a blank or `#` line, else the label and the non-zero entries
+    * (a `-0` is a zero), whose indices ascend strictly within [1, dim].
+    * [[lastIndex]] is the last index, zero value or not. */
+  def row(line: UTF8String, dim: Int): Boolean = {
+    if (!scan(line, data = true)) return false
+    var prev = 0
+    var m = 0
+    var k = 0
+    while (k < n) {
+      val i = idx(k)
+      require(i > prev, "indices should be one-based and in ascending order; " +
+        s"found current=${i - 1}, previous=${prev - 1}; line=\"$line\"")
+      if (vals(k) != 0.0) { idx(m) = i; vals(m) = vals(k); m += 1 }
+      prev = i
+      k += 1
+    }
+    require(prev <= dim, s"index $prev above the feature count $dim; line=\"$line\"")
+    lastIndex = prev
+    n = m
+    true
+  }
+
+  /** Reads `line` into [[label]] and the entries, as read, by one of two
+    * grammars. The data grammar (`data`) is that of Spark's libsvm
+    * source: the line is trimmed as `String.trim` trims (the bytes
+    * 0x00–0x20, compared unsigned, as a multi-byte character's bytes are
+    * negative as Java bytes), a blank or `#` line holds no row (false),
+    * runs of spaces are skipped, and a value ends at a second `:`
+    * (`i:v:w` reads as `v`). The SV grammar is a single-space split with
+    * `toInt` and `toDouble` on psvm's SV lines: trailing spaces are
+    * dropped, and every other token, empty or not, is `idx:val` with the
+    * value to the token's end.
+    *
+    * The bytes are read as 8-byte words (SWAR: SIMD within a register):
+    * per token, the end is the first space of the words from its start.
+    * Token 0 is the label; each later one is `idx:val`, with the index's
+    * 1–7 digits and the `:` in its first word, and the value read by
+    * [[value]]. An index off that path (a sign, 8+ digits, a byte outside
+    * ASCII) is decoded by itself and parsed by [[index]]. */
+  private def scan(line: UTF8String, data: Boolean): Boolean = {
+    val bytes = bytesOf(line)
+    val off = offsetOf(line)
+    def at(i: Int): Int = bytes(off + i)
+    var start = 0
+    var end = line.numBytes
+    if (data) {
+      while (start < end && (at(start) & 0xFF) <= ' ') start += 1
+      while (end > start && (at(end - 1) & 0xFF) <= ' ') end -= 1
+      if (start == end || at(start) == '#') return false
+    } else while (end > 0 && at(end - 1) == ' ') end -= 1
+    val until = off + end
+    // an entry takes 2 bytes at least (its `:`, a space before it)
+    if (idx.length <= (end - start) / 2) {
+      idx = new Array[Int]((end - start) / 2 + 1)
+      vals = new Array[Double](idx.length)
+    }
+    val ids = idx
+    val vs = vals
+    var p = space(bytes, off + start, until) - off   // the label's end
+    label = value(bytes, off + start, off + p, until, colonEnds = false)
+    var k = 0
+    while (p < end) {
+      val q = space(bytes, off + p + 1, until) - off    // the token's end
+      if (q > p + 1 || !data) {   // the data grammar skips a run's empty tokens
+        // the index: 1–7 plain digits, then a `:`, in the token's first word
+        var i = p + 1
+        val d = word(bytes, off + i, until) ^ Zeros
+        val digits = java.lang.Long.numberOfTrailingZeros(nonDigits(d)) >>> 3
+        if (digits > 0 && digits < 8 && i + digits < q &&
+            ((d >>> (8 * digits)) & 0xFF) == (':' ^ '0')) {
+          ids(k) = fold8(d, digits).toInt
+          i += digits + 1
+        } else {
+          val c = colon(bytes, off + i, off + q) - off
+          ids(k) = offIndex(line, bytes, off + i, off + c, off + q)
+          i = c + 1
+        }
+        vs(k) = value(bytes, off + i, off + q, until, colonEnds = data)
+        k += 1
+      }
+      p = q
+    }
+    n = k
+    true
+  }
+}
+
 object LibSvmLine {
 
   /** 1e0 … 1e22: the powers of ten a double holds exactly. */
   private val Pow10 = Array(1e0, 1e1, 1e2, 1e3, 1e4, 1e5, 1e6, 1e7, 1e8, 1e9, 1e10,
     1e11, 1e12, 1e13, 1e14, 1e15, 1e16, 1e17, 1e18, 1e19, 1e20, 1e21, 1e22)
 
-  /** An SV line as (x, coef). `x(idx − 1)` holds each `idx:val` (a later
-    * entry for the same index wins); its length is `dim` when `dim > 0`,
-    * else the line's largest index. An index outside [1, length] fails
-    * with `SV feature index … outside [1, length]`. */
-  def sv(line: String, dim: Int): (Array[Double], Double) = {
-    var end = line.length
-    while (end > 0 && line.charAt(end - 1) == ' ') end -= 1   // as `split(' ')` drops them
-    val sp = line.indexOf(' ')
-    val headEnd = if (sp < 0 || sp > end) end else sp
-    val coef = double(line, 0, headEnd)
-    var x = new Array[Double](if (dim > 0) dim else 16)
-    var maxIdx = 0
-    var badIdx = 1        // the first index below 1 when sized by the line
-    var p = headEnd + 1
-    while (p < end) {
-      var q = line.indexOf(' ', p)
-      if (q < 0) q = end
-      val c = line.indexOf(':', p)
-      if (c < 0 || c >= q)
-        throw new NumberFormatException(s"malformed entry '${line.substring(p, q)}' (want idx:val)")
-      val idx = index(line, p, c)
-      val v = double(line, c + 1, q)
-      if (dim > 0) {
-        require(idx >= 1 && idx <= dim,
-          s"SV feature index $idx outside [1, $dim] (header dim $dim)")
-        x(idx - 1) = v
-      } else if (idx < 1) {
-        if (badIdx >= 1) badIdx = idx
-      } else {
-        if (idx > x.length) x = java.util.Arrays.copyOf(x, math.max(idx, 2 * x.length))
-        x(idx - 1) = v
-        maxIdx = math.max(maxIdx, idx)
-      }
-      p = q + 1
-    }
-    if (dim > 0) (x, coef)
-    else {
-      require(badIdx >= 1, s"SV feature index $badIdx outside [1, $maxIdx] (header dim $dim)")
-      (if (x.length == maxIdx) x else java.util.Arrays.copyOf(x, maxIdx), coef)
-    }
-  }
-
-  /** [[sv]] straight off the text source's bytes, with no `String` per
-    * line, 8 bytes per step: each token's end (the next space), then the
-    * `idx:val` token itself — the index's digits and the `:`, then the
-    * value through [[double]]'s fast path. A value off that path is
-    * parsed from its own token as [[double]] parses it. Anything else
-    * out of the ordinary (a byte outside ASCII, an index that is not 1–7
-    * plain digits or lies outside the vector, a token without a `:`)
-    * sends the whole line through the `String` form, so values,
-    * placement and error messages match that form's. */
-  def sv(line: UTF8String, dim: Int): (Array[Double], Double) = {
-    val r = scan(line, dim)
-    if (r ne null) r else sv(line.toString, dim)
-  }
-
-  /** [[sv]]'s byte scan, or null where the line needs the `String` form.
-    * The bytes are read as 8-byte words (SWAR: SIMD within a register):
-    * per token, the end is the first space of the words from its start;
-    * token 0 is the coefficient, each later one is `idx:val` with the
-    * index's digits and the `:` in its first word. A value is on the fast
-    * path when it is an optional sign, then at most 15 digits and at
-    * most one `.` (16 bytes at most: two words, whose non-digit bytes are
-    * counted with a mask); its digits are folded with three multiplies
-    * per 8 ([[fold]]) and it is one [[exact]] operation, as in [[double]].
-    * Every other value (an exponent, `NaN`, 16+ digits) is parsed from its
-    * token by [[double]]. No branch depends on a value's sign, which
-    * varies from token to token, and the branches on its length go one
-    * way while its `.` lies in its first 8 bytes. */
-  private def scan(line: UTF8String, dim: Int): (Array[Double], Double) = {
-    val bytes = bytesOf(line)
-    val off = offsetOf(line)
-    def at(i: Int): Int = bytes(off + i)
-    var end = line.numBytes
-    while (end > 0 && at(end - 1) == ' ') end -= 1
-    val until = off + end
-    var x = new Array[Double](if (dim > 0) dim else 16)
-    var maxIdx = 0
-    var coef = 0.0
-    var p = -1          // the space before the token (none before token 0)
-    while (p < end) {
-      val q = space(bytes, off + p + 1, until) - off    // the token's end
-      var i = p + 1
-      var idx = 0
-      if (p >= 0) {
-        // the index: 1–7 plain digits, then a `:`, in the token's first word
-        val d = word(bytes, off + i, until) ^ Zeros
-        val n = java.lang.Long.numberOfTrailingZeros(nonDigits(d)) >>> 3
-        if (n == 0 || n == 8 || i + n >= q || ((d >>> (8 * n)) & 0xFF) != (':' ^ '0')) return null
-        idx = fold8(d, n).toInt
-        if (idx < 1 || (dim > 0 && idx > dim)) return null
-        i += n + 1
-      }
-      val from = i
-      // the sign in arithmetic, not in a branch: half the values are
-      // negative, and a branch on it mispredicts on about every other value
-      val c0 = if (i < q) at(i) & 0xFF else 0
-      val minus = ((c0 ^ '-') - 1) >>> 31          // 1 for '-', else 0
-      val sign = minus.toLong << 63
-      i += minus + (((c0 ^ '+') - 1) >>> 31)
-      val len = q - i
-      var v = Double.NaN
-      if (len > 0 && len <= 16) {
-        val lo = nonDigits(word(bytes, off + i, until) ^ Zeros) & FirstBytes(math.min(len, 8))
-        val hi = nonDigits(word(bytes, off + i + 8, until) ^ Zeros) & FirstBytes(math.max(len - 8, 0))
-        val others = java.lang.Long.bitCount(lo) + java.lang.Long.bitCount(hi)
-        val dot =
-          if (lo != 0) java.lang.Long.numberOfTrailingZeros(lo) >>> 3
-          else if (hi != 0) 8 + (java.lang.Long.numberOfTrailingZeros(hi) >>> 3)
-          else len
-        if ((others == 0 || others == 1 && at(i + dot) == '.') && len > others && len - others <= 15) {
-          val scale = len - math.min(dot + 1, len)
-          val m = fold(bytes, off + i, dot, until) * Pow10L(scale) +
-            fold(bytes, off + i + dot + 1, scale, until)
-          v = java.lang.Double.longBitsToDouble(
-            java.lang.Double.doubleToRawLongBits(exact(m, -scale, neg = false)) ^ sign)
-        }
-      }
-      if (v != v) {
-        // off the fast path: the token as a String, parsed as `double` does
-        i = from
-        while (i < q) { if (at(i) < 0) return null; i += 1 }
-        val t = new String(Array.tabulate(q - from)(k => at(from + k).toChar))
-        v = double(t, 0, t.length)
-      }
-      if (p < 0) coef = v
-      else {
-        if (dim <= 0) {
-          if (idx > x.length) x = java.util.Arrays.copyOf(x, math.max(idx, 2 * x.length))
-          maxIdx = math.max(maxIdx, idx)
-        }
-        x(idx - 1) = v
-      }
-      p = q
-    }
-    if (dim > 0) (x, coef)
-    else (if (x.length == maxIdx) x else java.util.Arrays.copyOf(x, maxIdx), coef)
+  /** The data rows among a text source's rows, each read by
+    * [[LibSvmLine.row]] (within [1, dim]) into one scanner, which the
+    * iterator returns for each: use it before taking the next. */
+  private[ml] def rows(text: Iterator[InternalRow], dim: Int): Iterator[LibSvmLine] = {
+    val s = new LibSvmLine
+    text.filter(r => s.row(r.getUTF8String(0), dim)).map(_ => s)
   }
 
   /** The byte array holding `line`'s bytes: a text row's own (read in
@@ -334,93 +344,65 @@ object LibSvmLine {
     else fold8(word(b, from, until) ^ Zeros, 8) * Pow10L(n - 8) +
       fold8(word(b, from + 8, until) ^ Zeros, n - 8)
 
-  /** Whether a trimmed LIBSVM line holds a row: not blank, not a `#` comment. */
-  def isData(line: String): Boolean = line.nonEmpty && line.charAt(0) != '#'
+  /** The index of an `idx:val` token `b(from until end)` off the fast
+    * path, its `:` at `colon` (`end` when it has none), parsed by
+    * [[index]]. */
+  private def offIndex(line: UTF8String, b: Array[Byte], from: Int, colon: Int, end: Int): Int = {
+    if (colon == end) throw new NumberFormatException(
+      s"malformed entry '${decode(b, from, end)}' (want idx:val) in line \"$line\"")
+    val t = decode(b, from, colon)
+    index(t, 0, t.length)
+  }
 
-  /** A trimmed LIBSVM data line (`label idx:val …`) as Spark's libsvm
-    * source reads it into a dense vector: `x` (all zeros on entry, its
-    * length the feature count) gets each non-zero value at its 0-based
-    * index, and the label is returned. Tokens split on single spaces
-    * (runs of spaces are skipped) and `idx:val` on the first two colons,
-    * so `1:2:3` reads as 2; indices must ascend strictly and lie in
-    * [1, x.length]; a zero (or `-0`) value leaves `+0.0`, as the source's
-    * sparse vectors drop explicit zeros. Numbers parse as `String.toDouble`
-    * / `String.toInt`, and a token those (or the source) reject fails. */
-  def point(line: String, x: Array[Double]): Double = {
-    val end = line.length
-    val sp = line.indexOf(' ')
-    val headEnd = if (sp < 0) end else sp
-    val label = double(line, 0, headEnd)
-    var prev = -1
-    var p = headEnd + 1
-    while (p < end) {
-      var q = line.indexOf(' ', p)
-      if (q < 0) q = end
-      if (q > p) {
-        val c = line.indexOf(':', p)
-        if (c < 0 || c >= q) malformed(line, p, q)
-        var v = line.indexOf(':', c + 1)   // a second colon ends the value
-        if (v < 0 || v > q) v = q
-        if (v == c + 1) malformed(line, p, q)
-        val i = index(line, p, c) - 1
-        require(i > prev, "indices should be one-based and in ascending order; " +
-          s"found current=$i, previous=$prev; line=\"$line\"")
-        require(i < x.length, s"index ${i + 1} above the feature count ${x.length}; line=\"$line\"")
-        val d = double(line, c + 1, v)
-        if (d != 0.0) x(i) = d
-        prev = i
+  /** The value token `b(from until q)` (`until`: the line's end in `b`).
+    * On the fast path, an optional sign, then at most 15 digits and at
+    * most one `.` (16 bytes at most: two words, whose non-digit bytes are
+    * counted with a mask), its digits are folded with three multiplies
+    * per 8 ([[fold]]) and it is one [[exact]] operation, as in [[double]].
+    * Every other value (an exponent, `NaN`, 16+ digits, a byte outside
+    * ASCII) is decoded by itself, up to its first `:` when `colonEnds`,
+    * and parsed by [[double]]. No branch depends on a value's sign, which
+    * varies from token to token, and the branches on its length go one
+    * way while its `.` lies in its first 8 bytes. */
+  private def value(b: Array[Byte], from: Int, q: Int, until: Int, colonEnds: Boolean): Double = {
+    // the sign in arithmetic, not in a branch: half the values are
+    // negative, and a branch on it mispredicts on about every other value
+    var i = from
+    val c0 = if (i < q) b(i) & 0xFF else 0
+    val minus = ((c0 ^ '-') - 1) >>> 31          // 1 for '-', else 0
+    val sign = minus.toLong << 63
+    i += minus + (((c0 ^ '+') - 1) >>> 31)
+    val len = q - i
+    if (len > 0 && len <= 16) {
+      val lo = nonDigits(word(b, i, until) ^ Zeros) & FirstBytes(math.min(len, 8))
+      val hi = nonDigits(word(b, i + 8, until) ^ Zeros) & FirstBytes(math.max(len - 8, 0))
+      val others = java.lang.Long.bitCount(lo) + java.lang.Long.bitCount(hi)
+      val dot =
+        if (lo != 0) java.lang.Long.numberOfTrailingZeros(lo) >>> 3
+        else if (hi != 0) 8 + (java.lang.Long.numberOfTrailingZeros(hi) >>> 3)
+        else len
+      if ((others == 0 || others == 1 && b(i + dot) == '.') && len > others && len - others <= 15) {
+        val scale = len - math.min(dot + 1, len)
+        val m = fold(b, i, dot, until) * Pow10L(scale) + fold(b, i + dot + 1, scale, until)
+        return java.lang.Double.longBitsToDouble(
+          java.lang.Double.doubleToRawLongBits(exact(m, -scale, neg = false)) ^ sign)
       }
-      p = q + 1
     }
-    label
+    // off the fast path: the value by itself, parsed as `double` does
+    val t = decode(b, from, if (colonEnds) colon(b, from, q) else q)
+    double(t, 0, t.length)
   }
 
-  /** The 1-based index of a trimmed LIBSVM data line's last `idx:val`
-    * token, 0 for a label-only line: all that sizing the vectors needs,
-    * read without parsing a value. [[point]] checks the rest. */
-  def lastIndex(line: String): Int = {
-    val sp = line.lastIndexOf(' ')
-    if (sp < 0) 0
-    else {
-      val c = line.indexOf(':', sp + 1)
-      if (c < 0) malformed(line, sp + 1, line.length)
-      index(line, sp + 1, c)
-    }
+  /** The index of the first `:` in `b(from until until)`, or `until`. */
+  private def colon(b: Array[Byte], from: Int, until: Int): Int = {
+    var i = from
+    while (i < until && b(i) != ':') i += 1
+    i
   }
 
-  /** [[lastIndex]] of a raw text line, read off its bytes without a
-    * `String`: −1 for a line that is not a row (blank or `#`, after the
-    * trim [[LibSvmIO.read]] applies). A line whose first or last
-    * non-space byte is not a printable ASCII character (a tab, a `\r`,
-    * a multi-byte character) or is a `#`, or whose last token is not 1–9
-    * plain digits and a `:`, goes through the `String` form, so values
-    * and exceptions match that form's. */
-  def lastIndex(line: UTF8String): Int = {
-    val bytes = bytesOf(line)
-    val off = offsetOf(line)
-    def at(i: Int): Int = bytes(off + i)
-    var start = 0
-    var end = line.numBytes
-    while (start < end && at(start) == ' ') start += 1
-    while (end > start && at(end - 1) == ' ') end -= 1
-    if (start == end) return -1
-    val plain = at(start) > ' ' && at(start) != '#' && at(end - 1) > ' '
-    var t = end     // the last token's start
-    while (t > start && at(t - 1) != ' ') t -= 1
-    var i = t
-    var v = 0
-    while (i < end && i - t < 10 && at(i) >= '0' && at(i) <= '9') { v = v * 10 + at(i) - '0'; i += 1 }
-    if (plain && t == start) 0
-    else if (plain && i > t && i - t <= 9 && i < end && at(i) == ':') v
-    else {
-      val s = line.toString.trim
-      if (isData(s)) lastIndex(s) else -1
-    }
-  }
-
-  private def malformed(line: String, from: Int, until: Int): Nothing =
-    throw new NumberFormatException(
-      s"malformed entry '${line.substring(from, until)}' (want idx:val) in line \"$line\"")
+  /** `b(from until until)` as UTF-8 text: one token, off the fast path. */
+  private def decode(b: Array[Byte], from: Int, until: Int): String =
+    new String(b, from, until - from, UTF_8)
 
   /** `s.substring(from, until).toDouble`, bit for bit. A plain decimal
     * with at most 15 significant digits and a decimal exponent within

@@ -191,8 +191,6 @@ object JpegCodec {
       vals(valPtr(len) + code - minCode(len))
     }
   }
-  private val DcDecoder = new HuffDecoder(DcBits, DcVals)
-  private val AcDecoder = new HuffDecoder(AcBits, AcVals)
 
   private def extend(v: Int, n: Int): Int =
     if (n == 0) 0 else if (v < (1 << (n - 1))) v - (1 << n) + 1 else v
@@ -238,7 +236,6 @@ object JpegCodec {
 
   private val ConstBits = 13
   private val Pass1Bits = 2
-  private def FIX(x: Int) = x
   private val F_0_298631336 = 2446
   private val F_0_390180644 = 3196
   private val F_0_541196100 = 4433
@@ -273,7 +270,7 @@ object JpegCodec {
         var z1 = (z2 + z3) * F_0_541196100
         val tmp2 = z1 + z3 * (-F_1_847759065)
         val tmp3 = z1 + z2 * F_0_765366865
-        var z2b = coef(c); var z3b = coef(32 + c)
+        val z2b = coef(c); val z3b = coef(32 + c)
         var tmp0 = (z2b + z3b) << ConstBits
         var tmp1 = (z2b - z3b) << ConstBits
         val tmp10 = tmp0 + tmp3; val tmp13 = tmp0 - tmp3
@@ -282,7 +279,7 @@ object JpegCodec {
         var t2 = coef(24 + c); var t3 = coef(8 + c)
         z1 = tmp0 + t3; var z2c = tmp1 + t2
         var z3c = tmp0 + t2; var z4 = tmp1 + t3
-        var z5 = (z3c + z4) * F_1_175875602
+        val z5 = (z3c + z4) * F_1_175875602
         tmp0 = tmp0 * F_0_298631336
         tmp1 = tmp1 * F_2_053119869
         t2 = t2 * F_3_072711026
@@ -331,7 +328,7 @@ object JpegCodec {
         var t2 = ws(o + 3); var t3 = ws(o + 1)
         z1 = tmp0 + t3; var z2c = tmp1 + t2
         var z3c = tmp0 + t2; var z4 = tmp1 + t3
-        var z5 = (z3c + z4) * F_1_175875602
+        val z5 = (z3c + z4) * F_1_175875602
         tmp0 = tmp0 * F_0_298631336
         tmp1 = tmp1 * F_2_053119869
         t2 = t2 * F_3_072711026

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** §2.2 R43 (q46): distributed TRIANGLE COUNTING + local clustering
   * coefficients — the standard graph-structure statistic (community

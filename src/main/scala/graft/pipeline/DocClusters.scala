@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** P28: corpus clustering over the embedding column — the diversity /
   * topic-balance primitive of a training-data pipeline (cluster-based

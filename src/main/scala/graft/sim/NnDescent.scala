@@ -57,7 +57,6 @@ object NnDescent {
     * carries (id, rk) with rk the global id-order rank. */
   private def initEdges(nodes: DataFrame, n: Long, k: Int): DataFrame = {
     val spark = nodes.sparkSession
-    import spark.implicits._
     val tgt = nodes.select(col("rk").as("nrk"), col("id").as("nbr"))
     nodes.select(col("id").as("src"), col("rk"))
       .crossJoin(spark.range(1, k + 1).toDF("j"))

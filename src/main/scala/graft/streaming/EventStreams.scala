@@ -90,7 +90,7 @@ object EventStreams {
     graft.Tables.normalizeTs(tableStream(spark, dir, "events"))
   }
 
-  private def runToMemory(out: DataFrame, mode: String, label: String = ""): DataFrame = {
+  private def runToMemory(out: DataFrame, mode: String, label: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val spark = out.sparkSession
     val name = "graft_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")

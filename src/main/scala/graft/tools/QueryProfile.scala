@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListener
 
 /** Dev-only: run one named SparkEntry query and attribute wall time to
   * Spark jobs by call site — the §1 "where does the time go" loop for a

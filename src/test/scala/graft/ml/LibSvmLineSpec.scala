@@ -7,7 +7,75 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
+/** [[LibSvmLine]], the one LIBSVM line scanner, against independent
+  * references: `String.toDouble` for the token parser, and for whole
+  * lines "the String form", this spec's own parse of the line as a
+  * `String` by `split`, `substring`, `toDouble` and `toInt` — psvm's SV
+  * grammar ([[reference]]) and Spark's libsvm source grammar
+  * ([[dataReference]]). */
 class LibSvmLineSpec extends AnyFunSuite {
+
+  /** One scanner for the whole spec: its buffers are reused from line to
+    * line, as in a task. */
+  private val scanner = new LibSvmLine
+
+  private def sv(line: String, dim: Int): (Array[Double], Double) =
+    scanner.sv(UTF8String.fromString(line), dim)
+
+  /** psvm's SV line grammar as a `String` parse: tokens split on single
+    * spaces (trailing ones dropped), the coefficient then `idx:val`
+    * entries (value to the token's end), each value placed at its index
+    * (a later entry wins), sized by `dim` or by the largest index. */
+  private def reference(line: String, dim: Int): (Array[Double], Double) = {
+    val parts = line.split(' ')
+    val coef = parts(0).toDouble
+    val entries = parts.drop(1).map { t =>
+      val c = t.indexOf(':')
+      if (c < 0) throw new NumberFormatException(s"malformed entry '$t'")
+      (t.substring(0, c).toInt, t.substring(c + 1).toDouble)
+    }
+    val size = if (dim > 0) dim else entries.map(_._1).foldLeft(0)(math.max)
+    for ((i, _) <- entries)
+      require(i >= 1 && i <= size, s"SV feature index $i outside [1, $size] (header dim $dim)")
+    val x = new Array[Double](size)
+    for ((i, v) <- entries) x(i - 1) = v
+    (x, coef)
+  }
+
+  /** Spark's libsvm source on one line as a `String` parse
+    * (`MLUtils.parseLibSVMRecord` on the trimmed line, and the sparse
+    * vector it makes): None for a blank or `#` line, else the label, the
+    * non-zero entries and the last index, as bits; it throws where that
+    * parse throws. */
+  private def dataReference(line: String): Option[(Long, Seq[(Int, Long)], Int)] = {
+    val t = line.trim
+    if (t.isEmpty || t.startsWith("#")) None
+    else {
+      val items = t.split(' ')
+      val label = items.head.toDouble
+      val entries = items.tail.filter(_.nonEmpty).toSeq.map { item =>
+        val iv = item.split(':')
+        (iv(0).toInt, iv(1).toDouble)
+      }
+      entries.foldLeft(0) { case (prev, (i, _)) => require(i > prev, "indices must ascend"); i }
+      Some((doubleToRawLongBits(label),
+        entries.collect { case (i, v) if v != 0.0 => (i, doubleToRawLongBits(v)) },
+        entries.lastOption.fold(0)(_._1)))
+    }
+  }
+
+  /** The scanner's [[LibSvmLine.row]] of `line`, in [[dataReference]]'s terms. */
+  private def dataRow(line: UTF8String): Option[(Long, Seq[(Int, Long)], Int)] =
+    if (!scanner.row(line, Int.MaxValue)) None
+    else Some((doubleToRawLongBits(scanner.label),
+      (0 until scanner.n).map(k => (scanner.idx(k), doubleToRawLongBits(scanner.vals(k)))),
+      scanner.lastIndex))
+
+  /** A value, or that it was rejected. */
+  private def outcome[T](r: Try[T]): Either[String, T] = r match {
+    case Success(v) => Right(v)
+    case Failure(_) => Left("rejected")
+  }
 
   /** The scanner's value of `t`, or its exception. */
   private def scanned(t: String): Try[Double] = Try(LibSvmLine.double(t, 0, t.length))
@@ -52,39 +120,32 @@ class LibSvmLineSpec extends AnyFunSuite {
 
   test("SV lines: entries at their declared index, sized by dim or the line's max index") {
     def seq(r: (Array[Double], Double)) = (r._1.toSeq, r._2)
-    assert(seq(LibSvmLine.sv("0.5 1:1.0 2:-2.5 3:3", 3)) === (Seq(1.0, -2.5, 3.0), 0.5))
-    assert(seq(LibSvmLine.sv("1.0 2:3.0 4:5.0", 4)) === (Seq(0.0, 3.0, 0.0, 5.0), 1.0))
-    assert(seq(LibSvmLine.sv("1.0 4:5.0 2:3.0 ", -1)) === (Seq(0.0, 3.0, 0.0, 5.0), 1.0))
-    assert(seq(LibSvmLine.sv("-2 40:1", 0)) === (Seq.fill(39)(0.0) :+ 1.0, -2.0))
-    assert(seq(LibSvmLine.sv("7", -1)) === (Seq.empty, 7.0))
-    assert(seq(LibSvmLine.sv("7", 2)) === (Seq(0.0, 0.0), 7.0))
-    assert(seq(LibSvmLine.sv("1 2:1 2:9", 2)) === (Seq(0.0, 9.0), 1.0), "a later entry wins")
+    assert(seq(sv("0.5 1:1.0 2:-2.5 3:3", 3)) === (Seq(1.0, -2.5, 3.0), 0.5))
+    assert(seq(sv("1.0 2:3.0 4:5.0", 4)) === (Seq(0.0, 3.0, 0.0, 5.0), 1.0))
+    assert(seq(sv("1.0 4:5.0 2:3.0 ", -1)) === (Seq(0.0, 3.0, 0.0, 5.0), 1.0))
+    assert(seq(sv("-2 40:1", 0)) === (Seq.fill(39)(0.0) :+ 1.0, -2.0))
+    assert(seq(sv("7", -1)) === (Seq.empty, 7.0))
+    assert(seq(sv("7", 2)) === (Seq(0.0, 0.0), 7.0))
+    assert(seq(sv("1 2:1 2:9", 2)) === (Seq(0.0, 9.0), 1.0), "a later entry wins")
 
     def message(line: String, dim: Int) =
-      Try(LibSvmLine.sv(line, dim)).failed.map(_.getMessage).getOrElse("")
+      Try(sv(line, dim)).failed.map(_.getMessage).getOrElse("")
     assert(message("-2.0 5:1.0", 4).contains("SV feature index 5 outside [1, 4] (header dim 4)"))
     assert(message("-2.0 0:1.0", 4).contains("SV feature index 0 outside [1, 4]"))
     assert(message("1 3:1 0:2 7:1", -1).contains("SV feature index 0 outside [1, 7] (header dim -1)"))
 
-    // malformed lines throw, as `split`/`toDouble`/`toInt` did
+    // malformed lines throw, as `split`/`toDouble`/`toInt` do
     for (line <- Seq("", " 1.0 2:3", "x 1:2", "1.0 2", "1.0 :3", "1.0 2:", "1.0 2:x",
                      "1.0  2:3", "1.0 a:3", "1.0 2:3:4", "1.0 99999999999:1")) {
-      assert(Try(LibSvmLine.sv(line, 4)).isFailure, s"'$line' must throw")
-      assert(Try(LibSvmLine.sv(line, -1)).isFailure, s"'$line' (no dim) must throw")
+      for (dim <- Seq(4, -1)) {
+        assert(Try(reference(line, dim)).isFailure, s"'$line' dim $dim: the reference")
+        assert(Try(sv(line, dim)).isFailure, s"'$line' dim $dim must throw")
+      }
     }
   }
 
   test("SV lines match the split/substring/toDouble parse on saveText-style lines") {
     val rng = new java.util.SplittableRandom(3)
-    def reference(line: String, dim: Int): (Seq[Double], Double) = {
-      val parts = line.split(' ')
-      val x = new Array[Double](dim)
-      parts.drop(1).foreach { t =>
-        val c = t.indexOf(':')
-        x(t.substring(0, c).toInt - 1) = t.substring(c + 1).toDouble
-      }
-      (x.toSeq, parts(0).toDouble)
-    }
     for (_ <- 0 until 2000) {
       val dim = 1 + rng.nextInt(70)
       val sb = new StringBuilder((rng.nextGaussian() * rng.nextDouble()).toString)
@@ -93,30 +154,33 @@ class LibSvmLineSpec extends AnyFunSuite {
         sb.append(' ').append(i).append(':').append(v)
       }
       val line = sb.toString
-      val (x, coef) = LibSvmLine.sv(line, dim)
+      val (x, coef) = sv(line, dim)
       val (wantX, wantCoef) = reference(line, dim)
       assert(doubleToRawLongBits(coef) === doubleToRawLongBits(wantCoef), line)
       assert(x.map(doubleToRawLongBits).toSeq === wantX.map(doubleToRawLongBits), line)
     }
   }
 
-  /** An SV line's parse as comparable bits, or its exception's class and message. */
-  private def parsed(r: => (Array[Double], Double)): Either[(Class[_], String), (Seq[Long], Long)] =
+  /** An SV line's parse as comparable bits, the message of an index
+    * outside the vector, or that it was rejected. */
+  private def parsed(r: => (Array[Double], Double)): Either[String, (Seq[Long], Long)] =
     Try(r) match {
       case Success((x, coef)) => Right((x.map(doubleToRawLongBits).toSeq, doubleToRawLongBits(coef)))
-      case Failure(e) => Left((e.getClass, e.getMessage))
+      case Failure(e) if e.getMessage != null && e.getMessage.contains("SV feature index") =>
+        Left(e.getMessage)
+      case Failure(_) => Left("rejected")
     }
 
-  /** The byte scan's mismatch against the String form on `line`, if any:
-    * read from a buffer with bytes before and `after` digits after it, as
-    * a text row's are (so an 8-byte load past the line sees digits, or
-    * has to stop at the array's end). */
+  /** The byte scan's mismatch against the String form ([[reference]]) on
+    * `line`, if any: read from a buffer with bytes before and `after`
+    * digits after it, as a text row's are (so an 8-byte load past the
+    * line sees digits, or has to stop at the array's end). */
   private def byteMismatch(line: String, dim: Int, after: Int = 7): Option[String] = {
     val b = line.getBytes(UTF_8)
     val buf = Array.fill[Byte](3 + b.length + after)('9'.toByte)
     System.arraycopy(b, 0, buf, 3, b.length)
-    val want = parsed(LibSvmLine.sv(line, dim))
-    val got = parsed(LibSvmLine.sv(UTF8String.fromBytes(buf, 3, b.length), dim))
+    val want = parsed(reference(line, dim))
+    val got = parsed(scanner.sv(UTF8String.fromBytes(buf, 3, b.length), dim))
     if (got == want) None else Some(s"'$line' dim $dim after $after: String $want, bytes $got")
   }
 
@@ -184,20 +248,12 @@ class LibSvmLineSpec extends AnyFunSuite {
       try {
         Platform.copyMemory(b, Platform.BYTE_ARRAY_OFFSET, null, addr, b.length)
         val offHeap = UTF8String.fromAddress(null, addr, b.length)
-        assert(parsed(LibSvmLine.sv(offHeap, 70)) === parsed(LibSvmLine.sv(line, 70)), line)
+        assert(parsed(scanner.sv(offHeap, 70)) === parsed(reference(line, 70)), line)
       } finally Platform.freeMemory(addr)
     }
   }
 
   test("lastIndex off a raw line's bytes equals the trimmed String form, values and exceptions") {
-    def viaString(line: String): Try[Int] = Try {
-      val t = line.trim
-      if (LibSvmLine.isData(t)) LibSvmLine.lastIndex(t) else -1
-    }
-    def outcome(r: Try[Int]) = r match {
-      case Success(v) => Right(v)
-      case Failure(e) => Left((e.getClass, e.getMessage))
-    }
     // the edge lines of the reader's specs, and odd last tokens
     val lines = Seq("# a comment line", "", "   ", "1 1:0.5 3:-2.25", "  -1 2:7   4:1e-3  ",
       "\t1 1:4\t", "1 2:8\t ", "#2 1:1", " #2 1:1", "-1 1:-0 2:-0.0 3:0 4:5", "1 1:2:3 3:4:",
@@ -205,17 +261,53 @@ class LibSvmLineSpec extends AnyFunSuite {
       "1 1: 2:1", "1 1:1 2:", "1 1:1\t2:1", "1 1:1 7", "x 1:1", "1 0000000002:1.5",
       "1 000000002:1.5", "1 123456789:1", "1 1234567890:1", "1 99999999999:1", "1 +5:1", "1 -5:1",
       "1 \u0663:1.5", "1 1:1 caf\u00e9:2", "\u00e9 1:1", "1 1:\u00e9", "1 :1", "1 a:1",
-      "1 1:1\r", "\r", "\u00a0", "1\u00a02:1", "1 2:1 #3:1")
+      "1 1:1\r", "\r", "\u00a0", "1\u00a02:1", "1 2:1 #3:1", "1 1::3", "1 1:2::", "1 2:5:x 4:0",
+      "\u00a01 1:1", "1 1:1 \u00a0", "\u0000 1 2:3 \u001f")
     val bad = for {
       line <- lines
       after <- Seq(0, 5)
       b = line.getBytes(UTF_8)
       buf = Array.fill[Byte](2 + b.length + after)(' '.toByte)
       _ = System.arraycopy(b, 0, buf, 2, b.length)
-      got = outcome(Try(LibSvmLine.lastIndex(UTF8String.fromBytes(buf, 2, b.length))))
-      want = outcome(viaString(line))
+      got = outcome(Try(dataRow(UTF8String.fromBytes(buf, 2, b.length))))
+      want = outcome(Try(dataReference(line)))
       if got != want
     } yield s"'$line': String $want, bytes $got"
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("data lines read as Spark's libsvm grammar: random spacing, zeros, i:v:w and order") {
+    val rng = new java.util.SplittableRandom(7)
+    def num(): String = rng.nextInt(6) match {
+      case 0 => (rng.nextGaussian() * math.pow(10, rng.nextInt(40) - 20)).toString
+      case 1 => f"${rng.nextGaussian()}%.6f"
+      case 2 => (math.rint(rng.nextGaussian() * 1e6) / 1e6).toString
+      case 3 => rng.nextInt(-50, 50).toString
+      case 4 => java.lang.Double.longBitsToDouble(rng.nextLong()).toString
+      case _ => Seq("0", "-0", "0.0", "-0.0", "+1", "1e-320", "NaN", "-Infinity", "x", "")(rng.nextInt(10))
+    }
+    def gap(): String = rng.nextInt(40) match {
+      case 0 => "  "
+      case 1 => "   "
+      case 2 => "\t"
+      case _ => " "
+    }
+    val bad = Iterator.fill(20000) {
+      val sb = new StringBuilder(Seq("", " ", "\t", "\r")(rng.nextInt(4))).append(num())
+      var i = 0
+      (0 until rng.nextInt(20)).foreach { _ =>
+        // mostly ascending, now and then repeated or descending
+        i = math.max(0, i + (if (rng.nextInt(30) == 0) rng.nextInt(-2, 1) else rng.nextInt(1, 12)))
+        sb.append(gap()).append(i).append(':').append(num())
+        if (rng.nextInt(20) == 0) sb.append(':').append(num())
+      }
+      sb.append(Seq("", " ", "\t", "\r")(rng.nextInt(4))).toString
+    }.flatMap { line =>
+      val b = line.getBytes(UTF_8)
+      val got = outcome(Try(dataRow(UTF8String.fromBytes(b, 0, b.length))))
+      val want = outcome(Try(dataReference(line)))
+      if (got == want) None else Some(s"'$line': String $want, bytes $got")
+    }.take(5).toList
     assert(bad.isEmpty, bad.mkString("; "))
   }
 }

@@ -10,7 +10,9 @@
 # 4-partner block kernels (`def four`) of Kernels.scala, the per-pair
 # `StrictMath.exp` calls in the `Kernel` panel forms, and the
 # `treeAggregate` sites of the PSVM solver and trainer (Ipm.scala,
-# IcfSvm.scala).
+# IcfSvm.scala), and in LibSvmIO.scala the parsers that take a whole
+# LIBSVM line as a `String` and the `split(` sites (one byte scanner,
+# `LibSvmLine`, reads every line).
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -46,3 +48,5 @@ panel_exp=$(awk '/def apply\(a: Array\[Double\], p: Panel, out: Array\[Double\]\
   on && /^    }$/ { on = 0 } on' "$main/graft/ml/Kernels.scala" | grep -c 'StrictMath\.exp' || true)
 echo "panel_strictmath_exp $panel_exp"
 echo "psvm_tree_aggregates $(count 'treeAggregate\(' "$main/graft/ml/Ipm.scala" "$main/graft/ml/IcfSvm.scala")"
+echo "libsvm_string_line_parsers $(count '^  def \w+\(line: String' "$main/graft/ml/LibSvmIO.scala")"
+echo "libsvm_split_sites $(count 'split\(' "$main/graft/ml/LibSvmIO.scala")"
