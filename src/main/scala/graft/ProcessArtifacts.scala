@@ -17,18 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Keying: the on-disk path uses an md5 digest of the full dir string
   * (collision-resistant — `dir.hashCode` could let two dirs silently
   * share a path) and the done-guard uses the same digest, so path and
-  * guard can never disagree. The artifact root is removed by a JVM
-  * shutdown hook (deleteOnExit only handles empty dirs, so a hook that
-  * deletes the tree is the correct cleanup for parquet directories).
+  * guard can never disagree. The tables live in one [[Scratch]] dir,
+  * which the scratch root's shutdown hook deletes.
   */
 object ProcessArtifacts {
 
-  private lazy val root: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_artifacts")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.operators.ScaleOps.deleteRecursively(p.toString)))
-    p
-  }
+  private lazy val root: String = Scratch.dir("artifacts")
 
   private val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -56,7 +50,7 @@ object ProcessArtifacts {
   def table(spark: SparkSession, kind: String, dir: String)
            (build: => DataFrame): DataFrame = {
     val key = s"${kind}_${md5hex(dir)}"
-    val path = root.resolve(key).toString
+    val path = s"$root/$key"
     done.synchronized {
       if (!done.contains(key)) {
         // build cost lands in the FIRST consumer's timing window; log it

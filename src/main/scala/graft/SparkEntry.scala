@@ -564,7 +564,7 @@ object SparkEntry {
            WHERE a.vec_id < 3 AND b.vec_id BETWEEN 3 AND 8) t
          ORDER BY id_a, id_b""",
     // m8/m9: replay f(x) = Σ coef·k(sv,x) − rho from the TEXT model files
-    // the Spark query saved (fixed path; Verify writes them before the
+    // the Spark query saved (under the model root; Verify writes them before the
     // oracle runs) with predictQuantized's integer picounit sums.
     "m8_model_score" ->
       (svModelReplaySql("m8_icf", heldOutSql) +
@@ -608,7 +608,7 @@ object SparkEntry {
                 CASE WHEN d >= 0 THEN 1.0 ELSE -1.0 END AS prediction
          FROM dec ORDER BY vec_id""",
     // m1/m5: the training queries persist their fitted Nyström model
-    // under a fixed path and score with the RELOADED model, so the
+    // under the model root and score with the RELOADED model, so the
     // oracle replays every decision from the saved files (m10 technique)
     // and recomputes the confusion matrix + metrics (m9 technique).
     "m1_svm_binary_eval" -> nystromEvalSql("m1_nystrom"),

@@ -55,9 +55,10 @@ object Verify {
       case c => c.toString
     } + "\""
     // The model-replay oracles name the sf0.01 model root statically;
-    // re-anchor them to this run's actual data dir (same modelRoot(dir)
-    // the Spark queries write to) so a verify run against any dir
-    // basename replays the files IT created, not a stale sf0.01 set.
+    // re-anchor them to this run's actual model root (the same
+    // modelRoot(dir) the Spark queries wrote to), which outlives this
+    // process so the DuckDB replay reads the files THIS run created.
+    System.err.println(s"[verify] models kept under ${Scratch.keepModels()}")
     val modelRootFix: String => String =
       _.replace("/tmp/graft_models/sf0.01", graft.ml.ModelOracles.modelRoot(sfDir))
     val json = SparkEntry.oracleSql

@@ -126,30 +126,30 @@ object SaRepeats {
     val spark = chars.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val tmp = java.nio.file.Files.createTempDirectory("graft_p33c").toString
-    // level files use the session's parquet codec (a codec A/B in r15
-    // measured 23.3 s vs 24.2 s, within noise)
-    def store(df: DataFrame, k: Int): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$tmp/lvl_$k")
-      spark.read.parquet(s"$tmp/lvl_$k")
-    }
-    // SINGLETON PRUNING (the classic prefix-doubling optimization): a
-    // pair is dup at level 2k only if BOTH halves are dup at level k --
-    // dup is a property of the LABEL (count >= 2), so every occurrence
-    // of a dup pair has both positions flagged, and counting pairs over
-    // dup-flagged rows alone is EXACT. Consequences exploited below:
-    //   (1) complete mode: the label-count window runs over CANDIDATE
-    //       rows only (dup(p) && dup(p+k)); non-candidates are provably
-    //       non-dup and their labels are nulled -- a future candidate
-    //       never consumes a non-dup label (its halves must be dup), so
-    //       injectivity is only required among dup labels;
-    //   (2) once the dup fraction drops below `pruneBelow`, the level
-    //       table keeps ONLY dup rows -- on natural text most of the
-    //       corpus becomes unique within 2-3 rounds, so late rounds
-    //       shuffle a small remnant instead of all positions. Pairing
-    //       then uses a union-shift groupBy on (doc, pos) (rows are
-    //       sparse, so the positional lead() no longer applies).
-    try {
+    // `consume` materializes everything it needs before the levels go
+    graft.Scratch.using("p33c") { tmp =>
+      // level files use the session's parquet codec (a codec A/B in r15
+      // measured 23.3 s vs 24.2 s, within noise)
+      def store(df: DataFrame, k: Int): DataFrame = {
+        df.write.mode("overwrite").parquet(s"$tmp/lvl_$k")
+        spark.read.parquet(s"$tmp/lvl_$k")
+      }
+      // SINGLETON PRUNING (the classic prefix-doubling optimization): a
+      // pair is dup at level 2k only if BOTH halves are dup at level k --
+      // dup is a property of the LABEL (count >= 2), so every occurrence
+      // of a dup pair has both positions flagged, and counting pairs over
+      // dup-flagged rows alone is EXACT. Consequences exploited below:
+      //   (1) complete mode: the label-count window runs over CANDIDATE
+      //       rows only (dup(p) && dup(p+k)); non-candidates are provably
+      //       non-dup and their labels are nulled -- a future candidate
+      //       never consumes a non-dup label (its halves must be dup), so
+      //       injectivity is only required among dup labels;
+      //   (2) once the dup fraction drops below `pruneBelow`, the level
+      //       table keeps ONLY dup rows -- on natural text most of the
+      //       corpus becomes unique within 2-3 rounds, so late rounds
+      //       shuffle a small remnant instead of all positions. Pairing
+      //       then uses a union-shift groupBy on (doc, pos) (rows are
+      //       sparse, so the positional lead() no longer applies).
       // level 1: contiguous vocabulary labels -- the char vocabulary is
       // model-sized (all distinct code points), one tiny collect. Level
       // 1 is NEVER stored: it is a narrow pipe (scan + split + explode
@@ -273,7 +273,7 @@ object SaRepeats {
         // files are RETAINED until `consume` runs (lazy rep counts read
         // them — ≤ position-sized columnar temp, the honest cost of a
         // single-action final rollup)
-        graft.operators.ScaleOps.deleteRecursively(s"$tmp/pair_$k")
+        graft.Scratch.delete(s"$tmp/pair_$k")
         k = 2 * k
         val rep = repCounts(next, k)
         out += ((k, rep))
@@ -282,9 +282,6 @@ object SaRepeats {
         cur = next
       }
       consume(out.toSeq)
-    } finally {
-      // `consume` has materialized everything it needs; drop the levels
-      graft.operators.ScaleOps.deleteRecursively(tmp)
     }
   }
 

@@ -39,13 +39,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object Icf {
 
-  /** A factor: `blocks` with `rank` H columns built, `rows` their
-    * (id, icf_features) view, `nRows` the input's row count. A one-block
+  /** A factor: `rank` H columns built over `nRows` input rows, `rows`
+    * its (id, icf_features) view over the loop's blocks. A one-block
     * factor is cached by the loop that built it; `release` drops that
-    * cache (the blocks then recompute from lineage). A multi-block
-    * factor stays cached: its lineage runs through local checkpoints. */
-  private[ml] final case class Factor[X](spark: SparkSession, blocks: RDD[IcfBlock[X]],
-                                         rank: Int, nRows: Long, cached: Option[RDD[_]]) {
+    * cache (the rows then recompute from lineage). A multi-block factor
+    * stays cached: its lineage runs through local checkpoints. */
+  final class Factor[X] private[ml] (spark: SparkSession, private[ml] val blocks: RDD[IcfBlock[X]],
+                                     val rank: Int, val nRows: Long, cached: Option[RDD[_]]) {
     lazy val rows: DataFrame = spark.createDataFrame(blocks.flatMap {
       val built = rank // a local, so the closure captures neither the factor nor its session
       b => b.ids.indices.iterator.map(i => Row(b.ids(i), b.hRow(i, built).toSeq))
@@ -133,24 +133,18 @@ object Icf {
   def factorizeAuto(df: DataFrame, idCol: String, vecCol: String,
                     kernel: Kernel, rankRatio: Double,
                     maxRank: Int = 256, residualTol: Double = 1e-8,
-                    checkpointEvery: Int = 16): DataFrame =
-    factorAuto(df, idCol, vecCol, kernel, rankRatio, maxRank, residualTol, checkpointEvery).rows
-
-  /** [[factorizeAuto]], returning the [[Factor]] so the caller can
-    * release its cache. */
-  private[ml] def factorAuto(df: DataFrame, idCol: String, vecCol: String,
-                             kernel: Kernel, rankRatio: Double,
-                             maxRank: Int = 256, residualTol: Double = 1e-8,
-                             checkpointEvery: Int = 16): Factor[Array[Double]] =
+                    checkpointEvery: Int = 16): Factor[Array[Double]] =
     dense(df, idCol, vecCol, None, kernel,
       n => math.max(1, math.min(maxRank, math.ceil(rankRatio * n).toInt)),
       checkpointEvery, residualTol, None)
 
-  /** Returns (id, icf_features: array<double>[rank]) with K ≈ H·Hᵀ.
-    * `residualTol > 0` enables early stop on the max diagonal residual
-    * (the produced factor is truncated to the columns actually built).
-    * The factor is computed (a row count, then one job on a one-block
-    * input) and cached before this returns.
+  /** The factor with K ≈ H·Hᵀ, H of rank `rank`: its `rows` are (id,
+    * icf_features: array<double>[rank]). `residualTol > 0` enables early
+    * stop on the max diagonal residual (the factor is truncated to the
+    * columns actually built). The factor is computed (a row count, then
+    * one job on a one-block input) and cached before this returns;
+    * `release` drops the cache. `labelCol` puts the rows' labels in the
+    * blocks, for [[IcfSvmTrainer]]'s later passes.
     *
     * `checkpointDir`: psvm-style fault tolerance for long factorizations
     * (p passes over the data — hours at 100 TB). Every `checkpointEvery`
@@ -165,17 +159,8 @@ object Icf {
                 kernel: Kernel, rank: Int,
                 checkpointEvery: Int = 16,
                 residualTol: Double = 0.0,
-                checkpointDir: Option[String] = None): DataFrame =
-    factor(df, idCol, vecCol, kernel, rank, checkpointEvery, residualTol, checkpointDir).rows
-
-  /** [[factorize]], returning the [[Factor]] so the caller can release
-    * its cache; `labelCol` puts the rows' labels in the blocks. */
-  private[ml] def factor(df: DataFrame, idCol: String, vecCol: String,
-                         kernel: Kernel, rank: Int,
-                         checkpointEvery: Int = 16,
-                         residualTol: Double = 0.0,
-                         checkpointDir: Option[String] = None,
-                         labelCol: Option[String] = None): Factor[Array[Double]] =
+                checkpointDir: Option[String] = None,
+                labelCol: Option[String] = None): Factor[Array[Double]] =
     dense(df, idCol, vecCol, labelCol, kernel, _ => rank, checkpointEvery, residualTol,
       checkpointDir)
 
@@ -205,15 +190,7 @@ object Icf {
   def factorizeSparse(df: DataFrame, idCol: String, idxCol: String,
                       valCol: String, kernel: Kernel, rank: Int,
                       checkpointEvery: Int = 16,
-                      residualTol: Double = 0.0): DataFrame =
-    factorSparse(df, idCol, idxCol, valCol, kernel, rank, checkpointEvery, residualTol).rows
-
-  /** [[factorizeSparse]], returning the [[Factor]] so the caller can
-    * release its cache. */
-  private[ml] def factorSparse(df: DataFrame, idCol: String, idxCol: String,
-                               valCol: String, kernel: Kernel, rank: Int,
-                               checkpointEvery: Int = 16,
-                               residualTol: Double = 0.0): Factor[(Array[Int], Array[Double])] = {
+                      residualTol: Double = 0.0): Factor[(Array[Int], Array[Double])] = {
     val rows = df.select(col(idCol).cast("long"), col(idxCol), col(valCol))
       .rdd
       .map(r => (r.getLong(0), (r.getSeq[Int](1).toArray, r.getSeq[Double](2).toArray), 0.0))
@@ -314,6 +291,6 @@ object Icf {
       }
     }
 
-    Factor(spark, blocks, j, nRows, cached)
+    new Factor(spark, blocks, j, nRows, cached)
   }
 }

@@ -420,7 +420,7 @@ object IcfSvmTrainer {
           svEpsilon: Double = 1e-4,
           posWeight: Double = 1.0, negWeight: Double = 1.0): IcfSvmModel = {
     val spark = df.sparkSession
-    val icf = Icf.factor(df, idCol, vecCol, kernel, rank, labelCol = Some(labelCol))
+    val icf = Icf.factorize(df, idCol, vecCol, kernel, rank, labelCol = Some(labelCol))
     require(icf.nRows > 0, "IcfSvmTrainer.fit needs at least one row")
     val p = icf.rank
     val (cPos, cNeg) = (c * posWeight, c * negWeight)

@@ -30,7 +30,7 @@ import scala.reflect.ClassTag
   * accumulation reading qa back in O(1) per row, and the Δα pass reuses
   * qa the same way.
   *
-  * [[newton]] runs the loop over given blocks; [[dual]] builds them from
+  * [[newton]] runs the loop over given blocks; [[solve]] builds them from
   * a DataFrame, one per input partition. Cost per block count:
   *   - one block (the m = 1 case of the paper's cost model, where the
   *     all-reduce is the identity): the whole Newton loop, p×p core solve
@@ -69,13 +69,15 @@ object Ipm {
   private[ml] def blockCount(nRows: Long, numPartitions: Int): Int =
     math.max(1, math.min(numPartitions, (nRows / 50000L).toInt + 1))
 
-  /** A dual solution: the final (ids, block) pairs, the iterations run
-    * and the last surrogate gap. A one-block solution is cached by the
-    * loop that built it; `release` drops that cache (the blocks then
-    * recompute from lineage). A multi-block solution stays cached: its
-    * lineage runs through local checkpoints. */
-  private[ml] final case class Dual(blocks: RDD[(Array[Long], Block)], iterations: Int, gap: Double,
-                                    cached: Option[RDD[_]]) {
+  /** A dual solution: the per-row `alphas` (kept distributed; collect
+    * them for diagnostics), the iterations run and the last surrogate
+    * gap, over the loop's final (ids, block) pairs. A one-block solution
+    * is cached by the loop that built it; `release` drops that cache (the
+    * blocks then recompute from lineage). A multi-block solution stays
+    * cached: its lineage runs through local checkpoints. */
+  final class Dual private[ml] (private[ml] val blocks: RDD[(Array[Long], Block)],
+                                val iterations: Int, val gap: Double, cached: Option[RDD[_]]) {
+    lazy val alphas: RDD[(Long, Double)] = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
     def release(): Unit = cached.foreach(_.unpersist(false))
   }
 
@@ -286,9 +288,8 @@ object Ipm {
     (b, s)
   }
 
-  /** Solve the dual on (id, y∈{±1}, h: Array[Double] rank-p rows).
-    * Returns per-row alphas (kept distributed; collect them for
-    * diagnostics), the iterations run and the last surrogate gap.
+  /** Solve the dual on (id, y∈{±1}, h: Array[Double] rank-p rows); one
+    * pass reads n and p, and the solution is cached until `release`.
     *
     * `posWeight`/`negWeight` scale the box constraint per class
     * (libsvm `-wi`, psvm svm_train weighted-C): 0 ≤ αᵢ ≤ C·w_{yᵢ}. */
@@ -296,18 +297,7 @@ object Ipm {
             c: Double, maxIter: Int = 50, tol: Double = 1e-6,
             posWeight: Double = 1.0, negWeight: Double = 1.0,
             checkpointDir: Option[String] = None,
-            checkpointEvery: Int = 10): (RDD[(Long, Double)], Int, Double) = {
-    val d = dual(data, idCol, labelCol, hCol, c, maxIter, tol, posWeight, negWeight,
-      checkpointDir, checkpointEvery)
-    (d.blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }, d.iterations, d.gap)
-  }
-
-  /** [[solve]] as a [[Dual]] (releasable); one pass reads n and p. */
-  private[ml] def dual(data: DataFrame, idCol: String, labelCol: String, hCol: String,
-                       c: Double, maxIter: Int = 50, tol: Double = 1e-6,
-                       posWeight: Double = 1.0, negWeight: Double = 1.0,
-                       checkpointDir: Option[String] = None,
-                       checkpointEvery: Int = 10): Dual = {
+            checkpointEvery: Int = 10): Dual = {
     val cPos = c * posWeight
     val cNeg = c * negWeight
     import org.apache.spark.sql.functions.col
@@ -440,6 +430,6 @@ object Ipm {
       }
     }
 
-    Dual(blocks, s.iter, s.gap, cached)
+    new Dual(blocks, s.iter, s.gap, cached)
   }
 }

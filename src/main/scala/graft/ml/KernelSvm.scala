@@ -230,7 +230,7 @@ object KernelSvmTrainer {
     // the IPM loop runs over these blocks (in one task when they are one)
     val feats = Nystrom.transform(df, vecCol, map, "__phi")
       .coalesce(Ipm.blockCount(df.count(), df.rdd.getNumPartitions))
-    val ipm = Ipm.dual(feats, idCol, labelCol, "__phi", c,
+    val ipm = Ipm.solve(feats, idCol, labelCol, "__phi", c,
       maxIter = maxIter, tol = params.tol,
       posWeight = params.posWeight, negWeight = params.negWeight)
     // w and b over the solution's blocks; free SVs: strictly inside the

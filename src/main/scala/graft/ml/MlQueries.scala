@@ -41,20 +41,15 @@ object MlQueries {
       .select($"vec_id", $"label".cast("double").as("label"),
               VectorOps.toDoubleArray($"embedding").as("vec"))
     val dim = embeddings.agg(max(size($"embedding"))).head().getInt(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_libsvm").toString
-    LibSvmIO.write(e, "label", "vec", tmp)
-    val out = LibSvmIO.read(spark, tmp, numFeatures = dim)
-      .groupBy($"label")
-      .agg(count(lit(1)).as("n_rows"),
-           round(sum(aggregate($"features", lit(0.0), (acc, x) => acc + x)), 6)
-             .as("feature_mass"))
-      .orderBy($"label")
-    // materialize the tiny summary, then drop the temp round-trip files
-    // so repeated verify/bench runs don't accumulate disk
-    val rows = out.collect()
-    val res = spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    graft.operators.ScaleOps.deleteRecursively(tmp)
-    res
+    graft.Scratch.collected("libsvm") { tmp =>
+      LibSvmIO.write(e, "label", "vec", tmp)
+      LibSvmIO.read(spark, tmp, numFeatures = dim)
+        .groupBy($"label")
+        .agg(count(lit(1)).as("n_rows"),
+             round(sum(aggregate($"features", lit(0.0), (acc, x) => acc + x)), 6)
+               .as("feature_mass"))
+        .orderBy($"label")
+    }
   }
 
   /** m1: end-to-end binary kernel SVM — train on embeddings with ±1
@@ -62,7 +57,7 @@ object MlQueries {
     * with the RELOADED model, emit the confusion matrix + metrics.
     *
     * The iterative fit itself isn't SQL, but the fitted model is just
-    * data — the query saves it under a fixed path and the DuckDB oracle
+    * data — the query saves it under the model root and the DuckDB oracle
     * replays φ(x) = Wᵀ[k(x,lᵢ)] and w·φ(x)+b from the very same files
     * (the m10 technique), then recomputes the confusion matrix, so the
     * whole predict+persist+eval half is hash-verified. */
@@ -80,7 +75,7 @@ object MlQueries {
 
   /** m3: one-vs-rest multiclass over the 10 labels; per-class accuracy.
     * The OVR model (shared Nyström map + per-class classifiers) persists
-    * under the fixed model root and the summary is computed from the
+    * under the model root and the summary is computed from the
     * RELOADED model's deterministic argmax scoring, so the DuckDB oracle
     * replays every per-class decision and the argmax from the saved
     * files — predict/persist/eval hash-verified like m1/m5/m6. */

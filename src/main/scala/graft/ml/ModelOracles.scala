@@ -11,8 +11,8 @@ import graft.functions.VectorOps
   * Training is iterative and seeded — not SQL — but a TRAINED model is
   * just data: (sv_x, sv_coef) rows + bias for the SV form, or
   * (landmarks, projection, weights, intercept) for the Nyström form. The
-  * queries here fit once per (dataset, JVM), persist the model under a
-  * FIXED path, reload it through the public load path, and score a
+  * queries here fit once per (dataset, JVM), persist the model under
+  * [[modelRoot]], reload it through the public load path, and score a
   * held-out slice; the DuckDB oracle replays f(x) from the very same
   * saved files. SV models score through [[IcfSvmModel.predictQuantized]]
   * (integer picounit sums, which the oracle replays with one GROUP BY);
@@ -24,15 +24,15 @@ import graft.functions.VectorOps
   */
 object ModelOracles {
 
-  /** Model root, SCOPED BY SF DIR: the oracle SQL names the sf0.01 path
-    * statically (the driver's correctness gate always runs at sf0.01),
-    * and scoping the writes by dataset means a bench run at another SF
-    * can never clobber the files the verify oracles are about to read —
-    * verify and bench become order-independent. (Verify runs the Spark
-    * queries first, then the driver replays the oracle SQL — the files
-    * are guaranteed present by then.) */
+  /** Model root, `<scratch root>/models/<sf dir name>` ([[graft.Scratch]]):
+    * one per process, so two runs on one host never share the files, and
+    * scoped by dataset, so a run at another SF never clobbers the files
+    * the sf0.01 oracles read. The oracle SQL names the placeholder
+    * `/tmp/graft_models/sf0.01`, which Verify rewrites to this path; it
+    * runs the Spark queries first and keeps the models past its exit, so
+    * the DuckDB replay finds them. */
   def modelRoot(dir: String): String =
-    s"/tmp/graft_models/${new java.io.File(dir).getName}"
+    s"${graft.Scratch.models}/${new java.io.File(dir).getName}"
 
   // one fit per (path-key, sf dir) per JVM: Verify and Bench each score
   // the same persisted model rather than re-fitting per query
@@ -80,12 +80,12 @@ object ModelOracles {
       KernelSvmModel.load(spark, s"${modelRoot(dir)}/m10_nystrom")
     })
 
-  /** ICF factor H (rank 8, first 200 vectors), persisted to the fixed
-    * path and read BACK from parquet — both engines then score the
+  /** ICF factor H (rank 8, first 200 vectors), persisted under the
+    * model root and read BACK from parquet — both engines then score the
     * identical doubles. */
   def icfH(spark: SparkSession, dir: String): DataFrame =
     icfFactors.computeIfAbsent(dir, _ =>
-      writeFactor(spark, s"${modelRoot(dir)}/m4_icf_h", Icf.factor(
+      writeFactor(spark, s"${modelRoot(dir)}/m4_icf_h", Icf.factorize(
         Tables.embeddings(spark, dir).filter(col("vec_id") < 200),
         "vec_id", "embedding", Kernel.Rbf(0.05), rank = 8)))
 
@@ -145,7 +145,7 @@ object ModelOracles {
     * the oracle. */
   def m4cIcfAutoRank(spark: SparkSession, dir: String): DataFrame = {
     val h = icfFactors.computeIfAbsent(dir + "#auto", _ =>
-      writeFactor(spark, s"${modelRoot(dir)}/m4c_icf_auto", Icf.factorAuto(
+      writeFactor(spark, s"${modelRoot(dir)}/m4c_icf_auto", Icf.factorizeAuto(
         Tables.embeddings(spark, dir).filter(col("vec_id") < 200),
         "vec_id", "embedding", Kernel.Rbf(0.05),
         rankRatio = 0.08, maxRank = 12, residualTol = 1e-6)))

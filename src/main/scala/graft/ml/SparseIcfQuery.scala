@@ -28,10 +28,8 @@ object SparseIcfQuery {
   private[ml] def icfH(spark: SparkSession, dir: String): DataFrame =
     built.computeIfAbsent(dir, _ => {
       val fixture = SparseMlQueries.sparseDocVectors(spark, dir)
-      val h = Icf.factorSparse(fixture, "doc_id", "indices", "values",
-        Kernel.Rbf(Gamma), Rank)
       ModelOracles.writeFactor(spark, s"${ModelOracles.modelRoot(dir)}/m16_icf_h",
-        h.copy(blocks = h.blocks.coalesce(1)))
+        Icf.factorizeSparse(fixture, "doc_id", "indices", "values", Kernel.Rbf(Gamma), Rank))
     })
 
   def query(spark: SparkSession, dir: String): DataFrame = {

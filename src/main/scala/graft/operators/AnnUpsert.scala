@@ -158,7 +158,7 @@ object AnnUpsert {
              (acc, x) => acc + floor(x * lit(1e6)).cast("long"))).as("emb_checksum"),
            sum(when(col("argc") =!= col("cell"), 1L).otherwise(0L)).as("n_misrouted"))
       .orderBy(col("query_id"))
-    val out = ScaleOps.materializeThen(res) { () } // files stay: oracle replays them
+    val out = graft.Scratch.local(res) // files stay: oracle replays them
     val rows = out.collect()
     require(rows.map(_.getAs[Long]("n_new_candidates")).sum > 0,
       s"$prefix gate: no upserted vector visible to any probe — the upsert is invisible")

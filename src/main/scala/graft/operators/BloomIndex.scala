@@ -100,16 +100,16 @@ object BloomIndex {
     * scan; the oracle runs the same lookup on the raw table — pruning
     * is only correct if invisible. */
   def u13BloomIndexQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloom").toString
-    writeClustered(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
-    val manifest = buildManifest(spark, tmp, "o_custkey")
-      .localCheckpoint(true) // one row per file; built once per layout
-    val agg = lookupScan(spark, tmp, manifest, "o_custkey", Seq(1L, 7L, 42L))
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_orders"),
-           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      .orderBy(col("o_custkey"))
-    ScaleOps.materializeThen(agg) { ScaleOps.deleteRecursively(tmp) }
+    graft.Scratch.collected("bloom") { tmp =>
+      writeClustered(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
+      val manifest = buildManifest(spark, tmp, "o_custkey")
+        .localCheckpoint(true) // one row per file; built once per layout
+      lookupScan(spark, tmp, manifest, "o_custkey", Seq(1L, 7L, 42L))
+        .groupBy(col("o_custkey"))
+        .agg(count(lit(1)).as("n_orders"),
+             round(sum(col("o_totalprice")), 2).as("sum_price"))
+        .orderBy(col("o_custkey"))
+    }
   }
 
   val oracleSql: String =

@@ -94,22 +94,22 @@ object ChangeFeed {
     * the boundary filter, the delete→reinsert lifecycle, and both
     * update images are all hash-pinned. */
   def u20ChangeFeedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_cdf").toString
-    VersionedTable.commits(spark, dir).zipWithIndex.foreach {
-      case (c, i) => VersionedTable.commit(c, root, i + 1)
+    graft.Scratch.collected("cdf") { root =>
+      VersionedTable.commits(spark, dir).zipWithIndex.foreach {
+        case (c, i) => VersionedTable.commit(c, root, i + 1)
+      }
+      Seq(0, 1).map { lo =>
+        changesBetween(spark, root, lo, 3)
+          .groupBy(col("_commit_version"), col("_change_type"))
+          .agg(count(lit(1)).as("n_rows"),
+               // integer-cents sum: association-free at any scale (s13)
+               round(sum(round(col("price") * 100).cast("long")) / 100.0, 2)
+                 .as("sum_price"))
+          .select(lit(lo).as("range_lo"), col("_commit_version").cast("long"),
+                  col("_change_type"), col("n_rows"), col("sum_price"))
+      }.reduce(_ unionByName _)
+        .orderBy(col("range_lo"), col("_commit_version"), col("_change_type"))
     }
-    val out = Seq(0, 1).map { lo =>
-      changesBetween(spark, root, lo, 3)
-        .groupBy(col("_commit_version"), col("_change_type"))
-        .agg(count(lit(1)).as("n_rows"),
-             // integer-cents sum: association-free at any scale (s13)
-             round(sum(round(col("price") * 100).cast("long")) / 100.0, 2)
-               .as("sum_price"))
-        .select(lit(lo).as("range_lo"), col("_commit_version").cast("long"),
-                col("_change_type"), col("n_rows"), col("sum_price"))
-    }.reduce(_ unionByName _)
-      .orderBy(col("range_lo"), col("_commit_version"), col("_change_type"))
-    ScaleOps.materializeThen(out) { ScaleOps.deleteRecursively(root) }
   }
 
   /** DuckDB replay: same commit construction as u11, lag over the key

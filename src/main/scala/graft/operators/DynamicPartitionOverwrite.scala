@@ -59,18 +59,18 @@ object DynamicPartitionOverwrite {
     val events = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
               col("ts"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dynpart").toString
-    writeAndPatch(events, patchFrame(events), tmp)
-    val agg = spark.read.parquet(tmp)
-      .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
-              col("event_date") <= lit("2024-01-12").cast("date"))
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-           round(sum(col("value")), 2).as("sum_value"))
-      .select(col("event_date").cast("timestamp").as("event_day"),
-              col("event_type"), col("n_events"), col("sum_value"))
-      .orderBy(col("event_day"), col("event_type"))
-    ScaleOps.materializeThen(agg) { ScaleOps.deleteRecursively(tmp) }
+    graft.Scratch.collected("dynpart") { tmp =>
+      writeAndPatch(events, patchFrame(events), tmp)
+      spark.read.parquet(tmp)
+        .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
+                col("event_date") <= lit("2024-01-12").cast("date"))
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+             round(sum(col("value")), 2).as("sum_value"))
+        .select(col("event_date").cast("timestamp").as("event_day"),
+                col("event_type"), col("n_events"), col("sum_value"))
+        .orderBy(col("event_day"), col("event_type"))
+    }
   }
 
   /** DuckDB replay of the FINAL table state: the patch day carries the

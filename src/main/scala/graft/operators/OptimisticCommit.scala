@@ -147,14 +147,14 @@ object OptimisticCommit {
         manifestIfReadable(root, v) match {
           case Some(m) => m.map(_.touched).getOrElse(Set.empty[String])
           case None =>
-            ScaleOps.deleteRecursively(staged)
+            graft.Scratch.delete(staged)
             throw new IllegalStateException(
               s"u21 conflict: claim v$v has an unreadable manifest — " +
               "treating as conflicting (never as empty)")
         }
       }.toSet.intersect(touched)
       if (overlap.nonEmpty) {
-        ScaleOps.deleteRecursively(staged)
+        graft.Scratch.delete(staged)
         throw new IllegalStateException(
           s"u21 conflict: partitions ${overlap.toSeq.sorted.mkString(",")} " +
           s"were modified by a concurrent commit since v$readVersion")
@@ -162,7 +162,7 @@ object OptimisticCommit {
       if (tryClaim(root, attempt, staged, touched)) return attempt
       attempt += 1 // lost the CAS: rebase onto the next version
     }
-    ScaleOps.deleteRecursively(staged)
+    graft.Scratch.delete(staged)
     throw new IllegalStateException(s"u21: gave up after $maxRetries rebase attempts")
   }
 
@@ -195,7 +195,7 @@ object OptimisticCommit {
     tmps.foreach(Files.deleteIfExists(_))
     val orphans = ls(Paths.get(root, "data"))
       .filter(p => !referenced.contains(p.toAbsolutePath.normalize.toString) && stale(p))
-    orphans.foreach(p => ScaleOps.deleteRecursively(p.toString))
+    orphans.foreach(p => graft.Scratch.delete(p.toString))
     (orphans.size, tmps.size)
   }
 
@@ -222,30 +222,30 @@ object OptimisticCommit {
     * rebases to v3. Output: per-bucket resolved state + the version
     * that owns each bucket — the protocol's outcome, hash-gated. */
   def u21OccQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_occ").toString
-    val base = graft.Tables.orders(spark, dir)
-      .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"))
-      .withColumn("bkt", bucket(col("k")).cast("string"))
-    val v1 = commit(base, root, "bkt", 0)
-    require(v1 == 1, s"base commit got v$v1")
-    // both writers snapshot v1, then land in claim order A, B
-    val a = base.filter(col("bkt").isin("0", "1"))
-      .withColumn("price", col("price") + 100.0)
-    val b = base.filter(col("bkt").isin("2", "3"))
-      .withColumn("price", col("price") + 200.0)
-    val va = commit(a, root, "bkt", readVersion = 1)
-    val vb = commit(b, root, "bkt", readVersion = 1) // lost CAS → rebase
-    require(va == 2 && vb == 3, s"protocol order broke: A=v$va B=v$vb")
-    // hive partition inference types bkt as INT; the table contract
-    // (and the oracle) carry it as STRING
-    val out = read(spark, root, "bkt")
-      .groupBy(col("bkt").cast("string").as("bkt"))
-      .agg(count(lit(1)).as("n_rows"),
-           // integer-cents sum: association-free at any scale (s13)
-           round(sum(round(col("price") * 100).cast("long")) / 100.0, 2)
-             .as("sum_price"))
-      .orderBy(col("bkt"))
-    ScaleOps.materializeThen(out) { ScaleOps.deleteRecursively(root) }
+    graft.Scratch.collected("occ") { root =>
+      val base = graft.Tables.orders(spark, dir)
+        .select(col("o_orderkey").as("k"), col("o_totalprice").as("price"))
+        .withColumn("bkt", bucket(col("k")).cast("string"))
+      val v1 = commit(base, root, "bkt", 0)
+      require(v1 == 1, s"base commit got v$v1")
+      // both writers snapshot v1, then land in claim order A, B
+      val a = base.filter(col("bkt").isin("0", "1"))
+        .withColumn("price", col("price") + 100.0)
+      val b = base.filter(col("bkt").isin("2", "3"))
+        .withColumn("price", col("price") + 200.0)
+      val va = commit(a, root, "bkt", readVersion = 1)
+      val vb = commit(b, root, "bkt", readVersion = 1) // lost CAS → rebase
+      require(va == 2 && vb == 3, s"protocol order broke: A=v$va B=v$vb")
+      // hive partition inference types bkt as INT; the table contract
+      // (and the oracle) carry it as STRING
+      read(spark, root, "bkt")
+        .groupBy(col("bkt").cast("string").as("bkt"))
+        .agg(count(lit(1)).as("n_rows"),
+             // integer-cents sum: association-free at any scale (s13)
+             round(sum(round(col("price") * 100).cast("long")) / 100.0, 2)
+               .as("sum_price"))
+        .orderBy(col("bkt"))
+    }
   }
 
   /** DuckDB replay: the resolved table is pure arithmetic — buckets

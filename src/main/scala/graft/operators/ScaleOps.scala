@@ -47,31 +47,6 @@ object ScaleOps {
       .drop("__salt")
   }
 
-  /** Eagerly materialize a SMALL (aggregate-sized) result, then run
-    * `cleanup` (temp-dir deletion etc.); the returned LocalRelation no
-    * longer depends on the cleaned-up files, so repeated bench/verify
-    * runs don't accumulate disk or race on catalog names. Shared by
-    * every roundtrip/self-validating query. Only for results that are
-    * aggregates (a handful of rows) — never for row-scale outputs. */
-  private[graft] def materializeThen(df: DataFrame)(cleanup: => Unit): DataFrame = {
-    val rows = df.collect()
-    val out = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-    cleanup
-    out
-  }
-
-  /** Recursive local-filesystem delete for the temp dirs above. */
-  private[graft] def deleteRecursively(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
   /** u1: driver-visible bucketed-join query — writes orders and customer
     * bucketed by custkey (8 buckets) into a temp warehouse path, joins
     * through the catalog tables, and aggregates per market segment. The
@@ -81,25 +56,24 @@ object ScaleOps {
     * suffix (concurrent sessions share a metastore) and both the tables
     * and the temp dir are dropped once the aggregate materializes. */
   def u1BucketedJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_buckets").toString
     val runId = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
     val ordersTable = s"graft_u1_orders_$runId"
     val customerTable = s"graft_u1_customer_$runId"
-    writeBucketed(graft.Tables.orders(spark, dir), "o_custkey", 8,
-      ordersTable, s"$tmp/orders")
-    writeBucketed(graft.Tables.customer(spark, dir), "c_custkey", 8,
-      customerTable, s"$tmp/customer")
-    val agg = spark.table(ordersTable)
-      .join(spark.table(customerTable),
-            col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"),
-           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      .orderBy(col("c_mktsegment"))
-    materializeThen(agg) {
+    try graft.Scratch.collected("buckets") { tmp =>
+      writeBucketed(graft.Tables.orders(spark, dir), "o_custkey", 8,
+        ordersTable, s"$tmp/orders")
+      writeBucketed(graft.Tables.customer(spark, dir), "c_custkey", 8,
+        customerTable, s"$tmp/customer")
+      spark.table(ordersTable)
+        .join(spark.table(customerTable),
+              col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_orders"),
+             round(sum(col("o_totalprice")), 2).as("sum_price"))
+        .orderBy(col("c_mktsegment"))
+    } finally {
       spark.sql(s"DROP TABLE IF EXISTS $ordersTable")
       spark.sql(s"DROP TABLE IF EXISTS $customerTable")
-      deleteRecursively(tmp)
     }
   }
 
@@ -130,13 +104,13 @@ object ScaleOps {
     * and aggregates the compacted copy; the oracle aggregates the raw
     * table, proving the rewrite is lossless. */
   def u5CompactionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val agg = compact(spark, s"$dir/lineitem.parquet", tmp, targetMB = 64)
-      .groupBy(col("l_linestatus"))
-      .agg(count(lit(1)).as("n_rows"),
-           round(sum(col("l_quantity")), 2).as("sum_qty"))
-      .orderBy(col("l_linestatus"))
-    materializeThen(agg) { deleteRecursively(tmp) }
+    graft.Scratch.collected("compact") { tmp =>
+      compact(spark, s"$dir/lineitem.parquet", tmp, targetMB = 64)
+        .groupBy(col("l_linestatus"))
+        .agg(count(lit(1)).as("n_rows"),
+             round(sum(col("l_quantity")), 2).as("sum_qty"))
+        .orderBy(col("l_linestatus"))
+    }
   }
 
   /** u2: driver-visible salted-join query — lineitem (probe, hot keys)
@@ -197,16 +171,16 @@ object ScaleOps {
   def u7ZorderQuery(spark: SparkSession, dir: String): DataFrame = {
     val events = graft.Tables.events(spark, dir)
       .withColumn("__minute", (unix_millis(col("ts")) / lit(60000L)).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    writeZorderLayout(events, "user_id", "__minute", 8, tmp)
-    val out = spark.read.parquet(tmp)
-      .filter(col("user_id").between(100, 300) &&
-        col("ts") >= lit("2024-01-02").cast("timestamp") &&
-        col("ts") < lit("2024-01-03").cast("timestamp"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-      .orderBy(col("event_type"))
-    materializeThen(out)(deleteRecursively(tmp))
+    graft.Scratch.collected("zorder") { tmp =>
+      writeZorderLayout(events, "user_id", "__minute", 8, tmp)
+      spark.read.parquet(tmp)
+        .filter(col("user_id").between(100, 300) &&
+          col("ts") >= lit("2024-01-02").cast("timestamp") &&
+          col("ts") < lit("2024-01-03").cast("timestamp"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
+        .orderBy(col("event_type"))
+    }
   }
 
   /** Last-writer-wins merge/upsert (the lakehouse MERGE INTO shape):
@@ -259,18 +233,18 @@ object ScaleOps {
       .write.partitionBy("event_date").mode("overwrite").parquet(outPath)
 
   def u8PartitionPruneQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_datepart").toString
-    writeDatePartitioned(graft.Tables.events(spark, dir), "ts", tmp)
-    val agg = spark.read.parquet(tmp)
-      .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
-              col("event_date") <= lit("2024-01-12").cast("date"))
-      .groupBy(col("event_date"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-           round(sum(col("value")), 2).as("sum_value"))
-      .select(col("event_date").cast("timestamp").as("event_day"),
-              col("event_type"), col("n_events"), col("sum_value"))
-      .orderBy(col("event_day"), col("event_type"))
-    materializeThen(agg) { deleteRecursively(tmp) }
+    graft.Scratch.collected("datepart") { tmp =>
+      writeDatePartitioned(graft.Tables.events(spark, dir), "ts", tmp)
+      spark.read.parquet(tmp)
+        .filter(col("event_date") >= lit("2024-01-10").cast("date") &&
+                col("event_date") <= lit("2024-01-12").cast("date"))
+        .groupBy(col("event_date"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+             round(sum(col("value")), 2).as("sum_value"))
+        .select(col("event_date").cast("timestamp").as("event_day"),
+                col("event_type"), col("n_events"), col("sum_value"))
+        .orderBy(col("event_day"), col("event_type"))
+    }
   }
 
   /** u9: runtime bloom-filter join pruning — Catalyst's InjectRuntimeFilter
@@ -323,7 +297,7 @@ object ScaleOps {
              round(sum(col("l_extendedprice")), 2).as("sum_price"))
         .orderBy(col("l_returnflag"))
       // materialize under the session confs; withConfs restores after
-      materializeThen(agg) { () }
+      graft.Scratch.local(agg)
     }
 
   /** u10: the ANN index AS A DISK LAYOUT — writes the [[graft.sim.IvfPqAnn]]
@@ -336,7 +310,7 @@ object ScaleOps {
     * disk-resident IVF indexes (FAISS on-disk, SCaNN, Vespa) lay out
     * postings. ScaleOpsSpec asserts the pruning on the physical plan.
     *
-    * Both the postings and the probe assignments persist under the fixed
+    * Both the postings and the probe assignments persist under the
     * model root, and the DuckDB oracle recomputes the per-query candidate
     * aggregates from those SAME files (the ModelOracles replay pattern) —
     * so a green row certifies the partitioned write, the pruned read, and
@@ -382,7 +356,7 @@ object ScaleOps {
            sum(aggregate(col("codes"), lit(0L),
              (acc, x) => acc + x.cast("long"))).as("code_checksum"))
       .orderBy(col("query_id"))
-    materializeThen(res) { () }   // files stay: the oracle replays them
+    graft.Scratch.local(res)   // files stay: the oracle replays them
   }
 
   /** The pruned read by itself, shared with ScaleOpsSpec's plan assert. */
@@ -392,15 +366,15 @@ object ScaleOps {
       .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
 
   def u3RangeLayoutQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_range").toString
-    writeRangeLayout(graft.Tables.events(spark, dir), "ts", 8, tmp)
-    val agg = spark.read.parquet(tmp)
-      .filter(col("ts") >= lit("2024-01-02").cast("timestamp") &&
-              col("ts") <  lit("2024-01-03").cast("timestamp"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-           round(sum(col("value")), 2).as("sum_value"))
-      .orderBy(col("event_type"))
-    materializeThen(agg) { deleteRecursively(tmp) }
+    graft.Scratch.collected("range") { tmp =>
+      writeRangeLayout(graft.Tables.events(spark, dir), "ts", 8, tmp)
+      spark.read.parquet(tmp)
+        .filter(col("ts") >= lit("2024-01-02").cast("timestamp") &&
+                col("ts") <  lit("2024-01-03").cast("timestamp"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+             round(sum(col("value")), 2).as("sum_value"))
+        .orderBy(col("event_type"))
+    }
   }
 }

@@ -26,25 +26,25 @@ object SchemaEvolution {
 
   /** u14: two-vintage write + evolved read + per-channel aggregate. */
   def u14SchemaEvolutionQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evolve").toString
-    val orders = graft.Tables.orders(spark, dir)
-    // vintage 1: the first half of history, before the column existed
-    orders.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .write.mode("overwrite").parquet(s"$tmp/vintage=1")
-    // vintage 2: later files carry the evolved column
-    orders.filter(col("o_orderkey") % 2 === 1)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        concat(lit("ch"), (col("o_orderkey") % 3).cast("string")).as("o_channel"))
-      .write.mode("overwrite").parquet(s"$tmp/vintage=2")
-    val evolved = spark.read.option("mergeSchema", "true").parquet(tmp)
-    val agg = evolved
-      .withColumn("channel", coalesce(col("o_channel"), lit("pre_evolution")))
-      .groupBy(col("channel"))
-      .agg(count(lit(1)).as("n_orders"),
-           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      .orderBy(col("channel"))
-    ScaleOps.materializeThen(agg) { ScaleOps.deleteRecursively(tmp) }
+    graft.Scratch.collected("evolve") { tmp =>
+      val orders = graft.Tables.orders(spark, dir)
+      // vintage 1: the first half of history, before the column existed
+      orders.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$tmp/vintage=1")
+      // vintage 2: later files carry the evolved column
+      orders.filter(col("o_orderkey") % 2 === 1)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+          concat(lit("ch"), (col("o_orderkey") % 3).cast("string")).as("o_channel"))
+        .write.mode("overwrite").parquet(s"$tmp/vintage=2")
+      val evolved = spark.read.option("mergeSchema", "true").parquet(tmp)
+      evolved
+        .withColumn("channel", coalesce(col("o_channel"), lit("pre_evolution")))
+        .groupBy(col("channel"))
+        .agg(count(lit(1)).as("n_orders"),
+             round(sum(col("o_totalprice")), 2).as("sum_price"))
+        .orderBy(col("channel"))
+    }
   }
 
   val oracleSql: String =

@@ -72,7 +72,7 @@ object SnapshotExpiry {
         .filter(s => s.startsWith("version=") &&
           s.stripPrefix("version=").toInt < keep)
         .toList
-        .foreach(s => ScaleOps.deleteRecursively(s"$root/$s"))
+        .foreach(s => graft.Scratch.delete(s"$root/$s"))
     } finally listing.close()
   }
 
@@ -81,44 +81,45 @@ object SnapshotExpiry {
     * in-query), v1 must throw, and only version dirs ≥ 2 may remain.
     * Output: the post-expiry v2/v3 aggregates, hash-gated. */
   def u22ExpiryQuery(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_expiry").toString
-    VersionedTable.commits(spark, dir).zipWithIndex.foreach {
-      case (c, i) => VersionedTable.commit(c, root, i + 1)
+    graft.Scratch.collected("expiry") { root =>
+      VersionedTable.commits(spark, dir).zipWithIndex.foreach {
+        case (c, i) => VersionedTable.commit(c, root, i + 1)
+      }
+      def aggAsOf(v: Int): DataFrame =
+        VersionedTable.readAsOf(spark, root, v)
+          .groupBy(col("status"))
+          // integer-CENTS money algebra (the s13 decade lesson): a double
+          // sum over millions of rows drifts ~1e-12 relative with the
+          // partial-sum tree, flipping 2dp rounding at 1e11 magnitudes —
+          // the before/after gate then fails on association order, not on
+          // data. Cents sums are exact integers, association-free.
+          .agg(count(lit(1)).as("n_keys"),
+               round(sum(round(col("price") * 100).cast("long")) / 100.0, 2)
+                 .as("sum_price"))
+          .select(lit(v.toLong).as("as_of_version"), col("status"),
+                  col("n_keys"), col("sum_price"))
+      val before = (2 to 3).map(aggAsOf).reduce(_ unionByName _)
+        .orderBy(col("as_of_version"), col("status")).collect().toSeq
+      expire(spark, root, keep = 2)
+      val outDf = (2 to 3).map(aggAsOf).reduce(_ unionByName _)
+        .orderBy(col("as_of_version"), col("status"))
+      val after = outDf.collect().toSeq
+      require(after == before,
+        s"u22 gate: retained snapshots changed across expiry:\n$before\nvs\n$after")
+      val e = try { VersionedTable.readAsOf(spark, root, 1).count(); null }
+              catch { case ex: IllegalArgumentException => ex }
+      require(e != null && e.getMessage.contains("expired"),
+        "u22 gate: time travel below the floor must fail loudly")
+      val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      val vdirs = try {
+        import scala.jdk.CollectionConverters._
+        dirs.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("version=")).toList
+      } finally dirs.close()
+      require(vdirs.sorted == List("version=2", "version=3"),
+        s"u22 gate: GC left $vdirs")
+      outDf
     }
-    def aggAsOf(v: Int): DataFrame =
-      VersionedTable.readAsOf(spark, root, v)
-        .groupBy(col("status"))
-        // integer-CENTS money algebra (the s13 decade lesson): a double
-        // sum over millions of rows drifts ~1e-12 relative with the
-        // partial-sum tree, flipping 2dp rounding at 1e11 magnitudes —
-        // the before/after gate then fails on association order, not on
-        // data. Cents sums are exact integers, association-free.
-        .agg(count(lit(1)).as("n_keys"),
-             round(sum(round(col("price") * 100).cast("long")) / 100.0, 2)
-               .as("sum_price"))
-        .select(lit(v.toLong).as("as_of_version"), col("status"),
-                col("n_keys"), col("sum_price"))
-    val before = (2 to 3).map(aggAsOf).reduce(_ unionByName _)
-      .orderBy(col("as_of_version"), col("status")).collect().toSeq
-    expire(spark, root, keep = 2)
-    val outDf = (2 to 3).map(aggAsOf).reduce(_ unionByName _)
-      .orderBy(col("as_of_version"), col("status"))
-    val after = outDf.collect().toSeq
-    require(after == before,
-      s"u22 gate: retained snapshots changed across expiry:\n$before\nvs\n$after")
-    val e = try { VersionedTable.readAsOf(spark, root, 1).count(); null }
-            catch { case ex: IllegalArgumentException => ex }
-    require(e != null && e.getMessage.contains("expired"),
-      "u22 gate: time travel below the floor must fail loudly")
-    val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(root))
-    val vdirs = try {
-      import scala.jdk.CollectionConverters._
-      dirs.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("version=")).toList
-    } finally dirs.close()
-    require(vdirs.sorted == List("version=2", "version=3"),
-      s"u22 gate: GC left $vdirs")
-    ScaleOps.materializeThen(outDf) { ScaleOps.deleteRecursively(root) }
   }
 
   /** DuckDB replay: u11's resolution arithmetic restricted to as-of

@@ -65,18 +65,18 @@ object StatsSkipping {
     * then a half-year revenue query served through the manifest-pruned
     * scan; the oracle aggregates the raw table. */
   def u12StatsSkippingQuery(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_skip").toString
-    ScaleOps.writeRangeLayout(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
-    val manifest = buildManifest(spark, tmp, "o_orderdate")
-      .localCheckpoint(true) // manifest is file-count-sized; built once
-    val lo = lit("1995-01-01").cast("timestamp")
-    val hi = lit("1995-07-01").cast("timestamp")
-    val agg = skippingScan(spark, tmp, manifest, "o_orderdate", lo, hi)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-           round(sum(col("o_totalprice")), 2).as("sum_price"))
-      .orderBy(col("o_orderpriority"))
-    ScaleOps.materializeThen(agg) { ScaleOps.deleteRecursively(tmp) }
+    graft.Scratch.collected("skip") { tmp =>
+      ScaleOps.writeRangeLayout(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
+      val manifest = buildManifest(spark, tmp, "o_orderdate")
+        .localCheckpoint(true) // manifest is file-count-sized; built once
+      val lo = lit("1995-01-01").cast("timestamp")
+      val hi = lit("1995-07-01").cast("timestamp")
+      skippingScan(spark, tmp, manifest, "o_orderdate", lo, hi)
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_orders"),
+             round(sum(col("o_totalprice")), 2).as("sum_price"))
+        .orderBy(col("o_orderpriority"))
+    }
   }
 
   val oracleSql: String =

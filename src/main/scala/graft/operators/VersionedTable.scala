@@ -85,15 +85,15 @@ object VersionedTable {
   /** u11: write 3 commits, then summarize read-as-of for v = 1, 2, 3 —
     * per (as_of_version, status) key count and price sum. */
   def query(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_versioned").toString
-    commits(spark, dir).zipWithIndex.foreach { case (c, i) => commit(c, root, i + 1) }
-    val out = (1 to 3).map { v =>
-      readAsOf(spark, root, v)
-        .groupBy(col("status"))
-        .agg(count(lit(1)).as("n_keys"), round(sum(col("price")), 2).as("sum_price"))
-        .select(lit(v).as("as_of_version"), col("status"), col("n_keys"), col("sum_price"))
-    }.reduce(_ union _).orderBy(col("as_of_version"), col("status"))
-    ScaleOps.materializeThen(out) { ScaleOps.deleteRecursively(root) }
+    graft.Scratch.collected("versioned") { root =>
+      commits(spark, dir).zipWithIndex.foreach { case (c, i) => commit(c, root, i + 1) }
+      (1 to 3).map { v =>
+        readAsOf(spark, root, v)
+          .groupBy(col("status"))
+          .agg(count(lit(1)).as("n_keys"), round(sum(col("price")), 2).as("sum_price"))
+          .select(lit(v).as("as_of_version"), col("status"), col("n_keys"), col("sum_price"))
+      }.reduce(_ union _).orderBy(col("as_of_version"), col("status"))
+    }
   }
 
   val oracleSql: String =

@@ -79,15 +79,15 @@ object WriteAuditPublish {
     * report the audit record from the PUBLISHED files. */
   def u16WapQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_wap").toString
-    val curated = graft.Tables.orders(spark, dir)
-      .filter($"o_totalprice" > 0)
-      .select($"o_orderkey", $"o_custkey", $"o_totalprice", $"o_orderstatus")
-    val servingPath = publish(spark, curated, root, version = 1)
-    val a = auditOf(spark.read.parquet(servingPath))
-    val out = Seq((a.nRows, a.nKeys, a.sumCents))
-      .toDF("n_rows", "n_keys", "sum_cents")
-    ScaleOps.materializeThen(out) { ScaleOps.deleteRecursively(root) }
+    graft.Scratch.collected("wap") { root =>
+      val curated = graft.Tables.orders(spark, dir)
+        .filter($"o_totalprice" > 0)
+        .select($"o_orderkey", $"o_custkey", $"o_totalprice", $"o_orderstatus")
+      val servingPath = publish(spark, curated, root, version = 1)
+      val a = auditOf(spark.read.parquet(servingPath))
+      Seq((a.nRows, a.nKeys, a.sumCents))
+        .toDF("n_rows", "n_keys", "sum_cents")
+    }
   }
 
   val oracleSql: String =

@@ -466,7 +466,7 @@ object Relational {
       .orderBy($"l_returnflag")
     // materialize ONCE: the gate below and the caller's action would
     // otherwise each rerun the exact-percentile sorts (q21 pattern)
-    val res = graft.operators.ScaleOps.materializeThen(out)(())
+    val res = graft.Scratch.local(out)
     val worst = res.collect().map(_.getAs[Double]("max_rel_error")).max
     require(worst <= 0.05,
       s"approx_percentile worst rel_error $worst exceeds 5% at accuracy 1000")

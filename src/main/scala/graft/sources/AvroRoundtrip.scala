@@ -117,10 +117,10 @@ object AvroRoundtrip {
     * against the same parquet-side oracle as src1–src3/src5). */
   def query(spark: SparkSession, dir: String): DataFrame = {
     val o = ordersSlice(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_avro").toString
-    writeAvro(o, tmp)
-    val back = readAvro(spark, tmp, o.schema)
-    graft.operators.ScaleOps.materializeThen(summarize(back))(
-      graft.operators.ScaleOps.deleteRecursively(tmp))
+    graft.Scratch.collected("avro") { tmp =>
+      writeAvro(o, tmp)
+      val back = readAvro(spark, tmp, o.schema)
+      summarize(back)
+    }
   }
 }

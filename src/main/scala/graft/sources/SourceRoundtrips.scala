@@ -28,29 +28,24 @@ object SourceRoundtrips {
            max(col("o_orderkey")).as("max_key"))
       .orderBy(col("o_orderstatus"))
 
-  /** Materialize the small summary eagerly, then delete the temp
-    * round-trip files so verify/bench reruns don't accumulate disk. */
-  private def materializeAndClean(spark: SparkSession, out: DataFrame,
-                                  tmp: String): DataFrame =
-    graft.operators.ScaleOps.materializeThen(out)(
-      graft.operators.ScaleOps.deleteRecursively(tmp))
-
   /** src1: CSV (header + explicit schema on read). */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val o = ordersSlice(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    o.write.mode("overwrite").option("header", "true").csv(tmp)
-    val back = spark.read.schema(o.schema).option("header", "true").csv(tmp)
-    materializeAndClean(spark, summarize(back), tmp)
+    graft.Scratch.collected("csv") { tmp =>
+      o.write.mode("overwrite").option("header", "true").csv(tmp)
+      val back = spark.read.schema(o.schema).option("header", "true").csv(tmp)
+      summarize(back)
+    }
   }
 
   /** src2: JSON lines (schema-applied read). */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val o = ordersSlice(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
-    o.write.mode("overwrite").json(tmp)
-    val back = spark.read.schema(o.schema).json(tmp)
-    materializeAndClean(spark, summarize(back), tmp)
+    graft.Scratch.collected("json") { tmp =>
+      o.write.mode("overwrite").json(tmp)
+      val back = spark.read.schema(o.schema).json(tmp)
+      summarize(back)
+    }
   }
 
   /** src3: ORC (the second columnar format Spark ships a native
@@ -61,10 +56,11 @@ object SourceRoundtrips {
     * predicate (a tautology on TPC-H money — row counts must survive). */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val o = ordersSlice(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    o.write.mode("overwrite").orc(tmp)
-    val back = spark.read.orc(tmp).filter(col("o_totalprice") > 0)
-    materializeAndClean(spark, summarize(back), tmp)
+    graft.Scratch.collected("orc") { tmp =>
+      o.write.mode("overwrite").orc(tmp)
+      val back = spark.read.orc(tmp).filter(col("o_totalprice") > 0)
+      summarize(back)
+    }
   }
 
   /** src4: raw TEXT lines — the format raw corpora actually arrive in.
@@ -78,20 +74,20 @@ object SourceRoundtrips {
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), md5(col("text")).as("m"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_text").toString
-    d.select(concat_ws("\t", col("doc_id"), col("lang"), col("m")).as("value"))
-      .write.mode("overwrite").text(tmp)
-    val parts = split(col("value"), "\t")
-    val back = spark.read.text(tmp)
-      .select(parts.getItem(0).cast("long").as("doc_id"),
-              parts.getItem(1).as("lang"), parts.getItem(2).as("m"))
-    val out = back.groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-           countDistinct(col("m")).as("n_md5"),
-           min(col("m")).as("min_md5"), max(col("m")).as("max_md5"),
-           min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
-      .orderBy(col("lang"))
-    materializeAndClean(spark, out, tmp)
+    graft.Scratch.collected("text") { tmp =>
+      d.select(concat_ws("\t", col("doc_id"), col("lang"), col("m")).as("value"))
+        .write.mode("overwrite").text(tmp)
+      val parts = split(col("value"), "\t")
+      val back = spark.read.text(tmp)
+        .select(parts.getItem(0).cast("long").as("doc_id"),
+                parts.getItem(1).as("lang"), parts.getItem(2).as("m"))
+      back.groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+             countDistinct(col("m")).as("n_md5"),
+             min(col("m")).as("min_md5"), max(col("m")).as("max_md5"),
+             min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"))
+        .orderBy(col("lang"))
+    }
   }
 
   /** src5: XML (Spark 4's built-in source — the format enterprise feeds
@@ -101,9 +97,10 @@ object SourceRoundtrips {
     * contract hash-mismatches against the parquet-derived oracle. */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val o = ordersSlice(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xml").toString
-    o.write.mode("overwrite").option("rowTag", "order").xml(tmp)
-    val back = spark.read.schema(o.schema).option("rowTag", "order").xml(tmp)
-    materializeAndClean(spark, summarize(back), tmp)
+    graft.Scratch.collected("xml") { tmp =>
+      o.write.mode("overwrite").option("rowTag", "order").xml(tmp)
+      val back = spark.read.schema(o.schema).option("rowTag", "order").xml(tmp)
+      summarize(back)
+    }
   }
 }

@@ -108,64 +108,61 @@ object ChangeFeedStream {
     * against the from-scratch aggregate, emit the aggregate. */
   def s13StreamChangeFeed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val feedRoot = java.nio.file.Files.createTempDirectory("graft_s13_feed").toString
-    val mvRoot = java.nio.file.Files.createTempDirectory("graft_s13_mv").toString
-    // ONE file per commit: with maxFilesPerTrigger=1 below, a micro-batch
-    // IS a commit — the production CDF consumption granularity. (The
-    // first decade run wrote 32 files per commit → ~100 micro-batches,
-    // each paying a full state rewrite: 476s of pure re-merging. Batch
-    // size must track the COMMIT, not the writer's partition count; the
-    // spec's batching-invariance tests still drive odd splits.)
-    graft.operators.VersionedTable.commits(spark, dir).zipWithIndex.foreach {
-      case (c, i) => graft.operators.VersionedTable.commit(c.coalesce(1), feedRoot, i + 1)
-    }
-    // empty state/aggregate at version 0
-    val emptyState = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      spark.read.parquet(feedRoot).select(
-        col("k"), col("price"), col("status"), col("deleted"),
-        col("version").cast("int").as("version")).schema)
-    emptyState.write.mode("overwrite").parquet(s"$mvRoot/state_0")
-    emptyState.groupBy(col("status"))
-      .agg(count(lit(1)).as("n_keys"),
-           sum(round(col("price") * lit(100.0), 0).cast("long")).as("sum_cents"))
-      .write.mode("overwrite").parquet(s"$mvRoot/agg_0")
-    val schema = spark.read.parquet(feedRoot).drop("version").schema
-    val stream = spark.readStream.schema(schema)
-      .option("basePath", feedRoot)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feedRoot)
-    val t0 = System.nanoTime()
-    val q = EventStreams.withStateParts(spark) {
-      val q0 = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) applyBatch(spark, mvRoot, batch)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination()
-      q0
-    }
-    StreamMeters.record("s13_stream_change_feed", (System.nanoTime() - t0) / 1e9,
-      StreamMeters.batchSeconds(q))
-    val finCents = spark.read
-      .parquet(s"$mvRoot/agg_${EventStreams.latestStateVersion(mvRoot)}")
-    // the incremental view must equal the from-scratch resolution —
-    // compared in EXACT integer cents (no double-sum association drift
-    // at any scale)
-    val direct = graft.operators.VersionedTable.readAsOf(spark, feedRoot, 3)
-      .groupBy(col("status"))
-      .agg(count(lit(1)).as("n_keys"),
-           sum(round(col("price") * lit(100.0), 0).cast("long")).as("sum_cents"))
-    val got = finCents.orderBy(col("status")).collect().toSeq
-    val want = direct.orderBy(col("status")).collect().toSeq
-    require(got == want,
-      s"s13 gate: incremental view $got != from-scratch $want")
-    val fin = finCents.select(col("status"), col("n_keys"),
-      round(col("sum_cents") / lit(100.0), 2).as("sum_price"))
-    val out = fin.orderBy(col("status"))
-    graft.operators.ScaleOps.materializeThen(out) {
-      graft.operators.ScaleOps.deleteRecursively(feedRoot)
-      graft.operators.ScaleOps.deleteRecursively(mvRoot)
+    graft.Scratch.collected("s13") { d =>
+      val (feedRoot, mvRoot) = (s"$d/feed", s"$d/mv")
+      // ONE file per commit: with maxFilesPerTrigger=1 below, a micro-batch
+      // IS a commit — the production CDF consumption granularity. (The
+      // first decade run wrote 32 files per commit → ~100 micro-batches,
+      // each paying a full state rewrite: 476s of pure re-merging. Batch
+      // size must track the COMMIT, not the writer's partition count; the
+      // spec's batching-invariance tests still drive odd splits.)
+      graft.operators.VersionedTable.commits(spark, dir).zipWithIndex.foreach {
+        case (c, i) => graft.operators.VersionedTable.commit(c.coalesce(1), feedRoot, i + 1)
+      }
+      // empty state/aggregate at version 0
+      val emptyState = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        spark.read.parquet(feedRoot).select(
+          col("k"), col("price"), col("status"), col("deleted"),
+          col("version").cast("int").as("version")).schema)
+      emptyState.write.mode("overwrite").parquet(s"$mvRoot/state_0")
+      emptyState.groupBy(col("status"))
+        .agg(count(lit(1)).as("n_keys"),
+             sum(round(col("price") * lit(100.0), 0).cast("long")).as("sum_cents"))
+        .write.mode("overwrite").parquet(s"$mvRoot/agg_0")
+      val schema = spark.read.parquet(feedRoot).drop("version").schema
+      val stream = spark.readStream.schema(schema)
+        .option("basePath", feedRoot)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(feedRoot)
+      val t0 = System.nanoTime()
+      val q = EventStreams.withStateParts(spark) {
+        val q0 = stream.writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            if (!batch.isEmpty) applyBatch(spark, mvRoot, batch)
+          }
+          .trigger(Trigger.AvailableNow()).start()
+        q0.awaitTermination()
+        q0
+      }
+      StreamMeters.record("s13_stream_change_feed", (System.nanoTime() - t0) / 1e9,
+        StreamMeters.batchSeconds(q))
+      val finCents = spark.read
+        .parquet(s"$mvRoot/agg_${EventStreams.latestStateVersion(mvRoot)}")
+      // the incremental view must equal the from-scratch resolution —
+      // compared in EXACT integer cents (no double-sum association drift
+      // at any scale)
+      val direct = graft.operators.VersionedTable.readAsOf(spark, feedRoot, 3)
+        .groupBy(col("status"))
+        .agg(count(lit(1)).as("n_keys"),
+             sum(round(col("price") * lit(100.0), 0).cast("long")).as("sum_cents"))
+      val got = finCents.orderBy(col("status")).collect().toSeq
+      val want = direct.orderBy(col("status")).collect().toSeq
+      require(got == want,
+        s"s13 gate: incremental view $got != from-scratch $want")
+      val fin = finCents.select(col("status"), col("n_keys"),
+        round(col("sum_cents") / lit(100.0), 2).as("sum_price"))
+      fin.orderBy(col("status"))
     }
   }
 

@@ -57,29 +57,28 @@ object EventStreams {
     * a DIRECTORY (that's its contract — new files arrive over time). A
     * directory-shaped table (the production layout, and any multi-file
     * write) streams as-is; the driver's single-FILE test tables are
-    * staged behind a symlink in a temp dir. (The source does NOT recurse
-    * into subdirectories, so pointing it at the parent with a file-named
-    * child dir silently streams zero files — found when the 10× scaled
-    * corpus produced empty streaming results.) */
+    * staged behind a symlink in a [[graft.Scratch]] dir, one per table
+    * file for the process. (The source does NOT recurse into
+    * subdirectories, so pointing it at the parent with a file-named child
+    * dir silently streams zero files — found when the 10× scaled corpus
+    * produced empty streaming results.) */
   private def tableStream(spark: org.apache.spark.sql.SparkSession,
                           dir: String, table: String): DataFrame = {
     val src = java.nio.file.Paths.get(dir, s"$table.parquet")
     val streamDir =
       if (java.nio.file.Files.isDirectory(src)) src.toString
-      else {
-        val staged = java.nio.file.Files.createTempDirectory("graft_stream_src")
-        // staged dirs hold one symlink each; clean them up on JVM exit so
-        // repeated bench/verify sessions don't accumulate temp entries
-        staged.toFile.deleteOnExit()
-        val link = staged.resolve(s"$table.parquet")
-        link.toFile.deleteOnExit()
+      else stagedTables.computeIfAbsent(src.toString, _ => {
+        val staged = graft.Scratch.dir("stream_src")
+        val link = java.nio.file.Paths.get(staged, s"$table.parquet")
         try java.nio.file.Files.createSymbolicLink(link, src)
         catch { case _: Throwable => java.nio.file.Files.copy(src, link) }
-        staged.toString
-      }
+        staged
+      })
     val schema = spark.read.parquet(src.toString).schema
     spark.readStream.schema(schema).parquet(streamDir)
   }
+
+  private val stagedTables = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def eventStream(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
@@ -328,30 +327,29 @@ object EventStreams {
     val ordersBase = graft.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"))
     val nOrders = ordersBase.count()
-    val stateRoot = java.nio.file.Files.createTempDirectory("graft_stream_merge").toString
-    ordersBase.withColumn("__v", lit(-1L)).withColumn("__e", lit(-1L))
-      .write.mode("overwrite").parquet(s"$stateRoot/state_0")
-    val updatesStream = eventStream(spark, dir).select(
-      ((col("event_id") % nOrders) + 1).as("o_orderkey"),
-      (col("value") * 100).as("o_totalprice"),
-      unix_millis(col("ts")).as("__v"),
-      col("event_id").as("__e"))
-    val t0 = System.nanoTime()
-    val q = updatesStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeUpsertBatch(spark, stateRoot, ordersBase, batch)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMeters.record("s5_stream_upsert", (System.nanoTime() - t0) / 1e9,
-      StreamMeters.batchSeconds(q))
-    val fin = spark.read.parquet(s"$stateRoot/state_${latestStateVersion(stateRoot)}")
-    val out = fin.agg(
-      count(lit(1)).as("n_orders"),
-      round(sum(col("o_totalprice")), 2).as("total_value"),
-      sum(when(col("__v") >= 0, 1L).otherwise(0L)).as("n_updated"))
-    graft.operators.ScaleOps.materializeThen(out)(
-      graft.operators.ScaleOps.deleteRecursively(stateRoot))
+    graft.Scratch.collected("stream_merge") { stateRoot =>
+      ordersBase.withColumn("__v", lit(-1L)).withColumn("__e", lit(-1L))
+        .write.mode("overwrite").parquet(s"$stateRoot/state_0")
+      val updatesStream = eventStream(spark, dir).select(
+        ((col("event_id") % nOrders) + 1).as("o_orderkey"),
+        (col("value") * 100).as("o_totalprice"),
+        unix_millis(col("ts")).as("__v"),
+        col("event_id").as("__e"))
+      val t0 = System.nanoTime()
+      val q = updatesStream.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          mergeUpsertBatch(spark, stateRoot, ordersBase, batch)
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      StreamMeters.record("s5_stream_upsert", (System.nanoTime() - t0) / 1e9,
+        StreamMeters.batchSeconds(q))
+      val fin = spark.read.parquet(s"$stateRoot/state_${latestStateVersion(stateRoot)}")
+      fin.agg(
+        count(lit(1)).as("n_orders"),
+        round(sum(col("o_totalprice")), 2).as("total_value"),
+        sum(when(col("__v") >= 0, 1L).otherwise(0L)).as("n_updated"))
+    }
   }
 
   /** Highest COMMITTED state version under a versioned-merge root —
@@ -586,16 +584,17 @@ object EventStreams {
       .filter(AnnUpsert.isInsert(col("vec_id")))
       .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("v"),
               lit("upsert").as("src"))
-    val ck = java.nio.file.Files.createTempDirectory("graft_s12_ck")
-    ck.toFile.deleteOnExit()
     val t0 = System.nanoTime()
-    val q = arrivals.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        AnnUpsert.upsertVectors(spark, s"$root/s12_postings", centroids, batch)
-      }
-      .option("checkpointLocation", ck.toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val q = graft.Scratch.using("s12_ck") { ck =>
+      val q0 = arrivals.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          AnnUpsert.upsertVectors(spark, s"$root/s12_postings", centroids, batch)
+        }
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow()).start()
+      q0.awaitTermination()
+      q0
+    }
     StreamMeters.record("s12_stream_ann_upsert",
       (System.nanoTime() - t0) / 1e9, StreamMeters.batchSeconds(q))
     AnnUpsert.probeAndAggregate(spark, dir, "s12", centroids)
@@ -717,48 +716,47 @@ object EventStreams {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.expressions.Window
     val counts = trendingCounts(eventStream(spark, dir))
-    val stateRoot = java.nio.file.Files.createTempDirectory("graft_trend").toString
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("window_start",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("item",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_events",
-            org.apache.spark.sql.types.LongType))))
-      .write.mode("overwrite").parquet(s"$stateRoot/state_0")
-    val t0s11 = System.nanoTime()
-    val q = withStateParts(spark) {
-      val q0 = counts.writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // last-writer-wins: this batch's rows replace same-key view rows.
-          // The version cursor is the _SUCCESS-gated directory listing (the
-          // s5 rule) so a restarted query resumes from committed state and
-          // skips torn writes — filesystem listing also gives the final
-          // read below its cross-thread visibility (the r9 AtomicInteger
-          // mirror is gone with it).
-          val ver = latestStateVersion(stateRoot)
-          val merged = spark.read.parquet(s"$stateRoot/state_$ver")
-            .join(batch, Seq("window_start", "item"), "left_anti")
-            .unionByName(batch)
-          // next version, never in place (the s5 rule)
-          merged.write.mode("overwrite").parquet(s"$stateRoot/state_${ver + 1}")
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination()
-      q0
+    graft.Scratch.collected("trend") { stateRoot =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("window_start",
+              org.apache.spark.sql.types.TimestampType),
+            org.apache.spark.sql.types.StructField("item",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("n_events",
+              org.apache.spark.sql.types.LongType))))
+        .write.mode("overwrite").parquet(s"$stateRoot/state_0")
+      val t0s11 = System.nanoTime()
+      val q = withStateParts(spark) {
+        val q0 = counts.writeStream.outputMode("update")
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            // last-writer-wins: this batch's rows replace same-key view rows.
+            // The version cursor is the _SUCCESS-gated directory listing (the
+            // s5 rule) so a restarted query resumes from committed state and
+            // skips torn writes — filesystem listing also gives the final
+            // read below its cross-thread visibility (the r9 AtomicInteger
+            // mirror is gone with it).
+            val ver = latestStateVersion(stateRoot)
+            val merged = spark.read.parquet(s"$stateRoot/state_$ver")
+              .join(batch, Seq("window_start", "item"), "left_anti")
+              .unionByName(batch)
+            // next version, never in place (the s5 rule)
+            merged.write.mode("overwrite").parquet(s"$stateRoot/state_${ver + 1}")
+          }
+          .trigger(Trigger.AvailableNow()).start()
+        q0.awaitTermination()
+        q0
+      }
+      StreamMeters.record("s11_stream_trending", (System.nanoTime() - t0s11) / 1e9,
+        StreamMeters.batchSeconds(q))
+      val fin = spark.read.parquet(s"$stateRoot/state_${latestStateVersion(stateRoot)}")
+      val w = Window.partitionBy(col("window_start"))
+        .orderBy(col("n_events").desc, col("item"))
+      fin.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 3)
+        .select(col("window_start"), col("rank"), col("item"), col("n_events"))
+        .orderBy(col("window_start"), col("rank"))
     }
-    StreamMeters.record("s11_stream_trending", (System.nanoTime() - t0s11) / 1e9,
-      StreamMeters.batchSeconds(q))
-    val fin = spark.read.parquet(s"$stateRoot/state_${latestStateVersion(stateRoot)}")
-    val w = Window.partitionBy(col("window_start"))
-      .orderBy(col("n_events").desc, col("item"))
-    val out = fin.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
-      .select(col("window_start"), col("rank"), col("item"), col("n_events"))
-      .orderBy(col("window_start"), col("rank"))
-    graft.operators.ScaleOps.materializeThen(out)(
-      graft.operators.ScaleOps.deleteRecursively(stateRoot))
   }
 
   /** The maintained aggregate: 1h tumbling windowed counts per JSON

@@ -55,16 +55,16 @@ object StreamMetrics {
   }
 
   /** Write `df` as ONE parquet file named `name` under `dir` with a
-    * pinned mtime (the file source orders batches by mtime). */
-  private def stageFile(df: DataFrame, dir: java.nio.file.Path,
+    * pinned mtime (the file source orders batches by mtime), by way of
+    * a write to `work`, which is deleted after the move. */
+  private def stageFile(df: DataFrame, dir: String, work: String,
                         name: String, mtime: Long): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_s15_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
-    val target = dir.resolve(name)
+    df.coalesce(1).write.mode("overwrite").parquet(work)
+    val part = new java.io.File(work).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val target = java.nio.file.Paths.get(dir, name)
     java.nio.file.Files.move(part.toPath, target)
     target.toFile.setLastModified(mtime)
-    graft.operators.ScaleOps.deleteRecursively(tmp.toString)
+    graft.Scratch.delete(work)
   }
 
   /** s15: the s1-shaped watermarked hourly aggregate driven through a
@@ -76,53 +76,53 @@ object StreamMetrics {
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
     val (onTime, late, extras) = plantedCohorts(ev)
-    val staged = java.nio.file.Files.createTempDirectory("graft_s15")
-    stageFile(onTime, staged, "0-ontime.parquet", 1000000L)
-    stageFile(extras, staged, "1-extras.parquet", 2000000L)
-    stageFile(late, staged, "2-late.parquet", 3000000L)
-    val stream = spark.readStream
-      .schema(onTime.schema)
-      .option("maxFilesPerTrigger", "1") // one file per batch: the late
-      .parquet(staged.toString)          // cohort must arrive AFTER the
-                                         // watermark has COMMITTED into
-                                         // the (one-batch-lagged) late
-                                         // filter — see header
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-              col("n_events"), col("sum_value"))
-    val name = "graft_s15_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(4, spark.sparkContext.defaultParallelism / 4).toString)
-    val dropped =
-      try {
-        // append mode: only watermark-FINALIZED windows are emitted —
-        // the semantics that make late-row dropping happen at all
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        q.recentProgress.flatMap(_.stateOperators)
-          .map(_.numRowsDroppedByWatermark).sum
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    // the counter sits AFTER the batch's aggregation, so it counts the
-    // late cohort's distinct (window, event_type) GROUPS, not raw rows
-    // (86 planted rows → 85 groups at sf0.01 — found the off-by-one way)
-    val planted = late
-      .select(window(col("ts"), "1 hour"), col("event_type")).distinct().count()
-    require(dropped == planted,
-      s"s15: engine dropped-by-watermark counter $dropped != planted late group count " +
-      s"$planted — watermark semantics or telemetry broken")
-    graft.operators.ScaleOps.materializeThen(
+    graft.Scratch.collected("s15") { d =>
+      val staged = java.nio.file.Files.createDirectory(java.nio.file.Paths.get(d, "stream")).toString
+      stageFile(onTime, staged, s"$d/part", "0-ontime.parquet", 1000000L)
+      stageFile(extras, staged, s"$d/part", "1-extras.parquet", 2000000L)
+      stageFile(late, staged, s"$d/part", "2-late.parquet", 3000000L)
+      val stream = spark.readStream
+        .schema(onTime.schema)
+        .option("maxFilesPerTrigger", "1") // one file per batch: the late
+        .parquet(staged)                   // cohort must arrive AFTER the
+                                           // watermark has COMMITTED into
+                                           // the (one-batch-lagged) late
+                                           // filter — see header
+      val agg = stream
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+        .select(col("window.start").as("window_start"), col("event_type"),
+                col("n_events"), col("sum_value"))
+      val name = "graft_s15_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions",
+        math.max(4, spark.sparkContext.defaultParallelism / 4).toString)
+      val dropped =
+        try {
+          // append mode: only watermark-FINALIZED windows are emitted —
+          // the semantics that make late-row dropping happen at all
+          val q = agg.writeStream.format("memory").queryName(name)
+            .outputMode("append").trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          q.recentProgress.flatMap(_.stateOperators)
+            .map(_.numRowsDroppedByWatermark).sum
+        } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      // the counter sits AFTER the batch's aggregation, so it counts the
+      // late cohort's distinct (window, event_type) GROUPS, not raw rows
+      // (86 planted rows → 85 groups at sf0.01 — found the off-by-one way)
+      val planted = late
+        .select(window(col("ts"), "1 hour"), col("event_type")).distinct().count()
+      require(dropped == planted,
+        s"s15: engine dropped-by-watermark counter $dropped != planted late group count " +
+        s"$planted — watermark semantics or telemetry broken")
       spark.table(name)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_windows"), sum(col("n_events")).as("n_events"),
              round(sum(col("sum_value")), 2).as("sum_value"))
         .withColumn("dropped_late", lit(dropped))
-        .orderBy(col("event_type")))(
-      graft.operators.ScaleOps.deleteRecursively(staged.toString))
+        .orderBy(col("event_type"))
+    }
   }
 
   /** DuckDB replay: emitted windows = epoch-aligned hour windows whose

@@ -37,7 +37,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     val df = pts.toDF("id", "vec", "y")
     val model = IcfSvmTrainer.fit(df, "id", "vec", "y",
       Kernel.Rbf(0.5), rank = 16, c = 1.0, maxIter = 40)
-    val dir = java.nio.file.Files.createTempDirectory("icfsvm_text").toString
+    val dir = graft.Scratch.dir("icfsvm_text")
     model.saveText(spark, dir)
     val loaded = IcfSvmModel.loadText(spark, dir)
     assert(loaded.numSupportVectors === model.numSupportVectors)
@@ -368,7 +368,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
 
   test("saveText writes the psvm text format byte-for-byte") {
     val svs = Seq((Array(1.0e-5, -0.25, 3.0), 0.5)).toDF("sv_x", "sv_coef")
-    val dir = java.nio.file.Files.createTempDirectory("icfsvm_golden").toString
+    val dir = graft.Scratch.dir("icfsvm_golden")
     val (_, jobs) = jobsDuring(IcfSvmModel(Kernel.Rbf(0.5), svs, 1, 0.125, 3).saveText(spark, dir))
     assert(jobs === 1, s"saveText submitted $jobs jobs")
     assert(spark.read.textFile(s"$dir/header").collect().toSeq === Seq(
@@ -378,7 +378,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
   }
 
   test("saveText to a file: URI overwrites an earlier model and loads back") {
-    val dir = "file:" + java.nio.file.Files.createTempDirectory("icfsvm_save_uri")
+    val dir = "file:" + graft.Scratch.dir("icfsvm_save_uri")
     val first = IcfSvmModel(Kernel.Rbf(0.25), Seq((Array(1.0, 2.0, 3.0), 0.5), (Array(0.0, 1.0, 0.0), -0.5))
       .toDF("sv_x", "sv_coef"), 2, 0.5, 3)
     val second = IcfSvmModel(Kernel.Linear, Seq((Array(0.25, -1.0), 1.5)).toDF("sv_x", "sv_coef"),
@@ -395,7 +395,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
   test("loadText reads its header from a file: URI without a Spark job") {
     val svs = Seq((Array(0.5, -1.0), 0.75), (Array(-2.0, 0.25), -1.5)).toDF("sv_x", "sv_coef")
     val model = IcfSvmModel(Kernel.Polynomial(0.5, 1.0, 3), svs, 2, -0.375, 2)
-    val dir = java.nio.file.Files.createTempDirectory("icfsvm_uri")
+    val dir = java.nio.file.Paths.get(graft.Scratch.dir("icfsvm_uri"))
     model.saveText(spark, dir.toString)
     // Hadoop's local file system writes `_SUCCESS` and `.crc` siblings;
     // they must not be read as header lines
@@ -412,7 +412,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
   }
 
   test("loadText: an out-of-range index fails loudly, and the SV plan never boxes elements") {
-    val dir = java.nio.file.Files.createTempDirectory("icfsvm_badidx").toString
+    val dir = graft.Scratch.dir("icfsvm_badidx")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/header"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/sv"))
     java.nio.file.Files.writeString(
@@ -485,7 +485,7 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
   test("loadText places sparse idx:val entries at their declared positions") {
     // a hand-written SPARSE model (zeros omitted, indices skip) — the
     // positional-parse bug would misalign x2/x4 into slots 2/3
-    val dir = java.nio.file.Files.createTempDirectory("icfsvm_sparse").toString
+    val dir = graft.Scratch.dir("icfsvm_sparse")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/header"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/sv"))
     java.nio.file.Files.writeString(
@@ -514,20 +514,20 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     }
     val df = pts.toDF("id", "vec")
     val kernel = Kernel.Rbf(0.3)
-    val dir = java.nio.file.Files.createTempDirectory("icf_ckpt").toString
+    val dir = graft.Scratch.dir("icf_ckpt")
 
     def collectH(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[Double]] =
       d.as[(Long, Seq[Double])].collect().toMap
 
     // full run with checkpointing: dumps the H prefix at column 4
     val full = collectH(Icf.factorize(df, "id", "vec", kernel, rank = 8,
-      checkpointEvery = 4, checkpointDir = Some(dir)))
+      checkpointEvery = 4, checkpointDir = Some(dir)).rows)
     assert(new java.io.File(s"$dir/state").exists(), "checkpoint written mid-run")
     // "crashed and rerun": a fresh call against the same dir resumes from
     // column 4 and must reproduce the uninterrupted factor EXACTLY —
     // every ICF pass is a per-row map + order-independent max-reduce
     val resumed = collectH(Icf.factorize(df, "id", "vec", kernel, rank = 8,
-      checkpointEvery = 4, checkpointDir = Some(dir)))
+      checkpointEvery = 4, checkpointDir = Some(dir)).rows)
     assert(resumed === full, "resumed factor differs from uninterrupted run")
   }
 
@@ -543,19 +543,20 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     val df = pts.toDF("id", "vec", "y")
     val map = Nystrom.fit(df, "id", "vec", Kernel.Rbf(0.5), numLandmarks = 20)
     val feats = Nystrom.transform(df, "vec", map, "h").persist()
-    val dir = java.nio.file.Files.createTempDirectory("ipm_ckpt").toString
+    val dir = graft.Scratch.dir("ipm_ckpt")
 
     // uninterrupted solve
-    val (aFull, _, _) = Ipm.solve(feats, "id", "y", "h", 1.0,
-      maxIter = 40, tol = 1e-6)
+    val aFull = Ipm.solve(feats, "id", "y", "h", 1.0,
+      maxIter = 40, tol = 1e-6).alphas
     val full = aFull.collect().toMap
     // "crashed" run: stops after 6 iterations, has dumped alphas at 3
     Ipm.solve(feats, "id", "y", "h", 1.0, maxIter = 6, tol = 1e-6,
       checkpointDir = Some(dir), checkpointEvery = 3)
     assert(new java.io.File(s"$dir/state").exists(), "checkpoint written mid-run")
     // resumed run continues from the dump instead of iteration 0
-    val (aRes, itersRes, _) = Ipm.solve(feats, "id", "y", "h", 1.0,
+    val resSol = Ipm.solve(feats, "id", "y", "h", 1.0,
       maxIter = 40, tol = 1e-6, checkpointDir = Some(dir), checkpointEvery = 100)
+    val (aRes, itersRes) = (resSol.alphas, resSol.iterations)
     val res = aRes.collect().toMap
     feats.unpersist()
     assert(itersRes > 3, "resume continues counting from the saved iteration")

@@ -21,8 +21,8 @@ class IpmSpec extends SparkSpec {
     val feats = Nystrom.transform(df, "vec", map, "h")
 
     val c = 1.0
-    val (alphasRdd, iters, gap) = Ipm.solve(feats, "id", "y", "h", c,
-      maxIter = 60, tol = 1e-5)
+    val sol = Ipm.solve(feats, "id", "y", "h", c, maxIter = 60, tol = 1e-5)
+    val (alphasRdd, iters, gap) = (sol.alphas, sol.iterations, sol.gap)
     val alphas = alphasRdd.collect().toMap
     info(f"IPM converged in $iters iters, surrogate gap $gap%.2e")
 

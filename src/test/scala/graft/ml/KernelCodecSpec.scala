@@ -17,7 +17,7 @@ class KernelCodecSpec extends SparkSpec {
   test("an unknown kernel_type is rejected by name, also from a text model file") {
     val e = intercept[IllegalArgumentException](Kernel.decode("sigmoid", 0.5, 0.0, 0))
     assert(e.getMessage.contains("unknown kernel_type 'sigmoid'"), e.getMessage)
-    val dir = java.nio.file.Files.createTempDirectory("kernel_codec").toString
+    val dir = graft.Scratch.dir("kernel_codec")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/header"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/header/part-00000"),

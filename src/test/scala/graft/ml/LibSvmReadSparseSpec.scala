@@ -31,7 +31,7 @@ class LibSvmReadSparseSpec extends SparkSpec {
 
   /** A directory holding one part file per entry of `files`. */
   private def dirOf(files: Seq[String]): String = {
-    val dir = Files.createTempDirectory("libsvm_read_sparse")
+    val dir = java.nio.file.Paths.get(graft.Scratch.dir("libsvm_read_sparse"))
     files.zipWithIndex.foreach { case (text, i) =>
       Files.writeString(dir.resolve(f"part-$i%05d.txt"), text)
     }

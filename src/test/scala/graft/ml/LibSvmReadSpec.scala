@@ -32,7 +32,7 @@ class LibSvmReadSpec extends SparkSpec with JobCounting {
 
   /** A directory holding one part file per entry of `files`. */
   private def dirOf(files: Seq[String]): String = {
-    val dir = Files.createTempDirectory("libsvm_read")
+    val dir = java.nio.file.Paths.get(graft.Scratch.dir("libsvm_read"))
     files.zipWithIndex.foreach { case (text, i) =>
       Files.writeString(dir.resolve(f"part-$i%05d.txt"), text)
     }
@@ -141,7 +141,7 @@ class LibSvmReadSpec extends SparkSpec with JobCounting {
   test("a caller's numFeatures pads back the trailing zeros write leaves out") {
     val df = Seq((1.0, Array(1.5, 0.0, -2.0, 0.0)), (-1.0, Array(0.0, 3.25, 0.0, 0.0)))
       .toDF("y", "vec")
-    val dir = Files.createTempDirectory("libsvm_pad").toString + "/data"
+    val dir = graft.Scratch.dir("libsvm_pad") + "/data"
     LibSvmIO.write(df, "y", "vec", dir)
     assert(LibSvmIO.read(spark, dir).collect().map(_.getSeq[Double](1).length).toSeq === Seq(3, 3))
     assert(LibSvmIO.read(spark, dir, numFeatures = 4).collect()

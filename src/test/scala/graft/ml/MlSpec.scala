@@ -40,7 +40,7 @@ class MlSpec extends SparkSpec {
     val pts = detVecs(15, 4)
     val df = pts.toDF("id", "vec")
     val kernel = Kernel.Rbf(0.3)
-    val h = Icf.factorize(df, "id", "vec", kernel, rank = 15, checkpointEvery = 4)
+    val h = Icf.factorize(df, "id", "vec", kernel, rank = 15, checkpointEvery = 4).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     var maxErr = 0.0
     for (i <- pts.indices; j <- pts.indices) {
@@ -63,7 +63,7 @@ class MlSpec extends SparkSpec {
     }
     val df = pts.toDF("id", "vec")
     val kernel = Kernel.Rbf(0.3)
-    val h = Icf.factorize(df, "id", "vec", kernel, rank = 10)
+    val h = Icf.factorize(df, "id", "vec", kernel, rank = 10).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     // diagonal residual k(x,x) - ||h||^2 must be small and non-negative
     val resid = pts.map { case (id, x) =>
@@ -81,7 +81,7 @@ class MlSpec extends SparkSpec {
     val pts = (0 until 30).map(i => i.toLong -> bases(i % 3).clone())
     val df = pts.toDF("id", "vec")
     val h = Icf.factorizeAuto(df, "id", "vec", Kernel.Rbf(0.5),
-        rankRatio = 0.5, residualTol = 1e-10)
+        rankRatio = 0.5, residualTol = 1e-10).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     val builtRank = h.values.head.length
     assert(builtRank <= 4, s"rank-3 kernel must early-stop, built $builtRank cols")
@@ -107,7 +107,7 @@ class MlSpec extends SparkSpec {
       .head.getAs[Double]("accuracy")
     assert(acc === 1.0, s"separable blobs must be perfectly classified, got $acc")
 
-    val dir = java.nio.file.Files.createTempDirectory("svm-model").toString
+    val dir = graft.Scratch.dir("svm-model")
     model.save(spark, dir)
     val loaded = KernelSvmModel.load(spark, dir)
     val accL = SvmEvaluator.evaluate(loaded.predict(df, "vec"), "y")
@@ -127,7 +127,7 @@ class MlSpec extends SparkSpec {
     val model = KernelSvmTrainer.fitMulticlassModel(df, "id", "vec", "cls",
       KernelSvmParams(kernel = Kernel.Rbf(0.2), numLandmarks = 30,
         regParam = 1e-3, maxIter = 20, tol = 1e-5), parallelism = 3)
-    val dir = java.nio.file.Files.createTempDirectory("ovr-model").toString
+    val dir = graft.Scratch.dir("ovr-model")
     model.save(spark, dir)
     val loaded = MulticlassKernelSvmModel.load(spark, dir)
     assert(loaded.classes.toSeq == Seq(0.0, 1.0, 2.0))
@@ -144,7 +144,7 @@ class MlSpec extends SparkSpec {
   test("libsvm write/read roundtrip preserves labels and features") {
     val df = Seq((1.0, Array(1.5, 0.0, -2.0)), (-1.0, Array(0.0, 3.25, 0.0)))
       .toDF("y", "vec")
-    val dir = java.nio.file.Files.createTempDirectory("libsvm").toString + "/data"
+    val dir = graft.Scratch.dir("libsvm") + "/data"
     LibSvmIO.write(df, "y", "vec", dir)
     val back = LibSvmIO.read(spark, dir, numFeatures = 3)
       .orderBy(desc("label"))
@@ -159,7 +159,7 @@ class MlSpec extends SparkSpec {
     val df = pts.map { case (id, x) => (id, x, if (id % 2 == 0) 1.0 else -1.0) }
       .toDF("id", "vec", "y")
     val params = KernelSvmParams(Kernel.Rbf(0.3), numLandmarks = 6, maxIter = 5)
-    val dir = java.nio.file.Files.createTempDirectory("nystrom_eq").toString
+    val dir = graft.Scratch.dir("nystrom_eq")
     try {
       KernelSvmTrainer.fit(df, "id", "vec", "y", params).save(spark, dir)
       val a = KernelSvmModel.load(spark, dir).featureMap
@@ -174,12 +174,12 @@ class MlSpec extends SparkSpec {
       assert(NystromFeatures(vec, two) != NystromFeatures(vec, one))
       val plan = Nystrom.transform(df, "vec", a, "phi").queryExecution.toString
       assert(plan.contains("nystrom_features") && !plan.contains("[D@"), plan)
-    } finally graft.operators.ScaleOps.deleteRecursively(dir)
+    } finally graft.Scratch.delete(dir)
 
     val sp = Seq((0L, Seq(0, 3), Seq(1.0, 2.0), 1.0), (1L, Seq(1), Seq(4.0), -1.0),
         (2L, Seq(2, 3), Seq(1.0, 1.0), 1.0), (3L, Seq(0), Seq(3.0), -1.0))
       .toDF("id", "indices", "values", "y")
-    val sdir = java.nio.file.Files.createTempDirectory("sparse_nystrom_eq").toString
+    val sdir = graft.Scratch.dir("sparse_nystrom_eq")
     try {
       SparseKernelSvmTrainer.fit(sp, "id", "indices", "values", "y",
         params.copy(numLandmarks = 3)).save(spark, sdir)
@@ -193,6 +193,6 @@ class MlSpec extends SparkSpec {
       val plan = SparseNystrom.transform(sp, "indices", "values", a, "phi").queryExecution.toString
       assert(plan.contains("sparse_nystrom_features") &&
         !plan.contains("[D@") && !plan.contains("[I@"), plan)
-    } finally graft.operators.ScaleOps.deleteRecursively(sdir)
+    } finally graft.Scratch.delete(sdir)
   }
 }

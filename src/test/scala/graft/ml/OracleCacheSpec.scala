@@ -10,7 +10,7 @@ class OracleCacheSpec extends SparkSpec {
   /** A dataset dir holding the two tables the builders read: 60
     * 8-dim float embeddings and 30 short documents. */
   private def fixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("oracle_cache").toString
+    val dir = graft.Scratch.dir("oracle_cache")
     val rng = new scala.util.Random(5)
     (0 until 60).map(i => (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat), i % 2))
       .toDF("vec_id", "embedding", "label")
@@ -49,8 +49,8 @@ class OracleCacheSpec extends SparkSpec {
       }
       assert(leaks.isEmpty, leaks.mkString("; "))
     } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ModelOracles.modelRoot(dir)))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      graft.Scratch.delete(ModelOracles.modelRoot(dir))
+      graft.Scratch.delete(dir)
     }
   }
 }

@@ -80,9 +80,9 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
       val off = ref.count { case (id, v) => bits(got(id)) != bits(v) }
       assert(off === 0, s"$form factor differs from the reference on $off of $n rows")
     }
-    check(Icf.factorize(df, "id", "vec", kernel, rank, residualTol = residualTol), "dense")
+    check(Icf.factorize(df, "id", "vec", kernel, rank, residualTol = residualTol).rows, "dense")
     check(Icf.factorizeSparse(df, "id", "indices", "values", kernel, rank,
-      residualTol = residualTol), "sparse")
+      residualTol = residualTol).rows, "sparse")
   }
 
   /** Two Gaussian classes, the mean shifted by ±0.6 on the first dims. */
@@ -131,15 +131,17 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     md.digest().map(b => f"$b%02x").mkString
   }
 
+  private def solved(d: Ipm.Dual) = (d.alphas, d.iterations, d.gap)
+
   test("one-block IPM alphas equal the golden bits, and a 3-block solve to 1e-9") {
-    val (a1, it1, gap1) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9)
-    val (aConv, itConv, gapConv) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0,
-      maxIter = 40, tol = 1e-3)
+    val (a1, it1, gap1) = solved(Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9))
+    val (aConv, itConv, gapConv) = solved(Ipm.solve(dualFrame(1), "id", "y", "h", 1.0,
+      maxIter = 40, tol = 1e-3))
     val got = (alphaBits(a1), it1, java.lang.Double.doubleToRawLongBits(gap1),
       alphaBits(aConv), itConv, java.lang.Double.doubleToRawLongBits(gapConv))
     info(s"golden: $got")
     assert(got === GoldenIpm)
-    val (a3, it3, _) = Ipm.solve(dualFrame(3), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9)
+    val (a3, it3, _) = solved(Ipm.solve(dualFrame(3), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9))
     val one = a1.collect().toMap
     val maxDiff = a3.collect().map { case (id, a) => math.abs(a - one(id)) }.max
     info(f"max |alpha_1block - alpha_3blocks| = $maxDiff%.2e")
@@ -154,10 +156,10 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
      "5f1f3eb96176930000b19aef7c1264a2755303f7ac53b6eaf48995e777be75d8", 16, 4556157894485111425L)
 
   test("checkpointDir as a file: URI: segmented one-block loops keep their bits and resume") {
-    val icfDir = "file:" + java.nio.file.Files.createTempDirectory("icf_uri")
+    val icfDir = "file:" + graft.Scratch.dir("icf_uri")
     val df = points(60, 4, 60, seed = 31).map(t => (t._1, t._2)).toDF("id", "vec")
     def icf(dir: Option[String]) = Icf.factorize(df.coalesce(1), "id", "vec", Kernel.Rbf(0.3),
-      rank = 8, checkpointEvery = 4, checkpointDir = dir).as[(Long, Seq[Double])].collect().toMap
+      rank = 8, checkpointEvery = 4, checkpointDir = dir).rows.as[(Long, Seq[Double])].collect().toMap
     val plain = icf(None)
     val full = icf(Some(icfDir))
     assert(ResumeMarker.read(spark, icfDir) === Some("4"), "ICF marker written at column 4")
@@ -165,14 +167,14 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     assert(full.map { case (id, v) => id -> bits(v) } === plain.map { case (id, v) => id -> bits(v) })
     assert(resumed.map { case (id, v) => id -> bits(v) } === plain.map { case (id, v) => id -> bits(v) })
 
-    val ipmDir = "file:" + java.nio.file.Files.createTempDirectory("ipm_uri")
-    val (aPlain, itPlain, _) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9)
-    val (aSeg, itSeg, _) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9,
-      checkpointDir = Some(ipmDir), checkpointEvery = 4)
+    val ipmDir = "file:" + graft.Scratch.dir("ipm_uri")
+    val (aPlain, itPlain, _) = solved(Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9))
+    val (aSeg, itSeg, _) = solved(Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9,
+      checkpointDir = Some(ipmDir), checkpointEvery = 4))
     assert(alphaBits(aSeg) === alphaBits(aPlain) && itSeg === itPlain)
     assert(ResumeMarker.read(spark, ipmDir).map(_.split(' ').head) === Some("12"))
-    val (aRes, itRes, _) = Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9,
-      checkpointDir = Some(ipmDir), checkpointEvery = 4)
+    val (aRes, itRes, _) = solved(Ipm.solve(dualFrame(1), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9,
+      checkpointDir = Some(ipmDir), checkpointEvery = 4))
     val plain15 = aPlain.collect().toMap
     val maxDiff = aRes.collect().map { case (id, a) => math.abs(a - plain15(id)) }.max
     assert(itRes === 15 && maxDiff < 1e-6, s"resumed solve off by $maxDiff")
@@ -192,7 +194,7 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
       Kernel.Rbf(1.0 / 16), rank = 16, maxIter = 8, tol = 1e-3))
     info(s"IcfSvmTrainer.fit: $jobs jobs")
     val (_, saveJobs) = jobsDuring(model.saveText(spark,
-      java.nio.file.Files.createTempDirectory("fit_save").toString))
+      graft.Scratch.dir("fit_save")))
     model.unpersist()
     train.unpersist()
     // the row count, the ICF loop, the IPM loop and the SV pass; the
@@ -238,17 +240,17 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     val ys = pts.map(t => t._1 -> (if (t._2(0) + 0.3 * t._2(1) > 0) 1.0 else -1.0)).toMap
     val df = spark.createDataFrame(sc.parallelize(pts.map(t => (t._1, t._2, ys(t._1))), 3))
       .toDF("id", "vec", "y")
-    val factor = Icf.factor(df, "id", "vec", Kernel.Rbf(0.4), rank = 10)
+    val factor = Icf.factorize(df, "id", "vec", Kernel.Rbf(0.4), rank = 10)
     val rows = factor.rows.as[(Long, Seq[Double])].collect()
       .map { case (id, h) => (id, ys(id), h.toArray) }.toSeq
     factor.release()
     val free = (a: Double, y: Double) => a > 1e-4 && a < 1.0 * (1 - 1e-3)
     for (parts <- Seq(1, 3)) {
       val frame = spark.createDataFrame(sc.parallelize(rows, parts)).toDF("id", "y", "h")
-      val dual = Ipm.dual(frame, "id", "y", "h", 1.0, maxIter = 12, tol = 1e-9)
+      val dual = Ipm.solve(frame, "id", "y", "h", 1.0, maxIter = 12, tol = 1e-9)
       val (kkt, jobsSeen) = jobsDuring(IcfSvmTrainer.primal(dual.blocks, 10)(_._2, free)(
         _ => Array.empty[Unit]))
-      val alphas = dual.blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }.collect().toMap
+      val alphas = dual.alphas.collect().toMap
       val (w, b) = referencePrimal(alphas, rows, free)
       kkt.cached.unpersist(false)
       dual.release()
@@ -266,7 +268,7 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
 
   test("multi-block Gᵀα and w are the per-partition partials added in partition order, bit for bit") {
     val p = dualRows.head._3.length
-    val dual = Ipm.dual(dualFrame(3), "id", "y", "h", 1.0, maxIter = 4, tol = 1e-9)
+    val dual = Ipm.solve(dualFrame(3), "id", "y", "h", 1.0, maxIter = 4, tol = 1e-9)
     // per partition: Σ hᵢ·αᵢ over its rows in order, from 0.0
     val partials = dual.blocks.glom().collect().map { part =>
       val acc = new Array[Double](p)

@@ -87,7 +87,7 @@ class SparseMlSpec extends SparkSpec {
       .filter($"v2" =!= $"vec")
     assert(back.count() == 0)
     // libsvm text round-trip preserves (indices, values) exactly
-    val tmp = java.nio.file.Files.createTempDirectory("sparse_libsvm").toString
+    val tmp = graft.Scratch.dir("sparse_libsvm")
     try {
       LibSvmIO.writeSparse(sp.withColumn("label", ($"id" % 2).cast("double")),
         "label", "indices", "values", tmp)
@@ -102,7 +102,7 @@ class SparseMlSpec extends SparkSpec {
          size(array_distinct($"indices")) === size($"indices")).as("asc"))
         .agg(min($"asc")).head().getBoolean(0)
       assert(allAsc)
-    } finally graft.operators.ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 
   test("sparse Nystrom + sparse SVM reproduce the dense pipeline bit-for-bit on the same data") {
@@ -146,14 +146,14 @@ class SparseMlSpec extends SparkSpec {
       .head().getAs[Double]("accuracy")
     assert(acc >= 0.9, s"planted-structure accuracy $acc")
     // save → load round-trips the sparse landmarks exactly
-    val tmp = java.nio.file.Files.createTempDirectory("sparse_svm").toString
+    val tmp = graft.Scratch.dir("sparse_svm")
     try {
       sparseM.save(spark, tmp)
       val loaded = SparseKernelSvmModel.load(spark, tmp)
       val ld = loaded.predict(df, "indices", "values")
         .select($"id", $"decision").as[(Long, Double)].collect().toMap
       rows.foreach(r => assert(ld(r._1) == sd(r._1), s"reloaded decision ${r._1}"))
-    } finally graft.operators.ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 
   test("m14 fixture: counts are integer-valued, indices ascending, high-dim sparse") {
@@ -179,9 +179,9 @@ class SparseMlSpec extends SparkSpec {
     }
     val df = rows.toDF("id", "indices", "values", "vec")
     val k = Kernel.Rbf(0.05)
-    val hs = Icf.factorizeSparse(df, "id", "indices", "values", k, rank = 12)
+    val hs = Icf.factorizeSparse(df, "id", "indices", "values", k, rank = 12).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val hd = Icf.factorize(df, "id", "vec", k, rank = 12)
+    val hd = Icf.factorize(df, "id", "vec", k, rank = 12).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     assert(hs.keySet == hd.keySet)
     hs.foreach { case (id, h) =>
@@ -196,9 +196,9 @@ class SparseMlSpec extends SparkSpec {
       val r = rows(i % 3); (i.toLong, r._2, r._3, r._4)
     }.toDF("id", "indices", "values", "vec")
     val es = Icf.factorizeSparse(dups, "id", "indices", "values", k, rank = 8,
-        residualTol = 1e-8)
+        residualTol = 1e-8).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val ed = Icf.factorize(dups, "id", "vec", k, rank = 8, residualTol = 1e-8)
+    val ed = Icf.factorize(dups, "id", "vec", k, rank = 8, residualTol = 1e-8).rows
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     assert(es.keySet == ed.keySet && es.size == 30)
     assert(es.values.forall(_.length == 3) && ed.values.forall(_.length == 3),

@@ -38,8 +38,8 @@ class AnnUpsertSpec extends SparkSpec {
     val base = all.filter($"vec_id" % 10 =!= 3).withColumn("src", lit("base"))
     val arrivals = all.filter($"vec_id" % 10 === 3).withColumn("src", lit("upsert"))
     val centroids = IvfAnn.fitCentroids(base, "v", nlist = 4, seed = 7L)
-    val pathA = java.nio.file.Files.createTempDirectory("graft_u18_upsert").toString
-    val pathB = java.nio.file.Files.createTempDirectory("graft_u18_rebuild").toString
+    val pathA = graft.Scratch.dir("u18_upsert")
+    val pathB = graft.Scratch.dir("u18_rebuild")
     try {
       def routed(df: org.apache.spark.sql.DataFrame) =
         df.withColumn("cell", IvfAnn.cellOf($"v", centroids))
@@ -62,7 +62,7 @@ class AnnUpsertSpec extends SparkSpec {
         .select($"vec_id").as[Long].collect().toSeq
       assert(topk(pathA) == topk(pathB), "top-k must match the rebuild")
     } finally {
-      ScaleOps.deleteRecursively(pathA); ScaleOps.deleteRecursively(pathB)
+      graft.Scratch.delete(pathA); graft.Scratch.delete(pathB)
       all.unpersist(false)
     }
   }
@@ -76,7 +76,7 @@ class AnnUpsertSpec extends SparkSpec {
       .withColumn("src", lit("upsert"))
     assert(arrivals.count() > 0)
     val centroids = IvfAnn.fitCentroids(base, "v", nlist = 4, seed = 7L)
-    val path = java.nio.file.Files.createTempDirectory("graft_u18_bytes").toString
+    val path = graft.Scratch.dir("u18_bytes")
     try {
       AnnUpsert.writePostings(
         base.withColumn("cell", IvfAnn.cellOf($"v", centroids))
@@ -111,6 +111,6 @@ class AnnUpsertSpec extends SparkSpec {
         assert(after(s"cell=$c").size == 1,
           s"touched cell $c must compact to ONE file, got ${after(s"cell=$c")}")
       }
-    } finally { ScaleOps.deleteRecursively(path); all.unpersist(false) }
+    } finally { graft.Scratch.delete(path); all.unpersist(false) }
   }
 }

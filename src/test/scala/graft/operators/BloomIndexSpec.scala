@@ -9,7 +9,7 @@ class BloomIndexSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val (layout, manifest) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bloom_spec").toString
+    val tmp = graft.Scratch.dir("bloom_spec")
     BloomIndex.writeClustered(graft.Tables.orders(spark, sf), "o_orderdate", 8, tmp)
     (tmp, BloomIndex.buildManifest(spark, tmp, "o_custkey").localCheckpoint(true))
   }

@@ -14,7 +14,7 @@ class ChangeFeedSpec extends SparkSpec {
     }
 
   test("u20: insert/update/delete classify against the previous live image") {
-    val root = java.nio.file.Files.createTempDirectory("cdf_spec").toString
+    val root = graft.Scratch.dir("cdf_spec")
     try {
       writeHist(Seq(
         (1L, 10.0, "A", false, 1),  // insert at v1
@@ -34,11 +34,11 @@ class ChangeFeedSpec extends SparkSpec {
         (2L, 22.0, "B2", "update_postimage", 2),
         (3L, 30.0, "C", "insert", 1),
         (3L, 30.0, "C", "delete", 2)), s"got $got")
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u20: delete-then-reinsert emits insert (not an update pair), range lo filters versions") {
-    val root = java.nio.file.Files.createTempDirectory("cdf_spec2").toString
+    val root = graft.Scratch.dir("cdf_spec2")
     try {
       writeHist(Seq(
         (7L, 70.0, "X", false, 1),
@@ -53,7 +53,7 @@ class ChangeFeedSpec extends SparkSpec {
       val tail = ChangeFeed.changesBetween(spark, root, 2, 3)
         .select($"_change_type", $"_commit_version").as[(String, Int)].collect().toSeq
       assert(tail == Seq(("insert", 3)), s"got $tail")
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u20 query: commit versions carry the expected change mix on sf0.001") {

@@ -25,7 +25,7 @@ class DynamicPartitionOverwriteSpec extends SparkSpec {
 
   test("dynamic overwrite replaces only the patch partition; others stay byte-identical") {
     val ev = mkEvents
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dyn_spec").toString
+    val tmp = graft.Scratch.dir("dyn_spec")
     try {
       ev.withColumn("event_date", to_date($"ts"))
         .write.partitionBy("event_date").mode("overwrite").parquet(tmp)
@@ -51,12 +51,12 @@ class DynamicPartitionOverwriteSpec extends SparkSpec {
       assert(day.filter($"event_type" === "view").count() == 0)
       val vals = day.select($"value").as[Double].collect().sorted.toSeq
       assert(vals == Seq(13.0, 15.0))
-    } finally ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 
   test("static overwrite would have destroyed the other partitions (the failure u17 exists to avoid)") {
     val ev = mkEvents
-    val tmp = java.nio.file.Files.createTempDirectory("graft_static_spec").toString
+    val tmp = graft.Scratch.dir("static_spec")
     try {
       ev.withColumn("event_date", to_date($"ts"))
         .write.partitionBy("event_date").mode("overwrite").parquet(tmp)
@@ -67,6 +67,6 @@ class DynamicPartitionOverwriteSpec extends SparkSpec {
       assert(partFiles(tmp, "2024-01-10").isEmpty)
       assert(partFiles(tmp, "2024-01-12").isEmpty)
       assert(spark.read.parquet(tmp).count() == 2) // only the patch survived
-    } finally ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 }

@@ -10,7 +10,7 @@ class OptimisticCommitSpec extends SparkSpec {
     rows.toDF("k", "price", "bkt")
 
   test("u21: lost CAS with disjoint partitions rebases; overlap aborts loudly without burning a version") {
-    val root = java.nio.file.Files.createTempDirectory("occ_spec").toString
+    val root = graft.Scratch.dir("occ_spec")
     try {
       // base at v1 across two partitions
       val v1 = OptimisticCommit.commit(
@@ -37,11 +37,11 @@ class OptimisticCommitSpec extends SparkSpec {
       // commits v4 cleanly — the conflict left no debris
       val vd = OptimisticCommit.commit(df((1L, 11.0, "p0")), root, "bkt", 3)
       assert(vd == 4)
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u21: a writer that crashes before its claim is invisible and burns nothing") {
-    val root = java.nio.file.Files.createTempDirectory("occ_spec3").toString
+    val root = graft.Scratch.dir("occ_spec3")
     try {
       OptimisticCommit.commit(df((1L, 1.0, "p0")), root, "bkt", 0)
       // simulate a crash mid-commit: data staged, claim never created
@@ -54,11 +54,11 @@ class OptimisticCommitSpec extends SparkSpec {
       // the next writer takes v2 — the crashed writer consumed nothing
       val v = OptimisticCommit.commit(df((1L, 5.0, "p0")), root, "bkt", 1)
       assert(v == 2, s"crashed writer must not consume a version, got v$v")
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u21: vacuum sweeps crashed writers' staged dirs and claim temp files, spares live state and in-grace writers") {
-    val root = java.nio.file.Files.createTempDirectory("occ_vac").toString
+    val root = graft.Scratch.dir("occ_vac")
     try {
       OptimisticCommit.commit(df((1L, 1.0, "p0")), root, "bkt", 0)
       OptimisticCommit.commit(df((2L, 2.0, "p1")), root, "bkt", 1)
@@ -81,11 +81,11 @@ class OptimisticCommitSpec extends SparkSpec {
       // idempotent: nothing left to sweep, committed data dirs survive
       assert(OptimisticCommit.vacuum(root) == ((0, 0)))
       assert(OptimisticCommit.currentVersion(root) == 2)
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u21: the claim manifest is atomic with the claim — touched partitions are visible the instant the version exists") {
-    val root = java.nio.file.Files.createTempDirectory("occ_spec4").toString
+    val root = graft.Scratch.dir("occ_spec4")
     try {
       OptimisticCommit.commit(df((1L, 1.0, "p0"), (2L, 2.0, "p1")), root, "bkt", 0)
       OptimisticCommit.commit(df((1L, 10.0, "p0")), root, "bkt", 1)
@@ -94,11 +94,11 @@ class OptimisticCommitSpec extends SparkSpec {
       // touched-set (meta landing after the claim)
       assert(OptimisticCommit.currentVersion(root) == 2)
       assert(OptimisticCommit.touchedOf(root, 2) == Set("p0"))
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u21: an unreadable claim manifest is a conflict for writers and a loud failure for readers, never an empty touched-set") {
-    val root = java.nio.file.Files.createTempDirectory("occ_spec5").toString
+    val root = graft.Scratch.dir("occ_spec5")
     try {
       OptimisticCommit.commit(df((1L, 1.0, "p0")), root, "bkt", 0)
       // a legacy/corrupt claim at v2: exists, but no manifest header
@@ -114,11 +114,11 @@ class OptimisticCommitSpec extends SparkSpec {
       val r = intercept[IllegalStateException](
         OptimisticCommit.read(spark, root, "bkt").collect())
       assert(r.getMessage.contains("unreadable"), r.getMessage)
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u21: concurrent racing writers on disjoint partitions all commit, distinct versions, no lost update") {
-    val root = java.nio.file.Files.createTempDirectory("occ_spec6").toString
+    val root = graft.Scratch.dir("occ_spec6")
     try {
       val parts = (0 until 6).map(i => s"p$i")
       OptimisticCommit.commit(
@@ -146,7 +146,7 @@ class OptimisticCommitSpec extends SparkSpec {
         .select($"bkt", $"price").as[(String, Double)].collect().toMap
       val want = parts.zipWithIndex.map { case (p, i) => p -> (100.0 + i) }.toMap
       assert(got == want, s"lost update: $got vs $want")
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u21 query: the deterministic two-writer interleaving resolves buckets to their owners") {

@@ -64,7 +64,7 @@ class PlanShapeSpec extends SparkSpec {
       (3L, 3L, "buy", "2024-01-13 01:00:00", 3.0)
     ).toDF("event_id", "user_id", "event_type", "ts_s", "value")
       .withColumn("ts", $"ts_s".cast("timestamp")).drop("ts_s")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_planshape").toString
+    val tmp = graft.Scratch.dir("planshape")
     try {
       ev.withColumn("event_date", to_date($"ts"))
         .write.partitionBy("event_date").mode("overwrite").parquet(tmp)
@@ -75,7 +75,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(scan.contains("PartitionFilters") && scan.contains("2024-01-11"),
         s"date filter must reach the partition listing:\n$scan")
       assert(pruned.count() == 1)
-    } finally ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 
   test("p62 fim: the transform is one narrow pass — the only exchange is the output sort") {
@@ -95,7 +95,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("u20 change feed: classification is ONE keyed window — no second shuffle for the images") {
-    val root = java.nio.file.Files.createTempDirectory("u20_planshape").toString
+    val root = graft.Scratch.dir("u20_planshape")
     try {
       VersionedTable.commit(
         Seq((1L, 1.0, "A", false)).toDF("k", "price", "status", "deleted"), root, 1)
@@ -108,7 +108,7 @@ class PlanShapeSpec extends SparkSpec {
       assert(phys.contains("hashpartitioning(k"),
         s"the one exchange must key on k:\n$phys")
       assert(phys.contains("Generate"), s"images must explode row-locally:\n$phys")
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("p39d byte bpe: pretokenization is one narrow codegen pass (no exchange)") {

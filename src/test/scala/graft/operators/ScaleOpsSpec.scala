@@ -7,7 +7,7 @@ class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed tables join without an exchange on either side") {
-    val dir = java.nio.file.Files.createTempDirectory("buckets").toString
+    val dir = graft.Scratch.dir("buckets")
     spark.sql("DROP TABLE IF EXISTS bt_orders")
     spark.sql("DROP TABLE IF EXISTS bt_lines")
     val orders = (1L to 1000L).map(i => (i, i % 7)).toDF("okey", "status")
@@ -55,7 +55,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("range layout prunes files for range predicates") {
-    val dir = java.nio.file.Files.createTempDirectory("range").toString + "/data"
+    val dir = graft.Scratch.dir("range") + "/data"
     val df = (1L to 10000L).map(i => (i, i % 97)).toDF("ts_key", "v")
     ScaleOps.writeRangeLayout(df, "ts_key", 10, dir)
     val back = spark.read.parquet(dir).filter($"ts_key".between(100, 200))
@@ -81,7 +81,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("date-partitioned layout prunes directories at planning time") {
-    val dir = java.nio.file.Files.createTempDirectory("datepart").toString
+    val dir = graft.Scratch.dir("datepart")
     ScaleOps.writeDatePartitioned(
       graft.Tables.events(spark, "/root/testdata/sf0.001"), "ts", dir)
     val dayDirs = new java.io.File(dir).listFiles()
@@ -99,7 +99,7 @@ class ScaleOpsSpec extends SparkSpec {
     val all = spark.read.parquet(dir).inputFiles.length
     assert(scanned < all,
       s"pruned scan must read a strict subset of files ($scanned vs $all)")
-    ScaleOps.deleteRecursively(dir)
+    graft.Scratch.delete(dir)
   }
 
   test("ivf postings layout serves probes through a partition-pruned scan") {

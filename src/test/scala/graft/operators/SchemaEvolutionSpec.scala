@@ -7,7 +7,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
   test("evolved read reconciles vintages: old files surface NULL, new carry data") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evolve_spec").toString
+    val tmp = graft.Scratch.dir("evolve_spec")
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
       .write.parquet(s"$tmp/vintage=1")
     Seq((3L, 30.0, "a"), (4L, 40.0, "b")).toDF("k", "v", "tag")
@@ -21,6 +21,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(rows(3L).contains("a") && rows(4L).contains("b"))
     // pushdown on the ORIGINAL columns still works across vintages
     assert(evolved.filter($"v" > 25.0).count() === 2L)
-    ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
   }
 }

@@ -14,7 +14,7 @@ class SnapshotExpirySpec extends SparkSpec {
       .select($"k", $"price").as[(Long, Double)].collect().toSet
 
   test("u22: expiry preserves every retained snapshot, incl. tombstoned keys (no resurrection)") {
-    val root = java.nio.file.Files.createTempDirectory("u22_spec").toString
+    val root = graft.Scratch.dir("u22_spec")
     try {
       commitRows(root, 1, (1L, 1.0, "A", false), (2L, 2.0, "A", false), (3L, 3.0, "A", false))
       commitRows(root, 2, (2L, 0.0, null, true),  // key 2 dies at v2
@@ -33,11 +33,11 @@ class SnapshotExpirySpec extends SparkSpec {
       // re-running the expiry is idempotent
       SnapshotExpiry.expire(spark, root, keep = 2)
       assert(state(root, 2) == want2 && state(root, 3) == want3)
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u22: expiry after further commits — floor rises, later deltas untouched") {
-    val root = java.nio.file.Files.createTempDirectory("u22_spec2").toString
+    val root = graft.Scratch.dir("u22_spec2")
     try {
       commitRows(root, 1, (1L, 1.0, "A", false))
       commitRows(root, 2, (1L, 2.0, "A", false))
@@ -47,7 +47,7 @@ class SnapshotExpirySpec extends SparkSpec {
       SnapshotExpiry.expire(spark, root, 3)
       assert(VersionedTable.expiryFloor(root) == 3)
       assert(state(root, 3) == Set((1L, 2.0), (2L, 9.0)))
-    } finally ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("u22 query: gates pass and the v2/v3 aggregates survive expiry on sf0.001") {

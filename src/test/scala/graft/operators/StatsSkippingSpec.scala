@@ -7,7 +7,7 @@ class StatsSkippingSpec extends SparkSpec {
 
   test("manifest pruning: drops files outside the range, keeps boundary files, result ≡ full scan") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_skipspec").toString
+    val tmp = graft.Scratch.dir("skipspec")
     try {
       // keys 0..799 range-clustered into 8 files → each file ~a 100-key band
       (0 until 800).map(i => (i.toLong, s"v$i")).toDF("k", "v")
@@ -31,12 +31,12 @@ class StatsSkippingSpec extends SparkSpec {
       val none = StatsSkipping
         .skippingScan(spark, tmp, manifest, "k", lit(-100L), lit(0L))
       assert(none.count() == 0L)
-    } finally ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 
   test("skippingScan ≡ raw filter on the orders layout (u12 shape)") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_skipspec2").toString
+    val tmp = graft.Scratch.dir("skipspec2")
     try {
       ScaleOps.writeRangeLayout(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
       val manifest = StatsSkipping.buildManifest(spark, tmp, "o_orderdate")
@@ -47,6 +47,6 @@ class StatsSkippingSpec extends SparkSpec {
       val raw = graft.Tables.orders(spark, dir)
         .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi).count()
       assert(viaManifest == raw && raw > 0)
-    } finally ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 }

@@ -51,7 +51,7 @@ class VersionedLifecycleFuzzSpec extends SparkSpec {
           else { hist += ((k, rnd.nextInt(1000).toDouble, false, v)); alive += k }
         }
       }
-      val root = java.nio.file.Files.createTempDirectory(s"vlf_$seed").toString
+      val root = graft.Scratch.dir(s"vlf_$seed")
       try {
         hist.groupBy(_._4).toSeq.sortBy(_._1).foreach { case (v, rows) =>
           VersionedTable.commit(
@@ -105,7 +105,7 @@ class VersionedLifecycleFuzzSpec extends SparkSpec {
         if (keep > 1)
           intercept[IllegalArgumentException](
             SnapshotExpiry.expire(spark, root, keep - 1))
-      } finally ScaleOps.deleteRecursively(root)
+      } finally graft.Scratch.delete(root)
     }
   }
 }

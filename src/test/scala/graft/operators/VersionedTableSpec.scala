@@ -7,7 +7,7 @@ class VersionedTableSpec extends SparkSpec {
 
   test("time travel: insert / update / delete / re-insert resolve per as-of version") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_spec").toString
+    val root = graft.Scratch.dir("vt_spec")
     def rows(t: (Long, Double, String, Boolean)*) =
       t.toDF("k", "price", "status", "deleted")
     VersionedTable.commit(rows((1L, 10.0, "BASE", false), (2L, 20.0, "BASE", false)), root, 1)
@@ -22,12 +22,12 @@ class VersionedTableSpec extends SparkSpec {
     assert(asOf(2) == Set((2L, 25.0, "U2"), (3L, 30.0, "U2")))
     // v3: key 1 re-inserted after its tombstone
     assert(asOf(3) == Set((1L, 11.0, "U3"), (2L, 25.0, "U2"), (3L, 30.0, "U2")))
-    ScaleOps.deleteRecursively(root)
+    graft.Scratch.delete(root)
   }
 
   test("read-as-of prunes history partitions at file-listing time") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_vt_prune").toString
+    val root = graft.Scratch.dir("vt_prune")
     (1 to 3).foreach { v =>
       VersionedTable.commit(
         Seq((v.toLong, v * 1.0, s"V$v", false)).toDF("k", "price", "status", "deleted"),
@@ -44,6 +44,6 @@ class VersionedTableSpec extends SparkSpec {
     val all = spark.read.parquet(root).inputFiles.length
     assert(scanned < all,
       s"as-of read must skip newer commit files ($scanned vs $all)")
-    ScaleOps.deleteRecursively(root)
+    graft.Scratch.delete(root)
   }
 }

@@ -7,7 +7,7 @@ class WriteAuditPublishSpec extends SparkSpec {
   import spark.implicits._
 
   test("a passing audit publishes atomically; the serving dir holds the data") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wap_spec").toString
+    val root = graft.Scratch.dir("wap_spec")
     val src = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0))
       .toDF("o_orderkey", "o_totalprice")
     val path = WriteAuditPublish.publish(spark, src, root, 1)
@@ -15,11 +15,11 @@ class WriteAuditPublishSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/_staging_v1").exists(),
       "staging must be gone after publish (renamed, not copied)")
     assert(spark.read.parquet(path).count() === 3L)
-    ScaleOps.deleteRecursively(root)
+    graft.Scratch.delete(root)
   }
 
   test("a failing audit leaves serving untouched and staging behind") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wap_spec2").toString
+    val root = graft.Scratch.dir("wap_spec2")
     val dup = Seq((1L, 10.0), (1L, 11.0)).toDF("o_orderkey", "o_totalprice")
     val e = intercept[IllegalArgumentException] {
       WriteAuditPublish.publish(spark, dup, root, 2)
@@ -29,17 +29,17 @@ class WriteAuditPublishSpec extends SparkSpec {
       "serving must not exist after a failed audit")
     assert(new java.io.File(s"$root/_staging_v2").exists(),
       "staging must be left behind for debugging")
-    ScaleOps.deleteRecursively(root)
+    graft.Scratch.delete(root)
   }
 
   test("null keys fail the audit") {
-    val root = java.nio.file.Files.createTempDirectory("graft_wap_spec3").toString
+    val root = graft.Scratch.dir("wap_spec3")
     val bad = Seq((Some(1L), 10.0), (None, 11.0))
       .toDF("o_orderkey", "o_totalprice")
     val e = intercept[IllegalArgumentException] {
       WriteAuditPublish.publish(spark, bad, root, 3)
     }
     assert(e.getMessage.contains("null keys"))
-    ScaleOps.deleteRecursively(root)
+    graft.Scratch.delete(root)
   }
 }

@@ -37,14 +37,14 @@ class CleaningOpsSpec extends SparkSpec {
       (2L, "u v w x y z", "en", "s", 11L),          // all distinct
       (3L, "t t t t", "en", "s", 7L)                // one word repeated
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rep").toString
+    val tmp = graft.Scratch.dir("rep")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val m = CleaningOps.repetitionQuery(spark, tmp).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getBoolean(4))).toMap
     assert(m(1L)._1 == 6L && math.abs(m(1L)._3 - 0.6) < 1e-9 && !m(1L)._4) // 3/5 "a b"
     assert(m(2L)._2 == 0.0 && math.abs(m(2L)._3 - 0.2) < 1e-9)             // all bigrams unique: 1/5
     assert(math.abs(m(3L)._2 - 0.75) < 1e-9 && m(3L)._3 == 1.0 && !m(3L)._4)
-    graft.operators.ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
   }
 
   test("boilerplate grams are per-doc-distinct and counted per source") {
@@ -53,14 +53,14 @@ class CleaningOpsSpec extends SparkSpec {
     val docs = ((0L until 10L).map(i => (i, s"the same intro unique$i words here", "en", "s0", 30L)) :+
       (99L, "the same intro alone", "en", "s1", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_boiler").toString
+    val tmp = graft.Scratch.dir("boiler")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = CleaningOps.boilerplateQuery(spark, tmp, n = 3, minDocs = 8).cache()
     val s0 = out.filter($"source" === "s0")
     assert(s0.filter($"n_boiler" === 0L).count() == 0, "shared intro gram must be boilerplate in s0")
     assert(out.filter($"source" === "s1").head().getLong(3) == 0L, "s1 gram is not boilerplate")
     out.unpersist()
-    graft.operators.ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
   }
 
   test("stratified sample is deterministic and exactly k per group") {

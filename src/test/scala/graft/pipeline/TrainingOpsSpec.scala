@@ -37,12 +37,12 @@ class TrainingOpsSpec extends SparkSpec {
     val docs = (0L until 20L).map { i =>
       (i, ("tok " * 99) + "end", "en", "s" + (i % 2), 400L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pack").toString
+    val tmp = graft.Scratch.dir("pack")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = TrainingOps.packQuery(spark, tmp, seqLen = 250)
       .select($"source", $"seq_idx", $"n_docs", $"n_tokens")
       .as[(String, Long, Long, Long)].collect().sortBy(t => (t._1, t._2))
-    graft.operators.ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
     // per source: 10 docs x 100 tokens, seqLen 250 -> doc starts at
     // cum 0,100,200,...,900 -> seq_idx 0,0,0,1,1,2,2,2,3,3
     val expected = Seq(
@@ -58,12 +58,12 @@ class TrainingOpsSpec extends SparkSpec {
     val docs = Seq(bench, copy, clean).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_contam").toString
+    val tmp = graft.Scratch.dir("contam")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     // doc 0 is the benchmark side (0 % 37 == 0); docs 5/6 are training
     val out = TrainingOps.contaminationQuery(spark, tmp, n = 8, minShared = 3)
       .select($"train_doc", $"bench_doc", $"n_shared").as[(Long, Long, Long)].collect()
-    graft.operators.ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
     assert(out.map(t => (t._1, t._2)).toSet == Set((5L, 0L)), out.mkString(","))
     assert(out.head._3 >= 3)
   }
@@ -73,11 +73,11 @@ class TrainingOpsSpec extends SparkSpec {
     val docs = Seq((1L, text)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chunk").toString
+    val tmp = graft.Scratch.dir("chunk")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = TrainingOps.chunkQuery(spark, tmp)
       .select($"chunk_start", $"chunk_len").as[(Long, Long)].collect().sortBy(_._1)
-    graft.operators.ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
     assert(out.map(_._1).toSeq == Seq(0L, 150L, 300L))
     assert(out.map(_._2).toSeq == Seq(200L, 200L, 100L))   // last chunk truncates
   }

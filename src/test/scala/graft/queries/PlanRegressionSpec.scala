@@ -240,7 +240,7 @@ class PlanRegressionSpec extends SparkSpec {
     // the query itself materializes before its temp layout is deleted,
     // so assert on the lookup scan the bloom probe plans
     import graft.operators.BloomIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_plan_bloom").toString
+    val tmp = graft.Scratch.dir("plan_bloom")
     BloomIndex.writeClustered(graft.Tables.orders(spark, dir), "o_orderdate", 4, tmp)
     val manifest = BloomIndex.buildManifest(spark, tmp, "o_custkey")
       .localCheckpoint(true)
@@ -250,7 +250,7 @@ class PlanRegressionSpec extends SparkSpec {
       "u13: the bloom probe is a metadata step — no join belongs in the scan plan")
     assert(p.contains("o_custkey"), "u13: lookup filter missing from the scan")
     assertPushedFilters("u13", p)
-    graft.operators.ScaleOps.deleteRecursively(tmp)
+    graft.Scratch.delete(tmp)
   }
 
   test("q47/q48: grouping-sets is one Expand pass; range frame is a window, not a join") {

@@ -54,7 +54,7 @@ class GraphSearchSpec extends SparkSpec {
     val b = GraphSearch.query(spark, "/root/testdata/sf0.001").collect()
     assert(a.sameElements(b))
     assert(a.nonEmpty)
-    val gDir = new java.io.File("/tmp/graft_models/sf0.001/p67_graph")
+    val gDir = new java.io.File(s"${graft.ml.ModelOracles.modelRoot("/root/testdata/sf0.001")}/p67_graph")
     assert(gDir.isDirectory && gDir.listFiles().exists(_.getName.endsWith(".parquet")),
       "persisted edge list missing — the oracle cannot replay the walk")
   }

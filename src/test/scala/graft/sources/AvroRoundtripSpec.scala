@@ -13,7 +13,7 @@ class AvroRoundtripSpec extends SparkSpec {
       (3L, 30L, "P", -9.99, "5-LOW"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
       .repartition(2)
-    val tmp = java.nio.file.Files.createTempDirectory("avro_spec").toString
+    val tmp = graft.Scratch.dir("avro_spec")
     try {
       AvroRoundtrip.writeAvro(df, tmp)
       assert(new java.io.File(tmp).listFiles().count(_.getName.endsWith(".avro")) == 2,
@@ -22,7 +22,7 @@ class AvroRoundtripSpec extends SparkSpec {
       val a = df.collect().map(_.toSeq).toSet
       val b = back.collect().map(_.toSeq).toSet
       assert(a == b, s"roundtrip mismatch:\n$a\nvs\n$b")
-    } finally graft.operators.ScaleOps.deleteRecursively(tmp)
+    } finally graft.Scratch.delete(tmp)
   }
 
   test("src6 query: summary over the roundtrip equals the parquet-direct summary") {

@@ -8,7 +8,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkRoot(): String = {
-    val root = java.nio.file.Files.createTempDirectory("s13_spec").toString
+    val root = graft.Scratch.dir("s13_spec")
     val empty = Seq.empty[(Long, Double, String, Boolean, Int)]
       .toDF("k", "price", "status", "deleted", "version")
     empty.write.mode("overwrite").parquet(s"$root/state_0")
@@ -35,7 +35,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
       ChangeFeedStream.applyBatch(spark, root,
         batch((1L, 0.0, null, true, 2), (1L, 30.0, "B", false, 3)))
       assert(agg(root) == Map("B" -> ((1L, 30.0))), s"got ${agg(root)}")
-    } finally graft.operators.ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("s13: the same final view lands under any batching, and replays are no-ops") {
@@ -56,8 +56,8 @@ class ChangeFeedStreamSpec extends SparkSpec {
       ChangeFeedStream.applyBatch(spark, r1, batch(rows: _*))
       assert(agg(r1) == want, s"replay must be a no-op, got ${agg(r1)}")
     } finally {
-      graft.operators.ScaleOps.deleteRecursively(r1)
-      graft.operators.ScaleOps.deleteRecursively(r2)
+      graft.Scratch.delete(r1)
+      graft.Scratch.delete(r2)
     }
   }
 
@@ -74,7 +74,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
       }
       assert(added === Seq(0, 0, 0))
       assert(agg(root) == Map("A" -> ((1L, 20.0)), "B" -> ((1L, 15.0))), s"got ${agg(root)}")
-    } finally graft.operators.ScaleOps.deleteRecursively(root)
+    } finally graft.Scratch.delete(root)
   }
 
   test("s13 query: streaming view equals the oracle-resolved v3 state on sf0.001") {

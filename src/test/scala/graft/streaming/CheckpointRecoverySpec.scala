@@ -30,7 +30,7 @@ class CheckpointRecoverySpec extends SparkSpec {
   private def ts(minutes: Long): Timestamp = new Timestamp(Base + minutes * 60000L)
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft_ckpt_$tag").toString
+    graft.Scratch.dir(s"ckpt_$tag")
 
   /** Write one parquet file of events into `dir` (one file = one
     * micro-batch under maxFilesPerTrigger=1). */

@@ -22,14 +22,14 @@ class TrendingSpec extends SparkSpec {
 
   test("multi-batch streamed view equals the single-shot batch aggregation") {
     val events = mkEvents(600) // ~16 hours of events at 97s spacing
-    val dir = java.nio.file.Files.createTempDirectory("graft_trend_spec").toString
+    val dir = graft.Scratch.dir("trend_spec")
     // three time-ordered arrival files (files arrive in event-time order,
     // the production tail-a-directory shape — no artificial late data)
     events.filter($"event_id" <= 200).coalesce(1).write.parquet(s"$dir/f1")
     events.filter($"event_id" > 200 && $"event_id" <= 400).coalesce(1)
       .write.parquet(s"$dir/f2")
     events.filter($"event_id" > 400).coalesce(1).write.parquet(s"$dir/f3")
-    val staged = java.nio.file.Files.createTempDirectory("graft_trend_in").toString
+    val staged = graft.Scratch.dir("trend_in")
     var i = 0
     for (f <- Seq("f1", "f2", "f3")) {
       val part = new java.io.File(s"$dir/$f").listFiles()
@@ -50,7 +50,7 @@ class TrendingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1).parquet(staged)
     val counts = EventStreams.trendingCounts(stream)
     // drive the maintained-view merge exactly as s11 does
-    val stateRoot = java.nio.file.Files.createTempDirectory("graft_trend_state").toString
+    val stateRoot = graft.Scratch.dir("trend_state")
     // AtomicInteger for the same reason as s11 itself: foreachBatch runs
     // on the stream-execution thread, the final read on this thread
     val ver = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -79,6 +79,6 @@ class TrendingSpec extends SparkSpec {
     assert(view === batchRef,
       "maintained view diverged from the batch aggregation")
     Seq(dir, staged, stateRoot).foreach(
-      graft.operators.ScaleOps.deleteRecursively)
+      graft.Scratch.delete)
   }
 }

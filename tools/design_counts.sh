@@ -12,7 +12,9 @@
 # `treeAggregate` sites of the PSVM solver and trainer (Ipm.scala,
 # IcfSvm.scala), and in LibSvmIO.scala the parsers that take a whole
 # LIBSVM line as a `String` and the `split(` sites (one byte scanner,
-# `LibSvmLine`, reads every line).
+# `LibSvmLine`, reads every line), and the scratch-path cleanups of
+# src/main: `deleteOnExit` calls, JVM shutdown hooks and the ad hoc
+# temp-dir cleanup helpers (`graft.Scratch` owns every scratch path).
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -34,6 +36,9 @@ echo "local_checkpoint_sites[main] $(count 'localCheckpoint' "$main")"
 echo "local_checkpoint_sites[test] $(count 'localCheckpoint' src/test)"
 echo "create_temp_directory_sites[main] $(count 'createTempDirectory' "$main")"
 echo "create_temp_directory_sites[test] $(count 'createTempDirectory' src/test)"
+echo "delete_on_exit_sites $(count 'deleteOnExit' "$main")"
+echo "shutdown_hook_sites $(count 'addShutdownHook' "$main")"
+echo "scratch_cleanup_helpers $(count 'def (materializeThen|deleteRecursively|materializeAndClean)\b' "$main")"
 echo "new_linear_svc_sites $(count 'new LinearSVC\(\)' "$main")"
 echo "icf_svm_scoring_modes $(count '^ *def predict' "$main/graft/ml/IcfSvm.scala")"
 fit_joins=$({ awk '/^object IcfSvmTrainer/,/^}/' "$main/graft/ml/IcfSvm.scala"
