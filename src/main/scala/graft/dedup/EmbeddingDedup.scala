@@ -72,14 +72,23 @@ object EmbeddingDedup {
     * ^15 ≈ 0.2 per table, 12 tables → 0.93+; the self-gate's predicted
     * recall uses the ACTUAL plane count, so the measured-vs-theory
     * check stays honest at every size). */
-  /** `eager = true` materializes the (small) pair output and releases the
-    * internal vector cache before returning (see
+  /** The (small) pair output is materialized and the internal vector
+    * cache released before this returns (see
     * [[SimHashDedup.nearDuplicatePairs]] for the lifecycle rationale). */
   def nearDupPairsLsh(df: DataFrame, idCol: String, vecCol: String,
                       threshold: Double, numTables: Int = 12,
                       planesPerTable: Int = -1, dim: Int = 64,
-                      maxBucketSize: Int = 4096,
-                      eager: Boolean = false): DataFrame = {
+                      maxBucketSize: Int = 4096): DataFrame = {
+    val (v, pairs) = lshPlan(df, idCol, vecCol, threshold, numTables, planesPerTable, dim,
+      maxBucketSize)
+    try pairs.localCheckpoint() finally v.unpersist(false)
+  }
+
+  /** [[nearDupPairsLsh]]'s persisted vector frame and its lazy pair plan
+    * over it. */
+  private[graft] def lshPlan(df: DataFrame, idCol: String, vecCol: String, threshold: Double,
+                             numTables: Int, planesPerTable: Int, dim: Int,
+                             maxBucketSize: Int): (DataFrame, DataFrame) = {
     val v = df.select(col(idCol).as("id"),
                       VectorOps.toDoubleArray(col(vecCol)).as("vec"))
       .withColumn("nrm", VectorOps.norm(col("vec")))
@@ -109,8 +118,7 @@ object EmbeddingDedup {
           (col("nrm_a") * col("nrm_b")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
-    if (eager) { val out = pairs.localCheckpoint(); v.unpersist(false); out }
-    else pairs
+    (v, pairs)
   }
 
   /** p5b: the LSH-blocked production path over embeddings. Rows-only —
@@ -136,8 +144,7 @@ object EmbeddingDedup {
     val n = e.count()
     val planes = planesForSize(n)
     persistPlanes(spark, dir, planes)
-    val lsh = nearDupPairsLsh(e, "vec_id", "embedding", 0.4,
-        planesPerTable = planes, eager = true)
+    val lsh = nearDupPairsLsh(e, "vec_id", "embedding", 0.4, planesPerTable = planes)
     // The MEASURED-recall gate runs against the exact answer on a
     // deterministic ANCHORED SAMPLE PANEL: ~512 hash-picked anchors ×
     // the full corpus is O(panel·n), so the gate itself stays runnable

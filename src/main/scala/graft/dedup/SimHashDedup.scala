@@ -75,15 +75,14 @@ object SimHashDedup {
     * buckets on a 500k-doc corpus where 16-bit bands hit 6k+). Pass a
     * finite `maxBucketSize` only when trading recall for a hard skew
     * bound. */
-  /** `eager = true` materializes the (small) pair output via
-    * localCheckpoint and releases the internal signature cache before
-    * returning — without it, the cached blocks can only be freed by the
-    * session (they back the returned lazy plan), which leaks memory
-    * across many calls in a long-lived session. */
+  /** The (small) pair output is materialized via localCheckpoint and the
+    * internal signature cache released before this returns — cached
+    * blocks backing a returned lazy plan could only be freed by the
+    * session, which leaks memory across many calls in a long-lived
+    * session. */
   def nearDuplicatePairs(df: DataFrame, idCol: String, textCol: String,
                          maxHamming: Int = 3, useMd5: Boolean = true,
-                         maxBucketSize: Int = Int.MaxValue,
-                         eager: Boolean = false): DataFrame = {
+                         maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val sigs = df
       .select(col(idCol).as("id"),
               signature(split(col(textCol), "\\s+"), useMd5).as("sig"))
@@ -99,8 +98,7 @@ object SimHashDedup {
       .withColumn("hamming", hamming(col("sig_a"), col("sig_b")).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-    if (eager) { val out = pairs.localCheckpoint(); sigs.unpersist(false); out }
-    else pairs
+    try pairs.localCheckpoint() finally sigs.unpersist(false)
   }
 
   /** p3: simhash near-dup pairs over documents. Oracle-checked: DuckDB
@@ -109,8 +107,7 @@ object SimHashDedup {
     * at hamming ≤ 3 is 1.0 by construction. */
   def query(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    nearDuplicatePairs(Tables.documents(spark, dir), "doc_id", "text", 3,
-        eager = true)
+    nearDuplicatePairs(Tables.documents(spark, dir), "doc_id", "text", 3)
       .orderBy($"id_a", $"id_b")
   }
 

@@ -6,7 +6,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** §2.1 M6 (fidelity path): greedy-pivot Incomplete Cholesky
   * Factorization of the kernel matrix, K ≈ H·Hᵀ with H of rank p
@@ -20,16 +19,19 @@ import org.apache.spark.storage.StorageLevel
   *   3. appends one H column to every row:
   *        H[i,j] = (k(x_i, x_p) − ⟨h_i, h_p⟩) / √d_p,  d_i −= H[i,j]².
   *
-  * Cost per block count (~50k rows per block, [[Ipm.blockCount]]):
+  * The pivot step is written once ([[pivots]]) against the block
+  * collective ([[Blocks]]). Cost per block count (~50k rows per block):
   *   - one block (the m = 1 case of the paper's cost model, where the
   *     all-reduce is the identity): the whole pivot loop runs inside the
-  *     block's one task — one Spark job, after one that counts the rows;
-  *   - several blocks: each pivot is a reduce (the all-reduce) plus a
-  *     map materialized by a count — two jobs per pivot, the lineage
-  *     truncated every `checkpointEvery` pivots.
-  * Both run the same per-block steps ([[blockPivot]], [[addColumn]]), so
-  * they build the same factor bit for bit. That is the same O(n·p²) work
-  * and O(n·p) state as the reference, with the n-dimension distributed.
+  *     block's one task, on its own copy of the block — one Spark job,
+  *     after one that counts the rows;
+  *   - several blocks: each pivot is one job, the all-reduce that also
+  *     materializes the previous pivot's column map, plus one job that
+  *     materializes the last column; the lineage is truncated every
+  *     `checkpointEvery` pivots.
+  * Both forms give the same factor bit for bit. That is the same O(n·p²)
+  * work and O(n·p) state as the reference, with the n-dimension
+  * distributed.
   * The loop does not depend on how a row is stored: [[factorize]] (dense
   * rows) and [[factorizeSparse]] (sparse rows) only build the rows and
   * pick the [[Kernel]] form that scores them. A block keeps each row's
@@ -40,10 +42,10 @@ import org.apache.spark.storage.StorageLevel
 object Icf {
 
   /** A factor: `rank` H columns built over `nRows` input rows, `rows`
-    * its (id, icf_features) view over the loop's blocks. A one-block
-    * factor is cached by the loop that built it; `release` drops that
-    * cache (the rows then recompute from lineage). A multi-block factor
-    * stays cached: its lineage runs through local checkpoints. */
+    * its (id, icf_features) view over the loop's blocks, cached by the
+    * loop that built them; `release` drops that cache (the rows then
+    * recompute from lineage), unless the lineage runs through a local
+    * checkpoint (several blocks, `checkpointEvery` columns or more). */
   final class Factor[X] private[ml] (spark: SparkSession, private[ml] val blocks: RDD[IcfBlock[X]],
                                      val rank: Int, val nRows: Long, cached: Option[RDD[_]]) {
     lazy val rows: DataFrame = spark.createDataFrame(blocks.flatMap {
@@ -71,8 +73,9 @@ object Icf {
   private def precedes(diagA: Double, idA: Long, diagB: Double, idB: Long): Boolean =
     diagA > diagB || (diagA == diagB && idA < idB)
 
-  private def better[X](a: Pivot[X], b: Pivot[X]): Pivot[X] =
-    if (precedes(a.diag, a.id, b.diag, b.id)) a else b
+  /** Of `a` and `b`, the pivot the [[precedes]] order puts first. */
+  private def better[X](a: Option[Pivot[X]], b: Option[Pivot[X]]): Option[Pivot[X]] =
+    (a ++ b).reduceOption((p, q) => if (precedes(p.diag, p.id, q.diag, q.id)) p else q)
 
   /** The block's pivot: [[precedes]] folded left over its rows. */
   private def blockPivot[X](b: IcfBlock[X]): Pivot[X] = {
@@ -83,10 +86,6 @@ object Icf {
     }
     Pivot(b.ids(best), b.xs(best), b.h(best), b.diag(best))
   }
-
-  /** The early stop: the largest residual is at or below `residualTol`. */
-  private def stopsAt(p: Pivot[_], residualTol: Double): Boolean =
-    residualTol > 0.0 && p.diag <= residualTol
 
   /** Appends column `j` to every row of `b`, in place. Only column j is
     * written and only the pivot's prefix t < j is read, so `p` may be a
@@ -109,21 +108,26 @@ object Icf {
     }
   }
 
-  /** The one-block loop, run inside the block's task: pivots from column
-    * `from` until `until` (or the early stop) on a copy of `b`. Returns
-    * the block, the columns built and whether the early stop fired. */
-  private def pivotSegment[X](b: IcfBlock[X], from: Int, until: Int,
-                              k: (X, X) => Double,
-                              residualTol: Double): (IcfBlock[X], Int, Boolean) = {
-    val out = b.copyForUpdate
+  /** The pivot step from column `from` until `until` or the early stop,
+    * written once; returns the blocks, the columns built and whether the
+    * early stop (the largest residual at or below `residualTol`) fired. */
+  private def pivots[X](blocks0: Blocks[IcfBlock[X]], from: Int, until: Int,
+                        k: (X, X) => Double, residualTol: Double,
+                        checkpointEvery: Int): (Blocks[IcfBlock[X]], (Int, Boolean)) = {
+    var blocks = blocks0
     var j = from
     var stopped = false
     while (j < until && !stopped) {
-      val p = blockPivot(out)
-      if (stopsAt(p, residualTol)) stopped = true
-      else { addColumn(out, p, j, k); j += 1 }
+      blocks.allReduce(Option.empty[Pivot[X]])((acc, b) => better(acc, Some(blockPivot(b))), better) match {
+        case Some(p) if !(residualTol > 0.0 && p.diag <= residualTol) =>
+          val col = j
+          blocks = blocks.update(_.copyForUpdate, cut = (col + 1) % checkpointEvery == 0)(
+            addColumn(_, p, col, k))
+          j += 1
+        case _ => stopped = true
+      }
     }
-    (out, j, stopped)
+    (blocks, (j, stopped))
   }
 
   /** psvm's `rank_ratio` flag: p = ⌈ratio·n⌉ (capped at `maxRank`), with
@@ -201,7 +205,7 @@ object Icf {
   }
 
   /** The greedy-pivot loop over (id, x, label) rows scored by `k`, rank
-    * `rankOf(row count)`: in the block's task on one block, else from the driver. */
+    * `rankOf(row count)`, in the form [[Blocks.Dist.run]] picks. */
   private def pivotLoop[X: ClassTag](spark: SparkSession, rows: RDD[(Long, X, Double)],
                                      k: (X, X) => Double, rankOf: Long => Int,
                                      checkpointEvery: Int, residualTol: Double,
@@ -227,70 +231,38 @@ object Icf {
         }
     }
     val nBlocks = Ipm.blockCount(nRows, start.getNumPartitions)
-    var blocks: RDD[IcfBlock[X]] = start.coalesce(nBlocks).mapPartitions { it =>
+    val built: RDD[IcfBlock[X]] = start.coalesce(nBlocks).mapPartitions { it =>
       val buf = it.toArray
       if (buf.isEmpty) Iterator.empty
       else Iterator.single(
         IcfBlock(buf.map(_._1), buf.map(_._2), buf.map(_._3), buf.map(_._4), buf.map(_._5)))
     }
+    if (nRows == 0) return new Factor(spark, built, 0, 0L, None)
 
+    var blocks = Blocks(built)
     var j = resume.map(_._1).getOrElse(0)
     var stopped = false
-    def dumpIfDue(): Unit = checkpointDir.foreach { dir =>
-      if (!stopped && j % checkpointEvery == 0 && j < rank) {
-        val built = j
-        ResumeMarker.commit(spark, dir, built.toString) {
-          spark.createDataFrame(blocks.flatMap { b =>
-              Iterator.tabulate(b.ids.length)(i => (b.ids(i), b.h(i).take(built).toSeq, b.diag(i)))
-            })
-            .toDF("id", "h", "diag")
-            .write.mode("overwrite").parquet(s"$dir/h")
+    // one segment, or one per `checkpointEvery` columns when each ends in a dump
+    while (j < rank && !stopped) {
+      val from = j
+      val until =
+        if (checkpointDir.isEmpty) rank
+        else math.min(rank, (from / checkpointEvery + 1) * checkpointEvery)
+      val (next, (cols, halted)) = blocks.run(pivots(_, from, until, k, residualTol, checkpointEvery))
+      blocks = next; j = cols; stopped = halted
+      checkpointDir.foreach { dir =>
+        if (!stopped && j < rank) {
+          val prefix = j
+          ResumeMarker.commit(spark, dir, prefix.toString) {
+            spark.createDataFrame(blocks.rdd.flatMap { b =>
+                Iterator.tabulate(b.ids.length)(i => (b.ids(i), b.h(i).take(prefix).toSeq, b.diag(i)))
+              })
+              .toDF("id", "h", "diag")
+              .write.mode("overwrite").parquet(s"$dir/h")
+          }
         }
       }
     }
-
-    var cached: Option[RDD[_]] = None
-    if (nBlocks == 1) {
-      // the whole loop in the block's task: one job, or one per
-      // `checkpointEvery` pivots when each segment ends in a dump
-      while (j < rank && !stopped) {
-        val from = j
-        val until =
-          if (checkpointDir.isEmpty) rank
-          else math.min(rank, (from / checkpointEvery + 1) * checkpointEvery)
-        val seg = blocks.map(b => pivotSegment(b, from, until, k, residualTol))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (built, halted) = seg.map(s => (s._2, s._3)).collect().headOption.getOrElse((from, true))
-        cached.foreach(_.unpersist(false))
-        cached = Some(seg)
-        blocks = seg.map(_._1)
-        j = built
-        stopped = halted
-        dumpIfDue()
-      }
-    } else {
-      blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-      while (j < rank && !stopped) {
-        val pivot = blocks.map(blockPivot[X]).reduce(better[X])
-        if (stopsAt(pivot, residualTol)) stopped = true
-        else {
-          val bc = spark.sparkContext.broadcast(pivot)
-          val jj = j
-          val prev = blocks
-          blocks = prev.map { b =>
-            val out = b.copyForUpdate
-            addColumn(out, bc.value, jj, k)
-            out
-          }.persist(StorageLevel.MEMORY_AND_DISK)
-          if ((j + 1) % checkpointEvery == 0) blocks.localCheckpoint()
-          blocks.count()          // materialize before unpersisting the parent
-          prev.unpersist(false)
-          j += 1
-          dumpIfDue()
-        }
-      }
-    }
-
-    new Factor(spark, blocks, j, nRows, cached)
+    new Factor(spark, blocks.rdd, j, nRows, blocks.cache)
   }
 }

@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
 /** The complete reference pipeline (psvm svm_train.cc): greedy-pivot ICF
@@ -452,43 +451,42 @@ object IcfSvmTrainer {
     icf.release()
     ipm.release()
     IcfSvmModel(kernel, svs, kkt.count, kkt.bias, kkt.first.fold(-1)(_._2.length),
-      cached = Some(kkt.cached),
+      cached = kkt.cached,
       parsed = Some(IcfSvmModel.SvTable(svs, kkt.table.map(t => (t._2, t._3)))))
   }
 
-  /** w, the bias, and the rows `emit` made (cached), their count and first row. */
+  /** w, the bias, and the rows `emit` made, their count, first row and cache. */
   private[ml] final case class Primal[T](w: Array[Double], bias: Double, table: RDD[T],
-                                         count: Long, first: Option[T], cached: RDD[_])
+                                         count: Long, first: Option[T], cached: Option[RDD[_]])
 
   /** psvm's KKT algebra on a dual solution's `block`s, rank `p`: w = Σ αᵢyᵢhᵢ
     * = Gᵀα, and b = the mean of yᵢ − w·hᵢ (hᵢ = yᵢ·gᵢ) over the rows
     * `free(αᵢ, yᵢ)` selects (the caller's free SVs), 0.0 if none; `emit`
-    * makes table rows in the same task. One job on one block (its task
-    * sums w first); on several, a job summing w in partition order
-    * ([[Ipm.aggregateInOrder]]) runs before. */
-  private[ml] def primal[R, T: ClassTag](rows: RDD[R], p: Int)(block: R => Ipm.Block,
+    * makes table rows in the same pass. Written once over the block
+    * collective ([[Blocks]]): w and the bias partials are all-reduces, so
+    * one job on one block and two on several. */
+  private[ml] def primal[R: ClassTag, T: ClassTag](rows: RDD[R], p: Int)(block: R => Ipm.Block,
       free: (Double, Double) => Boolean)(emit: R => Array[T]): Primal[T] = {
-    val summed =
-      if (rows.getNumPartitions == 1) None
-      else Some(rows.sparkContext.broadcast(Ipm.aggregateInOrder(rows)(new Array[Double](p))(
-        (acc, r) => Ipm.addGTalpha(acc, block(r)), Ipm.addInto)))
-    val out = rows.map { r =>
-      val b = block(r)
-      val w = summed.fold(Ipm.addGTalpha(new Array[Double](p), b))(_.value)
-      var total = 0.0; var n = 0L; var i = 0
-      while (i < b.alpha.length) {
-        if (free(b.alpha(i), b.y(i))) {
-          var s = 0.0; var j = 0; while (j < p) { s += w(j) * (b.y(i) * b.h(i)(j)); j += 1 }
-          total += b.y(i) - s; n += 1
+    val (out, (w, (total, n, count, first))) = Blocks(rows).run { blocks =>
+      val w = blocks.allReduce(new Array[Double](p))((acc, r) => Ipm.addGTalpha(acc, block(r)),
+        Ipm.addInto)
+      val out = blocks.map { r =>
+        val b = block(r)
+        var total = 0.0; var n = 0L; var i = 0
+        while (i < b.alpha.length) {
+          if (free(b.alpha(i), b.y(i))) {
+            var s = 0.0; var j = 0; while (j < p) { s += w(j) * (b.y(i) * b.h(i)(j)); j += 1 }
+            total += b.y(i) - s; n += 1
+          }
+          i += 1
         }
-        i += 1
+        (emit(r), total, n)
       }
-      (emit(r), w, total, n)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    val parts = out.map(t => (t._2, t._3, t._4, t._1.length, t._1.headOption)).collect()
-    val (total, n) = parts.foldLeft((0.0, 0L))((a, t) => (a._1 + t._2, a._2 + t._3))
-    Primal(summed.fold(parts.headOption.fold(new Array[Double](p))(_._1))(_.value),
-      if (n > 0) total / n else 0.0, out.flatMap(_._1), parts.map(_._4.toLong).sum,
-      parts.flatMap(_._5).headOption, out)
+      // the bias partials, the row count and the first row
+      (out, (w, out.allReduce((0.0, 0L, 0L, Option.empty[T]))(
+        (acc, e) => (acc._1 + e._2, acc._2 + e._3, acc._3 + e._1.length, acc._4.orElse(e._1.headOption)),
+        (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4.orElse(b._4)))))
+    }
+    Primal(w, if (n > 0) total / n else 0.0, out.rdd.flatMap(_._1), count, first, out.cache)
   }
 }

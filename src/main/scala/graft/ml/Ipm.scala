@@ -4,7 +4,6 @@ import breeze.linalg.{DenseMatrix, DenseVector, inv}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
-import scala.reflect.ClassTag
 
 /** §2.1 M7 (fidelity path): primal-dual Interior Point Method for the
   * SVM dual QP on an ICF/Nyström factor (reference: psvm ipm.cc and the
@@ -19,31 +18,24 @@ import scala.reflect.ClassTag
   *
   * Spark re-expression: rows live in per-partition BLOCKS (primitive
   * arrays of y, h, α) — n-vectors never touch the driver; the driver
-  * holds only p-sized state. This is the same data layout and
-  * communication pattern as the reference's MPI implementation, with
-  * [[aggregateInOrder]] (per-partition partials added on the driver in
-  * partition order) playing the role of all-reduce.
-  *
-  * Per-iteration work: ONE O(n·p) pass builds Gᵀα, ONE O(n·p) pass
-  * computes the per-row dot qaᵢ = (Gᵀα)·hᵢ (plus block-partial gap
-  * terms), then the SMW pass does the irreducible O(n·p²) Gram
-  * accumulation reading qa back in O(1) per row, and the Δα pass reuses
-  * qa the same way.
+  * holds only p-sized state. This is the reference's data layout and
+  * communication pattern: the Newton iteration ([[newtonSteps]]) is
+  * written once against the block collective ([[Blocks]]). Per
+  * iteration, ONE O(n·p) pass builds Gᵀα, ONE computes the per-row dot
+  * qaᵢ = (Gᵀα)·hᵢ (plus block-partial gap terms), the SMW pass does the
+  * irreducible O(n·p²) Gram accumulation reading qa back in O(1) per
+  * row, and the Δα pass reuses qa the same way.
   *
   * [[newton]] runs the loop over given blocks; [[solve]] builds them from
   * a DataFrame, one per input partition. Cost per block count:
   *   - one block (the m = 1 case of the paper's cost model, where the
   *     all-reduce is the identity): the whole Newton loop, p×p core solve
-  *     included, runs inside the block's one task — one Spark job for the
-  *     solve;
-  *   - several blocks: each iteration is five jobs (Gᵀα, gap, SMW Gram,
-  *     step, materialize) with the p×p core solved on the driver.
-  * Both run the same per-block steps, and the one-block loop merges each
-  * aggregate as a one-partition treeAggregate did (adding the partial
-  * into a zero twice, which gives the bits adding it once gives), so the
-  * alphas, iteration count and gap are the same bits either way. On
-  * several blocks the partials are added in partition order, so a solve
-  * repeats bit for bit.
+  *     included, runs inside the block's one task — one Spark job;
+  *   - several blocks: at most four jobs per iteration, the all-reduces
+  *     of Gᵀα (which also materializes the last α update), the gap, the
+  *     SMW Gram and the step, the p×p core solved on the driver; and one
+  *     job that materializes the final blocks. The partials are added in
+  *     partition order, so a solve repeats bit for bit.
   *
   * `checkpointDir`: psvm-style fault tolerance — every `checkpointEvery`
   * iterations the α blocks land in parquet plus an (iter, ν) marker
@@ -71,10 +63,10 @@ object Ipm {
 
   /** A dual solution: the per-row `alphas` (kept distributed; collect
     * them for diagnostics), the iterations run and the last surrogate
-    * gap, over the loop's final (ids, block) pairs. A one-block solution
-    * is cached by the loop that built it; `release` drops that cache (the
-    * blocks then recompute from lineage). A multi-block solution stays
-    * cached: its lineage runs through local checkpoints. */
+    * gap, over the loop's final (ids, block) pairs, cached by the loop
+    * that built them. `release` drops that cache (the blocks then
+    * recompute from lineage), unless the lineage runs through a local
+    * checkpoint (several blocks). */
   final class Dual private[ml] (private[ml] val blocks: RDD[(Array[Long], Block)],
                                 val iterations: Int, val gap: Double, cached: Option[RDD[_]]) {
     lazy val alphas: RDD[(Long, Double)] = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
@@ -98,22 +90,7 @@ object Ipm {
     Smw(DenseMatrix.zeros[Double](p, p), DenseVector.zeros[Double](p),
         DenseVector.zeros[Double](p), 0.0, 0.0)
 
-  /** `rdd`'s aggregate in one job: each partition folds its elements
-    * with `seqOp` from `zero`, and the driver adds the partials with
-    * `combOp` in partition order. (A `treeAggregate` ends in an
-    * `RDD.fold`, which merges the partials in task-completion order, so
-    * its float sums could differ in the last bits from run to run.) */
-  private[ml] def aggregateInOrder[T, U: ClassTag](rdd: RDD[T])(zero: => U)(
-      seqOp: (U, T) => U, combOp: (U, U) => U): U =
-    rdd.mapPartitions(it => Iterator.single(it.foldLeft(zero)(seqOp)))
-      .collect().foldLeft(zero)(combOp)
-
-  /** Gᵀα over several blocks, in partition order. */
-  private[ml] def gTalpha(blocks: RDD[(Array[Long], Block)], p: Int): Array[Double] =
-    aggregateInOrder(blocks)(new Array[Double](p))((acc, ib) => addGTalpha(acc, ib._2), addInto)
-
-  // ---- the per-block steps: the driver loop folds them across blocks
-  // with aggregateInOrder/reduce, the one-block loop calls them in its task
+  // ---- the per-block steps of a Newton iteration ([[newtonSteps]])
 
   /** Adds the block's Gᵀα (at the solution, w = Σ αᵢyᵢhᵢ) into `acc`. */
   private[ml] def addGTalpha(acc: Array[Double], b: Block): Array[Double] = {
@@ -130,9 +107,6 @@ object Ipm {
   private[ml] def addInto(a1: Array[Double], a2: Array[Double]): Array[Double] = {
     var j = 0; while (j < a1.length) { a1(j) += a2(j); j += 1 }; a1
   }
-
-  private def addPairs(a: (Double, Double), b: (Double, Double)): (Double, Double) =
-    (a._1 + b._1, a._2 + b._2)
 
   /** Per row qaᵢ = hᵢ·(Gᵀα), and the block's partials of the surrogate
     * gap and of yᵀα:
@@ -256,36 +230,44 @@ object Ipm {
     Block(b.y, b.h, na)
   }
 
-  /** A one-partition treeAggregate's merge of `elem`: the seqOp from a
-    * zero, then the two combOp merges into fresh zeros that Spark's fold
-    * made (task side, then driver side) — their `0.0 +` included, which
-    * leaves the bits [[aggregateInOrder]]'s one merge gives. */
-  private def oneBlock[T, U](zero: => U)(seqOp: (U, T) => U, combOp: (U, U) => U)(elem: T): U =
-    combOp(zero, combOp(zero, seqOp(zero, elem)))
-
-  /** The one-block loop, run inside the block's task: Newton steps from
-    * `s0` until `until` iterations or the gap reaches `tol`. */
-  private def newtonSegment(b0: Block, s0: Newton, until: Int, tol: Double, n: Long, p: Int,
-                            cPos: Double, cNeg: Double): (Block, Newton) = {
-    var b = b0
+  /** Newton steps from `s0` until `until` iterations or the gap reaches
+    * `tol`, written once. Every map cuts the lineage, so a released cache
+    * is never read again; the gap exit keeps the blocks qa was read on. */
+  private def newtonSteps(blocks0: Blocks[(Array[Long], Block)], s0: Newton, until: Int,
+                          tol: Double, n: Long, p: Int,
+                          cPos: Double, cNeg: Double): (Blocks[(Array[Long], Block)], Newton) = {
+    var blocks = blocks0
     var s = s0
     while (s.iter < until && s.gap > tol) {
-      val gTalpha = oneBlock(new Array[Double](p))(addGTalpha, addInto)(b)
-      val (qa, g, ya) = qaPass(b, gTalpha, s.nu, cPos, cNeg)
-      val (gap, yTalpha) = oneBlock((0.0, 0.0))(addPairs, addPairs)((g, ya))
+      val gTalpha = blocks.allReduce(new Array[Double](p))((acc, ib) => addGTalpha(acc, ib._2), addInto)
+      val nu = s.nu
+      val withQa = blocks.map({ case (ids, b) =>
+        val (qa, g, ya) = qaPass(b, gTalpha, nu, cPos, cNeg)
+        (ids, b, qa, g, ya)
+      }, cut = true)
+      val (gap, yTalpha) = withQa.allReduce((0.0, 0.0))((acc, e) => (acc._1 + e._4, acc._2 + e._5),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
       s = s.copy(gap = gap)
-      if (gap <= tol) s = s.copy(iter = s.iter + 1)
-      else {
+      if (gap <= tol) {
+        s = s.copy(iter = s.iter + 1)
+        blocks = withQa.map(e => (e._1, e._2), cut = true)
+      } else {
         val t = s.t(n)
-        val smw = oneBlock(smwZero(p))(
-          (acc: Smw, blk: Block) => addSmw(acc, blk, qa, s.nu, t, cPos, cNeg), mergeSmw)(b)
+        val smw = withQa.allReduce(smwZero(p))(
+          (acc, e) => addSmw(acc, e._2, e._3, nu, t, cPos, cNeg), mergeSmw)
         val (corrU, corrW, deltaNu) = newtonCore(smw, yTalpha)
-        val (deltas, step) = direction(b, qa, s.nu, t, corrU, corrW, deltaNu, cPos, cNeg)
-        b = stepped(b, deltas, step, cPos, cNeg)
+        val updated = withQa.map({ case (ids, b, qa, _, _) =>
+          val (deltas, minStep) = direction(b, qa, nu, t, corrU, corrW, deltaNu, cPos, cNeg)
+          (ids, b, deltas, minStep)
+        }, cut = true)
+        val step = updated.allReduce(1.0)((acc, e) => math.min(acc, e._4), math.min)
+        blocks = updated.map({ case (ids, b, deltas, _) =>
+          (ids, stepped(b, deltas, step, cPos, cNeg))
+        }, cut = true)
         s = s.stepped(step, deltaNu)
       }
     }
-    (b, s)
+    (blocks, s)
   }
 
   /** Solve the dual on (id, y∈{±1}, h: Array[Double] rank-p rows); one
@@ -339,97 +321,32 @@ object Ipm {
   }
 
   /** The Newton loop over (ids, [[Block]]) pairs, `n` rows at rank `p`, box
-    * 0 ≤ αᵢ ≤ cPos (yᵢ > 0) or cNeg, from `resumeAt` (iteration, ν) or (0, 0):
-    * in the block's task on one partition, else from the driver. */
+    * 0 ≤ αᵢ ≤ cPos (yᵢ > 0) or cNeg, from `resumeAt` (iteration, ν) or (0, 0),
+    * in the form [[Blocks.Dist.run]] picks; the loop owns `input`'s cache. */
   private[ml] def newton(spark: SparkSession, input: RDD[(Array[Long], Block)], n: Long, p: Int,
                          cPos: Double, cNeg: Double, maxIter: Int, tol: Double,
                          resumeAt: Option[(Int, Double)] = None,
                          checkpointDir: Option[String] = None, checkpointEvery: Int = 10): Dual = {
-    val sc = spark.sparkContext
-    var blocks = input
+    var blocks = Blocks(input, owned = true)
     var s = resumeAt.fold(Newton(0, 0.0, Double.MaxValue))(r => Newton(r._1, r._2, Double.MaxValue))
-
-    def checkpointIfDue(): Unit = checkpointDir.foreach { dir =>
-      if (s.gap > tol && s.iter % checkpointEvery == 0 && s.iter < maxIter) {
-        ResumeMarker.commit(spark, dir, s"${s.iter} ${s.nu}") {
-          val flat = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
-          spark.createDataFrame(flat).toDF("id", "alpha")
-            .write.mode("overwrite").parquet(s"$dir/alphas")
+    // one segment, or one per `checkpointEvery` iterations when each ends in a dump
+    while (s.iter < maxIter && s.gap > tol) {
+      val s0 = s
+      val until =
+        if (checkpointDir.isEmpty) maxIter
+        else math.min(maxIter, (s0.iter / checkpointEvery + 1) * checkpointEvery)
+      val (next, state) = blocks.run(newtonSteps(_, s0, until, tol, n, p, cPos, cNeg))
+      blocks = next; s = state
+      checkpointDir.foreach { dir =>
+        if (s.gap > tol && s.iter < maxIter) {
+          ResumeMarker.commit(spark, dir, s"${s.iter} ${s.nu}") {
+            val flat = blocks.rdd.flatMap { case (ids, b) => ids.zip(b.alpha) }
+            spark.createDataFrame(flat).toDF("id", "alpha")
+              .write.mode("overwrite").parquet(s"$dir/alphas")
+          }
         }
       }
     }
-
-    var cached: Option[RDD[_]] = None
-    if (input.getNumPartitions == 1) {
-      // the whole loop in the block's task: one job, or one per
-      // `checkpointEvery` iterations when each segment ends in a dump
-      cached = Some(input)
-      while (s.iter < maxIter && s.gap > tol) {
-        val s0 = s
-        val until =
-          if (checkpointDir.isEmpty) maxIter
-          else math.min(maxIter, (s0.iter / checkpointEvery + 1) * checkpointEvery)
-        val seg = blocks.map { case (ids, b) =>
-          val (out, state) = newtonSegment(b, s0, until, tol, n, p, cPos, cNeg)
-          (ids, out, state)
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        s = seg.map(_._3).collect().head
-        cached.foreach(_.unpersist(false))
-        cached = Some(seg)
-        blocks = seg.map(t => (t._1, t._2))
-        checkpointIfDue()
-      }
-    } else {
-      blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-      while (s.iter < maxIter && s.gap > tol) {
-        // Gᵀα: the only pass that needs every (row × p) product before the
-        // per-row dot qaᵢ = Σⱼ hᵢⱼ(Gᵀα)ⱼ is defined
-        val gTalphaB = sc.broadcast(gTalpha(blocks, p))
-
-        // qa once per iteration (reused by the SMW and Δα passes below),
-        // with the gap/feasibility partials folded into the same pass
-        val nu = s.nu
-        val withQa: RDD[(Array[Long], Block, Array[Double], Double, Double)] =
-          blocks.map { case (ids, b) =>
-            val (qa, g, ya) = qaPass(b, gTalphaB.value, nu, cPos, cNeg)
-            (ids, b, qa, g, ya)
-          }.persist(StorageLevel.MEMORY_AND_DISK)
-        val (gap, yTalpha) = aggregateInOrder(withQa.map(t => (t._4, t._5)))((0.0, 0.0))(
-          addPairs, addPairs)
-        s = s.copy(gap = gap)
-        if (gap <= tol) { s = s.copy(iter = s.iter + 1); withQa.unpersist(false) }
-        else {
-          val t = s.t(n)
-          val smw = aggregateInOrder(withQa)(smwZero(p))(
-            (acc, e) => addSmw(acc, e._2, e._3, nu, t, cPos, cNeg), mergeSmw)
-          // p×p SMW core on the driver
-          val (corrU, corrW, deltaNu) = newtonCore(smw, yTalpha)
-          val corrB = sc.broadcast((corrU, corrW))
-
-          // Δα per row, max feasible step, then the α update
-          val prev = blocks
-          val updated = withQa.map { case (ids, b, qa, _, _) =>
-            val (deltas, minStep) =
-              direction(b, qa, nu, t, corrB.value._1, corrB.value._2, deltaNu, cPos, cNeg)
-            (ids, b, deltas, minStep)
-          }.persist(StorageLevel.MEMORY_AND_DISK)
-          val step = updated.map(_._4).reduce(math.min)
-          blocks = updated.map { case (ids, b, deltas, _) =>
-            (ids, stepped(b, deltas, step, cPos, cNeg))
-          }.persist(StorageLevel.MEMORY_AND_DISK)
-          // localCheckpoint: truncates both the lineage and the closure
-          // chain (which captures this iteration's broadcasts)
-          blocks.localCheckpoint()
-          blocks.count()
-          updated.unpersist(false)
-          withQa.unpersist(false)
-          prev.unpersist(false)
-          s = s.stepped(step, deltaNu)
-          checkpointIfDue()
-        }
-      }
-    }
-
-    new Dual(blocks, s.iter, s.gap, cached)
+    new Dual(blocks.rdd, s.iter, s.gap, blocks.cache)
   }
 }

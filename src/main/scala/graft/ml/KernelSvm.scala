@@ -238,7 +238,7 @@ object KernelSvmTrainer {
     val eps = 1e-3 * c
     val kkt = IcfSvmTrainer.primal(ipm.blocks, map.rank)(_._2, free = (a, y) => a > eps &&
       a < c * (if (y > 0) params.posWeight else params.negWeight) - eps)(_ => Array.empty[Unit])
-    kkt.cached.unpersist(false)
+    kkt.cached.foreach(_.unpersist(false))
     ipm.release()
     KernelSvmModel(map, kkt.w, kkt.bias)
   }

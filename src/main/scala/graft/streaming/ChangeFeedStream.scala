@@ -136,15 +136,11 @@ object ChangeFeedStream {
         .option("maxFilesPerTrigger", "1")
         .parquet(feedRoot)
       val t0 = System.nanoTime()
-      val q = EventStreams.withStateParts(spark) {
-        val q0 = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) applyBatch(spark, mvRoot, batch)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q0.awaitTermination()
-        q0
-      }
+      val q = EventStreams.withStateParts(spark)(EventStreams.runToEnd("s13_ck")(stream.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          if (!batch.isEmpty) applyBatch(spark, mvRoot, batch)
+        }
+        .trigger(Trigger.AvailableNow())))
       StreamMeters.record("s13_stream_change_feed", (System.nanoTime() - t0) / 1e9,
         StreamMeters.batchSeconds(q))
       val finCents = spark.read

@@ -3,7 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
 /** §2.4: Structured Streaming over the events stream.
   *
@@ -120,9 +121,8 @@ object EventStreams {
     spark.conf.set(ChangelogConf, "true")
     try {
       val t0 = System.nanoTime()
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val q = runToEnd("sink_ck")(out.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()))
       if (label.nonEmpty)
         StreamMeters.record(label, (System.nanoTime() - t0) / 1e9,
           StreamMeters.batchSeconds(q))
@@ -141,6 +141,17 @@ object EventStreams {
   private def restore(spark: org.apache.spark.sql.SparkSession,
                       key: String, prev: String): Unit =
     if (prev.isEmpty) spark.conf.unset(key) else spark.conf.set(key, prev)
+
+  /** Starts `writer`'s stream over a fresh [[graft.Scratch]] dir `name` as
+    * its checkpoint location and waits for it to end; the dir is deleted
+    * then (a failed stream leaves it under the scratch root, not Spark's
+    * `java.io.tmpdir/temporary-*` dir). */
+  private[streaming] def runToEnd(name: String)(writer: DataStreamWriter[_]): StreamingQuery =
+    graft.Scratch.using(name) { ck =>
+      val q = writer.option("checkpointLocation", ck).start()
+      q.awaitTermination()
+      q
+    }
 
   /** The keyed state-layout width [[runToMemory]] uses, for the
     * self-managed foreachBatch streams (s11/s13) that don't go through
@@ -336,12 +347,11 @@ object EventStreams {
         unix_millis(col("ts")).as("__v"),
         col("event_id").as("__e"))
       val t0 = System.nanoTime()
-      val q = updatesStream.writeStream
+      val q = runToEnd("s5_ck")(updatesStream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           mergeUpsertBatch(spark, stateRoot, ordersBase, batch)
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow()))
       StreamMeters.record("s5_stream_upsert", (System.nanoTime() - t0) / 1e9,
         StreamMeters.batchSeconds(q))
       val fin = spark.read.parquet(s"$stateRoot/state_${latestStateVersion(stateRoot)}")
@@ -585,16 +595,11 @@ object EventStreams {
       .select(col("vec_id"), VectorOps.toDoubleArray(col("embedding")).as("v"),
               lit("upsert").as("src"))
     val t0 = System.nanoTime()
-    val q = graft.Scratch.using("s12_ck") { ck =>
-      val q0 = arrivals.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          AnnUpsert.upsertVectors(spark, s"$root/s12_postings", centroids, batch)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination()
-      q0
-    }
+    val q = runToEnd("s12_ck")(arrivals.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        AnnUpsert.upsertVectors(spark, s"$root/s12_postings", centroids, batch)
+      }
+      .trigger(Trigger.AvailableNow()))
     StreamMeters.record("s12_stream_ann_upsert",
       (System.nanoTime() - t0) / 1e9, StreamMeters.batchSeconds(q))
     AnnUpsert.probeAndAggregate(spark, dir, "s12", centroids)
@@ -727,8 +732,7 @@ object EventStreams {
               org.apache.spark.sql.types.LongType))))
         .write.mode("overwrite").parquet(s"$stateRoot/state_0")
       val t0s11 = System.nanoTime()
-      val q = withStateParts(spark) {
-        val q0 = counts.writeStream.outputMode("update")
+      val q = withStateParts(spark)(runToEnd("s11_ck")(counts.writeStream.outputMode("update")
           .foreachBatch { (batch: DataFrame, _: Long) =>
             // last-writer-wins: this batch's rows replace same-key view rows.
             // The version cursor is the _SUCCESS-gated directory listing (the
@@ -743,10 +747,7 @@ object EventStreams {
             // next version, never in place (the s5 rule)
             merged.write.mode("overwrite").parquet(s"$stateRoot/state_${ver + 1}")
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q0.awaitTermination()
-        q0
-      }
+          .trigger(Trigger.AvailableNow())))
       StreamMeters.record("s11_stream_trending", (System.nanoTime() - t0s11) / 1e9,
         StreamMeters.batchSeconds(q))
       val fin = spark.read.parquet(s"$stateRoot/state_${latestStateVersion(stateRoot)}")

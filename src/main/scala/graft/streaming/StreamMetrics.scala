@@ -102,9 +102,8 @@ object StreamMetrics {
         try {
           // append mode: only watermark-FINALIZED windows are emitted —
           // the semantics that make late-row dropping happen at all
-          val q = agg.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
+          val q = EventStreams.runToEnd("s15_ck")(agg.writeStream.format("memory").queryName(name)
+            .outputMode("append").trigger(Trigger.AvailableNow()))
           q.recentProgress.flatMap(_.stateOperators)
             .map(_.numRowsDroppedByWatermark).sum
         } finally spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -44,6 +44,7 @@ object StreamBench {
     def run(name: String, out: org.apache.spark.sql.DataFrame, mode: String): Unit = {
       val q = out.writeStream.format("memory")
         .queryName(s"bench_$name").outputMode(mode)
+        .option("checkpointLocation", graft.Scratch.dir(s"bench_${name}_ck"))
         .trigger(Trigger.ProcessingTime("2 seconds")).start()
       Thread.sleep(seconds * 1000L)
       val progress = q.recentProgress.toSeq
@@ -115,6 +116,7 @@ object StreamBench {
             .count()
           served.addAndGet(n); ()
         }
+        .option("checkpointLocation", graft.Scratch.dir("bench_s7_ck"))
         .trigger(Trigger.ProcessingTime("2 seconds")).start()
       Thread.sleep(seconds * 1000L)
       val progress = q.recentProgress.toSeq
@@ -214,6 +216,7 @@ object StreamBench {
             .count()
           decidedN.addAndGet(n); ()
         }
+        .option("checkpointLocation", graft.Scratch.dir("bench_s8_ck"))
         .trigger(Trigger.ProcessingTime("2 seconds")).start()
       Thread.sleep(seconds * 1000L)
       val progress = q.recentProgress.toSeq
@@ -282,6 +285,7 @@ object StreamBench {
             rows.incrementAndGet()
           }
         }
+        .option("checkpointLocation", graft.Scratch.dir("bench_s11_ck"))
         .trigger(Trigger.ProcessingTime("2 seconds")).start()
       Thread.sleep(seconds * 1000L)
       val progress = q.recentProgress.toSeq

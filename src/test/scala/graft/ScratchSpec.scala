@@ -1,10 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** Every scratch path lives under the one [[Scratch]] root: the queries
-  * that write temp dirs leave nothing loose in `java.io.tmpdir`, and none
-  * of their per-query dirs outlives the query. */
+  * that write temp dirs leave nothing loose in `java.io.tmpdir`, none of
+  * their per-query dirs outlives the query, and no stream runs over
+  * Spark's own temporary checkpoint dir. */
 class ScratchSpec extends SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
@@ -37,6 +42,25 @@ class ScratchSpec extends SparkSpec {
     assert(tmpGraftEntries() -- tmpBefore === Set.empty[String],
       s"graft_* entries outside $root")
     assert(ml.ModelOracles.modelRoot(Sf).startsWith(root.toString))
+  }
+
+  test("streams checkpoint under the root: no temporary-* entry in java.io.tmpdir while s11, s13 and s15 run") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    // Spark's checkpoint dir for a stream started without a location
+    def temporary(): Set[String] = names(tmp).filter(_.startsWith("temporary-"))
+    val before = temporary()
+    val seen = ConcurrentHashMap.newKeySet[String]()
+    val listener = new StreamingQueryListener {
+      // called on the thread that starts the query, once its checkpoint dir exists
+      override def onQueryStarted(e: QueryStartedEvent): Unit = temporary().foreach(seen.add)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try Seq("s11_stream_trending", "s13_stream_change_feed", "s15_stream_metrics")
+      .foreach(q => assert(SparkEntry.queries(q)(spark, Sf).collect().nonEmpty, q))
+    finally spark.streams.removeListener(listener)
+    assert(seen.asScala.toSet -- before === Set.empty[String])
   }
 
   test("a body that throws leaves its dir under the root, for the exit hook") {

@@ -3,12 +3,13 @@ package graft.ml
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 
-/** The ICF pivot loop and the IPM Newton loop run inside the block's
-  * task on one block and from the driver on several. These specs pin
-  * both to the same bits (a plain-Scala reference ICF, a golden IPM
-  * solution), bound the jobs a one-block fit submits, check that a fit
-  * shuffles nothing and leaves no cache behind, and pin the KKT pass
-  * (w and the bias) to a plain-Scala reference. */
+/** The ICF pivot loop, the IPM Newton loop and the KKT pass run inside
+  * the block's task on one block and from the driver on several. These
+  * specs pin both forms to the same bits (a plain-Scala reference ICF,
+  * golden IPM solutions and a golden 3-block fit), bound the jobs each
+  * form submits, check that a fit shuffles nothing and leaves no cache
+  * behind, and pin the KKT pass (w and the bias) to a plain-Scala
+  * reference. */
 class PsvmLoopSpec extends SparkSpec with JobCounting {
   import spark.implicits._
 
@@ -64,8 +65,10 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     }
   }
 
+  /** Checks the dense and sparse factors against [[referenceIcf]];
+    * returns the jobs each factorization submitted. */
   private def assertFactorsMatchReference(n: Int, dim: Int, distinct: Int, parts: Int,
-                                          rank: Int, residualTol: Double): Unit = {
+                                          rank: Int, residualTol: Double): Seq[Int] = {
     val pts = points(n, dim, distinct, seed = n + distinct)
     val kernel = Kernel.Rbf(0.3)
     val ids = pts.map(_._1).toArray
@@ -74,15 +77,17 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     // a residual tolerance is there to stop early: make sure it did
     assert((ref.head._2.length < rank) === (residualTol > 0))
     val df = spark.createDataFrame(sc.parallelize(pts, parts)).toDF("id", "vec", "indices", "values")
-    def check(h: DataFrame, form: String): Unit = {
-      val got = h.as[(Long, Seq[Double])].collect().toMap
+    def check(factor: => Icf.Factor[_], form: String): Int = {
+      val (f, jobs) = jobsDuring(factor)
+      val got = f.rows.as[(Long, Seq[Double])].collect().toMap
       assert(got.keySet === ref.keySet)
       val off = ref.count { case (id, v) => bits(got(id)) != bits(v) }
       assert(off === 0, s"$form factor differs from the reference on $off of $n rows")
+      jobs
     }
-    check(Icf.factorize(df, "id", "vec", kernel, rank, residualTol = residualTol).rows, "dense")
-    check(Icf.factorizeSparse(df, "id", "indices", "values", kernel, rank,
-      residualTol = residualTol).rows, "sparse")
+    Seq(check(Icf.factorize(df, "id", "vec", kernel, rank, residualTol = residualTol), "dense"),
+      check(Icf.factorizeSparse(df, "id", "indices", "values", kernel, rank,
+        residualTol = residualTol), "sparse"))
   }
 
   /** Two Gaussian classes, the mean shifted by ±0.6 on the first dims. */
@@ -102,13 +107,15 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
   }
 
   test("three-block ICF (100k rows, the driver loop) equals the same reference bit for bit") {
-    val (_, jobs) = jobsDuring(
-      assertFactorsMatchReference(n = 100000, dim = 2, distinct = 100000, parts = 3, rank = 4,
-        residualTol = 0.0))
-    // two passes per pivot per form: the blocks went through the driver loop
-    assert(jobs >= 2 * 2 * 4, s"$jobs jobs")
-    assertFactorsMatchReference(n = 100000, dim = 2, distinct = 3, parts = 3, rank = 4,
+    val jobs = assertFactorsMatchReference(n = 100000, dim = 2, distinct = 100000, parts = 3,
+      rank = 4, residualTol = 0.0)
+    // per form: the row count, one all-reduce per pivot (which also
+    // materializes the previous column) and one materialization of the last
+    assert(jobs.forall(_ <= 1 + 4 + 1), s"$jobs jobs")
+    val early = assertFactorsMatchReference(n = 100000, dim = 2, distinct = 3, parts = 3, rank = 4,
       residualTol = 1e-8)
+    assert(early.forall(_ <= 1 + 4 + 1), s"$early jobs")
+    info(s"jobs per factorization: $jobs, with the early stop: $early")
   }
 
   // (id, y, h) rows of a well-posed dual
@@ -154,6 +161,47 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
   private val GoldenIpm =
     ("5f1f3eb96176930000b19aef7c1264a2755303f7ac53b6eaf48995e777be75d8", 15, 4571809324009425992L,
      "5f1f3eb96176930000b19aef7c1264a2755303f7ac53b6eaf48995e777be75d8", 16, 4556157894485111425L)
+
+  test("a 3-block IPM solve equals its golden bits in at most 4 jobs per iteration") {
+    val (d, jobs) = jobsDuring(Ipm.solve(dualFrame(3), "id", "y", "h", 1.0, maxIter = 15, tol = 1e-9))
+    val got = (alphaBits(d.alphas), d.iterations, java.lang.Double.doubleToRawLongBits(d.gap))
+    info(s"3-block golden: $got, $jobs jobs")
+    assert(got === GoldenIpm3)
+    // the sizes pass, four all-reduces per iteration (Gᵀα, the gap, the
+    // SMW Gram, the step) and one materialization of the last α update
+    assert(jobs <= 1 + 4 * d.iterations + 1, s"$jobs jobs for ${d.iterations} iterations")
+  }
+
+  // captured from the per-pass driver loop (five jobs per iteration)
+  private val GoldenIpm3 =
+    ("7eb789515dac820442f3671aeba5d7469ad9adf237ae1478aea815573b398f02", 15, 4571809324001639983L)
+
+  /** 100k rows of two noisy classes in 2 dims over 3 partitions: three
+    * blocks ([[Ipm.blockCount]]) for the ICF, IPM and KKT driver loops. */
+  private def tall: DataFrame = spark.createDataFrame(sc.parallelize((0 until 100000).map { i =>
+    val y = if (i % 2 == 0) 1.0 else -1.0
+    (i.toLong, Array(math.sin(i * 0.37) + 0.5 * y, math.cos(i * 0.11)), y)
+  }, 3)).toDF("id", "vec", "y")
+
+  test("a 3-block fit equals its golden SV count, bias and coefficients, and leaves at most 2 caches") {
+    val before = sc.getPersistentRDDs.keySet
+    val (model, jobs) = jobsDuring(IcfSvmTrainer.fit(tall, "id", "vec", "y", Kernel.Rbf(0.25),
+      rank = 4, maxIter = 3, tol = 1e-3))
+    val coefs = model.svs.select($"sv_id", $"sv_coef").as[(Long, Double)].rdd
+    val got = (model.numSupportVectors, java.lang.Double.doubleToRawLongBits(model.bias),
+      alphaBits(coefs))
+    model.unpersist()
+    val left = sc.getPersistentRDDs.keySet -- before
+    info(s"3-block fit: $got, $jobs jobs, ${left.size} cached RDDs left")
+    assert(got === GoldenFit3)
+    // the per-pass driver loops left the last ICF and IPM blocks cached
+    assert(left.size <= 2, s"cached RDDs left: $left")
+  }
+
+  // captured from the per-pass driver loops (two jobs per pivot, five per
+  // IPM iteration); after 3 IPM steps every row is still a support vector
+  private val GoldenFit3 =
+    (100000L, 4620763612466340007L, "aa924e740ba58a0a50b18e701149ca39f744c7965fa7737e515601e0734a25b0")
 
   test("checkpointDir as a file: URI: segmented one-block loops keep their bits and resume") {
     val icfDir = "file:" + graft.Scratch.dir("icf_uri")
@@ -203,6 +251,24 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     assert(saveJobs === 1, s"saveText: $saveJobs jobs")
   }
 
+  test("the collective's jobs are named after the pass that runs them, on 1 and 3 blocks") {
+    // job traces attribute a job to ICF, IPM or the trainer by the file its
+    // call site names, as Spark would name it without the collective between
+    def files(sites: Seq[String]): Set[String] = sites.map(s => s.substring(s.lastIndexOf(" at ") + 4)
+      .takeWhile(_ != ':')).toSet
+    val (model, fitSites) = sitesDuring(IcfSvmTrainer.fit(blobs(400, 4, seed = 9), "id", "vec", "y",
+      Kernel.Rbf(0.25), rank = 8, maxIter = 4))
+    model.unpersist()
+    info(s"1-block fit: ${fitSites.mkString(", ")}")
+    assert(files(fitSites) === Set("Icf.scala", "Ipm.scala", "IcfSvm.scala"))
+    val (dual, solveSites) = sitesDuring(Ipm.solve(dualFrame(3), "id", "y", "h", 1.0, maxIter = 3))
+    val (kkt, kktSites) = sitesDuring(IcfSvmTrainer.primal(dual.blocks, 6)(_._2, (_, _) => true)(
+      _ => Array.empty[Unit]))
+    kkt.cached.foreach(_.unpersist(false))
+    assert(files(solveSites) === Set("Ipm.scala") && files(kktSites) === Set("IcfSvm.scala"),
+      s"3-block solve: $solveSites; KKT: $kktSites")
+  }
+
   test("a fit on 1 and on 3 blocks writes no shuffle bytes") {
     def fitBytes(df: DataFrame, rank: Int, maxIter: Int): (Long, Long) = {
       val (model, bytes) = shuffleBytesDuring(IcfSvmTrainer.fit(df, "id", "vec", "y",
@@ -211,11 +277,6 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
       (bytes, model.numSupportVectors)
     }
     val (oneBlock, nSv1) = fitBytes(blobs(400, 4, seed = 13).coalesce(2), rank = 8, maxIter = 6)
-    // 100k rows are three blocks of the ICF and IPM driver loops
-    val tall = spark.createDataFrame(sc.parallelize((0 until 100000).map { i =>
-      val y = if (i % 2 == 0) 1.0 else -1.0
-      (i.toLong, Array(math.sin(i * 0.37) + 0.5 * y, math.cos(i * 0.11)), y)
-    }, 3)).toDF("id", "vec", "y")
     assert(Ipm.blockCount(100000L, 3) === 3)
     val (threeBlocks, nSv3) = fitBytes(tall, rank = 4, maxIter = 3)
     info(s"shuffle bytes: 1 block $oneBlock ($nSv1 SVs), 3 blocks $threeBlocks ($nSv3 SVs)")
@@ -252,7 +313,7 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
         _ => Array.empty[Unit]))
       val alphas = dual.alphas.collect().toMap
       val (w, b) = referencePrimal(alphas, rows, free)
-      kkt.cached.unpersist(false)
+      kkt.cached.foreach(_.unpersist(false))
       dual.release()
       val nFree = rows.count { case (id, y, _) => free(alphas(id), y) }
       info(f"$parts block(s): $jobsSeen jobs, $nFree free SVs, bias ${kkt.bias}%.6f vs $b%.6f")
@@ -281,11 +342,13 @@ class PsvmLoopSpec extends SparkSpec with JobCounting {
     val want = bits(sum(partials.toSeq))
     // the order matters on these rows: another order gives other bits
     assert(bits(sum(partials.toSeq.reverse)) !== want)
-    assert(bits(Ipm.gTalpha(dual.blocks, p)) === want)
+    val gTalpha = Blocks(dual.blocks).allReduce(new Array[Double](p))(
+      (acc, ib) => Ipm.addGTalpha(acc, ib._2), Ipm.addInto)
+    assert(bits(gTalpha) === want)
     val free = (a: Double, y: Double) => a > 1e-4 && a < 1.0 * (1 - 1e-3)
     val kkt = IcfSvmTrainer.primal(dual.blocks, p)(_._2, free)(_ => Array.empty[Unit])
     assert(bits(kkt.w) === want)
-    kkt.cached.unpersist(false)
+    kkt.cached.foreach(_.unpersist(false))
     dual.release()
   }
 

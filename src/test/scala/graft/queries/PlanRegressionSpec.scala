@@ -116,10 +116,12 @@ class PlanRegressionSpec extends SparkSpec {
              // result — assert on the operator's own builder instead
              name == "p5b_embedding_dedup_lsh", s"$name: fused LSH keys missing")
     }
-    val lshPlan = graft.dedup.EmbeddingDedup
-      .nearDupPairsLsh(graft.Tables.embeddings(spark, dir), "vec_id",
-        "embedding", 0.4)
-      .queryExecution.analyzed.toString
+    // nearDupPairsLsh returns its pairs materialized: read the plan it runs
+    val (vectors, pairs) = graft.dedup.EmbeddingDedup.lshPlan(
+      graft.Tables.embeddings(spark, dir), "vec_id", "embedding", 0.4,
+      numTables = 12, planesPerTable = -1, dim = 64, maxBucketSize = 4096)
+    val lshPlan = pairs.queryExecution.analyzed.toString
+    vectors.unpersist()
     assert(lshPlan.contains("hyperplane_bucket_keys"),
       "p5b builder: fused LSH keys missing from the bucketing plan")
   }

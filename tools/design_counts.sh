@@ -12,9 +12,12 @@
 # `treeAggregate` sites of the PSVM solver and trainer (Ipm.scala,
 # IcfSvm.scala), and in LibSvmIO.scala the parsers that take a whole
 # LIBSVM line as a `String` and the `split(` sites (one byte scanner,
-# `LibSvmLine`, reads every line), and the scratch-path cleanups of
+# `LibSvmLine`, reads every line), the scratch-path cleanups of
 # src/main: `deleteOnExit` calls, JVM shutdown hooks and the ad hoc
-# temp-dir cleanup helpers (`graft.Scratch` owns every scratch path).
+# temp-dir cleanup helpers (`graft.Scratch` owns every scratch path),
+# and, over the PSVM passes (Icf.scala, Ipm.scala, IcfSvm.scala and the
+# block collective Blocks.scala), the `== 1` block-count tests that pick
+# a pass loop's form and the in-task twins of the driver loops.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -55,3 +58,6 @@ echo "panel_strictmath_exp $panel_exp"
 echo "psvm_tree_aggregates $(count 'treeAggregate\(' "$main/graft/ml/Ipm.scala" "$main/graft/ml/IcfSvm.scala")"
 echo "libsvm_string_line_parsers $(count '^  def \w+\(line: String' "$main/graft/ml/LibSvmIO.scala")"
 echo "libsvm_split_sites $(count 'split\(' "$main/graft/ml/LibSvmIO.scala")"
+psvm=$(ls "$main"/graft/ml/{Icf,Ipm,IcfSvm,Blocks}.scala 2>/dev/null || true)
+echo "psvm_block_forks $(count '(getNumPartitions|nBlocks|blockCount\([^)]*\)) == 1\b' $psvm)"
+echo "psvm_loop_twins $(count 'def (pivotSegment|newtonSegment|oneBlock)\b' $psvm)"
