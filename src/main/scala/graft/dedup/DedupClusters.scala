@@ -3,8 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P14: near-duplicate CLUSTERING — pairs are not enough to dedup a
   * corpus; the production step groups the pair graph into connected
@@ -41,54 +40,53 @@ object DedupClusters {
     // runs exactly once. The edge list itself is small relative to the
     // work that produced it (verified near-dup pairs), so checkpointing
     // it is always cheaper than one recomputation.
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val e0 = Materialize(edges.select(col("src"), col("dst")))
     val und = e0.select(col("src").as("a"), col("dst").as("b"))
       .union(e0.select(col("dst").as("a"), col("src").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // eager localCheckpoint each round: the loop would otherwise grow the
-    // logical plan per iteration and Catalyst analysis blows up
-    // exponentially — the standard iterative-DataFrame lineage trap.
-    var labels = und.select(col("a").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (iter < math.min(maxIter, starSwitchRounds) && !converged) {
-      // (convergence is REQUIRED below — silently returning mixed labels
-      // would split one logical cluster into several)
-      // ONE shuffle per round: union each vertex's own label with the labels
-      // flowing in over edges, take the min per vertex, and carry the old
-      // label through the same aggregation so changed-detection needs no
-      // second join. The eager localCheckpoint is the round's only heavy
-      // job; the convergence probe below is a limit(1) scan of the
-      // checkpointed partitions — no shuffle, no recompute.
-      val own = labels.select(col("id"), col("comp"), lit(true).as("own"))
-      val flow = und.join(labels.withColumnRenamed("id", "b"), Seq("b"))
-        .select(col("a").as("id"), col("comp"), lit(false).as("own"))
-      val relaxed = own.union(flow)
-        .groupBy("id")
-        .agg(min(col("comp")).as("comp"),
-             min(when(col("own"), col("comp"))).as("old"))
-      // POINTER JUMP (path doubling): comp ← comp(comp). Labels are
-      // always vertex ids, and a vertex's label is monotonically
-      // non-increasing, so following one hop of the label chain is both
-      // well-defined and sound. Relax alone needs O(diameter) rounds;
-      // relax + jump needs O(log diameter) — the jump join runs over the
-      // LABEL table (|V| narrow rows), far cheaper than another edge
-      // shuffle, so deep chains stop being a reason to abandon the
-      // one-edge-shuffle-per-round plan.
-      val next = relaxed
-        .join(relaxed.select(col("id").as("comp"), col("comp").as("pcomp")),
-              Seq("comp"), "left")
-        .select(col("id"),
-                coalesce(col("pcomp"), col("comp")).as("comp"), col("old"))
-        .localCheckpoint(true)
-      converged =
-        next.filter(col("comp") < col("old")).limit(1).count() == 0L
-      labels = next.select(col("id"), col("comp"))
-      iter += 1
+    val (labels, converged) = Materialize.scoped(und) {
+      // eager checkpoint each round: the loop would otherwise grow the
+      // logical plan per iteration and Catalyst analysis blows up
+      // exponentially — the standard iterative-DataFrame lineage trap.
+      var labels = Materialize(und.select(col("a").as("id")).distinct()
+        .withColumn("comp", col("id")))
+      var iter = 0
+      var converged = false
+      while (iter < math.min(maxIter, starSwitchRounds) && !converged) {
+        // (convergence is REQUIRED below — silently returning mixed labels
+        // would split one logical cluster into several)
+        // ONE shuffle per round: union each vertex's own label with the labels
+        // flowing in over edges, take the min per vertex, and carry the old
+        // label through the same aggregation so changed-detection needs no
+        // second join. The eager checkpoint is the round's only heavy
+        // job; the convergence probe below is a limit(1) scan of the
+        // checkpointed partitions — no shuffle, no recompute.
+        val own = labels.select(col("id"), col("comp"), lit(true).as("own"))
+        val flow = und.join(labels.withColumnRenamed("id", "b"), Seq("b"))
+          .select(col("a").as("id"), col("comp"), lit(false).as("own"))
+        val relaxed = own.union(flow)
+          .groupBy("id")
+          .agg(min(col("comp")).as("comp"),
+               min(when(col("own"), col("comp"))).as("old"))
+        // POINTER JUMP (path doubling): comp ← comp(comp). Labels are
+        // always vertex ids, and a vertex's label is monotonically
+        // non-increasing, so following one hop of the label chain is both
+        // well-defined and sound. Relax alone needs O(diameter) rounds;
+        // relax + jump needs O(log diameter) — the jump join runs over the
+        // LABEL table (|V| narrow rows), far cheaper than another edge
+        // shuffle, so deep chains stop being a reason to abandon the
+        // one-edge-shuffle-per-round plan.
+        val next = Materialize(relaxed
+          .join(relaxed.select(col("id").as("comp"), col("comp").as("pcomp")),
+                Seq("comp"), "left")
+          .select(col("id"),
+                  coalesce(col("pcomp"), col("comp")).as("comp"), col("old")))
+        converged =
+          next.filter(col("comp") < col("old")).limit(1).count() == 0L
+        labels = next.select(col("id"), col("comp"))
+        iter += 1
+      }
+      (labels, converged)
     }
-    und.unpersist(false)
     if (!converged) {
       // diameter guard tripped: some component is deeper than the
       // propagation budget — finish with the O(log n) algorithm (from
@@ -120,8 +118,7 @@ object DedupClusters {
       .filter(col("lo") =!= col("hi"))
       .distinct()
 
-    var e = canon(edges.select(col("src").as("x"), col("dst").as("y")))
-      .localCheckpoint(true)
+    var e = Materialize(canon(edges.select(col("src").as("x"), col("dst").as("y"))))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -129,19 +126,17 @@ object DedupClusters {
       val und = e.select(col("lo").as("a"), col("hi").as("b"))
         .union(e.select(col("hi").as("a"), col("lo").as("b")))
       val wA = Window.partitionBy(col("a"))
-      val ls = canon(und
+      val ls = Materialize(canon(und
         .withColumn("m", least(min(col("b")).over(wA), col("a")))
         .filter(col("b") > col("a"))
-        .select(col("b").as("x"), col("m").as("y")))
-        .localCheckpoint(true)
+        .select(col("b").as("x"), col("m").as("y"))))
       // small-star over each node's smaller neighbors (hi side of canon)
       val wH = Window.partitionBy(col("hi"))
       val withM = ls.withColumn("m", min(col("lo")).over(wH))
-      val ss = canon(
+      val ss = Materialize(canon(
           withM.filter(col("lo") =!= col("m"))
             .select(col("lo").as("x"), col("m").as("y"))
-          .union(withM.select(col("hi").as("x"), col("m").as("y"))))
-        .localCheckpoint(true)
+          .union(withM.select(col("hi").as("x"), col("m").as("y")))))
       // single-job convergence probe: both sides are canonical DISTINCT
       // edge sets, so set equality ⇔ the full-outer join has no one-sided
       // rows (replaces the old count + exceptAll + count trio of jobs)

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.VectorOps
 
 /** §2.3 P5: embedding-cosine near-duplicate pairs.
@@ -79,24 +79,22 @@ object EmbeddingDedup {
                       threshold: Double, numTables: Int = 12,
                       planesPerTable: Int = -1, dim: Int = 64,
                       maxBucketSize: Int = 4096): DataFrame = {
-    val (v, pairs) = lshPlan(df, idCol, vecCol, threshold, numTables, planesPerTable, dim,
-      maxBucketSize)
-    try pairs.localCheckpoint() finally v.unpersist(false)
+    val v = lshVectors(df, idCol, vecCol)
+    Materialize.scoped(v)(Materialize(
+      lshPlan(v, threshold, numTables, planesPerTable, dim, maxBucketSize)))
   }
 
-  /** [[nearDupPairsLsh]]'s persisted vector frame and its lazy pair plan
-    * over it. */
-  private[graft] def lshPlan(df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-                             numTables: Int, planesPerTable: Int, dim: Int,
-                             maxBucketSize: Int): (DataFrame, DataFrame) = {
-    val v = df.select(col(idCol).as("id"),
-                      VectorOps.toDoubleArray(col(vecCol)).as("vec"))
+  /** The (id, vec, nrm) frame [[lshPlan]] reads three times. */
+  private[graft] def lshVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), VectorOps.toDoubleArray(col(vecCol)).as("vec"))
       .withColumn("nrm", VectorOps.norm(col("vec")))
       // see MinHashDedup: scan partitioning reflects file bytes, not
       // per-row hash work — spread the corpus before the heavy pipeline
-      .repartition(
-        df.sparkSession.sparkContext.defaultParallelism * 2, col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism * 2, col("id"))
+
+  /** [[nearDupPairsLsh]]'s lazy pair plan over the cached [[lshVectors]]. */
+  private[graft] def lshPlan(v: DataFrame, threshold: Double, numTables: Int,
+                             planesPerTable: Int, dim: Int, maxBucketSize: Int): DataFrame = {
     val planes =
       if (planesPerTable > 0) planesPerTable
       else planesForSize(v.count())
@@ -110,7 +108,7 @@ object EmbeddingDedup {
     // merge hint: corpus-sized vector side must never broadcast — see
     // MinHashDedup.candidatePairsByHashed for the measured failure mode
     // (array-column size under-estimate → driver-built giant hash map)
-    val pairs = MinHashDedup.pairsFromBands(banded, maxBucketSize)
+    MinHashDedup.pairsFromBands(banded, maxBucketSize)
       .join(v.select(col("id").as("id_a"), col("vec").as("vec_a"), col("nrm").as("nrm_a")).hint("merge"), Seq("id_a"))
       .join(v.select(col("id").as("id_b"), col("vec").as("vec_b"), col("nrm").as("nrm_b")).hint("merge"), Seq("id_b"))
       .withColumn("cos",
@@ -118,7 +116,6 @@ object EmbeddingDedup {
           (col("nrm_a") * col("nrm_b")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
-    (v, pairs)
   }
 
   /** p5b: the LSH-blocked production path over embeddings. Rows-only —
@@ -157,7 +154,7 @@ object EmbeddingDedup {
       .select($"vec_id".as("aid"), VectorOps.toDoubleArray($"embedding").as("avec"))
     val corpus = e.select($"vec_id".as("bid"),
       VectorOps.toDoubleArray($"embedding").as("bvec"))
-    val exact = anchors.crossJoin(corpus)
+    val exact = Materialize(anchors.crossJoin(corpus)
       .filter($"aid" =!= $"bid")
       .withColumn("cos",
         graft.functions.GraftFunctions.cosine_sim($"avec", $"bvec"))
@@ -165,8 +162,7 @@ object EmbeddingDedup {
       .select(least($"aid", $"bid").as("id_a"),
               greatest($"aid", $"bid").as("id_b"),
               round($"cos", 6).as("cos_sim"))
-      .distinct()   // pairs with BOTH endpoints anchored appear twice
-      .localCheckpoint()
+      .distinct())  // pairs with BOTH endpoints anchored appear twice
     val nExact = exact.count()
     val nFound = exact.join(lsh.select($"id_a", $"id_b"), Seq("id_a", "id_b"), "left_semi")
       .count()

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.HashFunctions
 
 /** §2.3 P35: INCREMENTAL corpus dedup — the continual-refresh shape:
@@ -54,13 +54,13 @@ object IncrementalDedup {
           .filter($"doc_id" % 2 === 0)
           .select($"doc_id", md5($"text").as("md5"),
             HashFunctions.token_shingle_hashes($"text", ShingleK).as("sh"))
-          .persist()
-        existing.write.mode("overwrite").parquet(s"${root(dir)}/p35_index")
-        existing
-          .select($"doc_id".as("rid"), posexplode(MinHashDedup.bandKeys($"sh")))
-          .select($"pos".as("band_idx"), $"col".as("band_key"), $"rid")
-          .write.mode("overwrite").parquet(s"${root(dir)}/p35_bands")
-        existing.unpersist(false)
+        Materialize.scoped(existing) {
+          existing.write.mode("overwrite").parquet(s"${root(dir)}/p35_index")
+          existing
+            .select($"doc_id".as("rid"), posexplode(MinHashDedup.bandKeys($"sh")))
+            .select($"pos".as("band_idx"), $"col".as("band_key"), $"rid")
+            .write.mode("overwrite").parquet(s"${root(dir)}/p35_bands")
+        }
         indexed.add(dir)
       }
     }
@@ -75,31 +75,29 @@ object IncrementalDedup {
       .filter($"doc_id" % 2 === 1)
       .select($"doc_id", md5($"text").as("md5"),
         HashFunctions.token_shingle_hashes($"text", ShingleK).as("sh"))
-      .persist()
-    val cand = inc
-      .select($"doc_id", posexplode(MinHashDedup.bandKeys($"sh")))
-      .select($"doc_id", $"pos".as("band_idx"), $"col".as("band_key"))
-      .join(idxBands, Seq("band_idx", "band_key"))
-      .select($"doc_id", $"rid").distinct()
-    val near = cand
-      .join(inc.select($"doc_id", $"sh").hint("merge"), Seq("doc_id"))
-      .join(idx.select($"doc_id".as("rid"), $"sh".as("sh_r")).hint("merge"), Seq("rid"))
-      .withColumn("j", round(MinHashDedup.jaccardSorted($"sh", $"sh_r"), 6))
-      .filter($"j" >= Threshold)
-      .groupBy($"doc_id")
-      .agg(min($"rid").as("near_dup_of"), max($"j").as("best_jaccard"))
-    val exIdx = idx.select($"md5").distinct().withColumn("ex", lit(true))
-    val out = inc.select($"doc_id", $"md5")
-      .join(exIdx, Seq("md5"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select($"doc_id",
-        coalesce($"ex", lit(false)).as("exact_dup"),
-        $"near_dup_of", $"best_jaccard",
-        (coalesce($"ex", lit(false)) === false && $"near_dup_of".isNull).as("keep"))
-      .orderBy($"doc_id")
-    val res = out.localCheckpoint()
-    inc.unpersist(false)
-    res
+    Materialize.scoped(inc) {
+      val cand = inc
+        .select($"doc_id", posexplode(MinHashDedup.bandKeys($"sh")))
+        .select($"doc_id", $"pos".as("band_idx"), $"col".as("band_key"))
+        .join(idxBands, Seq("band_idx", "band_key"))
+        .select($"doc_id", $"rid").distinct()
+      val near = cand
+        .join(inc.select($"doc_id", $"sh").hint("merge"), Seq("doc_id"))
+        .join(idx.select($"doc_id".as("rid"), $"sh".as("sh_r")).hint("merge"), Seq("rid"))
+        .withColumn("j", round(MinHashDedup.jaccardSorted($"sh", $"sh_r"), 6))
+        .filter($"j" >= Threshold)
+        .groupBy($"doc_id")
+        .agg(min($"rid").as("near_dup_of"), max($"j").as("best_jaccard"))
+      val exIdx = idx.select($"md5").distinct().withColumn("ex", lit(true))
+      Materialize(inc.select($"doc_id", $"md5")
+        .join(exIdx, Seq("md5"), "left")
+        .join(near, Seq("doc_id"), "left")
+        .select($"doc_id",
+          coalesce($"ex", lit(false)).as("exact_dup"),
+          $"near_dup_of", $"best_jaccard",
+          (coalesce($"ex", lit(false)) === false && $"near_dup_of".isNull).as("keep"))
+        .orderBy($"doc_id"))
+    }
   }
 
   /** DuckDB oracle: md5 layer + exact cross-parity Jaccard layer (p26's

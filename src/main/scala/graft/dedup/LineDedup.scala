@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P47: cross-document duplicated-LINE removal — the C4 (Raffel et
   * al. 2020) / MassiveText (Rae et al. 2021 A1.2) line-level dedup
@@ -71,24 +71,23 @@ object LineDedup {
     * record per document: line counts before/removed plus the md5 of
     * the rewritten text (lines kept in original order, joined by \n). */
   def stripFrom(pages: DataFrame, minDocs: Int = MinDocs): DataFrame = {
-    val (out, lines) = pipeline(pages, minDocs)
-    val fin = out.localCheckpoint()       // per-doc rows only; frees the cache
-    lines.unpersist(false)
-    fin
+    // both the dictionary aggregation and the rewrite join consume the
+    // exploded stream — cache it or the plant+explode runs twice (the
+    // p23/p18 branch-off rule); the per-doc result outlives the cache
+    val lines = exploded(pages)
+    Materialize.scoped(lines)(Materialize(pipeline(lines, minDocs)))
   }
 
-  /** The un-checkpointed dataflow (returned with its cached exploded
-    * relation so callers control release) — exposed for the plan gate. */
-  private[graft] def pipeline(pages: DataFrame,
-                              minDocs: Int = MinDocs): (DataFrame, DataFrame) = {
+  /** The (doc_id, pos, line, lk) stream [[pipeline]] reads twice. */
+  private[graft] def exploded(pages: DataFrame): DataFrame = {
     import pages.sparkSession.implicits._
-    // both the dictionary aggregation and the rewrite join consume the
-    // exploded stream — persist it or the plant+explode runs twice
-    // (the p23/p18 branch-off rule)
-    val lines = pages
-      .select($"doc_id", posexplode($"ls").as(Seq("pos", "line")))
+    pages.select($"doc_id", posexplode($"ls").as(Seq("pos", "line")))
       .withColumn("lk", xxhash64($"line"))
-      .persist()
+  }
+
+  /** The un-checkpointed dataflow over the cached [[exploded]] lines. */
+  private[graft] def pipeline(lines: DataFrame, minDocs: Int = MinDocs): DataFrame = {
+    import lines.sparkSession.implicits._
     // duplicated-line dictionary: lines in >= minDocs DISTINCT docs.
     // Keyed on the 64-bit line hash so the 100 TB shuffle carries longs,
     // not raw lines (p23's trick); the oracle counts line strings — a
@@ -97,7 +96,7 @@ object LineDedup {
       .agg(count_distinct($"doc_id").as("n_docs_with"))
       .filter($"n_docs_with" >= minDocs)
       .select($"lk", lit(true).as("is_dup"))
-    val out = lines.join(dup, Seq("lk"), "left")
+    lines.join(dup, Seq("lk"), "left")
       .withColumn("is_dup", coalesce($"is_dup", lit(false)))
       .groupBy($"doc_id")
       .agg(
@@ -109,7 +108,6 @@ object LineDedup {
       .select($"doc_id", $"n_lines", $"n_removed",
         length($"clean").cast("long").as("clean_chars"),
         md5($"clean").as("clean_md5"))
-    (out, lines)
   }
 
   /** p47: plant the page, strip cross-document duplicated lines, one

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P61 (p33c): corpus-repeat detection by PREFIX DOUBLING — the
   * suffix-array construction step of Lee et al.'s ExactSubstr, closing
@@ -113,7 +113,7 @@ object SaRepeats {
     // spec/tool surface: frames must stay usable after return, so each
     // is materialized before the level files are dropped
     repLadderThen(chars, maxLevel, densifyAbove, pruneBelow)(
-      _.map { case (k, rep) => (k, rep.localCheckpoint(true)) })
+      _.map { case (k, rep) => (k, Materialize(rep)) })
 
   /** Run `consume` over the (level → lazy per-doc rep counts) ladder
     * BEFORE the temp level files are removed — the query path builds its
@@ -171,7 +171,7 @@ object SaRepeats {
       // level 1 is never stored, so its rep frame IS materialized (two
       // consumers — the prune decision and the final join — must not
       // re-run the corpus explode)
-      val rep1 = repCounts(cur, 1).localCheckpoint(true)
+      val rep1 = Materialize(repCounts(cur, 1))
       if (dupTotal(rep1, 1).toDouble / total < pruneBelow) pruned = true
       val out = scala.collection.mutable.ArrayBuffer[(Int, DataFrame)]((1, rep1))
       var k = 1
@@ -198,7 +198,6 @@ object SaRepeats {
               .filter($"r1".isNotNull && $"r2".isNotNull)
               .withColumn("cand", lit(true))
           }
-        var release: () => Unit = () => ()
         // Every branch below consumes `paired` EXACTLY ONCE (the lead
         // window over all positions is the round's dominant cost — a
         // branch-and-union shape would re-execute it per branch):
@@ -210,16 +209,18 @@ object SaRepeats {
         //   densify→ `paired` is materialized to parquet first, so the
         //            dist/join-back/ballast consumers re-read a column
         //            file instead of re-running the window.
-        val labeled: DataFrame =
+        def storeLevel(labeled: DataFrame): DataFrame =
+          store(if (pruned || 4 * k > maxLevel) labeled.filter($"dup") else labeled, 2 * k)
+        val next: DataFrame =
           if (4 * k > maxLevel) {
             // last level: labels never consumed again -- dup straight
             // off a count window over the raw pair (candidates only;
             // non-candidates are non-dup by the lemma and rep-counting
             // ignores them)
             val wP = Window.partitionBy($"r1", $"r2")
-            (if (pruned) paired else paired.filter($"cand"))
+            storeLevel((if (pruned) paired else paired.filter($"cand"))
               .withColumn("dup", count(lit(1)).over(wP) >= 2)
-              .select($"doc_id", $"pos", lit(null).cast("long").as("r"), $"dup")
+              .select($"doc_id", $"pos", lit(null).cast("long").as("r"), $"dup"))
           } else if (bound <= densifyAbove) {
             // packed: narrow relabel, dup via one count window (packed
             // labels never span the cand/non-cand boundary: equal
@@ -232,7 +233,7 @@ object SaRepeats {
               .withColumn("dup", $"cand" && count(lit(1)).over(wK) >= 2)
               .select($"doc_id", $"pos", when($"dup", $"key").as("r"), $"dup")
             bound = bound * bound
-            lab
+            storeLevel(lab)
           } else {
             // densify: contiguous labels over the distinct CANDIDATE
             // pair table (non-candidates need no label at all)
@@ -243,32 +244,28 @@ object SaRepeats {
               .groupBy($"r1", $"r2").agg(count(lit(1)).as("nr"))
               .repartitionByRange($"r1", $"r2")
               .withColumn("pid", spark_partition_id())
-              .persist() // pid must agree between the offsets job and the join
-            release = () => { dist.unpersist(false); () }
-            val cnts = dist.groupBy($"pid").agg(count(lit(1)).as("n"))
-              .orderBy($"pid").as[(Int, Long)].collect()
-            var acc = 0L
-            val offs = cnts.map { case (pid, n) => val o = (pid, acc); acc += n; o }
-            bound = math.max(acc, 1L)
-            val offDf = broadcast(offs.toSeq.toDF("pid", "off"))
-            val wPid = Window.partitionBy($"pid").orderBy($"r1", $"r2")
-            val ranks = dist.join(offDf, "pid")
-              .withColumn("r", $"off" + row_number().over(wPid) - 1)
-              .select($"r1", $"r2", $"r", ($"nr" >= 2).as("dup"))
-            val labCand = candPairs.join(ranks, Seq("r1", "r2"), "left")
-              .select($"doc_id", $"pos",
-                when($"dup", $"r").as("r"),
-                coalesce($"dup", lit(false)).as("dup"))
-            if (pruned) labCand
-            else labCand.unionByName(src.filter(!$"cand")
-              .select($"doc_id", $"pos",
-                lit(null).cast("long").as("r"), lit(false).as("dup")))
+            // cached: pid must agree between the offsets job and the join
+            Materialize.scoped(dist) {
+              val cnts = dist.groupBy($"pid").agg(count(lit(1)).as("n"))
+                .orderBy($"pid").as[(Int, Long)].collect()
+              var acc = 0L
+              val offs = cnts.map { case (pid, n) => val o = (pid, acc); acc += n; o }
+              bound = math.max(acc, 1L)
+              val offDf = broadcast(offs.toSeq.toDF("pid", "off"))
+              val wPid = Window.partitionBy($"pid").orderBy($"r1", $"r2")
+              val ranks = dist.join(offDf, "pid")
+                .withColumn("r", $"off" + row_number().over(wPid) - 1)
+                .select($"r1", $"r2", $"r", ($"nr" >= 2).as("dup"))
+              val labCand = candPairs.join(ranks, Seq("r1", "r2"), "left")
+                .select($"doc_id", $"pos",
+                  when($"dup", $"r").as("r"),
+                  coalesce($"dup", lit(false)).as("dup"))
+              storeLevel(if (pruned) labCand
+                else labCand.unionByName(src.filter(!$"cand")
+                  .select($"doc_id", $"pos",
+                    lit(null).cast("long").as("r"), lit(false).as("dup"))))
+            }
           }
-        val stored =
-          if (pruned || 4 * k > maxLevel) labeled.filter($"dup") // dup-only
-          else labeled
-        val next = store(stored, 2 * k)
-        release()
         // pair files are fully consumed within this round's store; level
         // files are RETAINED until `consume` runs (lazy rep counts read
         // them — ≤ position-sized columnar temp, the honest cost of a
@@ -310,10 +307,9 @@ object SaRepeats {
     repLadderThen(chars, MaxLevel) { levels =>
       val joined = levels.map(_._2)
         .foldLeft(perDoc)((acc, r) => acc.join(r, Seq("doc_id"), "left"))
-      levels.map(_._1).foldLeft(joined) { (df, k) =>
+      Materialize(levels.map(_._1).foldLeft(joined) { (df, k) =>
         df.withColumn(s"rep_$k", coalesce(col(s"rep_$k"), lit(0L)))
-      }.orderBy($"doc_id")
-        .localCheckpoint(true)
+      }.orderBy($"doc_id"))
     }
   }
 

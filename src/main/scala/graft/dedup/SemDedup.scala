@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.VectorOps
 
 /** §2.3 P37: SemDeDup — semantic deduplication via cluster blocking
@@ -99,11 +99,10 @@ object SemDedup {
   def decisions(df: DataFrame, idCol: String, vecCol: String,
                 centroids: Array[Array[Double]],
                 threshold: Double): DataFrame = {
-    // localCheckpoint: the assigned frame feeds BOTH join sides and the
+    // materialized: the assigned frame feeds BOTH join sides and the
     // final left join — without it the assignment ran three times
-    val v = assignCells(df, idCol, vecCol, centroids)
-      .withColumn("nrm", VectorOps.norm(col("vec")))
-      .localCheckpoint(true)
+    val v = Materialize(assignCells(df, idCol, vecCol, centroids)
+      .withColumn("nrm", VectorOps.norm(col("vec"))))
     val a = v.select(col("cluster"), col("vec_id").as("id_a"),
                      col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val b = v.select(col("cluster"), col("vec_id").as("id_b"),

@@ -2,8 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.HashFunctions
 
 /** §2.3 P3: SimHash near-duplicate detection.
@@ -75,30 +74,29 @@ object SimHashDedup {
     * buckets on a 500k-doc corpus where 16-bit bands hit 6k+). Pass a
     * finite `maxBucketSize` only when trading recall for a hard skew
     * bound. */
-  /** The (small) pair output is materialized via localCheckpoint and the
-    * internal signature cache released before this returns — cached
-    * blocks backing a returned lazy plan could only be freed by the
-    * session, which leaks memory across many calls in a long-lived
-    * session. */
+  /** The (small) pair output is materialized and the internal signature
+    * cache released before this returns — cached blocks backing a
+    * returned lazy plan could only be freed by the session, which leaks
+    * memory across many calls in a long-lived session. */
   def nearDuplicatePairs(df: DataFrame, idCol: String, textCol: String,
                          maxHamming: Int = 3, useMd5: Boolean = true,
                          maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    require(maxHamming < math.min(Bands, SubBands),
+      s"maxHamming $maxHamming breaks the double-pigeonhole guarantee")
     val sigs = df
       .select(col(idCol).as("id"),
               signature(split(col(textCol), "\\s+"), useMd5).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    require(maxHamming < math.min(Bands, SubBands),
-      s"maxHamming $maxHamming breaks the double-pigeonhole guarantee")
-    val banded = sigs
-      .select(col("id"), posexplode(array(compositeKeys(col("sig")): _*)))
-      .select(col("id"), col("pos").as("band_idx"), col("col").as("band_key"))
-    val pairs = MinHashDedup.pairsFromBands(banded, maxBucketSize)
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("hamming", hamming(col("sig_a"), col("sig_b")).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-    try pairs.localCheckpoint() finally sigs.unpersist(false)
+    Materialize.scoped(sigs) {
+      val banded = sigs
+        .select(col("id"), posexplode(array(compositeKeys(col("sig")): _*)))
+        .select(col("id"), col("pos").as("band_idx"), col("col").as("band_key"))
+      Materialize(MinHashDedup.pairsFromBands(banded, maxBucketSize)
+        .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+        .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+        .withColumn("hamming", hamming(col("sig_a"), col("sig_b")).cast("long"))
+        .filter(col("hamming") <= maxHamming)
+        .select("id_a", "id_b", "hamming"))
+    }
   }
 
   /** p3: simhash near-dup pairs over documents. Oracle-checked: DuckDB

@@ -2,8 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P26: bipartite LSH similarity JOIN — `left ⋈_{J(text)≥τ} right`
   * across two different tables, the production "fuzzy join" (match a new
@@ -41,35 +40,33 @@ object SimilarityJoin {
       .select(col(idCol).as("id"),
         graft.functions.HashFunctions.token_shingle_hashes(col(textCol), k).as("sh"))
       .repartition(np, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val lh = hashed(left)
     val rh = hashed(right)
-    def banded(h: DataFrame, side: Int): DataFrame = h
-      .select(col("id"), lit(side).as("side"),
-        posexplode(MinHashDedup.bandKeys(col("sh"))))
-      .select(col("id"), col("side"), col("pos").as("band_idx"), col("col").as("band_key"))
-    // ONE bucket aggregation over both sides; collect_list skips the
-    // nulls of the other side, so each bucket row holds the two member
-    // lists and the cross expansion happens inside it — no self-join of
-    // the banded rows, no same-side pairs ever materialize
-    val pairs = banded(lh, 0).union(banded(rh, 1))
-      .groupBy("band_idx", "band_key")
-      .agg(collect_list(when(col("side") === 0, col("id"))).as("lids"),
-           collect_list(when(col("side") === 1, col("id"))).as("rids"))
-      .filter(size(col("lids")).between(1, maxBucketSize) &&
-              size(col("rids")).between(1, maxBucketSize))
-      .select(explode(col("lids")).as("lid"), col("rids"))
-      .select(col("lid"), explode(col("rids")).as("rid"))
-      .dropDuplicates("lid", "rid")
-    val verified = pairs
-      .join(lh.select(col("id").as("lid"), col("sh").as("sh_l")).hint("merge"), Seq("lid"))
-      .join(rh.select(col("id").as("rid"), col("sh").as("sh_r")).hint("merge"), Seq("rid"))
-      .withColumn("jaccard", round(MinHashDedup.jaccardSorted(col("sh_l"), col("sh_r")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("lid", "rid", "jaccard")
-    val out = verified.localCheckpoint()
-    lh.unpersist(false); rh.unpersist(false)
-    out
+    Materialize.scoped(lh, rh) {
+      def banded(h: DataFrame, side: Int): DataFrame = h
+        .select(col("id"), lit(side).as("side"),
+          posexplode(MinHashDedup.bandKeys(col("sh"))))
+        .select(col("id"), col("side"), col("pos").as("band_idx"), col("col").as("band_key"))
+      // ONE bucket aggregation over both sides; collect_list skips the
+      // nulls of the other side, so each bucket row holds the two member
+      // lists and the cross expansion happens inside it — no self-join of
+      // the banded rows, no same-side pairs ever materialize
+      val pairs = banded(lh, 0).union(banded(rh, 1))
+        .groupBy("band_idx", "band_key")
+        .agg(collect_list(when(col("side") === 0, col("id"))).as("lids"),
+             collect_list(when(col("side") === 1, col("id"))).as("rids"))
+        .filter(size(col("lids")).between(1, maxBucketSize) &&
+                size(col("rids")).between(1, maxBucketSize))
+        .select(explode(col("lids")).as("lid"), col("rids"))
+        .select(col("lid"), explode(col("rids")).as("rid"))
+        .dropDuplicates("lid", "rid")
+      Materialize(pairs
+        .join(lh.select(col("id").as("lid"), col("sh").as("sh_l")).hint("merge"), Seq("lid"))
+        .join(rh.select(col("id").as("rid"), col("sh").as("sh_r")).hint("merge"), Seq("rid"))
+        .withColumn("jaccard", round(MinHashDedup.jaccardSorted(col("sh_l"), col("sh_r")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select("lid", "rid", "jaccard"))
+    }
   }
 
   /** p26: similarity-join the even-id documents against the odd-id

@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** m12: k-fold cross-validated grid search — the reference ecosystem's
   * standard hyper-parameter workflow (libsvm's grid search over C,
@@ -102,89 +102,87 @@ object CrossVal {
       .withColumn("__label01", when(col("y") > 0, 1.0).otherwise(0.0))
       .select(col("vec_id"), col("__fold"), col("__phi"), col("__features"), col("__label01"))
       .coalesce(1)
-      .persist()
-    val total = feats.count()
-    val foldSizes = feats.groupBy(col("__fold")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(foldSizes.keys.forall(f => f >= 0 && f < folds) &&
-            foldSizes.values.sum == total && foldSizes.size == folds,
-      s"fold partition broken: $foldSizes over $total rows")
-    // positives per fold: lets each cell be gated against ITS OWN train
-    // subset's majority (a skewed fold can push a train subset's majority
-    // below the pool's, and a constant predictor legitimately scores
-    // exactly the subset majority)
-    val posByFold = feats.filter(col("__label01") === 1.0)
-      .groupBy(col("__fold")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
-    val totalPos = posByFold.values.sum
-    def trainMajority(heldOutFold: Int): Double = {
-      val n = total - foldSizes(heldOutFold)
-      val pos = totalPos - posByFold(heldOutFold)
-      math.max(pos, n - pos).toDouble / n
-    }
-
-    val combos = for (reg <- grid; f <- 0 until folds) yield (reg, f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, combos.length))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val results =
-      try {
-        val futs = combos.map { case (reg, f) =>
-          scala.concurrent.Future {
-            val train = feats.filter(col("__fold") =!= f)
-            val valid = feats.filter(col("__fold") === f)
-            val (weights, intercept) =
-              KernelSvmTrainer.fitLinear(train, reg, maxIter, tol = 1e-4)
-            // score via the codegen dot product over the ARRAY column,
-            // not the fitted model's transform: it drags its
-            // trainingSummary → SparkSession into the transform task
-            // closure, which serializes only until anything touches the
-            // session's lazily-created (non-serializable)
-            // ObservationManager — u15's observe() in the same JVM made
-            // that a real crash. Margin semantics are identical
-            // (sequential accumulation, prediction = margin > 0), so
-            // the persisted-artifact replay is unaffected.
-            val margin = graft.functions.GraftFunctions.dot_product(
-              col("__phi"), typedlit(weights)) + intercept
-            val predCol = when(margin > lit(0.0), 1.0).otherwise(0.0)
-            def acc(df: DataFrame): (Long, Double) = {
-              val a = df.agg(
-                count(lit(1)).as("n"),
-                sum(when(predCol === col("__label01"), 1L).otherwise(0L)).as("ok"))
-                .head()
-              (a.getLong(0), a.getLong(1).toDouble / a.getLong(0))
-            }
-            val (nTrain, trainAcc) = acc(train)
-            val (nVal, valAcc) = acc(valid)
-            CellFit(reg, f, nTrain, nVal, trainAcc, valAcc, weights, intercept)
-          }
-        }
-        val rs = futs.map(x =>
-          scala.concurrent.Await.result(x, scala.concurrent.duration.Duration.Inf))
-        // persist the replayable artifacts BEFORE unpersisting the
-        // feature table: per-row φ features + per-cell weights, the
-        // complete inputs to every fold accuracy (m12c + its oracle)
-        val rootPath = ModelOracles.modelRoot(dir)
-        feats.select(col("vec_id"), col("__fold").as("fold"),
-            col("__label01").as("label01"), col("__phi").as("phi"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$rootPath/m12_cv/features")
-        rs.map(r => (r.reg, r.fold, r.weights.toSeq, r.intercept))
-          .toDF("reg_param", "fold", "weights", "intercept")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$rootPath/m12_cv/cells")
-        rs
-      } finally {
-        pool.shutdown()
-        feats.unpersist()
+    Materialize.scoped(feats) {
+      val total = feats.count()
+      val foldSizes = feats.groupBy(col("__fold")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      require(foldSizes.keys.forall(f => f >= 0 && f < folds) &&
+              foldSizes.values.sum == total && foldSizes.size == folds,
+        s"fold partition broken: $foldSizes over $total rows")
+      // positives per fold: lets each cell be gated against ITS OWN train
+      // subset's majority (a skewed fold can push a train subset's majority
+      // below the pool's, and a constant predictor legitimately scores
+      // exactly the subset majority)
+      val posByFold = feats.filter(col("__label01") === 1.0)
+        .groupBy(col("__fold")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+      val totalPos = posByFold.values.sum
+      def trainMajority(heldOutFold: Int): Double = {
+        val n = total - foldSizes(heldOutFold)
+        val pos = totalPos - posByFold(heldOutFold)
+        math.max(pos, n - pos).toDouble / n
       }
 
-    require(results.forall(_.nVal > 0), "empty validation fold")
-    require(results.exists(r => r.trainAcc >= trainMajority(r.fold)),
-      "no grid cell reaches even its own train-subset majority baseline in " +
-        s"TRAINING (train accuracies: ${results.map(_.trainAcc).mkString(", ")}) — CV loop broken")
-    results
+      val combos = for (reg <- grid; f <- 0 until folds) yield (reg, f)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(8, combos.length))
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(pool)
+      val results =
+        try {
+          val futs = combos.map { case (reg, f) =>
+            scala.concurrent.Future {
+              val train = feats.filter(col("__fold") =!= f)
+              val valid = feats.filter(col("__fold") === f)
+              val (weights, intercept) =
+                KernelSvmTrainer.fitLinear(train, reg, maxIter, tol = 1e-4)
+              // score via the codegen dot product over the ARRAY column,
+              // not the fitted model's transform: it drags its
+              // trainingSummary → SparkSession into the transform task
+              // closure, which serializes only until anything touches the
+              // session's lazily-created (non-serializable)
+              // ObservationManager — u15's observe() in the same JVM made
+              // that a real crash. Margin semantics are identical
+              // (sequential accumulation, prediction = margin > 0), so
+              // the persisted-artifact replay is unaffected.
+              val margin = graft.functions.GraftFunctions.dot_product(
+                col("__phi"), typedlit(weights)) + intercept
+              val predCol = when(margin > lit(0.0), 1.0).otherwise(0.0)
+              def acc(df: DataFrame): (Long, Double) = {
+                val a = df.agg(
+                  count(lit(1)).as("n"),
+                  sum(when(predCol === col("__label01"), 1L).otherwise(0L)).as("ok"))
+                  .head()
+                (a.getLong(0), a.getLong(1).toDouble / a.getLong(0))
+              }
+              val (nTrain, trainAcc) = acc(train)
+              val (nVal, valAcc) = acc(valid)
+              CellFit(reg, f, nTrain, nVal, trainAcc, valAcc, weights, intercept)
+            }
+          }
+          val rs = futs.map(x =>
+            scala.concurrent.Await.result(x, scala.concurrent.duration.Duration.Inf))
+          // persist the replayable artifacts BEFORE unpersisting the
+          // feature table: per-row φ features + per-cell weights, the
+          // complete inputs to every fold accuracy (m12c + its oracle)
+          val rootPath = ModelOracles.modelRoot(dir)
+          feats.select(col("vec_id"), col("__fold").as("fold"),
+              col("__label01").as("label01"), col("__phi").as("phi"))
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$rootPath/m12_cv/features")
+          rs.map(r => (r.reg, r.fold, r.weights.toSeq, r.intercept))
+            .toDF("reg_param", "fold", "weights", "intercept")
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$rootPath/m12_cv/cells")
+          rs
+        } finally pool.shutdown()
+
+      require(results.forall(_.nVal > 0), "empty validation fold")
+      require(results.exists(r => r.trainAcc >= trainMajority(r.fold)),
+        "no grid cell reaches even its own train-subset majority baseline in " +
+          s"TRAINING (train accuracies: ${results.map(_.trainAcc).mkString(", ")}) — CV loop broken")
+      results
+    }
   }
 
   /** m12c: the CV grid's fold accuracies REPLAYED from the persisted

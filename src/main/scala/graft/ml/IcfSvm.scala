@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftShim
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import graft.Materialize
 import graft.functions.VectorOps
 
 /** The complete reference pipeline (psvm svm_train.cc): greedy-pivot ICF
@@ -32,7 +33,8 @@ import graft.functions.VectorOps
   *     the SVs stay sharded where they are, the scored rows go to every
   *     shard, and the shards' partial decision sums are reduced;
   *   - both over it: a partitioned cross join, one distributed
-  *     aggregation keyed on the row id.
+  *     aggregation keyed on a row key of a materialized copy of the
+  *     scored rows.
   * The first two are mirror images (which side is broadcast, which side
   * streams) and share one per-term fold, [[IcfSvmModel.addTerm]], fed by
   * the [[Kernel]] panel form (one vector against a dim-major table of
@@ -109,8 +111,8 @@ final case class IcfSvmModel(
 
   /** Adds `decision` and `prediction` (±1) columns over `vecCol`, as
     * `withColumn` does (an existing column of that name is replaced in
-    * place). `idCol` keys only the cross join of the last layout, where it
-    * must be unique; the other two score each row on its own.
+    * place). Every layout scores each row on its own: `idCol` is not
+    * read, and need not be unique.
     *
     * Cost model: exact kernel-SVM scoring is O(n·nSV) kernel evaluations
     * (psvm pays the same); the layout sets what each one costs. In the
@@ -141,13 +143,15 @@ final case class IcfSvmModel(
     *     probe and the fold) when `predict` is called.
     *   - both over the threshold: a partitioned cross join, correct but
     *     quadratic-ish — for 100 TB corpora score with the Nyström model
-    *     (O(n·p) via [[KernelSvmModel.predict]]).
+    *     (O(n·p) via [[KernelSvmModel.predict]]). `df` is materialized
+    *     with a row key when `predict` is called; the key, not `idCol`,
+    *     groups the terms and joins the sums back.
     * All three sum the same terms and differ only in float summation
     * order (last ulps); [[predictQuantized]] removes that difference. A
     * row with a null vector scores `bias`; a vector of another length
     * than the SVs clamps to the shorter one. */
   def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    score(df, idCol, vecCol, exact = false)
+    score(df, vecCol, exact = false)
 
   /** [[predict]] with EXACT, replayable accumulation, on the same three
     * layouts: each term coef·k(sv, x) is floor-quantized to an integer
@@ -159,18 +163,16 @@ final case class IcfSvmModel(
     * fails rather than wrapping. Decisions differ from [[predict]] by at
     * most (nSV + 1)·1e-12 — quantization noise, not model error. */
   def predictQuantized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    score(df, idCol, vecCol, exact = true)
+    score(df, vecCol, exact = true)
 
   /** The layout dispatch [[predict]] documents; `exact` picks the
     * picounit `Long` accumulator of [[predictQuantized]]. */
-  private def score(df: DataFrame, idCol: String, vecCol: String,
-                    exact: Boolean): DataFrame =
+  private def score(df: DataFrame, vecCol: String, exact: Boolean): DataFrame =
     if (numSupportVectors <= broadcastThreshold) broadcastSvs(df, vecCol, exact)
     else {
       val probe = df.select(col("*"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
       val batch = probe.limit(math.min(broadcastThreshold, Int.MaxValue - 1L).toInt + 1).collect()
-      if (batch.length > broadcastThreshold)
-        withDecision(df, idCol, kernelSum(points(df, idCol, vecCol), exact))
+      if (batch.length > broadcastThreshold) crossJoined(df, vecCol, exact)
       else streamSvShards(df, batch, exact)
     }
 
@@ -280,32 +282,29 @@ final case class IcfSvmModel(
     withPrediction(local.withColumn("decision", col("__decision")).drop("__decision"))
   }
 
-  /** The scored side as (__pid, __px: array<double>). */
-  private def points(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
-
-  /** (__pid, __ksum) through a cross join of the points with the SVs:
-    * Σ coef·k(sv, x) as a double sum, or with `exact` as a `Long` sum of
-    * floor(coef·k(sv, x)·1e12) scaled back to a double. */
-  private def kernelSum(pts: DataFrame, exact: Boolean): DataFrame = {
+  /** The cross join layout: `df` materialized with a row key `__rid`
+    * (unique per row, whatever `idCol` holds), its vectors crossed with
+    * the SVs and Σ coef·k(sv, x) summed per key — a double sum, or with
+    * `exact` a `Long` sum of floor(coef·k(sv, x)·1e12) scaled back — and
+    * the sums joined back onto the keyed rows as `decision` = sum + bias.
+    * LEFT join + coalesce: a degenerate model with zero support vectors
+    * (e.g. single-class data) must still score every row (bias only),
+    * not drop them all through an inner join against an empty side. */
+  private def crossJoined(df: DataFrame, vecCol: String, exact: Boolean): DataFrame = {
+    val keyed = Materialize(df.withColumn("__rid", monotonically_increasing_id()))
     val term = col("sv_coef") * kernel(col("sv_x"), col("__px"))
     val ksum =
       if (exact) sum(floor(term * lit(IcfSvmModel.Picounits)).cast("long"))
         .cast("double") / lit(IcfSvmModel.Picounits)
       else sum(term)
-    pts.crossJoin(svs.select(col("sv_x"), col("sv_coef")))
+    val sums = keyed
+      .select(col("__rid").as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
+      .crossJoin(svs.select(col("sv_x"), col("sv_coef")))
       .groupBy(col("__pid")).agg(ksum.as("__ksum"))
-  }
-
-  /** The cross join's (__pid, __ksum) joined back onto `df` as `decision`
-    * = sum + bias.
-    * LEFT join + coalesce: a degenerate model with zero support vectors
-    * (e.g. single-class data) must still score every row (bias only),
-    * not drop them all through an inner join against an empty side. */
-  private def withDecision(df: DataFrame, idCol: String, scores: DataFrame): DataFrame =
-    withPrediction(df.join(scores, df(idCol) === scores("__pid"), "left")
+    withPrediction(keyed.join(sums, keyed("__rid") === sums("__pid"), "left")
       .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
-      .drop("__pid", "__ksum"))
+      .drop("__rid", "__pid", "__ksum"))
+  }
 
   private def withPrediction(scored: DataFrame): DataFrame =
     scored.withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField}
+import graft.Materialize
 
 /** §2.1 M7–M12: kernel SVM train / predict / persist / evaluate.
   *
@@ -204,10 +205,8 @@ object KernelSvmTrainer {
       .withColumn("__weight",
         when(col(labelCol) > 0, params.posWeight).otherwise(params.negWeight))
       .repartition(fitPartitions(df, n))
-      .persist()
-    try fitLinear(feats, params.regParam, params.maxIter, params.tol,
-      weighted = params.posWeight != 1.0 || params.negWeight != 1.0)
-    finally feats.unpersist()
+    Materialize.scoped(feats)(fitLinear(feats, params.regParam, params.maxIter, params.tol,
+      weighted = params.posWeight != 1.0 || params.negWeight != 1.0))
   }
 
   /** M8: fit a binary kernel SVM; labels in `labelCol` must be ±1. */
@@ -258,19 +257,18 @@ object KernelSvmTrainer {
       .withColumn("__features", array_to_vector(col("__phi")))
       .withColumn("__cls", col(labelCol).cast("double"))
       .repartition(parts)
-      .persist()
     // class list from the FULL input, not the fit sample — a class must
     // appear in the model's argmax surface even if the hash gate thinned
     // it (bounded collect: one value per class)
     val classes = df.select(col(labelCol).cast("double").as("__cls")).distinct()
       .collect().map(_.getDouble(0)).sorted
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, classes.length))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // try/finally: a failed per-class fit must still shut the (non-
-    // daemon) pool down and release the cache, or the JVM never exits
-    val models =
+    val models = Materialize.scoped(feats) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(parallelism, classes.length))
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(pool)
+      // try/finally: a failed per-class fit must still shut the (non-
+      // daemon) pool down, or the JVM never exits
       try {
         val fits = classes.map { k =>
           scala.concurrent.Future {
@@ -281,10 +279,8 @@ object KernelSvmTrainer {
         }
         fits.map(f =>
           scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      } finally {
-        pool.shutdown()
-        feats.unpersist()
-      }
+      } finally pool.shutdown()
+    }
     MulticlassKernelSvmModel(map, classes, models.map(_._1), models.map(_._2))
   }
 }

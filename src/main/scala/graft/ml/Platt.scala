@@ -1,7 +1,9 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Platt scaling: fit a sigmoid P(y=+1|f) = 1 / (1 + exp(A·f + B)) over
   * a classifier's decision values (Platt 1999, with the Newton/backtrack
@@ -53,20 +55,25 @@ object Platt {
     // rows/partition) instead of assuming small.
     val raw = base0.rdd.map(r => (r.getDouble(0), r.getDouble(1)))
     val nRaw = raw.getNumPartitions
-    val data = raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (nPosL, nNegL) = data.treeAggregate((0L, 0L))(
-      (acc, ft) => if (ft._2 > 0) (acc._1 + 1, acc._2) else (acc._1, acc._2 + 1),
-      (x, y) => (x._1 + y._1, x._2 + y._2))
-    val nPos = nPosL.toDouble
-    val nNeg = nNegL.toDouble
+    Materialize.scoped(raw) {
+      val (nPosL, nNegL) = raw.treeAggregate((0L, 0L))(
+        (acc, ft) => if (ft._2 > 0) (acc._1 + 1, acc._2) else (acc._1, acc._2 + 1),
+        (x, y) => (x._1 + y._1, x._2 + y._2))
+      val parts = Ipm.blockCount(nPosL + nNegL, nRaw)
+      if (parts < nRaw) {
+        // cached in turn: its first pass reads `raw`'s cache
+        val c = raw.coalesce(parts)
+        Materialize.scoped(c)(
+          newton(c, nPosL.toDouble, nNegL.toDouble, maxIter, minStep, sigma, tol))
+      } else newton(raw, nPosL.toDouble, nNegL.toDouble, maxIter, minStep, sigma, tol)
+    }
+  }
+
+  /** [[fit]]'s Newton loop over the cached (f, y) pairs. */
+  private def newton(df: RDD[(Double, Double)], nPos: Double, nNeg: Double,
+                     maxIter: Int, minStep: Double, sigma: Double, tol: Double): PlattModel = {
     val hi = (nPos + 1.0) / (nPos + 2.0)
     val lo = 1.0 / (nNeg + 2.0)
-    val parts = Ipm.blockCount(nPosL + nNegL, nRaw)
-    val df = if (parts < nRaw) {
-      val c = data.coalesce(parts).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count(); data.unpersist(false); c
-    } else data
 
     /** ONE aggregate job per evaluation point: the cross-entropy
       * objective AND the full gradient/Hessian at (a, b). The line
@@ -129,7 +136,6 @@ object Platt {
       }
       it += 1
     }
-    df.unpersist(false)
     PlattModel(a, b)
   }
 

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P58 (mm8): SCENE-CUT detection / keyframe extraction — the
   * standard first pass over video training data (dedup on keyframes,
@@ -34,7 +34,7 @@ import graft.Tables
   * Scale shape: generation and decode+SAD are ONE narrow mapPartitions
   * pass (zero shuffle — the mm1/mm4/mm5 shape; consecutive-frame state
   * is per-clip-local). The gate and output sort are harness artifacts;
-  * the result is localCheckpointed so gate + driver write don't re-run
+  * the result is materialized so gate + driver write don't re-run
   * the decode (the mm7 decade lesson).
   */
 object SceneCuts {
@@ -72,7 +72,8 @@ object SceneCuts {
     val media = sceneVideoFromDocuments(spark, dir)
       .select($"media_id", $"payload", $"planted_cut")
       .as[(Long, Array[Byte], Long)]
-    val rows = media.mapPartitions { it =>
+    // gate + driver write read this, not the decode
+    val rows = Materialize(media.mapPartitions { it =>
       it.flatMap { case (id, payload, plant) =>
         val (_, _, _, _, frames) = VideoOps.decodeAvi(payload)
         val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Long], Long)]()
@@ -89,8 +90,7 @@ object SceneCuts {
         }
         out
       }
-    }.toDF("media_id", "frame_idx", "sad_prev", "plant")
-      .localCheckpoint(true) // gate + driver write read this, not the decode
+    }.toDF("media_id", "frame_idx", "sad_prev", "plant"))
     val per = rows.groupBy($"media_id", $"plant")
       .agg(sum(when($"frame_idx" > 0, 1).otherwise(0)).as("n_cuts"),
            max(when($"frame_idx" > 0, $"frame_idx")).as("cut_at"))

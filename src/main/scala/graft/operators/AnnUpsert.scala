@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.functions.VectorOps
 import graft.sim.IvfAnn
 
@@ -61,10 +62,9 @@ object AnnUpsert {
   private[graft] def upsertVectors(spark: SparkSession, path: String,
                                        centroids: Array[Array[Double]],
                                        arrivals: DataFrame): Unit = {
-    val routed = arrivals
+    val routed = Materialize(arrivals // route once; the write must not re-plan it
       .withColumn("cell", IvfAnn.cellOf(col("v"), centroids))
-      .select(col("vec_id"), col("v"), col("src"), col("cell"))
-      .localCheckpoint(true) // route once; the write must not re-plan it
+      .select(col("vec_id"), col("v"), col("src"), col("cell")))
     val touched = routed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
     // Eagerly materialize the touched-cell rows BEFORE the overwrite:
@@ -77,9 +77,8 @@ object AnnUpsert {
     // overwrite never races its own input. Touched cells are a bounded
     // slice (arrival-sized, not index-sized), so this stays cheap at
     // any index size.
-    val existing = ScaleOps.prunedPostingsScan(spark, path, touched)
-      .select(col("vec_id"), col("v"), col("src"), col("cell"))
-      .localCheckpoint(true)
+    val existing = Materialize(ScaleOps.prunedPostingsScan(spark, path, touched)
+      .select(col("vec_id"), col("v"), col("src"), col("cell")))
     writePostings(existing.unionByName(routed), path, dynamic = true)
   }
 

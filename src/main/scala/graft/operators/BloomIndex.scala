@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** §2.4 U13: per-file BLOOM-FILTER point-lookup index — the Delta
   * bloom-index / Parquet-bloom shape on plain parquet: a table laid out
@@ -102,8 +103,8 @@ object BloomIndex {
   def u13BloomIndexQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.Scratch.collected("bloom") { tmp =>
       writeClustered(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
-      val manifest = buildManifest(spark, tmp, "o_custkey")
-        .localCheckpoint(true) // one row per file; built once per layout
+      // one row per file; built once per layout
+      val manifest = Materialize(buildManifest(spark, tmp, "o_custkey"))
       lookupScan(spark, tmp, manifest, "o_custkey", Seq(1L, 7L, 42L))
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),

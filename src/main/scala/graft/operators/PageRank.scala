@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.2 R41 (q43): graph centrality — fixed-iteration PageRank over the
   * customer–supplier interaction graph (who-trades-with-whom, from
@@ -54,7 +54,7 @@ object PageRank {
     *    Per iteration that is one columnar edge scan + one map-side
     *    broadcast join + one vertex-keyed aggregation, zero edge-sized
     *    shuffles and zero cache residency. (The r7 repartition+persist+
-    *    eager-localCheckpoint shape paid 29–45s at sf0.1 in cold JVMs —
+    *    eager-checkpoint shape paid 29–45s at sf0.1 in cold JVMs —
     *    cache build, per-iteration edge sorts and three checkpoint
     *    barriers — vs 3–5s for this shape, A/B'd.)
     *  - **shuffle (beyond 10M nodes)**: a billion-node graph's message
@@ -66,55 +66,40 @@ object PageRank {
             maxBroadcastNodes: Long = GraphBroadcast.MaxBroadcastNodes): DataFrame = {
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
-      .persist()
-    val n = deg.count()
-    if (n <= maxBroadcastNodes) {
-      // persist the edges WITHOUT repartitioning: the broadcast join
-      // needs no co-partitioning, but each iteration re-reading the
-      // edge parquet pays the columnar decode again — at the 100×
-      // decade (100M symmetrized edge rows) the rescan shape measured
-      // ~105s for 3 iterations vs ~30s with the edges resident. (The
-      // r7 lesson stands for the parts this still avoids: no
+    Materialize.scoped(deg) {
+      val n = deg.count()
+      // broadcast path: cache the edges WITHOUT repartitioning — the
+      // broadcast join needs no co-partitioning, but each iteration
+      // re-reading the edge parquet pays the columnar decode again (at
+      // the 100× decade, 100M symmetrized edge rows, the rescan shape
+      // measured ~105s for 3 iterations vs ~30s with the edges resident;
+      // the r7 lesson stands for the parts this still avoids: no
       // repartition shuffle, no per-iteration checkpoints — those, not
-      // the persist, were the cold-JVM cost at sf0.1.)
-      val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var pr = deg.select(col("node"), (lit(1.0) / lit(n)).as("pr"))
-      for (_ <- 1 to iters) {
-        // the quantized contribution is a per-NODE value (identical for
-        // all out-edges of a node): build it on the vertex table, then
-        // fan it out over the edges via broadcast
-        val msg = pr.join(deg, Seq("node"))
-          .select(col("node").as("src"),
-            floor((col("pr") / col("outdeg")) * lit(1e12)).cast("long").as("c"))
-        pr = e.join(broadcast(msg), Seq("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum("c").as("s"))
-          .select(col("node"),
-            (lit(0.15) / lit(n) +
-              lit(Damping) * (col("s").cast("double") / lit(1e12))).as("pr"))
-      }
-      // materialize the (vertex-sized) result so deg can be released;
-      // also keeps the caller's plan flat (iters-deep nesting stays here)
-      try pr.localCheckpoint(true)
-      finally { e.unpersist(false); deg.unpersist(false) }
-    } else {
-      val e = edges.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var pr = deg.select(col("node"), (lit(1.0) / lit(n)).as("pr"))
-      try {
+      // the cache, were the cold-JVM cost at sf0.1). Shuffle path:
+      // co-partition the edges by src once.
+      val broadcastMsgs = n <= maxBroadcastNodes
+      val e = if (broadcastMsgs) edges else edges.repartition(col("src"))
+      Materialize.scoped(e) {
+        var pr = deg.select(col("node"), (lit(1.0) / lit(n)).as("pr"))
         for (_ <- 1 to iters) {
+          // the quantized contribution is a per-NODE value (identical for
+          // all out-edges of a node): build it on the vertex table, then
+          // fan it out over the edges (via broadcast on that path)
           val msg = pr.join(deg, Seq("node"))
             .select(col("node").as("src"),
               floor((col("pr") / col("outdeg")) * lit(1e12)).cast("long").as("c"))
-          pr = e.join(msg, Seq("src"))
+          pr = e.join(if (broadcastMsgs) broadcast(msg) else msg, Seq("src"))
             .groupBy(col("dst").as("node"))
             .agg(sum("c").as("s"))
             .select(col("node"),
               (lit(0.15) / lit(n) +
                 lit(Damping) * (col("s").cast("double") / lit(1e12))).as("pr"))
         }
-        pr.localCheckpoint(true)
-      } finally { e.unpersist(false); deg.unpersist(false) }
+        // materialize the (vertex-sized) result so the caches can be
+        // released; also keeps the caller's plan flat (iters-deep
+        // nesting stays here)
+        Materialize(pr)
+      }
     }
   }
 

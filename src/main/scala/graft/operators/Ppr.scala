@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.2 R49 (q52): PERSONALIZED PageRank — random-walk-with-restart
   * centrality where teleports land on a SOURCE SET instead of uniformly
@@ -63,43 +63,39 @@ object Ppr {
                         maxBroadcastNodes: Long = GraphBroadcast.MaxBroadcastNodes): DataFrame = {
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
-      .persist()
-    val nNodes = deg.count()
     val srcSet = deg.select(col("node"))
       .join(sources.select(col("node")).distinct(), Seq("node"))
-      .persist()
-    val nSrc = srcSet.count()
-    require(nSrc > 0, "personalized PageRank needs at least one seed present in the graph")
-    // teleport vector: exact 1/|S| on seeds, 0 elsewhere — vertex-sized
-    val tele = deg
-      .join(srcSet.withColumn("hit", lit(1)), Seq("node"), "left")
-      .select(col("node"), col("outdeg"),
-        when(col("hit").isNotNull, lit(1.0) / lit(nSrc)).otherwise(lit(0.0)).as("t"))
-      .persist()
-    tele.count()
-    val useBroadcast = nNodes <= maxBroadcastNodes
-    val e =
-      if (useBroadcast) edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else edges.repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var pr = tele.select(col("node"), col("t").as("pr"))
-      for (_ <- 1 to iters) {
-        // quantized per-NODE contribution; zero-mass nodes drop out of
-        // the message table entirely (exact — they contribute 0)
-        val msg = pr.filter(col("pr") > 0.0)
-          .join(tele.select(col("node"), col("outdeg")), Seq("node"))
-          .select(col("node").as("src"),
-            floor((col("pr") / col("outdeg")) * lit(1e12)).cast("long").as("c"))
-        val agg = messageAgg(e, msg, useBroadcast)
-        pr = tele
-          .join(agg, Seq("node"), "left")
-          .select(col("node"),
-            (lit(0.15) * col("t") +
-              lit(Damping) * (coalesce(col("s"), lit(0L)).cast("double") / lit(1e12))).as("pr"))
+    Materialize.scoped(deg, srcSet) {
+      val nNodes = deg.count()
+      val nSrc = srcSet.count()
+      require(nSrc > 0, "personalized PageRank needs at least one seed present in the graph")
+      // teleport vector: exact 1/|S| on seeds, 0 elsewhere — vertex-sized
+      val tele = deg
+        .join(srcSet.withColumn("hit", lit(1)), Seq("node"), "left")
+        .select(col("node"), col("outdeg"),
+          when(col("hit").isNotNull, lit(1.0) / lit(nSrc)).otherwise(lit(0.0)).as("t"))
+      val useBroadcast = nNodes <= maxBroadcastNodes
+      val e = if (useBroadcast) edges else edges.repartition(col("src"))
+      Materialize.scoped(tele, e) {
+        tele.count()
+        var pr = tele.select(col("node"), col("t").as("pr"))
+        for (_ <- 1 to iters) {
+          // quantized per-NODE contribution; zero-mass nodes drop out of
+          // the message table entirely (exact — they contribute 0)
+          val msg = pr.filter(col("pr") > 0.0)
+            .join(tele.select(col("node"), col("outdeg")), Seq("node"))
+            .select(col("node").as("src"),
+              floor((col("pr") / col("outdeg")) * lit(1e12)).cast("long").as("c"))
+          val agg = messageAgg(e, msg, useBroadcast)
+          pr = tele
+            .join(agg, Seq("node"), "left")
+            .select(col("node"),
+              (lit(0.15) * col("t") +
+                lit(Damping) * (coalesce(col("s"), lit(0L)).cast("double") / lit(1e12))).as("pr"))
+        }
+        Materialize(pr)
       }
-      pr.localCheckpoint(true)
-    } finally { e.unpersist(false); tele.unpersist(false); srcSet.unpersist(false); deg.unpersist(false) }
+    }
   }
 
   /** q52: 3-iteration personalized PageRank over the shared symmetrized

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** §2.2 R42 (q44): k-hop reachability — SEMI-NAIVE transitive-closure
   * evaluation (the recursive-CTE / Datalog operator class) over the
@@ -43,18 +44,17 @@ object Reachability {
                 maxBroadcastNodes: Long = GraphBroadcast.MaxBroadcastNodes): DataFrame = {
     def hinted(df: DataFrame, rows: Long): DataFrame =
       if (rows <= maxBroadcastNodes) broadcast(df) else df
-    var reached  = seeds.select(col("node")).distinct()
-      .withColumn("hop", lit(0)).localCheckpoint(true)
+    var reached  = Materialize(seeds.select(col("node")).distinct()
+      .withColumn("hop", lit(0)))
     var nReached  = reached.count()
     var frontier  = reached.select("node")
     var nFrontier = nReached
     for (h <- 1 to hops if nFrontier > 0) {
-      val next = edges
+      val next = Materialize(edges // delta is vertex-sized; keeps lineage flat
         .join(hinted(frontier.withColumnRenamed("node", "src"), nFrontier), Seq("src"))
         .select(col("dst").as("node")).distinct()
         .join(hinted(reached.select("node"), nReached), Seq("node"), "left_anti")
-        .withColumn("hop", lit(h))
-        .localCheckpoint(true) // delta is vertex-sized; keeps lineage flat
+        .withColumn("hop", lit(h)))
       nFrontier = next.count()
       frontier = next.select("node")
       reached = reached.union(next)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.2 R28c (q29c): DETERMINISTIC SAMPLE QUANTILE SKETCH — the
   * bottom-k-by-hash companion to q21c's KMV: per group, keep the k rows
@@ -77,7 +77,7 @@ object SampleQuantiles {
       .orderBy($"h", $"l_orderkey", $"l_linenumber", $"cents")
     val w = Window.partitionBy($"l_returnflag")
       .orderBy($"h", $"l_orderkey", $"l_linenumber", $"cents")
-    val sampled = li
+    Materialize(li
       .withColumn("cents", round($"l_extendedprice" * 100).cast("long"))
       .withColumn("h",
         conv(substring(md5(concat_ws(":", $"l_orderkey", $"l_linenumber", $"cents")), 1, 8),
@@ -93,9 +93,7 @@ object SampleQuantiles {
         size($"vals").cast("long").as("n_sample"),
         interp($"vals", size($"vals"), 0.5).as("sp50_price"),
         interp($"vals", size($"vals"), 0.95).as("sp95_price"))
-      .orderBy($"l_returnflag")
-      .localCheckpoint(true)
-    sampled
+      .orderBy($"l_returnflag"))
   }
 
   /** q29c: per-return-flag hash-sample quantiles of extended price,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Cluster-scale join utilities — the patterns that keep 100 TB joins
   * from dying on shuffles or skew. Demonstrated + spec-tested at small
@@ -324,12 +325,11 @@ object ScaleOps {
     val centroids = IvfAnn.fitCentroids(e, "embedding", nlist)
     // materialize (cell, resid) before the m·k codeword expressions
     // reference them — same CollapseProject explosion guard as IvfPqAnn
-    val base = e.select(col("vec_id"),
+    val base = Materialize(e.select(col("vec_id"),
         VectorOps.toDoubleArray(col("embedding")).as("v"))
       .withColumn("cell", IvfAnn.cellOf(col("v"), centroids))
       .withColumn("resid", graft.functions.CodebookExpressions
-        .centroidResidual(col("v"), col("cell"), centroids))
-      .localCheckpoint()
+        .centroidResidual(col("v"), col("cell"), centroids)))
     val codebooks = PqAnn.fitCodebooks(base.select(col("resid")), "resid", m, kCode)
     base.select(col("vec_id"),
         PqAnn.encode(col("resid"), codebooks).as("codes"), col("cell"))

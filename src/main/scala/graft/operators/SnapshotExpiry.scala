@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** §2.4 U22 (u22): SNAPSHOT EXPIRY / VACUUM — the retention half of the
   * lakehouse lifecycle (Delta VACUUM + history squash; Iceberg
@@ -53,7 +54,7 @@ object SnapshotExpiry {
     require(keep >= floor,
       s"expire(keep=$keep): the floor is already v$floor — versions below it are " +
       "GC'd and the retention floor never moves backward")
-    val squashed = squash(spark, root, keep).localCheckpoint(true)
+    val squashed = Materialize(squash(spark, root, keep))
     // APPEND the squash into the keep partition (never overwrite): every
     // appended row is content-identical to the ≤keep state it
     // summarizes, so ANY prefix of the append — a crash mid-write —

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.2 R48 (q51): single-source shortest paths — iterated min-plus
   * relaxations (distributed Bellman–Ford with a semi-naive frontier)
@@ -57,8 +57,8 @@ object Sssp {
                     maxBroadcastNodes: Long = GraphBroadcast.MaxBroadcastNodes): DataFrame = {
     def hinted(df: DataFrame, rows: Long): DataFrame =
       if (rows <= maxBroadcastNodes) broadcast(df) else df
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
+    var dist = Materialize(seeds.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)))
     var nDist = dist.count()
     var frontier = dist
     var nFrontier = nDist
@@ -71,16 +71,14 @@ object Sssp {
         .groupBy(col("dst").as("node"))
         .agg(min(col("d") + col("w")).as("nd"))
       // keep the strict improvements — next round's frontier
-      val improved = cand
+      val improved = Materialize(cand // vertex-sized delta; keeps lineage flat
         .join(hinted(dist.withColumnRenamed("dist", "old"), nDist), Seq("node"), "left")
         .filter(col("old").isNull || col("nd") < col("old"))
-        .select(col("node"), col("nd").as("dist"))
-        .localCheckpoint(true) // vertex-sized delta; keeps lineage flat
+        .select(col("node"), col("nd").as("dist")))
       nFrontier = improved.count()
       if (nFrontier > 0) {
-        dist = dist.join(improved.select("node"), Seq("node"), "left_anti")
-          .union(improved)
-          .localCheckpoint(true)
+        dist = Materialize(dist.join(improved.select("node"), Seq("node"), "left_anti")
+          .union(improved))
         nDist = dist.count()
         frontier = improved
       }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** §2.4 U12: file-statistics data skipping — the lakehouse min/max
   * manifest (Delta/Iceberg data skipping, Snowflake pruning) on plain
@@ -67,8 +68,8 @@ object StatsSkipping {
   def u12StatsSkippingQuery(spark: SparkSession, dir: String): DataFrame = {
     graft.Scratch.collected("skip") { tmp =>
       ScaleOps.writeRangeLayout(graft.Tables.orders(spark, dir), "o_orderdate", 8, tmp)
-      val manifest = buildManifest(spark, tmp, "o_orderdate")
-        .localCheckpoint(true) // manifest is file-count-sized; built once
+      // manifest is file-count-sized; built once
+      val manifest = Materialize(buildManifest(spark, tmp, "o_orderdate"))
       val lo = lit("1995-01-01").cast("timestamp")
       val hi = lit("1995-07-01").cast("timestamp")
       skippingScan(spark, tmp, manifest, "o_orderdate", lo, hi)

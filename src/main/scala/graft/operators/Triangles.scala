@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** §2.2 R43 (q46): distributed TRIANGLE COUNTING + local clustering
   * coefficients — the standard graph-structure statistic (community
@@ -35,9 +36,8 @@ object Triangles {
   def triangleCounts(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
     val e = edges.select($"a".cast("long").as("a"), $"b".cast("long").as("b"))
-    val deg = e.select($"a".as("id")).union(e.select($"b".as("id")))
-      .groupBy($"id").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = Materialize(e.select($"a".as("id")).union(e.select($"b".as("id")))
+      .groupBy($"id").agg(count(lit(1)).as("deg")))
     // orient each edge toward the (degree, id)-larger endpoint; carry
     // the destination's order key so the wedge join can order its two
     // legs without another degree lookup
@@ -48,30 +48,28 @@ object Triangles {
         when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"), struct($"a".as("u"), $"b".as("v"), $"db".as("dv")))
           .otherwise(struct($"b".as("u"), $"a".as("v"), $"da".as("dv"))).as("o"))
       .select($"o.u".as("u"), $"o.v".as("v"), $"o.dv".as("dv"))
-      .persist()
-    // wedges at each pivot u: out-neighbor pairs (v, w), v before w in
-    // orientation order — the join is equi-keyed on u; the order filter
-    // halves the pairs and fixes each wedge's canonical form
-    val wedges = oe.select($"u", $"v".as("x"), $"dv".as("dx"))
-      .join(oe.select($"u", $"v".as("y"), $"dv".as("dy")), Seq("u"))
-      .filter($"dx" < $"dy" || ($"dx" === $"dy" && $"x" < $"y"))
-    // close the wedge: (x, y) must itself be an oriented edge — x is
-    // orientation-before y, so only (x → y) can exist
-    val tri = wedges
-      .join(oe.select($"u".as("x"), $"v".as("y")), Seq("x", "y"))
-      .select($"u", $"x", $"y")
-    val perNode = tri
-      .select(explode(array($"u", $"x", $"y")).as("id"))
-      .groupBy($"id").agg(count(lit(1)).as("n_triangles"))
-    val out = deg.join(perNode, Seq("id"), "left")
-      .select($"id", $"deg",
-        coalesce($"n_triangles", lit(0L)).as("n_triangles"))
-      .withColumn("cc_micro",
-        when($"deg" < 2, lit(0L)).otherwise(
-          expr("(2000000 * n_triangles) div (deg * (deg - 1))")))
-      .localCheckpoint(true)
-    oe.unpersist(false)
-    out
+    Materialize.scoped(oe) {
+      // wedges at each pivot u: out-neighbor pairs (v, w), v before w in
+      // orientation order — the join is equi-keyed on u; the order filter
+      // halves the pairs and fixes each wedge's canonical form
+      val wedges = oe.select($"u", $"v".as("x"), $"dv".as("dx"))
+        .join(oe.select($"u", $"v".as("y"), $"dv".as("dy")), Seq("u"))
+        .filter($"dx" < $"dy" || ($"dx" === $"dy" && $"x" < $"y"))
+      // close the wedge: (x, y) must itself be an oriented edge — x is
+      // orientation-before y, so only (x → y) can exist
+      val tri = wedges
+        .join(oe.select($"u".as("x"), $"v".as("y")), Seq("x", "y"))
+        .select($"u", $"x", $"y")
+      val perNode = tri
+        .select(explode(array($"u", $"x", $"y")).as("id"))
+        .groupBy($"id").agg(count(lit(1)).as("n_triangles"))
+      Materialize(deg.join(perNode, Seq("id"), "left")
+        .select($"id", $"deg",
+          coalesce($"n_triangles", lit(0L)).as("n_triangles"))
+        .withColumn("cc_micro",
+          when($"deg" < 2, lit(0L)).otherwise(
+            expr("(2000000 * n_triangles) div (deg * (deg - 1))"))))
+    }
   }
 
   /** q46: triangle census of the near-dup similarity graph — reads the

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Corpus-cleaning operators for the training-data pipeline: PII
   * redaction, intra-document repetition gating (Gopher-style quality
@@ -117,20 +117,18 @@ object CleaningOps {
       .select(col("source"), col("doc_id"),
         explode(graft.functions.HashFunctions.token_shingle_hashes(lower(col("text")), n))
           .as("gk"))
-      .persist()
-    val boiler = gk.groupBy(col("source"), col("gk"))
-      .agg(count(lit(1)).as("n_docs_with"))
-      .filter(col("n_docs_with") >= minDocs)
-      .select(col("source"), col("gk"), lit(1L).as("is_boiler"))
-    val out = gk.join(boiler, Seq("source", "gk"), "left")
-      .groupBy(col("source"), col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-           sum(coalesce(col("is_boiler"), lit(0L))).as("n_boiler"))
-      .withColumn("boiler_frac", round(col("n_boiler") / col("n_grams"), 6))
-      .orderBy(col("source"), col("doc_id"))
-      .localCheckpoint()                   // per-doc rows only; frees the cache
-    gk.unpersist(false)
-    out
+    Materialize.scoped(gk) {
+      val boiler = gk.groupBy(col("source"), col("gk"))
+        .agg(count(lit(1)).as("n_docs_with"))
+        .filter(col("n_docs_with") >= minDocs)
+        .select(col("source"), col("gk"), lit(1L).as("is_boiler"))
+      Materialize(gk.join(boiler, Seq("source", "gk"), "left") // per-doc rows only
+        .groupBy(col("source"), col("doc_id"))
+        .agg(count(lit(1)).as("n_grams"),
+             sum(coalesce(col("is_boiler"), lit(0L))).as("n_boiler"))
+        .withColumn("boiler_frac", round(col("n_boiler") / col("n_grams"), 6))
+        .orderBy(col("source"), col("doc_id")))
+    }
   }
 
   /** p24: deterministic stratified sampling — per source, keep the k

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P52: domain MIXTURE PLANNING — the step before p20's mixture
   * resampling: given per-source token inventories and target domain
@@ -39,7 +39,7 @@ object MixturePlanner {
     // a broadcast of one row against a tiny table
     val tot = inv.agg(sum($"n_tokens").as("total_tokens"),
                       sum($"weight").as("w_total"))
-    val out = inv.crossJoin(broadcast(tot))
+    Materialize(inv.crossJoin(broadcast(tot))
       .withColumn("budget", expr("total_tokens div 2"))
       // overflow guard folded INTO rate_micro (a separate unselected
       // check column would be pruned by Catalyst): 10⁶·budget·weight is
@@ -61,9 +61,7 @@ object MixturePlanner {
       .withColumn("expected_tokens", expr("(n_tokens * rate_micro) div 1000000"))
       .select($"source", $"n_docs", $"n_tokens", $"weight",
         $"rate_micro", $"expected_tokens")
-      .orderBy($"source")
-      .localCheckpoint()
-    out
+      .orderBy($"source"))
   }
 
   val oracleSql: String =

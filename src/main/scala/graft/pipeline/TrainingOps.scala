@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Training-data pipeline operators beyond the dedup/quality pack:
   * deterministic corpus splitting, sequence packing, benchmark
@@ -81,21 +81,19 @@ object TrainingOps {
       .select(col("doc_id"), explode(
         graft.functions.HashFunctions.token_shingle_hashes(lower(col("text")), n))
         .as("gh"))
-      // both join sides branch off this relation — cache it or the
-      // shingle+hash pipeline executes twice
-      .persist()
-    val bench = grams.filter(col("doc_id") % 37 === 0)
-      .select(col("doc_id").as("bench_doc"), col("gh"))
-    val train = grams.filter(col("doc_id") % 37 =!= 0)
-      .select(col("doc_id").as("train_doc"), col("gh"))
-    val out = train.join(bench, "gh")
-      .groupBy(col("train_doc"), col("bench_doc"))
-      .agg(count(lit(1)).as("n_shared"))   // (doc, gh) deduped above
-      .filter(col("n_shared") >= minShared)
-      .orderBy(col("train_doc"), col("bench_doc"))
-      .localCheckpoint()                   // tiny pair list; frees the cache
-    grams.unpersist(false)
-    out
+    // both join sides branch off this relation — cache it or the
+    // shingle+hash pipeline executes twice
+    Materialize.scoped(grams) {
+      val bench = grams.filter(col("doc_id") % 37 === 0)
+        .select(col("doc_id").as("bench_doc"), col("gh"))
+      val train = grams.filter(col("doc_id") % 37 =!= 0)
+        .select(col("doc_id").as("train_doc"), col("gh"))
+      Materialize(train.join(bench, "gh")       // tiny pair list
+        .groupBy(col("train_doc"), col("bench_doc"))
+        .agg(count(lit(1)).as("n_shared"))   // (doc, gh) deduped above
+        .filter(col("n_shared") >= minShared)
+        .orderBy(col("train_doc"), col("bench_doc")))
+    }
   }
 
   /** p53: DECONTAMINATED SPLIT — the composition production pipelines

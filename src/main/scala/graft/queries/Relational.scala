@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.2 relational query pack (SURVEY.md R1–R20).
   *
@@ -594,20 +594,18 @@ object Relational {
     val ud = Tables.events(spark, dir)
       .select($"user_id", to_date($"ts").as("d"))
       .distinct()
-      .persist()
-    val dau = ud.groupBy($"d".as("day"))
-      .agg(count_distinct($"user_id").as("dau"))
-    val wau = ud
-      .select($"user_id", explode(sequence($"d", date_add($"d", 6))).as("day"))
-      .join(ud.select($"d".as("day")).distinct(), Seq("day"), "left_semi")
-      .groupBy($"day")
-      .agg(count_distinct($"user_id").as("wau7"))
-    val out = dau.join(wau, Seq("day"))
-      .select($"day".cast("string").as("day"), $"dau", $"wau7")
-      .orderBy($"day")
-      .localCheckpoint()
-    ud.unpersist(false)
-    out
+    Materialize.scoped(ud) {
+      val dau = ud.groupBy($"d".as("day"))
+        .agg(count_distinct($"user_id").as("dau"))
+      val wau = ud
+        .select($"user_id", explode(sequence($"d", date_add($"d", 6))).as("day"))
+        .join(ud.select($"d".as("day")).distinct(), Seq("day"), "left_semi")
+        .groupBy($"day")
+        .agg(count_distinct($"user_id").as("wau7"))
+      Materialize(dau.join(wau, Seq("day"))
+        .select($"day".cast("string").as("day"), $"dau", $"wau7")
+        .orderBy($"day"))
+    }
   }
 
   /** R46 (q49): VARIANT semi-structured values — Spark 4's binary

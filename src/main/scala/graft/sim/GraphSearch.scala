@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.{GraftFunctions, VectorOps}
 
 /** §2.3 P67b (p67b): SERVING the NN-descent k-NN graph — greedy
@@ -85,7 +85,6 @@ object GraphSearch {
     val und = g.select($"node_id".as("src"), $"neighbor_id".as("nbr"))
       .unionByName(g.select($"neighbor_id".as("src"), $"node_id".as("nbr")))
       .distinct()
-      .persist()
     // rank-space multi-seed entry set: nodes with
     // rk = md5("seed:"+qid+":"+j) mod n, j = 1..S (see header: one
     // seed strands the walk in a disconnected component)
@@ -100,16 +99,18 @@ object GraphSearch {
       cand.join(vecs, "node").join(broadcast(qv), "qid")
         .withColumn("cos", GraftFunctions.cosine_sim($"qv", $"nv"))
         .select($"qid", $"node", $"cos")
-    var visited = scored(entry).localCheckpoint(true)
     val wBeam = Window.partitionBy($"qid").orderBy($"cos".desc, $"node")
-    for (_ <- 1 to hops) {
-      val beamDf = visited
-        .withColumn("brn", row_number().over(wBeam)).filter($"brn" <= beam)
-        .select($"qid", $"node")
-      visited = visited.unionByName(scored(hopFrontier(und, beamDf, visited)))
-        .localCheckpoint(true)
+    // visited is checkpointed each hop; the edge cache lives for the walk
+    val visited = Materialize.scoped(und) {
+      var visited = Materialize(scored(entry))
+      for (_ <- 1 to hops) {
+        val beamDf = visited
+          .withColumn("brn", row_number().over(wBeam)).filter($"brn" <= beam)
+          .select($"qid", $"node")
+        visited = Materialize(visited.unionByName(scored(hopFrontier(und, beamDf, visited))))
+      }
+      visited
     }
-    und.unpersist(false) // visited is checkpointed; the edge cache can go
     visited.filter($"node" =!= $"qid")
       .withColumn("rank", row_number().over(wBeam).cast("long"))
       .filter($"rank" <= topK)
@@ -146,7 +147,7 @@ object GraphSearch {
         pmod(md5Bucket(concat(lit("p67b:"), $"vec_id".cast("string"))), lit(every)) === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qvec"))
     val g = spark.read.parquet(graphPath(spark, dir))
-    val out = search(e, g, panel).localCheckpoint(true)
+    val out = Materialize(search(e, g, panel))
     // lift gate (p67's discipline): graph-walk recall must beat 10x the
     // random-pick baseline; absolute recall is pinned on the clustered
     // fixture in the spec, where the graph has real structure to walk

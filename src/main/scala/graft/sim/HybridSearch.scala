@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P48: HYBRID retrieval — sparse (BM25) + dense (embedding
   * cosine) legs fused by Reciprocal Rank Fusion (Cormack, Clarke &
@@ -43,23 +43,24 @@ object HybridSearch {
 
   /** p48: RRF-fused top-10 related documents per seed doc. */
   def query(spark: SparkSession, dir: String): DataFrame = {
-    val (out, tf) = fused(spark, dir)
-    val fin = out.localCheckpoint()
-    tf.unpersist(false)
-    fin
+    // one postings build feeds seed-term derivation AND scoring
+    val tf = postings(spark, dir)
+    Materialize.scoped(tf)(Materialize(fused(spark, dir, tf)))
   }
 
-  /** The un-checkpointed dataflow (with its cached postings relation,
-    * released by the caller) — exposed for the plan gate. */
-  private[graft] def fused(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** The (doc_id, term, tf) postings [[fused]] reads twice. */
+  private[graft] def postings(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+      .select($"doc_id", explode(split($"text", "\\s+")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+  }
+
+  /** The un-checkpointed dataflow over the cached [[postings]]. */
+  private[graft] def fused(spark: SparkSession, dir: String, tf: DataFrame): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
-    // one postings build feeds seed-term derivation AND scoring
-    val tf = docs
-      .select($"doc_id", explode(split($"text", "\\s+")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist()
     val n = docs.count()
     // seed query terms: top-2 by (tf desc, term) per seed — 2 terms so
     // the per-doc BM25 sum stays a commutative 2-add (exact, p36's rule)
@@ -78,7 +79,7 @@ object HybridSearch {
         $"neighbor_id".as("doc_id"), $"rank".as("rank_dense"))
     val wFuse = Window.partitionBy($"query_id")
       .orderBy($"rrf_micro".desc, $"doc_id")
-    val out = sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
+    sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf_micro",
         coalesce(expr(s"1000000 div ($RrfK0 + rank_sparse)"), lit(0L)) +
         coalesce(expr(s"1000000 div ($RrfK0 + rank_dense)"), lit(0L)))
@@ -87,7 +88,6 @@ object HybridSearch {
       .select($"query_id", $"doc_id", $"fused_rank", $"rrf_micro",
         $"rank_sparse", $"rank_dense")
       .orderBy($"query_id", $"fused_rank")
-    (out, tf)
   }
 
   /** DuckDB replay: identical postings, seed-term derivation, BM25 leg

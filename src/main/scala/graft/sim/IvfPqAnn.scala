@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.{GraftFunctions, VectorOps}
 
 /** §2.3 P7d: IVFADC — product quantization composed over IVF cells
@@ -63,12 +63,11 @@ object IvfPqAnn {
     * encodes/queries against the materialized layout. */
   private def residualBase(corpus: DataFrame, idCol: String, vecCol: String,
                            centroids: Array[Array[Double]]): DataFrame =
-    corpus
+    Materialize(corpus
       .select(col(idCol).as("neighbor_id"),
               VectorOps.toDoubleArray(col(vecCol)).as("nvec"))
       .withColumn("cell", IvfAnn.cellOf(col("nvec"), centroids))
-      .withColumn("resid", residualCol(col("nvec"), col("cell"), centroids))
-      .localCheckpoint()
+      .withColumn("resid", residualCol(col("nvec"), col("cell"), centroids)))
 
   /** The probe/score pipeline with pre-fit index parts (shared by
     * [[annTopK]] and the persisted-index p7d replay path). */
@@ -84,13 +83,12 @@ object IvfPqAnn {
       else math.min(1000, math.max(100, (cBase.count() / 50L).toInt))
     val c = cBase.withColumn("codes", PqAnn.encode(col("resid"), codebooks))
 
-    val q = queries
+    val q = Materialize(queries          // tiny: #queries × nprobe rows
       .select(col(idCol).as("query_id"),
               VectorOps.toDoubleArray(col(vecCol)).as("qvec"))
       .withColumn("cell", explode(IvfAnn.probeCellsCol(
         IvfAnn.distances(col("qvec"), centroids), nlist, nprobe)))
-      .withColumn("qresid", residualCol(col("qvec"), col("cell"), centroids))
-      .localCheckpoint()          // tiny: #queries × nprobe rows
+      .withColumn("qresid", residualCol(col("qvec"), col("cell"), centroids)))
       .withColumn("tab", PqAnn.adcTable(col("qresid"), codebooks))
 
     // each corpus vector lives in exactly ONE cell, so the cell join

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.GraftFunctions
 
 /** §2.3 P67 (p67): GRAPH ANN by NN-DESCENT (Dong et al., WWW 2011) —
@@ -102,19 +102,19 @@ object NnDescent {
     val spark = corpus.sparkSession
     import spark.implicits._
     val vecs = corpus.select(col(idCol).cast("long").as("id"),
-      graft.functions.VectorOps.toDoubleArray(col(vecCol)).as("v")).persist()
-    val n = vecs.count()
+      graft.functions.VectorOps.toDoubleArray(col(vecCol)).as("v"))
+    Materialize.scoped(vecs) {
+      val n = vecs.count()
     // global id-order rank via distributed zipWithIndex (range-sorted
     // partitions + per-partition offsets — never a one-partition
     // window); the oracle's twin is row_number() OVER (ORDER BY id) - 1
-    val ranked = vecs.select($"id").orderBy($"id").as[Long].rdd
-      .zipWithIndex().map { case (id, r) => (id, r) }.toDF("id", "rk")
-    var g = topK(initEdges(vecs.select($"id").join(ranked, "id"), n, k), vecs, k)
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds)
-      g = refine(g, vecs, k).localCheckpoint(true)
-    vecs.unpersist()
-    g
+      val ranked = vecs.select($"id").orderBy($"id").as[Long].rdd
+        .zipWithIndex().map { case (id, r) => (id, r) }.toDF("id", "rk")
+      var g = Materialize(topK(initEdges(vecs.select($"id").join(ranked, "id"), n, k), vecs, k))
+      for (_ <- 1 to rounds)
+        g = Materialize(refine(g, vecs, k))
+      g
+    }
   }
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** §2.5 S13 (s13): STREAMING CHANGE-FEED CONSUMER — the other half of
   * U20: a downstream materialized view maintained INCREMENTALLY from
@@ -56,10 +56,6 @@ object ChangeFeedStream {
     val agg = spark.read.parquet(s"$root/agg_$v")
     val net = lwwKeepTombstones(
       batch.select(col("k"), col("price"), col("status"), col("deleted"), col("version")), "k")
-    // materialized EAGERLY (batch-sized): both the aggregate-delta write
-    // and the state write below consume `joined` — unpersisted, the
-    // batch's LWW window + state join ran TWICE per micro-batch
-    // (measured via QueryProfile: the two writes dominate the batch)
     val joined = net.join(
       state.select(col("k"), col("price").as("pre_price"),
         col("status").as("pre_status"), col("deleted").as("pre_deleted"),
@@ -67,40 +63,43 @@ object ChangeFeedStream {
       Seq("k"), "left")
       // stale guard: a batch whose net version lost to state is a no-op
       .filter(col("pre_version").isNull || col("version") > col("pre_version"))
-      .localCheckpoint(true)
-    val preLive = col("pre_version").isNotNull && !col("pre_deleted")
-    // per-status deltas in INTEGER CENTS: −pre where a live pre-image
-    // leaves a status, +post where a live post-image enters one. Cents
-    // make the delta algebra EXACT — double money sums drift ~1e-12
-    // relative at decade row counts, enough to flip a 2dp rounding and
-    // break batching-invariance (the q27 decimal-money lesson).
-    def cents(c: org.apache.spark.sql.Column) =
-      round(c * lit(100.0), 0).cast("long")
-    val minus = joined.filter(preLive)
-      .select(col("pre_status").as("status"), lit(-1L).as("dn"),
-        (-cents(col("pre_price"))).as("dp"))
-    val plus = joined.filter(!col("deleted"))
-      .select(col("status"), lit(1L).as("dn"), cents(col("price")).as("dp"))
-    val aggDelta = minus.unionByName(plus)
-      .groupBy(col("status")).agg(sum(col("dn")).as("dn"), sum(col("dp")).as("dp"))
-    val newAgg = agg.join(aggDelta, Seq("status"), "full")
-      .select(col("status"),
-        (coalesce(col("n_keys"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n_keys"),
-        (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dp"), lit(0L))).as("sum_cents"))
-      .filter(col("n_keys") > 0)
-    val newState = state.join(joined.select(col("k")), Seq("k"), "left_anti")
-      .unionByName(joined.select(col("k"), col("price"), col("status"),
-        col("deleted"), col("version")))
-    // aggregate first, STATE last: latestStateVersion counts only
-    // _SUCCESS-marked state dirs, so agg_N exists whenever state_N is
-    // visible; a crash between the writes replays the batch, which the
-    // stale guard above makes a no-op re-merge (s5's idempotency)
-    newAgg.write.mode("overwrite").parquet(s"$root/agg_${v + 1}")
-    newState.write.mode("overwrite").parquet(s"$root/state_${v + 1}")
-    // both writes are done: drop the checkpointed blocks now instead of
-    // leaving each micro-batch's join cached until a GC collects it
-    joined.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false))
+    // cached and computed EAGERLY (batch-sized): both the aggregate-delta
+    // write and the state write below consume `joined` — uncached, the
+    // batch's LWW window + state join ran TWICE per micro-batch
+    // (measured via QueryProfile: the two writes dominate the batch);
+    // released once both writes are done
+    Materialize.scoped(joined) {
+      joined.count()
+      val preLive = col("pre_version").isNotNull && !col("pre_deleted")
+      // per-status deltas in INTEGER CENTS: −pre where a live pre-image
+      // leaves a status, +post where a live post-image enters one. Cents
+      // make the delta algebra EXACT — double money sums drift ~1e-12
+      // relative at decade row counts, enough to flip a 2dp rounding and
+      // break batching-invariance (the q27 decimal-money lesson).
+      def cents(c: org.apache.spark.sql.Column) =
+        round(c * lit(100.0), 0).cast("long")
+      val minus = joined.filter(preLive)
+        .select(col("pre_status").as("status"), lit(-1L).as("dn"),
+          (-cents(col("pre_price"))).as("dp"))
+      val plus = joined.filter(!col("deleted"))
+        .select(col("status"), lit(1L).as("dn"), cents(col("price")).as("dp"))
+      val aggDelta = minus.unionByName(plus)
+        .groupBy(col("status")).agg(sum(col("dn")).as("dn"), sum(col("dp")).as("dp"))
+      val newAgg = agg.join(aggDelta, Seq("status"), "full")
+        .select(col("status"),
+          (coalesce(col("n_keys"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n_keys"),
+          (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("dp"), lit(0L))).as("sum_cents"))
+        .filter(col("n_keys") > 0)
+      val newState = state.join(joined.select(col("k")), Seq("k"), "left_anti")
+        .unionByName(joined.select(col("k"), col("price"), col("status"),
+          col("deleted"), col("version")))
+      // aggregate first, STATE last: latestStateVersion counts only
+      // _SUCCESS-marked state dirs, so agg_N exists whenever state_N is
+      // visible; a crash between the writes replays the batch, which the
+      // stale guard above makes a no-op re-merge (s5's idempotency)
+      newAgg.write.mode("overwrite").parquet(s"$root/agg_${v + 1}")
+      newState.write.mode("overwrite").parquet(s"$root/state_${v + 1}")
+    }
   }
 
   /** s13: write U11's three commits, stream them one file per trigger,

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P39: BPE merge learning (Sennrich et al. 2016, "Neural Machine
   * Translation of Rare Words with Subword Units") — the tokenizer-
@@ -141,8 +141,7 @@ object BpeVocab {
   def learnSym(symCounts: DataFrame, merges: Int = Merges): DataFrame = {
     val spark = symCounts.sparkSession
     import spark.implicits._
-    var words = symCounts.persist()
-    words.count()
+    var words = Materialize(symCounts)
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     for (step <- 1 to merges) {
       val top = words
@@ -157,16 +156,12 @@ object BpeVocab {
         .head()
       val (a, b, c) = top
       out += ((step, a, b, a + b, c))
-      // localCheckpoint truncates lineage: each step's plan is ONE merge
-      // expression over a LogicalRDD, so analysis cost and plan depth
-      // stay constant in the step count (persist alone keeps the full
-      // k-deep logical chain alive through analysis at every step)
-      val next = words.select(applyMerge($"sym", a, b).as("sym"), $"cnt")
-        .localCheckpoint(true)
-      words.unpersist(false)
-      words = next
+      // the cut lineage keeps each step's plan ONE merge expression
+      // over a LogicalRDD, so analysis cost and plan depth stay constant
+      // in the step count (a cache alone keeps the full k-deep logical
+      // chain alive through analysis at every step)
+      words = Materialize(words.select(applyMerge($"sym", a, b).as("sym"), $"cnt"))
     }
-    words.unpersist(false)
     out.toSeq.toDF("step", "left", "right", "merged", "pair_count")
   }
 

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P39d (p39d): BYTE-LEVEL BPE pretokenization + encode — the
   * GPT-2-class tokenizer front end (Radford et al. 2019; what GPT-2/
@@ -117,14 +117,16 @@ object ByteBpe {
     val spark = docs.sparkSession
     import spark.implicits._
     val pt = pretokens(docs)
-    val ptCnt = pt.groupBy($"pretok").agg(count(lit(1)).as("cnt")).persist()
-    ptCnt.count()
+    val ptCnt = pt.groupBy($"pretok").agg(count(lit(1)).as("cnt"))
     // learn over byte symbols (distinct-pretoken table, corpus-weighted)
-    val symCnt = ptCnt.as[(String, Long)].mapPartitions { it =>
-      it.map { case (p, n) => (byteSyms(p).toSeq, n) }
-    }.toDF("sym", "cnt")
-    val merges = BpeVocab.learnSym(symCnt, BpeVocab.Merges)
-      .orderBy($"step").select($"left", $"right").as[(String, String)].collect()
+    val merges = Materialize.scoped(ptCnt) {
+      ptCnt.count()
+      val symCnt = ptCnt.as[(String, Long)].mapPartitions { it =>
+        it.map { case (p, n) => (byteSyms(p).toSeq, n) }
+      }.toDF("sym", "cnt")
+      BpeVocab.learnSym(symCnt, BpeVocab.Merges)
+        .orderBy($"step").select($"left", $"right").as[(String, String)].collect()
+    }
     // encode + decode each distinct pretoken in one typed pass
     val bc = spark.sparkContext.broadcast(merges)
     val encoded = ptCnt.select($"pretok").as[String].mapPartitions { it =>
@@ -135,7 +137,7 @@ object ByteBpe {
       }
     }.toDF("pretok", "n_sym", "ts", "decoded")
     val norm = docs.select($"doc_id", md5(normText($"text")).as("src_md5"))
-    val out = pt.join(encoded, "pretok")
+    pt.join(encoded, "pretok")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_pretokens"),
            sum($"n_sym").cast("long").as("n_tokens"),
@@ -150,8 +152,6 @@ object ByteBpe {
       .select($"doc_id", $"n_pretokens", $"n_tokens", $"tokens_md5",
               $"decoded_md5", $"roundtrip_ok")
       .orderBy($"doc_id")
-    ptCnt.unpersist(false)
-    out
   }
 
   // ---------------------------------------------------------------

@@ -67,7 +67,7 @@ object KnTrigramLm {
     * chain once per invocation because nothing was persisted, while
     * inside ONE action ReuseExchange computes the t3 shuffle once for
     * all five consumers (guide §1.2: don't run the dominant pass twice;
-    * measured: an eager localCheckpoint of t3 was WORSE — distinct
+    * measured: an eager checkpoint of t3 was WORSE — distinct
     * trigrams are corpus-sized on natural text, and row-serialized
     * blocks lose to the reused columnar exchange). The division by the
     * joined `tot` column is the same double division as the old

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P54: LEARNED language ID — the fastText-style lang-id stage
   * (hashed char-n-gram features → one-vs-rest logistic → argmax), the
@@ -161,8 +161,7 @@ object LangClassifier {
       // core-proportional coalesce makes each step one small job.
       .coalesce(math.max(8, org.apache.spark.sql.SparkSession.active
         .sparkContext.defaultParallelism / 4))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(grouped) {
       val n = grouped.count().toDouble
       val langs = labels.select($"lang").distinct()
         .as[String].collect().sorted.toSeq
@@ -171,7 +170,7 @@ object LangClassifier {
         val (w, bias, _) = QualityClassifier.fitGrouped(bin, n, iters, D, ridge / n)
         (l, w, bias)
       }
-    } finally grouped.unpersist(false)
+    }
   }
 
   /** Per-(doc, lang) quantized margins from a weight table
@@ -223,17 +222,18 @@ object LangClassifier {
     fittedDirs.synchronized {
       if (!fittedDirs.contains(dir)) {
         import spark.implicits._
-        val feat = featureTable(langized(Tables.documents(spark, dir))).persist()
+        val feat = featureTable(langized(Tables.documents(spark, dir)))
         val trainLbl = Tables.documents(spark, dir)
-          .filter(isTrain($"doc_id")).select($"doc_id", $"lang").persist()
-        val train = feat.join(trainLbl.select($"doc_id"), Seq("doc_id"), "left_semi")
-        val fitted = fitOvr(train, trainLbl)
-        feat.write.mode("overwrite").parquet(s"${root(dir)}/p54_features")
-        fitted.flatMap { case (l, w, b) =>
-          w.toSeq.zipWithIndex.map { case (v, i) => (l, i, v) } :+ ((l, -1, b))
-        }.toDF("lang", "bucket", "w").coalesce(1)
-          .write.mode("overwrite").parquet(s"${root(dir)}/p54_weights")
-        feat.unpersist(false); trainLbl.unpersist(false)
+          .filter(isTrain($"doc_id")).select($"doc_id", $"lang")
+        Materialize.scoped(feat, trainLbl) {
+          val train = feat.join(trainLbl.select($"doc_id"), Seq("doc_id"), "left_semi")
+          val fitted = fitOvr(train, trainLbl)
+          feat.write.mode("overwrite").parquet(s"${root(dir)}/p54_features")
+          fitted.flatMap { case (l, w, b) =>
+            w.toSeq.zipWithIndex.map { case (v, i) => (l, i, v) } :+ ((l, -1, b))
+          }.toDF("lang", "bucket", "w").coalesce(1)
+            .write.mode("overwrite").parquet(s"${root(dir)}/p54_weights")
+        }
         fittedDirs.add(dir)
       }
     }
@@ -252,16 +252,15 @@ object LangClassifier {
     ensureFitted(spark, dir)
     val feat = spark.read.parquet(s"${root(dir)}/p54_features")
     val weights = spark.read.parquet(s"${root(dir)}/p54_weights")
-    val out = predict(marginTable(feat, weights))
+    // accuracy gate on the held-out 95%: one lang-keyed aggregate
+    // (|langs| rows on the driver); the scored frame is materialized so
+    // the gate doesn't re-run the scoring join when the caller reads
+    // the result
+    val out = Materialize(predict(marginTable(feat, weights))
       .join(Tables.documents(spark, dir).select($"doc_id", $"lang"), Seq("doc_id"))
       .select($"doc_id", $"lang", $"lang_pred", $"pred_margin_micros",
         isTrain($"doc_id").as("is_train"))
-      .orderBy($"doc_id")
-      .persist()
-    // accuracy gate on the held-out 95%: one lang-keyed aggregate
-    // (|langs| rows on the driver); the scored frame is persisted so
-    // the gate doesn't re-run the scoring join when the caller
-    // materializes the result
+      .orderBy($"doc_id"))
     val byLang = out.filter(!$"is_train")
       .groupBy($"lang")
       .agg(count(lit(1)).as("n"),

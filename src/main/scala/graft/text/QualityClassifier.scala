@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P34: LEARNED quality classifier — the fastText-style stage real
   * curation pipelines run after heuristic scoring: distill a quality
@@ -171,10 +171,8 @@ object QualityClassifier {
       // core-proportional coalesce makes each step one small job.
       .coalesce(math.max(8, org.apache.spark.sql.SparkSession.active
         .sparkContext.defaultParallelism / 4))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = grouped.count().toDouble
-    try fitGrouped(grouped, n, iters, numFeatures, ridge)
-    finally grouped.unpersist(false)
+    Materialize.scoped(grouped)(
+      fitGrouped(grouped, grouped.count().toDouble, iters, numFeatures, ridge))
   }
 
   /** The Newton loop itself over a pre-grouped per-doc sparse RDD
@@ -281,21 +279,21 @@ object QualityClassifier {
     fittedDirs.synchronized {
       if (!fittedDirs.contains(dir)) {
         import spark.implicits._
-        val feat = featureTable(Tables.documents(spark, dir)).persist()
-        // persist: the label table is a full quality recomputation and
+        val feat = featureTable(Tables.documents(spark, dir))
+        // cached: the label table is a full quality recomputation and
         // the train split is referenced by the join AND twice inside
-        // fit (bias-feature union + label join) — unpersisted it re-ran
+        // fit (bias-feature union + label join) — uncached it re-ran
         // the p9 pipeline three times per fit
-        val trainLbl = labelTable(spark, dir)
-          .filter($"doc_id" % 4 =!= 0).persist()
-        val train = feat.join(trainLbl, Seq("doc_id"))
-        val (w, bias, _) = fit(train.select($"doc_id", $"bucket", $"cnt"),
-                               trainLbl)
-        feat.write.mode("overwrite").parquet(s"${root(dir)}/p34_features")
-        val wRows = w.toSeq.zipWithIndex.map { case (v, i) => (i, v) } :+ (-1, bias)
-        wRows.toDF("bucket", "w").coalesce(1)
-          .write.mode("overwrite").parquet(s"${root(dir)}/p34_weights")
-        feat.unpersist(false); trainLbl.unpersist(false)
+        val trainLbl = labelTable(spark, dir).filter($"doc_id" % 4 =!= 0)
+        Materialize.scoped(feat, trainLbl) {
+          val train = feat.join(trainLbl, Seq("doc_id"))
+          val (w, bias, _) = fit(train.select($"doc_id", $"bucket", $"cnt"),
+                                 trainLbl)
+          feat.write.mode("overwrite").parquet(s"${root(dir)}/p34_features")
+          val wRows = w.toSeq.zipWithIndex.map { case (v, i) => (i, v) } :+ (-1, bias)
+          wRows.toDF("bucket", "w").coalesce(1)
+            .write.mode("overwrite").parquet(s"${root(dir)}/p34_weights")
+        }
         fittedDirs.add(dir)
       }
     }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P59 (p59): UNIGRAM-LM (SentencePiece) tokenizer — the other
   * production tokenizer family next to BPE (Kudo 2018, "Subword
@@ -170,13 +170,12 @@ object UnigramLm {
       it.flatMap { case (chunk, ccnt) => viterbi(chunk, c).iterator.map(p => (p, ccnt)) }
     }.toDF("piece", "ccnt")
       .groupBy(col("piece")).agg(sum(col("ccnt")).as("usage"))
-    val kept = usage.join(singles, Seq("piece"), "full")
-      .select(col("piece"), (coalesce(col("usage"), lit(0L)) + lit(1L)).as("u"))
-      // materialize the vocab-sized usage table ONCE: costTable's total
-      // (head) and the cost collect are two actions, and without this
-      // cut each re-ran the full Viterbi E-step over the corpus — the
-      // round's dominant pass, paid twice for the same integers
-      .localCheckpoint(true)
+    // materialize the vocab-sized usage table ONCE: costTable's total
+    // (head) and the cost collect are two actions, and without this
+    // cut each re-ran the full Viterbi E-step over the corpus — the
+    // round's dominant pass, paid twice for the same integers
+    val kept = Materialize(usage.join(singles, Seq("piece"), "full")
+      .select(col("piece"), (coalesce(col("usage"), lit(0L)) + lit(1L)).as("u")))
     costTable(kept)
   }
 
@@ -198,34 +197,36 @@ object UnigramLm {
     val docWords = docs
       .select($"doc_id", posexplode(split($"text", "\\s+")).as(Seq("pos", "word")))
       .filter(length($"word") > 0)
-    val wordCnt = docWords.groupBy($"word").agg(count(lit(1)).as("wcnt")).persist()
+    val wordCnt = docWords.groupBy($"word").agg(count(lit(1)).as("wcnt"))
     val wordChunks = wordCnt.select($"word").as[String].mapPartitions { it =>
       it.flatMap(w => chunksOf(w).iterator.zipWithIndex.map { case (c, k) => (w, k, c) })
     }.toDF("word", "k", "chunk")
     val chunkCnt = wordChunks.join(wordCnt, "word")
-      .groupBy($"chunk").agg(sum($"wcnt").as("ccnt")).persist()
-    chunkCnt.count()
-    val seedCnt = chunkCnt.as[(String, Long)].mapPartitions { it =>
-      it.flatMap { case (c, n) => seedPieces(c).iterator.map(p => (p, n)) }
-    }.toDF("piece", "ccnt")
-      .groupBy($"piece").agg(sum($"ccnt").as("cnt"))
-    // capped seed: ALL singles (coverage) + top-SeedCapMulti multi by
-    // (cnt DESC, piece ASC) — TakeOrdered, so the driver-side cost map
-    // is cap-bounded at any corpus size
-    val vocab0 = seedCnt
-      .filter(length($"piece") === 1)
-      .unionByName(seedCnt
-        .filter(length($"piece") > 1 && $"cnt" >= MinSeedCount)
-        .orderBy($"cnt".desc, $"piece")
-        .limit(seedCap))
-      .persist()
-    val singles = vocab0.filter(length($"piece") === 1).select($"piece").persist()
-    singles.count()
-    var costMap = collectCost(costTable(vocab0.select($"piece", $"cnt".as("u"))))
-    for (_ <- 1 to EmRounds)
-      costMap = collectCost(emRound(chunkCnt, costMap, singles))
-    wordCnt.unpersist(false); chunkCnt.unpersist(false)
-    vocab0.unpersist(false); singles.unpersist(false)
+      .groupBy($"chunk").agg(sum($"wcnt").as("ccnt"))
+    val costMap = Materialize.scoped(wordCnt, chunkCnt) {
+      chunkCnt.count()
+      val seedCnt = chunkCnt.as[(String, Long)].mapPartitions { it =>
+        it.flatMap { case (c, n) => seedPieces(c).iterator.map(p => (p, n)) }
+      }.toDF("piece", "ccnt")
+        .groupBy($"piece").agg(sum($"ccnt").as("cnt"))
+      // capped seed: ALL singles (coverage) + top-SeedCapMulti multi by
+      // (cnt DESC, piece ASC) — TakeOrdered, so the driver-side cost map
+      // is cap-bounded at any corpus size
+      val vocab0 = seedCnt
+        .filter(length($"piece") === 1)
+        .unionByName(seedCnt
+          .filter(length($"piece") > 1 && $"cnt" >= MinSeedCount)
+          .orderBy($"cnt".desc, $"piece")
+          .limit(seedCap))
+      val singles = vocab0.filter(length($"piece") === 1).select($"piece")
+      Materialize.scoped(vocab0, singles) {
+        singles.count()
+        var costMap = collectCost(costTable(vocab0.select($"piece", $"cnt".as("u"))))
+        for (_ <- 1 to EmRounds)
+          costMap = collectCost(emRound(chunkCnt, costMap, singles))
+        costMap
+      }
+    }
     (docWords, wordCnt, costMap)
   }
 

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** §2.3 P59b (p59b): unigram-LM VOCABULARY PRUNING to a target size —
   * the defining loop of SentencePiece training (Kudo 2018 §3.2) that
@@ -127,46 +127,47 @@ object UnigramPrune {
     val docWords = docs
       .select($"doc_id", posexplode(split($"text", "\\s+")).as(Seq("pos", "word")))
       .filter(length($"word") > 0)
-    val wordCnt = docWords.groupBy($"word").agg(count(lit(1)).as("wcnt")).persist()
+    val wordCnt = docWords.groupBy($"word").agg(count(lit(1)).as("wcnt"))
     val wordChunks = wordCnt.select($"word").as[String].mapPartitions { it =>
       it.flatMap(w => UnigramLm.chunksOf(w).iterator.map(c => (w, c)))
     }.toDF("word", "chunk")
     val chunkCnt = wordChunks.join(wordCnt, "word")
-      .groupBy($"chunk").agg(sum($"wcnt").as("ccnt")).persist()
-    chunkCnt.count()
+      .groupBy($"chunk").agg(sum($"wcnt").as("ccnt"))
     val seedCnt = chunkCnt.as[(String, Long)].mapPartitions { it =>
       it.flatMap { case (c, n) => UnigramLm.seedPieces(c).iterator.map(p => (p, n)) }
     }.toDF("piece", "ccnt")
       .groupBy($"piece").agg(sum($"ccnt").as("cnt"))
-      .persist()
-    // capped seed: all singles + top-SeedCapMulti multi by (cnt, piece)
-    // — a TakeOrdered over the distributed seed table, driver sees only
-    // the cap
-    val singles = seedCnt.filter(length($"piece") === 1)
-      .select($"piece", $"cnt").as[(String, Long)].collect()
-    val cappedMulti = seedCnt
-      .filter(length($"piece") > 1 && $"cnt" >= UnigramLm.MinSeedCount)
-      .orderBy($"cnt".desc, $"piece")
-      .limit(seedCap)
-      .select($"piece", $"cnt").as[(String, Long)].collect()
-    var cost = costOf(spark, (singles ++ cappedMulti).toSeq.sortBy(_._1))
-    for (_ <- 1 to rounds) {
-      val usage = usageOf(chunkCnt, cost)
-      // M-step over the FULL current vocabulary, add-one smoothed
-      val u = cost.keysIterator.map(p => p -> (usage.getOrElse(p, 0L) + 1L)).toSeq.sortBy(_._1)
-      val pcP = costOf(spark, u)
-      val multi = pcP.keysIterator.filter(cpLen(_) > 1).toSeq
-      val over = pcP.size - target
-      val d = if (over <= 0) 0 else math.min(over, math.max(1, multi.size / 4))
-      val dropped = multi
-        // + 0.0 canonicalizes -0.0 (usage 0 × negative delta): Java's
-        // Double.compare orders -0.0 < 0.0, SQL does not
-        .map(p => (usage.getOrElse(p, 0L).toDouble * (altCost(p, pcP) - pcP(p)).toDouble + 0.0, p))
-        .sortBy { case (l, pp) => (l, pp) }
-        .take(d).map(_._2).toSet
-      cost = pcP.filter { case (p, _) => !dropped.contains(p) }
+    val cost = Materialize.scoped(wordCnt, chunkCnt, seedCnt) {
+      chunkCnt.count()
+      // capped seed: all singles + top-SeedCapMulti multi by (cnt, piece)
+      // — a TakeOrdered over the distributed seed table, driver sees only
+      // the cap
+      val singles = seedCnt.filter(length($"piece") === 1)
+        .select($"piece", $"cnt").as[(String, Long)].collect()
+      val cappedMulti = seedCnt
+        .filter(length($"piece") > 1 && $"cnt" >= UnigramLm.MinSeedCount)
+        .orderBy($"cnt".desc, $"piece")
+        .limit(seedCap)
+        .select($"piece", $"cnt").as[(String, Long)].collect()
+      var cost = costOf(spark, (singles ++ cappedMulti).toSeq.sortBy(_._1))
+      for (_ <- 1 to rounds) {
+        val usage = usageOf(chunkCnt, cost)
+        // M-step over the FULL current vocabulary, add-one smoothed
+        val u = cost.keysIterator.map(p => p -> (usage.getOrElse(p, 0L) + 1L)).toSeq.sortBy(_._1)
+        val pcP = costOf(spark, u)
+        val multi = pcP.keysIterator.filter(cpLen(_) > 1).toSeq
+        val over = pcP.size - target
+        val d = if (over <= 0) 0 else math.min(over, math.max(1, multi.size / 4))
+        val dropped = multi
+          // + 0.0 canonicalizes -0.0 (usage 0 × negative delta): Java's
+          // Double.compare orders -0.0 < 0.0, SQL does not
+          .map(p => (usage.getOrElse(p, 0L).toDouble * (altCost(p, pcP) - pcP(p)).toDouble + 0.0, p))
+          .sortBy { case (l, pp) => (l, pp) }
+          .take(d).map(_._2).toSet
+        cost = pcP.filter { case (p, _) => !dropped.contains(p) }
+      }
+      cost
     }
-    seedCnt.unpersist(false); wordCnt.unpersist(false); chunkCnt.unpersist(false)
     (docWords, cost)
   }
 

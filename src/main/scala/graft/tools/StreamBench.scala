@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Materialize
 
 /** Sustained-rate streaming benchmark (SURVEY §7 "streaming rate/latency,
   * later rounds"): drives the S1 windowed-aggregation and S2
@@ -86,11 +87,10 @@ object StreamBench {
       val nlist = 16; val nprobe = 3
       val corpus = graft.Tables.embeddings(spark, dir)
       val centroids = IvfAnn.fitCentroids(corpus, "embedding", nlist)
-      val posted = corpus
+      val posted = Materialize(corpus  // the static index, materialized once
         .select(col("vec_id").as("neighbor_id"),
                 VectorOps.toDoubleArray(col("embedding")).as("nvec"))
-        .withColumn("cell", IvfAnn.cellOf(col("nvec"), centroids))
-        .localCheckpoint()  // the static index, materialized once
+        .withColumn("cell", IvfAnn.cellOf(col("nvec"), centroids)))
       val dim = 64
       val qvec = array((0 until dim).map(i =>
         pmod(xxhash64(col("value"), lit(i)), lit(1000)).cast("double") / 500.0 - 1.0): _*)
@@ -174,19 +174,17 @@ object StreamBench {
       val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
       IncrementalDedup.ensureIndexed(spark, dir)
       val root = graft.ml.ModelOracles.modelRoot(dir)
-      val idx = spark.read.parquet(s"$root/p35_index")
-        .select(col("doc_id").as("rid"), col("sh").as("sh_r"), col("md5").as("md5_r"))
-        .localCheckpoint()
-      val idxBands = spark.read.parquet(s"$root/p35_bands").localCheckpoint()
+      val idx = Materialize(spark.read.parquet(s"$root/p35_index")
+        .select(col("doc_id").as("rid"), col("sh").as("sh_r"), col("md5").as("md5_r")))
+      val idxBands = Materialize(spark.read.parquet(s"$root/p35_bands"))
       // incoming docs REUSE real corpus texts (a 256-row static side
       // joined on value%256, lightly suffixed so md5 differs) — synthetic
       // vocab text shares no shingles with the index and would measure an
       // always-empty probe; real texts exercise band hits + Jaccard
       // verification at realistic occupancy
-      val sample = graft.Tables.documents(spark, dir)
+      val sample = Materialize(graft.Tables.documents(spark, dir)
         .orderBy(col("doc_id")).limit(256)
-        .select((col("doc_id") % 256).as("k"), col("text").as("base"))
-        .localCheckpoint()
+        .select((col("doc_id") % 256).as("k"), col("text").as("base")))
       val docRate = math.max(rowsPerSec / 20, 1000)
       val docs = spark.readStream.format("rate")
         .option("rowsPerSecond", docRate)

@@ -227,7 +227,8 @@ class IcfSvmSpec extends SparkSpec with JobCounting {
     val a = Array(1.5, -1.5)
     val b = Array(-0.5, 2.0)
     val dups = Seq((7L, a), (7L, b), (8L, a)).toDF("id", "vec")
-    for (m <- Seq(model, model.copy(svs = model.svs.repartition(3)))) {
+    for (m <- Seq(model, model.copy(svs = model.svs.repartition(3)),
+                  model.copy(broadcastThreshold = 2))) {
       val got = m.predict(dups, "id", "vec").select($"vec", $"decision")
         .as[(Seq[Double], Double)].collect()
       assert(got.length === 3)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 
-class PprSpec extends SparkSpec {
+class PprSpec extends SparkSpec with graft.CacheLeaks {
 
   // path graph a—b—c—d—e—f (symmetrized): seeding at `a` must rank the
   // seed's side above the far end, and mass stays 1
@@ -50,6 +50,17 @@ class PprSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Ppr.personalizedRanks(pathEdges, seed("zz"))
     }
+  }
+
+  test("ppr: a seed set absent from the graph fails fast and leaves no cache behind") {
+    import spark.implicits._
+    // a graph of its own: a plan another test left cached would be
+    // "already cached" here and hide a leak
+    val edges = Seq(("u", "v"), ("v", "u"), ("v", "w"), ("w", "v")).toDF("src", "dst")
+    val (out, left, plans) = leftCached(Ppr.personalizedRanks(edges, seed("zz")))
+    assert(out.failed.get.isInstanceOf[IllegalArgumentException], out)
+    assert(left.isEmpty, s"left cached RDDs $left")
+    assert(plans === 0, s"left $plans cached plans")
   }
 
   test("ppr: quantized sums are bit-identical under any partitioning") {

@@ -117,11 +117,12 @@ class PlanRegressionSpec extends SparkSpec {
              name == "p5b_embedding_dedup_lsh", s"$name: fused LSH keys missing")
     }
     // nearDupPairsLsh returns its pairs materialized: read the plan it runs
-    val (vectors, pairs) = graft.dedup.EmbeddingDedup.lshPlan(
-      graft.Tables.embeddings(spark, dir), "vec_id", "embedding", 0.4,
-      numTables = 12, planesPerTable = -1, dim = 64, maxBucketSize = 4096)
-    val lshPlan = pairs.queryExecution.analyzed.toString
-    vectors.unpersist()
+    val vectors = graft.dedup.EmbeddingDedup.lshVectors(
+      graft.Tables.embeddings(spark, dir), "vec_id", "embedding")
+    val lshPlan = graft.Materialize.scoped(vectors) {
+      graft.dedup.EmbeddingDedup.lshPlan(vectors, 0.4, numTables = 12, planesPerTable = -1,
+        dim = 64, maxBucketSize = 4096).queryExecution.analyzed.toString
+    }
     assert(lshPlan.contains("hyperplane_bucket_keys"),
       "p5b builder: fused LSH keys missing from the bucketing plan")
   }
@@ -214,10 +215,10 @@ class PlanRegressionSpec extends SparkSpec {
   test("p47 line dedup: dictionary join equi-keyed on the line hash") {
     import org.apache.spark.sql.functions.col
     val docs = graft.Tables.documents(spark, dir)
-    val (out, lines) = graft.dedup.LineDedup.pipeline(
-      graft.dedup.LineDedup.plantedLines(docs))
-    val p = out.queryExecution.explainString(FormattedMode)
-    lines.unpersist(false)
+    val lines = graft.dedup.LineDedup.exploded(graft.dedup.LineDedup.plantedLines(docs))
+    val p = graft.Materialize.scoped(lines) {
+      graft.dedup.LineDedup.pipeline(lines).queryExecution.explainString(FormattedMode)
+    }
     assertNoCartesian("p47", p)
     assert(!p.contains("BroadcastNestedLoopJoin"),
       "p47: dictionary join lost its hash key")
@@ -225,9 +226,10 @@ class PlanRegressionSpec extends SparkSpec {
   }
 
   test("p48 hybrid: the sparse leg joins are keyed; fusion is an equi full-outer") {
-    val (out, tf) = graft.sim.HybridSearch.fused(spark, dir)
-    val p = out.queryExecution.explainString(FormattedMode)
-    tf.unpersist(false)
+    val tf = graft.sim.HybridSearch.postings(spark, dir)
+    val p = graft.Materialize.scoped(tf) {
+      graft.sim.HybridSearch.fused(spark, dir, tf).queryExecution.explainString(FormattedMode)
+    }
     assertNoCartesian("p48", p)
     // the dense leg's 3-row broadcast scorer is the one DECLARED
     // non-equi join (the p6 exact-twin shape); the plan must still

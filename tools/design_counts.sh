@@ -1,8 +1,10 @@
 #!/bin/bash
 # Prints the design counts ROADMAP direction 2 wants to fall: main Scala
 # lines (total and per package), SparkSession.builder sites, distinct
-# env/property names read in src/main, localCheckpoint sites,
-# createTempDirectory sites, `new LinearSVC()` sites, the public scoring
+# env/property names read in src/main, localCheckpoint sites, the
+# `.persist(` and `.unpersist(` lines of src/main (`graft.Materialize`
+# owns the eager checkpoints and the scoped caches; what is left is named
+# in CHANGES.md), createTempDirectory sites, `new LinearSVC()` sites, the public scoring
 # methods of the SV model (`def predict*` in IcfSvm.scala), the `join(`
 # sites of the PSVM fits (`IcfSvmTrainer` and `fitIpm`), the line
 # count of SparkEntry.scala, the reads through Spark's `libsvm` source in
@@ -37,6 +39,8 @@ names=$({ grep -rhoE '(sys\.env(\.get|\.getOrElse)?|System\.getenv|sys\.props(\.
 echo "env_property_names $(printf '%s' "$names" | grep -c . || true)"
 echo "local_checkpoint_sites[main] $(count 'localCheckpoint' "$main")"
 echo "local_checkpoint_sites[test] $(count 'localCheckpoint' src/test)"
+echo "persist_sites[main] $(count '\.persist\(' "$main")"
+echo "unpersist_sites[main] $(count '\.unpersist\(' "$main")"
 echo "create_temp_directory_sites[main] $(count 'createTempDirectory' "$main")"
 echo "create_temp_directory_sites[test] $(count 'createTempDirectory' src/test)"
 echo "delete_on_exit_sites $(count 'deleteOnExit' "$main")"
