@@ -2,6 +2,11 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // dev aid: SPARK_GRAFT_BENCH_ONLY="p14_dedup_clusters,p15_tfidf_topterms"
+    // times just those queries (driver leaves it unset → full suite); an
+    // unknown name exits here, before any timing
+    val selected = QuerySpec.selectOrExit("bench", "SPARK_GRAFT_BENCH_ONLY",
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession()
     // Data-contract gate FIRST, and loudly: a changed on-disk encoding
     // must kill the run with one clear message, not let 25 queries fail
@@ -14,32 +19,7 @@ object Bench {
         "\"" + String.valueOf(e.getMessage).replaceAll("[\"\\n]", " ").take(500) + "\"}")
       spark.stop(); sys.exit(2)
     }
-    // warmup: touch each table + force codegen/JIT of the common
-    // expression paths once, so the first timed query doesn't absorb
-    // JVM startup (standard bench hygiene; adds ~5s wall-clock, removes
-    // ~10s of warmup noise from the first query's figure)
-    Tables.all.foreach { t => Tables.load(spark, sfDir, t).limit(64).count() }
-    try { SparkEntry.queries("m2_kernel_values")(spark, sfDir).count() }
-    catch { case _: Throwable => () }
-    // warm the ML fit path too: breeze's eigendecomposition, MLlib's
-    // LinearSVC and the Nystrom codegen all JIT on first use, and the
-    // alphabetically-first ML query would otherwise absorb ~5s of
-    // one-time cost that has nothing to do with that query
-    try {
-      import org.apache.spark.sql.functions._
-      val tiny = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 48)
-        .withColumn("y", when(col("label") % 2 === 0, 1.0).otherwise(-1.0))
-      graft.ml.KernelSvmTrainer.fit(tiny, "vec_id", "embedding", "y",
-        graft.ml.KernelSvmParams(kernel = graft.ml.Kernel.Rbf(0.05),
-          numLandmarks = 8, regParam = 1e-3, maxIter = 2, tol = 1e-3))
-    } catch { case _: Throwable => () }
-    spark.catalog.clearCache(); System.gc()
-    // dev aid: SPARK_GRAFT_BENCH_ONLY="p14_dedup_clusters,p15_tfidf_topterms"
-    // times just those queries (driver leaves it unset → full suite)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    QuerySpec.warmUp(spark, sfDir)
     // Contention guard (the r8 record was poisoned by one contended
     // window: p14 timed 204s on code that measures 4.8s quiet): when a
     // query exceeds 5× its committed expected value — BENCH_EXPECTED.json,
@@ -61,32 +41,15 @@ object Bench {
     // DIFFERENT row count (then the first run's figure stands — a
     // fast-failing rerun must not masquerade as the official time)
     val reruns = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    def clearCaches(): Unit = {
-      // queries are independent: drop caches leaked by iterative ops so
-      // later queries aren't taxed by earlier ones' memory footprint
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
-    // Force FULL materialization of every output column: a bare count()
-    // lets Catalyst prune unused columns and even eliminate whole
-    // subtrees behind them (a left join against a grouped — hence
-    // key-distinct — side preserves cardinality, so count() drops the
-    // join). Measured: m6's entire kernel-sum scoring stage was being
-    // optimized away, so its figure was fit-only. toRdd.count() consumes
-    // the executed plan's UnsafeRows — every column computed, no
-    // per-row object conversion tax.
-    def forcedCount(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.count()
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { case QuerySpec(name, fn, _) =>
       val t0 = System.nanoTime()
-      val n = try { forcedCount(fn(spark, sfDir)) } catch { case e: Throwable =>
+      val n = try { QuerySpec.forcedCount(fn(spark, sfDir)) } catch { case e: Throwable =>
         failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         -1L
       }
       var dt = (System.nanoTime() - t0) / 1e9
-      clearCaches()
+      QuerySpec.clearAll(spark)
       val exp = expected.get(name)
       // streaming queries carry a large fixed engine cost, so ambient
       // contention inflates them 2–2.5× without ever tripping a 5×
@@ -98,7 +61,7 @@ object Bench {
         // the rerun only counts if it SUCCEEDS with the same row count:
         // a rerun that fails fast (or returns different rows) must not
         // record its time-to-failure as the official figure (r9 ADVICE)
-        val n2 = try { forcedCount(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
+        val n2 = try { QuerySpec.forcedCount(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
         val dt2 = (System.nanoTime() - t1) / 1e9
         if (n2 == n) {
           System.err.println(f"[bench] $name%-24s rerun: first=$dt%.2fs second=$dt2%.2fs (expected ~${exp.get}%.2fs)")
@@ -108,7 +71,7 @@ object Bench {
           System.err.println(f"[bench] $name%-24s rerun FAILED (n=$n vs n2=$n2); first run's $dt%.2fs stands")
           reruns += name -> (dt, -1.0)
         }
-        clearCaches()
+        QuerySpec.clearAll(spark)
       }
       System.err.println(f"[bench] $name%-24s $dt%8.2fs" +
         (if (n < 0) "  FAILED" else ""))

@@ -7,8 +7,7 @@ import org.apache.spark.sql.SparkSession
   * plans the oracles check are the plans the bench times.
   *
   * Environment (read only here): SPARK_GRAFT_CPUS (local cores,
-  * default 4), SPARK_GRAFT_CACHED_REPART (default true) and
-  * SPARK_GRAFT_UI (default false). */
+  * default 4) and SPARK_GRAFT_UI (default false). */
 object GraftSession {
   def apply(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
     val spark = SparkSession.builder()
@@ -42,10 +41,8 @@ object GraftSession {
       // clusters) were scheduling 256-task stages over kilobyte
       // partitions every iteration (measured: q52 ran 3120 tasks for a
       // 16k-row graph). Cached-plan output partitioning is not part of
-      // any query's semantics. SPARK_GRAFT_CACHED_REPART=false turns it
-      // off for the per-query A/B of the anti-scaling investigation.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_REPART", "true"))
+      // any query's semantics.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // static conf, default 100: the ML queries embed fitted weights as
       // literals, so each generates UNIQUE whole-stage sources that flood
       // the compiled-class cache; once it thrashes, every later task

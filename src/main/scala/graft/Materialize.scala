@@ -22,8 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * PSVM passes (`graft.ml.Blocks`, `Ipm.solve`) and the releasable
   * factor, dual and model built on them; the cached sets behind the lazy
   * plans that `MinHashDedup`'s pair builders, `SpanDedup` and
-  * `TokenShards` return; and the clear-all between queries in Bench,
-  * Verify and QueryProfile. */
+  * `TokenShards` return; and the one clear-all between queries,
+  * `QuerySpec.clearAll`, which Bench, Verify and QueryProfile call. */
 object Materialize {
 
   /** `df` computed now, with its lineage cut. */

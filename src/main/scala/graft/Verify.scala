@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registered query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length != 2) {
@@ -9,60 +9,35 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
+    // dev aid (driver leaves unset): SPARK_GRAFT_VERIFY_ONLY="q43_pagerank"
+    // dumps just those queries for a quick check.py spot-check
+    val selected = QuerySpec.selectOrExit("verify", "SPARK_GRAFT_VERIFY_ONLY",
+      sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val spark = GraftSession()
     // loud startup contract check (see Tables.contractCheck): a changed
     // on-disk encoding should be ONE clear failure, not 25 query errors
     try Tables.contractCheck(spark, sfDir)
     catch { case e: Throwable => System.err.println(e.getMessage) }
     new java.io.File(outDir).mkdirs()
-    // dev aid (driver leaves unset): SPARK_GRAFT_VERIFY_ONLY="q43_pagerank"
-    // dumps just those queries for a quick check.py spot-check
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd filter name would otherwise yield a partial verify output
-    // indistinguishable from a clean run — log the active filter and die
-    // on any requested name that matches no registered query
-    only.foreach { names =>
-      System.err.println(s"[verify] SPARK_GRAFT_VERIFY_ONLY active: ${names.toSeq.sorted.mkString(",")}")
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[verify] unknown query name(s) in SPARK_GRAFT_VERIFY_ONLY: ${unknown.toSeq.sorted.mkString(",")}")
-        spark.stop(); sys.exit(2)
-      }
-    }
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { spec =>
+      try spec.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${spec.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${spec.name} failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      QuerySpec.clearAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // The model-replay oracles name the sf0.01 model root statically;
-    // re-anchor them to this run's actual model root (the same
-    // modelRoot(dir) the Spark queries wrote to), which outlives this
-    // process so the DuckDB replay reads the files THIS run created.
+    // The model-replay oracles name the placeholder model root; re-anchor
+    // them to this run's actual model root (the same modelRoot(dir) the
+    // Spark queries wrote to), which outlives this process so the DuckDB
+    // replay reads the files THIS run created. Jackson escapes every
+    // control char, so the driver's json.load reads any oracle text.
     System.err.println(s"[verify] models kept under ${Scratch.keepModels()}")
-    val modelRootFix: String => String =
-      _.replace("/tmp/graft_models/sf0.01", graft.ml.ModelOracles.modelRoot(sfDir))
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(modelRootFix(v))}" }.mkString("{", ",", "}")
+    val root = graft.ml.ModelOracles.modelRoot(sfDir)
+    val oracles = new java.util.LinkedHashMap[String, String]()
+    QuerySpec.select(None).foreach(s => s.oracle.foreach(sql =>
+      oracles.put(s.name, sql.replace(graft.ml.ModelOracles.PlaceholderRoot, root))))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(oracles)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P14: near-duplicate CLUSTERING — pairs are not enough to dedup a
   * corpus; the production step groups the pair graph into connected
@@ -297,4 +297,8 @@ object DedupClusters {
        FROM reach
        GROUP BY id
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p14_dedup_clusters", query, Some(oracleSql)),
+    QuerySpec("p25_keep_best", keepBestQuery, Some(keepBestOracleSql)))
 }

@@ -2,8 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.VectorOps
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P5: embedding-cosine near-duplicate pairs.
   *
@@ -208,7 +209,7 @@ object EmbeddingDedup {
           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
     s"""WITH pl AS (
          SELECT tbl, plane, vec
-         FROM read_parquet('/tmp/graft_models/sf0.01/p5b_planes/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/p5b_planes/*.parquet')),
        keys AS (
          SELECT e.vec_id, pl.tbl,
            sum(CASE WHEN list_sum(list_transform(list_zip(e.embedding, pl.vec),
@@ -232,4 +233,20 @@ object EmbeddingDedup {
        WHERE $cos >= 0.4
        ORDER BY c.id_a, c.id_b"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p5_embedding_dedup", query, Some(
+      """SELECT id_a, id_b, round(cs, 6) AS cos_sim FROM (
+           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             list_sum(list_transform(list_zip(a.embedding, b.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+             / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+              * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cs
+           FROM embeddings a, embeddings b
+           WHERE a.vec_id < b.vec_id
+             AND a.vec_id < 20000 AND b.vec_id < 20000) t
+         WHERE cs >= 0.4
+         ORDER BY id_a, id_b""")),
+    // p5b: the LSH-blocked pair list replayed from persisted planes
+    // (recall gates stay in-query; the pairs are the deterministic part).
+    QuerySpec("p5b_embedding_dedup_lsh", queryLsh, Some(lshOracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P1: exact deduplication by content hash.
   *
@@ -43,4 +43,15 @@ object ExactDedup {
       countDistinct(contentHash($"text")).as("n_distinct"),
       (count(lit(1)) - countDistinct(contentHash($"text"))).as("n_dup_docs"))
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p1_dedup_exact", query, Some(
+      """SELECT md5(text) AS content_hash, count(*) AS n_copies, min(doc_id) AS keep_id
+         FROM documents
+         GROUP BY md5(text) HAVING count(*) > 1
+         ORDER BY keep_id""")),
+    QuerySpec("p1b_dedup_summary", summaryQuery, Some(
+      """SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_distinct,
+                count(*) - count(DISTINCT md5(text)) AS n_dup_docs
+         FROM documents""")))
 }

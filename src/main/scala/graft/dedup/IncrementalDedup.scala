@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.HashFunctions
 
 /** §2.3 P35: INCREMENTAL corpus dedup — the continual-refresh shape:
@@ -127,4 +127,6 @@ object IncrementalDedup {
        LEFT JOIN exd ON i.doc_id = exd.doc_id
        LEFT JOIN nd ON i.doc_id = nd.lid
        ORDER BY i.doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p35_incr_dedup", query, Some(oracleSql)))
 }

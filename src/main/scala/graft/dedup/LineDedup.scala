@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P47: cross-document duplicated-LINE removal — the C4 (Raffel et
   * al. 2020) / MassiveText (Rae et al. 2021 A1.2) line-level dedup
@@ -152,4 +152,6 @@ object LineDedup {
          md5(array_to_string(kept, chr(10))) AS clean_md5
        FROM rw
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p47_line_dedup", query, Some(oracleSql)))
 }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.3 P2b (p2b): LSH BANDING AUTO-TUNING — the parameter-selection
   * step production MinHash deployments run before p2's fixed 16×4
@@ -148,4 +149,7 @@ object LshTuning {
               (err_micro = (SELECT min(err_micro) FROM scored)) AS chosen
        FROM scored ORDER BY bands"""
   }
+
+  // p2b: the banding tuner's integrals + argmin replayed bit-exactly
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p2b_lsh_tuning", query, Some(oracleSql)))
 }

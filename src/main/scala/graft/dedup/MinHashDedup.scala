@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.HashFunctions
+import graft.QuerySpec
 
 /** §2.3 P2 (+P4 verification): MinHash + LSH near-duplicate detection.
   *
@@ -235,4 +236,10 @@ object MinHashDedup {
          FROM sh a, sh b WHERE a.doc_id < b.doc_id) t
        WHERE jc >= 0.8
        ORDER BY id_a, id_b"""
+
+  // p2/p3/p4: LSH queries checked against exact brute-force oracles —
+  // banding recall is 1.0 (pigeonhole-exact for p3, validated for
+  // p2/p4) and verification makes precision exact, so the approximate
+  // algorithm's output equals the exact answer on this corpus.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p2_minhash_pairs", query, Some(oracleSql)))
 }

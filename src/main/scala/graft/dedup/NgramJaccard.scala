@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P4: character n-gram Jaccard similarity.
   *
@@ -59,4 +59,6 @@ object NgramJaccard {
          FROM sh a, sh b WHERE a.doc_id < b.doc_id) t
        WHERE jc >= 0.9
        ORDER BY id_a, id_b"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p4_ngram_jaccard", query, Some(oracleSql)))
 }

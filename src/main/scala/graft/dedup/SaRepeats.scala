@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P61 (p33c): corpus-repeat detection by PREFIX DOUBLING — the
   * suffix-array construction step of Lee et al.'s ExactSubstr, closing
@@ -347,4 +347,8 @@ object SaRepeats {
        FROM nd $joins
        ORDER BY doc_id"""
   }
+
+  // p33c: prefix-doubling rank recurrence replayed with dense_rank —
+  // label values differ by engine, equality-class COUNTS are identical
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p33c_sa_repeats", query, Some(oracleSql)))
 }

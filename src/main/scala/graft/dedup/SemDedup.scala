@@ -2,8 +2,9 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.VectorOps
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P37: SemDeDup — semantic deduplication via cluster blocking
   * (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -133,9 +134,9 @@ object SemDedup {
     * (p28's arithmetic), within-cell sequential-double cosine (p5's),
     * min-counterpart per duplicate. Model path re-anchored by Verify. */
   val oracleSql: String =
-    """WITH cent AS (
+    s"""WITH cent AS (
          SELECT cluster_id, centroid
-         FROM read_parquet('/tmp/graft_models/sf0.01/p37_centroids/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/p37_centroids/*.parquet')),
        asn AS (
          SELECT vec_id, embedding, cluster FROM (
            SELECT e.vec_id, e.embedding, c.cluster_id AS cluster,
@@ -160,4 +161,6 @@ object SemDedup {
               d.dup_of, d.dup_of IS NULL AS keep
        FROM asn LEFT JOIN dups d ON asn.vec_id = d.vec_id
        ORDER BY asn.vec_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p37_semdedup", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.HashFunctions
 
 /** §2.3 P3: SimHash near-duplicate detection.
@@ -137,4 +137,6 @@ object SimHashDedup {
        FROM sigs a, sigs b
        WHERE a.doc_id < b.doc_id AND bit_count(xor(a.sig, b.sig)) <= 3
        ORDER BY id_a, id_b"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p3_simhash_pairs", query, Some(oracleSql)))
 }

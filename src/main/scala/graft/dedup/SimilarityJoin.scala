@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P26: bipartite LSH similarity JOIN — `left ⋈_{J(text)≥τ} right`
   * across two different tables, the production "fuzzy join" (match a new
@@ -100,4 +100,6 @@ object SimilarityJoin {
          WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1) t
        WHERE jc >= 0.8
        ORDER BY lid, rid"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p26_sim_join", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.HashFunctions
 
 /** §2.3 P33: cross-document duplicated-SPAN removal — the span-level
@@ -218,4 +218,8 @@ object SpanDedup {
          md5(coalesce(kept.kept_text, '')) AS kept_md5
        FROM nc LEFT JOIN kept USING (doc_id)
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p33_dup_spans", (s, d) => duplicatedSpansQuery(s, d), Some(oracleSql)),
+    QuerySpec("p33b_dup_spans_bytes", (s, d) => byteSpansQuery(s, d), Some(byteOracleSql)))
 }

@@ -3,7 +3,8 @@ package graft.ml
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
+import ModelOracles.PlaceholderRoot
 
 /** m12: k-fold cross-validated grid search — the reference ecosystem's
   * standard hyper-parameter workflow (libsvm's grid search over C,
@@ -217,4 +218,81 @@ object CrossVal {
           sum(when(isVal, 1L).otherwise(0L)), 6).as("val_accuracy"))
       .orderBy(col("reg_param"), col("fold"))
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // m12: the FULL grid query replayed from the same persisted
+    // artifacts m12c reads — every cell accuracy recomputed from
+    // (φ, weights, intercept) files, plus the model-selection argmax:
+    // best param = highest fold-ordered mean of the UNROUNDED val
+    // accuracies, ties to the smaller reg (exactly cvGridQuery's
+    // maxBy on (acc, -reg); the fold-ordered list_reduce mirrors
+    // Scala's sequential Seq.sum so the mean is bit-identical).
+    QuerySpec("m12_cv_grid", (s, d) => cvGridQuery(s, d), Some(
+      s"""WITH cells AS (
+           SELECT reg_param, fold, weights, intercept
+           FROM read_parquet('$PlaceholderRoot/m12_cv/cells/*.parquet')),
+         feats AS (
+           SELECT vec_id, fold AS rfold, label01, phi
+           FROM read_parquet('$PlaceholderRoot/m12_cv/features/*.parquet')),
+         scored AS (
+           SELECT c.reg_param, c.fold, f.rfold, f.label01,
+             CASE WHEN list_sum([c.weights[j] * f.phi[j]
+                                 for j in range(1, len(c.weights) + 1)])
+                    + c.intercept > 0
+                  THEN 1.0 ELSE 0.0 END AS pred
+           FROM cells c, feats f),
+         acc AS (
+           SELECT reg_param, fold,
+             CAST(sum(CASE WHEN rfold <> fold THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
+             CAST(sum(CASE WHEN rfold = fold THEN 1 ELSE 0 END) AS BIGINT) AS n_val,
+             CAST(sum(CASE WHEN rfold <> fold AND pred = label01 THEN 1 ELSE 0 END) AS DOUBLE)
+               / sum(CASE WHEN rfold <> fold THEN 1 ELSE 0 END) AS train_acc_raw,
+             CAST(sum(CASE WHEN rfold = fold AND pred = label01 THEN 1 ELSE 0 END) AS DOUBLE)
+               / sum(CASE WHEN rfold = fold THEN 1 ELSE 0 END) AS val_acc_raw
+           FROM scored GROUP BY reg_param, fold),
+         best AS (
+           SELECT reg_param FROM (
+             SELECT reg_param,
+               list_reduce(list(val_acc_raw ORDER BY fold), (a, x) -> a + x)
+                 / count(*) AS avg_acc
+             FROM acc GROUP BY reg_param)
+           ORDER BY avg_acc DESC, reg_param ASC LIMIT 1)
+         SELECT reg_param, fold, n_train, n_val,
+           round(train_acc_raw, 6) AS train_accuracy,
+           round(val_acc_raw, 6) AS val_accuracy,
+           reg_param = (SELECT reg_param FROM best) AS is_best_param
+         FROM acc ORDER BY reg_param, fold""")),
+    // m12b: replay the content-addressed fold assignment.
+    QuerySpec("m12b_cv_folds", (s, d) => cvFoldsQuery(s, d), Some(
+      """SELECT fold, y, CAST(count(*) AS BIGINT) AS n
+         FROM (
+           SELECT CAST(('0x' || substring(md5('cv:' || CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 3 AS fold,
+             CASE WHEN label % 2 = 0 THEN 1.0 ELSE -1.0 END AS y
+           FROM embeddings) t
+         GROUP BY fold, y ORDER BY fold, y""")),
+    // m12c: replay every CV fold accuracy from the persisted artifacts —
+    // per-row φ features + per-cell LinearSVC (weights, intercept) —
+    // margin = Σⱼ wⱼ·φⱼ + b in the same index-ascending order Spark uses.
+    QuerySpec("m12c_cv_replay", (s, d) => cvReplayQuery(s, d), Some(
+      s"""WITH cells AS (
+           SELECT reg_param, fold, weights, intercept
+           FROM read_parquet('$PlaceholderRoot/m12_cv/cells/*.parquet')),
+         feats AS (
+           SELECT vec_id, fold AS rfold, label01, phi
+           FROM read_parquet('$PlaceholderRoot/m12_cv/features/*.parquet')),
+         scored AS (
+           SELECT c.reg_param, c.fold, f.rfold, f.label01,
+             CASE WHEN list_sum([c.weights[j] * f.phi[j]
+                                 for j in range(1, len(c.weights) + 1)])
+                    + c.intercept > 0
+                  THEN 1.0 ELSE 0.0 END AS pred
+           FROM cells c, feats f)
+         SELECT reg_param, fold,
+           CAST(sum(CASE WHEN rfold <> fold THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
+           CAST(sum(CASE WHEN rfold = fold THEN 1 ELSE 0 END) AS BIGINT) AS n_val,
+           round(CAST(sum(CASE WHEN rfold <> fold AND pred = label01 THEN 1 ELSE 0 END) AS DOUBLE)
+             / sum(CASE WHEN rfold <> fold THEN 1 ELSE 0 END), 6) AS train_accuracy,
+           round(CAST(sum(CASE WHEN rfold = fold AND pred = label01 THEN 1 ELSE 0 END) AS DOUBLE)
+             / sum(CASE WHEN rfold = fold THEN 1 ELSE 0 END), 6) AS val_accuracy
+         FROM scored GROUP BY reg_param, fold ORDER BY reg_param, fold""")))
 }

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.VectorOps
 
 /** svm-scale parity: the reference ecosystem's feature-scaling
@@ -54,4 +54,20 @@ object FeatureScale {
           .as("mean_scaled"))
       .orderBy(col("dim"))
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // m13: svm-scale parity — per-dimension raw range + scaled-space
+    // mean derived from one pass of per-dim aggregates.
+    QuerySpec("m13_feature_scale", m13FeatureScale, Some(
+      """WITH d AS (
+           SELECT unnest(generate_series(1, len(embedding))) AS pos, embedding
+           FROM embeddings),
+         x AS (SELECT pos, CAST(embedding[pos] AS DOUBLE) AS x FROM d),
+         s AS (SELECT pos, min(x) AS mn, max(x) AS mx, avg(x) AS av
+               FROM x GROUP BY pos)
+         SELECT CAST(pos - 1 AS BIGINT) AS dim,
+           round(mn, 6) AS min_raw, round(mx, 6) AS max_raw,
+           round(CASE WHEN mx > mn THEN (av - mn) / (mx - mn) ELSE 0.0 END, 6)
+             AS mean_scaled
+         FROM s ORDER BY dim""")))
 }

@@ -2,8 +2,9 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.VectorOps
+import ModelOracles.{PlaceholderRoot, metricsTailSql, nystromEvalSql, svModelReplaySql}
 
 /** SparkEntry wrappers for the §2.1 ML surface over the embeddings table. */
 object MlQueries {
@@ -145,4 +146,87 @@ object MlQueries {
       .withColumn("n_support_vectors", lit(model.numSupportVectors))
   }
 
+  def specs: Seq[QuerySpec] = Seq(
+    // m1/m5: the training queries persist their fitted Nyström model
+    // under the model root and score with the RELOADED model, so the
+    // oracle replays every decision from the saved files (m10 technique)
+    // and recomputes the confusion matrix + metrics (m9 technique).
+    QuerySpec("m1_svm_binary_eval", svmBinaryEval, Some(nystromEvalSql("m1_nystrom"))),
+    QuerySpec("m2_kernel_values", kernelValues, Some(
+      """SELECT id_a, id_b,
+         round(dot, 6) AS k_linear,
+         round(power(0.01 * dot + 1.0, 2), 6) AS k_poly,
+         round(exp(-0.1 * sqd), 6) AS k_rbf,
+         round(exp(-0.1 * l1d), 6) AS k_laplacian
+         FROM (
+           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             list_sum(list_transform(list_zip(a.embedding, b.embedding),
+               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) AS dot,
+             list_sum(list_transform(list_zip(a.embedding, b.embedding),
+               x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS sqd,
+             list_sum(list_transform(list_zip(a.embedding, b.embedding),
+               x -> abs(CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS l1d
+           FROM embeddings a, embeddings b
+           WHERE a.vec_id < 3 AND b.vec_id BETWEEN 3 AND 8) t
+         ORDER BY id_a, id_b""")),
+    // m3: OVR multiclass — replay φ(x) from the SHARED saved map, every
+    // per-class decision from the classifiers table, and the argmax
+    // (first maximal class wins, ascending order) per row.
+    QuerySpec("m3_svm_multiclass_eval", svmMulticlassEval, Some(
+      s"""WITH lm AS (
+           SELECT array_agg(landmark ORDER BY idx) AS L
+           FROM read_parquet('$PlaceholderRoot/m3_ovr/landmarks/*.parquet')),
+         pr AS (
+           SELECT array_agg(w_row ORDER BY idx) AS W
+           FROM read_parquet('$PlaceholderRoot/m3_ovr/projection/*.parquet')),
+         pp AS (
+           SELECT gamma FROM read_parquet('$PlaceholderRoot/m3_ovr/params/*.parquet')),
+         cls AS (
+           SELECT class, weights, intercept
+           FROM read_parquet('$PlaceholderRoot/m3_ovr/classifiers/*.parquet')),
+         pts AS (
+           SELECT vec_id, label, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS px
+           FROM embeddings),
+         kx AS (
+           SELECT vec_id, label,
+             list_transform(lm.L, l -> exp(-pp.gamma *
+               list_sum(list_transform(list_zip(l, px), z -> (z[1] - z[2]) * (z[1] - z[2]))))) AS ks
+           FROM pts, lm, pp),
+         phi AS (
+           SELECT kx.vec_id, kx.label,
+             [list_sum([pr.W[i][j] * kx.ks[i] for i in range(1, len(kx.ks) + 1)])
+              for j in range(1, len(pr.W[1]) + 1)] AS f
+           FROM kx, pr),
+         dec AS (
+           SELECT phi.vec_id, phi.label, cls.class,
+             list_sum([cls.weights[j] * phi.f[j] for j in range(1, len(cls.weights) + 1)])
+               + cls.intercept AS d
+           FROM phi, cls),
+         pred AS (
+           SELECT vec_id, label,
+             (array_agg(class ORDER BY class))[
+               list_position(array_agg(d ORDER BY class),
+                             list_max(array_agg(d ORDER BY class)))] AS pc
+           FROM dec GROUP BY vec_id, label)
+         SELECT label, CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CASE WHEN pc = CAST(label AS DOUBLE) THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
+           round(CAST(sum(CASE WHEN pc = CAST(label AS DOUBLE) THEN 1 ELSE 0 END) AS DOUBLE)
+             / count(*), 6) AS class_accuracy
+         FROM pred GROUP BY label ORDER BY label""")),
+    QuerySpec("m5_svm_ipm_eval", svmIpmEval, Some(nystromEvalSql("m5_ipm"))),
+    // m6: ICF→IPM SV model, text-round-tripped; decisions replayed from
+    // the saved SV lines with integer picounit sums, over the
+    // deterministic hash-based 1-in-10 eval sample (md5-bucket rule, so
+    // id-structured generators at other scales cannot bias the eval set).
+    QuerySpec("m6_svm_icf_ipm_eval", svmIcfIpmEval, Some(svModelReplaySql("m6_icf",
+      "CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 = 0") +
+      ",\n         " + metricsTailSql(", (tp + fp + tn + fn) AS n_eval" +
+        ", (SELECT CAST(count(*) AS BIGINT) FROM sv) AS n_support_vectors"))),
+    QuerySpec("m7_libsvm_roundtrip", libsvmRoundtrip, Some(
+      """SELECT CAST(label AS DOUBLE) AS label, count(*) AS n_rows,
+         round(sum(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))), 6)
+           AS feature_mass
+         FROM embeddings
+         GROUP BY 1
+         ORDER BY 1""")))
 }

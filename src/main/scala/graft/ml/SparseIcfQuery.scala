@@ -2,6 +2,8 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
+import ModelOracles.PlaceholderRoot
 
 /** m16: SPARSE ICF end-to-end (the fidelity half of M16, next to
   * m14/m15's Nyström half): greedy-pivot incomplete Cholesky over the
@@ -67,7 +69,7 @@ object SparseIcfQuery {
          GROUP BY doc_id, idx),
        h AS (
          SELECT id, icf_features
-         FROM read_parquet('/tmp/graft_models/sf0.01/m16_icf_h/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/m16_icf_h/*.parquet')),
        panel AS (SELECT DISTINCT doc_id FROM terms WHERE doc_id < 20),
        norms AS (
          SELECT doc_id, sum(CAST(cnt AS DOUBLE) * cnt) AS ssq
@@ -93,4 +95,8 @@ object SparseIcfQuery {
        SELECT id_a, id_b, round(ke, 6) AS k_exact, round(ki, 6) AS k_icf,
               round(abs(ke - ki), 6) AS abs_err
        FROM g ORDER BY id_a, id_b"""
+
+  // m16: sparse ICF — K ~ H.Ht certified from the persisted factor
+  // (the m4 pattern) with the integer-exact sparse kernel as truth.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("m16_sparse_icf", query, Some(oracleSql)))
 }

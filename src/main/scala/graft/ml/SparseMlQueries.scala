@@ -2,7 +2,8 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
+import ModelOracles.PlaceholderRoot
 
 /** Driver queries for the sparse ML surface (m14/m15): a deterministic
   * HIGH-DIMENSIONAL sparse fixture derived at read time from the
@@ -143,13 +144,13 @@ object SparseMlQueries {
     s"""WITH $termsSql,
        lmr AS (
          SELECT idx AS lm_i, lidx, lval
-         FROM read_parquet('/tmp/graft_models/sf0.01/m15_sparse/landmarks/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/m15_sparse/landmarks/*.parquet')),
        pr AS (
          SELECT array_agg(w_row ORDER BY idx) AS W
-         FROM read_parquet('/tmp/graft_models/sf0.01/m15_sparse/projection/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/m15_sparse/projection/*.parquet')),
        pp AS (
          SELECT gamma, weights, intercept
-         FROM read_parquet('/tmp/graft_models/sf0.01/m15_sparse/params/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/m15_sparse/params/*.parquet')),
        lmt AS (
          SELECT lm_i, unnest(lidx) AS dim, unnest(lval) AS v FROM lmr),
        lnorm AS (SELECT lm_i, sum(v * v) AS ssq FROM lmt GROUP BY lm_i),
@@ -199,4 +200,11 @@ object SparseMlQueries {
            THEN 2.0 * "precision" * recall / ("precision" + recall)
            ELSE 0.0 END, 6) AS f1
        FROM m"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    // m14/m15: the sparse ML surface — merge-join kernels on the hashed
+    // bag-of-words fixture (integer-exact inner sums), and the sparse
+    // SVM's persisted-model decision replay (the m1 chain, sparse files).
+    QuerySpec("m14_sparse_kernels", m14SparseKernels, Some(m14OracleSql)),
+    QuerySpec("m15_sparse_svm_eval", m15SparseSvmEval, Some(m15OracleSql)))
 }

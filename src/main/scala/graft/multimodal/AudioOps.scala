@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P12b (mm4): the AUDIO leg of the multimodal surface, with a REAL
   * codec path — each payload is a complete RIFF/WAVE file (canonical
@@ -164,4 +164,6 @@ object AudioOps {
          CAST(list_max(list_transform(w, x -> abs(x))) AS BIGINT) AS peak
        FROM fr
        ORDER BY media_id, frame_idx"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm4_audio_features", audioFeatures, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P55 (mm7): CROSS-MODAL pair filtering — the LAION-style
   * image–text consistency gate. A multimodal corpus is (image, caption)
@@ -184,4 +184,6 @@ object CrossModal {
          planted
        FROM c
        ORDER BY pair_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm7_crossmodal_filter", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P66 (mm11): GIF decode — the THIRD entropy coding in the
   * multimodal family (mm9 PNG = DEFLATE/LZ77+Huffman, mm10 JPEG =
@@ -317,4 +317,7 @@ object GifCodec {
          CAST(list_max(bl) AS BIGINT) AS max_px,
          md5(px_hex) AS px_md5
        FROM bytes ORDER BY media_id"""
+
+  // mm11: lossless LZW — the oracle regenerates the decode from the chain
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm11_gif_decode", query, Some(oracleSql)))
 }

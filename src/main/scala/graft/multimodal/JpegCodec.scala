@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P65 (mm10): BASELINE JPEG codec — the second entropy-coded
   * image format next to mm9's PNG, and the one production image
@@ -655,4 +655,9 @@ object JpegCodec {
          md5(px_hex) AS px_md5
        FROM hx ORDER BY media_id"""
   }
+
+  // mm10: lossy format, LOSSLESS fixture — constant even-offset blocks
+  // round-trip the quantizer exactly, so the oracle regenerates the
+  // decode; generality is the imageio byte-parity fuzz in the spec
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm10_jpeg_decode", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P12: multimodal (image/audio/video) column plumbing with a REAL
   * decode path.
@@ -280,4 +280,52 @@ object MultimodalOps {
       }
     }
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // mm1/mm2: the Spark side encodes a REAL 8×4 24bpp BMP per document
+    // and decodes it with javax.imageio; the oracle recomputes the pixel
+    // BYTES the encoder generated (chained md5) and the same feature
+    // math — a broken header, raster order, or codec call mismatches.
+    QuerySpec("mm1_media_features", mediaFeatures, Some(
+      """WITH m AS (
+           SELECT doc_id AS media_id,
+             (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS kind,
+             CAST(length(text) * 10 AS BIGINT) AS duration_ms,
+             md5(text) || md5(text || '1') || md5(text || '2') ||
+               md5(text || '3') || md5(text || '4') || md5(text || '5') AS hx
+           FROM documents),
+         v AS (
+           SELECT media_id, kind, duration_ms,
+             list_transform(range(1, 97), i ->
+               ((instr('0123456789abcdef', substring(hx, CAST(2*i-1 AS INT), 1)) * 16
+                 + instr('0123456789abcdef', substring(hx, CAST(2*i AS INT), 1))) - 17)
+               / 255.0) AS px
+           FROM m),
+         s AS (
+           SELECT media_id, kind, duration_ms,
+             list_sum(px) / 96.0 AS mean_px,
+             list_sum(list_transform(px, v -> v * v)) / 96.0 AS sq_px,
+             list_min(px) AS mn, list_max(px) AS mx
+           FROM v)
+         SELECT media_id, kind, duration_ms,
+           round(mean_px, 6) AS mean_px,
+           round(sqrt(greatest(sq_px - mean_px * mean_px, 0.0)), 6) AS std_px,
+           round(mn, 6) AS min_px, round(mx, 6) AS max_px
+         FROM s ORDER BY media_id""")),
+    QuerySpec("mm2_frame_sample", frameSample, Some(
+      """SELECT media_id, frame_idx,
+         round(list_sum(list_transform(range(1, 25),
+           i -> ((instr('0123456789abcdef', substring(frame, CAST(2*i-1 AS INT), 1)) * 16
+                  + instr('0123456789abcdef', substring(frame, CAST(2*i AS INT), 1))) - 17)
+                / 255.0)) / 24.0, 6)
+           AS frame_mean
+         FROM (
+           SELECT doc_id AS media_id, f AS frame_idx,
+             substring(md5(text) || md5(text || '1') || md5(text || '2') ||
+                       md5(text || '3') || md5(text || '4') || md5(text || '5'),
+                       CAST(f * 48 + 1 AS INT), 48) AS frame
+           FROM documents, range(0, 4) r(f)
+           WHERE doc_id % 3 = 2) t
+         ORDER BY media_id, frame_idx""")),
+    QuerySpec("mm6_image_resize", resize, Some(resizeOracleSql)))
 }

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.3 P38 (mm3): perceptual-hash image dedup — the multimodal twin of
   * the text near-dup family. Each media payload goes through the REAL
@@ -121,4 +122,6 @@ object PHashDedup {
        SELECT h.media_id, h.dhash, d.dup_of, d.dup_of IS NULL AS keep
        FROM h LEFT JOIN dups d ON h.media_id = d.media_id
        ORDER BY h.media_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm3_phash_dedup", query, Some(oracleSql)))
 }

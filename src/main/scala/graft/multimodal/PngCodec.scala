@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P60 (mm9): PNG decode — the first ENTROPY-CODED codec in the
   * multimodal family. mm1–mm8 walk real but uncompressed containers
@@ -297,4 +297,8 @@ object PngCodec {
          md5(ph) AS px_md5
        FROM b
        ORDER BY media_id"""
+
+  // mm9: features of the hand-decoded (Inflater + defilter) PNG raster
+  // replayed from the md5-chain generation rule
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm9_png_decode", query, Some(oracleSql)))
 }

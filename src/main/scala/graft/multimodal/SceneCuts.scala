@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P58 (mm8): SCENE-CUT detection / keyframe extraction — the
   * standard first pass over video training data (dedup on keyframes,
@@ -131,4 +131,6 @@ object SceneCuts {
               CAST(NULL AS BIGINT) AS sad_prev
        FROM d
        ORDER BY media_id, frame_idx"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("mm8_scene_cuts", query, Some(oracleSql)))
 }

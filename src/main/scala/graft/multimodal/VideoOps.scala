@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P12c (mm5): the VIDEO leg of the multimodal surface, with a REAL
   * container path — each payload is a complete RIFF/AVI file and the
@@ -192,4 +192,7 @@ object VideoOps {
          CAST(fb[13] + fb[14] + fb[15] AS BIGINT) AS corner_sum
        FROM fr
        ORDER BY media_id, frame_idx"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("mm5_video_frames", videoFrameFeatures, Some(oracleSql)))
 }

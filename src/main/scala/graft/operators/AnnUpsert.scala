@@ -2,9 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 import graft.functions.VectorOps
 import graft.sim.IvfAnn
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.4 U18 (u18): INCREMENTAL MAINTENANCE of the persisted ANN index —
   * the missing write path next to U10 (write-once IVF layout) and S7
@@ -183,14 +184,14 @@ object AnnUpsert {
   def oracleSqlFor(prefix: String): String =
     s"""WITH cents AS (
          SELECT array_agg(centroid ORDER BY idx) AS C
-         FROM read_parquet('/tmp/graft_models/sf0.01/${prefix}_centroids/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/${prefix}_centroids/*.parquet')),
        p AS (
          SELECT cell, vec_id, v, src
-         FROM read_parquet('/tmp/graft_models/sf0.01/${prefix}_postings/*/*.parquet',
+         FROM read_parquet('$PlaceholderRoot/${prefix}_postings/*/*.parquet',
                            hive_partitioning=1)),
        q AS (
          SELECT query_id, cell
-         FROM read_parquet('/tmp/graft_models/sf0.01/${prefix}_probes/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/${prefix}_probes/*.parquet')),
        cand AS (
          SELECT q.query_id, p.cell, p.vec_id, p.v, p.src,
            [list_sum([(p.v[j] - cents.C[i][j]) * (p.v[j] - cents.C[i][j])
@@ -208,5 +209,8 @@ object AnnUpsert {
                        THEN 1 ELSE 0 END) AS BIGINT) AS n_misrouted
        FROM cand GROUP BY query_id ORDER BY query_id"""
 
-  val oracleSql: String = oracleSqlFor("u18")
+  // u18: candidate aggregates + the routing invariant replayed from
+  // the POST-INSERT files (centroids, postings, probes all persisted)
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u18_ann_upsert", u18AnnUpsertQuery, Some(oracleSqlFor("u18"))))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** R26 generalized: backward as-of join — for each left row, the single
   * most recent right row with `right.ts <= left.ts` (or `<` when
@@ -105,4 +106,18 @@ object AsOfJoin {
       .select($"user_id", $"purchase_id", $"purchase_us", $"click_us")
       .orderBy($"user_id", $"purchase_id")
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // tolerance as-of: latest click in the 6h before each purchase,
+    // NULL (row kept) when none — replayed as a bounded correlated max
+    QuerySpec("q42_asof_tolerance", toleranceQuery, Some(
+      """SELECT p.user_id, p.event_id AS purchase_id,
+           epoch_us(p.ts) AS purchase_us,
+           (SELECT max(epoch_us(c.ts)) FROM events c
+            WHERE c.event_type = 'click' AND c.user_id = p.user_id
+              AND epoch_us(c.ts) <= epoch_us(p.ts)
+              AND epoch_us(c.ts) >= epoch_us(p.ts) - 21600000000) AS click_us
+         FROM events p
+         WHERE p.event_type = 'purchase'
+         ORDER BY p.user_id, purchase_id""")))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 
 /** §2.4 U13: per-file BLOOM-FILTER point-lookup index — the Delta
   * bloom-index / Parquet-bloom shape on plain parquet: a table laid out
@@ -120,4 +120,6 @@ object BloomIndex {
        WHERE o_custkey IN (1, 7, 42)
        GROUP BY o_custkey
        ORDER BY o_custkey"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("u13_bloom_index", u13BloomIndexQuery, Some(oracleSql)))
 }

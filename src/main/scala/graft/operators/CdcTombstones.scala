@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.4 U19 (u19): TOMBSTONE-aware CDC compaction — the half of MERGE
   * INTO that u6 (last-writer-wins upsert) and s5 (streaming CDC-apply)
@@ -109,4 +110,7 @@ object CdcTombstones {
               round(sum(o_totalprice), 2) AS sum_price
        FROM win WHERE rn = 1 AND op <> 'D'
        GROUP BY o_orderstatus ORDER BY o_orderstatus"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u19_cdc_tombstones", u19CdcTombstonesQuery, Some(oracleSql)))
 }

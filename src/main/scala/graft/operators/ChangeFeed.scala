@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.4 U20 (u20): CHANGE-DATA-FEED reads over the U11 versioned
   * layout — the `table_changes(v1, v2)` / readChangeFeed contract
@@ -153,4 +154,6 @@ object ChangeFeed {
        FROM chg c JOIN ranges r ON c.version > r.range_lo
        GROUP BY 1, 2, 3
        ORDER BY range_lo, _commit_version, _change_type"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("u20_change_feed", u20ChangeFeedQuery, Some(oracleSql)))
 }

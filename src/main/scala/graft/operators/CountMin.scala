@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.2 R43 (q45): COUNT-MIN SKETCH — the mergeable frequency sketch
   * that completes the sketch family (HLL distinct q21, Misra–Gries
@@ -90,4 +90,6 @@ object CountMin {
        FROM cells JOIN cms USING (seed, c)
        GROUP BY cells.user_id, cells.exact_cnt
        ORDER BY cells.user_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q45_countmin", query, Some(oracleSql)))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.4 U17 (u17): DYNAMIC partition overwrite — the daily-backfill
   * primitive for 100 TB partitioned fact tables. The standard failure
@@ -89,4 +90,7 @@ object DynamicPartitionOverwrite {
        FROM final
        WHERE event_date BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
        GROUP BY 1, 2 ORDER BY 1, 2"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u17_dynamic_overwrite", u17DynamicOverwriteQuery, Some(oracleSql)))
 }

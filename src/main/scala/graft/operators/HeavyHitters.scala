@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import graft.QuerySpec
 
 /** Misra–Gries heavy hitters: a hand-built MERGEABLE sketch (Agarwal et
   * al., "Mergeable Summaries") complementing the engine-native sketch
@@ -125,4 +126,11 @@ object HeavyHitters {
        FROM c, t
        WHERE c.exact_count > t.n // ${k + 1}
        ORDER BY exact_count DESC, key"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q39_heavy_hitters", (s, d) => query(s, d), None),
+    // q39b: exact heavy hitters over q39's guarantee threshold — the
+    // hash-gated twin that closes the self-val set (q21→q21c, q29→q29c,
+    // q39→q39b; only the engine-private sketch states stay rows-only).
+    QuerySpec("q39b_exact_hitters", (s, d) => exactQuery(s, d), Some(exactOracleSql())))
 }

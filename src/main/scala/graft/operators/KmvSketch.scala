@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.2 R20c (q21c): KMV DISTINCT-COUNT SKETCH — the k-minimum-values /
   * theta-sketch estimator (Bar-Yossef et al. 2002; Apache DataSketches'
@@ -142,4 +142,8 @@ object KmvSketch {
          CAST(exact AS BIGINT) AS exact_parts,
          CAST(floor(abs(e - exact) / exact * 1e6) AS BIGINT) AS rel_err_micro
        FROM est"""
+
+  // q21c: a DETERMINISTIC distinct sketch (KMV/theta) whose estimate
+  // itself is hash-gated — the auditable twin of q21's HLL++.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q21c_kmv_distinct", query, Some(oracleSql)))
 }

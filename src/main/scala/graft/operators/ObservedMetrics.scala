@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.4 U15: pipeline OBSERVABILITY — production telemetry (row counts,
   * gate pass rates, quality mass) collected DURING the main pass with
@@ -68,4 +69,7 @@ object ObservedMetrics {
          FROM (SELECT doc_id, lang, source,
                  regexp_split_to_array(text, '\s+') AS t
                FROM documents) x) y"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u15_observed_metrics", u15ObservedMetricsQuery, Some(oracleSql)))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import graft.QuerySpec
 
 /** §2.4 U21 (u21): MULTI-WRITER OPTIMISTIC CONCURRENCY — the lakehouse
   * commit protocol U16 (single-writer write-audit-publish) leaves open:
@@ -264,4 +265,6 @@ object OptimisticCommit {
          FROM b)
        SELECT bkt, count(*) AS n_rows, round(sum(CAST(round(price * 100) AS BIGINT)) / 100.0, 2) AS sum_price
        FROM resolved GROUP BY bkt ORDER BY bkt"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("u21_occ_commit", u21OccQuery, Some(oracleSql)))
 }

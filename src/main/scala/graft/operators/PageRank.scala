@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.2 R41 (q43): graph centrality — fixed-iteration PageRank over the
   * customer–supplier interaction graph (who-trades-with-whom, from
@@ -171,4 +171,6 @@ object PageRank {
                    JOIN deg d ON b.src = d.node
                    CROSS JOIN nn GROUP BY 1)
        SELECT node, round(pr, 9) AS pr FROM pr3 ORDER BY node"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q43_pagerank", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.2 R49 (q52): PERSONALIZED PageRank — random-walk-with-restart
   * centrality where teleports land on a SOURCE SET instead of uniformly
@@ -154,4 +154,6 @@ object Ppr {
            FROM bi b JOIN pr2 p ON b.src = p.node JOIN deg d ON b.src = d.node
            GROUP BY 1) m ON t.node = m.node)
        SELECT node, round(pr, 9) AS pr FROM pr3 ORDER BY node"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q52_ppr", query, Some(oracleSql)))
 }

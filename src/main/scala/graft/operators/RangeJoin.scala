@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** R39: range (interval) join — `points ⋈ intervals` on
   * `key equal AND start <= t < end` — as a BINNED EQUI-join.
@@ -155,4 +156,28 @@ object RangeJoin {
           .as("overlap_us"))
       .orderBy($"user_id", $"error_id", $"purchase_id")
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // DuckDB plans this as its IEJoin — an independent interval-join
+    // algorithm deriving the same pairs as the Spark side's binned
+    // equi-join decomposition (RangeJoin.pointsInIntervals).
+    QuerySpec("q40_range_join", query, Some(
+      """SELECT e.user_id, e.event_id AS error_id, c.event_id AS click_id,
+           epoch_us(c.ts) - epoch_us(e.ts) AS delta_us
+         FROM events e JOIN events c
+           ON e.user_id = c.user_id
+          AND epoch_us(c.ts) >= epoch_us(e.ts)
+          AND epoch_us(c.ts) < epoch_us(e.ts) + 21600000000
+         WHERE e.event_type = 'error' AND c.event_type = 'click'
+         ORDER BY e.user_id, error_id, click_id""")),
+    QuerySpec("q41_overlap_join", overlapQuery, Some(
+      """SELECT e.user_id, e.event_id AS error_id, p.event_id AS purchase_id,
+           least(epoch_us(e.ts), epoch_us(p.ts)) + 21600000000
+             - greatest(epoch_us(e.ts), epoch_us(p.ts)) AS overlap_us
+         FROM events e JOIN events p
+           ON e.user_id = p.user_id
+          AND epoch_us(e.ts) < epoch_us(p.ts) + 21600000000
+          AND epoch_us(p.ts) < epoch_us(e.ts) + 21600000000
+         WHERE e.event_type = 'error' AND p.event_type = 'purchase'
+         ORDER BY e.user_id, error_id, purchase_id""")))
 }

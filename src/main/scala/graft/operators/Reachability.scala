@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 
 /** §2.2 R42 (q44): k-hop reachability — SEMI-NAIVE transitive-closure
   * evaluation (the recursive-CTE / Datalog operator class) over the
@@ -95,4 +95,6 @@ object Reachability {
        UNION ALL SELECT node, CAST(2 AS INT) FROM h2
        UNION ALL SELECT node, CAST(3 AS INT) FROM h3
        ORDER BY hop, node"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q44_reachability", query, Some(oracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.2 R28c (q29c): DETERMINISTIC SAMPLE QUANTILE SKETCH — the
   * bottom-k-by-hash companion to q21c's KMV: per group, keep the k rows
@@ -150,4 +150,8 @@ object SampleQuantiles {
                       vals[CAST(floor(pos95) AS INT) + 1]) * (pos95 - floor(pos95))) * 100 + 0.5) / 100.0
            AS sp95_price
        FROM q ORDER BY l_returnflag"""
+
+  // q29c: bottom-k-by-hash sample quantiles — the deterministic,
+  // mergeable, hash-gated companion to q29's t-digest-class sketch.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q29c_sample_quantiles", query, Some(oracleSql)))
 }

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** Cluster-scale join utilities — the patterns that keep 100 TB joins
   * from dying on shuffles or skew. Demonstrated + spec-tested at small
@@ -377,4 +378,96 @@ object ScaleOps {
         .orderBy(col("event_type"))
     }
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // u8: the date-partitioned rewrite + pruned read must be lossless —
+    // same 3-day aggregate over the raw table.
+    QuerySpec("u8_partition_prune", u8PartitionPruneQuery, Some(
+      """SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_day, event_type,
+           CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(value), 2) AS sum_value
+         FROM events
+         WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-12'
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+    // u9: a runtime bloom filter may only PRUNE, never change results —
+    // same join computed plain.
+    QuerySpec("u9_runtime_filter", u9RuntimeFilterQuery, Some(
+      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_lines,
+           round(sum(l_extendedprice), 2) AS sum_price
+         FROM lineitem JOIN (
+           SELECT o_orderkey FROM orders
+           WHERE o_orderpriority = '1-URGENT' AND o_orderkey % 10 = 0) o
+           ON l_orderkey = o_orderkey
+         GROUP BY l_returnflag ORDER BY l_returnflag""")),
+    // u10: the partition-pruned probe read must return exactly the probed
+    // cells' postings — replay the per-query candidate aggregates from
+    // the SAME persisted postings + probes files (read unpruned here: a
+    // layout optimization may only skip bytes, never change results).
+    QuerySpec("u10_ivf_layout", u10IvfLayoutQuery, Some(
+      s"""SELECT q.query_id,
+           CAST(count(DISTINCT p.cell) AS BIGINT) AS n_cells,
+           CAST(count(*) AS BIGINT) AS n_candidates,
+           CAST(sum(p.vec_id) AS BIGINT) AS id_checksum,
+           CAST(sum(list_aggregate(p.codes, 'sum')) AS BIGINT) AS code_checksum
+         FROM read_parquet('$PlaceholderRoot/u10_postings/*/*.parquet', hive_partitioning=1) p
+         JOIN read_parquet('$PlaceholderRoot/u10_probes/*.parquet') q
+           ON CAST(p.cell AS BIGINT) = CAST(q.cell AS BIGINT)
+         GROUP BY q.query_id ORDER BY q.query_id""")),
+    // u6: last-writer-wins merge of the deterministic update batch.
+    QuerySpec("u6_upsert", u6UpsertQuery, Some(
+      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
+           round(sum(o_totalprice), 2) AS sum_price
+         FROM (
+           SELECT o_orderkey, o_orderstatus, o_totalprice,
+             row_number() OVER (PARTITION BY o_orderkey ORDER BY version DESC) AS rn
+           FROM (
+             SELECT o_orderkey, o_orderstatus, o_totalprice, 1 AS version FROM orders
+             UNION ALL
+             SELECT o_orderkey, 'U' AS o_orderstatus,
+               o_totalprice + 100.0 AS o_totalprice, 2 AS version
+             FROM orders WHERE o_orderkey % 13 = 0) u) t
+         WHERE rn = 1
+         GROUP BY o_orderstatus
+         ORDER BY o_orderstatus""")),
+    // u7: the z-ordered rewrite must be lossless — same two-dimensional
+    // slice over the raw table.
+    QuerySpec("u7_zorder_layout", u7ZorderQuery, Some(
+      """SELECT event_type, count(*) AS n_events,
+           round(sum(value), 2) AS sum_value
+         FROM events
+         WHERE user_id BETWEEN 100 AND 300
+           AND ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-03'
+         GROUP BY event_type
+         ORDER BY event_type""")),
+    // u1 goes through bucketed catalog tables; the oracle reads raw
+    // parquet — equality proves the bucketed write/read path is lossless.
+    QuerySpec("u1_bucketed_join", u1BucketedJoinQuery, Some(
+      """SELECT c_mktsegment, count(*) AS n_orders,
+         round(sum(o_totalprice), 2) AS sum_price
+         FROM orders, customer
+         WHERE o_custkey = c_custkey
+         GROUP BY c_mktsegment
+         ORDER BY c_mktsegment""")),
+    // u2/u3: the oracle runs the un-salted join / the raw table scan —
+    // equality proves the scale layouts change plans, not answers.
+    QuerySpec("u2_salted_join", u2SaltedJoinQuery, Some(
+      """SELECT s_nationkey, count(*) AS n_items,
+         round(sum(l_extendedprice), 2) AS sum_price
+         FROM lineitem, supplier
+         WHERE l_suppkey = s_suppkey
+         GROUP BY s_nationkey
+         ORDER BY s_nationkey""")),
+    QuerySpec("u3_range_layout", u3RangeLayoutQuery, Some(
+      """SELECT event_type, count(*) AS n_events,
+         round(sum(value), 2) AS sum_value
+         FROM events
+         WHERE ts >= TIMESTAMP '2024-01-02' AND ts < TIMESTAMP '2024-01-03'
+         GROUP BY event_type
+         ORDER BY event_type""")),
+    QuerySpec("u5_compaction", u5CompactionQuery, Some(
+      """SELECT l_linestatus, count(*) AS n_rows,
+         round(sum(l_quantity), 2) AS sum_qty
+         FROM lineitem
+         GROUP BY l_linestatus
+         ORDER BY l_linestatus""")))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.4 U14: SCHEMA EVOLUTION reads — the lakehouse add-a-column
   * contract on plain parquet: files written before the column existed
@@ -55,4 +56,7 @@ object SchemaEvolution {
        FROM orders
        GROUP BY 1
        ORDER BY channel"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u14_schema_evolution", u14SchemaEvolutionQuery, Some(oracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 
 /** §2.4 U22 (u22): SNAPSHOT EXPIRY / VACUUM — the retention half of the
   * lakehouse lifecycle (Delta VACUUM + history squash; Iceberg
@@ -151,4 +151,6 @@ object SnapshotExpiry {
               count(*) AS n_keys,
               round(sum(CAST(round(price * 100) AS BIGINT)) / 100.0, 2) AS sum_price
        FROM resolved GROUP BY 1, 2 ORDER BY as_of_version, status"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("u22_snapshot_expiry", u22ExpiryQuery, Some(oracleSql)))
 }

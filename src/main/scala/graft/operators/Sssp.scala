@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.2 R48 (q51): single-source shortest paths — iterated min-plus
   * relaxations (distributed Bellman–Ford with a semi-naive frontier)
@@ -143,4 +143,6 @@ object Sssp {
        $rounds
        SELECT node, dist FROM d$MaxRounds ORDER BY node"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q51_sssp", query, Some(oracleSql)))
 }

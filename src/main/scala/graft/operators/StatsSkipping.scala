@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 
 /** §2.4 U12: file-statistics data skipping — the lakehouse min/max
   * manifest (Delta/Iceberg data skipping, Snowflake pruning) on plain
@@ -88,4 +88,7 @@ object StatsSkipping {
          AND o_orderdate <  TIMESTAMP '1995-07-01'
        GROUP BY o_orderpriority
        ORDER BY o_orderpriority"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u12_stats_skipping", u12StatsSkippingQuery, Some(oracleSql)))
 }

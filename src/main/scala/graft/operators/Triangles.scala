@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 
 /** §2.2 R43 (q46): distributed TRIANGLE COUNTING + local clustering
   * coefficients — the standard graph-structure statistic (community
@@ -128,4 +128,6 @@ object Triangles {
            END AS BIGINT) AS cc_micro
        FROM deg LEFT JOIN pernode ON pernode.id = deg.id
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("q46_triangles", query, Some(oracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.4 U11: versioned table layout with TIME TRAVEL — the lakehouse
   * MVCC shape (Delta/Iceberg-style) on plain parquet: every commit is an
@@ -121,4 +121,6 @@ object VersionedTable {
        SELECT as_of_version, status, count(*) AS n_keys,
               round(sum(price), 2) AS sum_price
        FROM resolved GROUP BY 1, 2 ORDER BY as_of_version, status"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("u11_time_travel", query, Some(oracleSql)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P27: weighted reservoir sampling (Efraimidis–Spirakis A-ES) as a
   * custom typed AGGREGATE — "sample the k best-weighted documents per
@@ -126,4 +126,22 @@ object WeightedSample {
       .select(col("source"), col("sample_rank"), col("doc_id"), col("weight"))
       .orderBy(col("source"), col("sample_rank"))
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // p27: deterministic A-ES weighted sampling — with content-addressed
+    // u the aggregate is exactly "top-k by a computable key", so the
+    // oracle replays key = u^(1/w) through a window. (The Spark side
+    // computes it with a one-pass bounded custom aggregate, not a sort.)
+    QuerySpec("p27_weighted_sample", (s, d) => query(s, d), Some(
+      """SELECT source, CAST(rank_ AS BIGINT) AS sample_rank, doc_id,
+           CAST(length(text) + 1 AS BIGINT) AS weight
+         FROM (
+           SELECT source, doc_id, text,
+             row_number() OVER (PARTITION BY source ORDER BY
+               pow((CAST(('0x' || substring(md5('ws:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) + 0.5)
+                     / 4294967296.0,
+                   1.0 / (length(text) + 1)) DESC, doc_id) AS rank_
+           FROM documents) t
+         WHERE rank_ <= 5
+         ORDER BY source, sample_rank""")))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.4 U16: WRITE-AUDIT-PUBLISH — the lakehouse deployment contract
   * (Iceberg WAP, Delta "blind append + constraint check", Netflix's
@@ -96,4 +97,7 @@ object WriteAuditPublish {
               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
        FROM orders
        WHERE o_totalprice > 0"""
+
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("u16_write_audit_publish", u16WapQuery, Some(oracleSql)))
 }

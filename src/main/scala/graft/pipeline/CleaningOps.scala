@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** Corpus-cleaning operators for the training-data pipeline: PII
   * redaction, intra-document repetition gating (Gopher-style quality
@@ -146,4 +146,89 @@ object CleaningOps {
       .filter(col("sample_rank") <= k)
       .orderBy(col("source"), col("sample_rank"))
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    // p21: replay the planted PII and the redaction chain (patterns are
+    // in the shared Java-regex/RE2 subset so both engines match
+    // identically); md5 of the redacted text is fully discriminating.
+    QuerySpec("p21_pii_redaction", piiRedactionQuery, Some(
+      """WITH raw AS (
+           SELECT doc_id,
+             substring(text, 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR)
+             || '@mail.example.com or call +1-555-'
+             || lpad(CAST(doc_id * 7919 % 10000 AS VARCHAR), 4, '0')
+             || ' at https://site' || CAST(doc_id % 7 AS VARCHAR)
+             || '.example.com/p/' || CAST(doc_id AS VARCHAR) || ' end' AS raw
+           FROM documents),
+         red AS (
+           SELECT doc_id, raw,
+             regexp_replace(regexp_replace(regexp_replace(raw,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+               '\+1-555-[0-9]{4}', '<PHONE>', 'g'),
+               'https?://[A-Za-z0-9./_-]+', '<URL>', 'g') AS redacted
+           FROM raw)
+         SELECT doc_id,
+           CAST(len(regexp_extract_all(raw,
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+           CAST(len(regexp_extract_all(raw, '\+1-555-[0-9]{4}')) AS BIGINT) AS n_phones,
+           CAST(len(regexp_extract_all(raw, 'https?://[A-Za-z0-9./_-]+')) AS BIGINT) AS n_urls,
+           CAST(length(redacted) AS BIGINT) AS redacted_len,
+           md5(redacted) AS redacted_md5
+         FROM red ORDER BY doc_id""")),
+    // p22: Gopher-style repetition metrics (docs with <2 words excluded
+    // on both sides — the n−1 denominator would be 0).
+    QuerySpec("p22_repetition", (s, d) => repetitionQuery(s, d), Some(
+      """WITH w AS (
+           SELECT doc_id, string_split_regex(text, '\s+') AS w FROM documents),
+         w2 AS (SELECT * FROM w WHERE len(w) >= 2),
+         stats AS (
+           SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
+             CAST(len(list_distinct(w)) AS BIGINT) AS n_distinct
+           FROM w2),
+         bg AS (
+           SELECT doc_id,
+             unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS bg
+           FROM w2),
+         top AS (
+           SELECT doc_id, max(c) AS top_n FROM (
+             SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY doc_id, bg) t
+           GROUP BY doc_id)
+         SELECT s.doc_id, s.n_words,
+           round(1.0 - s.n_distinct / s.n_words, 6) AS dup_word_frac,
+           round(COALESCE(top.top_n, 0) / (s.n_words - 1), 6) AS top_bigram_frac,
+           (COALESCE(top.top_n, 0) / (s.n_words - 1)) < 0.2 AS keep
+         FROM stats s LEFT JOIN top USING (doc_id)
+         ORDER BY s.doc_id""")),
+    // p23: cross-document boilerplate — per-doc-distinct 3-grams counted
+    // per source; Spark joins md5 keys, this replay joins the gram
+    // strings (the gate would catch any hash collision).
+    QuerySpec("p23_boilerplate", (s, d) => boilerplateQuery(s, d), Some(
+      """WITH w AS (
+           SELECT source, doc_id, string_split_regex(lower(text), '\s+') AS w
+           FROM documents),
+         g AS (
+           SELECT source, doc_id,
+             unnest(list_distinct([array_to_string(w[i:i+2], ' ')
+               for i in range(1, len(w) - 1)])) AS gram
+           FROM w WHERE len(w) >= 3),
+         c AS (
+           SELECT source, gram, CAST(count(*) AS BIGINT) AS n_docs_with
+           FROM g GROUP BY source, gram)
+         SELECT g.source, g.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+           CAST(sum(CASE WHEN c.n_docs_with >= 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
+           round(sum(CASE WHEN c.n_docs_with >= 8 THEN 1 ELSE 0 END) / count(*), 6)
+             AS boiler_frac
+         FROM g JOIN c USING (source, gram)
+         GROUP BY g.source, g.doc_id
+         ORDER BY g.source, g.doc_id""")),
+    // p24: deterministic stratified sample — replay the content hash.
+    QuerySpec("p24_stratified_sample", (s, d) => stratifiedSampleQuery(s, d), Some(
+      """SELECT source, doc_id, sample_rank FROM (
+           SELECT source, doc_id,
+             CAST(row_number() OVER (PARTITION BY source
+               ORDER BY md5('sample:' || CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT)
+               AS sample_rank
+           FROM documents) t
+         WHERE sample_rank <= 5
+         ORDER BY source, sample_rank""")))
 }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P68 (p68): CLUSTER-BALANCED SAMPLING — the mixture-control
   * primitive the p28 clustering exists to feed (topic rebalancing /
@@ -60,9 +62,9 @@ object ClusterBalance {
   /** DuckDB replay: p28's nearest-centroid argmin, the same md5-order
     * QUALIFY cut at the min-cluster quota, the same kept-id digest. */
   val oracleSql: String =
-    """WITH cent AS (
+    s"""WITH cent AS (
          SELECT cluster_id, centroid
-         FROM read_parquet('/tmp/graft_models/sf0.01/p28_centroids/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/p28_centroids/*.parquet')),
        assigned AS (
          SELECT vec_id, cluster,
            CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
@@ -86,4 +88,7 @@ object ClusterBalance {
        FROM kept k JOIN sizes s ON s.cluster = k.cluster
        GROUP BY k.cluster, s.n_docs
        ORDER BY k.cluster"""
+
+  // p68: balanced per-cluster sampling replayed from p28's centroids.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p68_cluster_balance", query, Some(oracleSql)))
 }

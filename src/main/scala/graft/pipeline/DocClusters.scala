@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.QuerySpec
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** P28: corpus clustering over the embedding column — the diversity /
   * topic-balance primitive of a training-data pipeline (cluster-based
@@ -59,7 +61,7 @@ object DocClusters {
     * dimension-ordered double arithmetic as the fused sq_distance
     * expression. The model path is re-anchored per run dir by Verify. */
   val oracleSql: String =
-    """SELECT vec_id, CAST(cluster AS INTEGER) AS cluster FROM (
+    s"""SELECT vec_id, CAST(cluster AS INTEGER) AS cluster FROM (
          SELECT e.vec_id, c.cluster_id AS cluster,
            row_number() OVER (PARTITION BY e.vec_id ORDER BY
              list_sum(list_transform(list_zip(e.embedding, c.centroid),
@@ -67,7 +69,9 @@ object DocClusters {
                   * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))),
              c.cluster_id) AS rk
          FROM embeddings e
-         CROSS JOIN read_parquet('/tmp/graft_models/sf0.01/p28_centroids/*.parquet') c
+         CROSS JOIN read_parquet('$PlaceholderRoot/p28_centroids/*.parquet') c
        ) WHERE rk = 1
        ORDER BY vec_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p28_doc_clusters", query, Some(oracleSql)))
 }

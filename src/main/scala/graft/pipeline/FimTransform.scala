@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P62 (p62): FILL-IN-THE-MIDDLE (FIM) transformation — the
   * data-side half of infilling training (Bavarian et al. 2022,
@@ -99,4 +99,7 @@ object FimTransform {
          ELSE md5(array_to_string(w, ' ')) END AS rendered_md5
        FROM c
        ORDER BY doc_id"""
+
+  // p62: md5 buckets, cuts and PSM render replayed via list slicing
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p62_fim_transform", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P43: intra-document HTML/markup boilerplate stripping — the
   * trafilatura-class main-content extraction step that precedes p23's
@@ -182,4 +182,6 @@ object HtmlExtract {
        FROM verd
        GROUP BY doc_id
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p43_html_extract", query, Some(oracleSql)))
 }

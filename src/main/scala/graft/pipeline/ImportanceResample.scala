@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.3 P40: DSIR-style data selection via importance resampling (Xie,
   * Santurkar, Ma, Liang — "Data Selection for Language Models via
@@ -103,4 +104,6 @@ object ImportanceResample {
               (sum(cnt * w_micro) > 0) AS keep
        FROM db JOIN wts USING (bucket)
        GROUP BY doc_id ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p40_dsir_resample", query, Some(oracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P51: the composed INGEST FRONT-END — the round-7 operators as
   * one dataflow, the web-corpus pipeline every curation stack runs
@@ -151,4 +151,6 @@ object IngestFunnel {
        FROM ranked
        GROUP BY source
        ORDER BY source"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p51_ingest_funnel", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P63 (p63): per-source DISTRIBUTION DIVERGENCE — the mixture
   * diagnostic every corpus-weighting decision leans on (DoReMi, DSIR
@@ -72,4 +72,6 @@ object MixtureDivergence {
        FROM sw JOIN s USING (source) JOIN w USING (word) CROSS JOIN n
        GROUP BY sw.source, n.n
        ORDER BY sw.source"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p63_kl_mixture", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P52: domain MIXTURE PLANNING — the step before p20's mixture
   * resampling: given per-source token inventories and target domain
@@ -85,4 +85,6 @@ object MixturePlanner {
            // 1000000 AS BIGINT) AS expected_tokens
        FROM inv CROSS JOIN tot
        ORDER BY source"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p52_mixture_plan", query, Some(oracleSql)))
 }

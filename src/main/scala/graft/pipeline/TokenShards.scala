@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P50: TOKENIZED-SHARD EXPORT — the artifact a data pipeline
   * actually ships to the trainer: documents encoded to token IDS under
@@ -163,4 +163,6 @@ object TokenShards {
        GROUP BY source, shard_idx
        ORDER BY source, shard_idx"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p50_token_shards", query, Some(oracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** Training-data pipeline operators beyond the dedup/quality pack:
   * deterministic corpus splitting, sequence packing, benchmark
@@ -287,4 +287,114 @@ object TrainingOps {
                 AS seq_md5
        FROM capped WHERE rn <= 256
        GROUP BY user_id ORDER BY user_id"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p32_sequences", (s, d) => sequenceQuery(s, d), Some(sequenceOracleSql)),
+    QuerySpec("p56_train_order", (s, d) => trainOrderQuery(s, d), Some(trainOrderOracleSql)),
+    QuerySpec("p53_decon_split", (s, d) => decontaminatedSplitQuery(s, d), Some(
+      """WITH toks AS (
+           SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents),
+         grams AS (
+           SELECT doc_id,
+             unnest(list_distinct([array_to_string(w[i:i+7], ' ')
+               for i in range(1, len(w) - 6)])) AS gram
+           FROM toks WHERE len(w) >= 8),
+         bench AS (SELECT doc_id AS bench_doc, gram FROM grams WHERE doc_id % 37 = 0),
+         train AS (SELECT doc_id AS train_doc, gram FROM grams WHERE doc_id % 37 != 0),
+         contaminated AS (
+           SELECT DISTINCT train_doc AS doc_id FROM (
+             SELECT train_doc, bench_doc, count(*) AS n_shared
+             FROM train JOIN bench USING (gram) GROUP BY 1, 2) p
+           WHERE n_shared >= 3),
+         assigned AS (
+           SELECT d.source, d.n_chars,
+             CASE WHEN c.doc_id IS NOT NULL THEN 'quarantine'
+                  WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
+                  ELSE 'test' END AS split
+           FROM (
+             SELECT doc_id, source, n_chars,
+               CAST(('0x' || substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
+             FROM documents WHERE doc_id % 37 != 0) d
+           LEFT JOIN contaminated c USING (doc_id))
+         SELECT source, split, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS n_chars_total
+         FROM assigned
+         GROUP BY source, split
+         ORDER BY source, split""")),
+    // p16: replay the content-addressed hash split (first 32 bits of
+    // md5("split:"+id) mod 100) and the stratified report.
+    QuerySpec("p16_split", (s, d) => splitQuery(s, d), Some(
+      """SELECT source, split, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS n_chars_total
+         FROM (
+           SELECT source, n_chars,
+             CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
+           FROM (
+             SELECT source, n_chars,
+               CAST(('0x' || substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
+             FROM documents) t1) t2
+         GROUP BY source, split
+         ORDER BY source, split""")),
+    // p17: concat-and-chunk sequence packing — exclusive running token
+    // count per source, div 512 assigns each doc its starting sequence.
+    QuerySpec("p17_pack", (s, d) => packQuery(s, d), Some(
+      """SELECT source, seq_idx, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+           min(doc_id) AS first_doc, max(doc_id) AS last_doc
+         FROM (
+           SELECT source, doc_id, n_tokens,
+             CAST(CAST(COALESCE(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) // 512 AS BIGINT) AS seq_idx
+           FROM (
+             SELECT source, doc_id,
+               CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens
+             FROM documents) t1) t2
+         GROUP BY source, seq_idx
+         ORDER BY source, seq_idx""")),
+    // p18: word-8-gram overlap between the training split and the
+    // benchmark set (doc_id % 37 == 0). The Spark side joins md5(gram)
+    // keys; this replay joins the gram strings themselves — identical
+    // output (the gate would catch any hash collision).
+    QuerySpec("p18_contamination", (s, d) => contaminationQuery(s, d), Some(
+      """WITH toks AS (
+           SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM documents),
+         grams AS (
+           SELECT doc_id,
+             unnest(list_distinct([array_to_string(w[i:i+7], ' ')
+               for i in range(1, len(w) - 6)])) AS gram
+           FROM toks WHERE len(w) >= 8),
+         bench AS (SELECT doc_id AS bench_doc, gram FROM grams WHERE doc_id % 37 = 0),
+         train AS (SELECT doc_id AS train_doc, gram FROM grams WHERE doc_id % 37 != 0),
+         pairs AS (
+           SELECT train_doc, bench_doc, CAST(count(*) AS BIGINT) AS n_shared
+           FROM train JOIN bench USING (gram) GROUP BY 1, 2)
+         SELECT train_doc, bench_doc, n_shared
+         FROM pairs WHERE n_shared >= 3
+         ORDER BY train_doc, bench_doc""")),
+    // p19: overlapping char chunks (size 200, stride 150) + content md5.
+    QuerySpec("p19_chunks", (s, d) => chunkQuery(s, d), Some(
+      """SELECT doc_id, CAST(chunk_start // 150 AS BIGINT) AS chunk_idx,
+           chunk_start, CAST(length(chunk) AS BIGINT) AS chunk_len,
+           md5(chunk) AS chunk_md5
+         FROM (
+           SELECT doc_id, chunk_start,
+             substring(text, CAST(chunk_start + 1 AS INT), 200) AS chunk
+           FROM (
+             SELECT doc_id, text, unnest(range(0, length(text), 150)) AS chunk_start
+             FROM documents WHERE doc_id < 100 AND length(text) > 0) t1) t2
+         ORDER BY doc_id, chunk_idx""")),
+    // p20: mixture resampling — replay the per-source keep-rates over
+    // the same content-addressed hash (mod 1000) and summarize survivors.
+    QuerySpec("p20_mixture", mixtureQuery, Some(
+      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS n_chars_total
+         FROM (
+           SELECT source, n_chars,
+             CAST(('0x' || substring(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 AS b
+           FROM documents) t
+         WHERE b < CASE source WHEN 'src0' THEN 500 WHEN 'src1' THEN 250
+                               WHEN 'src2' THEN 100 WHEN 'src3' THEN 750
+                               ELSE 1000 END
+         GROUP BY source
+         ORDER BY source""")))
 }

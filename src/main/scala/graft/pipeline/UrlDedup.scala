@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P44: URL canonicalization + URL-keyed dedup — the cheapest and
   * most-used dedup layer in web corpora (the same page is crawled via
@@ -138,4 +138,6 @@ object UrlDedup {
          doc_id != min(doc_id) OVER (PARTITION BY canon_url) AS is_dup
        FROM canon2
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p44_url_dedup", query, Some(oracleSql)))
 }

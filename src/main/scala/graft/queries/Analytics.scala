@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Behavioral / time-series analytics over the events stream: ordered
   * funnels, retention cohorts, sliding windows, histogram binning, and
@@ -164,4 +164,97 @@ object Analytics {
         round(nullIfNaN(corr($"value", $"uid")), 6).as("corr_value_uid"))
       .orderBy($"event_type")
   }
+
+  /** q34's oracle, shared by s6 (the same windows through the streaming
+    * engine). */
+  val slidingWindowsSql: String =
+    """SELECT make_timestamp(
+             ((epoch_us(ts) // 1000000 // 900) * 900 - 900 * g.g) * 1000000)
+             AS window_start,
+           event_type, CAST(count(*) AS BIGINT) AS n_events,
+           round(sum(value), 2) AS sum_value
+         FROM events, (SELECT unnest(generate_series(0, 3)) AS g) g
+         GROUP BY 1, 2 ORDER BY 1, 2"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    // q32: ordered funnel — each stage's first-hit must strictly follow
+    // the previous stage's. The latency average is computed from exact
+    // integer microsecond sums so both engines divide identical doubles.
+    QuerySpec("q32_funnel", q32Funnel, Some(
+      """WITH s AS (
+           SELECT user_id, min(ts) AS t1 FROM events
+           WHERE event_type = 'signup' GROUP BY user_id),
+         c AS (
+           SELECT e.user_id, min(e.ts) AS t2 FROM events e
+           JOIN s ON e.user_id = s.user_id
+           WHERE e.event_type = 'click' AND e.ts > s.t1 GROUP BY e.user_id),
+         p AS (
+           SELECT e.user_id, min(e.ts) AS t3 FROM events e
+           JOIN c ON e.user_id = c.user_id
+           WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY e.user_id)
+         SELECT CAST(count(*) AS BIGINT) AS n_signup,
+           CAST(count(t2) AS BIGINT) AS n_signup_click,
+           CAST(count(t3) AS BIGINT) AS n_full_funnel,
+           round(CAST(sum(epoch_us(t3) - epoch_us(t1)) AS DOUBLE)
+                 / count(t3) / 1000000.0, 4) AS avg_secs_to_purchase
+         FROM s LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""")),
+    // q33: weekly retention cohorts (both engines truncate weeks to
+    // Monday; offsets are exact day diffs div 7 between week starts).
+    QuerySpec("q33_retention", q33Retention, Some(
+      """WITH wk AS (
+           SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events),
+         fw AS (SELECT user_id, min(wk) AS cohort_week FROM wk GROUP BY user_id)
+         SELECT cohort_week,
+           CAST(date_diff('day', cohort_week, wk) // 7 AS BIGINT) AS week_offset,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
+         FROM wk JOIN fw USING (user_id)
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+    // q34: sliding windows — every event belongs to exactly the 4
+    // epoch-aligned 15-min-slide windows that cover it, replayed here by
+    // integer arithmetic on microsecond epochs.
+    QuerySpec("q34_sliding_windows", q34SlidingWindows, Some(slidingWindowsSql)),
+    // q35: fixed-width histogram with clamped top bin.
+    QuerySpec("q35_histogram", q35Histogram, Some(
+      """SELECT bin, bin * 25000.0 AS bin_lo,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           round(sum(o_totalprice), 2) AS sum_price,
+           round(min(o_totalprice), 2) AS min_price,
+           round(max(o_totalprice), 2) AS max_price
+         FROM (
+           SELECT o_totalprice,
+             least(CAST(floor(o_totalprice / 25000.0) AS BIGINT), 19) AS bin
+           FROM orders) t
+         GROUP BY bin ORDER BY bin""")),
+    // q36: co-moment statistics; both engines use single-pass partial
+    // moments, rounded to 6 so merge-order ulps can't flip a digit.
+    QuerySpec("q36_corr_stats", q36CorrStats, Some(
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+           round(stddev_samp(value), 6) AS sd_value,
+           round(var_samp(value), 6) AS var_value,
+           round(covar_samp(value, CAST(user_id AS DOUBLE)), 6) AS cov_value_uid,
+           round(corr(value, CAST(user_id AS DOUBLE)), 6) AS corr_value_uid
+         FROM events GROUP BY event_type ORDER BY event_type""")),
+    // q37: forward fill — last non-masked value per user timeline.
+    QuerySpec("q37_gap_fill", q37GapFill, Some(
+      """SELECT user_id, event_id, ts,
+           (reading IS NULL) AS was_gap,
+           round(last_value(reading IGNORE NULLS) OVER (
+             PARTITION BY user_id ORDER BY ts, event_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS filled
+         FROM (
+           SELECT user_id, event_id, ts,
+             CASE WHEN event_type != 'error' THEN value END AS reading
+           FROM events WHERE user_id < 20) t
+         ORDER BY user_id, ts, event_id""")),
+    // q38: distribution window functions over a total order (the
+    // event_id tiebreak makes ranks deterministic on both engines).
+    QuerySpec("q38_window_dist", q38WindowDistribution, Some(
+      """SELECT event_type, event_id, value,
+           CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+           round(percent_rank() OVER w, 6) AS pct_rank,
+           round(cume_dist() OVER w, 6) AS cume
+         FROM events
+         WHERE user_id < 10
+         WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
+         ORDER BY event_type, value, event_id""")))
 }

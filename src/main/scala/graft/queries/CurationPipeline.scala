@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.text.TextAnalysis
 
 /** p13: the composed training-data curation pipeline — what all the §2.3
@@ -76,4 +76,6 @@ object CurationPipeline {
          AND quality >= 0.5
        GROUP BY source
        ORDER BY source"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p13_curation_pipeline", query, Some(oracleSql)))
 }

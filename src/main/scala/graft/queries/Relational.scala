@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.2 relational query pack (SURVEY.md R1–R20).
   *
@@ -628,4 +628,296 @@ object Relational {
            min($"k").as("min_k"), max($"k").as("max_k"))
       .orderBy($"event_type")
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_pricing_summary", q1PricingSummary, Some(
+      """SELECT l_returnflag, l_linestatus,
+         round(sum(l_quantity), 2) AS sum_qty,
+         round(sum(l_extendedprice), 2) AS sum_base_price,
+         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
+         round(avg(l_discount), 6) AS avg_disc,
+         count(*) AS count_order
+         FROM lineitem
+         WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+         GROUP BY l_returnflag, l_linestatus
+         ORDER BY l_returnflag, l_linestatus""")),
+    QuerySpec("q2_topk_orders", q2TopkOrders, Some(
+      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
+         FROM orders
+         ORDER BY o_totalprice DESC, o_orderkey ASC
+         LIMIT 10""")),
+    QuerySpec("q3_shipping_priority", q3ShippingPriority, Some(
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+         FROM customer, orders, lineitem
+         WHERE c_mktsegment = 'BUILDING'
+           AND c_custkey = o_custkey AND l_orderkey = o_orderkey
+           AND o_orderdate < TIMESTAMP '1998-06-01'
+           AND l_shipdate  > TIMESTAMP '1998-06-01'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, l_orderkey ASC
+         LIMIT 10""")),
+    QuerySpec("q4_order_priority", q4OrderPriority, Some(
+      """SELECT o_orderpriority, count(*) AS n_orders
+         FROM orders
+         WHERE EXISTS (
+           SELECT 1 FROM lineitem
+           WHERE l_orderkey = o_orderkey
+             AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+         GROUP BY o_orderpriority
+         ORDER BY o_orderpriority""")),
+    QuerySpec("q5_local_supplier", q5LocalSupplier, Some(
+      """SELECT n_name,
+         round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+         FROM customer, orders, lineitem, supplier, nation, region
+         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+           AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+           AND r_name = 'ASIA'
+           AND o_orderdate >= TIMESTAMP '1996-01-01'
+           AND o_orderdate <  TIMESTAMP '1998-01-01'
+         GROUP BY n_name
+         ORDER BY revenue DESC, n_name""")),
+    QuerySpec("q6_forecast_revenue", q6ForecastRevenue, Some(
+      """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
+         FROM lineitem
+         WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+           AND l_shipdate <  TIMESTAMP '1997-01-01'
+           AND l_discount BETWEEN 0.03 AND 0.07
+           AND l_quantity < 24""")),
+    QuerySpec("q7_running_sum", q7RunningSum, Some(
+      """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
+         round(sum(o_totalprice) OVER (
+           PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_spend
+         FROM orders
+         WHERE o_custkey < 100
+         ORDER BY o_custkey, o_orderdate, o_orderkey""")),
+    QuerySpec("q8_rank_parts", q8RankParts, Some(
+      """SELECT p_brand, p_partkey, p_retailprice, rk FROM (
+           SELECT p_brand, p_partkey, p_retailprice,
+           row_number() OVER (PARTITION BY p_brand
+             ORDER BY p_retailprice DESC, p_partkey) AS rk
+           FROM part) t
+         WHERE rk <= 3
+         ORDER BY p_brand, rk""")),
+    QuerySpec("q9_rollup", q9Rollup, Some(
+      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+                coalesce(l_linestatus, 'ALL') AS linestatus,
+         round(sum(l_quantity), 2) AS sum_qty, count(*) AS n_rows
+         FROM lineitem
+         GROUP BY ROLLUP(l_returnflag, l_linestatus)
+         ORDER BY returnflag, linestatus""")),
+    QuerySpec("q10_distinct_counts", q10DistinctCounts, Some(
+      """SELECT count(DISTINCT l_partkey) AS n_parts,
+                count(DISTINCT l_suppkey) AS n_supps,
+                count(DISTINCT l_orderkey) AS n_orders,
+                count(*) AS n_rows
+         FROM lineitem""")),
+    QuerySpec("q11_anti_join", q11AntiJoin, Some(
+      """SELECT c_custkey, c_name FROM customer
+         WHERE NOT EXISTS (
+           SELECT 1 FROM orders
+           WHERE o_custkey = c_custkey
+             AND o_orderdate < TIMESTAMP '1996-01-01')
+         ORDER BY c_custkey""")),
+    QuerySpec("q12_semi_join", q12SemiJoin, Some(
+      """SELECT p_partkey, p_name FROM part
+         WHERE EXISTS (
+           SELECT 1 FROM lineitem
+           WHERE l_partkey = p_partkey AND l_quantity >= 48)
+         ORDER BY p_partkey""")),
+    QuerySpec("q13_order_histogram", q13OrderHistogram, Some(
+      """SELECT c_count, count(*) AS n_custs FROM (
+           SELECT c_custkey, count(o_orderkey) AS c_count
+           FROM customer LEFT OUTER JOIN orders
+             ON c_custkey = o_custkey AND o_orderpriority = '1-URGENT'
+           GROUP BY c_custkey) t
+         GROUP BY c_count
+         ORDER BY n_custs DESC, c_count DESC""")),
+    QuerySpec("q14_promo_share", q14PromoShare, Some(
+      """SELECT round(
+           sum(CASE WHEN p_type = 'PROMO'
+               THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END) * 100.0
+           / sum(l_extendedprice * (1.0 - l_discount)), 6) AS promo_share
+         FROM lineitem, part
+         WHERE l_partkey = p_partkey
+           AND l_shipdate >= TIMESTAMP '1996-04-01'
+           AND l_shipdate <  TIMESTAMP '1996-07-01'""")),
+    QuerySpec("q15_union_accounts", q15UnionAccounts, Some(
+      """SELECT src, count(*) AS n_accounts, round(sum(bal), 2) AS sum_bal
+         FROM (SELECT 'customer' AS src, c_acctbal AS bal FROM customer
+               UNION ALL
+               SELECT 'supplier' AS src, s_acctbal AS bal FROM supplier) t
+         GROUP BY src
+         ORDER BY src""")),
+    QuerySpec("q16_having", q16Having, Some(
+      """SELECT o_custkey, count(*) AS n_orders,
+         round(sum(o_totalprice), 2) AS total_spend
+         FROM orders
+         GROUP BY o_custkey
+         HAVING count(*) >= 15
+         ORDER BY n_orders DESC, o_custkey""")),
+    QuerySpec("q17_small_quantity", q17SmallQuantity, Some(
+      """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+         FROM lineitem,
+              (SELECT l_partkey AS ap_partkey, avg(l_quantity) AS avg_qty
+               FROM lineitem GROUP BY l_partkey) a
+         WHERE l_partkey = ap_partkey AND l_quantity < avg_qty * 0.2""")),
+    QuerySpec("q18_large_orders", q18LargeOrders, Some(
+      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
+         FROM orders, customer,
+              (SELECT l_orderkey AS bo_orderkey, round(sum(l_quantity), 2) AS sum_qty
+               FROM lineitem GROUP BY l_orderkey) b
+         WHERE o_orderkey = bo_orderkey AND sum_qty > 300 AND o_custkey = c_custkey
+         ORDER BY o_totalprice DESC, o_orderkey
+         LIMIT 100""")),
+    QuerySpec("q19_hourly_events", q19HourlyEvents, Some(
+      """SELECT date_trunc('hour', ts) AS hour, event_type,
+         count(*) AS n_events,
+         round(sum(value), 2) AS sum_value
+         FROM events
+         GROUP BY 1, 2
+         ORDER BY 1, 2""")),
+    QuerySpec("q20_user_lag", q20UserLag, Some(
+      """SELECT user_id, event_id, ts, value,
+         round(coalesce(lag(value) OVER w, 0.0), 2) AS prev_value,
+         round(value - coalesce(lag(value) OVER w, 0.0), 2) AS delta
+         FROM events
+         WHERE user_id < 50
+         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+         ORDER BY user_id, ts, event_id""")),
+    // q21: no oracle — DuckDB's HLL differs from Spark's HLL++; the
+    // driver records a rows-only check. Its exact twin is q21b.
+    QuerySpec("q21_approx_distinct", q21ApproxDistinct, None),
+    QuerySpec("q21b_exact_distinct", q21bExactDistinct, Some(
+      """SELECT count(DISTINCT l_partkey) AS exact_parts,
+                count(DISTINCT l_suppkey) AS exact_supps
+         FROM lineitem""")),
+    QuerySpec("q29_approx_percentiles", q29ApproxPercentiles, None),
+    QuerySpec("q30_json_props", q30JsonProps, Some(
+      """SELECT event_type, count(*) AS n_events,
+         CAST(sum(k) AS BIGINT) AS sum_k,
+         round(avg(k), 6) AS avg_k,
+         min(k) AS min_k, max(k) AS max_k
+         FROM (SELECT event_type,
+                 CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+               FROM events) t
+         GROUP BY event_type
+         ORDER BY event_type""")),
+    QuerySpec("q31_full_outer", q31FullOuter, Some(
+      """SELECT COALESCE(c.c_nationkey, s.s_nationkey) AS nationkey,
+         COALESCE(c.n_cust, 0) AS n_cust,
+         COALESCE(s.n_supp, 0) AS n_supp
+         FROM (SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_cust
+               FROM customer WHERE c_custkey < 200 GROUP BY c_nationkey) c
+         FULL OUTER JOIN
+              (SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_supp
+               FROM supplier WHERE s_suppkey < 50 GROUP BY s_nationkey) s
+           ON c.c_nationkey = s.s_nationkey
+         ORDER BY nationkey""")),
+    QuerySpec("q49_variant", q49Variant, Some(
+      """SELECT event_type, count(*) AS n_events,
+           CAST(sum(k) AS BIGINT) AS sum_k,
+           CAST(count(DISTINCT k) AS BIGINT) AS n_distinct_k,
+           CAST(min(k) AS BIGINT) AS min_k, CAST(max(k) AS BIGINT) AS max_k
+         FROM (SELECT event_type,
+                 CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+               FROM events) t
+         GROUP BY event_type
+         ORDER BY event_type""")),
+    QuerySpec("q50_rolling_active", q50RollingActive, Some(
+      """WITH ud AS (
+           SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
+         days AS (SELECT DISTINCT d FROM ud),
+         wau AS (
+           SELECT days.d, count(DISTINCT ud.user_id) AS wau7
+           FROM days JOIN ud ON ud.d BETWEEN days.d - 6 AND days.d
+           GROUP BY days.d),
+         dau AS (SELECT d, count(DISTINCT user_id) AS dau FROM ud GROUP BY d)
+         SELECT CAST(dau.d AS VARCHAR) AS day,
+           CAST(dau.dau AS BIGINT) AS dau,
+           CAST(wau.wau7 AS BIGINT) AS wau7
+         FROM dau JOIN wau ON dau.d = wau.d
+         ORDER BY day""")),
+    QuerySpec("q27_decimal_money", q27DecimalMoney, Some(
+      """SELECT l_returnflag,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(15,2))) AS DOUBLE) AS sum_price,
+         CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(15,2))
+                * (CAST(1.00 AS DECIMAL(15,2)) - CAST(l_discount AS DECIMAL(15,2)))
+                AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+         count(*) AS n_rows
+         FROM lineitem
+         GROUP BY l_returnflag
+         ORDER BY l_returnflag""")),
+    QuerySpec("q28_percentiles", q28Percentiles, Some(
+      """SELECT l_returnflag,
+         round(quantile_cont(l_extendedprice, 0.5), 2) AS p50_price,
+         round(quantile_cont(l_extendedprice, 0.95), 2) AS p95_price,
+         round(quantile_cont(l_quantity, 0.5), 2) AS p50_qty
+         FROM lineitem
+         GROUP BY l_returnflag
+         ORDER BY l_returnflag""")),
+    QuerySpec("q23_cube", q23Cube, Some(
+      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+                coalesce(l_linestatus, 'ALL') AS linestatus,
+         round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n_rows
+         FROM lineitem
+         GROUP BY CUBE(l_returnflag, l_linestatus)
+         ORDER BY returnflag, linestatus""")),
+    QuerySpec("q47_grouping_sets", q47GroupingSets, Some(
+      """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+                coalesce(l_linestatus, 'ALL') AS linestatus,
+         CAST(grouping(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+         round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n_rows
+         FROM lineitem
+         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+         ORDER BY gid, returnflag, linestatus""")),
+    QuerySpec("q48_range_window", q48RangeWindow, Some(
+      """SELECT o_orderkey, o_custkey, o_orderdate,
+           CAST(count(*) OVER w AS BIGINT) AS n_orders_90d,
+           CAST(sum(cents) OVER w AS BIGINT) AS spend_90d_cents
+         FROM (SELECT o_orderkey, o_custkey, o_orderdate,
+                 CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+               FROM orders) t
+         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
+                      RANGE BETWEEN INTERVAL 90 DAY PRECEDING AND CURRENT ROW)
+         ORDER BY o_orderkey""")),
+    QuerySpec("q24_pivot", q24Pivot, Some(
+      """SELECT user_id,
+         round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS click,
+         round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS view,
+         round(sum(CASE WHEN event_type = 'purchase' THEN value END), 2) AS purchase,
+         round(sum(CASE WHEN event_type = 'signup' THEN value END), 2) AS signup,
+         round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS error
+         FROM events
+         WHERE user_id < 30
+         GROUP BY user_id
+         ORDER BY user_id""")),
+    QuerySpec("q25_setops", q25SetOps, Some(
+      """SELECT 'both' AS bucket, o_custkey FROM (
+           SELECT o_custkey FROM orders
+           WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
+           INTERSECT
+           SELECT o_custkey FROM orders
+           WHERE o_orderdate >= TIMESTAMP '2000-01-01' AND o_orderdate < TIMESTAMP '2001-01-01') a
+         UNION ALL
+         SELECT 'only_1995' AS bucket, o_custkey FROM (
+           SELECT o_custkey FROM orders
+           WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
+           EXCEPT
+           SELECT o_custkey FROM orders
+           WHERE o_orderdate >= TIMESTAMP '2000-01-01' AND o_orderdate < TIMESTAMP '2001-01-01') b
+         ORDER BY bucket, o_custkey""")),
+    QuerySpec("q26_asof_join", q26AsofJoin, Some(
+      """SELECT p.user_id, p.event_id AS purchase_id, p.ts AS purchase_ts,
+           (SELECT max(c.ts) FROM events c
+            WHERE c.event_type = 'click' AND c.user_id = p.user_id
+              AND c.ts <= p.ts) AS last_click_ts
+         FROM events p
+         WHERE p.event_type = 'purchase'
+           AND EXISTS (SELECT 1 FROM events c
+                       WHERE c.event_type = 'click' AND c.user_id = p.user_id
+                         AND c.ts <= p.ts)
+         ORDER BY user_id, purchase_id""")))
 }

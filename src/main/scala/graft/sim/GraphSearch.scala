@@ -3,8 +3,9 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.{GraftFunctions, VectorOps}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P67b (p67b): SERVING the NN-descent k-NN graph — greedy
   * best-first search (the query half of every graph-ANN system:
@@ -198,7 +199,7 @@ object GraphSearch {
            row_number() OVER (ORDER BY CAST(vec_id AS BIGINT)) - 1 AS rk
          FROM embeddings),
        g AS (SELECT node_id, neighbor_id
-             FROM read_parquet('/tmp/graft_models/sf0.01/p67_graph/*.parquet')),
+             FROM read_parquet('$PlaceholderRoot/p67_graph/*.parquet')),
        und AS (SELECT node_id AS src, neighbor_id AS nbr FROM g
                UNION
                SELECT neighbor_id AS src, node_id AS nbr FROM g),
@@ -223,4 +224,9 @@ object GraphSearch {
        WHERE rank <= $TopK
        ORDER BY query_id, rank"""
   }
+
+  // p67b: greedy best-first serving over the PERSISTED p67 graph —
+  // entry seeding, every hop's beam cut, and the final ranking all
+  // replay from the edge list on disk (persist-and-replay).
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p67b_graph_search", query, Some(oracleSql)))
 }

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P48: HYBRID retrieval — sparse (BM25) + dense (embedding
   * cosine) legs fused by Reciprocal Rank Fusion (Cormack, Clarke &
@@ -159,4 +159,6 @@ object HybridSearch {
          FROM fused) f
        WHERE fused_rank <= $TopK
        ORDER BY query_id, fused_rank"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p48_hybrid_search", query, Some(oracleSql)))
 }

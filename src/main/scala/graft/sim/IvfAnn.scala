@@ -5,8 +5,9 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.{GraftFunctions, VectorOps}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P7b: IVF (inverted-file) approximate nearest neighbors — the
   * second scale path next to [[LshAnn]], and the standard ANN layout for
@@ -146,7 +147,7 @@ object IvfAnn {
           * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
     s"""WITH cent AS (
          SELECT cluster_id, centroid
-         FROM read_parquet('/tmp/graft_models/sf0.01/p7b_centroids/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/p7b_centroids/*.parquet')),
        cells AS (
          SELECT vec_id, cluster_id AS cell FROM (
            SELECT e.vec_id, c.cluster_id,
@@ -193,4 +194,8 @@ object IvfAnn {
        FROM approx a LEFT JOIN ov ON a.query_id = ov.query_id
        ORDER BY a.query_id, a.rank"""
   }
+
+  // p7b/p7c replay their whole index pipelines from persisted
+  // centroids/codebooks — hash-gated like p28.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p7b_ann_ivf", query, Some(oracleSql)))
 }

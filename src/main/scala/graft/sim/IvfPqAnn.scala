@@ -3,8 +3,9 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.{GraftFunctions, VectorOps}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P7d: IVFADC — product quantization composed over IVF cells
   * (Jégou et al., "Product Quantization for Nearest Neighbor Search"),
@@ -194,7 +195,6 @@ object IvfPqAnn {
     * and the recall annotation vs the exact graph. */
   val oracleSql: String = {
     val sub = 8 // dim 64 / m 8
-    val root = "/tmp/graft_models/sf0.01"
     def sqd(a: String, b: String) =
       s"""list_sum(list_transform(list_zip($a, $b),
           x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))
@@ -204,9 +204,9 @@ object IvfPqAnn {
          / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
           * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
     s"""WITH cent AS (
-         SELECT cluster_id, centroid FROM read_parquet('$root/p7d_centroids/*.parquet')),
+         SELECT cluster_id, centroid FROM read_parquet('$PlaceholderRoot/p7d_centroids/*.parquet')),
        cb AS (
-         SELECT subspace, codeword, vec FROM read_parquet('$root/p7d_codebooks/*.parquet')),
+         SELECT subspace, codeword, vec FROM read_parquet('$PlaceholderRoot/p7d_codebooks/*.parquet')),
        rn AS (
          SELECT CAST(LEAST(1000, GREATEST(100, count(*) // 50)) AS BIGINT) AS rerank
          FROM embeddings),
@@ -291,4 +291,6 @@ object IvfPqAnn {
        FROM approx a LEFT JOIN ov ON a.query_id = ov.query_id
        ORDER BY a.query_id, a.rank"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p7d_ann_ivfpq", query, Some(oracleSql)))
 }

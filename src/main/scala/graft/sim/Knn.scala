@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.VectorOps
 
 /** §2.3 P6: brute-force cosine top-k similarity search.
@@ -41,4 +41,19 @@ object Knn {
     bruteForce(e, e.filter($"vec_id" < 5), "vec_id", "embedding", 10)
       .orderBy($"query_id", $"rank")
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p6_knn_bruteforce", query, Some(
+      """SELECT query_id, neighbor_id, rank, round(cs, 6) AS cos_sim FROM (
+           SELECT query_id, neighbor_id, cs,
+             row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rank
+           FROM (
+             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cs
+             FROM embeddings q, embeddings c
+             WHERE q.vec_id < 5 AND q.vec_id <> c.vec_id) t1) t2
+         WHERE rank <= 10
+         ORDER BY query_id, rank""")))
 }

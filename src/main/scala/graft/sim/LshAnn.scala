@@ -3,8 +3,9 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.VectorOps
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P7: LSH-bucketed approximate nearest neighbors.
   *
@@ -125,7 +126,7 @@ object LshAnn {
           * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
     s"""WITH pl AS (
          SELECT tbl, plane, vec
-         FROM read_parquet('/tmp/graft_models/sf0.01/p7_planes/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/p7_planes/*.parquet')),
        keys AS (
          SELECT e.vec_id, pl.tbl,
            sum(CASE WHEN list_sum(list_transform(list_zip(e.embedding, pl.vec),
@@ -167,6 +168,8 @@ object LshAnn {
        FROM approx a LEFT JOIN ov ON a.query_id = ov.query_id
        ORDER BY a.query_id, a.rank"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p7_ann_lsh", query, Some(oracleSql)))
 }
 
 /** The hyperplane tensor (tables × planes × dim) with the executor-side

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 import graft.functions.GraftFunctions
 
 /** §2.3 P67 (p67): GRAPH ANN by NN-DESCENT (Dong et al., WWW 2011) —
@@ -231,4 +231,8 @@ object NnDescent {
        SELECT src AS node_id, nbr AS neighbor_id, rank, round(cos, 6) AS cos_sim
        FROM g2 ORDER BY node_id, rank"""
   }
+
+  // p67: the NN-descent trajectory needs no persisted state at all —
+  // md5 init + two unrolled refine rounds replay from the corpus.
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p67_nn_descent", query, Some(oracleSql)))
 }

@@ -5,8 +5,9 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.{GraftFunctions, VectorOps}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P7c: product-quantization ANN (asymmetric distance computation
   * with exact re-ranking) — the third scale path next to [[LshAnn]] and
@@ -283,7 +284,7 @@ object PqAnn {
           * sqrt(list_sum(list_transform(n.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
     s"""WITH cb AS (
          SELECT subspace, codeword, vec
-         FROM read_parquet('/tmp/graft_models/sf0.01/p7c_codebooks/*.parquet')),
+         FROM read_parquet('$PlaceholderRoot/p7c_codebooks/*.parquet')),
        rn AS (
          SELECT CAST(LEAST(1000, GREATEST(100, count(*) // 50)) AS BIGINT) AS rerank
          FROM embeddings),
@@ -346,4 +347,6 @@ object PqAnn {
        FROM approx a LEFT JOIN ov ON a.query_id = ov.query_id
        ORDER BY a.query_id, a.rank"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p7c_ann_pq", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.VectorOps
 
 /** §2.3 P45: INT8 scalar quantization of embeddings — the standard
@@ -78,4 +78,6 @@ object ScalarQuant {
                     * 1e12) AS BIGINT))) AS BIGINT) AS err_pico
        FROM c
        ORDER BY vec_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p45_embedding_quant", query, Some(oracleSql)))
 }

@@ -6,6 +6,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.QuerySpec
 
 /** src6: AVRO object-container roundtrip — the one mainstream batch
   * format missing from the SRC family (real corpora and Kafka archive
@@ -123,4 +124,9 @@ object AvroRoundtrip {
       summarize(back)
     }
   }
+
+  // src6: Avro container roundtrip (hand-rolled on avro-core — the
+  // spark-avro module is absent from this classpath); same oracle
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("src6_avro_roundtrip", query, Some(SourceRoundtrips.ordersSummarySql)))
 }

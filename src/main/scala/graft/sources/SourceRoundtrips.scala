@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Text source/sink coverage beyond parquet and libsvm: CSV and JSON
   * write→read roundtrips over the orders table. Each query serializes
@@ -103,4 +103,32 @@ object SourceRoundtrips {
       summarize(back)
     }
   }
+
+  /** The oracle of every orders roundtrip (src1–src3, src5, src6): the
+    * summary of the parquet table itself, so any serialization loss
+    * mismatches. */
+  private[sources] val ordersSummarySql: String =
+    """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_custs,
+       round(sum(o_totalprice), 2) AS sum_price,
+       min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
+       FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    // src1/src2: the roundtrip queries serialize orders through CSV/JSON
+    // and summarize the read-back rows; the oracle summarizes the
+    // parquet directly — any serialization loss mismatches.
+    QuerySpec("src1_csv_roundtrip", csvRoundtrip, Some(ordersSummarySql)),
+    QuerySpec("src2_json_roundtrip", jsonRoundtrip, Some(ordersSummarySql)),
+    // src3: ORC roundtrip (own-schema columnar format + pushed filter);
+    // same parquet-side summary oracle as src1/src2
+    QuerySpec("src3_orc_roundtrip", orcRoundtrip, Some(ordersSummarySql)),
+    QuerySpec("src4_text_roundtrip", textRoundtrip, Some(
+      """SELECT lang, count(*) AS n_docs, count(DISTINCT m) AS n_md5,
+           min(m) AS min_md5, max(m) AS max_md5,
+           min(doc_id) AS min_doc, max(doc_id) AS max_doc
+         FROM (SELECT doc_id, lang, md5(text) AS m FROM documents)
+         GROUP BY lang ORDER BY lang""")),
+    // src5: XML roundtrip (Spark 4 built-in source); same summary oracle
+    QuerySpec("src5_xml_roundtrip", xmlRoundtrip, Some(ordersSummarySql)))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Materialize
+import graft.{Materialize, QuerySpec}
 
 /** §2.5 S13 (s13): STREAMING CHANGE-FEED CONSUMER — the other half of
   * U20: a downstream materialized view maintained INCREMENTALLY from
@@ -185,4 +185,8 @@ object ChangeFeedStream {
        SELECT status, count(*) AS n_keys,
               round(sum(CAST(round(price * 100.0, 0) AS BIGINT)) / 100.0, 2) AS sum_price
        FROM resolved GROUP BY status ORDER BY status"""
+
+  // s13: the incremental consumer must land on u11's resolved v3
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("s13_stream_change_feed", s13StreamChangeFeed, Some(oracleSql)))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery}
+import graft.QuerySpec
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.4: Structured Streaming over the events stream.
   *
@@ -867,4 +869,112 @@ object EventStreams {
        SELECT CAST(k_used AS BIGINT) AS k_used, kth AS kth_hash,
          CAST(floor(e * 1e6) AS BIGINT) AS est_micro
        FROM est"""
+
+  def specs: Seq[QuerySpec] = Seq(
+    // the stream computes the SAME decision record as the batch p35, so
+    // the same replay SQL gates both halves of the continual-ingestion story
+    QuerySpec("s8_stream_incr_dedup", s8StreamIncrDedup, Some(graft.dedup.IncrementalDedup.oracleSql)),
+    // s9 emits p34's exact decision record — one replay SQL gates both
+    QuerySpec("s9_stream_score", s9StreamQualityScore, Some(graft.text.QualityClassifier.oracleSql)),
+    QuerySpec("s11_stream_trending", s11StreamTrending, Some(s11OracleSql)),
+    // s12: same replay as u18, from the s12 files — stream-side index
+    // maintenance must leave the index in exactly the batch state
+    QuerySpec("s12_stream_ann_upsert", s12StreamAnnUpsert, Some(graft.operators.AnnUpsert.oracleSqlFor("s12"))),
+    // s14: the stream-maintained KMV sketch equals the batch sketch
+    // exactly (merge exactness), so q21c's arithmetic gates it too.
+    QuerySpec("s14_stream_kmv", s14StreamKmv, Some(s14OracleSql)),
+    // s7: streaming ANN serving — replay the persisted probes ⋈ postings
+    // ⋈ vectors (the exact index the stream served from) with the p6
+    // bit-exact cosine; certifies stream-side cell assignment, the
+    // stream-static join, and the streaming nearest-neighbor aggregate.
+    QuerySpec("s7_stream_ann_serve", s7StreamAnnServe, Some(
+      s"""SELECT query_id, n_candidates, nn_id, round(nn_cos, 6) AS nn_cos FROM (
+           SELECT query_id,
+             CAST(count(*) OVER (PARTITION BY query_id) AS BIGINT) AS n_candidates,
+             neighbor_id AS nn_id, cs AS nn_cos,
+             row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rn
+           FROM (
+             SELECT q.query_id, p.vec_id AS neighbor_id,
+               list_sum(list_transform(list_zip(qv.embedding, nv.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+               / (sqrt(list_sum(list_transform(qv.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                * sqrt(list_sum(list_transform(nv.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cs
+             FROM read_parquet('$PlaceholderRoot/s7_probes/*.parquet') q
+             JOIN read_parquet('$PlaceholderRoot/s7_postings/*.parquet') p ON p.cell = q.cell
+             JOIN embeddings qv ON qv.vec_id = q.query_id
+             JOIN embeddings nv ON nv.vec_id = p.vec_id
+             WHERE p.vec_id <> q.query_id) t1) t2
+         WHERE rn = 1
+         ORDER BY query_id""")),
+    // s6: the engine's sliding windows must equal q34's epoch-aligned
+    // window replay.
+    QuerySpec("s6_stream_sliding", s6StreamSliding, Some(graft.queries.Analytics.slidingWindowsSql)),
+    // s4: stream-stream attribution join through the real engine; the
+    // oracle is the batch join with the identical time-range predicate.
+    QuerySpec("s4_stream_join", s4StreamJoin, Some(
+      """SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+           CAST(count(DISTINCT c.user_id) AS BIGINT) AS n_users,
+           round(sum(p.value), 2) AS sum_purchase_value
+         FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
+         JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
+           ON c.user_id = p.user_id
+          AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 10 MINUTE""")),
+    QuerySpec("s10_stream_outer_join", s10StreamOuterJoin, Some(s10OracleSql)),
+    // s5: streaming CDC-apply — the final merged state must equal one
+    // global last-writer-wins merge of every event-derived update into
+    // the orders base (update-only; unmatched keys ignored).
+    QuerySpec("s5_stream_upsert", s5StreamUpsert, Some(
+      """WITH upd AS (
+           SELECT (event_id % (SELECT count(*) FROM orders)) + 1 AS o_orderkey,
+                  value * 100 AS o_totalprice, epoch_ms(ts) AS v, event_id AS e
+           FROM events),
+         best AS (
+           SELECT o_orderkey, o_totalprice FROM (
+             SELECT o_orderkey, o_totalprice,
+               row_number() OVER (PARTITION BY o_orderkey ORDER BY v DESC, e DESC) AS rn
+             FROM upd) t WHERE rn = 1),
+         merged AS (
+           SELECT o.o_orderkey,
+             COALESCE(b.o_totalprice, o.o_totalprice) AS price,
+             CASE WHEN b.o_orderkey IS NOT NULL THEN 1 ELSE 0 END AS upd_flag
+           FROM orders o LEFT JOIN best b ON o.o_orderkey = b.o_orderkey)
+         SELECT CAST(count(*) AS BIGINT) AS n_orders,
+           round(sum(price), 2) AS total_value,
+           CAST(sum(upd_flag) AS BIGINT) AS n_updated
+         FROM merged""")),
+    // s1/s3 run the actual Structured Streaming engine (AvailableNow →
+    // memory sink); the oracles are the batch-equivalent SQL.
+    QuerySpec("s1_stream_hourly", s1StreamHourly, Some(
+      """SELECT date_trunc('hour', ts) AS window_start, event_type,
+         count(*) AS n_events, round(sum(value), 2) AS sum_value
+         FROM events
+         GROUP BY 1, 2
+         ORDER BY 1, 2""")),
+    // s2: the streaming engine emits (a) sessions closed by a later
+    // in-batch event and (b) last sessions flushed by the event-time
+    // timeout once the final watermark (global max ts − 1h) passes
+    // session_end + gap. Both are deterministic and mirrored here.
+    QuerySpec("s2_stream_sessions", s2StreamSessions, Some(
+      """SELECT user_id, session_start, session_end, n_events, sum_value FROM (
+           SELECT user_id, session_id, min(ts) AS session_start, max(ts) AS session_end,
+             count(*) AS n_events, round(sum(value), 2) AS sum_value,
+             max(session_id) OVER (PARTITION BY user_id) AS last_session
+           FROM (
+             SELECT user_id, event_id, ts, value,
+               CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+             FROM (
+               SELECT user_id, event_id, ts, value,
+                 CASE WHEN lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                        OR epoch_ms(ts) - lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000
+                      THEN 1 ELSE 0 END AS new_s
+               FROM events) t1) t2
+           GROUP BY user_id, session_id) t3
+         WHERE session_id < last_session
+            OR epoch_ms(session_end) + 1800000 <
+               (SELECT max(epoch_ms(ts)) FROM events) - 3600000
+         ORDER BY user_id, session_start""")),
+    QuerySpec("s3_stream_dedup", s3StreamDedup, Some(
+      """SELECT count(DISTINCT event_id) AS n_events,
+                count(DISTINCT user_id) AS n_users
+         FROM events""")))
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.QuerySpec
 
 /** §2.5 S15 (s15): STREAMING LATE-DATA OBSERVABILITY — the production
   * debugging surface the S1–S14 queries assert around but never
@@ -154,4 +155,10 @@ object StreamMetrics {
        FROM emitted
        GROUP BY event_type
        ORDER BY event_type"""
+
+  // s15: the engine's numRowsDroppedByWatermark counter rides in the
+  // output and the oracle recomputes the planted late cohort — a
+  // lying counter hash-mismatches (u15's telemetry ≡ reality).
+  def specs: Seq[QuerySpec] =
+    Seq(QuerySpec("s15_stream_metrics", s15StreamMetrics, Some(oracleSql)))
 }

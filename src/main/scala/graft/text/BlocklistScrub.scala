@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P64 (p64): DICTIONARY BLOCKLIST SCRUB via AHO–CORASICK — the
   * multi-pattern scan every large-scale curation pipeline runs
@@ -191,4 +191,8 @@ object BlocklistScrub {
        LEFT JOIN ncov c USING (doc_id)
        LEFT JOIN masked m USING (doc_id)
        ORDER BY doc_id"""
+
+  // p64: blocklist selection + brute-force occurrence scan + set-cover
+  // mask replayed per position (the spec pins automaton ≡ brute force)
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p64_blocklist_scrub", query, Some(oracleSql)))
 }

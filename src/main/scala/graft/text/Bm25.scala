@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P36: BM25 ranked retrieval — the inverted-index search primitive
   * (Robertson–Spärck Jones probabilistic relevance, the Lucene default
@@ -132,4 +132,6 @@ object Bm25 {
          FROM agg) t
        WHERE rank <= 10
        ORDER BY query_id, rank"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p36_bm25_search", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P39: BPE merge learning (Sennrich et al. 2016, "Neural Machine
   * Translation of Rare Words with Subword Units") — the tokenizer-
@@ -409,4 +409,9 @@ object BpeVocab {
        GROUP BY dw.doc_id
        ORDER BY doc_id"""
   }
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p39_bpe_vocab", query, Some(oracleSql)),
+    QuerySpec("p39b_bpe_encode", encodeQuery, Some(encodeOracleSql)),
+    QuerySpec("p39c_bpe_decode", decodeQuery, Some(decodeOracleSql)))
 }

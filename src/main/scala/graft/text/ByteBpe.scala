@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P39d (p39d): BYTE-LEVEL BPE pretokenization + encode — the
   * GPT-2-class tokenizer front end (Radford et al. 2019; what GPT-2/
@@ -240,4 +240,8 @@ object ByteBpe {
        GROUP BY p.doc_id
        ORDER BY doc_id"""
   }
+
+  // p39d: byte-level BPE — byte→unicode map via hex(encode(.)), the
+  // p39 merge chains over byte symbols, inverse-map decode roundtrip
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p39d_byte_bpe", query, Some(oracleSql)))
 }

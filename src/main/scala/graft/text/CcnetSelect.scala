@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P46: CCNet-style perplexity BUCKETING — the selection step that
   * consumes a perplexity filter's scores (Wenzek et al. 2020, "CCNet:
@@ -91,4 +91,6 @@ object CcnetSelect {
                ELSE 'tail' END) != 'tail' AS keep
        FROM scored s JOIN th USING (source)
        ORDER BY s.doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p46_ppx_buckets", query, Some(oracleSql)))
 }

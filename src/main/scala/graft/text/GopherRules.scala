@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.3 P41: Gopher-style rule-based quality filtering (Rae et al.
   * 2021, "Scaling Language Models: ... Gopher", Appendix A1.1 — the
@@ -91,4 +92,6 @@ object GopherRules {
                AND (n_distinct_stop >= 2)
                AND (dup_line_frac_micro <= 300000)) AS keep
        FROM s ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p41_gopher_rules", query, Some(oracleSql)))
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** §2.3 P57 (p57): interpolated Kneser–Ney TRIGRAM language model —
   * the published standard for n-gram LM quality filtering (Chen &
@@ -179,4 +180,6 @@ object KnTrigramLm {
          ON o.w1 = m.w1 AND o.w2 = m.w2 AND o.w3 = m.w3
        GROUP BY o.doc_id
        ORDER BY o.doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p57_kn_trigram", query, Some(oracleSql)))
 }

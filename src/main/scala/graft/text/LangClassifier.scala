@@ -2,7 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P54: LEARNED language ID — the fastText-style lang-id stage
   * (hashed char-n-gram features → one-vs-rest logistic → argmax), the
@@ -281,10 +282,10 @@ object LangClassifier {
     * the same floor-micro quantization; argmax with the same
     * (margin desc, lang asc) tie-break. */
   val oracleSql: String =
-    """WITH f AS (
-         SELECT * FROM read_parquet('/tmp/graft_models/sf0.01/p54_features/*.parquet')),
+    s"""WITH f AS (
+         SELECT * FROM read_parquet('$PlaceholderRoot/p54_features/*.parquet')),
        wt AS (
-         SELECT * FROM read_parquet('/tmp/graft_models/sf0.01/p54_weights/*.parquet')),
+         SELECT * FROM read_parquet('$PlaceholderRoot/p54_weights/*.parquet')),
        s AS (
          SELECT f.doc_id, wt.lang,
            CAST(sum(CAST(floor(wt.w * f.cnt * 1e6) AS BIGINT)) AS BIGINT) AS s
@@ -306,4 +307,6 @@ object LangClassifier {
        FROM best b JOIN documents d ON b.doc_id = d.doc_id
        WHERE b.rn = 1
        ORDER BY b.doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p54_lang_clf", query, Some(oracleSql)))
 }

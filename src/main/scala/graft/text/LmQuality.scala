@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.QuerySpec
 
 /** P29: n-gram language-model quality scoring — the CCNet/Gopher-style
   * "perplexity filter": fit a bigram MLE model on the corpus itself,
@@ -89,4 +90,6 @@ object LmQuality {
        FROM pairs p JOIN model m ON p.w1 = m.w1 AND p.w2 = m.w2
        GROUP BY p.doc_id
        ORDER BY p.doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p29_lm_quality", query, Some(oracleSql)))
 }

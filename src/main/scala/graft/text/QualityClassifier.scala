@@ -2,7 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
+import graft.ml.ModelOracles.PlaceholderRoot
 
 /** §2.3 P34: LEARNED quality classifier — the fastText-style stage real
   * curation pipelines run after heuristic scoring: distill a quality
@@ -322,10 +323,10 @@ object QualityClassifier {
     * the same floor-micro quantization; labels re-derived from the raw
     * documents via the p9 formula. */
   val oracleSql: String =
-    """WITH f AS (
-         SELECT * FROM read_parquet('/tmp/graft_models/sf0.01/p34_features/*.parquet')),
+    raw"""WITH f AS (
+         SELECT * FROM read_parquet('$PlaceholderRoot/p34_features/*.parquet')),
        wt AS (
-         SELECT * FROM read_parquet('/tmp/graft_models/sf0.01/p34_weights/*.parquet')),
+         SELECT * FROM read_parquet('$PlaceholderRoot/p34_weights/*.parquet')),
        m AS (
          SELECT f.doc_id,
            CAST(sum(CAST(floor(wt.w * f.cnt * 1e6) AS BIGINT)) AS BIGINT)
@@ -345,4 +346,6 @@ object QualityClassifier {
               lbl.y, (m.doc_id % 4 != 0) AS is_train
        FROM m JOIN lbl USING (doc_id)
        ORDER BY m.doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p34_quality_clf", query, Some(oracleSql)))
 }

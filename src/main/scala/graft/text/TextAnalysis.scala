@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P8–P11: text analysis over a corpus with a `text` column.
   *
@@ -114,4 +114,39 @@ object TextAnalysis {
         expr(s"array_min(transform(sequence(0, greatest(size(toks) - $k, 0)), " +
              s"i -> hash(concat_ws(' ', slice(toks, i + 1, $k)))))"))
       .drop("toks")
+
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("p8_lang_id", langId, Some(
+      """SELECT doc_id, lang, score_en, score_fr, score_es, score_de, score_zh,
+         CASE WHEN score_en > 0 AND score_en >= score_fr AND score_en >= score_es AND score_en >= score_de AND score_en >= score_zh THEN 'en'
+              WHEN score_fr > 0 AND score_fr >= score_es AND score_fr >= score_de AND score_fr >= score_zh THEN 'fr'
+              WHEN score_es > 0 AND score_es >= score_de AND score_es >= score_zh THEN 'es'
+              WHEN score_de > 0 AND score_de >= score_zh THEN 'de'
+              WHEN score_zh > 0 THEN 'zh' ELSE 'und' END AS lang_pred
+         FROM (SELECT doc_id, lang,
+          len(list_filter(regexp_split_to_array(text, '\s+'), x -> list_contains(['the','a','of','and','to','in','is','that','it','for'], x))) AS score_en,
+          len(list_filter(regexp_split_to_array(text, '\s+'), x -> list_contains(['le','la','les','de','et','un','une','dans','est','pour'], x))) AS score_fr,
+          len(list_filter(regexp_split_to_array(text, '\s+'), x -> list_contains(['el','los','las','y','que','una','en','es','para','por'], x))) AS score_es,
+          len(list_filter(regexp_split_to_array(text, '\s+'), x -> list_contains(['der','die','das','und','ein','eine','ist','nicht','mit','zu'], x))) AS score_de,
+          len(list_filter(regexp_split_to_array(text, '\s+'), x -> list_contains(['的','是','在','了','我','有','和','就','不','人'], x))) AS score_zh
+          FROM documents) t
+         ORDER BY doc_id""")),
+    QuerySpec("p9_quality", quality, Some(
+      """SELECT doc_id, length(text) AS n_chars_calc, len(toks) AS n_tokens,
+         len(list_distinct(toks)) AS n_distinct,
+         round(list_sum(list_transform(toks, x -> length(x))) / len(toks), 6) AS avg_token_len,
+         round(len(list_distinct(toks)) / len(toks), 6) AS distinct_ratio,
+         round(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','that','it','for'], x))) / len(toks), 6) AS stopword_ratio,
+         round(0.4 * (len(list_distinct(toks)) / len(toks)) +
+               0.3 * (1.0 - len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is','that','it','for'], x))) / len(toks)) +
+               0.3 * least(1.0, len(toks) / 100.0), 6) AS quality_score
+         FROM (SELECT doc_id, text, regexp_split_to_array(text, '\s+') AS toks FROM documents) t
+         ORDER BY doc_id""")),
+    QuerySpec("p10_token_counts", tokenCounts, Some(
+      """SELECT doc_id, len(regexp_split_to_array(text, '\s+')) AS ws_tokens,
+         len(regexp_extract_all(text, '\w+|[^\w\s]')) AS bpe_tokens
+         FROM documents ORDER BY doc_id""")),
+    QuerySpec("p11_fingerprint", fingerprint, Some(
+      """SELECT doc_id, md5(array_to_string(list_sort(list_distinct(regexp_split_to_array(text, '\s+'))), ' ')) AS fp
+         FROM documents ORDER BY doc_id""")))
 }

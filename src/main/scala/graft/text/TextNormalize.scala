@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions
 
 /** §2.3 P42: Unicode/text normalization — the FIRST operator of any real
@@ -104,4 +104,6 @@ object TextNormalize {
          md5(n) AS norm_md5
        FROM norm
        ORDER BY doc_id"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p42_text_normalize", query, Some(oracleSql)))
 }

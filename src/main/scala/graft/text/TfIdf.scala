@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** §2.3 P15: TF-IDF term weighting — the inverted-index relevance
   * primitive a curation pipeline uses for keyword extraction, topic
@@ -68,4 +68,6 @@ object TfIdf {
          FROM tf, dfreq, n WHERE tf.term = dfreq.term) t
        WHERE rank <= 5
        ORDER BY doc_id, rank"""
+
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p15_tfidf_topterms", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P59 (p59): UNIGRAM-LM (SentencePiece) tokenizer — the other
   * production tokenizer family next to BPE (Kudo 2018, "Subword
@@ -397,4 +397,9 @@ object UnigramLm {
        GROUP BY dw.doc_id
        ORDER BY doc_id"""
   }
+
+  // p59: the full unigram-LM EM trajectory replayed as chained CTEs —
+  // seed counts, per-round unrolled Viterbi DP, usage, re-costing,
+  // final per-doc render
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p59_unigram_lm", query, Some(oracleSql)))
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Materialize, Tables}
+import graft.{Materialize, QuerySpec, Tables}
 
 /** §2.3 P59b (p59b): unigram-LM VOCABULARY PRUNING to a target size —
   * the defining loop of SentencePiece training (Kudo 2018 §3.2) that
@@ -325,4 +325,9 @@ object UnigramPrune {
        GROUP BY dw.doc_id, nvf.n_vocab
        ORDER BY doc_id"""
   }
+
+  // p59b: the prune loop too — capped seed, per-round leave-one-out
+  // losses, ranked drops, and the final render under the target-size
+  // vocabulary all replayed
+  def specs: Seq[QuerySpec] = Seq(QuerySpec("p59b_unigram_prune", query, Some(oracleSql)))
 }

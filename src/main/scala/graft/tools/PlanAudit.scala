@@ -1,21 +1,20 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
+import graft.QuerySpec
 
 /** Dev-only: dump the plans the bench runs, for scan/join-strategy
   * auditing. Usage: PlanAudit [sfDir] [query,query,...] */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val names = if (args.length > 1) args(1).split(",").toSet else Set[String]()
+    val selected = QuerySpec.selectOrExit("plan-audit", "query argument", args.lift(1))
     val spark = graft.GraftSession()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => names.isEmpty || names.contains(q._1))
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try println(executedPlan(fn(spark, dir)))
-        catch { case e: Throwable => println(s"explain failed: $e") }
-      }
+    selected.foreach { spec =>
+      println(s"\n========== ${spec.name} ==========")
+      try println(executedPlan(spec.run(spark, dir)))
+      catch { case e: Throwable => println(s"explain failed: $e") }
+    }
     spark.stop()
   }
 
@@ -24,7 +23,7 @@ object PlanAudit {
     * and AQEShuffleRead are visible (an unexecuted plan expands
     * duplicate subtrees that AQE deduplicates at runtime). */
   def executedPlan(df: DataFrame): String = {
-    df.queryExecution.toRdd.count()
+    QuerySpec.forcedCount(df)
     df.queryExecution.executedPlan.toString
   }
 }

@@ -1,20 +1,22 @@
 package graft.tools
 
 import org.apache.spark.scheduler.SparkListener
+import graft.QuerySpec
 
-/** Dev-only: run one named SparkEntry query and attribute wall time to
+/** Dev-only: run each named query and attribute its wall time to
   * Spark jobs by call site — the §1 "where does the time go" loop for a
   * multi-job query (fits, iterative ladders, persist-and-replay builds
   * all submit many jobs; per-query seconds alone can't localize them).
   *
-  * Usage: QueryProfile <sfDir> <queryName> [repeats]
+  * Usage: QueryProfile <sfDir> <query[,query...]> [repeats]
   * Repeats > 1 separates memoized-artifact cost (first run) from
-  * steady-state query cost (later runs).
+  * steady-state query cost (later runs). Warms up and clears between
+  * runs as Bench does ([[graft.QuerySpec]]).
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val name = args(1)
+    val selected = QuerySpec.selectOrExit("profile", "query argument", Some(args(1)))
     val repeats = if (args.length > 2) args(2).toInt else 1
     val spark = graft.GraftSession()
     // Attribute per STAGE: AQE runs each query stage as its own job on the
@@ -51,22 +53,16 @@ object QueryProfile {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     })
-    val fn = graft.SparkEntry.queries(name)
-    // same warmup the bench does so run 1 isn't JVM/codegen startup
-    graft.Tables.all.foreach { t => graft.Tables.load(spark, dir, t).limit(64).count() }
-    try { graft.SparkEntry.queries("m2_kernel_values")(spark, dir).count() }
-    catch { case _: Throwable => () }
-    for (r <- 1 to repeats) {
+    QuerySpec.warmUp(spark, dir)
+    for (spec <- selected; r <- 1 to repeats) {
       done.synchronized(done.clear())
       actions.synchronized(actions.clear())
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
+      QuerySpec.clearAll(spark)
       val t0 = System.nanoTime()
-      val n = fn(spark, dir).queryExecution.toRdd.count()
+      val n = QuerySpec.forcedCount(spec.run(spark, dir))
       val dt = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let listener events drain
-      println(f"\n=== run $r: $name total $dt%.2fs rows=$n ===")
+      println(f"\n=== run $r: ${spec.name} total $dt%.2fs rows=$n ===")
       val snap = done.synchronized(done.toVector)
       val bySite = snap.groupBy(_._1).map { case (s, v) =>
         (s, v.map(_._2).sum, v.size, v.map(_._3).sum)

@@ -19,7 +19,10 @@
 # temp-dir cleanup helpers (`graft.Scratch` owns every scratch path),
 # and, over the PSVM passes (Icf.scala, Ipm.scala, IcfSvm.scala and the
 # block collective Blocks.scala), the `== 1` block-count tests that pick
-# a pass loop's form and the in-task twins of the driver loops.
+# a pass loop's form and the in-task twins of the driver loops, and, for
+# the query registry (`graft.QuerySpec`), the literal spellings of the
+# oracles' placeholder model root (`/tmp/graft_models`) and the
+# clear-all-between-queries sites (`getPersistentRDDs`) in src/main.
 #
 # Usage: tools/design_counts.sh [repo-root]   (default: this checkout)
 set -euo pipefail
@@ -65,3 +68,5 @@ echo "libsvm_split_sites $(count 'split\(' "$main/graft/ml/LibSvmIO.scala")"
 psvm=$(ls "$main"/graft/ml/{Icf,Ipm,IcfSvm,Blocks}.scala 2>/dev/null || true)
 echo "psvm_block_forks $(count '(getNumPartitions|nBlocks|blockCount\([^)]*\)) == 1\b' $psvm)"
 echo "psvm_loop_twins $(count 'def (pivotSegment|newtonSegment|oneBlock)\b' $psvm)"
+echo "oracle_root_literals $(count '/tmp/graft_models' "$main")"
+echo "query_clear_all_sites $(count 'getPersistentRDDs' "$main")"
